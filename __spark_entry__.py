@@ -7,7 +7,10 @@ sf0.001, returning the violation rows with name-path provenance.
 north-rule table-level checks). Each callable: (spark, sf_dir) -> DataFrame.
 
 ``oracle_sql()`` — DuckDB-dialect equivalents over the same parquet views.
-The ``transcripts`` input (BASELINE.json input_hint) is derived
+
+Each query is declared once: ``@query(oracle)`` on its ``q_<name>``
+function registers both maps' entry ``<name>``; ``attestation_order`` sets
+the order of both. The ``transcripts`` input (BASELINE.json input_hint) is derived
 *deterministically* from the driver's ``events`` table by a SQL snippet that
 runs identically on Spark and DuckDB (fsharp_data_validation_spark.sources.
 transcripts), so every transcript query is oracle-checked end-to-end.
@@ -15,7 +18,10 @@ transcripts), so every transcript query is oracle-checked end-to-end.
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable
+from pathlib import Path
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -31,8 +37,10 @@ from fsharp_data_validation_spark.operators.drift import (
     split_histograms,
 )
 from fsharp_data_validation_spark.operators.stats import column_profile, exact_quantiles
+from fsharp_data_validation_spark.operators.text import bpe_oracle_expr
 from fsharp_data_validation_spark.operators.transcript_suite import transcript_row_suite
 from fsharp_data_validation_spark.sources.documents import (
+    DOCS_SQL as _DOCS_SQL,
     ann_recall_oracle_sql as _ann_recall_oracle,
     lsh_construction_oracle_sql as _lsh_oracle,
     with_docs,
@@ -63,10 +71,100 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
+# query registry
+# --------------------------------------------------------------------------
+
+
+class Query(NamedTuple):
+    fn: Callable[[SparkSession, str], DataFrame]
+    oracle: str  # DuckDB-dialect SQL over the same parquet views
+    quadratic: bool  # all-pairs / recursive-CTE oracle: tens of minutes at sf0.1
+
+
+#: every query in declaration order, filled by @query
+REGISTRY: dict[str, Query] = {}
+
+
+def query(oracle: str, quadratic: bool = False):
+    """Register ``q_<name>`` as query ``<name>`` with its DuckDB oracle."""
+
+    def register(fn):
+        REGISTRY[fn.__name__.removeprefix("q_")] = Query(fn, oracle, quadratic)
+        return fn
+
+    return register
+
+
+_MATCH_FIELDS = ("rows_match", "schema_match", "hash_match")
+
+
+def attestation_order(names, directory: Path = Path(__file__).parent) -> list[str]:
+    """``names`` least-recently attested first, by the round of each name's
+    last full match (rows, schema and hash, no error) in
+    ``CORRECTNESS_r<N>.json``; never attested counts as round 0 and ties
+    keep the given order. A correctness sweep that checks only the head of
+    ``queries()`` thus reaches the stalest queries first."""
+    last = dict.fromkeys(names, 0)
+    for path in directory.glob("CORRECTNESS_r*.json"):
+        rnd = int(path.stem.removeprefix("CORRECTNESS_r"))
+        for name, rec in json.loads(path.read_text()).items():
+            matched = all(rec.get(k) is True for k in _MATCH_FIELDS)
+            if name in last and matched and rec.get("err") is None:
+                last[name] = max(last[name], rnd)
+    return sorted(last, key=last.__getitem__)
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {n: REGISTRY[n].fn for n in attestation_order(REGISTRY)}
+
+
+def oracle_sql() -> dict[str, str]:
+    return {n: REGISTRY[n].oracle for n in attestation_order(REGISTRY)}
+
+
+# --------------------------------------------------------------------------
 # queries
 # --------------------------------------------------------------------------
 
 
+_ROLES_SQL = ",".join(f"'{r}'" for r in ROLES)
+
+# per-constraint failure conditions with refute masks made explicit;
+# mirrors transcript_row_suite() constraint-for-constraint
+_FAIL_CONDS = [
+    ("conv_id", "conv_id_required", "conv_id IS NULL"),
+    (
+        "conv_id",
+        "conv_id_format",
+        "conv_id IS NOT NULL AND NOT regexp_matches(conv_id, '^c[0-9]+$')",
+    ),
+    ("turn_idx", "turn_idx_required", "turn_idx IS NULL"),
+    ("turn_idx", "turn_idx_negative", "turn_idx IS NOT NULL AND turn_idx < 0"),
+    ("role", "role_required", "role IS NULL"),
+    ("role", "role_enum", f"role IS NOT NULL AND role NOT IN ({_ROLES_SQL})"),
+    ("text", "text_required", "text IS NULL"),
+    ("text", "text_empty", "text IS NOT NULL AND length(text) < 1"),
+    ("text", "text_too_long", "text IS NOT NULL AND length(text) > 10000"),
+    (
+        "tool",
+        "tool_format",
+        "tool IS NOT NULL AND NOT regexp_matches(tool, '^tool_[0-9]+$')",
+    ),
+    ("tool", "tool_missing_for_tool_role", "role = 'tool' AND tool IS NULL"),
+    ("", "tool_on_non_tool_role", "COALESCE(role = 'tool' OR tool IS NULL, TRUE) = FALSE"),
+]
+
+_ROW_SUITE_ORACLE = with_transcripts(
+    "SELECT conv_id, turn_idx, ts, path, code FROM (\n"
+    + "\nUNION ALL\n".join(
+        f"SELECT conv_id, turn_idx, ts, '{p}' AS path, '{c}' AS code FROM transcripts WHERE {w}"
+        for p, c, w in _FAIL_CONDS
+    )
+    + "\n) v"
+)
+
+
+@query(_ROW_SUITE_ORACLE)
 def q_row_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vectorized refute/dispute suite -> violation rows (SURVEY.md §2.3-2.5)."""
     t = _transcripts(spark, sf_dir)
@@ -76,6 +174,15 @@ def q_row_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(with_transcripts(
+    "SELECT CAST(ts AS DATE) AS day, path, code, CAST(COUNT(*) AS BIGINT) AS n "
+    "FROM (\n"
+    + "\nUNION ALL\n".join(
+        f"SELECT ts, '{p}' AS path, '{c}' AS code FROM transcripts WHERE {w}"
+        for p, c, w in _FAIL_CONDS
+    )
+    + "\n) v GROUP BY 1, 2, 3"
+))
 def q_violation_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Monitoring view of the suite: per-(day, path, code) violation counts
     — the dashboard aggregation over the same single-projection suite run
@@ -92,6 +199,12 @@ def q_violation_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_NF_EXPR = " + ".join(f"(CASE WHEN {w} THEN 1 ELSE 0 END)" for _, _, w in _FAIL_CONDS)
+
+
+@query(with_transcripts(
+    f"SELECT role, COUNT(*) AS n_valid FROM transcripts WHERE ({_NF_EXPR}) = 0 GROUP BY role"
+))
 def q_valid_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MergeSources collapse: rows with ANY failure emit no valid row."""
     t = _transcripts(spark, sf_dir)
@@ -99,6 +212,18 @@ def q_valid_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res.valid.groupBy("role").agg(F.count(F.lit(1)).alias("n_valid"))
 
 
+@query(with_transcripts(
+    f"""
+            SELECT CAST(ts AS DATE) AS part_date,
+                   COUNT(*) AS rows_scanned,
+                   CAST(SUM(CASE WHEN nf > 0 THEN 1 ELSE 0 END) AS BIGINT) AS rows_with_violations,
+                   CAST(SUM(nf) AS BIGINT) AS violations,
+                   {len(_FAIL_CONDS)} AS constraints_evaluated,
+                   (SUM(nf) = 0) AS is_pass
+            FROM (SELECT ts, ({_NF_EXPR}) AS nf FROM transcripts) f
+            GROUP BY 1
+            """
+))
 def q_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-partition pass/fail verdict + metrics (north rule)."""
     t = _transcripts(spark, sf_dir).withColumn("part_date", F.to_date("ts"))
@@ -113,11 +238,19 @@ def q_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(with_transcripts(
+    "SELECT conv_id, turn_idx, COUNT(*) AS n_dups FROM transcripts "
+    "GROUP BY conv_id, turn_idx HAVING COUNT(*) > 1"
+))
 def q_uniqueness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uniqueness on (conv_id, turn_idx) — hash agg w/ map-side combine."""
     return uniqueness_violations(_transcripts(spark, sf_dir), ["conv_id", "turn_idx"])
 
 
+@query(with_transcripts(
+    "SELECT conv_id, turn_idx, tool FROM transcripts "
+    "WHERE tool IS NOT NULL AND tool NOT IN (SELECT tool FROM tool_catalog)"
+))
 def q_referential(spark: SparkSession, sf_dir: str) -> DataFrame:
     """tool -> allowed-tool-catalog via broadcast LEFT ANTI join."""
     t = _transcripts(spark, sf_dir)
@@ -126,17 +259,46 @@ def q_referential(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(with_transcripts(
+    """
+            SELECT conv_id, turn_idx, ts, prev_ts FROM (
+              SELECT conv_id, turn_idx, ts,
+                     LAG(turn_idx) OVER w AS prev_idx,
+                     LAG(ts) OVER w AS prev_ts
+              FROM transcripts
+              WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx, ts)
+            ) x
+            WHERE prev_idx IS NOT NULL AND turn_idx > prev_idx AND ts < prev_ts
+            """
+))
 def q_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ts regressions against turn order (lag window per conversation)."""
     return ordering_violations(_transcripts(spark, sf_dir))
 
 
+@query(with_transcripts(
+    "\nUNION ALL\n".join(
+        f"SELECT '{c}' AS col_name, COUNT(*) AS n_rows, "
+        f"CAST(SUM(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls, "
+        f"ROUND(CAST(SUM(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*), 4) AS null_rate, "
+        f"COUNT(DISTINCT {c}) AS n_distinct FROM transcripts"
+        for c in ["conv_id", "turn_idx", "role", "text", "tool"]
+    )
+))
 def q_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-column null rate + exact distinct count, single agg pass."""
     t = _transcripts(spark, sf_dir)
     return column_profile(t, ["conv_id", "turn_idx", "role", "text", "tool"])
 
 
+@query(with_transcripts(
+    "SELECT "
+    + ", ".join(
+        f"ROUND(quantile_cont(length(text), {q}), 4) AS q{int(q * 100)}"
+        for q in [0.25, 0.5, 0.75, 0.95]
+    )
+    + " FROM transcripts WHERE text IS NOT NULL"
+))
 def q_text_len_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles of turn length (oracle-checkable
     variant of the t-digest path)."""
@@ -144,6 +306,15 @@ def q_text_len_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_quantiles(t, "text_len", [0.25, 0.5, 0.75, 0.95])
 
 
+# t-digest is approximate by construction, so the oracle pins the
+# PUBLISHED ACCURACY BOUND rather than value equality: n_vals must
+# equal the table's exact non-null count and every rank-error
+# boolean (computed distributed on the Spark side) must be TRUE.
+@query(with_transcripts(
+    "SELECT CAST(COUNT(*) AS BIGINT) AS n_vals,"
+    " TRUE AS q25_ok, TRUE AS q50_ok, TRUE AS q75_ok, TRUE AS q95_ok"
+    " FROM transcripts WHERE text IS NOT NULL"
+))
 def q_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fully distributed t-digest quantiles of turn length (applyInPandas
     partial digests + two-level tree merge INSIDE Spark — the driver never
@@ -191,6 +362,37 @@ def _epoch_s(c) -> "F.Column":
     return F.unix_seconds(F.col(c).cast("timestamp"))
 
 
+_MID_SQL = (
+    "SELECT ROUND((MIN(CAST(FLOOR(epoch(ts)) AS BIGINT))"
+    " + MAX(CAST(FLOOR(epoch(ts)) AS BIGINT))) / 2) AS mid FROM transcripts"
+)
+
+_HIST_SQL = """
+SELECT LEAST(GREATEST(CAST(FLOOR(length(text) / 10.0) AS INT), 0), 19) AS bucket,
+       COUNT(*) AS n
+FROM transcripts
+WHERE text IS NOT NULL AND CAST(FLOOR(epoch(ts)) AS BIGINT) {op} (SELECT mid FROM m)
+GROUP BY 1
+"""
+
+
+@query(with_transcripts(
+    f"""
+            , m AS ({_MID_SQL})
+            , ha AS ({_HIST_SQL.format(op='<')})
+            , hb AS ({_HIST_SQL.format(op='>=')})
+            , j AS (
+              SELECT COALESCE(ha.bucket, hb.bucket) AS bucket,
+                     COALESCE(ha.n, 0) AS na, COALESCE(hb.n, 0) AS nb
+              FROM ha FULL OUTER JOIN hb ON ha.bucket = hb.bucket
+            )
+            SELECT ROUND(SUM((p - q) * LN(p / q)), 4) AS psi FROM (
+              SELECT GREATEST(na * 1.0 / (SELECT SUM(na) FROM j), 1e-6) AS p,
+                     GREATEST(nb * 1.0 / (SELECT SUM(nb) FROM j), 1e-6) AS q
+              FROM j
+            ) t
+            """
+))
 def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PSI on turn-length histograms, first half vs second half by event
     time (epsilon-clamped closed form over bucketed proportions). Both
@@ -200,12 +402,49 @@ def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return psi_joined(split_histograms(t, "text_len", "ts", 10.0, 20))
 
 
+@query(with_transcripts(
+    f"""
+            , m AS ({_MID_SQL})
+            , ha AS ({_HIST_SQL.format(op='<')})
+            , hb AS ({_HIST_SQL.format(op='>=')})
+            , j AS (
+              SELECT COALESCE(ha.bucket, hb.bucket) AS bucket,
+                     COALESCE(ha.n, 0) AS na, COALESCE(hb.n, 0) AS nb
+              FROM ha FULL OUTER JOIN hb ON ha.bucket = hb.bucket
+            )
+            SELECT ROUND(MAX(ABS(ca * 1.0 / (SELECT SUM(na) FROM j)
+                               - cb * 1.0 / (SELECT SUM(nb) FROM j))), 4) AS ks
+            FROM (
+              SELECT SUM(na) OVER (ORDER BY bucket) AS ca,
+                     SUM(nb) OVER (ORDER BY bucket) AS cb
+              FROM j
+            ) t
+            """
+))
 def q_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KS statistic on the same split (max |ECDF diff| over buckets)."""
     t = _transcripts(spark, sf_dir).select(F.length("text").alias("text_len"), "ts")
     return ks_joined(split_histograms(t, "text_len", "ts", 10.0, 20))
 
 
+@query(with_transcripts(
+    f"""
+            , m AS ({_MID_SQL})
+            , ha AS ({_HIST_SQL.format(op='<')})
+            , hb AS ({_HIST_SQL.format(op='>=')})
+            , j AS (
+              SELECT COALESCE(ha.bucket, hb.bucket) AS bucket,
+                     COALESCE(ha.n, 0) AS na, COALESCE(hb.n, 0) AS nb
+              FROM ha FULL OUTER JOIN hb ON ha.bucket = hb.bucket
+            )
+            SELECT ROUND(SUM(0.5 * p * LN(p / ((p + q) / 2))
+                           + 0.5 * q * LN(q / ((p + q) / 2))), 4) AS js FROM (
+              SELECT GREATEST(na * 1.0 / (SELECT SUM(na) FROM j), 1e-6) AS p,
+                     GREATEST(nb * 1.0 / (SELECT SUM(nb) FROM j), 1e-6) AS q
+              FROM j
+            ) t
+            """
+))
 def q_js_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jensen-Shannon divergence on the same split (bounded, symmetric —
     operators/drift.py:js_joined)."""
@@ -213,6 +452,27 @@ def q_js_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return js_joined(split_histograms(t, "text_len", "ts", 10.0, 20))
 
 
+@query(with_transcripts(
+    f"""
+            , m AS ({_MID_SQL})
+            , ha AS ({_HIST_SQL.format(op='<')})
+            , hb AS ({_HIST_SQL.format(op='>=')})
+            , grid AS (SELECT unnest(range(0, 20)) AS bucket)
+            , j AS (
+              SELECT grid.bucket,
+                     COALESCE(ha.n, 0) AS na, COALESCE(hb.n, 0) AS nb
+              FROM grid LEFT JOIN ha ON ha.bucket = grid.bucket
+                        LEFT JOIN hb ON hb.bucket = grid.bucket
+            )
+            SELECT ROUND(SUM(ABS(ca * 1.0 / (SELECT SUM(na) FROM j)
+                               - cb * 1.0 / (SELECT SUM(nb) FROM j))) * 10.0, 4) AS w1
+            FROM (
+              SELECT SUM(na) OVER (ORDER BY bucket) AS ca,
+                     SUM(nb) OVER (ORDER BY bucket) AS cb
+              FROM j
+            ) t
+            """
+))
 def q_w1_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wasserstein-1 (earth-mover) distance on the same split — integral of
     |CDF difference| over the DENSIFIED bucket grid
@@ -239,6 +499,55 @@ def _ts_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     return g.filter(F.col("gap_s").isNotNull())
 
 
+# ts-gap drift: per-conversation inter-turn gap (whole seconds), 1h buckets
+_GAPS_SQL = """
+, g0 AS (
+  SELECT conv_id, ts,
+         CAST(FLOOR(epoch(ts)) AS BIGINT)
+           - LAG(CAST(FLOOR(epoch(ts)) AS BIGINT))
+             OVER (PARTITION BY conv_id ORDER BY turn_idx, ts) AS gap_s
+  FROM transcripts
+), gaps AS (SELECT * FROM g0 WHERE gap_s IS NOT NULL)
+, m AS (
+  SELECT ROUND((MIN(CAST(FLOOR(epoch(ts)) AS BIGINT))
+         + MAX(CAST(FLOOR(epoch(ts)) AS BIGINT))) / 2) AS mid FROM gaps
+)
+"""
+
+_GAP_HIST_SQL = """
+SELECT LEAST(GREATEST(CAST(FLOOR(gap_s / 3600.0) AS INT), 0), 23) AS bucket,
+       COUNT(*) AS n
+FROM gaps
+WHERE CAST(FLOOR(epoch(ts)) AS BIGINT) {op} (SELECT mid FROM m)
+GROUP BY 1
+"""
+
+_PSI_FROM_J = """
+SELECT ROUND(SUM((p - q) * LN(p / q)), 4) AS psi FROM (
+  SELECT GREATEST(na * 1.0 / (SELECT SUM(na) FROM j), 1e-6) AS p,
+         GREATEST(nb * 1.0 / (SELECT SUM(nb) FROM j), 1e-6) AS q
+  FROM j
+) t
+"""
+
+
+def _gap_drift_oracle(stat_sql: str) -> str:
+    return with_transcripts(
+        _GAPS_SQL
+        + f", ha AS ({_GAP_HIST_SQL.format(op='<')})"
+        + f", hb AS ({_GAP_HIST_SQL.format(op='>=')})"
+        + """
+        , j AS (
+          SELECT COALESCE(ha.bucket, hb.bucket) AS bucket,
+                 COALESCE(ha.n, 0) AS na, COALESCE(hb.n, 0) AS nb
+          FROM ha FULL OUTER JOIN hb ON ha.bucket = hb.bucket
+        )
+        """
+        + stat_sql
+    )
+
+
+@query(_gap_drift_oracle(_PSI_FROM_J))
 def q_ts_gap_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PSI drift on ts-gap histograms (1h buckets), first vs second half —
     same one-aggregate split shape as q_psi_drift."""
@@ -246,12 +555,32 @@ def q_ts_gap_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     return psi_joined(split_histograms(g, "gap_s", "ts", 3600.0, 24))
 
 
+_KS_FROM_J = """
+SELECT ROUND(MAX(ABS(ca * 1.0 / (SELECT SUM(na) FROM j)
+                   - cb * 1.0 / (SELECT SUM(nb) FROM j))), 4) AS ks
+FROM (
+  SELECT SUM(na) OVER (ORDER BY bucket) AS ca,
+         SUM(nb) OVER (ORDER BY bucket) AS cb
+  FROM j
+) t
+"""
+
+
+@query(_gap_drift_oracle(_KS_FROM_J))
 def q_ts_gap_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KS drift on the same ts-gap split."""
     g = _ts_gaps(spark, sf_dir)
     return ks_joined(split_histograms(g, "gap_s", "ts", 3600.0, 24))
 
 
+@query(with_transcripts(
+    """
+            SELECT CAST(ts AS DATE) AS part_date,
+                   ROUND(quantile_cont(length(text), 0.5), 4) AS q50,
+                   ROUND(quantile_cont(length(text), 0.95), 4) AS q95
+            FROM transcripts WHERE text IS NOT NULL GROUP BY 1
+            """
+))
 def q_quantiles_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-partition profile: exact text-length percentiles per day (the
     grouped variant of the quantile stats; percentile is a partial
@@ -266,6 +595,28 @@ def q_quantiles_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_quantiles_by_group(t, "part_date", "text_len", [0.5, 0.95])
 
 
+@query(with_transcripts(
+    """
+            , per AS (
+              SELECT CAST(ts AS DATE) AS grp,
+                     LEAST(GREATEST(CAST(FLOOR(length(text) / 25.0) AS INT), 0), 19) AS bucket,
+                     COUNT(*) AS n
+              FROM transcripts WHERE text IS NOT NULL GROUP BY 1, 2
+            ), gbase AS (SELECT bucket, SUM(n) AS gn FROM per GROUP BY 1),
+            tg AS (SELECT grp, SUM(n) AS tg FROM per GROUP BY 1),
+            tot AS (SELECT SUM(n) AS t FROM per),
+            grid AS (SELECT tg.grp, tg.tg, gbase.bucket, gbase.gn FROM tg CROSS JOIN gbase),
+            j AS (
+              SELECT g.grp, g.tg, g.gn, COALESCE(per.n, 0) AS n
+              FROM grid g LEFT JOIN per ON per.grp = g.grp AND per.bucket = g.bucket
+            )
+            SELECT grp AS part_date, CAST(MIN(tg) AS BIGINT) AS n_rows,
+                   ROUND(SUM((GREATEST(n * 1.0 / tg, 0.000001) - GREATEST(gn * 1.0 / t, 0.000001))
+                             * LN(GREATEST(n * 1.0 / tg, 0.000001)
+                                  / GREATEST(gn * 1.0 / t, 0.000001))), 4) AS psi
+            FROM j CROSS JOIN tot GROUP BY grp
+            """
+))
 def q_psi_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-partition drift: PSI of each day's turn-length distribution vs
     the whole-table baseline — the production shape of the north rule's
@@ -280,6 +631,32 @@ def q_psi_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     return psi_by_group(t, "part_date", "text_len", 25.0, 20)
 
 
+@query(with_transcripts(
+    """
+            , per AS (
+              SELECT CAST(ts AS DATE) AS grp,
+                     LEAST(GREATEST(CAST(FLOOR(length(text) / 25.0) AS INT), 0), 19) AS bucket,
+                     COUNT(*) AS n
+              FROM transcripts WHERE text IS NOT NULL GROUP BY 1, 2
+            ), gbase AS (SELECT bucket, SUM(n) AS gn FROM per GROUP BY 1),
+            tg AS (SELECT grp, SUM(n) AS tg FROM per GROUP BY 1),
+            tot AS (SELECT SUM(n) AS t FROM per),
+            grid AS (SELECT tg.grp, tg.tg, gbase.bucket, gbase.gn FROM tg CROSS JOIN gbase),
+            j AS (
+              SELECT g.grp, g.tg, g.gn, COALESCE(per.n, 0) AS n
+              FROM grid g LEFT JOIN per ON per.grp = g.grp AND per.bucket = g.bucket
+            ), pq AS (
+              SELECT grp, tg,
+                     GREATEST(n * 1.0 / tg, 0.000001) AS p,
+                     GREATEST(gn * 1.0 / t, 0.000001) AS q
+              FROM j CROSS JOIN tot
+            )
+            SELECT grp AS part_date, CAST(MIN(tg) AS BIGINT) AS n_rows,
+                   ROUND(SUM(0.5 * p * LN(p / ((p + q) / 2))
+                           + 0.5 * q * LN(q / ((p + q) / 2))), 4) AS js
+            FROM pq GROUP BY grp
+            """
+))
 def q_js_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-day Jensen-Shannon divergence vs the whole-table baseline
     (one-scan grid shape, operators/drift.py:js_by_group)."""
@@ -293,6 +670,33 @@ def q_js_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     return js_by_group(t, "part_date", "text_len", 25.0, 20)
 
 
+@query(with_transcripts(
+    """
+            , per AS (
+              SELECT CAST(ts AS DATE) AS grp,
+                     LEAST(GREATEST(CAST(FLOOR(length(text) / 25.0) AS INT), 0), 19) AS bucket,
+                     COUNT(*) AS n
+              FROM transcripts WHERE text IS NOT NULL GROUP BY 1, 2
+            ), gbase AS (SELECT bucket, SUM(n) AS gn FROM per GROUP BY 1),
+            tg AS (SELECT grp, SUM(n) AS tg FROM per GROUP BY 1),
+            tot AS (SELECT SUM(n) AS t FROM per),
+            grid AS (SELECT tg.grp, tg.tg, gbase.bucket, gbase.gn FROM tg CROSS JOIN gbase),
+            j AS (
+              SELECT g.grp, g.tg, g.bucket, g.gn, COALESCE(per.n, 0) AS n
+              FROM grid g LEFT JOIN per ON per.grp = g.grp AND per.bucket = g.bucket
+            ), c AS (
+              SELECT grp, tg,
+                     SUM(n) OVER (PARTITION BY grp ORDER BY bucket
+                                  ROWS UNBOUNDED PRECEDING) AS cn,
+                     SUM(gn) OVER (PARTITION BY grp ORDER BY bucket
+                                   ROWS UNBOUNDED PRECEDING) AS cgn
+              FROM j
+            )
+            SELECT grp AS part_date, CAST(MIN(tg) AS BIGINT) AS n_rows,
+                   ROUND(MAX(ABS(cn * 1.0 / tg - cgn * 1.0 / (SELECT t FROM tot))), 4) AS ks
+            FROM c GROUP BY grp
+            """
+))
 def q_ks_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-partition KS: each day's turn-length ECDF vs the whole-table
     baseline (same one-scan grid shape as psi_by_day)."""
@@ -306,6 +710,22 @@ def q_ks_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ks_by_group(t, "part_date", "text_len", 25.0, 20)
 
 
+@query(with_transcripts(
+    """
+            SELECT conv_id, turn_idx, ts,
+                   'words.[' || CAST(i - 1 AS VARCHAR) || ']' AS path,
+                   'word_too_long' AS code
+            FROM (
+              SELECT conv_id, turn_idx, ts, w,
+                     unnest(range(1, len(w) + 1)) AS i
+              FROM (
+                SELECT conv_id, turn_idx, ts, string_split(text, ' ') AS w
+                FROM transcripts WHERE text IS NOT NULL
+              ) b
+            ) x
+            WHERE length(w[i]) > 6
+            """
+))
 def q_element_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Element constraints over an array column with per-index provenance
     (disputeAnyWithFact, VCtx.fs:416-429): split text into words and flag
@@ -326,6 +746,33 @@ def q_element_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(with_transcripts(
+    f"""
+            SELECT conv_id, turn_idx, ts, path, code FROM (
+              SELECT conv_id, turn_idx, ts, 'meta' AS path,
+                     'metaRequired' AS code
+              FROM transcripts WHERE role IS NULL AND tool IS NULL
+              UNION ALL
+              SELECT conv_id, turn_idx, ts, 'meta.role', 'roleRequired'
+              FROM transcripts
+              WHERE NOT (role IS NULL AND tool IS NULL) AND role IS NULL
+              UNION ALL
+              SELECT conv_id, turn_idx, ts, 'meta.role', 'roleEnum'
+              FROM transcripts
+              WHERE role IS NOT NULL AND role NOT IN ({_ROLES_SQL})
+              UNION ALL
+              SELECT conv_id, turn_idx, ts, 'meta.tool', 'toolFormat'
+              FROM transcripts
+              WHERE tool IS NOT NULL
+                AND NOT regexp_matches(tool, '^tool_[0-9]+$')
+              UNION ALL
+              -- post-gate parent check: reached only when no child branch
+              -- refuted (roleRequired needs role IS NULL, impossible here)
+              SELECT conv_id, turn_idx, ts, 'meta', 'toolOnToolRole'
+              FROM transcripts WHERE role = 'tool' AND tool IS NULL
+            ) v
+            """
+))
 def q_nested_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nested child-suite composition (refuteWithProof VCtx.fs:253-269 /
     applyFailures VCtx.fs:36-47): a derived ``meta`` struct is validated by
@@ -368,6 +815,35 @@ def q_nested_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(with_transcripts(
+    f"""
+            , ranked AS (
+              SELECT conv_id, role, turn_idx,
+                     ROW_NUMBER() OVER (
+                       PARTITION BY conv_id
+                       ORDER BY turn_idx ASC NULLS FIRST, role ASC NULLS FIRST
+                     ) AS rn
+              FROM transcripts
+            )
+            SELECT conv_id, path, code FROM (
+              SELECT conv_id,
+                     'turns.[' || CAST(rn - 1 AS VARCHAR) || '].role' AS path,
+                     'roleRequired' AS code
+              FROM ranked WHERE role IS NULL
+              UNION ALL
+              SELECT conv_id,
+                     'turns.[' || CAST(rn - 1 AS VARCHAR) || '].role',
+                     'roleEnum'
+              FROM ranked
+              WHERE role IS NOT NULL AND role NOT IN ({_ROLES_SQL})
+              UNION ALL
+              SELECT conv_id,
+                     'turns.[' || CAST(rn - 1 AS VARCHAR) || '].turn_idx',
+                     'turnIdxNonNegative'
+              FROM ranked WHERE turn_idx IS NOT NULL AND turn_idx < 0
+            ) v
+            """
+))
 def q_each_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-element nested validation (refuteEachWithProof, VCtx.fs:274-287):
     turns are collected per conversation into an ordered array of structs
@@ -395,6 +871,29 @@ def q_each_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res.violations.select("conv_id", F.col("path_str").alias("path"), "code")
 
 
+@query(with_transcripts(
+    """
+            , ranked AS (
+              SELECT conv_id, role, turn_idx,
+                     ROW_NUMBER() OVER (
+                       PARTITION BY conv_id
+                       ORDER BY turn_idx ASC NULLS FIRST, role ASC NULLS FIRST
+                     ) AS rn
+              FROM transcripts
+            )
+            SELECT conv_id, path, code FROM (
+              SELECT conv_id, 'turns.[0].role' AS path,
+                     'firstMustBeSystem' AS code
+              FROM ranked
+              WHERE rn = 1 AND role IS NOT NULL AND role <> 'system'
+              UNION ALL
+              SELECT conv_id,
+                     'turns.[' || CAST(rn - 1 AS VARCHAR) || '].turn_idx',
+                     'turnIdxMatchesPosition'
+              FROM ranked WHERE turn_idx IS NOT NULL AND turn_idx < rn - 1
+            ) v
+            """
+))
 def q_each_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-element nested validation where the child validators see the
     ELEMENT INDEX (reference indexed overloads VCtx.fs:242-248,331-344 via
@@ -424,6 +923,12 @@ def q_each_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- training-data pipeline: dedup / text / similarity ----------------------
 
 
+@query(with_docs(
+    "SELECT content_hash, n_dups, min_id FROM ("
+    "  SELECT md5(text) AS content_hash, COUNT(*) AS n_dups,"
+    "         MIN(doc_id) AS min_id FROM docs GROUP BY 1"
+    ") g WHERE n_dups > 1"
+))
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: content-hash groupBy (map-side combine, one shuffle)."""
     from fsharp_data_validation_spark.operators.dedup import exact_duplicates
@@ -432,6 +937,59 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_duplicates(load_docs(spark, sf_dir), "doc_id", "text")
 
 
+# bigram add-k LM trained on the en reference sub-corpus; CASTs keep
+# the smoothed ratios in DOUBLE (decimal literals would otherwise
+# promote the division to DECIMAL)
+@query(with_docs(
+    """
+            , base AS (
+              SELECT doc_id, text, (lang = 'en') AS is_ref,
+                     string_split(text, ' ') AS w
+              FROM docs
+            ),
+            refbg AS (
+              SELECT w[i + 1] AS w1, w[i + 2] AS w2
+              FROM (
+                SELECT w, unnest(range(0, len(w) - 1)) AS i
+                FROM base WHERE is_ref AND text IS NOT NULL AND len(w) >= 2
+              ) s
+            ),
+            bg AS (SELECT w1, w2, COUNT(*) AS c12 FROM refbg GROUP BY 1, 2),
+            ctx AS (SELECT w1, SUM(c12) AS c1 FROM bg GROUP BY 1),
+            voc AS (
+              SELECT CAST(COUNT(DISTINCT tok) AS DOUBLE) AS v
+              FROM (SELECT unnest(w) AS tok FROM base
+                    WHERE is_ref AND text IS NOT NULL) t
+            ),
+            docbg AS (
+              SELECT doc_id, w[i + 1] AS w1, w[i + 2] AS w2
+              FROM (
+                SELECT doc_id, w, unnest(range(0, len(w) - 1)) AS i
+                FROM base WHERE text IS NOT NULL AND len(w) >= 2
+              ) s
+            ),
+            sc AS (
+              SELECT d.doc_id,
+                     LOG2(
+                       (CAST(COALESCE(bg.c12, 0) AS DOUBLE) + 0.1)
+                       / (CAST(COALESCE(ctx.c1, 0) AS DOUBLE)
+                          + 0.1 * (voc.v + 1.0))
+                     ) AS lp
+              FROM docbg d
+              LEFT JOIN bg ON bg.w1 = d.w1 AND bg.w2 = d.w2
+              LEFT JOIN ctx ON ctx.w1 = d.w1
+              CROSS JOIN voc
+            ),
+            per AS (
+              SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
+                     ROUND(POW(2.0, -AVG(lp)), 4) AS ppl
+              FROM sc GROUP BY 1
+            )
+            SELECT b.doc_id, b.is_ref,
+                   COALESCE(p.n_bigrams, 0) AS n_bigrams, p.ppl
+            FROM base b LEFT JOIN per p USING (doc_id)
+            """
+))
 def q_ngram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram-LM perplexity quality filter (operators/text.py:
     ngram_perplexity): every doc scored under an add-k bigram model trained
@@ -446,6 +1004,58 @@ def q_ngram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# keep-earliest = ROW_NUMBER over (doc_id, start); splice = token
+# anti-join against the span coverage set; all-removed docs must
+# yield '' (COALESCE), NULL-text docs NULL — matching the Spark
+# array_join/filter semantics exactly
+@query(with_docs(
+    """
+            , t AS (SELECT doc_id, text, string_split(text, ' ') AS w FROM docs),
+            g AS (
+              SELECT doc_id, unnest(range(0, len(w) - 8 + 1)) AS s, w
+              FROM t WHERE text IS NOT NULL AND len(w) >= 8
+            ),
+            k AS (
+              SELECT doc_id, s,
+                     md5(array_to_string(w[s + 1:s + 8], ' ')) AS key
+              FROM g
+            ),
+            r AS (
+              SELECT doc_id, s,
+                     ROW_NUMBER() OVER (PARTITION BY key ORDER BY doc_id, s) AS rn
+              FROM k
+            ),
+            dup AS (SELECT doc_id, s FROM r WHERE rn > 1),
+            tok AS (
+              SELECT doc_id, unnest(range(0, len(w))) AS i, w
+              FROM t WHERE text IS NOT NULL
+            ),
+            cov AS (
+              SELECT DISTINCT tok.doc_id, tok.i
+              FROM tok JOIN dup d
+                ON d.doc_id = tok.doc_id AND tok.i >= d.s AND tok.i < d.s + 8
+            ),
+            per AS (
+              SELECT tok.doc_id,
+                     CAST(COUNT(*) AS BIGINT) AS ntok,
+                     CAST(COUNT(*) FILTER (WHERE cov.i IS NOT NULL) AS BIGINT) AS nrem,
+                     COALESCE(
+                       string_agg(tok.w[tok.i + 1], ' ' ORDER BY tok.i)
+                         FILTER (WHERE cov.i IS NULL),
+                       '') AS clean
+              FROM tok LEFT JOIN cov
+                ON cov.doc_id = tok.doc_id AND cov.i = tok.i
+              GROUP BY 1
+            ),
+            ds AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS ng FROM dup GROUP BY 1)
+            SELECT t.doc_id,
+                   COALESCE(p.ntok, 0) AS n_tokens,
+                   COALESCE(ds.ng, 0) AS n_dup_grams,
+                   COALESCE(p.nrem, 0) AS n_removed,
+                   CASE WHEN t.text IS NULL THEN NULL ELSE p.clean END AS text_clean
+            FROM t LEFT JOIN per p USING (doc_id) LEFT JOIN ds USING (doc_id)
+            """
+))
 def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ExactSubstr-style duplicated-span removal (operators/dedup.py:
     span_dedup): every 8-token span occurring more than once corpus-wide is
@@ -459,6 +1069,63 @@ def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return span_dedup(load_docs(spark, sf_dir), "doc_id", "text", gram_len=8)
 
 
+# hashed unigram+bigram Laplace-smoothed log-likelihood ratio;
+# CASTs keep every ratio in DOUBLE (DuckDB decimal literals would
+# otherwise promote the division to DECIMAL)
+@query(with_docs(
+    """
+            , base AS (
+              SELECT doc_id, text, (lang = 'en') AS is_target,
+                     string_split(text, ' ') AS w
+              FROM docs
+            ),
+            uni AS (
+              SELECT doc_id, is_target, unnest(w) AS g
+              FROM base WHERE text IS NOT NULL
+            ),
+            bi AS (
+              SELECT doc_id, is_target, array_to_string(w[i + 1:i + 2], ' ') AS g
+              FROM (
+                SELECT doc_id, is_target, w,
+                       unnest(range(0, len(w) - 1)) AS i
+                FROM base WHERE text IS NOT NULL AND len(w) >= 2
+              ) s
+            ),
+            occ AS (
+              SELECT doc_id, is_target,
+                     CAST(('0x' || substr(md5(g), 1, 15)) AS BIGINT) % 4096 AS b
+              FROM (SELECT * FROM uni UNION ALL SELECT * FROM bi) u
+            ),
+            bc AS (
+              SELECT b,
+                     COUNT(*) FILTER (WHERE is_target) AS ct,
+                     COUNT(*) FILTER (WHERE NOT is_target) AS cr
+              FROM occ GROUP BY 1
+            ),
+            tot AS (
+              SELECT CAST(SUM(ct) AS DOUBLE) AS tt,
+                     CAST(SUM(cr) AS DOUBLE) AS tr
+              FROM bc
+            ),
+            lw AS (
+              SELECT b,
+                     LN((CAST(ct AS DOUBLE) + 1.0) / (tt + 1.0 * 4096))
+                     - LN((CAST(cr AS DOUBLE) + 1.0) / (tr + 1.0 * 4096)) AS lwt
+              FROM bc CROSS JOIN tot
+            ),
+            per AS (
+              SELECT occ.doc_id,
+                     CAST(COUNT(*) AS BIGINT) AS n_grams,
+                     ROUND(SUM(lw.lwt), 4) AS logratio
+              FROM occ JOIN lw ON lw.b = occ.b
+              GROUP BY 1
+            )
+            SELECT d.doc_id, d.is_target,
+                   COALESCE(p.n_grams, 0) AS n_grams,
+                   p.logratio
+            FROM base d LEFT JOIN per p USING (doc_id)
+            """
+))
 def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR-style importance weights (operators/sampling.py:dsir_weights):
     per-doc log-likelihood ratio of the hashed unigram+bigram distribution
@@ -477,6 +1144,27 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# shingle sets + exact-Jaccard pairs in DuckDB (oracle for both the exact
+# inverted-index query AND the LSH+verify query — high-recall banding means
+# they agree)
+_JACCARD_ORACLE = """
+, d AS (
+  SELECT doc_id,
+         list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
+                        for i in range(1, len(w) - 1)]) AS sh
+  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM docs)
+  WHERE len(w) >= 3
+)
+SELECT id_a, id_b, sim FROM (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+         ROUND(len(list_intersect(a.sh, b.sh)) * 1.0 /
+               (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) AS sim
+  FROM d a JOIN d b ON a.doc_id < b.doc_id
+) p WHERE sim >= 0.8
+"""
+
+
+@query(with_docs(_JACCARD_ORACLE), quadratic=True)
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard near-dup pairs via shingle inverted index."""
     from fsharp_data_validation_spark.operators.dedup import ngram_jaccard_pairs
@@ -485,6 +1173,15 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs(load_docs(spark, sf_dir), "doc_id", "text", 3, 0.8)
 
 
+@query(with_docs(
+    """
+            SELECT doc_id FROM (
+              SELECT doc_id,
+                     ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
+              FROM docs
+            ) k WHERE rn = 1
+            """
+))
 def q_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized exact dedup (keep lowest-id per content group)."""
     from fsharp_data_validation_spark.operators.dedup import dedup_keep_first
@@ -493,6 +1190,41 @@ def q_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_keep_first(load_docs(spark, sf_dir), "doc_id", "text").select("doc_id")
 
 
+# Connected components of the exact near-dup graph: DuckDB recursive CTE
+# transitive closure over the symmetric pair edges, min reachable id per
+# node. (WITH RECURSIVE must head the CTE list, so this oracle inlines the
+# docs CTE instead of using with_docs().)
+_COMPONENTS_ORACLE = (
+    "WITH RECURSIVE docs AS (" + _DOCS_SQL + ")"
+    + """
+, d AS (
+  SELECT doc_id,
+         list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
+                        for i in range(1, len(w) - 1)]) AS sh
+  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM docs)
+  WHERE len(w) >= 3
+), pairs AS (
+  SELECT id_a, id_b FROM (
+    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+           ROUND(len(list_intersect(a.sh, b.sh)) * 1.0 /
+                 (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) AS sim
+    FROM d a JOIN d b ON a.doc_id < b.doc_id
+  ) p WHERE sim >= 0.8
+), sym AS (
+  SELECT id_a AS src, id_b AS dst FROM pairs
+  UNION ALL
+  SELECT id_b AS src, id_a AS dst FROM pairs
+), reach(src, dst) AS (
+  SELECT doc_id, doc_id FROM docs
+  UNION
+  SELECT r.src, s.dst FROM reach r JOIN sym s ON r.dst = s.src
+)
+SELECT src AS doc_id, MIN(dst) AS component FROM reach GROUP BY src
+"""
+)
+
+
+@query(_COMPONENTS_ORACLE, quadratic=True)
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clustering: connected components of the exact-Jaccard pair
     graph via iterative min-label propagation (checked against a DuckDB
@@ -503,6 +1235,21 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     return near_dup_components(load_docs(spark, sf_dir), "doc_id", "text", 3, 0.8)
 
 
+# independent spec of RAWV frame sampling: each sampled frame is
+# the i*12+1..i*12+12 substring of the dot-padded ASCII body
+@query(with_docs(
+    ", v AS ("
+    "  SELECT doc_id AS media_id, CAST(doc_id % 5 + 2 AS INT) AS n, "
+    "    rpad(regexp_replace(coalesce(text, ''), '[^ -~]', '', 'g'), "
+    "         CAST((doc_id % 5 + 2) * 12 AS INT), '.') AS body "
+    "  FROM docs"
+    "), s AS ("
+    "  SELECT media_id, n, body, unnest(range(0, n, 2)) AS i FROM v"
+    ") "
+    "SELECT media_id, CAST(i AS INT) AS frame_idx, "
+    "  CAST(4 AS INT) AS width, CAST(3 AS INT) AS height, "
+    "  substr(body, CAST(i * 12 + 1 AS INT), 12) AS frame_text FROM s"
+))
 def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video frame sampling end-to-end on the RAWV raw-frame container:
     payloads synthesized in Spark SQL (header + ASCII body so the oracle
@@ -539,6 +1286,15 @@ def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# HLL sketch binaries aren't DuckDB-reproducible; the oracle pins the
+# exactly-reproducible companions (partition count, exact distinct)
+# and the PUBLISHED ACCURACY BOUND as a Spark-side boolean (estimate
+# within 5% ≈ 3σ of lg_k=12's 1.6% RSE) that must read TRUE.
+@query(with_transcripts(
+    "SELECT CAST(COUNT(DISTINCT CAST(ts AS DATE)) AS BIGINT) AS n_parts,"
+    " CAST(COUNT(DISTINCT conv_id) AS BIGINT) AS exact_distinct,"
+    " TRUE AS within_err FROM transcripts"
+))
 def q_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable per-day HLL sketches of distinct conv_ids, answered by
     sketch UNION without rescanning (operators/stats.py:
@@ -567,6 +1323,36 @@ def q_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# total order for conversation-flow lag windows — must match
+# conversation_flow_violations' window spec exactly (ts alone can tie under
+# injected duplicate turn indexes)
+_FLOW_W = (
+    "PARTITION BY conv_id ORDER BY turn_idx, ts, role, "
+    "COALESCE(text, ''), COALESCE(tool, '')"
+)
+
+
+@query(with_transcripts(
+    f"""
+            , w AS (
+              SELECT conv_id, turn_idx, role,
+                     LAG(role) OVER ({_FLOW_W}) AS prev_role,
+                     ROW_NUMBER() OVER ({_FLOW_W}) AS rn
+              FROM transcripts
+            )
+            SELECT conv_id, turn_idx, role, code FROM (
+              SELECT conv_id, turn_idx, role, 'conversation_start' AS code
+              FROM w WHERE rn = 1 AND role NOT IN ('system', 'user')
+              UNION ALL
+              SELECT conv_id, turn_idx, role, 'consecutive_same_role'
+              FROM w WHERE prev_role IS NOT NULL AND role = prev_role
+              UNION ALL
+              SELECT conv_id, turn_idx, role, 'orphan_tool_turn'
+              FROM w WHERE role = 'tool'
+                    AND (prev_role IS NULL OR prev_role <> 'assistant')
+            ) v
+            """
+))
 def q_conv_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structural conversation-flow validation — cross-row sequencing rules
     (start-role, turn-taking, orphan tool turns) over one window pass
@@ -579,6 +1365,25 @@ def q_conv_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
     return conversation_flow_violations(_transcripts(spark, sf_dir))
 
 
+@query(with_transcripts(
+    f"""
+            , m AS ({_MID_SQL})
+            , c AS (
+              SELECT role AS cat,
+                     SUM(CASE WHEN CAST(FLOOR(epoch(ts)) AS BIGINT) < (SELECT mid FROM m)
+                              THEN 1 ELSE 0 END) AS na,
+                     SUM(CASE WHEN CAST(FLOOR(epoch(ts)) AS BIGINT) >= (SELECT mid FROM m)
+                              THEN 1 ELSE 0 END) AS nb
+              FROM transcripts WHERE role IS NOT NULL GROUP BY 1
+            ), tot AS (SELECT SUM(na) AS ta, SUM(nb) AS tb, SUM(na) + SUM(nb) AS t FROM c)
+            SELECT ROUND(SUM(
+                     POWER(na - (na + nb) * ta * 1.0 / t, 2) / ((na + nb) * ta * 1.0 / t)
+                   + POWER(nb - (na + nb) * tb * 1.0 / t, 2) / ((na + nb) * tb * 1.0 / t)
+                   ), 4) AS chi2,
+                   CAST(COUNT(*) - 1 AS BIGINT) AS dof
+            FROM c CROSS JOIN tot
+            """
+))
 def q_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pearson chi-square role-distribution drift, first half vs second
     half by event time — the categorical drift test PSI/KS can't express
@@ -589,6 +1394,35 @@ def q_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chi2_drift(_transcripts(spark, sf_dir), "role", "ts")
 
 
+@query(with_transcripts(
+    """
+            , per AS (
+              SELECT CAST(ts AS DATE) AS grp,
+                     LEAST(GREATEST(CAST(FLOOR(length(text) / 25.0) AS INT), 0), 19) AS bucket,
+                     COUNT(*) AS n
+              FROM transcripts WHERE text IS NOT NULL GROUP BY 1, 2
+            ), gbase AS (SELECT bucket, SUM(n) AS gn FROM per GROUP BY 1),
+            tg AS (SELECT grp, SUM(n) AS tg FROM per GROUP BY 1),
+            tot AS (SELECT SUM(n) AS t FROM per),
+            spine AS (SELECT unnest(range(0, 20)) AS bucket),
+            grid AS (SELECT tg.grp, tg.tg, s.bucket FROM tg CROSS JOIN spine s),
+            j AS (
+              SELECT g.grp, g.tg, g.bucket,
+                     COALESCE(gb.gn, 0) AS gn, COALESCE(per.n, 0) AS n
+              FROM grid g LEFT JOIN gbase gb ON gb.bucket = g.bucket
+                          LEFT JOIN per ON per.grp = g.grp AND per.bucket = g.bucket
+            ),
+            c AS (
+              SELECT grp, tg,
+                     SUM(n) OVER (PARTITION BY grp ORDER BY bucket) AS cn,
+                     SUM(gn) OVER (PARTITION BY grp ORDER BY bucket) AS cg
+              FROM j
+            )
+            SELECT grp AS part_date, CAST(MIN(tg) AS BIGINT) AS n_rows,
+                   ROUND(SUM(ABS(cn * 1.0 / tg - cg * 1.0 / (SELECT t FROM tot))) * 25.0, 4) AS w1
+            FROM c GROUP BY grp
+            """
+))
 def q_w1_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-day Wasserstein-1 drift of turn length vs the whole-table
     baseline — completes the per-group drift family (PSI/KS/JS/W1); grid
@@ -604,6 +1438,20 @@ def q_w1_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     return w1_by_group(t, "part_date", "text_len", 25.0, 20)
 
 
+@query(with_transcripts(
+    f"""
+            SELECT day, n_rows, n_viol,
+                   ROUND(n_viol * 1.0 / n_rows, 6) AS rate,
+                   ROUND(SUM(n_viol) OVER w * 1.0 / SUM(n_rows) OVER w, 6) AS rolling_rate
+            FROM (
+              SELECT CAST(ts AS DATE) AS day,
+                     CAST(COUNT(*) AS BIGINT) AS n_rows,
+                     CAST(SUM(CASE WHEN ({_NF_EXPR}) > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_viol
+              FROM transcripts GROUP BY 1
+            ) d
+            WINDOW w AS (ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
+            """
+))
 def q_rolling_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-day suite violation rate + 7-day rolling rate — the monitoring
     time series over the single-projection suite run. Rolling sums run on
@@ -630,6 +1478,29 @@ def q_rolling_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(with_transcripts(
+    f"""
+            , base AS (
+              SELECT CAST(ts AS DATE) AS grp, length(text) AS x
+              FROM transcripts WHERE text IS NOT NULL
+            ),
+            med AS (SELECT grp, quantile_cont(x, 0.5) AS m FROM base GROUP BY 1),
+            mad AS (
+              SELECT b.grp, quantile_cont(ABS(b.x - m.m), 0.5) AS d
+              FROM base b JOIN med m ON b.grp = m.grp GROUP BY b.grp
+            )
+            SELECT b.grp AS part_date,
+                   CAST(COUNT(*) AS BIGINT) AS n_rows,
+                   ROUND(MIN(m.m), 4) AS med,
+                   ROUND(MIN(d.d), 4) AS mad,
+                   CAST(SUM(CASE WHEN ABS(b.x - m.m) > {3 * 1.4826!r} * d.d
+                            THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
+                   ROUND(SUM(CASE WHEN ABS(b.x - m.m) > {3 * 1.4826!r} * d.d
+                             THEN 1 ELSE 0 END) * 1.0 / COUNT(*), 4) AS outlier_rate
+            FROM base b JOIN med m ON b.grp = m.grp JOIN mad d ON b.grp = d.grp
+            GROUP BY 1
+            """
+))
 def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust per-day outlier profile on turn length: median + MAD flags
     (operators/stats.py:mad_outliers_by_group) — the heavy-tail-safe
@@ -644,6 +1515,29 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mad_outliers_by_group(t, "part_date", "text_len")
 
 
+@query(with_docs(
+    """
+            , toks AS (
+              SELECT doc_id AS doc, unnest(string_split(text, ' ')) AS term
+              FROM docs WHERE text IS NOT NULL
+            ),
+            tf AS (SELECT doc, term, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
+            dfq AS (SELECT term, COUNT(*) AS df_t FROM tf GROUP BY 1),
+            nd AS (SELECT COUNT(DISTINCT doc_id) AS n_docs FROM docs WHERE text IS NOT NULL)
+            SELECT doc AS doc_id, term, CAST(tf AS BIGINT) AS tf, score,
+                   CAST(rnk AS BIGINT) AS rnk
+            FROM (
+              SELECT tf.doc, tf.term, tf.tf,
+                     ROUND(tf.tf * LN(nd.n_docs * 1.0 / dfq.df_t), 4) AS score,
+                     ROW_NUMBER() OVER (
+                       PARTITION BY tf.doc
+                       ORDER BY ROUND(tf.tf * LN(nd.n_docs * 1.0 / dfq.df_t), 4) DESC,
+                                tf.term ASC
+                     ) AS rnk
+              FROM tf JOIN dfq USING (term) CROSS JOIN nd
+            ) r WHERE rnk <= 3
+            """
+))
 def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document top-3 TF-IDF terms (operators/text.py:tfidf_top_terms);
     ranking on the rounded score + lexicographic tiebreak so the window
@@ -654,6 +1548,27 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tfidf_top_terms(load_docs(spark, sf_dir), "doc_id", "text", 3)
 
 
+_COSINE_SQL = (
+    "list_dot_product({a}, {b}) / "
+    "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
+)
+
+
+@query(with_vecs(
+    f"""
+            , tagged AS (
+              SELECT vec_id, e,
+                     CASE WHEN CAST(('0x' || substr(md5('split' || '|' || CAST(vec_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 80
+                          THEN 0 ELSE 1 END AS side
+              FROM vecs
+            )
+            SELECT id_a, id_b, sim FROM (
+              SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+                     ROUND({_COSINE_SQL.format(a='a.e', b='b.e')}, 6) AS sim
+              FROM tagged a JOIN tagged b ON a.side = 0 AND b.side = 1
+            ) p WHERE sim >= 0.8
+            """
+), quadratic=True)
 def q_embedding_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-space benchmark decontamination: exact train x eval cosine
     pairs via the blocked GEMM with the eval side replicated per block
@@ -673,6 +1588,38 @@ def q_embedding_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(with_transcripts(
+    """
+            , agg AS (
+              SELECT
+                ROUND(AVG(CASE WHEN text IS NOT NULL THEN 1.0 ELSE 0.0 END), 4) AS m_text_comp,
+                ROUND(AVG(CASE WHEN tool IS NOT NULL THEN 1.0 ELSE 0.0 END), 4) AS m_tool_comp,
+                ROUND(
+                  COUNT(DISTINCT CASE WHEN conv_id IS NOT NULL AND turn_idx IS NOT NULL
+                                      THEN conv_id || '|' || CAST(turn_idx AS VARCHAR) END)
+                  * 1.0 / COUNT(*), 4) AS m_uniq,
+                ROUND(AVG(CASE WHEN role IN ('system','user','assistant','tool')
+                               THEN 1.0 ELSE 0.0 END), 4) AS m_role,
+                ROUND(CAST(MAX(length(text)) AS DOUBLE), 4) AS m_maxlen,
+                ROUND(CAST(COUNT(*) AS DOUBLE), 4) AS m_rows
+              FROM transcripts
+            ),
+            stacked AS (
+              SELECT 'text_completeness' AS check_name, m_text_comp AS metric_value,
+                     '>=' AS op, 0.99 AS threshold FROM agg
+              UNION ALL SELECT 'tool_completeness', m_tool_comp, '>=', 0.5 FROM agg
+              UNION ALL SELECT 'key_uniqueness', m_uniq, '>=', 1.0 FROM agg
+              UNION ALL SELECT 'role_compliance', m_role, '>=', 0.98 FROM agg
+              UNION ALL SELECT 'max_text_len', m_maxlen, '<=', 20000.0 FROM agg
+              UNION ALL SELECT 'row_count', m_rows, '>=', 100.0 FROM agg
+            )
+            SELECT check_name, metric_value, op, CAST(threshold AS DOUBLE) AS threshold,
+                   CASE WHEN (op = '>=' AND metric_value >= threshold)
+                          OR (op = '<=' AND metric_value <= threshold)
+                        THEN 'pass' ELSE 'fail' END AS status
+            FROM stacked
+            """
+))
 def q_dataset_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deequ-style dataset-level check suite in ONE aggregation pass
     (operators/checks.py:dataset_checks): completeness, key-uniqueness
@@ -699,6 +1646,76 @@ def q_dataset_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dataset_checks(t, checks)
 
 
+def _suggest_oracle(
+    string_cols: list[str], numeric_cols: list[str], max_domain: int = 10
+) -> str:
+    """Spec form of operators/checks.py:suggest_constraints over the
+    transcripts table: ONE profile aggregate + a sorted-domain aggregate,
+    then one UNION ALL arm per (column, suggestion-kind) with the same
+    emission guards the operator applies (the oracle computes every string
+    column's domain unconditionally — spec-form latitude — but only emits
+    it under the same ``0 < distinct <= max_domain`` guard)."""
+    cols = string_cols + numeric_cols
+    prof = ["CAST(COUNT(*) AS BIGINT) AS n"]
+    for c in cols:
+        prof += [
+            f"COUNT({c}) AS nn_{c}",
+            f"COUNT(DISTINCT {c}) AS d_{c}",
+            f"ROUND(AVG(CASE WHEN {c} IS NOT NULL THEN 1.0 ELSE 0.0 END), 4) AS comp_{c}",
+            f"FLOOR(AVG(CASE WHEN {c} IS NOT NULL THEN 1.0 ELSE 0.0 END) * 100) / 100.0 AS floor_{c}",
+        ]
+    for c in string_cols:
+        prof.append(f"CAST(MAX(length({c})) AS DOUBLE) AS maxlen_{c}")
+    for c in numeric_cols:
+        prof.append(f"ROUND(CAST(MIN({c}) AS DOUBLE), 4) AS lo_{c}")
+        prof.append(f"ROUND(CAST(MAX({c}) AS DOUBLE), 4) AS hi_{c}")
+    dom = [
+        f"string_agg(DISTINCT {c}, '|' ORDER BY {c}) AS dom_{c}"
+        for c in string_cols
+    ]
+    nul_s, nul_d = "CAST(NULL AS VARCHAR)", "CAST(NULL AS DOUBLE)"
+    arms = []
+    for c in cols:
+        arms.append(
+            f"SELECT '{c}' AS \"column\", 'not_null' AS kind, {nul_s} AS value_str, "
+            f"{nul_d} AS lo, {nul_d} AS hi, CAST(1.0 AS DOUBLE) AS support "
+            f"FROM prof WHERE n > 0 AND nn_{c} = n"
+        )
+        arms.append(
+            f"SELECT '{c}', 'completeness', {nul_s}, CAST(floor_{c} AS DOUBLE), "
+            f"{nul_d}, CAST(comp_{c} AS DOUBLE) "
+            f"FROM prof WHERE NOT (n > 0 AND nn_{c} = n) AND nn_{c} > 0"
+        )
+        arms.append(
+            f"SELECT '{c}', 'unique', {nul_s}, {nul_d}, {nul_d}, CAST(1.0 AS DOUBLE) "
+            f"FROM prof WHERE n > 0 AND d_{c} = nn_{c} AND nn_{c} = n"
+        )
+    for c in string_cols:
+        arms.append(
+            f"SELECT '{c}', 'domain', (SELECT dom_{c} FROM dom), {nul_d}, {nul_d}, "
+            f"CAST(comp_{c} AS DOUBLE) FROM prof WHERE d_{c} > 0 AND d_{c} <= {max_domain}"
+        )
+    for c in numeric_cols:
+        arms.append(
+            f"SELECT '{c}', 'range', {nul_s}, CAST(lo_{c} AS DOUBLE), "
+            f"CAST(hi_{c} AS DOUBLE), CAST(comp_{c} AS DOUBLE) "
+            f"FROM prof WHERE nn_{c} > 0"
+        )
+    for c in string_cols:
+        arms.append(
+            f"SELECT '{c}', 'max_length', {nul_s}, {nul_d}, CAST(maxlen_{c} AS DOUBLE), "
+            f"CAST(comp_{c} AS DOUBLE) FROM prof WHERE nn_{c} > 0"
+        )
+    return with_transcripts(
+        ", prof AS (SELECT " + ", ".join(prof) + " FROM transcripts),\n"
+        "dom AS (SELECT " + ", ".join(dom) + " FROM transcripts)\n"
+        + "\nUNION ALL\n".join(arms)
+    )
+
+
+@query(_suggest_oracle(
+    ["conv_id", "role", "text", "tool"], ["turn_idx"], max_domain=10
+))
 def q_suggest_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deequ-style constraint SUGGESTION (operators/checks.py:
     suggest_constraints): profile the transcripts table in one aggregation
@@ -716,6 +1733,42 @@ def q_suggest_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: shared by rate_anomaly (batch) and stream_rate_anomaly (streaming —
+#: pytest pins the concatenated micro-batch output equal to the batch form)
+_RATE_ANOMALY_ORACLE = with_transcripts(
+f"""
+            , d AS (
+              SELECT CAST(ts AS DATE) AS day,
+                     CAST(COUNT(*) AS BIGINT) AS n_rows,
+                     CAST(SUM(CASE WHEN ({_NF_EXPR}) > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_viol
+              FROM transcripts GROUP BY 1
+            ),
+            r AS (
+              SELECT day, n_rows, n_viol,
+                     CAST(ROUND(n_viol * 1.0 / n_rows, 6) AS DOUBLE) AS rate
+              FROM d
+            ),
+            wnd AS (
+              SELECT day, n_rows, n_viol, rate,
+                     ROUND(AVG(rate) OVER w, 6) AS m,
+                     ROUND(STDDEV_POP(rate) OVER w, 6) AS s,
+                     COUNT(rate) OVER w AS hist
+              FROM r
+              WINDOW w AS (ORDER BY day ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)
+            )
+            SELECT day, n_rows, n_viol, rate,
+                   m AS mean_rate,
+                   s AS sd_rate,
+                   ROUND(CASE WHEN s > 0 THEN (rate - m) / s END, 4) AS z,
+                   (hist >= 3 AND COALESCE(
+                      CASE WHEN s > 0 THEN ABS(ROUND((rate - m) / s, 4)) > 2.0
+                           ELSE rate <> m END, FALSE)) AS anomaly
+            FROM wnd
+            """
+        )
+
+
+@query(_RATE_ANOMALY_ORACLE)
 def q_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Control-chart anomaly detection on the daily suite-violation-rate
     series (operators/checks.py:rate_anomaly): each day scored against the
@@ -729,6 +1782,29 @@ def q_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rate_anomaly(t, F.to_date("ts"), anyf, window=7, z_threshold=2.0)
 
 
+@query(with_transcripts(
+    """
+            , tok AS (
+              SELECT conv_id, turn_idx, role, ts,
+                     COALESCE(text, '') AS t0, COALESCE(tool, '') AS o0,
+                     CASE WHEN text IS NULL THEN 0
+                          ELSE length(string_split(text, ' ')) END AS n_tokens
+              FROM transcripts
+            )
+            SELECT conv_id, turn_idx, role,
+                   CAST(n_tokens AS BIGINT) AS n_tokens,
+                   CAST(cum_tokens AS BIGINT) AS cum_tokens
+            FROM (
+              SELECT conv_id, turn_idx, role, n_tokens,
+                     SUM(n_tokens) OVER (
+                       PARTITION BY conv_id
+                       ORDER BY turn_idx, ts, role, t0, o0
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+                     ) AS cum_tokens
+              FROM tok
+            ) x WHERE cum_tokens > 128
+            """
+))
 def q_context_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Context-window budget validation: turns whose running conversation
     token total exceeds the budget (operators/crossrow.py:
@@ -741,6 +1817,19 @@ def q_context_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     return context_budget_violations(_transcripts(spark, sf_dir), budget=128)
 
 
+@query(with_transcripts(
+    """
+            SELECT conv_id,
+                   md5(lower(trim(text))) AS text_digest,
+                   CAST(COUNT(*) AS BIGINT) AS n_repeats,
+                   MIN(turn_idx) AS first_turn,
+                   MAX(turn_idx) AS last_turn
+            FROM transcripts
+            WHERE text IS NOT NULL AND trim(text) <> ''
+            GROUP BY 1, 2
+            HAVING COUNT(*) >= 2
+            """
+))
 def q_turn_loops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Intra-conversation repeated-turn (agent-loop) detection
     (operators/crossrow.py:repeated_turns): same normalized text appearing
@@ -751,6 +1840,27 @@ def q_turn_loops(spark: SparkSession, sf_dir: str) -> DataFrame:
     return repeated_turns(_transcripts(spark, sf_dir))
 
 
+@query(with_transcripts(
+    f"""
+            , m AS ({_MID_SQL})
+            , ha AS ({_HIST_SQL.format(op='<')})
+            , hb AS ({_HIST_SQL.format(op='>=')})
+            , j AS (
+              SELECT COALESCE(ha.bucket, hb.bucket) AS bucket,
+                     COALESCE(ha.n, 0) AS na, COALESCE(hb.n, 0) AS nb
+              FROM ha FULL OUTER JOIN hb ON ha.bucket = hb.bucket
+            )
+            SELECT ROUND(SUM(w * (fa - fb) * (fa - fb)), 6) AS cvm FROM (
+              SELECT (na + nb) * 1.0
+                       / ((SELECT SUM(na) FROM j) + (SELECT SUM(nb) FROM j)) AS w,
+                     SUM(na) OVER (ORDER BY bucket) * 1.0
+                       / (SELECT SUM(na) FROM j) AS fa,
+                     SUM(nb) OVER (ORDER BY bucket) * 1.0
+                       / (SELECT SUM(nb) FROM j) AS fb
+              FROM j
+            ) t
+            """
+))
 def q_cvm_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cramér-von Mises drift on the standard first/second-half split
     (operators/drift.py:cvm_joined) — integrates squared ECDF differences
@@ -762,6 +1872,18 @@ def q_cvm_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cvm_joined(split_histograms(t, "text_len", "ts", 10.0, 20), round_to=6)
 
 
+@query(with_transcripts(
+    """
+            , toks AS (
+              SELECT unnest(string_split(text, ' ')) AS item
+              FROM transcripts WHERE text IS NOT NULL
+            )
+            SELECT item, CAST(COUNT(*) AS BIGINT) AS est_count,
+                   CAST(0 AS BIGINT) AS err_bound
+            FROM toks GROUP BY 1
+            ORDER BY est_count DESC, item ASC LIMIT 10
+            """
+))
 def q_freq_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable Misra-Gries heavy-hitter rollup: per-day frequent-token
     sketches merged to global top-10 without rescanning the data
@@ -786,6 +1908,37 @@ def q_freq_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mg_rollup(mg_partition_sketches(t, "day", "token", k=1024), top=10)
 
 
+# moments: recompute Σ(x-μ)^k DIRECTLY on the raw rows — the
+# independent spec the Chan-merged per-day sketches must equal
+@query(with_transcripts(
+    """
+            , vals AS (
+              SELECT CAST(length(text) AS DOUBLE) AS v, CAST(ts AS DATE) AS day
+              FROM transcripts WHERE text IS NOT NULL
+            )
+            , s AS (
+              SELECT COUNT(*) AS n, AVG(v) AS mu, COUNT(DISTINCT day) AS p
+              FROM vals
+            )
+            , c AS (
+              SELECT SUM(POW(v - mu, 2)) AS m2,
+                     SUM(POW(v - mu, 3)) AS m3,
+                     SUM(POW(v - mu, 4)) AS m4
+              FROM vals, s
+            )
+            SELECT CAST(s.p AS BIGINT) AS n_parts,
+                   CAST(s.n AS BIGINT) AS n_values,
+                   ROUND(s.mu, 4) AS mean,
+                   ROUND(c.m2 / s.n, 4) AS var_pop,
+                   ROUND(CASE WHEN c.m2 > 0
+                              THEN SQRT(s.n) * c.m3 / POW(c.m2, 1.5)
+                              ELSE 0 END, 4) AS skew,
+                   ROUND(CASE WHEN c.m2 > 0
+                              THEN s.n * c.m4 / (c.m2 * c.m2) - 3
+                              ELSE 0 END, 4) AS kurt
+            FROM s, c
+            """
+))
 def q_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable moments-sketch rollup: per-day (n, mean, M2, M3, M4)
     central-sum sketches over text length, Chan-merged to exact global
@@ -807,6 +1960,47 @@ def q_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     return moments_rollup(moments_partition_sketches(t, "day", "text_len"))
 
 
+@query(with_transcripts(
+    """
+            , k1 AS (
+              SELECT conv_id, turn_idx, COUNT(DISTINCT role) AS n_rhs,
+                     COUNT(*) AS n_rows
+              FROM transcripts GROUP BY 1, 2
+            )
+            , k2 AS (
+              SELECT conv_id, turn_idx, COUNT(DISTINCT text) AS n_rhs,
+                     COUNT(*) AS n_rows
+              FROM transcripts GROUP BY 1, 2
+            )
+            , k3 AS (
+              SELECT tool, COUNT(DISTINCT role) AS n_rhs, COUNT(*) AS n_rows
+              FROM transcripts GROUP BY 1
+            )
+            SELECT 'conv_id,turn_idx->role' AS fd,
+                   CAST(COUNT(*) AS BIGINT) AS n_keys,
+                   CAST(SUM(CASE WHEN n_rhs > 1 THEN 1 ELSE 0 END) AS BIGINT)
+                     AS violating_keys,
+                   CAST(SUM(CASE WHEN n_rhs > 1 THEN n_rows ELSE 0 END) AS BIGINT)
+                     AS violating_rows,
+                   ROUND(AVG(CASE WHEN n_rhs > 1 THEN 1.0 ELSE 0.0 END), 4)
+                     AS violation_rate
+            FROM k1
+            UNION ALL
+            SELECT 'conv_id,turn_idx->text',
+                   CAST(COUNT(*) AS BIGINT),
+                   CAST(SUM(CASE WHEN n_rhs > 1 THEN 1 ELSE 0 END) AS BIGINT),
+                   CAST(SUM(CASE WHEN n_rhs > 1 THEN n_rows ELSE 0 END) AS BIGINT),
+                   ROUND(AVG(CASE WHEN n_rhs > 1 THEN 1.0 ELSE 0.0 END), 4)
+            FROM k2
+            UNION ALL
+            SELECT 'tool->role',
+                   CAST(COUNT(*) AS BIGINT),
+                   CAST(SUM(CASE WHEN n_rhs > 1 THEN 1 ELSE 0 END) AS BIGINT),
+                   CAST(SUM(CASE WHEN n_rhs > 1 THEN n_rows ELSE 0 END) AS BIGINT),
+                   ROUND(AVG(CASE WHEN n_rhs > 1 THEN 1.0 ELSE 0.0 END), 4)
+            FROM k3
+            """
+))
 def q_fd_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Functional-dependency violation profile (operators/checks.py:
     fd_violations): is (conv_id, turn_idx) a key for role/text, and does a
@@ -826,6 +2020,35 @@ def q_fd_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(with_docs(
+    """
+            , pos AS (
+              SELECT CAST(n_chars AS BIGINT) AS v FROM docs WHERE n_chars > 0
+            )
+            , a AS (
+              SELECT CAST(substr(CAST(v AS VARCHAR), 1, 1) AS INT) AS digit,
+                     COUNT(*) AS n
+              FROM pos GROUP BY 1
+            )
+            , spine AS (SELECT UNNEST(range(1, 10)) AS digit)
+            , fa AS (
+              SELECT spine.digit, COALESCE(a.n, 0) AS n
+              FROM spine LEFT JOIN a ON a.digit = spine.digit
+            )
+            , t AS (SELECT CAST(SUM(n) AS DOUBLE) AS tot FROM fa)
+            , e AS (
+              SELECT digit, n, n / tot AS obs_p,
+                     LOG10(1 + 1.0 / digit) AS exp_p, tot
+              FROM fa, t
+            )
+            SELECT digit, CAST(n AS BIGINT) AS n,
+                   ROUND(obs_p, 4) AS obs_p,
+                   ROUND(exp_p, 4) AS exp_p,
+                   ROUND((SELECT SUM(POW(n2.n - n2.tot * n2.exp_p, 2)
+                                     / (n2.tot * n2.exp_p)) FROM e n2), 4) AS chi2
+            FROM e
+            """
+))
 def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-digit Benford conformance of document lengths
     (operators/checks.py:benford_check): ≤9-row digit histogram with the
@@ -838,6 +2061,30 @@ def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     return benford_check(load_docs(spark, sf_dir), "n_chars")
 
 
+@query(with_docs(
+    """
+            , g AS (
+              SELECT doc_id AS id, length(text) AS chars,
+                     unnest([w[i] || ' ' || w[i + 1]
+                             for i in range(1, len(w))]) AS ngram
+              FROM (SELECT doc_id, text, string_split(text, ' ') AS w FROM docs)
+              WHERE text IS NOT NULL AND len(w) >= 2
+            )
+            , c AS (
+              SELECT id, ngram, COUNT(*) AS n_occurrences, MAX(chars) AS chars
+              FROM g GROUP BY 1, 2
+            )
+            SELECT id, ngram AS top_ngram,
+                   CAST(n_occurrences AS BIGINT) AS n_occurrences,
+                   ROUND(LEAST(1.0, n_occurrences * length(ngram) * 1.0 / chars), 4)
+                     AS char_frac
+            FROM (
+              SELECT *, ROW_NUMBER() OVER (
+                PARTITION BY id ORDER BY n_occurrences DESC, ngram ASC) AS rk
+              FROM c
+            ) x WHERE rk = 1
+            """
+))
 def q_top_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher repetition rule: per-document top word-bigram character
     fraction (operators/text.py:top_ngram_fraction) — default "local"
@@ -851,6 +2098,41 @@ def q_top_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top_ngram_fraction(load_docs(spark, sf_dir), "doc_id", "text", n=2)
 
 
+@query(with_transcripts(
+    """
+            , per AS (
+              SELECT CAST(ts AS DATE) AS day, role AS cat, COUNT(*) AS n
+              FROM transcripts WHERE role IS NOT NULL GROUP BY 1, 2
+            )
+            , gl AS (SELECT cat, SUM(n) AS gn FROM per GROUP BY 1)
+            , tg AS (SELECT day, SUM(n) AS tgn FROM per GROUP BY 1)
+            , tot AS (
+              SELECT CAST(SUM(n) AS DOUBLE) AS t, COUNT(DISTINCT cat) AS k
+              FROM per
+            )
+            , grid AS (
+              SELECT tg.day, CAST(tg.tgn AS DOUBLE) AS tgn, gl.cat,
+                     CAST(gl.gn AS DOUBLE) AS gn
+              FROM tg CROSS JOIN gl
+            )
+            , j AS (
+              SELECT g.day, g.tgn, g.gn,
+                     CAST(COALESCE(per.n, 0) AS DOUBLE) AS n, tot.t, tot.k
+              FROM grid g
+              LEFT JOIN per ON per.day = g.day AND per.cat = g.cat
+              CROSS JOIN tot
+            )
+            SELECT day, CAST(tgn AS BIGINT) AS n_rows,
+                   ROUND(SUM(
+                     POW(n - (n + gn) * tgn / (tgn + t), 2)
+                       / ((n + gn) * tgn / (tgn + t))
+                     + POW(gn - (n + gn) * t / (tgn + t), 2)
+                       / ((n + gn) * t / (tgn + t))
+                   ), 4) AS chi2,
+                   CAST(MAX(k) - 1 AS BIGINT) AS dof
+            FROM j GROUP BY day, tgn
+            """
+))
 def q_chi2_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-day CATEGORICAL drift: chi-square of each day's role
     distribution against the whole-table baseline
@@ -865,6 +2147,27 @@ def q_chi2_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chi2_by_group(t, "day", "role")
 
 
+@query(with_docs(
+    """
+            , counts AS (
+              SELECT token, COUNT(*) AS freq FROM (
+                SELECT unnest(string_split(text, ' ')) AS token
+                FROM docs WHERE text IS NOT NULL
+              ) GROUP BY 1 HAVING COUNT(*) >= 2
+              ORDER BY freq DESC, token ASC LIMIT 500
+            )
+            , xy AS (
+              SELECT LN(CAST(ROW_NUMBER() OVER (
+                       ORDER BY freq DESC, token ASC) AS DOUBLE)) AS x,
+                     LN(CAST(freq AS DOUBLE)) AS y
+              FROM counts
+            )
+            SELECT CAST(COUNT(*) AS BIGINT) AS n_types,
+                   ROUND(COVAR_POP(x, y) / VAR_POP(x), 4) AS slope,
+                   ROUND(POW(CORR(x, y), 2), 4) AS r_squared
+            FROM xy
+            """
+))
 def q_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf rank-frequency fit over the document vocabulary
     (operators/text.py:zipf_fit): ln(freq)-on-ln(rank) least squares for
@@ -876,6 +2179,25 @@ def q_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return zipf_fit(load_docs(spark, sf_dir), "text", top_k=500, min_count=2)
 
 
+@query(with_docs(
+    """
+            , g AS (
+              SELECT doc_id AS id, length(text) AS chars,
+                     unnest([w[i] || ' ' || w[i + 1] || ' ' || w[i + 2]
+                             for i in range(1, len(w) - 1)]) AS ngram
+              FROM (SELECT doc_id, text, string_split(text, ' ') AS w FROM docs)
+              WHERE text IS NOT NULL AND len(w) >= 3
+            )
+            , c AS (
+              SELECT id, ngram, COUNT(*) AS c, MAX(chars) AS chars
+              FROM g GROUP BY 1, 2
+            )
+            SELECT id, CAST(COUNT(*) AS BIGINT) AS n_dup_ngrams,
+                   ROUND(LEAST(1.0, SUM(c * length(ngram)) * 1.0 / MAX(chars)), 4)
+                     AS dup_char_frac
+            FROM c WHERE c >= 2 GROUP BY id
+            """
+))
 def q_dup_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher duplicate-n-gram rule: per-document fraction of characters
     covered by word-3-grams occurring 2+ times within the document
@@ -887,6 +2209,40 @@ def q_dup_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dup_ngram_fraction(load_docs(spark, sf_dir), "doc_id", "text", n=3)
 
 
+@query(with_docs(
+    """
+            , uni AS (
+              SELECT w, COUNT(*) AS cw FROM (
+                SELECT unnest(string_split(text, ' ')) AS w
+                FROM docs WHERE text IS NOT NULL
+              ) GROUP BY 1
+            )
+            , bi_all AS (
+              SELECT bigram, COUNT(*) AS n_ab FROM (
+                SELECT unnest([w[i] || ' ' || w[i + 1]
+                               for i in range(1, len(w))]) AS bigram
+                FROM (SELECT string_split(text, ' ') AS w
+                      FROM docs WHERE text IS NOT NULL)
+                WHERE len(w) >= 2
+              ) GROUP BY 1
+            )
+            , nw AS (SELECT CAST(SUM(cw) AS DOUBLE) AS nw FROM uni)
+            , nb AS (SELECT CAST(SUM(n_ab) AS DOUBLE) AS nb FROM bi_all)
+            , scored AS (
+              SELECT b.bigram, b.n_ab,
+                     LN((b.n_ab / nb.nb)
+                        / ((ua.cw / nw.nw) * (ub.cw / nw.nw))) AS pmi_raw
+              FROM bi_all b
+              JOIN uni ua ON ua.w = string_split(b.bigram, ' ')[1]
+              JOIN uni ub ON ub.w = string_split(b.bigram, ' ')[2]
+              CROSS JOIN nw CROSS JOIN nb
+              WHERE b.n_ab >= 5
+            )
+            SELECT bigram, CAST(n_ab AS BIGINT) AS n_ab,
+                   ROUND(pmi_raw, 4) AS pmi
+            FROM scored ORDER BY pmi DESC, bigram ASC LIMIT 20
+            """
+))
 def q_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 corpus collocations by pointwise mutual information
     (operators/text.py:pmi_bigrams): bigram/unigram hash aggregates,
@@ -898,6 +2254,25 @@ def q_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pmi_bigrams(load_docs(spark, sf_dir), "text", min_count=5, top_k=20)
 
 
+@query(with_transcripts(
+    """
+            , toks AS (
+              SELECT CAST(ts AS DATE) AS day,
+                     unnest(string_split(text, ' ')) AS token
+              FROM transcripts WHERE text IS NOT NULL
+            )
+            , daily AS (SELECT day, COUNT(*) AS tokens FROM toks GROUP BY 1)
+            , fst AS (SELECT token, MIN(day) AS day FROM toks GROUP BY 1)
+            , nw AS (SELECT day, COUNT(*) AS new_tokens FROM fst GROUP BY 1)
+            SELECT d.day, CAST(d.tokens AS BIGINT) AS tokens,
+                   CAST(COALESCE(nw.new_tokens, 0) AS BIGINT) AS new_tokens,
+                   CAST(SUM(COALESCE(nw.new_tokens, 0)) OVER (
+                     ORDER BY d.day
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+                   ) AS BIGINT) AS vocab_size
+            FROM daily d LEFT JOIN nw ON nw.day = d.day
+            """
+))
 def q_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-day first-appearance vocabulary growth + running vocab size
     (operators/text.py:vocab_growth) — the vocab-drift monitor; one
@@ -908,6 +2283,24 @@ def q_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     return vocab_growth(_transcripts(spark, sf_dir), "ts", "text")
 
 
+@query(with_docs(
+    """
+            , keyed AS (
+              SELECT doc_id AS id, CAST(n_chars AS DOUBLE) AS weight,
+                     POW(
+                       (CAST(('0x' || substr(md5('ws' || '|' ||
+                          CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) + 1)
+                         / 1152921504606846977.0,
+                       1.0 / CAST(n_chars AS DOUBLE)
+                     ) AS key
+              FROM docs WHERE n_chars > 0
+            )
+            SELECT id, weight,
+                   CAST(ROW_NUMBER() OVER (ORDER BY key DESC, id ASC) AS INT)
+                     AS rnk
+            FROM keyed ORDER BY key DESC, id ASC LIMIT 100
+            """
+))
 def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic weighted sampling without replacement
     (operators/sampling.py:weighted_sample — Efraimidis-Spirakis A-ES over
@@ -919,6 +2312,41 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return weighted_sample(load_docs(spark, sf_dir), "doc_id", "n_chars", 100)
 
 
+@query("""
+            WITH h AS (
+              SELECT embedding AS v,
+                     CASE WHEN embedding IS NULL THEN 1 ELSE 0 END AS _null,
+                     CASE WHEN embedding IS NOT NULL AND len(embedding) <> 64
+                          THEN 1 ELSE 0 END AS _wd,
+                     CASE WHEN embedding IS NOT NULL AND len(list_filter(
+                            embedding, x -> isnan(CAST(x AS DOUBLE)))) > 0
+                          THEN 1 ELSE 0 END AS _nan,
+                     CASE WHEN embedding IS NOT NULL AND len(list_filter(
+                            embedding, x -> x IS NULL)) > 0
+                          THEN 1 ELSE 0 END AS _nc,
+                     SQRT(list_sum(list_transform(embedding,
+                            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS _n
+              FROM embeddings
+            ),
+            f AS (
+              SELECT _null, _wd, _nan, _nc,
+                     CASE WHEN _null = 0 AND _wd = 0 AND _nan = 0 AND _nc = 0
+                          AND _n = 0 THEN 1 ELSE 0 END AS _zero,
+                     CASE WHEN _null = 0 AND _wd = 0 AND _nan = 0 AND _nc = 0
+                          AND _n > 0 THEN _n END AS _norm
+              FROM h
+            )
+            SELECT CAST(COUNT(*) AS BIGINT) AS n_vecs,
+                   CAST(SUM(_null) AS BIGINT) AS n_null,
+                   CAST(SUM(_wd) AS BIGINT) AS n_wrong_dim,
+                   CAST(SUM(_nan) AS BIGINT) AS n_nan,
+                   CAST(SUM(_nc) AS BIGINT) AS n_null_comp,
+                   CAST(SUM(_zero) AS BIGINT) AS n_zero,
+                   ROUND(AVG(_norm), 4) AS mean_norm,
+                   ROUND(MIN(_norm), 4) AS min_norm,
+                   ROUND(MAX(_norm), 4) AS max_norm
+            FROM f
+            """)
 def q_embedding_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-table hygiene gate (operators/similarity.py:
     embedding_health): NULL / wrong-dim / NaN / zero vectors + the L2-norm
@@ -930,6 +2358,26 @@ def q_embedding_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     return embedding_health(load_embeddings(spark, sf_dir), "embedding", 64)
 
 
+# per-(path, code) exemplar pick: salted-md5 rank of the row key (matches
+# q_violation_examples' md5_int(key, salt="ex") exactly)
+_EXAMPLES_ORACLE = with_transcripts(
+    "SELECT path, code, CAST(rn AS INT) AS rnk, conv_id, turn_idx FROM (\n"
+    "  SELECT *, ROW_NUMBER() OVER (PARTITION BY path, code ORDER BY\n"
+    "    CAST(('0x' || substr(md5('ex' || '|' || COALESCE(conv_id, '') || '|'\n"
+    "      || COALESCE(CAST(turn_idx AS VARCHAR), '') || '|'\n"
+    "      || COALESCE(CAST(CAST(FLOOR(epoch(ts)) AS BIGINT) AS VARCHAR), '')),\n"
+    "      1, 15)) AS BIGINT) ASC) AS rn\n"
+    "  FROM (\n"
+    + "\nUNION ALL\n".join(
+        f"SELECT conv_id, turn_idx, ts, '{p}' AS path, '{c}' AS code FROM transcripts WHERE {w}"
+        for p, c, w in _FAIL_CONDS
+    )
+    + "\n  ) v\n"
+    ") r WHERE rn <= 3"
+)
+
+
+@query(_EXAMPLES_ORACLE)
 def q_violation_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic exemplars per violation code — the triage view ("show
     me 3 concrete rows for each failure"): the suite's violations ranked
@@ -972,6 +2420,40 @@ def q_violation_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(with_transcripts(
+    """
+            , tot AS (SELECT CAST(COUNT(*) AS DOUBLE) AS t FROM transcripts)
+            , c1 AS (
+              SELECT COALESCE(CAST(conv_id AS VARCHAR), '<NULL>') AS value,
+                     COUNT(*) AS n
+              FROM transcripts GROUP BY 1
+            )
+            , c2 AS (
+              SELECT COALESCE(CAST(role AS VARCHAR), '<NULL>') AS value,
+                     COUNT(*) AS n
+              FROM transcripts GROUP BY 1
+            )
+            , k1 AS (
+              SELECT 'conv_id' AS key, value,
+                     CAST(ROW_NUMBER() OVER (ORDER BY n DESC, value ASC) AS INT)
+                       AS rnk,
+                     CAST(n AS BIGINT) AS n,
+                     ROUND(n / tot.t, 4) AS share,
+                     (SELECT CAST(COUNT(*) AS BIGINT) FROM c1) AS n_distinct
+              FROM c1, tot ORDER BY n DESC, value ASC LIMIT 5
+            )
+            , k2 AS (
+              SELECT 'role' AS key, value,
+                     CAST(ROW_NUMBER() OVER (ORDER BY n DESC, value ASC) AS INT)
+                       AS rnk,
+                     CAST(n AS BIGINT) AS n,
+                     ROUND(n / tot.t, 4) AS share,
+                     (SELECT CAST(COUNT(*) AS BIGINT) FROM c2) AS n_distinct
+              FROM c2, tot ORDER BY n DESC, value ASC LIMIT 5
+            )
+            SELECT * FROM k1 UNION ALL SELECT * FROM k2
+            """
+))
 def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-key skew diagnostic (operators/stats.py:skew_report): top-5
     heaviest values + share + distinct count for conv_id and role — the
@@ -982,6 +2464,29 @@ def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return skew_report(_transcripts(spark, sf_dir), ["conv_id", "role"], top=5)
 
 
+# closed form of the per-doc WAV parameters q_audio_meta built the
+# payloads from; doc_id % 10 == 3 payloads are truncated -> ok=false
+@query(with_docs(
+    """
+            SELECT doc_id AS media_id,
+                   CASE WHEN doc_id % 10 = 3 THEN NULL
+                        WHEN doc_id % 3 = 0 THEN 8000
+                        WHEN doc_id % 3 = 1 THEN 16000
+                        ELSE 44100 END AS sample_rate,
+                   CASE WHEN doc_id % 10 = 3 THEN NULL
+                        ELSE CAST(doc_id % 2 + 1 AS INT) END AS channels,
+                   CASE WHEN doc_id % 10 = 3 THEN NULL ELSE 16 END AS bits,
+                   CASE WHEN doc_id % 10 = 3 THEN NULL
+                        ELSE CAST(doc_id % 50 + 10 AS BIGINT) END AS n_samples,
+                   CASE WHEN doc_id % 10 = 3 THEN NULL
+                        ELSE ROUND((doc_id % 50 + 10) * 1.0 /
+                          (CASE WHEN doc_id % 3 = 0 THEN 8000
+                                WHEN doc_id % 3 = 1 THEN 16000
+                                ELSE 44100 END), 6) END AS duration_s,
+                   doc_id % 10 <> 3 AS ok
+            FROM docs
+            """
+))
 def q_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio plumbing end-to-end: build REAL canonical PCM WAV files
     (RIFF headers via make_wav_payload) with per-doc parameters, then
@@ -1025,6 +2530,17 @@ def q_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(
+    f"WITH comp AS ({_COMPONENTS_ORACLE})\n"
+    """
+            SELECT CAST(sz AS BIGINT) AS cluster_size,
+                   CAST(COUNT(*) AS BIGINT) AS n_clusters,
+                   CAST(SUM(sz) AS BIGINT) AS n_docs
+            FROM (SELECT component, COUNT(*) AS sz FROM comp GROUP BY 1) c
+            GROUP BY 1
+            """,
+    quadratic=True,
+)
 def q_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster size distribution over the near-dup connected
     components (operators/dedup.py:cluster_size_histogram) — the report a
@@ -1041,6 +2557,26 @@ def q_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cluster_size_histogram(comp, "component")
 
 
+# independent spec: naive all-pairs containment (the obviously-
+# correct O(n^2) form the asymmetric prefix-filtered join must
+# equal); id_a is the contained (smaller-set) side
+@query(with_docs(
+    """
+, d AS (
+  SELECT doc_id,
+         list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
+                        for i in range(1, len(w) - 1)]) AS sh
+  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM docs)
+  WHERE len(w) >= 3
+)
+SELECT id_a, id_b, containment FROM (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+         ROUND(len(list_intersect(a.sh, b.sh)) * 1.0 / len(a.sh), 6) AS containment
+  FROM d a JOIN d b ON (len(a.sh) < len(b.sh)
+       OR (len(a.sh) = len(b.sh) AND a.doc_id < b.doc_id))
+) p WHERE containment >= 0.8
+"""
+), quadratic=True)
 def q_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric containment dedup (snippet-inside-doc pairs Jaccard
     misses): exact, via the asymmetric prefix filter — query-side prefix
@@ -1052,6 +2588,19 @@ def q_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return containment_dedup_pairs(load_docs(spark, sf_dir), "doc_id", "text", 3, 0.8)
 
 
+_SPLIT_BUCKET_SQL = (
+    "CAST(('0x' || substr(md5('split' || '|' || CAST(doc_id AS VARCHAR)), 1, 15)) "
+    "AS BIGINT) % 100"
+)
+
+
+@query(with_docs(
+    f"""
+            SELECT doc_id,
+                   CASE WHEN {_SPLIT_BUCKET_SQL} < 80 THEN 'train' ELSE 'test' END AS split
+            FROM docs
+            """
+))
 def q_sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic hash train/test split (row-local, reproducible)."""
     from fsharp_data_validation_spark.operators.sampling import hash_split
@@ -1060,6 +2609,19 @@ def q_sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hash_split(load_docs(spark, sf_dir), "doc_id", 80).select("doc_id", "split")
 
 
+# golden expectation: the pinned conformance verdict of THIS test
+# input against the input_hint contract (conv_id nullable from the
+# concat derivation; parquet ts is TIMESTAMP_NTZ -> type_mismatch)
+@query(
+    "SELECT * FROM (VALUES "
+    "('conv_id', 'nullability', 'string', 'string'), "
+    "('turn_idx', 'ok', 'int', 'int'), "
+    "('role', 'ok', 'string', 'string'), "
+    "('text', 'ok', 'string', 'string'), "
+    "('tool', 'ok', 'string', 'string'), "
+    "('ts', 'type_mismatch', 'timestamp', 'timestamp_ntz')"
+    ") AS t(\"column\", status, expected_type, actual_type)"
+)
 def q_schema_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-contract conformance report for the transcripts input vs the
     input_hint contract — pure metadata, O(columns) at any data scale
@@ -1070,6 +2632,13 @@ def q_schema_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return schema_report(spark, _transcripts(spark, sf_dir))
 
 
+# independent spec: the naive single-window global rank the bucketed
+# implementation must equal exactly
+@query(with_docs(
+    "SELECT doc_id, CAST(ROW_NUMBER() OVER (ORDER BY "
+    "CAST(('0x' || substr(md5('shuffle' || '|' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT), "
+    "doc_id) AS BIGINT) AS \"rank\" FROM docs"
+))
 def q_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic global training-order shuffle: contiguous hash-order
     rank via balanced fixed-width hash buckets + broadcast offsets — never
@@ -1082,6 +2651,16 @@ def q_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(with_docs(
+    ", a AS ("
+    "  SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS n_docs, "
+    "    CAST(SUM(CASE WHEN text IS NULL THEN 0 "
+    "             ELSE len(string_split(text, ' ')) END) AS BIGINT) AS n_tokens "
+    "  FROM docs GROUP BY lang, source"
+    ") "
+    "SELECT lang, source, n_docs, n_tokens, "
+    "  ROUND(n_tokens * 1.0 / SUM(n_tokens) OVER (), 6) AS token_share FROM a"
+))
 def q_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-mixture report: per-(lang, source) docs, tokens, and token
     share — one hash aggregate + a window over its |groups|-row output
@@ -1092,6 +2671,24 @@ def q_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mixture_report(load_docs(spark, sf_dir), ["lang", "source"])
 
 
+# independent spec of deterministic upsampling: k = floor(f) +
+# (hash below the fractional-part threshold), fanned via range()
+@query(with_docs(
+    ", f AS ("
+    "  SELECT doc_id, lang, "
+    "    CAST(CASE lang WHEN 'fr' THEN 2.5 WHEN 'zh' THEN 1.25 "
+    "         ELSE 1.0 END AS DOUBLE) AS fac "
+    "  FROM docs"
+    "), k AS ("
+    "  SELECT doc_id, lang, CAST(FLOOR(fac) AS BIGINT) + "
+    "    CASE WHEN CAST(('0x' || substr(md5('upsample' || '|' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) "
+    "         < CAST(FLOOR(ROUND(fac - FLOOR(fac), 6) * 1152921504606846976.0) AS BIGINT) "
+    "    THEN 1 ELSE 0 END AS k "
+    "  FROM f"
+    ") "
+    "SELECT doc_id, lang, CAST(i AS BIGINT) AS copy_idx "
+    "FROM (SELECT doc_id, lang, unnest(range(1, k + 1)) AS i FROM k WHERE k > 0)"
+))
 def q_upsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic per-group upsampling (rare-language upweighting):
     fr gets 2.5x, zh 1.25x, the rest 1x — row-local fan-out via
@@ -1105,6 +2702,14 @@ def q_upsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "lang", "copy_idx")
 
 
+@query(with_docs(
+    "SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars, "
+    "CAST(length(text) - length(regexp_replace(text, '�', '', 'g')) AS BIGINT) AS n_repl, "
+    "CAST(length(text) - length(regexp_replace(text, '[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f]', '', 'g')) AS BIGINT) AS n_ctrl, "
+    "CASE WHEN length(text) > 0 THEN "
+    "ROUND(length(regexp_replace(text, '[^\\x00-\\x7f]', '', 'g')) * 1.0 / length(text), 4) "
+    "END AS ascii_ratio FROM docs"
+))
 def q_encoding_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mojibake / control-char / ASCII-ratio encoding hygiene signals —
     pure column regexes, zero shuffle (operators/text.py:encoding_quality)."""
@@ -1114,6 +2719,15 @@ def q_encoding_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return encoding_quality(load_docs(spark, sf_dir), "doc_id", "text")
 
 
+# independent spec of deterministic quota sampling: same salted-md5
+# threshold with floor semantics (Spark's double->bigint cast
+# truncates; DuckDB CAST rounds, hence explicit FLOOR)
+@query(with_docs(
+    "SELECT doc_id, lang FROM docs "
+    "WHERE CAST(('0x' || substr(md5('quota' || '|' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) "
+    "< CAST(FLOOR(ROUND(CAST(CASE lang WHEN 'en' THEN 0.5 WHEN 'zh' THEN 0.9 "
+    "ELSE 1.0 END AS DOUBLE), 6) * 1152921504606846976.0) AS BIGINT)"
+))
 def q_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic per-group quota sampling (downsample dominant
     languages) — one row-local scan-stage predicate, zero shuffle
@@ -1126,6 +2740,18 @@ def q_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "lang")
 
 
+@query(with_docs(
+    ", g AS (SELECT lang, COUNT(*) AS n_g FROM docs GROUP BY lang)"
+    ", s AS (SELECT SUM(POW(CAST(n_g AS DOUBLE), 0.7)) AS wsum, "
+    "        SUM(n_g) AS n_total FROM g)"
+    ", r AS (SELECT lang, ROUND(LEAST(1.0, "
+    "    0.8 * n_total * POW(CAST(n_g AS DOUBLE), 0.7) / wsum / n_g"
+    "  ), 6) AS keep_rate FROM g, s) "
+    "SELECT d.doc_id, d.lang, r.keep_rate "
+    "FROM docs d JOIN r USING (lang) "
+    "WHERE CAST(('0x' || substr(md5('temp' || '|' || CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT) "
+    "< CAST(FLOOR(keep_rate * 1152921504606846976.0) AS BIGINT)"
+))
 def q_temp_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-flattened language rebalancing (n_g^0.7 rule, target 80%
     of the corpus): one tiny count agg + broadcast rate join + row-local
@@ -1138,6 +2764,15 @@ def q_temp_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "lang", "keep_rate")
 
 
+@query(with_docs(
+    """
+            SELECT COUNT(DISTINCT doc_id) AS n_docs,
+                   COUNT(*) AS total_tokens,
+                   COUNT(DISTINCT w) AS vocab_size
+            FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM docs) t
+            WHERE length(w) > 0
+            """
+))
 def q_vocab_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-level token statistics: docs, total tokens, vocabulary size
     (exact distinct words). One explode + one aggregate; at 100 TB swap the
@@ -1155,6 +2790,17 @@ def q_vocab_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_STOPWORDS = "'the','a','and','of','to','in'"
+
+
+@query(with_docs(
+    f"""
+            SELECT w, COUNT(*) AS n
+            FROM (SELECT unnest(string_split(text, ' ')) AS w FROM docs) t
+            WHERE length(w) > 0 AND w NOT IN ({_STOPWORDS})
+            GROUP BY w ORDER BY n DESC, w ASC LIMIT 20
+            """
+))
 def q_top_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 corpus tokens (stopwords excluded, deterministic (n desc,
     word asc) tie-break) — the vocabulary head a filtering pipeline
@@ -1175,6 +2821,7 @@ def q_top_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(with_docs(_JACCARD_ORACLE), quadratic=True)
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(32) + 16x2 banded LSH -> exact-Jaccard verify; checked
     against the exact-pairs oracle (high-recall banding)."""
@@ -1184,6 +2831,35 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_lsh_pairs(load_docs(spark, sf_dir), "doc_id", "text", 3, 32, 16, 0.8)
 
 
+_SIMHASH_BITS_SQL = ", ".join(
+    f"SUM(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS b{i}"
+    for i in range(60)
+)
+
+_SIMHASH_SIG_SQL = " + ".join(
+    f"(CASE WHEN b{i} > 0 THEN (CAST(1 AS BIGINT) << {i}) ELSE CAST(0 AS BIGINT) END)"
+    for i in range(60)
+)
+
+_SIMHASH_ORACLE = f"""
+, words AS (
+  SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w FROM docs
+), hashed AS (
+  SELECT doc_id, CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) AS h
+  FROM words WHERE length(w) > 0
+), bits AS (
+  SELECT doc_id, {_SIMHASH_BITS_SQL} FROM hashed GROUP BY doc_id
+), sig AS (
+  SELECT doc_id, {_SIMHASH_SIG_SQL} AS simhash FROM bits
+)
+SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+       CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
+FROM sig a JOIN sig b ON a.doc_id < b.doc_id
+WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
+"""
+
+
+@query(with_docs(_SIMHASH_ORACLE), quadratic=True)
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """60-bit SimHash near-dup pairs (hamming <= 3)."""
     from fsharp_data_validation_spark.operators.dedup import simhash_banded_pairs
@@ -1194,6 +2870,11 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(with_docs(
+    "SELECT doc_id, CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens, "
+    "CAST(length(text) AS BIGINT) AS n_chars, "
+    "CAST(CEIL(length(text) / 4.0) AS BIGINT) AS bpe_est FROM docs"
+))
 def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fsharp_data_validation_spark.operators.text import token_count
     from fsharp_data_validation_spark.sources.documents import load_docs
@@ -1207,6 +2888,17 @@ def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: DuckDB rendering of the BPE token count (operators/text.py)
+_BPE_SQL = bpe_oracle_expr("text")
+
+
+@query(with_docs(
+    f"SELECT doc_id, "
+    f"CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens, "
+    f"{_BPE_SQL} AS n_bpe, "
+    f"ROUND(length(text) * 1.0 / NULLIF({_BPE_SQL}, 0), 4) AS chars_per_token "
+    f"FROM docs"
+))
 def q_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer-aware token counting (r3 verdict task #5): greedy
     longest-match subword tokens over the embedded public vocab — BPE/
@@ -1221,6 +2913,14 @@ def q_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return token_count_bpe(load_docs(spark, sf_dir), "doc_id", "text")
 
 
+@query(with_docs(
+    "SELECT doc_id, "
+    "CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens, "
+    "ROUND(length(regexp_replace(text, '[^a-z]', '', 'g')) * 1.0 / length(text), 4) AS alpha_ratio, "
+    "ROUND((length(text) - len(string_split(text,' ')) + 1) * 1.0 / len(string_split(text,' ')), 4) AS mean_word_len, "
+    f"ROUND(len(list_filter(string_split(text,' '), w -> w IN ({_STOPWORDS}))) * 1.0 / len(string_split(text,' ')), 4) AS stopword_ratio "
+    "FROM docs"
+))
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fsharp_data_validation_spark.operators.text import quality_score
     from fsharp_data_validation_spark.sources.documents import load_docs
@@ -1235,6 +2935,24 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(with_docs(
+    """
+            SELECT doc_id,
+              CASE WHEN s_en > 0 AND s_en >= s_es AND s_en >= s_de AND s_en >= s_fr THEN 'en'
+                   WHEN s_es > 0 AND s_es >= s_de AND s_es >= s_fr THEN 'es'
+                   WHEN s_de > 0 AND s_de >= s_fr THEN 'de'
+                   WHEN s_fr > 0 THEN 'fr'
+                   ELSE 'und' END AS lang_pred
+            FROM (
+              SELECT doc_id,
+                len(list_filter(string_split(text,' '), w -> w IN ('the','and','of'))) AS s_en,
+                len(list_filter(string_split(text,' '), w -> w IN ('el','la','que'))) AS s_es,
+                len(list_filter(string_split(text,' '), w -> w IN ('der','die','und'))) AS s_de,
+                len(list_filter(string_split(text,' '), w -> w IN ('le','les','des'))) AS s_fr
+              FROM docs
+            ) s
+            """
+))
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fsharp_data_validation_spark.operators.text import lang_id
     from fsharp_data_validation_spark.sources.documents import load_docs
@@ -1242,6 +2960,10 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lang_id(load_docs(spark, sf_dir), "doc_id", "text")
 
 
+@query(with_docs(
+    "SELECT doc_id, md5(array_to_string(list_sort(list_distinct("
+    "string_split(lower(text), ' '))), ' ')) AS fp FROM docs"
+))
 def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fsharp_data_validation_spark.operators.text import fingerprint
     from fsharp_data_validation_spark.sources.documents import load_docs
@@ -1249,6 +2971,13 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fingerprint(load_docs(spark, sf_dir), "doc_id", "text")
 
 
+@query(with_docs(
+    "SELECT doc_id AS media_id, "
+    "CAST(doc_id % 32 + 64 AS INT) AS width, "
+    "CAST(doc_id % 24 + 48 AS INT) AS height, "
+    "CAST(doc_id % 3 + 1 AS INT) AS channels, "
+    "CAST(octet_length(encode(text)) + 5 AS BIGINT) AS n_bytes FROM docs"
+))
 def q_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal plumbing end-to-end: synthesize binary image payloads in
     Spark SQL (5-byte header: BE uint16 width/height + uint8 channels,
@@ -1280,6 +3009,15 @@ def q_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decode_image_meta(media)
 
 
+@query(with_docs(
+    # halved header dims; body keeps every 2nd byte => ceil(len/2)
+    "SELECT doc_id AS media_id, "
+    "CAST((doc_id % 32 + 64) // 2 AS INT) AS width, "
+    "CAST((doc_id % 24 + 48) // 2 AS INT) AS height, "
+    "CAST(doc_id % 3 + 1 AS INT) AS channels, "
+    "CAST(CEIL(octet_length(encode(text)) / 2.0) + 5 AS BIGINT) AS n_bytes "
+    "FROM docs"
+))
 def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resize plumbing round-trip: synthesize payloads, nearest-neighbor
     downsample by 2 in Arrow-batched mapInPandas (header rewrite + byte
@@ -1305,6 +3043,20 @@ def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decode_image_meta(resize_images(media, 2))
 
 
+@query(with_vecs(
+    f"""
+            , q AS (SELECT vec_id AS query_id, e AS qe FROM vecs WHERE vec_id % 100 = 0),
+            v AS (SELECT vec_id AS neighbor_id, e AS ve FROM vecs),
+            scored AS (
+              SELECT query_id, neighbor_id,
+                     ROUND({_COSINE_SQL.format(a='qe', b='ve')}, 6) AS sim
+              FROM q JOIN v ON query_id != neighbor_id
+            ),
+            r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                    ORDER BY sim DESC, neighbor_id ASC) AS rnk FROM scored)
+            SELECT query_id, neighbor_id, rnk, sim FROM r WHERE rnk <= 3
+            """
+), quadratic=True)
 def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-3 for query vectors (vec_id % 100 == 0):
     broadcast queries x one scan of the vectors."""
@@ -1315,6 +3067,15 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return brute_force_topk(vecs, vecs.filter(F.col("vec_id") % 100 == 0), k=3)
 
 
+@query(with_vecs(
+    f"""
+            SELECT id_a, id_b, sim FROM (
+              SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+                     ROUND({_COSINE_SQL.format(a='a.e', b='b.e')}, 6) AS sim
+              FROM vecs a JOIN vecs b ON a.vec_id < b.vec_id
+            ) p WHERE sim >= 0.8
+        """
+), quadratic=True)
 def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs (sim >= 0.8, exact): blocked
     all-pairs GEMM (O(n*B) shuffle instead of O(n^2) joined pairs)."""
@@ -1324,6 +3085,39 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return near_dup_pairs_blocked(load_vecs(spark, sf_dir), threshold=0.8)
 
 
+# full construction replay of SemDeDup: sampled-centroid cells,
+# argmin assignment (ties -> lowest cell), within-cell pairs,
+# keep-earliest flag
+@query(with_vecs(
+    f"""
+            , cent AS (
+              SELECT cell, ce FROM (
+                SELECT e AS ce,
+                       ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cell
+                FROM vecs) c
+              WHERE cell < 8
+            ),
+            assigned AS (
+              SELECT vec_id, e, CAST(cell AS INTEGER) AS cell FROM (
+                SELECT v.vec_id, v.e, c.cell,
+                       ROW_NUMBER() OVER (PARTITION BY v.vec_id
+                                          ORDER BY list_distance(v.e, c.ce), c.cell) AS rn
+                FROM vecs v CROSS JOIN cent c) a
+              WHERE rn = 1
+            ),
+            dupc AS (
+              SELECT b.vec_id AS vid, CAST(COUNT(*) AS BIGINT) AS n
+              FROM assigned a JOIN assigned b
+                ON a.cell = b.cell AND a.vec_id < b.vec_id
+              WHERE ROUND({_COSINE_SQL.format(a='a.e', b='b.e')}, 6) >= 0.85
+              GROUP BY 1
+            )
+            SELECT a.vec_id, a.cell,
+                   COALESCE(d.n, 0) AS n_dup_earlier,
+                   (COALESCE(d.n, 0) = 0) AS keep
+            FROM assigned a LEFT JOIN dupc d ON d.vid = a.vec_id
+            """
+))
 def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup semantic dedup (operators/similarity.py:semdedup):
     sampled-centroid cells -> within-cell cosine pairs -> keep-earliest
@@ -1338,6 +3132,20 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(with_vecs(
+    f"""
+            , q AS (SELECT vec_id AS query_id, e AS qe FROM vecs WHERE vec_id % 100 = 0),
+            v AS (SELECT vec_id AS neighbor_id, e AS ve FROM vecs),
+            scored AS (
+              SELECT query_id, neighbor_id,
+                     ROUND({_COSINE_SQL.format(a='qe', b='ve')}, 6) AS sim
+              FROM q JOIN v ON query_id != neighbor_id
+            ),
+            r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                    ORDER BY sim DESC, neighbor_id ASC) AS rnk FROM scored)
+            SELECT query_id, neighbor_id, rnk, sim FROM r WHERE rnk <= 3
+            """
+), quadratic=True)
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN (k-means cells -> probe -> exact rerank). Run with full
     probing here so the result is exact and shares the brute-force oracle;
@@ -1354,6 +3162,11 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# construction replay: the oracle rebuilds the SAME seeded
+# hyperplane sketch (literals), sign buckets, bucket join and exact
+# verify in DuckDB — robust to scale/seed, unlike asserting full
+# recall of an approximate method (per-pair miss ~3% at sim=0.8)
+@query(_lsh_oracle(threshold=0.8, n_planes=6, n_tables=12, seed=7), quadratic=True)
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale path: sign-sketch buckets (Arrow pandas UDF) -> exact cosine
     verify. Approximate by construction: with 6 planes x 12 tables the
@@ -1372,6 +3185,26 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: documented recall floors for the approximate ANN configurations in
+#: q_ann_recall (oracle-attested each round at sf0.01). ivf_kmeans
+#: is the TRAINED-quantizer path (ivf_topk's default KMeans fit) at
+#: n_probe=4 of n_cells=16 — no DuckDB oracle is possible (a KMeans fit
+#: isn't SQL-replayable; the sampled-centroid design exists precisely for
+#: that), so its floor is pinned by pytest instead
+#: (tests/test_round5_ops.py::test_ivf_kmeans_trained_quantizer_recall;
+#: measured 0.80 on the sf0.001 corpus, floor 0.7 with regeneration slack).
+ANN_RECALL_TARGETS = {"ivf": 0.6, "lsh": 0.6, "ivf_kmeans": 0.7}
+
+
+# full construction replay of BOTH approximate ANN paths + the
+# recall formula (sources/documents.py:ann_recall_oracle_sql)
+# quadratic: replays both exact references via the same all-pairs
+# exact-cosine CTE as embedding_near_dup
+@query(_ann_recall_oracle(
+    k=5, n_cells=8, n_probe=4, threshold=0.8, n_planes=6, n_tables=4,
+    seed=7, ivf_target=ANN_RECALL_TARGETS["ivf"],
+    lsh_target=ANN_RECALL_TARGETS["lsh"],
+), quadratic=True)
 def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Measured-recall attestation of the APPROXIMATE ANN paths — the
     configurations a 100 TB user actually runs (r3 verdict task #3):
@@ -1413,17 +3246,12 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: documented recall floors for the approximate ANN configurations in
-#: q_ann_recall (attested per-round by the driver at sf0.01). ivf_kmeans
-#: is the TRAINED-quantizer path (ivf_topk's default KMeans fit) at
-#: n_probe=4 of n_cells=16 — no DuckDB oracle is possible (a KMeans fit
-#: isn't SQL-replayable; the sampled-centroid design exists precisely for
-#: that), so its floor is pinned by pytest instead
-#: (tests/test_round5_ops.py::test_ivf_kmeans_trained_quantizer_recall;
-#: measured 0.80 on the sf0.001 corpus, floor 0.7 with regeneration slack).
-ANN_RECALL_TARGETS = {"ivf": 0.6, "lsh": 0.6, "ivf_kmeans": 0.7}
-
-
+@query(with_transcripts(
+    "SELECT conv_id, COUNT(*) AS n_turns, MAX(turn_idx) AS max_turn, "
+    "COUNT(DISTINCT role) AS n_roles, "
+    "ROUND(AVG(length(text)), 4) AS mean_len "
+    "FROM transcripts GROUP BY conv_id"
+))
 def q_conv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-conversation profile (hash agg, map-side combine): turn count,
     max turn_idx, distinct roles, mean text length."""
@@ -1436,6 +3264,13 @@ def q_conv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(with_transcripts(
+    "SELECT 'turn_idx' AS col_name, CAST(MIN(turn_idx) AS DOUBLE) AS min_value, "
+    "CAST(MAX(turn_idx) AS DOUBLE) AS max_value FROM transcripts "
+    "UNION ALL "
+    "SELECT 'text_len', CAST(MIN(length(text)) AS DOUBLE), "
+    "CAST(MAX(length(text)) AS DOUBLE) FROM transcripts"
+))
 def q_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-pass min/max per numeric column (stats operator)."""
     from fsharp_data_validation_spark.operators.stats import numeric_minmax
@@ -1446,6 +3281,15 @@ def q_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     return numeric_minmax(t, ["turn_idx", "text_len"])
 
 
+@query(
+    "SELECT l_orderkey, "
+    "ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue, "
+    "COUNT(*) AS n_items "
+    "FROM lineitem JOIN orders ON l_orderkey = o_orderkey "
+    "JOIN customer ON o_custkey = c_custkey "
+    "WHERE c_mktsegment = 'BUILDING' "
+    "GROUP BY l_orderkey ORDER BY revenue DESC, l_orderkey ASC LIMIT 10"
+)
 def q_q3_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3-style: join customer x orders x lineitem, top revenue —
     relational join coverage (broadcast dim, shuffle-hash fact join)."""
@@ -1468,6 +3312,15 @@ def q_q3_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(
+    "SELECT l_returnflag, l_linestatus, "
+    "ROUND(SUM(l_quantity), 2) AS sum_qty, "
+    "ROUND(SUM(l_extendedprice), 2) AS sum_base_price, "
+    "ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price, "
+    "COUNT(*) AS count_order "
+    "FROM lineitem WHERE l_shipdate <= DATE '1998-09-02' "
+    "GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus"
+)
 def q_q1_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-style pricing summary (relational agg coverage)."""
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
@@ -1486,6 +3339,31 @@ def q_q1_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(
+    """
+            WITH g AS (
+              SELECT user_id, ts, event_id,
+                     date_diff('microsecond', LAG(ts) OVER w, ts) AS gap_us
+              FROM events
+              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+            ), m AS (
+              SELECT user_id, ts, event_id,
+                     CASE WHEN gap_us IS NULL OR gap_us > 1800 * 1000000
+                          THEN 1 ELSE 0 END AS is_new
+              FROM g
+            ), s AS (
+              SELECT user_id, ts,
+                     CAST(SUM(is_new) OVER (PARTITION BY user_id
+                          ORDER BY ts, event_id
+                          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_no
+              FROM m
+            )
+            SELECT user_id, session_no, COUNT(*) AS n_events,
+                   MIN(ts) AS session_start, MAX(ts) AS session_end,
+                   date_diff('microsecond', MIN(ts), MAX(ts)) AS duration_us
+            FROM s GROUP BY user_id, session_no
+            """
+)
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization of the events stream (30-min gap): one
     shuffle on user_id, lag + running-sum windows, map-side-combinable
@@ -1496,6 +3374,31 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sessionize(ev, "user_id", "ts", "event_id", gap_seconds=1800)
 
 
+@query(
+    """
+            WITH g AS (
+              SELECT user_id, ts, event_id,
+                     date_diff('microsecond', LAG(ts) OVER w, ts) AS gap_us
+              FROM events
+              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+            ), m AS (
+              SELECT user_id, ts, event_id,
+                     CASE WHEN gap_us IS NULL OR gap_us > 1800 * 1000000
+                          THEN 1 ELSE 0 END AS is_new
+              FROM g
+            ), s AS (
+              SELECT user_id, ts,
+                     CAST(SUM(is_new) OVER (PARTITION BY user_id
+                          ORDER BY ts, event_id
+                          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_no
+              FROM m
+            )
+            SELECT user_id, session_no, COUNT(*) AS n_events,
+                   MIN(ts) AS session_start, MAX(ts) AS session_end,
+                   date_diff('microsecond', MIN(ts), MAX(ts)) AS duration_us
+            FROM s GROUP BY user_id, session_no
+            """
+)
 def q_sessionize_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The hot-key-safe sessionize (operators/temporal.py:sessionize_salted)
     on the same events/gap shape as `sessionize`: output-identical by
@@ -1510,6 +3413,17 @@ def q_sessionize_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(
+    "SELECT l.event_id, "
+    "  (SELECT r.event_id FROM events r WHERE r.user_id = l.user_id "
+    "     AND r.event_type = 'click' AND r.ts <= l.ts "
+    "   ORDER BY r.ts DESC, r.event_id DESC LIMIT 1) AS prev_click_id, "
+    "  (SELECT date_diff('microsecond', r.ts, l.ts) FROM events r "
+    "   WHERE r.user_id = l.user_id AND r.event_type = 'click' "
+    "     AND r.ts <= l.ts "
+    "   ORDER BY r.ts DESC, r.event_id DESC LIMIT 1) AS gap_us "
+    "FROM events l WHERE l.event_type = 'error'"
+)
 def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed as-of join: for every 'error' event, the latest 'click'
     by the same user at or before it (union-tag + running last(ignorenulls)
@@ -1537,6 +3451,17 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# independent spec: a plain correlated BETWEEN join — the obviously-
+# correct O(n*m) form the bucketed operator must reproduce exactly
+@query(
+    "SELECT p.event_id AS purchase_id, "
+    "CAST(COUNT(c.event_id) AS BIGINT) AS n_clicks_1h "
+    "FROM events p LEFT JOIN events c "
+    "  ON c.user_id = p.user_id AND c.event_type = 'click' "
+    "  AND c.ts >= p.ts AND c.ts <= p.ts + INTERVAL 1 HOUR "
+    "WHERE p.event_type = 'purchase' "
+    "GROUP BY p.event_id"
+)
 def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed range join: clicks landing in the hour after each purchase
     by the same user (equi-join on (user, time-bucket) + containment filter
@@ -1569,6 +3494,14 @@ def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(
+    "SELECT COALESCE(CAST(CAST(date_trunc('day', ts) AS DATE) AS VARCHAR), '(all)') AS day, "
+    "COALESCE(event_type, '(all)') AS event_type, "
+    "CAST(GROUPING(CAST(date_trunc('day', ts) AS DATE), event_type) AS BIGINT) AS grp_id, "
+    "COUNT(*) AS n_events, ROUND(SUM(value), 2) AS total_value "
+    "FROM events "
+    "GROUP BY ROLLUP(CAST(date_trunc('day', ts) AS DATE), event_type)"
+)
 def q_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-granularity rollup over events: (day, type), (day) and grand
     total in ONE shuffle via GROUP BY ROLLUP (Expand + single partial+final
@@ -1588,6 +3521,18 @@ def q_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# independent spec: plain per-stratum ROW_NUMBER (the obviously-
+# correct form) — the Spark operator's hash-threshold prefilter must
+# be lossless for this to match
+@query(with_docs(
+    "SELECT lang, doc_id, rnk FROM ("
+    "  SELECT lang, doc_id, ROW_NUMBER() OVER ("
+    "    PARTITION BY lang ORDER BY "
+    "    CAST(('0x' || substr(md5('strat' || '|' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT), "
+    "    doc_id) AS rnk"
+    "  FROM docs"
+    ") WHERE rnk <= 20"
+))
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic exact-k-per-stratum sample of documents by language
     (hash-threshold prefilter + tiny window rank —
@@ -1600,6 +3545,16 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(with_transcripts(
+    "SELECT conv_id, turn_idx, "
+    "regexp_replace(regexp_replace(text, "
+    "'[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'), "
+    "'[0-9]+', '<NUM>', 'g') AS clean_text, "
+    "CAST(COALESCE(len(regexp_extract_all(text, "
+    "'[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}')), 0) AS BIGINT) AS n_emails, "
+    "CAST(COALESCE(len(regexp_extract_all(text, '[0-9]+')), 0) AS BIGINT) AS n_nums "
+    "FROM transcripts"
+))
 def q_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII-style scrubbing of transcript text (emails/digit runs replaced,
     per-row audit counts) — pure regexp column expressions
@@ -1609,6 +3564,21 @@ def q_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     return redact_pii(_transcripts(spark, sf_dir), ["conv_id", "turn_idx"], "text")
 
 
+@query(with_docs(
+    "SELECT doc_id, "
+    "CAST(len(g) AS BIGINT) AS n_grams, "
+    "CAST(len(list_distinct(g)) AS BIGINT) AS n_distinct, "
+    "ROUND(CASE WHEN len(g) = 0 THEN 0.0 "
+    "      ELSE 1.0 - len(list_distinct(g)) * 1.0 / len(g) END, 4) AS rep_ratio "
+    "FROM ("
+    "  SELECT doc_id, "
+    "    CASE WHEN len(w) >= 2 "
+    "         THEN [w[i] || ' ' || w[i+1] for i in range(1, len(w))] "
+    "         ELSE [] END AS g "
+    "  FROM (SELECT doc_id, list_filter(string_split(text, ' '), "
+    "        x -> length(x) > 0) AS w FROM docs)"
+    ")"
+))
 def q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Repeated-bigram ratio per document (boilerplate/template quality
     signal) — row-local array expressions, no shuffle
@@ -1630,6 +3600,26 @@ def _corpus_split(spark: SparkSession, sf_dir: str):
     )
 
 
+# independent spec: naive all-pairs cross-corpus Jaccard (the
+# obviously-correct O(n*m) form the prefix-filtered join must equal)
+@query(with_docs(
+    """
+            , d AS (
+              SELECT doc_id,
+                     list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
+                                    for i in range(1, len(w) - 1)]) AS sh
+              FROM (SELECT doc_id, string_split(text, ' ') AS w FROM docs)
+              WHERE len(w) >= 3
+            )
+            SELECT train_id, eval_id, sim FROM (
+              SELECT a.doc_id AS train_id, b.doc_id AS eval_id,
+                     ROUND(len(list_intersect(a.sh, b.sh)) * 1.0 /
+                           (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) AS sim
+              FROM d a JOIN d b
+                ON a.doc_id % 10 != 3 AND b.doc_id % 10 = 3
+            ) p WHERE sim >= 0.8
+            """
+), quadratic=True)
 def q_contamination_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decontamination: eval docs that are near-duplicates (3-gram Jaccard
     >= 0.8) of a training doc — prefix-filtered cross-corpus inverted-index
@@ -1642,6 +3632,29 @@ def q_contamination_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cross_contamination_pairs(tr, ev, "doc_id", "text", 3, 0.8)
 
 
+@query(with_docs(
+    """
+            , tg AS (
+              SELECT DISTINCT unnest([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
+                                      for i in range(1, len(w) - 1)]) AS g
+              FROM (SELECT doc_id, string_split(text, ' ') AS w FROM docs
+                    WHERE doc_id % 10 != 3)
+              WHERE len(w) >= 3
+            ), eg AS (
+              SELECT doc_id,
+                     unnest(list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
+                                           for i in range(1, len(w) - 1)])) AS g
+              FROM (SELECT doc_id, string_split(text, ' ') AS w FROM docs
+                    WHERE doc_id % 10 = 3)
+              WHERE len(w) >= 3
+            )
+            SELECT eg.doc_id AS eval_id, CAST(COUNT(*) AS BIGINT) AS n_grams,
+                   CAST(COUNT(tg.g) AS BIGINT) AS n_hit,
+                   ROUND(COUNT(tg.g) * 1.0 / COUNT(*), 4) AS containment
+            FROM eg LEFT JOIN tg ON eg.g = tg.g
+            GROUP BY eg.doc_id
+            """
+))
 def q_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decontamination: per eval doc, fraction of its distinct 3-grams that
     appear anywhere in the training corpus
@@ -1654,6 +3667,31 @@ def q_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_containment(tr, ev, "doc_id", "text", 3)
 
 
+@query(
+    "WITH RECURSIVE transcripts AS ("
+    + transcripts_cte()
+    + "), t AS ("
+    "  SELECT conv_id, turn_idx, "
+    "    CASE WHEN text IS NULL THEN 0 "
+    "         ELSE len(string_split(text, ' ')) END AS n_tokens, "
+    "    ROW_NUMBER() OVER (PARTITION BY conv_id "
+    "                       ORDER BY turn_idx, coalesce(text, '')) AS rn "
+    "  FROM transcripts"
+    "), r AS ("
+    "  SELECT conv_id, rn, turn_idx, n_tokens, 1 AS chunk_id, "
+    "         n_tokens AS acc FROM t WHERE rn = 1 "
+    "  UNION ALL "
+    "  SELECT t.conv_id, t.rn, t.turn_idx, t.n_tokens, "
+    "    CASE WHEN r.acc > 0 AND r.acc + t.n_tokens > 64 "
+    "         THEN r.chunk_id + 1 ELSE r.chunk_id END, "
+    "    CASE WHEN r.acc > 0 AND r.acc + t.n_tokens > 64 "
+    "         THEN t.n_tokens ELSE r.acc + t.n_tokens END "
+    "  FROM r JOIN t ON t.conv_id = r.conv_id AND t.rn = r.rn + 1"
+    ") "
+    "SELECT conv_id, CAST(rn AS BIGINT) AS rn, turn_idx, "
+    "  CAST(n_tokens AS BIGINT) AS n_tokens, "
+    "  CAST(chunk_id AS BIGINT) AS chunk_id FROM r"
+)
 def q_pack_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy context-window packing of conversation turns into <=64-token
     chunks — custom stateful operator via Arrow applyInPandas, checked
@@ -1664,6 +3702,33 @@ def q_pack_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pack_context_windows(_transcripts(spark, sf_dir), "conv_id", "turn_idx", "text", 64)
 
 
+# independent spec of the greedy packing recurrence: row-at-a-time
+# recursive CTE (DuckDB-only; WITH RECURSIVE can't be composed via
+# with_transcripts, so the transcripts CTE is inlined)
+@query(
+    "WITH RECURSIVE transcripts AS ("
+    + transcripts_cte()
+    + "), t AS ("
+    "  SELECT conv_id, turn_idx, "
+    f"    {_BPE_SQL} AS n_tokens, "
+    "    ROW_NUMBER() OVER (PARTITION BY conv_id "
+    "                       ORDER BY turn_idx, coalesce(text, '')) AS rn "
+    "  FROM transcripts"
+    "), r AS ("
+    "  SELECT conv_id, rn, turn_idx, n_tokens, 1 AS chunk_id, "
+    "         n_tokens AS acc FROM t WHERE rn = 1 "
+    "  UNION ALL "
+    "  SELECT t.conv_id, t.rn, t.turn_idx, t.n_tokens, "
+    "    CASE WHEN r.acc > 0 AND r.acc + t.n_tokens > 64 "
+    "         THEN r.chunk_id + 1 ELSE r.chunk_id END, "
+    "    CASE WHEN r.acc > 0 AND r.acc + t.n_tokens > 64 "
+    "         THEN t.n_tokens ELSE r.acc + t.n_tokens END "
+    "  FROM r JOIN t ON t.conv_id = r.conv_id AND t.rn = r.rn + 1"
+    ") "
+    "SELECT conv_id, CAST(rn AS BIGINT) AS rn, turn_idx, "
+    "  CAST(n_tokens AS BIGINT) AS n_tokens, "
+    "  CAST(chunk_id AS BIGINT) AS chunk_id FROM r"
+)
 def q_pack_windows_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same stateful packing recurrence budgeted in SUBWORD tokens
     (tokenizer='bpe' — greedy longest-match counts as a JVM column expr,
@@ -1678,6 +3743,22 @@ def q_pack_windows_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# independent spec of the as-of semantics (correlated subquery — the
+# obviously-correct form, deliberately NOT the union/window shape the
+# Spark operator uses, so a shared bug can't hide)
+# asof_salted is output-identical to asof_join (parity-fuzzed in
+# tests/test_round4_ops.py); both share the correlated-subquery spec
+@query(
+    "SELECT l.event_id, "
+    "  (SELECT r.event_id FROM events r WHERE r.user_id = l.user_id "
+    "     AND r.event_type = 'click' AND r.ts <= l.ts "
+    "   ORDER BY r.ts DESC, r.event_id DESC LIMIT 1) AS prev_click_id, "
+    "  (SELECT date_diff('microsecond', r.ts, l.ts) FROM events r "
+    "   WHERE r.user_id = l.user_id AND r.event_type = 'click' "
+    "     AND r.ts <= l.ts "
+    "   ORDER BY r.ts DESC, r.event_id DESC LIMIT 1) AS gap_us "
+    "FROM events l WHERE l.event_type = 'error'"
+)
 def q_asof_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The hot-key-safe as-of (operators/temporal.py:asof_join_salted) on the
     same error<-latest-click shape as `asof_join`: output-identical by
@@ -1707,6 +3788,21 @@ def q_asof_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# independent spec of sliding-window chunking: DuckDB 1-based
+# inclusive list slices over unnested start offsets (width 16,
+# stride 8; docs with NULL text yield no chunks on both engines)
+# independent spec of first-occurrence line dedup: 1-based list
+# comprehension keeping positions where list_position == own index
+@query(with_docs(
+    ", d AS (SELECT doc_id, "
+    "string_split(replace(text, ' ', chr(10)), chr(10)) AS l FROM docs)"
+    ", k AS (SELECT doc_id, l, "
+    "[l[i] for i in range(1, len(l) + 1) if list_position(l, l[i]) = i] AS kept "
+    "FROM d) "
+    "SELECT doc_id, array_to_string(kept, chr(10)) AS clean_text, "
+    "CAST(len(l) AS BIGINT) AS n_lines, "
+    "CAST(len(l) - len(kept) AS BIGINT) AS n_dupe_lines FROM k"
+))
 def q_dedup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-doc repeated-line removal (CCNet-style), demonstrated on a
     line-per-word rendering of the docs corpus so duplicates exist
@@ -1720,6 +3816,25 @@ def q_dedup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_lines(d, "doc_id", "text")
 
 
+@query(with_docs(
+    ", t AS ("
+    "  SELECT doc_id, string_split(text, ' ') AS toks, "
+    "         len(string_split(text, ' ')) AS n "
+    "  FROM docs WHERE text IS NOT NULL"
+    "), c AS ("
+    "  SELECT doc_id, toks, n, "
+    "    CASE WHEN n <= 16 THEN 1 "
+    "         ELSE CAST(ceil((n - 16) / 8.0) AS BIGINT) + 1 END AS n_chunks "
+    "  FROM t"
+    "), s AS ("
+    "  SELECT doc_id, toks, n, unnest(range(n_chunks)) AS i FROM c"
+    ") "
+    "SELECT doc_id, CAST(i AS BIGINT) AS chunk_idx, "
+    "  CAST(i * 8 AS BIGINT) AS start_tok, "
+    "  CAST(len(toks[(CAST(i AS BIGINT) * 8 + 1):least(CAST(i AS BIGINT) * 8 + 16, n)]) AS BIGINT) AS n_chunk_tokens, "
+    "  array_to_string(toks[(CAST(i AS BIGINT) * 8 + 1):least(CAST(i AS BIGINT) * 8 + 16, n)], ' ') AS chunk_text "
+    "FROM s"
+))
 def q_chunk_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window token chunking (width 16, stride 8) over the docs
     corpus — row-local sequence+posexplode+slice, zero shuffle
@@ -1730,6 +3845,20 @@ def q_chunk_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chunk_text(load_docs(spark, sf_dir), "doc_id", "text", 16, 8)
 
 
+@query(with_docs(
+    "SELECT doc_id, "
+    "CASE WHEN CAST(('0x' || substr(md5('split' || '|' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) "
+    "     % 100 < 90 THEN 'train' ELSE 'test' END AS split "
+    "FROM ("
+    "  SELECT doc_id, "
+    "    ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn "
+    "  FROM docs "
+    "  WHERE lang = 'en' "
+    "    AND len(string_split(text, ' ')) BETWEEN 10 AND 500 "
+    "    AND length(regexp_replace(text, '[^a-z]', '', 'g')) * 1.0 "
+    "        / length(text) >= 0.5"
+    ") k WHERE rn = 1"
+))
 def q_corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composed curation pipeline: language + token-length + alpha-ratio
     gates (one projection, scan-stage filters), exact-dedup keep-first
@@ -1745,6 +3874,9 @@ _STREAM_SUITE_RUNS = iter(range(1, 10_000))
 _STREAM_RA_RUNS = iter(range(1, 10_000))
 
 
+# the streaming path must concatenate micro-batches to EXACTLY the
+# batch answer (stateless suite), so it shares row_suite's oracle
+@query(_ROW_SUITE_ORACLE)
 def q_stream_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING surface's first oracle-attested query: the stateless
     suite driven through a real file stream (readStream + availableNow,
@@ -1775,6 +3907,10 @@ def q_stream_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("conv_id", "turn_idx", "ts", "path", "code")
 
 
+# the streaming control chart must concatenate micro-batches to
+# EXACTLY the batch closed form (pytest-pinned), so it shares the
+# batch oracle
+@query(_RATE_ANOMALY_ORACLE)
 def q_stream_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming control-chart monitoring driven for real (streaming/
     validate_stream.py:windowed_rate_anomaly_stream): the daily
@@ -1849,6 +3985,68 @@ def q_stream_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# composed end-to-end pipeline: replay all four stages sequentially
+# — curate CTE (gates + exact keep-first), all-pairs exact-Jaccard
+# keep-earliest drop set (quadratic — the obviously-correct form the
+# LSH path must equal), md5 split+shard grouping, recursive-CTE
+# packing recurrence with the BPE count as the budget unit
+@query(
+    "WITH RECURSIVE docs AS ("
+    + _DOCS_SQL
+    + "), cur AS ("
+    "  SELECT doc_id, text FROM ("
+    "    SELECT doc_id, text, "
+    "      ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS krn "
+    "    FROM docs "
+    "    WHERE lang = 'en' "
+    "      AND len(string_split(text, ' ')) BETWEEN 10 AND 500 "
+    "      AND length(regexp_replace(text, '[^a-z]', '', 'g')) * 1.0 "
+    "          / length(text) >= 0.5"
+    "  ) k WHERE krn = 1"
+    "), d AS ("
+    "  SELECT doc_id, "
+    "         list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] "
+    "                        for i in range(1, len(w) - 1)]) AS sh "
+    "  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM cur) "
+    "  WHERE len(w) >= 3"
+    "), dropped AS ("
+    "  SELECT DISTINCT id_b AS doc_id FROM ("
+    "    SELECT b.doc_id AS id_b, "
+    "           len(list_intersect(a.sh, b.sh)) * 1.0 / "
+    "           (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS sim "
+    "    FROM d a JOIN d b ON a.doc_id < b.doc_id"
+    "  ) p WHERE sim >= 0.8"
+    "), kept AS ("
+    "  SELECT doc_id, text, "
+    "    (CASE WHEN CAST(('0x' || substr(md5('split' || '|' || "
+    "          CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 90 "
+    "          THEN 'train' ELSE 'test' END) || '|' || "
+    "    CAST(CAST(('0x' || substr(md5('shard' || '|' || "
+    "         CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 8 AS VARCHAR) "
+    "    AS pack_group "
+    "  FROM cur WHERE doc_id NOT IN (SELECT doc_id FROM dropped)"
+    "), t AS ("
+    "  SELECT pack_group, doc_id, "
+    f"    {_BPE_SQL} AS n_bpe, "
+    "    ROW_NUMBER() OVER (PARTITION BY pack_group "
+    "                       ORDER BY doc_id, coalesce(text, '')) AS rn "
+    "  FROM kept"
+    "), r AS ("
+    "  SELECT pack_group, rn, doc_id, n_bpe, 1 AS chunk_id, "
+    "         n_bpe AS acc FROM t WHERE rn = 1 "
+    "  UNION ALL "
+    "  SELECT t.pack_group, t.rn, t.doc_id, t.n_bpe, "
+    "    CASE WHEN r.acc > 0 AND r.acc + t.n_bpe > 2048 "
+    "         THEN r.chunk_id + 1 ELSE r.chunk_id END, "
+    "    CASE WHEN r.acc > 0 AND r.acc + t.n_bpe > 2048 "
+    "         THEN t.n_bpe ELSE r.acc + t.n_bpe END "
+    "  FROM r JOIN t ON t.pack_group = r.pack_group AND t.rn = r.rn + 1"
+    ") "
+    "SELECT pack_group, doc_id, CAST(rn AS BIGINT) AS rn, "
+    "  CAST(n_bpe AS BIGINT) AS n_bpe, "
+    "  CAST(chunk_id AS BIGINT) AS chunk_id FROM r",
+    quadratic=True,
+)
 def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composed END-TO-END pipeline as ONE lineage: curate gates +
     exact-dedup keep-first -> MinHash-LSH near-dup keep-earliest drop ->
@@ -1866,6 +4064,20 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curate_dedup_pack(load_docs(spark, sf_dir), "doc_id", "text")
 
 
+@query(with_transcripts(
+    "SELECT conv_id, text_digest, flow_digest, "
+    "  CAST(COUNT(*) OVER (PARTITION BY text_digest) AS BIGINT) AS n_same_text, "
+    "  CAST(COUNT(*) OVER (PARTITION BY flow_digest) AS BIGINT) AS n_same_flow, "
+    "  MIN(conv_id) OVER (PARTITION BY text_digest) AS keep_conv_id "
+    "FROM ("
+    "  SELECT conv_id, "
+    "    md5(string_agg(coalesce(text, ''), chr(31) "
+    "        ORDER BY turn_idx, coalesce(text, ''))) AS text_digest, "
+    "    md5(string_agg(coalesce(role, '') || '|' || coalesce(tool, ''), chr(31) "
+    "        ORDER BY turn_idx, coalesce(role, '') || '|' || coalesce(tool, ''))) AS flow_digest "
+    "  FROM transcripts GROUP BY conv_id"
+    ") a"
+))
 def q_conv_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conversation-level dedup digests over the transcripts: full-text
     digest + role|tool flow digest, per-digest group sizes, canonical
@@ -1873,2293 +4085,3 @@ def q_conv_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fsharp_data_validation_spark.operators.dedup import conversation_digests
 
     return conversation_digests(_transcripts(spark, sf_dir))
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Dict order matters: the driver's correctness sweep attests the FIRST 50
-    # entries. Round-5 rotation (r4 verdict task #1): the never-attested
-    # entries lead — suggest_constraints/rate_anomaly/stream_suite/
-    # pipeline_e2e (r5-new), the three r4-late additions, sample_split
-    # (spilled to position 51 last round) — then token_count_bpe
-    # (r4-attested but its operator gained the NULLIF divisor guard in r5)
-    # and corpus_curate (r4-attested; its operator was refactored into
-    # _curate_survivors in r5), then the r3-attested entries whose operator
-    # files r4 touched (similarity/text/crossrow/checks/multimodal), then
-    # the rest of the r3 block. FOURTEEN r3-attested entries spill past the
-    # window to r6 — freq_items, moments, chi2_by_day, weighted_sample,
-    # violation_examples, skew_report, dup_stats, minhash_lsh, simhash,
-    # quota_sample, global_shuffle, schema_report, temp_sample, upsample —
-    # chosen as the lowest-risk:
-    # row-local hash predicates / O(columns) metadata / dedup.py exact+LSH
-    # paths and stats.py untouched since r3, all re-verified in this
-    # session's full local sf0.01 sweep (and minhash_lsh's construction is
-    # additionally exercised INSIDE the window by pipeline_e2e's dedup
-    # stage). The 48 r4-attested entries close the dict.
-    return {
-        # --- never driver-checked ---
-        "suggest_constraints": q_suggest_constraints,
-        "rate_anomaly": q_rate_anomaly,
-        "span_dedup": q_span_dedup,
-        "dsir_weights": q_dsir_weights,
-        "semdedup": q_semdedup,
-        "ngram_perplexity": q_ngram_perplexity,
-        "stream_rate_anomaly": q_stream_rate_anomaly,
-        "stream_suite": q_stream_suite,
-        "pipeline_e2e": q_pipeline_e2e,
-        "sessionize_salted": q_sessionize_salted,
-        "asof_salted": q_asof_salted,
-        "pack_windows_bpe": q_pack_windows_bpe,
-        "sample_split": q_sample_split,
-        # --- r4-attested but operator changed in r5 ---
-        "token_count_bpe": q_token_count_bpe,
-        "corpus_curate": q_corpus_curate,
-        # --- r3-attested, operator files touched in r4 ---
-        "ann_ivf": q_ann_ivf,
-        "token_count": q_token_count,
-        "context_budget": q_context_budget,
-        "conv_flow": q_conv_flow,
-        "dataset_checks": q_dataset_checks,
-        "media_meta": q_media_meta,
-        "media_resize": q_media_resize,
-        "audio_meta": q_audio_meta,
-        "ann_topk": q_ann_topk,
-        "embedding_near_dup": q_embedding_near_dup,
-        "ann_lsh": q_ann_lsh,
-        "embedding_contamination": q_embedding_contamination,
-        "embedding_health": q_embedding_health,
-        "turn_loops": q_turn_loops,
-        "fd_check": q_fd_check,
-        "benford": q_benford,
-        "text_quality": q_text_quality,
-        "lang_id": q_lang_id,
-        "fingerprint": q_fingerprint,
-        "encoding_quality": q_encoding_quality,
-        "mixture": q_mixture,
-        "vocab_stats": q_vocab_stats,
-        "top_words": q_top_words,
-        "tfidf_top_terms": q_tfidf_top_terms,
-        "top_ngram": q_top_ngram,
-        "dup_ngrams": q_dup_ngrams,
-        "zipf": q_zipf,
-        "pmi": q_pmi,
-        "vocab_growth": q_vocab_growth,
-        # --- r3-attested, rest of the block (to position 50) ---
-        "hll_rollup": q_hll_rollup,
-        "chi2_drift": q_chi2_drift,
-        "w1_by_day": q_w1_by_day,
-        "rolling_rate": q_rolling_rate,
-        "mad_outliers": q_mad_outliers,
-        "cvm_drift": q_cvm_drift,
-        "freq_items": q_freq_items,
-        "moments": q_moments,
-        "chi2_by_day": q_chi2_by_day,
-        "weighted_sample": q_weighted_sample,
-        "violation_examples": q_violation_examples,
-        "skew_report": q_skew_report,
-        "dup_stats": q_dup_stats,
-        # ^-- position 50 ends here
-        # --- r3-attested, spilled past the window to r6 (lowest-risk) ---
-        "minhash_lsh": q_minhash_lsh,
-        "simhash": q_simhash,
-        "quota_sample": q_quota_sample,
-        "global_shuffle": q_global_shuffle,
-        "schema_report": q_schema_report,
-        "temp_sample": q_temp_sample,
-        "upsample": q_upsample,
-        # --- r4-attested (driver-green at the r4 code state) ---
-        "ann_recall": q_ann_recall,
-        "row_suite": q_row_suite,
-        "violation_trend": q_violation_trend,
-        "valid_turns": q_valid_turns,
-        "verdict": q_verdict,
-        "uniqueness": q_uniqueness,
-        "referential": q_referential,
-        "ordering": q_ordering,
-        "column_profile": q_column_profile,
-        "text_len_quantiles": q_text_len_quantiles,
-        "tdigest": q_tdigest,
-        "psi_drift": q_psi_drift,
-        "ks_drift": q_ks_drift,
-        "js_drift": q_js_drift,
-        "w1_drift": q_w1_drift,
-        "ts_gap_psi": q_ts_gap_psi,
-        "ts_gap_ks": q_ts_gap_ks,
-        "quantiles_by_day": q_quantiles_by_day,
-        "psi_by_day": q_psi_by_day,
-        "ks_by_day": q_ks_by_day,
-        "js_by_day": q_js_by_day,
-        "element_suite": q_element_suite,
-        "nested_suite": q_nested_suite,
-        "each_nested": q_each_nested,
-        "each_indexed": q_each_indexed,
-        "conv_stats": q_conv_stats,
-        "minmax": q_minmax,
-        "sessionize": q_sessionize,
-        "asof_join": q_asof_join,
-        "interval_join": q_interval_join,
-        "time_rollup": q_time_rollup,
-        "stratified_sample": q_stratified_sample,
-        "conv_dedup": q_conv_dedup,
-        "redact_pii": q_redact_pii,
-        "repetition": q_repetition,
-        "contamination_pairs": q_contamination_pairs,
-        "ngram_containment": q_ngram_containment,
-        "pack_windows": q_pack_windows,
-        "chunk_text": q_chunk_text,
-        "dedup_lines": q_dedup_lines,
-        "q1_pricing": q_q1_pricing,
-        "q3_shipping": q_q3_shipping,
-        "dedup_exact": q_dedup_exact,
-        "ngram_jaccard": q_ngram_jaccard,
-        "dedup_apply": q_dedup_apply,
-        "dedup_components": q_dedup_components,
-        "containment_dedup": q_containment_dedup,
-        "frame_sample": q_frame_sample,
-    }
-
-
-# --------------------------------------------------------------------------
-# oracles (DuckDB dialect)
-# --------------------------------------------------------------------------
-
-_ROLES_SQL = ",".join(f"'{r}'" for r in ROLES)
-
-# per-constraint failure conditions with refute masks made explicit;
-# mirrors transcript_row_suite() constraint-for-constraint
-_FAIL_CONDS = [
-    ("conv_id", "conv_id_required", "conv_id IS NULL"),
-    (
-        "conv_id",
-        "conv_id_format",
-        "conv_id IS NOT NULL AND NOT regexp_matches(conv_id, '^c[0-9]+$')",
-    ),
-    ("turn_idx", "turn_idx_required", "turn_idx IS NULL"),
-    ("turn_idx", "turn_idx_negative", "turn_idx IS NOT NULL AND turn_idx < 0"),
-    ("role", "role_required", "role IS NULL"),
-    ("role", "role_enum", f"role IS NOT NULL AND role NOT IN ({_ROLES_SQL})"),
-    ("text", "text_required", "text IS NULL"),
-    ("text", "text_empty", "text IS NOT NULL AND length(text) < 1"),
-    ("text", "text_too_long", "text IS NOT NULL AND length(text) > 10000"),
-    (
-        "tool",
-        "tool_format",
-        "tool IS NOT NULL AND NOT regexp_matches(tool, '^tool_[0-9]+$')",
-    ),
-    ("tool", "tool_missing_for_tool_role", "role = 'tool' AND tool IS NULL"),
-    ("", "tool_on_non_tool_role", "COALESCE(role = 'tool' OR tool IS NULL, TRUE) = FALSE"),
-]
-
-_ROW_SUITE_ORACLE = with_transcripts(
-    "SELECT conv_id, turn_idx, ts, path, code FROM (\n"
-    + "\nUNION ALL\n".join(
-        f"SELECT conv_id, turn_idx, ts, '{p}' AS path, '{c}' AS code FROM transcripts WHERE {w}"
-        for p, c, w in _FAIL_CONDS
-    )
-    + "\n) v"
-)
-
-_NF_EXPR = " + ".join(f"(CASE WHEN {w} THEN 1 ELSE 0 END)" for _, _, w in _FAIL_CONDS)
-
-# per-(path, code) exemplar pick: salted-md5 rank of the row key (matches
-# q_violation_examples' md5_int(key, salt="ex") exactly)
-_EXAMPLES_ORACLE = with_transcripts(
-    "SELECT path, code, CAST(rn AS INT) AS rnk, conv_id, turn_idx FROM (\n"
-    "  SELECT *, ROW_NUMBER() OVER (PARTITION BY path, code ORDER BY\n"
-    "    CAST(('0x' || substr(md5('ex' || '|' || COALESCE(conv_id, '') || '|'\n"
-    "      || COALESCE(CAST(turn_idx AS VARCHAR), '') || '|'\n"
-    "      || COALESCE(CAST(CAST(FLOOR(epoch(ts)) AS BIGINT) AS VARCHAR), '')),\n"
-    "      1, 15)) AS BIGINT) ASC) AS rn\n"
-    "  FROM (\n"
-    + "\nUNION ALL\n".join(
-        f"SELECT conv_id, turn_idx, ts, '{p}' AS path, '{c}' AS code FROM transcripts WHERE {w}"
-        for p, c, w in _FAIL_CONDS
-    )
-    + "\n  ) v\n"
-    ") r WHERE rn <= 3"
-)
-
-# total order for conversation-flow lag windows — must match
-# conversation_flow_violations' window spec exactly (ts alone can tie under
-# injected duplicate turn indexes)
-_FLOW_W = (
-    "PARTITION BY conv_id ORDER BY turn_idx, ts, role, "
-    "COALESCE(text, ''), COALESCE(tool, '')"
-)
-
-_MID_SQL = (
-    "SELECT ROUND((MIN(CAST(FLOOR(epoch(ts)) AS BIGINT))"
-    " + MAX(CAST(FLOOR(epoch(ts)) AS BIGINT))) / 2) AS mid FROM transcripts"
-)
-
-_HIST_SQL = """
-SELECT LEAST(GREATEST(CAST(FLOOR(length(text) / 10.0) AS INT), 0), 19) AS bucket,
-       COUNT(*) AS n
-FROM transcripts
-WHERE text IS NOT NULL AND CAST(FLOOR(epoch(ts)) AS BIGINT) {op} (SELECT mid FROM m)
-GROUP BY 1
-"""
-
-# ts-gap drift: per-conversation inter-turn gap (whole seconds), 1h buckets
-_GAPS_SQL = """
-, g0 AS (
-  SELECT conv_id, ts,
-         CAST(FLOOR(epoch(ts)) AS BIGINT)
-           - LAG(CAST(FLOOR(epoch(ts)) AS BIGINT))
-             OVER (PARTITION BY conv_id ORDER BY turn_idx, ts) AS gap_s
-  FROM transcripts
-), gaps AS (SELECT * FROM g0 WHERE gap_s IS NOT NULL)
-, m AS (
-  SELECT ROUND((MIN(CAST(FLOOR(epoch(ts)) AS BIGINT))
-         + MAX(CAST(FLOOR(epoch(ts)) AS BIGINT))) / 2) AS mid FROM gaps
-)
-"""
-
-_GAP_HIST_SQL = """
-SELECT LEAST(GREATEST(CAST(FLOOR(gap_s / 3600.0) AS INT), 0), 23) AS bucket,
-       COUNT(*) AS n
-FROM gaps
-WHERE CAST(FLOOR(epoch(ts)) AS BIGINT) {op} (SELECT mid FROM m)
-GROUP BY 1
-"""
-
-_PSI_FROM_J = """
-SELECT ROUND(SUM((p - q) * LN(p / q)), 4) AS psi FROM (
-  SELECT GREATEST(na * 1.0 / (SELECT SUM(na) FROM j), 1e-6) AS p,
-         GREATEST(nb * 1.0 / (SELECT SUM(nb) FROM j), 1e-6) AS q
-  FROM j
-) t
-"""
-
-_KS_FROM_J = """
-SELECT ROUND(MAX(ABS(ca * 1.0 / (SELECT SUM(na) FROM j)
-                   - cb * 1.0 / (SELECT SUM(nb) FROM j))), 4) AS ks
-FROM (
-  SELECT SUM(na) OVER (ORDER BY bucket) AS ca,
-         SUM(nb) OVER (ORDER BY bucket) AS cb
-  FROM j
-) t
-"""
-
-
-def _gap_drift_oracle(stat_sql: str) -> str:
-    return with_transcripts(
-        _GAPS_SQL
-        + f", ha AS ({_GAP_HIST_SQL.format(op='<')})"
-        + f", hb AS ({_GAP_HIST_SQL.format(op='>=')})"
-        + """
-        , j AS (
-          SELECT COALESCE(ha.bucket, hb.bucket) AS bucket,
-                 COALESCE(ha.n, 0) AS na, COALESCE(hb.n, 0) AS nb
-          FROM ha FULL OUTER JOIN hb ON ha.bucket = hb.bucket
-        )
-        """
-        + stat_sql
-    )
-
-
-# shingle sets + exact-Jaccard pairs in DuckDB (oracle for both the exact
-# inverted-index query AND the LSH+verify query — high-recall banding means
-# they agree)
-_JACCARD_ORACLE = """
-, d AS (
-  SELECT doc_id,
-         list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                        for i in range(1, len(w) - 1)]) AS sh
-  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM docs)
-  WHERE len(w) >= 3
-)
-SELECT id_a, id_b, sim FROM (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         ROUND(len(list_intersect(a.sh, b.sh)) * 1.0 /
-               (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) AS sim
-  FROM d a JOIN d b ON a.doc_id < b.doc_id
-) p WHERE sim >= 0.8
-"""
-
-_SIMHASH_BITS_SQL = ", ".join(
-    f"SUM(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS b{i}"
-    for i in range(60)
-)
-_SIMHASH_SIG_SQL = " + ".join(
-    f"(CASE WHEN b{i} > 0 THEN (CAST(1 AS BIGINT) << {i}) ELSE CAST(0 AS BIGINT) END)"
-    for i in range(60)
-)
-
-_SIMHASH_ORACLE = f"""
-, words AS (
-  SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w FROM docs
-), hashed AS (
-  SELECT doc_id, CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) AS h
-  FROM words WHERE length(w) > 0
-), bits AS (
-  SELECT doc_id, {_SIMHASH_BITS_SQL} FROM hashed GROUP BY doc_id
-), sig AS (
-  SELECT doc_id, {_SIMHASH_SIG_SQL} AS simhash FROM bits
-)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-"""
-
-from fsharp_data_validation_spark.sources.documents import DOCS_SQL as _DOCS_SQL
-
-# Connected components of the exact near-dup graph: DuckDB recursive CTE
-# transitive closure over the symmetric pair edges, min reachable id per
-# node. (WITH RECURSIVE must head the CTE list, so this oracle inlines the
-# docs CTE instead of using with_docs().)
-_COMPONENTS_ORACLE = (
-    "WITH RECURSIVE docs AS (" + _DOCS_SQL + ")"
-    + """
-, d AS (
-  SELECT doc_id,
-         list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                        for i in range(1, len(w) - 1)]) AS sh
-  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM docs)
-  WHERE len(w) >= 3
-), pairs AS (
-  SELECT id_a, id_b FROM (
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           ROUND(len(list_intersect(a.sh, b.sh)) * 1.0 /
-                 (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) AS sim
-    FROM d a JOIN d b ON a.doc_id < b.doc_id
-  ) p WHERE sim >= 0.8
-), sym AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION ALL
-  SELECT id_b AS src, id_a AS dst FROM pairs
-), reach(src, dst) AS (
-  SELECT doc_id, doc_id FROM docs
-  UNION
-  SELECT r.src, s.dst FROM reach r JOIN sym s ON r.dst = s.src
-)
-SELECT src AS doc_id, MIN(dst) AS component FROM reach GROUP BY src
-"""
-)
-
-_SPLIT_BUCKET_SQL = (
-    "CAST(('0x' || substr(md5('split' || '|' || CAST(doc_id AS VARCHAR)), 1, 15)) "
-    "AS BIGINT) % 100"
-)
-
-_STOPWORDS = "'the','a','and','of','to','in'"
-
-_COSINE_SQL = (
-    "list_dot_product({a}, {b}) / "
-    "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
-)
-
-
-#: shared by rate_anomaly (batch) and stream_rate_anomaly (streaming —
-#: pytest pins the concatenated micro-batch output equal to the batch form)
-_RATE_ANOMALY_ORACLE = with_transcripts(
-f"""
-            , d AS (
-              SELECT CAST(ts AS DATE) AS day,
-                     CAST(COUNT(*) AS BIGINT) AS n_rows,
-                     CAST(SUM(CASE WHEN ({_NF_EXPR}) > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_viol
-              FROM transcripts GROUP BY 1
-            ),
-            r AS (
-              SELECT day, n_rows, n_viol,
-                     CAST(ROUND(n_viol * 1.0 / n_rows, 6) AS DOUBLE) AS rate
-              FROM d
-            ),
-            wnd AS (
-              SELECT day, n_rows, n_viol, rate,
-                     ROUND(AVG(rate) OVER w, 6) AS m,
-                     ROUND(STDDEV_POP(rate) OVER w, 6) AS s,
-                     COUNT(rate) OVER w AS hist
-              FROM r
-              WINDOW w AS (ORDER BY day ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)
-            )
-            SELECT day, n_rows, n_viol, rate,
-                   m AS mean_rate,
-                   s AS sd_rate,
-                   ROUND(CASE WHEN s > 0 THEN (rate - m) / s END, 4) AS z,
-                   (hist >= 3 AND COALESCE(
-                      CASE WHEN s > 0 THEN ABS(ROUND((rate - m) / s, 4)) > 2.0
-                           ELSE rate <> m END, FALSE)) AS anomaly
-            FROM wnd
-            """
-        )
-
-
-def _suggest_oracle(
-    string_cols: list[str], numeric_cols: list[str], max_domain: int = 10
-) -> str:
-    """Spec form of operators/checks.py:suggest_constraints over the
-    transcripts table: ONE profile aggregate + a sorted-domain aggregate,
-    then one UNION ALL arm per (column, suggestion-kind) with the same
-    emission guards the operator applies (the oracle computes every string
-    column's domain unconditionally — spec-form latitude — but only emits
-    it under the same ``0 < distinct <= max_domain`` guard)."""
-    cols = string_cols + numeric_cols
-    prof = ["CAST(COUNT(*) AS BIGINT) AS n"]
-    for c in cols:
-        prof += [
-            f"COUNT({c}) AS nn_{c}",
-            f"COUNT(DISTINCT {c}) AS d_{c}",
-            f"ROUND(AVG(CASE WHEN {c} IS NOT NULL THEN 1.0 ELSE 0.0 END), 4) AS comp_{c}",
-            f"FLOOR(AVG(CASE WHEN {c} IS NOT NULL THEN 1.0 ELSE 0.0 END) * 100) / 100.0 AS floor_{c}",
-        ]
-    for c in string_cols:
-        prof.append(f"CAST(MAX(length({c})) AS DOUBLE) AS maxlen_{c}")
-    for c in numeric_cols:
-        prof.append(f"ROUND(CAST(MIN({c}) AS DOUBLE), 4) AS lo_{c}")
-        prof.append(f"ROUND(CAST(MAX({c}) AS DOUBLE), 4) AS hi_{c}")
-    dom = [
-        f"string_agg(DISTINCT {c}, '|' ORDER BY {c}) AS dom_{c}"
-        for c in string_cols
-    ]
-    nul_s, nul_d = "CAST(NULL AS VARCHAR)", "CAST(NULL AS DOUBLE)"
-    arms = []
-    for c in cols:
-        arms.append(
-            f"SELECT '{c}' AS \"column\", 'not_null' AS kind, {nul_s} AS value_str, "
-            f"{nul_d} AS lo, {nul_d} AS hi, CAST(1.0 AS DOUBLE) AS support "
-            f"FROM prof WHERE n > 0 AND nn_{c} = n"
-        )
-        arms.append(
-            f"SELECT '{c}', 'completeness', {nul_s}, CAST(floor_{c} AS DOUBLE), "
-            f"{nul_d}, CAST(comp_{c} AS DOUBLE) "
-            f"FROM prof WHERE NOT (n > 0 AND nn_{c} = n) AND nn_{c} > 0"
-        )
-        arms.append(
-            f"SELECT '{c}', 'unique', {nul_s}, {nul_d}, {nul_d}, CAST(1.0 AS DOUBLE) "
-            f"FROM prof WHERE n > 0 AND d_{c} = nn_{c} AND nn_{c} = n"
-        )
-    for c in string_cols:
-        arms.append(
-            f"SELECT '{c}', 'domain', (SELECT dom_{c} FROM dom), {nul_d}, {nul_d}, "
-            f"CAST(comp_{c} AS DOUBLE) FROM prof WHERE d_{c} > 0 AND d_{c} <= {max_domain}"
-        )
-    for c in numeric_cols:
-        arms.append(
-            f"SELECT '{c}', 'range', {nul_s}, CAST(lo_{c} AS DOUBLE), "
-            f"CAST(hi_{c} AS DOUBLE), CAST(comp_{c} AS DOUBLE) "
-            f"FROM prof WHERE nn_{c} > 0"
-        )
-    for c in string_cols:
-        arms.append(
-            f"SELECT '{c}', 'max_length', {nul_s}, {nul_d}, CAST(maxlen_{c} AS DOUBLE), "
-            f"CAST(comp_{c} AS DOUBLE) FROM prof WHERE nn_{c} > 0"
-        )
-    return with_transcripts(
-        ", prof AS (SELECT " + ", ".join(prof) + " FROM transcripts),\n"
-        "dom AS (SELECT " + ", ".join(dom) + " FROM transcripts)\n"
-        + "\nUNION ALL\n".join(arms)
-    )
-
-
-def oracle_sql() -> dict[str, str]:
-    from fsharp_data_validation_spark.operators.text import bpe_oracle_expr
-
-    roles = _ROLES_SQL
-    _bpe = bpe_oracle_expr("text")
-    return {
-        # full construction replay of BOTH approximate ANN paths + the
-        # recall formula (sources/documents.py:ann_recall_oracle_sql)
-        "ann_recall": _ann_recall_oracle(
-            k=5, n_cells=8, n_probe=4, threshold=0.8, n_planes=6, n_tables=4,
-            seed=7, ivf_target=ANN_RECALL_TARGETS["ivf"],
-            lsh_target=ANN_RECALL_TARGETS["lsh"],
-        ),
-        "token_count_bpe": with_docs(
-            f"SELECT doc_id, "
-            f"CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens, "
-            f"{_bpe} AS n_bpe, "
-            f"ROUND(length(text) * 1.0 / NULLIF({_bpe}, 0), 4) AS chars_per_token "
-            f"FROM docs"
-        ),
-        "row_suite": _ROW_SUITE_ORACLE,
-        # the streaming path must concatenate micro-batches to EXACTLY the
-        # batch answer (stateless suite), so it shares row_suite's oracle
-        "stream_suite": _ROW_SUITE_ORACLE,
-        "suggest_constraints": _suggest_oracle(
-            ["conv_id", "role", "text", "tool"], ["turn_idx"], max_domain=10
-        ),
-        # keep-earliest = ROW_NUMBER over (doc_id, start); splice = token
-        # anti-join against the span coverage set; all-removed docs must
-        # yield '' (COALESCE), NULL-text docs NULL — matching the Spark
-        # array_join/filter semantics exactly
-        "span_dedup": with_docs(
-            """
-            , t AS (SELECT doc_id, text, string_split(text, ' ') AS w FROM docs),
-            g AS (
-              SELECT doc_id, unnest(range(0, len(w) - 8 + 1)) AS s, w
-              FROM t WHERE text IS NOT NULL AND len(w) >= 8
-            ),
-            k AS (
-              SELECT doc_id, s,
-                     md5(array_to_string(w[s + 1:s + 8], ' ')) AS key
-              FROM g
-            ),
-            r AS (
-              SELECT doc_id, s,
-                     ROW_NUMBER() OVER (PARTITION BY key ORDER BY doc_id, s) AS rn
-              FROM k
-            ),
-            dup AS (SELECT doc_id, s FROM r WHERE rn > 1),
-            tok AS (
-              SELECT doc_id, unnest(range(0, len(w))) AS i, w
-              FROM t WHERE text IS NOT NULL
-            ),
-            cov AS (
-              SELECT DISTINCT tok.doc_id, tok.i
-              FROM tok JOIN dup d
-                ON d.doc_id = tok.doc_id AND tok.i >= d.s AND tok.i < d.s + 8
-            ),
-            per AS (
-              SELECT tok.doc_id,
-                     CAST(COUNT(*) AS BIGINT) AS ntok,
-                     CAST(COUNT(*) FILTER (WHERE cov.i IS NOT NULL) AS BIGINT) AS nrem,
-                     COALESCE(
-                       string_agg(tok.w[tok.i + 1], ' ' ORDER BY tok.i)
-                         FILTER (WHERE cov.i IS NULL),
-                       '') AS clean
-              FROM tok LEFT JOIN cov
-                ON cov.doc_id = tok.doc_id AND cov.i = tok.i
-              GROUP BY 1
-            ),
-            ds AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS ng FROM dup GROUP BY 1)
-            SELECT t.doc_id,
-                   COALESCE(p.ntok, 0) AS n_tokens,
-                   COALESCE(ds.ng, 0) AS n_dup_grams,
-                   COALESCE(p.nrem, 0) AS n_removed,
-                   CASE WHEN t.text IS NULL THEN NULL ELSE p.clean END AS text_clean
-            FROM t LEFT JOIN per p USING (doc_id) LEFT JOIN ds USING (doc_id)
-            """
-        ),
-        "rate_anomaly": _RATE_ANOMALY_ORACLE,
-        # the streaming control chart must concatenate micro-batches to
-        # EXACTLY the batch closed form (pytest-pinned), so it shares the
-        # batch oracle
-        "stream_rate_anomaly": _RATE_ANOMALY_ORACLE,
-        # bigram add-k LM trained on the en reference sub-corpus; CASTs keep
-        # the smoothed ratios in DOUBLE (decimal literals would otherwise
-        # promote the division to DECIMAL)
-        "ngram_perplexity": with_docs(
-            """
-            , base AS (
-              SELECT doc_id, text, (lang = 'en') AS is_ref,
-                     string_split(text, ' ') AS w
-              FROM docs
-            ),
-            refbg AS (
-              SELECT w[i + 1] AS w1, w[i + 2] AS w2
-              FROM (
-                SELECT w, unnest(range(0, len(w) - 1)) AS i
-                FROM base WHERE is_ref AND text IS NOT NULL AND len(w) >= 2
-              ) s
-            ),
-            bg AS (SELECT w1, w2, COUNT(*) AS c12 FROM refbg GROUP BY 1, 2),
-            ctx AS (SELECT w1, SUM(c12) AS c1 FROM bg GROUP BY 1),
-            voc AS (
-              SELECT CAST(COUNT(DISTINCT tok) AS DOUBLE) AS v
-              FROM (SELECT unnest(w) AS tok FROM base
-                    WHERE is_ref AND text IS NOT NULL) t
-            ),
-            docbg AS (
-              SELECT doc_id, w[i + 1] AS w1, w[i + 2] AS w2
-              FROM (
-                SELECT doc_id, w, unnest(range(0, len(w) - 1)) AS i
-                FROM base WHERE text IS NOT NULL AND len(w) >= 2
-              ) s
-            ),
-            sc AS (
-              SELECT d.doc_id,
-                     LOG2(
-                       (CAST(COALESCE(bg.c12, 0) AS DOUBLE) + 0.1)
-                       / (CAST(COALESCE(ctx.c1, 0) AS DOUBLE)
-                          + 0.1 * (voc.v + 1.0))
-                     ) AS lp
-              FROM docbg d
-              LEFT JOIN bg ON bg.w1 = d.w1 AND bg.w2 = d.w2
-              LEFT JOIN ctx ON ctx.w1 = d.w1
-              CROSS JOIN voc
-            ),
-            per AS (
-              SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-                     ROUND(POW(2.0, -AVG(lp)), 4) AS ppl
-              FROM sc GROUP BY 1
-            )
-            SELECT b.doc_id, b.is_ref,
-                   COALESCE(p.n_bigrams, 0) AS n_bigrams, p.ppl
-            FROM base b LEFT JOIN per p USING (doc_id)
-            """
-        ),
-        # full construction replay of SemDeDup: sampled-centroid cells,
-        # argmin assignment (ties -> lowest cell), within-cell pairs,
-        # keep-earliest flag
-        "semdedup": with_vecs(
-            f"""
-            , cent AS (
-              SELECT cell, ce FROM (
-                SELECT e AS ce,
-                       ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cell
-                FROM vecs) c
-              WHERE cell < 8
-            ),
-            assigned AS (
-              SELECT vec_id, e, CAST(cell AS INTEGER) AS cell FROM (
-                SELECT v.vec_id, v.e, c.cell,
-                       ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                          ORDER BY list_distance(v.e, c.ce), c.cell) AS rn
-                FROM vecs v CROSS JOIN cent c) a
-              WHERE rn = 1
-            ),
-            dupc AS (
-              SELECT b.vec_id AS vid, CAST(COUNT(*) AS BIGINT) AS n
-              FROM assigned a JOIN assigned b
-                ON a.cell = b.cell AND a.vec_id < b.vec_id
-              WHERE ROUND({_COSINE_SQL.format(a='a.e', b='b.e')}, 6) >= 0.85
-              GROUP BY 1
-            )
-            SELECT a.vec_id, a.cell,
-                   COALESCE(d.n, 0) AS n_dup_earlier,
-                   (COALESCE(d.n, 0) = 0) AS keep
-            FROM assigned a LEFT JOIN dupc d ON d.vid = a.vec_id
-            """
-        ),
-        # hashed unigram+bigram Laplace-smoothed log-likelihood ratio;
-        # CASTs keep every ratio in DOUBLE (DuckDB decimal literals would
-        # otherwise promote the division to DECIMAL)
-        "dsir_weights": with_docs(
-            """
-            , base AS (
-              SELECT doc_id, text, (lang = 'en') AS is_target,
-                     string_split(text, ' ') AS w
-              FROM docs
-            ),
-            uni AS (
-              SELECT doc_id, is_target, unnest(w) AS g
-              FROM base WHERE text IS NOT NULL
-            ),
-            bi AS (
-              SELECT doc_id, is_target, array_to_string(w[i + 1:i + 2], ' ') AS g
-              FROM (
-                SELECT doc_id, is_target, w,
-                       unnest(range(0, len(w) - 1)) AS i
-                FROM base WHERE text IS NOT NULL AND len(w) >= 2
-              ) s
-            ),
-            occ AS (
-              SELECT doc_id, is_target,
-                     CAST(('0x' || substr(md5(g), 1, 15)) AS BIGINT) % 4096 AS b
-              FROM (SELECT * FROM uni UNION ALL SELECT * FROM bi) u
-            ),
-            bc AS (
-              SELECT b,
-                     COUNT(*) FILTER (WHERE is_target) AS ct,
-                     COUNT(*) FILTER (WHERE NOT is_target) AS cr
-              FROM occ GROUP BY 1
-            ),
-            tot AS (
-              SELECT CAST(SUM(ct) AS DOUBLE) AS tt,
-                     CAST(SUM(cr) AS DOUBLE) AS tr
-              FROM bc
-            ),
-            lw AS (
-              SELECT b,
-                     LN((CAST(ct AS DOUBLE) + 1.0) / (tt + 1.0 * 4096))
-                     - LN((CAST(cr AS DOUBLE) + 1.0) / (tr + 1.0 * 4096)) AS lwt
-              FROM bc CROSS JOIN tot
-            ),
-            per AS (
-              SELECT occ.doc_id,
-                     CAST(COUNT(*) AS BIGINT) AS n_grams,
-                     ROUND(SUM(lw.lwt), 4) AS logratio
-              FROM occ JOIN lw ON lw.b = occ.b
-              GROUP BY 1
-            )
-            SELECT d.doc_id, d.is_target,
-                   COALESCE(p.n_grams, 0) AS n_grams,
-                   p.logratio
-            FROM base d LEFT JOIN per p USING (doc_id)
-            """
-        ),
-        "violation_examples": _EXAMPLES_ORACLE,
-        "skew_report": with_transcripts(
-            """
-            , tot AS (SELECT CAST(COUNT(*) AS DOUBLE) AS t FROM transcripts)
-            , c1 AS (
-              SELECT COALESCE(CAST(conv_id AS VARCHAR), '<NULL>') AS value,
-                     COUNT(*) AS n
-              FROM transcripts GROUP BY 1
-            )
-            , c2 AS (
-              SELECT COALESCE(CAST(role AS VARCHAR), '<NULL>') AS value,
-                     COUNT(*) AS n
-              FROM transcripts GROUP BY 1
-            )
-            , k1 AS (
-              SELECT 'conv_id' AS key, value,
-                     CAST(ROW_NUMBER() OVER (ORDER BY n DESC, value ASC) AS INT)
-                       AS rnk,
-                     CAST(n AS BIGINT) AS n,
-                     ROUND(n / tot.t, 4) AS share,
-                     (SELECT CAST(COUNT(*) AS BIGINT) FROM c1) AS n_distinct
-              FROM c1, tot ORDER BY n DESC, value ASC LIMIT 5
-            )
-            , k2 AS (
-              SELECT 'role' AS key, value,
-                     CAST(ROW_NUMBER() OVER (ORDER BY n DESC, value ASC) AS INT)
-                       AS rnk,
-                     CAST(n AS BIGINT) AS n,
-                     ROUND(n / tot.t, 4) AS share,
-                     (SELECT CAST(COUNT(*) AS BIGINT) FROM c2) AS n_distinct
-              FROM c2, tot ORDER BY n DESC, value ASC LIMIT 5
-            )
-            SELECT * FROM k1 UNION ALL SELECT * FROM k2
-            """
-        ),
-        # closed form of the per-doc WAV parameters q_audio_meta built the
-        # payloads from; doc_id % 10 == 3 payloads are truncated -> ok=false
-        "audio_meta": with_docs(
-            """
-            SELECT doc_id AS media_id,
-                   CASE WHEN doc_id % 10 = 3 THEN NULL
-                        WHEN doc_id % 3 = 0 THEN 8000
-                        WHEN doc_id % 3 = 1 THEN 16000
-                        ELSE 44100 END AS sample_rate,
-                   CASE WHEN doc_id % 10 = 3 THEN NULL
-                        ELSE CAST(doc_id % 2 + 1 AS INT) END AS channels,
-                   CASE WHEN doc_id % 10 = 3 THEN NULL ELSE 16 END AS bits,
-                   CASE WHEN doc_id % 10 = 3 THEN NULL
-                        ELSE CAST(doc_id % 50 + 10 AS BIGINT) END AS n_samples,
-                   CASE WHEN doc_id % 10 = 3 THEN NULL
-                        ELSE ROUND((doc_id % 50 + 10) * 1.0 /
-                          (CASE WHEN doc_id % 3 = 0 THEN 8000
-                                WHEN doc_id % 3 = 1 THEN 16000
-                                ELSE 44100 END), 6) END AS duration_s,
-                   doc_id % 10 <> 3 AS ok
-            FROM docs
-            """
-        ),
-        "violation_trend": with_transcripts(
-            "SELECT CAST(ts AS DATE) AS day, path, code, CAST(COUNT(*) AS BIGINT) AS n "
-            "FROM (\n"
-            + "\nUNION ALL\n".join(
-                f"SELECT ts, '{p}' AS path, '{c}' AS code FROM transcripts WHERE {w}"
-                for p, c, w in _FAIL_CONDS
-            )
-            + "\n) v GROUP BY 1, 2, 3"
-        ),
-        "valid_turns": with_transcripts(
-            f"SELECT role, COUNT(*) AS n_valid FROM transcripts WHERE ({_NF_EXPR}) = 0 GROUP BY role"
-        ),
-        "verdict": with_transcripts(
-            f"""
-            SELECT CAST(ts AS DATE) AS part_date,
-                   COUNT(*) AS rows_scanned,
-                   CAST(SUM(CASE WHEN nf > 0 THEN 1 ELSE 0 END) AS BIGINT) AS rows_with_violations,
-                   CAST(SUM(nf) AS BIGINT) AS violations,
-                   {len(_FAIL_CONDS)} AS constraints_evaluated,
-                   (SUM(nf) = 0) AS is_pass
-            FROM (SELECT ts, ({_NF_EXPR}) AS nf FROM transcripts) f
-            GROUP BY 1
-            """
-        ),
-        "uniqueness": with_transcripts(
-            "SELECT conv_id, turn_idx, COUNT(*) AS n_dups FROM transcripts "
-            "GROUP BY conv_id, turn_idx HAVING COUNT(*) > 1"
-        ),
-        "referential": with_transcripts(
-            "SELECT conv_id, turn_idx, tool FROM transcripts "
-            "WHERE tool IS NOT NULL AND tool NOT IN (SELECT tool FROM tool_catalog)"
-        ),
-        "ordering": with_transcripts(
-            """
-            SELECT conv_id, turn_idx, ts, prev_ts FROM (
-              SELECT conv_id, turn_idx, ts,
-                     LAG(turn_idx) OVER w AS prev_idx,
-                     LAG(ts) OVER w AS prev_ts
-              FROM transcripts
-              WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx, ts)
-            ) x
-            WHERE prev_idx IS NOT NULL AND turn_idx > prev_idx AND ts < prev_ts
-            """
-        ),
-        "column_profile": with_transcripts(
-            "\nUNION ALL\n".join(
-                f"SELECT '{c}' AS col_name, COUNT(*) AS n_rows, "
-                f"CAST(SUM(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls, "
-                f"ROUND(CAST(SUM(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*), 4) AS null_rate, "
-                f"COUNT(DISTINCT {c}) AS n_distinct FROM transcripts"
-                for c in ["conv_id", "turn_idx", "role", "text", "tool"]
-            )
-        ),
-        "text_len_quantiles": with_transcripts(
-            "SELECT "
-            + ", ".join(
-                f"ROUND(quantile_cont(length(text), {q}), 4) AS q{int(q * 100)}"
-                for q in [0.25, 0.5, 0.75, 0.95]
-            )
-            + " FROM transcripts WHERE text IS NOT NULL"
-        ),
-        # t-digest is approximate by construction, so the oracle pins the
-        # PUBLISHED ACCURACY BOUND rather than value equality: n_vals must
-        # equal the table's exact non-null count and every rank-error
-        # boolean (computed distributed on the Spark side) must be TRUE.
-        "tdigest": with_transcripts(
-            "SELECT CAST(COUNT(*) AS BIGINT) AS n_vals,"
-            " TRUE AS q25_ok, TRUE AS q50_ok, TRUE AS q75_ok, TRUE AS q95_ok"
-            " FROM transcripts WHERE text IS NOT NULL"
-        ),
-        # HLL sketch binaries aren't DuckDB-reproducible; the oracle pins the
-        # exactly-reproducible companions (partition count, exact distinct)
-        # and the PUBLISHED ACCURACY BOUND as a Spark-side boolean (estimate
-        # within 5% ≈ 3σ of lg_k=12's 1.6% RSE) that must read TRUE.
-        "hll_rollup": with_transcripts(
-            "SELECT CAST(COUNT(DISTINCT CAST(ts AS DATE)) AS BIGINT) AS n_parts,"
-            " CAST(COUNT(DISTINCT conv_id) AS BIGINT) AS exact_distinct,"
-            " TRUE AS within_err FROM transcripts"
-        ),
-        "conv_flow": with_transcripts(
-            f"""
-            , w AS (
-              SELECT conv_id, turn_idx, role,
-                     LAG(role) OVER ({_FLOW_W}) AS prev_role,
-                     ROW_NUMBER() OVER ({_FLOW_W}) AS rn
-              FROM transcripts
-            )
-            SELECT conv_id, turn_idx, role, code FROM (
-              SELECT conv_id, turn_idx, role, 'conversation_start' AS code
-              FROM w WHERE rn = 1 AND role NOT IN ('system', 'user')
-              UNION ALL
-              SELECT conv_id, turn_idx, role, 'consecutive_same_role'
-              FROM w WHERE prev_role IS NOT NULL AND role = prev_role
-              UNION ALL
-              SELECT conv_id, turn_idx, role, 'orphan_tool_turn'
-              FROM w WHERE role = 'tool'
-                    AND (prev_role IS NULL OR prev_role <> 'assistant')
-            ) v
-            """
-        ),
-        "chi2_drift": with_transcripts(
-            f"""
-            , m AS ({_MID_SQL})
-            , c AS (
-              SELECT role AS cat,
-                     SUM(CASE WHEN CAST(FLOOR(epoch(ts)) AS BIGINT) < (SELECT mid FROM m)
-                              THEN 1 ELSE 0 END) AS na,
-                     SUM(CASE WHEN CAST(FLOOR(epoch(ts)) AS BIGINT) >= (SELECT mid FROM m)
-                              THEN 1 ELSE 0 END) AS nb
-              FROM transcripts WHERE role IS NOT NULL GROUP BY 1
-            ), tot AS (SELECT SUM(na) AS ta, SUM(nb) AS tb, SUM(na) + SUM(nb) AS t FROM c)
-            SELECT ROUND(SUM(
-                     POWER(na - (na + nb) * ta * 1.0 / t, 2) / ((na + nb) * ta * 1.0 / t)
-                   + POWER(nb - (na + nb) * tb * 1.0 / t, 2) / ((na + nb) * tb * 1.0 / t)
-                   ), 4) AS chi2,
-                   CAST(COUNT(*) - 1 AS BIGINT) AS dof
-            FROM c CROSS JOIN tot
-            """
-        ),
-        "w1_by_day": with_transcripts(
-            """
-            , per AS (
-              SELECT CAST(ts AS DATE) AS grp,
-                     LEAST(GREATEST(CAST(FLOOR(length(text) / 25.0) AS INT), 0), 19) AS bucket,
-                     COUNT(*) AS n
-              FROM transcripts WHERE text IS NOT NULL GROUP BY 1, 2
-            ), gbase AS (SELECT bucket, SUM(n) AS gn FROM per GROUP BY 1),
-            tg AS (SELECT grp, SUM(n) AS tg FROM per GROUP BY 1),
-            tot AS (SELECT SUM(n) AS t FROM per),
-            spine AS (SELECT unnest(range(0, 20)) AS bucket),
-            grid AS (SELECT tg.grp, tg.tg, s.bucket FROM tg CROSS JOIN spine s),
-            j AS (
-              SELECT g.grp, g.tg, g.bucket,
-                     COALESCE(gb.gn, 0) AS gn, COALESCE(per.n, 0) AS n
-              FROM grid g LEFT JOIN gbase gb ON gb.bucket = g.bucket
-                          LEFT JOIN per ON per.grp = g.grp AND per.bucket = g.bucket
-            ),
-            c AS (
-              SELECT grp, tg,
-                     SUM(n) OVER (PARTITION BY grp ORDER BY bucket) AS cn,
-                     SUM(gn) OVER (PARTITION BY grp ORDER BY bucket) AS cg
-              FROM j
-            )
-            SELECT grp AS part_date, CAST(MIN(tg) AS BIGINT) AS n_rows,
-                   ROUND(SUM(ABS(cn * 1.0 / tg - cg * 1.0 / (SELECT t FROM tot))) * 25.0, 4) AS w1
-            FROM c GROUP BY grp
-            """
-        ),
-        "rolling_rate": with_transcripts(
-            f"""
-            SELECT day, n_rows, n_viol,
-                   ROUND(n_viol * 1.0 / n_rows, 6) AS rate,
-                   ROUND(SUM(n_viol) OVER w * 1.0 / SUM(n_rows) OVER w, 6) AS rolling_rate
-            FROM (
-              SELECT CAST(ts AS DATE) AS day,
-                     CAST(COUNT(*) AS BIGINT) AS n_rows,
-                     CAST(SUM(CASE WHEN ({_NF_EXPR}) > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_viol
-              FROM transcripts GROUP BY 1
-            ) d
-            WINDOW w AS (ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-            """
-        ),
-        "mad_outliers": with_transcripts(
-            f"""
-            , base AS (
-              SELECT CAST(ts AS DATE) AS grp, length(text) AS x
-              FROM transcripts WHERE text IS NOT NULL
-            ),
-            med AS (SELECT grp, quantile_cont(x, 0.5) AS m FROM base GROUP BY 1),
-            mad AS (
-              SELECT b.grp, quantile_cont(ABS(b.x - m.m), 0.5) AS d
-              FROM base b JOIN med m ON b.grp = m.grp GROUP BY b.grp
-            )
-            SELECT b.grp AS part_date,
-                   CAST(COUNT(*) AS BIGINT) AS n_rows,
-                   ROUND(MIN(m.m), 4) AS med,
-                   ROUND(MIN(d.d), 4) AS mad,
-                   CAST(SUM(CASE WHEN ABS(b.x - m.m) > {3 * 1.4826!r} * d.d
-                            THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
-                   ROUND(SUM(CASE WHEN ABS(b.x - m.m) > {3 * 1.4826!r} * d.d
-                             THEN 1 ELSE 0 END) * 1.0 / COUNT(*), 4) AS outlier_rate
-            FROM base b JOIN med m ON b.grp = m.grp JOIN mad d ON b.grp = d.grp
-            GROUP BY 1
-            """
-        ),
-        "tfidf_top_terms": with_docs(
-            """
-            , toks AS (
-              SELECT doc_id AS doc, unnest(string_split(text, ' ')) AS term
-              FROM docs WHERE text IS NOT NULL
-            ),
-            tf AS (SELECT doc, term, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
-            dfq AS (SELECT term, COUNT(*) AS df_t FROM tf GROUP BY 1),
-            nd AS (SELECT COUNT(DISTINCT doc_id) AS n_docs FROM docs WHERE text IS NOT NULL)
-            SELECT doc AS doc_id, term, CAST(tf AS BIGINT) AS tf, score,
-                   CAST(rnk AS BIGINT) AS rnk
-            FROM (
-              SELECT tf.doc, tf.term, tf.tf,
-                     ROUND(tf.tf * LN(nd.n_docs * 1.0 / dfq.df_t), 4) AS score,
-                     ROW_NUMBER() OVER (
-                       PARTITION BY tf.doc
-                       ORDER BY ROUND(tf.tf * LN(nd.n_docs * 1.0 / dfq.df_t), 4) DESC,
-                                tf.term ASC
-                     ) AS rnk
-              FROM tf JOIN dfq USING (term) CROSS JOIN nd
-            ) r WHERE rnk <= 3
-            """
-        ),
-        "embedding_contamination": with_vecs(
-            f"""
-            , tagged AS (
-              SELECT vec_id, e,
-                     CASE WHEN CAST(('0x' || substr(md5('split' || '|' || CAST(vec_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 80
-                          THEN 0 ELSE 1 END AS side
-              FROM vecs
-            )
-            SELECT id_a, id_b, sim FROM (
-              SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                     ROUND({_COSINE_SQL.format(a='a.e', b='b.e')}, 6) AS sim
-              FROM tagged a JOIN tagged b ON a.side = 0 AND b.side = 1
-            ) p WHERE sim >= 0.8
-            """
-        ),
-        "dataset_checks": with_transcripts(
-            """
-            , agg AS (
-              SELECT
-                ROUND(AVG(CASE WHEN text IS NOT NULL THEN 1.0 ELSE 0.0 END), 4) AS m_text_comp,
-                ROUND(AVG(CASE WHEN tool IS NOT NULL THEN 1.0 ELSE 0.0 END), 4) AS m_tool_comp,
-                ROUND(
-                  COUNT(DISTINCT CASE WHEN conv_id IS NOT NULL AND turn_idx IS NOT NULL
-                                      THEN conv_id || '|' || CAST(turn_idx AS VARCHAR) END)
-                  * 1.0 / COUNT(*), 4) AS m_uniq,
-                ROUND(AVG(CASE WHEN role IN ('system','user','assistant','tool')
-                               THEN 1.0 ELSE 0.0 END), 4) AS m_role,
-                ROUND(CAST(MAX(length(text)) AS DOUBLE), 4) AS m_maxlen,
-                ROUND(CAST(COUNT(*) AS DOUBLE), 4) AS m_rows
-              FROM transcripts
-            ),
-            stacked AS (
-              SELECT 'text_completeness' AS check_name, m_text_comp AS metric_value,
-                     '>=' AS op, 0.99 AS threshold FROM agg
-              UNION ALL SELECT 'tool_completeness', m_tool_comp, '>=', 0.5 FROM agg
-              UNION ALL SELECT 'key_uniqueness', m_uniq, '>=', 1.0 FROM agg
-              UNION ALL SELECT 'role_compliance', m_role, '>=', 0.98 FROM agg
-              UNION ALL SELECT 'max_text_len', m_maxlen, '<=', 20000.0 FROM agg
-              UNION ALL SELECT 'row_count', m_rows, '>=', 100.0 FROM agg
-            )
-            SELECT check_name, metric_value, op, CAST(threshold AS DOUBLE) AS threshold,
-                   CASE WHEN (op = '>=' AND metric_value >= threshold)
-                          OR (op = '<=' AND metric_value <= threshold)
-                        THEN 'pass' ELSE 'fail' END AS status
-            FROM stacked
-            """
-        ),
-        "context_budget": with_transcripts(
-            """
-            , tok AS (
-              SELECT conv_id, turn_idx, role, ts,
-                     COALESCE(text, '') AS t0, COALESCE(tool, '') AS o0,
-                     CASE WHEN text IS NULL THEN 0
-                          ELSE length(string_split(text, ' ')) END AS n_tokens
-              FROM transcripts
-            )
-            SELECT conv_id, turn_idx, role,
-                   CAST(n_tokens AS BIGINT) AS n_tokens,
-                   CAST(cum_tokens AS BIGINT) AS cum_tokens
-            FROM (
-              SELECT conv_id, turn_idx, role, n_tokens,
-                     SUM(n_tokens) OVER (
-                       PARTITION BY conv_id
-                       ORDER BY turn_idx, ts, role, t0, o0
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                     ) AS cum_tokens
-              FROM tok
-            ) x WHERE cum_tokens > 128
-            """
-        ),
-        "turn_loops": with_transcripts(
-            """
-            SELECT conv_id,
-                   md5(lower(trim(text))) AS text_digest,
-                   CAST(COUNT(*) AS BIGINT) AS n_repeats,
-                   MIN(turn_idx) AS first_turn,
-                   MAX(turn_idx) AS last_turn
-            FROM transcripts
-            WHERE text IS NOT NULL AND trim(text) <> ''
-            GROUP BY 1, 2
-            HAVING COUNT(*) >= 2
-            """
-        ),
-        "freq_items": with_transcripts(
-            """
-            , toks AS (
-              SELECT unnest(string_split(text, ' ')) AS item
-              FROM transcripts WHERE text IS NOT NULL
-            )
-            SELECT item, CAST(COUNT(*) AS BIGINT) AS est_count,
-                   CAST(0 AS BIGINT) AS err_bound
-            FROM toks GROUP BY 1
-            ORDER BY est_count DESC, item ASC LIMIT 10
-            """
-        ),
-        # moments: recompute Σ(x-μ)^k DIRECTLY on the raw rows — the
-        # independent spec the Chan-merged per-day sketches must equal
-        "moments": with_transcripts(
-            """
-            , vals AS (
-              SELECT CAST(length(text) AS DOUBLE) AS v, CAST(ts AS DATE) AS day
-              FROM transcripts WHERE text IS NOT NULL
-            )
-            , s AS (
-              SELECT COUNT(*) AS n, AVG(v) AS mu, COUNT(DISTINCT day) AS p
-              FROM vals
-            )
-            , c AS (
-              SELECT SUM(POW(v - mu, 2)) AS m2,
-                     SUM(POW(v - mu, 3)) AS m3,
-                     SUM(POW(v - mu, 4)) AS m4
-              FROM vals, s
-            )
-            SELECT CAST(s.p AS BIGINT) AS n_parts,
-                   CAST(s.n AS BIGINT) AS n_values,
-                   ROUND(s.mu, 4) AS mean,
-                   ROUND(c.m2 / s.n, 4) AS var_pop,
-                   ROUND(CASE WHEN c.m2 > 0
-                              THEN SQRT(s.n) * c.m3 / POW(c.m2, 1.5)
-                              ELSE 0 END, 4) AS skew,
-                   ROUND(CASE WHEN c.m2 > 0
-                              THEN s.n * c.m4 / (c.m2 * c.m2) - 3
-                              ELSE 0 END, 4) AS kurt
-            FROM s, c
-            """
-        ),
-        "fd_check": with_transcripts(
-            """
-            , k1 AS (
-              SELECT conv_id, turn_idx, COUNT(DISTINCT role) AS n_rhs,
-                     COUNT(*) AS n_rows
-              FROM transcripts GROUP BY 1, 2
-            )
-            , k2 AS (
-              SELECT conv_id, turn_idx, COUNT(DISTINCT text) AS n_rhs,
-                     COUNT(*) AS n_rows
-              FROM transcripts GROUP BY 1, 2
-            )
-            , k3 AS (
-              SELECT tool, COUNT(DISTINCT role) AS n_rhs, COUNT(*) AS n_rows
-              FROM transcripts GROUP BY 1
-            )
-            SELECT 'conv_id,turn_idx->role' AS fd,
-                   CAST(COUNT(*) AS BIGINT) AS n_keys,
-                   CAST(SUM(CASE WHEN n_rhs > 1 THEN 1 ELSE 0 END) AS BIGINT)
-                     AS violating_keys,
-                   CAST(SUM(CASE WHEN n_rhs > 1 THEN n_rows ELSE 0 END) AS BIGINT)
-                     AS violating_rows,
-                   ROUND(AVG(CASE WHEN n_rhs > 1 THEN 1.0 ELSE 0.0 END), 4)
-                     AS violation_rate
-            FROM k1
-            UNION ALL
-            SELECT 'conv_id,turn_idx->text',
-                   CAST(COUNT(*) AS BIGINT),
-                   CAST(SUM(CASE WHEN n_rhs > 1 THEN 1 ELSE 0 END) AS BIGINT),
-                   CAST(SUM(CASE WHEN n_rhs > 1 THEN n_rows ELSE 0 END) AS BIGINT),
-                   ROUND(AVG(CASE WHEN n_rhs > 1 THEN 1.0 ELSE 0.0 END), 4)
-            FROM k2
-            UNION ALL
-            SELECT 'tool->role',
-                   CAST(COUNT(*) AS BIGINT),
-                   CAST(SUM(CASE WHEN n_rhs > 1 THEN 1 ELSE 0 END) AS BIGINT),
-                   CAST(SUM(CASE WHEN n_rhs > 1 THEN n_rows ELSE 0 END) AS BIGINT),
-                   ROUND(AVG(CASE WHEN n_rhs > 1 THEN 1.0 ELSE 0.0 END), 4)
-            FROM k3
-            """
-        ),
-        "benford": with_docs(
-            """
-            , pos AS (
-              SELECT CAST(n_chars AS BIGINT) AS v FROM docs WHERE n_chars > 0
-            )
-            , a AS (
-              SELECT CAST(substr(CAST(v AS VARCHAR), 1, 1) AS INT) AS digit,
-                     COUNT(*) AS n
-              FROM pos GROUP BY 1
-            )
-            , spine AS (SELECT UNNEST(range(1, 10)) AS digit)
-            , fa AS (
-              SELECT spine.digit, COALESCE(a.n, 0) AS n
-              FROM spine LEFT JOIN a ON a.digit = spine.digit
-            )
-            , t AS (SELECT CAST(SUM(n) AS DOUBLE) AS tot FROM fa)
-            , e AS (
-              SELECT digit, n, n / tot AS obs_p,
-                     LOG10(1 + 1.0 / digit) AS exp_p, tot
-              FROM fa, t
-            )
-            SELECT digit, CAST(n AS BIGINT) AS n,
-                   ROUND(obs_p, 4) AS obs_p,
-                   ROUND(exp_p, 4) AS exp_p,
-                   ROUND((SELECT SUM(POW(n2.n - n2.tot * n2.exp_p, 2)
-                                     / (n2.tot * n2.exp_p)) FROM e n2), 4) AS chi2
-            FROM e
-            """
-        ),
-        "top_ngram": with_docs(
-            """
-            , g AS (
-              SELECT doc_id AS id, length(text) AS chars,
-                     unnest([w[i] || ' ' || w[i + 1]
-                             for i in range(1, len(w))]) AS ngram
-              FROM (SELECT doc_id, text, string_split(text, ' ') AS w FROM docs)
-              WHERE text IS NOT NULL AND len(w) >= 2
-            )
-            , c AS (
-              SELECT id, ngram, COUNT(*) AS n_occurrences, MAX(chars) AS chars
-              FROM g GROUP BY 1, 2
-            )
-            SELECT id, ngram AS top_ngram,
-                   CAST(n_occurrences AS BIGINT) AS n_occurrences,
-                   ROUND(LEAST(1.0, n_occurrences * length(ngram) * 1.0 / chars), 4)
-                     AS char_frac
-            FROM (
-              SELECT *, ROW_NUMBER() OVER (
-                PARTITION BY id ORDER BY n_occurrences DESC, ngram ASC) AS rk
-              FROM c
-            ) x WHERE rk = 1
-            """
-        ),
-        "chi2_by_day": with_transcripts(
-            """
-            , per AS (
-              SELECT CAST(ts AS DATE) AS day, role AS cat, COUNT(*) AS n
-              FROM transcripts WHERE role IS NOT NULL GROUP BY 1, 2
-            )
-            , gl AS (SELECT cat, SUM(n) AS gn FROM per GROUP BY 1)
-            , tg AS (SELECT day, SUM(n) AS tgn FROM per GROUP BY 1)
-            , tot AS (
-              SELECT CAST(SUM(n) AS DOUBLE) AS t, COUNT(DISTINCT cat) AS k
-              FROM per
-            )
-            , grid AS (
-              SELECT tg.day, CAST(tg.tgn AS DOUBLE) AS tgn, gl.cat,
-                     CAST(gl.gn AS DOUBLE) AS gn
-              FROM tg CROSS JOIN gl
-            )
-            , j AS (
-              SELECT g.day, g.tgn, g.gn,
-                     CAST(COALESCE(per.n, 0) AS DOUBLE) AS n, tot.t, tot.k
-              FROM grid g
-              LEFT JOIN per ON per.day = g.day AND per.cat = g.cat
-              CROSS JOIN tot
-            )
-            SELECT day, CAST(tgn AS BIGINT) AS n_rows,
-                   ROUND(SUM(
-                     POW(n - (n + gn) * tgn / (tgn + t), 2)
-                       / ((n + gn) * tgn / (tgn + t))
-                     + POW(gn - (n + gn) * t / (tgn + t), 2)
-                       / ((n + gn) * t / (tgn + t))
-                   ), 4) AS chi2,
-                   CAST(MAX(k) - 1 AS BIGINT) AS dof
-            FROM j GROUP BY day, tgn
-            """
-        ),
-        "zipf": with_docs(
-            """
-            , counts AS (
-              SELECT token, COUNT(*) AS freq FROM (
-                SELECT unnest(string_split(text, ' ')) AS token
-                FROM docs WHERE text IS NOT NULL
-              ) GROUP BY 1 HAVING COUNT(*) >= 2
-              ORDER BY freq DESC, token ASC LIMIT 500
-            )
-            , xy AS (
-              SELECT LN(CAST(ROW_NUMBER() OVER (
-                       ORDER BY freq DESC, token ASC) AS DOUBLE)) AS x,
-                     LN(CAST(freq AS DOUBLE)) AS y
-              FROM counts
-            )
-            SELECT CAST(COUNT(*) AS BIGINT) AS n_types,
-                   ROUND(COVAR_POP(x, y) / VAR_POP(x), 4) AS slope,
-                   ROUND(POW(CORR(x, y), 2), 4) AS r_squared
-            FROM xy
-            """
-        ),
-        "dup_ngrams": with_docs(
-            """
-            , g AS (
-              SELECT doc_id AS id, length(text) AS chars,
-                     unnest([w[i] || ' ' || w[i + 1] || ' ' || w[i + 2]
-                             for i in range(1, len(w) - 1)]) AS ngram
-              FROM (SELECT doc_id, text, string_split(text, ' ') AS w FROM docs)
-              WHERE text IS NOT NULL AND len(w) >= 3
-            )
-            , c AS (
-              SELECT id, ngram, COUNT(*) AS c, MAX(chars) AS chars
-              FROM g GROUP BY 1, 2
-            )
-            SELECT id, CAST(COUNT(*) AS BIGINT) AS n_dup_ngrams,
-                   ROUND(LEAST(1.0, SUM(c * length(ngram)) * 1.0 / MAX(chars)), 4)
-                     AS dup_char_frac
-            FROM c WHERE c >= 2 GROUP BY id
-            """
-        ),
-        "pmi": with_docs(
-            """
-            , uni AS (
-              SELECT w, COUNT(*) AS cw FROM (
-                SELECT unnest(string_split(text, ' ')) AS w
-                FROM docs WHERE text IS NOT NULL
-              ) GROUP BY 1
-            )
-            , bi_all AS (
-              SELECT bigram, COUNT(*) AS n_ab FROM (
-                SELECT unnest([w[i] || ' ' || w[i + 1]
-                               for i in range(1, len(w))]) AS bigram
-                FROM (SELECT string_split(text, ' ') AS w
-                      FROM docs WHERE text IS NOT NULL)
-                WHERE len(w) >= 2
-              ) GROUP BY 1
-            )
-            , nw AS (SELECT CAST(SUM(cw) AS DOUBLE) AS nw FROM uni)
-            , nb AS (SELECT CAST(SUM(n_ab) AS DOUBLE) AS nb FROM bi_all)
-            , scored AS (
-              SELECT b.bigram, b.n_ab,
-                     LN((b.n_ab / nb.nb)
-                        / ((ua.cw / nw.nw) * (ub.cw / nw.nw))) AS pmi_raw
-              FROM bi_all b
-              JOIN uni ua ON ua.w = string_split(b.bigram, ' ')[1]
-              JOIN uni ub ON ub.w = string_split(b.bigram, ' ')[2]
-              CROSS JOIN nw CROSS JOIN nb
-              WHERE b.n_ab >= 5
-            )
-            SELECT bigram, CAST(n_ab AS BIGINT) AS n_ab,
-                   ROUND(pmi_raw, 4) AS pmi
-            FROM scored ORDER BY pmi DESC, bigram ASC LIMIT 20
-            """
-        ),
-        "vocab_growth": with_transcripts(
-            """
-            , toks AS (
-              SELECT CAST(ts AS DATE) AS day,
-                     unnest(string_split(text, ' ')) AS token
-              FROM transcripts WHERE text IS NOT NULL
-            )
-            , daily AS (SELECT day, COUNT(*) AS tokens FROM toks GROUP BY 1)
-            , fst AS (SELECT token, MIN(day) AS day FROM toks GROUP BY 1)
-            , nw AS (SELECT day, COUNT(*) AS new_tokens FROM fst GROUP BY 1)
-            SELECT d.day, CAST(d.tokens AS BIGINT) AS tokens,
-                   CAST(COALESCE(nw.new_tokens, 0) AS BIGINT) AS new_tokens,
-                   CAST(SUM(COALESCE(nw.new_tokens, 0)) OVER (
-                     ORDER BY d.day
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                   ) AS BIGINT) AS vocab_size
-            FROM daily d LEFT JOIN nw ON nw.day = d.day
-            """
-        ),
-        "weighted_sample": with_docs(
-            """
-            , keyed AS (
-              SELECT doc_id AS id, CAST(n_chars AS DOUBLE) AS weight,
-                     POW(
-                       (CAST(('0x' || substr(md5('ws' || '|' ||
-                          CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) + 1)
-                         / 1152921504606846977.0,
-                       1.0 / CAST(n_chars AS DOUBLE)
-                     ) AS key
-              FROM docs WHERE n_chars > 0
-            )
-            SELECT id, weight,
-                   CAST(ROW_NUMBER() OVER (ORDER BY key DESC, id ASC) AS INT)
-                     AS rnk
-            FROM keyed ORDER BY key DESC, id ASC LIMIT 100
-            """
-        ),
-        "embedding_health": """
-            WITH h AS (
-              SELECT embedding AS v,
-                     CASE WHEN embedding IS NULL THEN 1 ELSE 0 END AS _null,
-                     CASE WHEN embedding IS NOT NULL AND len(embedding) <> 64
-                          THEN 1 ELSE 0 END AS _wd,
-                     CASE WHEN embedding IS NOT NULL AND len(list_filter(
-                            embedding, x -> isnan(CAST(x AS DOUBLE)))) > 0
-                          THEN 1 ELSE 0 END AS _nan,
-                     CASE WHEN embedding IS NOT NULL AND len(list_filter(
-                            embedding, x -> x IS NULL)) > 0
-                          THEN 1 ELSE 0 END AS _nc,
-                     SQRT(list_sum(list_transform(embedding,
-                            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS _n
-              FROM embeddings
-            ),
-            f AS (
-              SELECT _null, _wd, _nan, _nc,
-                     CASE WHEN _null = 0 AND _wd = 0 AND _nan = 0 AND _nc = 0
-                          AND _n = 0 THEN 1 ELSE 0 END AS _zero,
-                     CASE WHEN _null = 0 AND _wd = 0 AND _nan = 0 AND _nc = 0
-                          AND _n > 0 THEN _n END AS _norm
-              FROM h
-            )
-            SELECT CAST(COUNT(*) AS BIGINT) AS n_vecs,
-                   CAST(SUM(_null) AS BIGINT) AS n_null,
-                   CAST(SUM(_wd) AS BIGINT) AS n_wrong_dim,
-                   CAST(SUM(_nan) AS BIGINT) AS n_nan,
-                   CAST(SUM(_nc) AS BIGINT) AS n_null_comp,
-                   CAST(SUM(_zero) AS BIGINT) AS n_zero,
-                   ROUND(AVG(_norm), 4) AS mean_norm,
-                   ROUND(MIN(_norm), 4) AS min_norm,
-                   ROUND(MAX(_norm), 4) AS max_norm
-            FROM f
-            """,
-        "cvm_drift": with_transcripts(
-            f"""
-            , m AS ({_MID_SQL})
-            , ha AS ({_HIST_SQL.format(op='<')})
-            , hb AS ({_HIST_SQL.format(op='>=')})
-            , j AS (
-              SELECT COALESCE(ha.bucket, hb.bucket) AS bucket,
-                     COALESCE(ha.n, 0) AS na, COALESCE(hb.n, 0) AS nb
-              FROM ha FULL OUTER JOIN hb ON ha.bucket = hb.bucket
-            )
-            SELECT ROUND(SUM(w * (fa - fb) * (fa - fb)), 6) AS cvm FROM (
-              SELECT (na + nb) * 1.0
-                       / ((SELECT SUM(na) FROM j) + (SELECT SUM(nb) FROM j)) AS w,
-                     SUM(na) OVER (ORDER BY bucket) * 1.0
-                       / (SELECT SUM(na) FROM j) AS fa,
-                     SUM(nb) OVER (ORDER BY bucket) * 1.0
-                       / (SELECT SUM(nb) FROM j) AS fb
-              FROM j
-            ) t
-            """
-        ),
-        "psi_drift": with_transcripts(
-            f"""
-            , m AS ({_MID_SQL})
-            , ha AS ({_HIST_SQL.format(op='<')})
-            , hb AS ({_HIST_SQL.format(op='>=')})
-            , j AS (
-              SELECT COALESCE(ha.bucket, hb.bucket) AS bucket,
-                     COALESCE(ha.n, 0) AS na, COALESCE(hb.n, 0) AS nb
-              FROM ha FULL OUTER JOIN hb ON ha.bucket = hb.bucket
-            )
-            SELECT ROUND(SUM((p - q) * LN(p / q)), 4) AS psi FROM (
-              SELECT GREATEST(na * 1.0 / (SELECT SUM(na) FROM j), 1e-6) AS p,
-                     GREATEST(nb * 1.0 / (SELECT SUM(nb) FROM j), 1e-6) AS q
-              FROM j
-            ) t
-            """
-        ),
-        "js_drift": with_transcripts(
-            f"""
-            , m AS ({_MID_SQL})
-            , ha AS ({_HIST_SQL.format(op='<')})
-            , hb AS ({_HIST_SQL.format(op='>=')})
-            , j AS (
-              SELECT COALESCE(ha.bucket, hb.bucket) AS bucket,
-                     COALESCE(ha.n, 0) AS na, COALESCE(hb.n, 0) AS nb
-              FROM ha FULL OUTER JOIN hb ON ha.bucket = hb.bucket
-            )
-            SELECT ROUND(SUM(0.5 * p * LN(p / ((p + q) / 2))
-                           + 0.5 * q * LN(q / ((p + q) / 2))), 4) AS js FROM (
-              SELECT GREATEST(na * 1.0 / (SELECT SUM(na) FROM j), 1e-6) AS p,
-                     GREATEST(nb * 1.0 / (SELECT SUM(nb) FROM j), 1e-6) AS q
-              FROM j
-            ) t
-            """
-        ),
-        "w1_drift": with_transcripts(
-            f"""
-            , m AS ({_MID_SQL})
-            , ha AS ({_HIST_SQL.format(op='<')})
-            , hb AS ({_HIST_SQL.format(op='>=')})
-            , grid AS (SELECT unnest(range(0, 20)) AS bucket)
-            , j AS (
-              SELECT grid.bucket,
-                     COALESCE(ha.n, 0) AS na, COALESCE(hb.n, 0) AS nb
-              FROM grid LEFT JOIN ha ON ha.bucket = grid.bucket
-                        LEFT JOIN hb ON hb.bucket = grid.bucket
-            )
-            SELECT ROUND(SUM(ABS(ca * 1.0 / (SELECT SUM(na) FROM j)
-                               - cb * 1.0 / (SELECT SUM(nb) FROM j))) * 10.0, 4) AS w1
-            FROM (
-              SELECT SUM(na) OVER (ORDER BY bucket) AS ca,
-                     SUM(nb) OVER (ORDER BY bucket) AS cb
-              FROM j
-            ) t
-            """
-        ),
-        "ks_drift": with_transcripts(
-            f"""
-            , m AS ({_MID_SQL})
-            , ha AS ({_HIST_SQL.format(op='<')})
-            , hb AS ({_HIST_SQL.format(op='>=')})
-            , j AS (
-              SELECT COALESCE(ha.bucket, hb.bucket) AS bucket,
-                     COALESCE(ha.n, 0) AS na, COALESCE(hb.n, 0) AS nb
-              FROM ha FULL OUTER JOIN hb ON ha.bucket = hb.bucket
-            )
-            SELECT ROUND(MAX(ABS(ca * 1.0 / (SELECT SUM(na) FROM j)
-                               - cb * 1.0 / (SELECT SUM(nb) FROM j))), 4) AS ks
-            FROM (
-              SELECT SUM(na) OVER (ORDER BY bucket) AS ca,
-                     SUM(nb) OVER (ORDER BY bucket) AS cb
-              FROM j
-            ) t
-            """
-        ),
-        "ts_gap_psi": _gap_drift_oracle(_PSI_FROM_J),
-        "ts_gap_ks": _gap_drift_oracle(_KS_FROM_J),
-        "nested_suite": with_transcripts(
-            f"""
-            SELECT conv_id, turn_idx, ts, path, code FROM (
-              SELECT conv_id, turn_idx, ts, 'meta' AS path,
-                     'metaRequired' AS code
-              FROM transcripts WHERE role IS NULL AND tool IS NULL
-              UNION ALL
-              SELECT conv_id, turn_idx, ts, 'meta.role', 'roleRequired'
-              FROM transcripts
-              WHERE NOT (role IS NULL AND tool IS NULL) AND role IS NULL
-              UNION ALL
-              SELECT conv_id, turn_idx, ts, 'meta.role', 'roleEnum'
-              FROM transcripts
-              WHERE role IS NOT NULL AND role NOT IN ({_ROLES_SQL})
-              UNION ALL
-              SELECT conv_id, turn_idx, ts, 'meta.tool', 'toolFormat'
-              FROM transcripts
-              WHERE tool IS NOT NULL
-                AND NOT regexp_matches(tool, '^tool_[0-9]+$')
-              UNION ALL
-              -- post-gate parent check: reached only when no child branch
-              -- refuted (roleRequired needs role IS NULL, impossible here)
-              SELECT conv_id, turn_idx, ts, 'meta', 'toolOnToolRole'
-              FROM transcripts WHERE role = 'tool' AND tool IS NULL
-            ) v
-            """
-        ),
-        "quantiles_by_day": with_transcripts(
-            """
-            SELECT CAST(ts AS DATE) AS part_date,
-                   ROUND(quantile_cont(length(text), 0.5), 4) AS q50,
-                   ROUND(quantile_cont(length(text), 0.95), 4) AS q95
-            FROM transcripts WHERE text IS NOT NULL GROUP BY 1
-            """
-        ),
-        "psi_by_day": with_transcripts(
-            """
-            , per AS (
-              SELECT CAST(ts AS DATE) AS grp,
-                     LEAST(GREATEST(CAST(FLOOR(length(text) / 25.0) AS INT), 0), 19) AS bucket,
-                     COUNT(*) AS n
-              FROM transcripts WHERE text IS NOT NULL GROUP BY 1, 2
-            ), gbase AS (SELECT bucket, SUM(n) AS gn FROM per GROUP BY 1),
-            tg AS (SELECT grp, SUM(n) AS tg FROM per GROUP BY 1),
-            tot AS (SELECT SUM(n) AS t FROM per),
-            grid AS (SELECT tg.grp, tg.tg, gbase.bucket, gbase.gn FROM tg CROSS JOIN gbase),
-            j AS (
-              SELECT g.grp, g.tg, g.gn, COALESCE(per.n, 0) AS n
-              FROM grid g LEFT JOIN per ON per.grp = g.grp AND per.bucket = g.bucket
-            )
-            SELECT grp AS part_date, CAST(MIN(tg) AS BIGINT) AS n_rows,
-                   ROUND(SUM((GREATEST(n * 1.0 / tg, 0.000001) - GREATEST(gn * 1.0 / t, 0.000001))
-                             * LN(GREATEST(n * 1.0 / tg, 0.000001)
-                                  / GREATEST(gn * 1.0 / t, 0.000001))), 4) AS psi
-            FROM j CROSS JOIN tot GROUP BY grp
-            """
-        ),
-        "js_by_day": with_transcripts(
-            """
-            , per AS (
-              SELECT CAST(ts AS DATE) AS grp,
-                     LEAST(GREATEST(CAST(FLOOR(length(text) / 25.0) AS INT), 0), 19) AS bucket,
-                     COUNT(*) AS n
-              FROM transcripts WHERE text IS NOT NULL GROUP BY 1, 2
-            ), gbase AS (SELECT bucket, SUM(n) AS gn FROM per GROUP BY 1),
-            tg AS (SELECT grp, SUM(n) AS tg FROM per GROUP BY 1),
-            tot AS (SELECT SUM(n) AS t FROM per),
-            grid AS (SELECT tg.grp, tg.tg, gbase.bucket, gbase.gn FROM tg CROSS JOIN gbase),
-            j AS (
-              SELECT g.grp, g.tg, g.gn, COALESCE(per.n, 0) AS n
-              FROM grid g LEFT JOIN per ON per.grp = g.grp AND per.bucket = g.bucket
-            ), pq AS (
-              SELECT grp, tg,
-                     GREATEST(n * 1.0 / tg, 0.000001) AS p,
-                     GREATEST(gn * 1.0 / t, 0.000001) AS q
-              FROM j CROSS JOIN tot
-            )
-            SELECT grp AS part_date, CAST(MIN(tg) AS BIGINT) AS n_rows,
-                   ROUND(SUM(0.5 * p * LN(p / ((p + q) / 2))
-                           + 0.5 * q * LN(q / ((p + q) / 2))), 4) AS js
-            FROM pq GROUP BY grp
-            """
-        ),
-        "ks_by_day": with_transcripts(
-            """
-            , per AS (
-              SELECT CAST(ts AS DATE) AS grp,
-                     LEAST(GREATEST(CAST(FLOOR(length(text) / 25.0) AS INT), 0), 19) AS bucket,
-                     COUNT(*) AS n
-              FROM transcripts WHERE text IS NOT NULL GROUP BY 1, 2
-            ), gbase AS (SELECT bucket, SUM(n) AS gn FROM per GROUP BY 1),
-            tg AS (SELECT grp, SUM(n) AS tg FROM per GROUP BY 1),
-            tot AS (SELECT SUM(n) AS t FROM per),
-            grid AS (SELECT tg.grp, tg.tg, gbase.bucket, gbase.gn FROM tg CROSS JOIN gbase),
-            j AS (
-              SELECT g.grp, g.tg, g.bucket, g.gn, COALESCE(per.n, 0) AS n
-              FROM grid g LEFT JOIN per ON per.grp = g.grp AND per.bucket = g.bucket
-            ), c AS (
-              SELECT grp, tg,
-                     SUM(n) OVER (PARTITION BY grp ORDER BY bucket
-                                  ROWS UNBOUNDED PRECEDING) AS cn,
-                     SUM(gn) OVER (PARTITION BY grp ORDER BY bucket
-                                   ROWS UNBOUNDED PRECEDING) AS cgn
-              FROM j
-            )
-            SELECT grp AS part_date, CAST(MIN(tg) AS BIGINT) AS n_rows,
-                   ROUND(MAX(ABS(cn * 1.0 / tg - cgn * 1.0 / (SELECT t FROM tot))), 4) AS ks
-            FROM c GROUP BY grp
-            """
-        ),
-        "each_nested": with_transcripts(
-            f"""
-            , ranked AS (
-              SELECT conv_id, role, turn_idx,
-                     ROW_NUMBER() OVER (
-                       PARTITION BY conv_id
-                       ORDER BY turn_idx ASC NULLS FIRST, role ASC NULLS FIRST
-                     ) AS rn
-              FROM transcripts
-            )
-            SELECT conv_id, path, code FROM (
-              SELECT conv_id,
-                     'turns.[' || CAST(rn - 1 AS VARCHAR) || '].role' AS path,
-                     'roleRequired' AS code
-              FROM ranked WHERE role IS NULL
-              UNION ALL
-              SELECT conv_id,
-                     'turns.[' || CAST(rn - 1 AS VARCHAR) || '].role',
-                     'roleEnum'
-              FROM ranked
-              WHERE role IS NOT NULL AND role NOT IN ({_ROLES_SQL})
-              UNION ALL
-              SELECT conv_id,
-                     'turns.[' || CAST(rn - 1 AS VARCHAR) || '].turn_idx',
-                     'turnIdxNonNegative'
-              FROM ranked WHERE turn_idx IS NOT NULL AND turn_idx < 0
-            ) v
-            """
-        ),
-        "each_indexed": with_transcripts(
-            """
-            , ranked AS (
-              SELECT conv_id, role, turn_idx,
-                     ROW_NUMBER() OVER (
-                       PARTITION BY conv_id
-                       ORDER BY turn_idx ASC NULLS FIRST, role ASC NULLS FIRST
-                     ) AS rn
-              FROM transcripts
-            )
-            SELECT conv_id, path, code FROM (
-              SELECT conv_id, 'turns.[0].role' AS path,
-                     'firstMustBeSystem' AS code
-              FROM ranked
-              WHERE rn = 1 AND role IS NOT NULL AND role <> 'system'
-              UNION ALL
-              SELECT conv_id,
-                     'turns.[' || CAST(rn - 1 AS VARCHAR) || '].turn_idx',
-                     'turnIdxMatchesPosition'
-              FROM ranked WHERE turn_idx IS NOT NULL AND turn_idx < rn - 1
-            ) v
-            """
-        ),
-        "element_suite": with_transcripts(
-            """
-            SELECT conv_id, turn_idx, ts,
-                   'words.[' || CAST(i - 1 AS VARCHAR) || ']' AS path,
-                   'word_too_long' AS code
-            FROM (
-              SELECT conv_id, turn_idx, ts, w,
-                     unnest(range(1, len(w) + 1)) AS i
-              FROM (
-                SELECT conv_id, turn_idx, ts, string_split(text, ' ') AS w
-                FROM transcripts WHERE text IS NOT NULL
-              ) b
-            ) x
-            WHERE length(w[i]) > 6
-            """
-        ),
-        "conv_stats": with_transcripts(
-            "SELECT conv_id, COUNT(*) AS n_turns, MAX(turn_idx) AS max_turn, "
-            "COUNT(DISTINCT role) AS n_roles, "
-            "ROUND(AVG(length(text)), 4) AS mean_len "
-            "FROM transcripts GROUP BY conv_id"
-        ),
-        "minmax": with_transcripts(
-            "SELECT 'turn_idx' AS col_name, CAST(MIN(turn_idx) AS DOUBLE) AS min_value, "
-            "CAST(MAX(turn_idx) AS DOUBLE) AS max_value FROM transcripts "
-            "UNION ALL "
-            "SELECT 'text_len', CAST(MIN(length(text)) AS DOUBLE), "
-            "CAST(MAX(length(text)) AS DOUBLE) FROM transcripts"
-        ),
-        # independent spec of the as-of semantics (correlated subquery — the
-        # obviously-correct form, deliberately NOT the union/window shape the
-        # Spark operator uses, so a shared bug can't hide)
-        # asof_salted is output-identical to asof_join (parity-fuzzed in
-        # tests/test_round4_ops.py); both share the correlated-subquery spec
-        "asof_salted": (
-            "SELECT l.event_id, "
-            "  (SELECT r.event_id FROM events r WHERE r.user_id = l.user_id "
-            "     AND r.event_type = 'click' AND r.ts <= l.ts "
-            "   ORDER BY r.ts DESC, r.event_id DESC LIMIT 1) AS prev_click_id, "
-            "  (SELECT date_diff('microsecond', r.ts, l.ts) FROM events r "
-            "   WHERE r.user_id = l.user_id AND r.event_type = 'click' "
-            "     AND r.ts <= l.ts "
-            "   ORDER BY r.ts DESC, r.event_id DESC LIMIT 1) AS gap_us "
-            "FROM events l WHERE l.event_type = 'error'"
-        ),
-        "asof_join": (
-            "SELECT l.event_id, "
-            "  (SELECT r.event_id FROM events r WHERE r.user_id = l.user_id "
-            "     AND r.event_type = 'click' AND r.ts <= l.ts "
-            "   ORDER BY r.ts DESC, r.event_id DESC LIMIT 1) AS prev_click_id, "
-            "  (SELECT date_diff('microsecond', r.ts, l.ts) FROM events r "
-            "   WHERE r.user_id = l.user_id AND r.event_type = 'click' "
-            "     AND r.ts <= l.ts "
-            "   ORDER BY r.ts DESC, r.event_id DESC LIMIT 1) AS gap_us "
-            "FROM events l WHERE l.event_type = 'error'"
-        ),
-        "sessionize_salted": (
-            """
-            WITH g AS (
-              SELECT user_id, ts, event_id,
-                     date_diff('microsecond', LAG(ts) OVER w, ts) AS gap_us
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-            ), m AS (
-              SELECT user_id, ts, event_id,
-                     CASE WHEN gap_us IS NULL OR gap_us > 1800 * 1000000
-                          THEN 1 ELSE 0 END AS is_new
-              FROM g
-            ), s AS (
-              SELECT user_id, ts,
-                     CAST(SUM(is_new) OVER (PARTITION BY user_id
-                          ORDER BY ts, event_id
-                          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_no
-              FROM m
-            )
-            SELECT user_id, session_no, COUNT(*) AS n_events,
-                   MIN(ts) AS session_start, MAX(ts) AS session_end,
-                   date_diff('microsecond', MIN(ts), MAX(ts)) AS duration_us
-            FROM s GROUP BY user_id, session_no
-            """
-        ),
-        "sessionize": (
-            """
-            WITH g AS (
-              SELECT user_id, ts, event_id,
-                     date_diff('microsecond', LAG(ts) OVER w, ts) AS gap_us
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-            ), m AS (
-              SELECT user_id, ts, event_id,
-                     CASE WHEN gap_us IS NULL OR gap_us > 1800 * 1000000
-                          THEN 1 ELSE 0 END AS is_new
-              FROM g
-            ), s AS (
-              SELECT user_id, ts,
-                     CAST(SUM(is_new) OVER (PARTITION BY user_id
-                          ORDER BY ts, event_id
-                          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_no
-              FROM m
-            )
-            SELECT user_id, session_no, COUNT(*) AS n_events,
-                   MIN(ts) AS session_start, MAX(ts) AS session_end,
-                   date_diff('microsecond', MIN(ts), MAX(ts)) AS duration_us
-            FROM s GROUP BY user_id, session_no
-            """
-        ),
-        # independent spec: a plain correlated BETWEEN join — the obviously-
-        # correct O(n*m) form the bucketed operator must reproduce exactly
-        "interval_join": (
-            "SELECT p.event_id AS purchase_id, "
-            "CAST(COUNT(c.event_id) AS BIGINT) AS n_clicks_1h "
-            "FROM events p LEFT JOIN events c "
-            "  ON c.user_id = p.user_id AND c.event_type = 'click' "
-            "  AND c.ts >= p.ts AND c.ts <= p.ts + INTERVAL 1 HOUR "
-            "WHERE p.event_type = 'purchase' "
-            "GROUP BY p.event_id"
-        ),
-        "time_rollup": (
-            "SELECT COALESCE(CAST(CAST(date_trunc('day', ts) AS DATE) AS VARCHAR), '(all)') AS day, "
-            "COALESCE(event_type, '(all)') AS event_type, "
-            "CAST(GROUPING(CAST(date_trunc('day', ts) AS DATE), event_type) AS BIGINT) AS grp_id, "
-            "COUNT(*) AS n_events, ROUND(SUM(value), 2) AS total_value "
-            "FROM events "
-            "GROUP BY ROLLUP(CAST(date_trunc('day', ts) AS DATE), event_type)"
-        ),
-        # independent spec: plain per-stratum ROW_NUMBER (the obviously-
-        # correct form) — the Spark operator's hash-threshold prefilter must
-        # be lossless for this to match
-        "stratified_sample": with_docs(
-            "SELECT lang, doc_id, rnk FROM ("
-            "  SELECT lang, doc_id, ROW_NUMBER() OVER ("
-            "    PARTITION BY lang ORDER BY "
-            "    CAST(('0x' || substr(md5('strat' || '|' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT), "
-            "    doc_id) AS rnk"
-            "  FROM docs"
-            ") WHERE rnk <= 20"
-        ),
-        "redact_pii": with_transcripts(
-            "SELECT conv_id, turn_idx, "
-            "regexp_replace(regexp_replace(text, "
-            "'[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'), "
-            "'[0-9]+', '<NUM>', 'g') AS clean_text, "
-            "CAST(COALESCE(len(regexp_extract_all(text, "
-            "'[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}')), 0) AS BIGINT) AS n_emails, "
-            "CAST(COALESCE(len(regexp_extract_all(text, '[0-9]+')), 0) AS BIGINT) AS n_nums "
-            "FROM transcripts"
-        ),
-        # independent spec of the greedy packing recurrence: row-at-a-time
-        # recursive CTE (DuckDB-only; WITH RECURSIVE can't be composed via
-        # with_transcripts, so the transcripts CTE is inlined)
-        "pack_windows_bpe": (
-            "WITH RECURSIVE transcripts AS ("
-            + transcripts_cte()
-            + "), t AS ("
-            "  SELECT conv_id, turn_idx, "
-            f"    {_bpe} AS n_tokens, "
-            "    ROW_NUMBER() OVER (PARTITION BY conv_id "
-            "                       ORDER BY turn_idx, coalesce(text, '')) AS rn "
-            "  FROM transcripts"
-            "), r AS ("
-            "  SELECT conv_id, rn, turn_idx, n_tokens, 1 AS chunk_id, "
-            "         n_tokens AS acc FROM t WHERE rn = 1 "
-            "  UNION ALL "
-            "  SELECT t.conv_id, t.rn, t.turn_idx, t.n_tokens, "
-            "    CASE WHEN r.acc > 0 AND r.acc + t.n_tokens > 64 "
-            "         THEN r.chunk_id + 1 ELSE r.chunk_id END, "
-            "    CASE WHEN r.acc > 0 AND r.acc + t.n_tokens > 64 "
-            "         THEN t.n_tokens ELSE r.acc + t.n_tokens END "
-            "  FROM r JOIN t ON t.conv_id = r.conv_id AND t.rn = r.rn + 1"
-            ") "
-            "SELECT conv_id, CAST(rn AS BIGINT) AS rn, turn_idx, "
-            "  CAST(n_tokens AS BIGINT) AS n_tokens, "
-            "  CAST(chunk_id AS BIGINT) AS chunk_id FROM r"
-        ),
-        "pack_windows": (
-            "WITH RECURSIVE transcripts AS ("
-            + transcripts_cte()
-            + "), t AS ("
-            "  SELECT conv_id, turn_idx, "
-            "    CASE WHEN text IS NULL THEN 0 "
-            "         ELSE len(string_split(text, ' ')) END AS n_tokens, "
-            "    ROW_NUMBER() OVER (PARTITION BY conv_id "
-            "                       ORDER BY turn_idx, coalesce(text, '')) AS rn "
-            "  FROM transcripts"
-            "), r AS ("
-            "  SELECT conv_id, rn, turn_idx, n_tokens, 1 AS chunk_id, "
-            "         n_tokens AS acc FROM t WHERE rn = 1 "
-            "  UNION ALL "
-            "  SELECT t.conv_id, t.rn, t.turn_idx, t.n_tokens, "
-            "    CASE WHEN r.acc > 0 AND r.acc + t.n_tokens > 64 "
-            "         THEN r.chunk_id + 1 ELSE r.chunk_id END, "
-            "    CASE WHEN r.acc > 0 AND r.acc + t.n_tokens > 64 "
-            "         THEN t.n_tokens ELSE r.acc + t.n_tokens END "
-            "  FROM r JOIN t ON t.conv_id = r.conv_id AND t.rn = r.rn + 1"
-            ") "
-            "SELECT conv_id, CAST(rn AS BIGINT) AS rn, turn_idx, "
-            "  CAST(n_tokens AS BIGINT) AS n_tokens, "
-            "  CAST(chunk_id AS BIGINT) AS chunk_id FROM r"
-        ),
-        # composed end-to-end pipeline: replay all four stages sequentially
-        # — curate CTE (gates + exact keep-first), all-pairs exact-Jaccard
-        # keep-earliest drop set (quadratic — the obviously-correct form the
-        # LSH path must equal), md5 split+shard grouping, recursive-CTE
-        # packing recurrence with the BPE count as the budget unit
-        "pipeline_e2e": (
-            "WITH RECURSIVE docs AS ("
-            + _DOCS_SQL
-            + "), cur AS ("
-            "  SELECT doc_id, text FROM ("
-            "    SELECT doc_id, text, "
-            "      ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS krn "
-            "    FROM docs "
-            "    WHERE lang = 'en' "
-            "      AND len(string_split(text, ' ')) BETWEEN 10 AND 500 "
-            "      AND length(regexp_replace(text, '[^a-z]', '', 'g')) * 1.0 "
-            "          / length(text) >= 0.5"
-            "  ) k WHERE krn = 1"
-            "), d AS ("
-            "  SELECT doc_id, "
-            "         list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] "
-            "                        for i in range(1, len(w) - 1)]) AS sh "
-            "  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM cur) "
-            "  WHERE len(w) >= 3"
-            "), dropped AS ("
-            "  SELECT DISTINCT id_b AS doc_id FROM ("
-            "    SELECT b.doc_id AS id_b, "
-            "           len(list_intersect(a.sh, b.sh)) * 1.0 / "
-            "           (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS sim "
-            "    FROM d a JOIN d b ON a.doc_id < b.doc_id"
-            "  ) p WHERE sim >= 0.8"
-            "), kept AS ("
-            "  SELECT doc_id, text, "
-            "    (CASE WHEN CAST(('0x' || substr(md5('split' || '|' || "
-            "          CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 90 "
-            "          THEN 'train' ELSE 'test' END) || '|' || "
-            "    CAST(CAST(('0x' || substr(md5('shard' || '|' || "
-            "         CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 8 AS VARCHAR) "
-            "    AS pack_group "
-            "  FROM cur WHERE doc_id NOT IN (SELECT doc_id FROM dropped)"
-            "), t AS ("
-            "  SELECT pack_group, doc_id, "
-            f"    {_bpe} AS n_bpe, "
-            "    ROW_NUMBER() OVER (PARTITION BY pack_group "
-            "                       ORDER BY doc_id, coalesce(text, '')) AS rn "
-            "  FROM kept"
-            "), r AS ("
-            "  SELECT pack_group, rn, doc_id, n_bpe, 1 AS chunk_id, "
-            "         n_bpe AS acc FROM t WHERE rn = 1 "
-            "  UNION ALL "
-            "  SELECT t.pack_group, t.rn, t.doc_id, t.n_bpe, "
-            "    CASE WHEN r.acc > 0 AND r.acc + t.n_bpe > 2048 "
-            "         THEN r.chunk_id + 1 ELSE r.chunk_id END, "
-            "    CASE WHEN r.acc > 0 AND r.acc + t.n_bpe > 2048 "
-            "         THEN t.n_bpe ELSE r.acc + t.n_bpe END "
-            "  FROM r JOIN t ON t.pack_group = r.pack_group AND t.rn = r.rn + 1"
-            ") "
-            "SELECT pack_group, doc_id, CAST(rn AS BIGINT) AS rn, "
-            "  CAST(n_bpe AS BIGINT) AS n_bpe, "
-            "  CAST(chunk_id AS BIGINT) AS chunk_id FROM r"
-        ),
-        # independent spec: naive all-pairs cross-corpus Jaccard (the
-        # obviously-correct O(n*m) form the prefix-filtered join must equal)
-        "contamination_pairs": with_docs(
-            """
-            , d AS (
-              SELECT doc_id,
-                     list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                                    for i in range(1, len(w) - 1)]) AS sh
-              FROM (SELECT doc_id, string_split(text, ' ') AS w FROM docs)
-              WHERE len(w) >= 3
-            )
-            SELECT train_id, eval_id, sim FROM (
-              SELECT a.doc_id AS train_id, b.doc_id AS eval_id,
-                     ROUND(len(list_intersect(a.sh, b.sh)) * 1.0 /
-                           (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) AS sim
-              FROM d a JOIN d b
-                ON a.doc_id % 10 != 3 AND b.doc_id % 10 = 3
-            ) p WHERE sim >= 0.8
-            """
-        ),
-        "ngram_containment": with_docs(
-            """
-            , tg AS (
-              SELECT DISTINCT unnest([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                                      for i in range(1, len(w) - 1)]) AS g
-              FROM (SELECT doc_id, string_split(text, ' ') AS w FROM docs
-                    WHERE doc_id % 10 != 3)
-              WHERE len(w) >= 3
-            ), eg AS (
-              SELECT doc_id,
-                     unnest(list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                                           for i in range(1, len(w) - 1)])) AS g
-              FROM (SELECT doc_id, string_split(text, ' ') AS w FROM docs
-                    WHERE doc_id % 10 = 3)
-              WHERE len(w) >= 3
-            )
-            SELECT eg.doc_id AS eval_id, CAST(COUNT(*) AS BIGINT) AS n_grams,
-                   CAST(COUNT(tg.g) AS BIGINT) AS n_hit,
-                   ROUND(COUNT(tg.g) * 1.0 / COUNT(*), 4) AS containment
-            FROM eg LEFT JOIN tg ON eg.g = tg.g
-            GROUP BY eg.doc_id
-            """
-        ),
-        "corpus_curate": with_docs(
-            "SELECT doc_id, "
-            "CASE WHEN CAST(('0x' || substr(md5('split' || '|' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) "
-            "     % 100 < 90 THEN 'train' ELSE 'test' END AS split "
-            "FROM ("
-            "  SELECT doc_id, "
-            "    ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn "
-            "  FROM docs "
-            "  WHERE lang = 'en' "
-            "    AND len(string_split(text, ' ')) BETWEEN 10 AND 500 "
-            "    AND length(regexp_replace(text, '[^a-z]', '', 'g')) * 1.0 "
-            "        / length(text) >= 0.5"
-            ") k WHERE rn = 1"
-        ),
-        "repetition": with_docs(
-            "SELECT doc_id, "
-            "CAST(len(g) AS BIGINT) AS n_grams, "
-            "CAST(len(list_distinct(g)) AS BIGINT) AS n_distinct, "
-            "ROUND(CASE WHEN len(g) = 0 THEN 0.0 "
-            "      ELSE 1.0 - len(list_distinct(g)) * 1.0 / len(g) END, 4) AS rep_ratio "
-            "FROM ("
-            "  SELECT doc_id, "
-            "    CASE WHEN len(w) >= 2 "
-            "         THEN [w[i] || ' ' || w[i+1] for i in range(1, len(w))] "
-            "         ELSE [] END AS g "
-            "  FROM (SELECT doc_id, list_filter(string_split(text, ' '), "
-            "        x -> length(x) > 0) AS w FROM docs)"
-            ")"
-        ),
-        "conv_dedup": with_transcripts(
-            "SELECT conv_id, text_digest, flow_digest, "
-            "  CAST(COUNT(*) OVER (PARTITION BY text_digest) AS BIGINT) AS n_same_text, "
-            "  CAST(COUNT(*) OVER (PARTITION BY flow_digest) AS BIGINT) AS n_same_flow, "
-            "  MIN(conv_id) OVER (PARTITION BY text_digest) AS keep_conv_id "
-            "FROM ("
-            "  SELECT conv_id, "
-            "    md5(string_agg(coalesce(text, ''), chr(31) "
-            "        ORDER BY turn_idx, coalesce(text, ''))) AS text_digest, "
-            "    md5(string_agg(coalesce(role, '') || '|' || coalesce(tool, ''), chr(31) "
-            "        ORDER BY turn_idx, coalesce(role, '') || '|' || coalesce(tool, ''))) AS flow_digest "
-            "  FROM transcripts GROUP BY conv_id"
-            ") a"
-        ),
-        "q3_shipping": (
-            "SELECT l_orderkey, "
-            "ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue, "
-            "COUNT(*) AS n_items "
-            "FROM lineitem JOIN orders ON l_orderkey = o_orderkey "
-            "JOIN customer ON o_custkey = c_custkey "
-            "WHERE c_mktsegment = 'BUILDING' "
-            "GROUP BY l_orderkey ORDER BY revenue DESC, l_orderkey ASC LIMIT 10"
-        ),
-        "dedup_exact": with_docs(
-            "SELECT content_hash, n_dups, min_id FROM ("
-            "  SELECT md5(text) AS content_hash, COUNT(*) AS n_dups,"
-            "         MIN(doc_id) AS min_id FROM docs GROUP BY 1"
-            ") g WHERE n_dups > 1"
-        ),
-        "ngram_jaccard": with_docs(_JACCARD_ORACLE),
-        # independent spec: naive all-pairs containment (the obviously-
-        # correct O(n^2) form the asymmetric prefix-filtered join must
-        # equal); id_a is the contained (smaller-set) side
-        "containment_dedup": with_docs(
-            """
-, d AS (
-  SELECT doc_id,
-         list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                        for i in range(1, len(w) - 1)]) AS sh
-  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM docs)
-  WHERE len(w) >= 3
-)
-SELECT id_a, id_b, containment FROM (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         ROUND(len(list_intersect(a.sh, b.sh)) * 1.0 / len(a.sh), 6) AS containment
-  FROM d a JOIN d b ON (len(a.sh) < len(b.sh)
-       OR (len(a.sh) = len(b.sh) AND a.doc_id < b.doc_id))
-) p WHERE containment >= 0.8
-"""
-        ),
-        "dedup_apply": with_docs(
-            """
-            SELECT doc_id FROM (
-              SELECT doc_id,
-                     ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-              FROM docs
-            ) k WHERE rn = 1
-            """
-        ),
-        "dedup_components": _COMPONENTS_ORACLE,
-        "dup_stats": (
-            f"WITH comp AS ({_COMPONENTS_ORACLE})\n"
-            """
-            SELECT CAST(sz AS BIGINT) AS cluster_size,
-                   CAST(COUNT(*) AS BIGINT) AS n_clusters,
-                   CAST(SUM(sz) AS BIGINT) AS n_docs
-            FROM (SELECT component, COUNT(*) AS sz FROM comp GROUP BY 1) c
-            GROUP BY 1
-            """
-        ),
-        "sample_split": with_docs(
-            f"""
-            SELECT doc_id,
-                   CASE WHEN {_SPLIT_BUCKET_SQL} < 80 THEN 'train' ELSE 'test' END AS split
-            FROM docs
-            """
-        ),
-        # golden expectation: the pinned conformance verdict of THIS test
-        # input against the input_hint contract (conv_id nullable from the
-        # concat derivation; parquet ts is TIMESTAMP_NTZ -> type_mismatch)
-        "schema_report": (
-            "SELECT * FROM (VALUES "
-            "('conv_id', 'nullability', 'string', 'string'), "
-            "('turn_idx', 'ok', 'int', 'int'), "
-            "('role', 'ok', 'string', 'string'), "
-            "('text', 'ok', 'string', 'string'), "
-            "('tool', 'ok', 'string', 'string'), "
-            "('ts', 'type_mismatch', 'timestamp', 'timestamp_ntz')"
-            ") AS t(\"column\", status, expected_type, actual_type)"
-        ),
-        # independent spec: the naive single-window global rank the bucketed
-        # implementation must equal exactly
-        "global_shuffle": with_docs(
-            "SELECT doc_id, CAST(ROW_NUMBER() OVER (ORDER BY "
-            "CAST(('0x' || substr(md5('shuffle' || '|' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT), "
-            "doc_id) AS BIGINT) AS \"rank\" FROM docs"
-        ),
-        "mixture": with_docs(
-            ", a AS ("
-            "  SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS n_docs, "
-            "    CAST(SUM(CASE WHEN text IS NULL THEN 0 "
-            "             ELSE len(string_split(text, ' ')) END) AS BIGINT) AS n_tokens "
-            "  FROM docs GROUP BY lang, source"
-            ") "
-            "SELECT lang, source, n_docs, n_tokens, "
-            "  ROUND(n_tokens * 1.0 / SUM(n_tokens) OVER (), 6) AS token_share FROM a"
-        ),
-        # independent spec of deterministic upsampling: k = floor(f) +
-        # (hash below the fractional-part threshold), fanned via range()
-        "upsample": with_docs(
-            ", f AS ("
-            "  SELECT doc_id, lang, "
-            "    CAST(CASE lang WHEN 'fr' THEN 2.5 WHEN 'zh' THEN 1.25 "
-            "         ELSE 1.0 END AS DOUBLE) AS fac "
-            "  FROM docs"
-            "), k AS ("
-            "  SELECT doc_id, lang, CAST(FLOOR(fac) AS BIGINT) + "
-            "    CASE WHEN CAST(('0x' || substr(md5('upsample' || '|' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) "
-            "         < CAST(FLOOR(ROUND(fac - FLOOR(fac), 6) * 1152921504606846976.0) AS BIGINT) "
-            "    THEN 1 ELSE 0 END AS k "
-            "  FROM f"
-            ") "
-            "SELECT doc_id, lang, CAST(i AS BIGINT) AS copy_idx "
-            "FROM (SELECT doc_id, lang, unnest(range(1, k + 1)) AS i FROM k WHERE k > 0)"
-        ),
-        "encoding_quality": with_docs(
-            "SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars, "
-            "CAST(length(text) - length(regexp_replace(text, '�', '', 'g')) AS BIGINT) AS n_repl, "
-            "CAST(length(text) - length(regexp_replace(text, '[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f]', '', 'g')) AS BIGINT) AS n_ctrl, "
-            "CASE WHEN length(text) > 0 THEN "
-            "ROUND(length(regexp_replace(text, '[^\\x00-\\x7f]', '', 'g')) * 1.0 / length(text), 4) "
-            "END AS ascii_ratio FROM docs"
-        ),
-        # independent spec of deterministic quota sampling: same salted-md5
-        # threshold with floor semantics (Spark's double->bigint cast
-        # truncates; DuckDB CAST rounds, hence explicit FLOOR)
-        "quota_sample": with_docs(
-            "SELECT doc_id, lang FROM docs "
-            "WHERE CAST(('0x' || substr(md5('quota' || '|' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) "
-            "< CAST(FLOOR(ROUND(CAST(CASE lang WHEN 'en' THEN 0.5 WHEN 'zh' THEN 0.9 "
-            "ELSE 1.0 END AS DOUBLE), 6) * 1152921504606846976.0) AS BIGINT)"
-        ),
-        "temp_sample": with_docs(
-            ", g AS (SELECT lang, COUNT(*) AS n_g FROM docs GROUP BY lang)"
-            ", s AS (SELECT SUM(POW(CAST(n_g AS DOUBLE), 0.7)) AS wsum, "
-            "        SUM(n_g) AS n_total FROM g)"
-            ", r AS (SELECT lang, ROUND(LEAST(1.0, "
-            "    0.8 * n_total * POW(CAST(n_g AS DOUBLE), 0.7) / wsum / n_g"
-            "  ), 6) AS keep_rate FROM g, s) "
-            "SELECT d.doc_id, d.lang, r.keep_rate "
-            "FROM docs d JOIN r USING (lang) "
-            "WHERE CAST(('0x' || substr(md5('temp' || '|' || CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT) "
-            "< CAST(FLOOR(keep_rate * 1152921504606846976.0) AS BIGINT)"
-        ),
-        "vocab_stats": with_docs(
-            """
-            SELECT COUNT(DISTINCT doc_id) AS n_docs,
-                   COUNT(*) AS total_tokens,
-                   COUNT(DISTINCT w) AS vocab_size
-            FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM docs) t
-            WHERE length(w) > 0
-            """
-        ),
-        "top_words": with_docs(
-            f"""
-            SELECT w, COUNT(*) AS n
-            FROM (SELECT unnest(string_split(text, ' ')) AS w FROM docs) t
-            WHERE length(w) > 0 AND w NOT IN ({_STOPWORDS})
-            GROUP BY w ORDER BY n DESC, w ASC LIMIT 20
-            """
-        ),
-        "minhash_lsh": with_docs(_JACCARD_ORACLE),
-        "simhash": with_docs(_SIMHASH_ORACLE),
-        # independent spec of sliding-window chunking: DuckDB 1-based
-        # inclusive list slices over unnested start offsets (width 16,
-        # stride 8; docs with NULL text yield no chunks on both engines)
-        # independent spec of first-occurrence line dedup: 1-based list
-        # comprehension keeping positions where list_position == own index
-        "dedup_lines": with_docs(
-            ", d AS (SELECT doc_id, "
-            "string_split(replace(text, ' ', chr(10)), chr(10)) AS l FROM docs)"
-            ", k AS (SELECT doc_id, l, "
-            "[l[i] for i in range(1, len(l) + 1) if list_position(l, l[i]) = i] AS kept "
-            "FROM d) "
-            "SELECT doc_id, array_to_string(kept, chr(10)) AS clean_text, "
-            "CAST(len(l) AS BIGINT) AS n_lines, "
-            "CAST(len(l) - len(kept) AS BIGINT) AS n_dupe_lines FROM k"
-        ),
-        "chunk_text": with_docs(
-            ", t AS ("
-            "  SELECT doc_id, string_split(text, ' ') AS toks, "
-            "         len(string_split(text, ' ')) AS n "
-            "  FROM docs WHERE text IS NOT NULL"
-            "), c AS ("
-            "  SELECT doc_id, toks, n, "
-            "    CASE WHEN n <= 16 THEN 1 "
-            "         ELSE CAST(ceil((n - 16) / 8.0) AS BIGINT) + 1 END AS n_chunks "
-            "  FROM t"
-            "), s AS ("
-            "  SELECT doc_id, toks, n, unnest(range(n_chunks)) AS i FROM c"
-            ") "
-            "SELECT doc_id, CAST(i AS BIGINT) AS chunk_idx, "
-            "  CAST(i * 8 AS BIGINT) AS start_tok, "
-            "  CAST(len(toks[(CAST(i AS BIGINT) * 8 + 1):least(CAST(i AS BIGINT) * 8 + 16, n)]) AS BIGINT) AS n_chunk_tokens, "
-            "  array_to_string(toks[(CAST(i AS BIGINT) * 8 + 1):least(CAST(i AS BIGINT) * 8 + 16, n)], ' ') AS chunk_text "
-            "FROM s"
-        ),
-        "token_count": with_docs(
-            "SELECT doc_id, CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens, "
-            "CAST(length(text) AS BIGINT) AS n_chars, "
-            "CAST(CEIL(length(text) / 4.0) AS BIGINT) AS bpe_est FROM docs"
-        ),
-        "text_quality": with_docs(
-            "SELECT doc_id, "
-            "CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens, "
-            "ROUND(length(regexp_replace(text, '[^a-z]', '', 'g')) * 1.0 / length(text), 4) AS alpha_ratio, "
-            "ROUND((length(text) - len(string_split(text,' ')) + 1) * 1.0 / len(string_split(text,' ')), 4) AS mean_word_len, "
-            f"ROUND(len(list_filter(string_split(text,' '), w -> w IN ({_STOPWORDS}))) * 1.0 / len(string_split(text,' ')), 4) AS stopword_ratio "
-            "FROM docs"
-        ),
-        "lang_id": with_docs(
-            """
-            SELECT doc_id,
-              CASE WHEN s_en > 0 AND s_en >= s_es AND s_en >= s_de AND s_en >= s_fr THEN 'en'
-                   WHEN s_es > 0 AND s_es >= s_de AND s_es >= s_fr THEN 'es'
-                   WHEN s_de > 0 AND s_de >= s_fr THEN 'de'
-                   WHEN s_fr > 0 THEN 'fr'
-                   ELSE 'und' END AS lang_pred
-            FROM (
-              SELECT doc_id,
-                len(list_filter(string_split(text,' '), w -> w IN ('the','and','of'))) AS s_en,
-                len(list_filter(string_split(text,' '), w -> w IN ('el','la','que'))) AS s_es,
-                len(list_filter(string_split(text,' '), w -> w IN ('der','die','und'))) AS s_de,
-                len(list_filter(string_split(text,' '), w -> w IN ('le','les','des'))) AS s_fr
-              FROM docs
-            ) s
-            """
-        ),
-        "fingerprint": with_docs(
-            "SELECT doc_id, md5(array_to_string(list_sort(list_distinct("
-            "string_split(lower(text), ' '))), ' ')) AS fp FROM docs"
-        ),
-        "ann_topk": with_vecs(
-            f"""
-            , q AS (SELECT vec_id AS query_id, e AS qe FROM vecs WHERE vec_id % 100 = 0),
-            v AS (SELECT vec_id AS neighbor_id, e AS ve FROM vecs),
-            scored AS (
-              SELECT query_id, neighbor_id,
-                     ROUND({_COSINE_SQL.format(a='qe', b='ve')}, 6) AS sim
-              FROM q JOIN v ON query_id != neighbor_id
-            ),
-            r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                    ORDER BY sim DESC, neighbor_id ASC) AS rnk FROM scored)
-            SELECT query_id, neighbor_id, rnk, sim FROM r WHERE rnk <= 3
-            """
-        ),
-        # independent spec of RAWV frame sampling: each sampled frame is
-        # the i*12+1..i*12+12 substring of the dot-padded ASCII body
-        "frame_sample": with_docs(
-            ", v AS ("
-            "  SELECT doc_id AS media_id, CAST(doc_id % 5 + 2 AS INT) AS n, "
-            "    rpad(regexp_replace(coalesce(text, ''), '[^ -~]', '', 'g'), "
-            "         CAST((doc_id % 5 + 2) * 12 AS INT), '.') AS body "
-            "  FROM docs"
-            "), s AS ("
-            "  SELECT media_id, n, body, unnest(range(0, n, 2)) AS i FROM v"
-            ") "
-            "SELECT media_id, CAST(i AS INT) AS frame_idx, "
-            "  CAST(4 AS INT) AS width, CAST(3 AS INT) AS height, "
-            "  substr(body, CAST(i * 12 + 1 AS INT), 12) AS frame_text FROM s"
-        ),
-        "media_meta": with_docs(
-            "SELECT doc_id AS media_id, "
-            "CAST(doc_id % 32 + 64 AS INT) AS width, "
-            "CAST(doc_id % 24 + 48 AS INT) AS height, "
-            "CAST(doc_id % 3 + 1 AS INT) AS channels, "
-            "CAST(octet_length(encode(text)) + 5 AS BIGINT) AS n_bytes FROM docs"
-        ),
-        "media_resize": with_docs(
-            # halved header dims; body keeps every 2nd byte => ceil(len/2)
-            "SELECT doc_id AS media_id, "
-            "CAST((doc_id % 32 + 64) // 2 AS INT) AS width, "
-            "CAST((doc_id % 24 + 48) // 2 AS INT) AS height, "
-            "CAST(doc_id % 3 + 1 AS INT) AS channels, "
-            "CAST(CEIL(octet_length(encode(text)) / 2.0) + 5 AS BIGINT) AS n_bytes "
-            "FROM docs"
-        ),
-        "ann_ivf": with_vecs(
-            f"""
-            , q AS (SELECT vec_id AS query_id, e AS qe FROM vecs WHERE vec_id % 100 = 0),
-            v AS (SELECT vec_id AS neighbor_id, e AS ve FROM vecs),
-            scored AS (
-              SELECT query_id, neighbor_id,
-                     ROUND({_COSINE_SQL.format(a='qe', b='ve')}, 6) AS sim
-              FROM q JOIN v ON query_id != neighbor_id
-            ),
-            r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                    ORDER BY sim DESC, neighbor_id ASC) AS rnk FROM scored)
-            SELECT query_id, neighbor_id, rnk, sim FROM r WHERE rnk <= 3
-            """
-        ),
-        "embedding_near_dup": with_vecs(
-            f"""
-            SELECT id_a, id_b, sim FROM (
-              SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                     ROUND({_COSINE_SQL.format(a='a.e', b='b.e')}, 6) AS sim
-              FROM vecs a JOIN vecs b ON a.vec_id < b.vec_id
-            ) p WHERE sim >= 0.8
-        """
-        ),
-        # construction replay: the oracle rebuilds the SAME seeded
-        # hyperplane sketch (literals), sign buckets, bucket join and exact
-        # verify in DuckDB — robust to scale/seed, unlike asserting full
-        # recall of an approximate method (per-pair miss ~3% at sim=0.8)
-        "ann_lsh": _lsh_oracle(threshold=0.8, n_planes=6, n_tables=12, seed=7),
-        "q1_pricing": (
-            "SELECT l_returnflag, l_linestatus, "
-            "ROUND(SUM(l_quantity), 2) AS sum_qty, "
-            "ROUND(SUM(l_extendedprice), 2) AS sum_base_price, "
-            "ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price, "
-            "COUNT(*) AS count_order "
-            "FROM lineitem WHERE l_shipdate <= DATE '1998-09-02' "
-            "GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus"
-        ),
-    }

@@ -546,10 +546,11 @@ def windowed_rate_anomaly_stream(
             return float(Decimal(repr(float(x))).quantize(q, ROUND_HALF_UP))
 
         hist = list(state.get[0]) if state.exists else []
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values("win_start")
+        # a micro-batch may arrive as several Arrow chunks in any order:
+        # score the key's rows in one event-time order across all of them
+        chunks = [pdf for pdf in pdfs if len(pdf)]
+        if chunks:
+            pdf = pd.concat(chunks, ignore_index=True).sort_values("win_start")
             out = {
                 "win_start": [], "n_rows": [], "n_viol": [], "rate": [],
                 "mean_rate": [], "sd_rate": [], "z": [], "anomaly": [],

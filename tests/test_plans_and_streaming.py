@@ -864,6 +864,17 @@ def test_windowed_rate_anomaly_stream_matches_batch(spark, tmp_path):
     across micro-batches, spike flagged with z NULL off a constant
     baseline, self-exclusion intact. Also smoke-runs stage 1
     (windowed_rates_to_sink) end-to-end."""
+    _rate_anomaly_stream_matches_batch(spark, tmp_path, max_records=None)
+
+
+def test_windowed_rate_anomaly_stream_matches_batch_multi_chunk(spark, tmp_path):
+    """Same pin with each micro-batch delivered to the stateful kernel as
+    several Arrow chunks: the kernel must score the key's rows in one
+    event-time order across chunks, not chunk by chunk."""
+    _rate_anomaly_stream_matches_batch(spark, tmp_path, max_records=2)
+
+
+def _rate_anomaly_stream_matches_batch(spark, tmp_path, max_records):
     from datetime import datetime, timedelta
 
     from pyspark.sql import functions as F
@@ -933,8 +944,14 @@ def test_windowed_rate_anomaly_stream_matches_batch(spark, tmp_path):
     assert len(rates) == 10 and all(r["n_rows"] == 10 for r in rates)
     assert rates[8]["rate"] == 0.8 and rates[0]["rate"] == 0.2
 
-    # stage 2 input: one parquet file per window so maxFilesPerTrigger=2
-    # makes five genuine micro-batches (state must carry across them)
+    if max_records is None:
+        # stage 2 input: one parquet file per window so maxFilesPerTrigger=2
+        # makes five genuine micro-batches (state must carry across them)
+        parts, per_trigger = [[r] for r in rates], 2
+    else:
+        # two files of five windows each, newest first, one per micro-batch:
+        # small Arrow chunks then reach the kernel out of event-time order
+        parts, per_trigger = [rates[4::-1], rates[:4:-1]], 1
     rdir = str(tmp_path / "rates")
     rschema = StructType(
         [
@@ -944,26 +961,34 @@ def test_windowed_rate_anomaly_stream_matches_batch(spark, tmp_path):
             StructField("rate", DoubleType()),
         ]
     )
-    for r in rates:
+    for part in parts:
         spark.createDataFrame(
-            [(r["win_start"], r["n_rows"], r["n_viol"], r["rate"])], rschema
+            [(r["win_start"], r["n_rows"], r["n_viol"], r["rate"]) for r in part],
+            rschema,
         ).coalesce(1).write.mode("append").parquet(rdir)
 
     rstream = (
         spark.readStream.schema(rschema)
-        .option("maxFilesPerTrigger", 2)
+        .option("maxFilesPerTrigger", per_trigger)
         .parquet(rdir)
     )
-    q = (
-        windowed_rate_anomaly_stream(rstream, baseline=7, z_threshold=3.0)
-        .writeStream.format("memory")
-        .queryName("ra_out")
-        .option("checkpointLocation", str(tmp_path / "ck2"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf, "10000")
+    try:
+        if max_records is not None:
+            spark.conf.set(conf, str(max_records))
+        q = (
+            windowed_rate_anomaly_stream(rstream, baseline=7, z_threshold=3.0)
+            .writeStream.format("memory")
+            .queryName("ra_out")
+            .option("checkpointLocation", str(tmp_path / "ck2"))
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+    finally:
+        spark.conf.set(conf, old)
     got = {
         r["win_start"]: r
         for r in spark.sql("select * from ra_out").collect()

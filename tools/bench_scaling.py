@@ -31,7 +31,8 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from fsharp_data_validation_spark.cache import release_caches  # noqa: E402
 
@@ -753,7 +754,7 @@ def main() -> None:
             cmd = ["taskset", "-c", f"0-{cores - 1}"] + cmd
         out = subprocess.run(
             cmd,
-            capture_output=True, text=True, check=True, cwd="/root/repo",
+            capture_output=True, text=True, check=True, cwd=ROOT,
         )
         results[cores] = json.loads(out.stdout.strip().splitlines()[-1])
         for line in out.stderr.splitlines():
@@ -880,7 +881,7 @@ def main() -> None:
         f"saturates, a confound a real N->4N executor scale-out does not have; "
         f"probes are noisy on this shared VM, hence min-of-N passes).\n"
     )
-    with open("/root/repo/BENCH.md", "a") as f:
+    with open(os.path.join(ROOT, "BENCH.md"), "a") as f:
         f.write(section)
 
 

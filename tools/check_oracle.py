@@ -4,36 +4,23 @@ value multisets.
 
 Usage: python tools/check_oracle.py [sf_dir] [names... | --skip-quadratic]
 
-``--skip-quadratic`` drops the queries whose ORACLES (not operators) are
-quadratic in DuckDB — all-pairs/recursive-CTE spec forms that take tens of
-minutes at sf0.1 (the sf0.01 gate scale runs them fine). Use it for the
-10x-scale spot-sweep: every other oracle must still hash-match."""
+``--skip-quadratic`` drops the queries registered with ``quadratic=True``,
+whose ORACLES (not operators) are quadratic in DuckDB — all-pairs/
+recursive-CTE spec forms that take tens of minutes at sf0.1 (the sf0.01
+gate scale runs them fine). Use it for the 10x-scale spot-sweep: every
+other oracle must still hash-match."""
 
 from __future__ import annotations
 
 import math
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
-
-#: queries whose DuckDB oracle is quadratic (all-pairs / recursive closure)
-#: — fine at sf0.01, tens of minutes at sf0.1
-QUADRATIC_ORACLES = {
-    "minhash_lsh", "simhash", "ngram_jaccard", "containment_dedup",
-    "contamination_pairs", "dedup_components", "dup_stats",
-    "embedding_near_dup", "ann_topk", "ann_ivf", "ann_lsh",
-    "embedding_contamination",
-    # ann_recall's oracle replays BOTH exact references via the same
-    # all-pairs exact-cosine CTE as embedding_near_dup — quadratic too
-    "ann_recall",
-    # pipeline_e2e's oracle derives its near-dup drop set from the same
-    # all-pairs exact-Jaccard join as ngram_jaccard
-    "pipeline_e2e",
-}
 
 
 def norm(v):
@@ -108,12 +95,12 @@ def main():
 
     from fsharp_data_validation_spark.cache import release_caches
 
-    qs, os_ = e.queries(), e.oracle_sql()
     failures = ok = skipped = 0
-    for name, fn in qs.items():
+    for name in e.queries():
+        fn, oracle, quadratic = e.REGISTRY[name]
         if only and name not in only:
             continue
-        if skip_quad and name in QUADRATIC_ORACLES:
+        if skip_quad and quadratic:
             print(f"[skip-quad ] {name}: oracle quadratic at this scale")
             skipped += 1
             continue
@@ -127,12 +114,8 @@ def main():
             continue
         finally:
             release_caches(spark, sweep_rdds=True)
-        if name not in os_:
-            print(f"[rows-only] {name}: {len(srows)} rows (no oracle)")
-            ok += 1
-            continue
         try:
-            rel = con.sql(os_[name])
+            rel = con.sql(oracle)
             ocols = [c.lower() for c in rel.columns]
             orows = rel.fetchall()
         except Exception as ex:
