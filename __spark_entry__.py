@@ -3907,6 +3907,27 @@ def q_stream_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("conv_id", "turn_idx", "ts", "path", "code")
 
 
+def _write_stream_parts(spark: SparkSession, parts, schema: str, src: str) -> None:
+    """Write each non-empty part of a series as ONE parquet file
+    ``src/000.parquet``, ``001.parquet``, ... with strictly increasing
+    mtimes. A file stream source picks up new files in modification-time
+    order, and files written within one timestamp tick would tie; explicit
+    names and ``os.utime`` make the stream's input order the series order."""
+    import glob
+    import os
+    import shutil
+    import time
+
+    t0 = int(time.time()) - len(parts)
+    for i, part in enumerate(p for p in parts if p):
+        tmp = f"{src}/_part{i:03d}"
+        spark.createDataFrame(part, schema).coalesce(1).write.parquet(tmp)
+        dst = f"{src}/{i:03d}.parquet"
+        os.replace(glob.glob(f"{tmp}/part-*.parquet")[0], dst)
+        shutil.rmtree(tmp)
+        os.utime(dst, (t0 + i, t0 + i))
+
+
 # the streaming control chart must concatenate micro-batches to
 # EXACTLY the batch closed form (pytest-pinned), so it shares the
 # batch oracle
@@ -3945,20 +3966,16 @@ def q_stream_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("win_start")
     )
     src = tempfile.mkdtemp(prefix="stream_ra_src_")
-    # two sequential single-file writes (first half of the series, then the
-    # second) so maxFilesPerTrigger=1 makes two genuine micro-batches with
-    # the baseline carried across the batch boundary — the per-day-file
-    # variant (30 write jobs + 15 micro-batches) cost 163 s in the driver
-    # bench for the same attestation; the fine-grained multi-batch carry is
-    # pytest-pinned (test_windowed_rate_anomaly_stream_matches_batch)
+    # two single-file parts (first half of the series, then the second) so
+    # maxFilesPerTrigger=1 makes two genuine micro-batches with the baseline
+    # carried across the batch boundary — the per-day-file variant (30
+    # write jobs + 15 micro-batches) cost 163 s in the driver bench for the
+    # same attestation; the fine-grained multi-batch carry is pytest-pinned
+    # (test_windowed_rate_anomaly_stream_matches_batch)
     rows = daily.collect()
     half = max(1, len(rows) // 2)
     sch = "win_start timestamp, n_rows bigint, n_viol bigint, rate double"
-    for part in (rows[:half], rows[half:]):
-        if part:
-            spark.createDataFrame(part, sch).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
+    _write_stream_parts(spark, [rows[:half], rows[half:]], sch, src)
     rstream = (
         spark.readStream.schema(sch).option("maxFilesPerTrigger", 1).parquet(src)
     )

@@ -1,29 +1,93 @@
-"""Distribution-drift checks (KS / PSI) — north-rule requirement with no
-reference counterpart (SURVEY.md §2.8).
+"""Distribution-drift checks (PSI / KS / JS / W1 / CvM / chi2) — north-rule
+requirement with no reference counterpart (SURVEY.md §2.8).
 
-Both are computed from *histograms* built with pure DataFrame math (one
-aggregation pass per segment, mergeable, no per-row Python): PSI is a
-closed-form sum over matched buckets; KS is the max |ECDF_a - ECDF_b| over
-bucket boundaries via window cumulative sums. Histograms are a few KB
-regardless of input scale, so the final arithmetic is negligible — the cost
-is one scan + one tiny shuffle per segment, which survives 100x scale-up.
+All are computed from *histograms* built with pure DataFrame math (one
+aggregation pass per segment, mergeable, no per-row Python). Histograms are
+a few KB regardless of input scale, so the final arithmetic is negligible —
+the cost is one scan + one tiny shuffle per segment, which survives 100x
+scale-up.
+
+Each statistic is ONE term function over Columns ``(a, b, ta, tb)`` — the
+two sides' counts (cumulative counts, for the CDF gap) and their totals —
+and every form calls that same function:
+- joined (``*_joined``): a (bucket, na, nb) histogram, whole-relation
+  window totals;
+- per-group (``*_by_group``): the ``_grid`` columns, group vs whole table;
+- streaming (``streaming/validate_stream.py``): window counts vs baseline
+  literals.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..cache import persist_tracked
 
 EPS = 1e-6
 
 
+def _bucket(value: Column, width: float, n: int) -> Column:
+    """Fixed-width bucket index of ``value``, clamped to [0, n-1]."""
+    return F.least(
+        F.greatest(F.floor(value / F.lit(width)), F.lit(0)), F.lit(n - 1)
+    ).cast("int")
+
+
+def _proportions(a: Column, b: Column, ta: Column, tb: Column):
+    return F.greatest(a / ta, F.lit(EPS)), F.greatest(b / tb, F.lit(EPS))
+
+
+def psi_term(a: Column, b: Column, ta: Column, tb: Column) -> Column:
+    """PSI term (p - q) * ln(p / q) over EPS-clamped proportions
+    p = a/ta, q = b/tb. A bucket empty on both sides adds 0."""
+    p, q = _proportions(a, b, ta, tb)
+    return (p - q) * F.log(p / q)
+
+
+def js_term(a: Column, b: Column, ta: Column, tb: Column) -> Column:
+    """Jensen-Shannon term 0.5*p*ln(p/m) + 0.5*q*ln(q/m), m = (p+q)/2, over
+    the same EPS-clamped proportions as ``psi_term``."""
+    p, q = _proportions(a, b, ta, tb)
+    m = (p + q) / 2
+    return 0.5 * p * F.log(p / m) + 0.5 * q * F.log(q / m)
+
+
+def chi2_cell(a: Column, b: Column, ta: Column, tb: Column) -> Column:
+    """Pearson chi-square contribution of one category's two cells,
+    (obs - exp)^2 / exp with expectations from the margins. A category
+    empty on both sides adds 0."""
+    row = a + b
+    colsum = ta + tb
+    ea = row * ta / colsum
+    eb = row * tb / colsum
+    return F.when(row > 0, (a - ea) ** 2 / ea + (b - eb) ** 2 / eb).otherwise(
+        F.lit(0.0)
+    )
+
+
+def cdf_gap(a: Column, b: Column, ta: Column, tb: Column) -> Column:
+    """|F_a - F_b| at a bucket boundary, from cumulative counts a, b."""
+    return F.abs(a / ta - b / tb)
+
+
+def _joined_cols(cumulative: bool = False):
+    """Term operands over a joined histogram (bucket, na, nb): the bucket's
+    counts, or with ``cumulative`` the running counts up to it, and the
+    totals. Totals come from a whole-relation window over the histogram
+    (<= n_buckets rows) rather than a separate aggregate + cross join — the
+    latter re-plans the histogram's entire subtree, doubling the number of
+    source scans."""
+    wall = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    ta, tb = F.sum("na").over(wall), F.sum("nb").over(wall)
+    if not cumulative:
+        return F.col("na"), F.col("nb"), ta, tb
+    wcum = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
+    return F.sum("na").over(wcum), F.sum("nb").over(wcum), ta, tb
+
+
 def bucketize(df: DataFrame, value_col: str, bucket_width: float, n_buckets: int) -> DataFrame:
     """Fixed-width bucketing clamped to [0, n_buckets-1]; NULLs dropped."""
-    b = F.least(
-        F.greatest(F.floor(F.col(value_col) / F.lit(bucket_width)), F.lit(0)),
-        F.lit(n_buckets - 1),
-    ).cast("int")
+    b = _bucket(F.col(value_col), bucket_width, n_buckets)
     return df.filter(F.col(value_col).isNotNull()).select(b.alias("bucket"))
 
 
@@ -46,19 +110,10 @@ def _joined_hist(hist_a: DataFrame, hist_b: DataFrame) -> DataFrame:
 
 
 def psi_joined(j: DataFrame, round_to: int = 4) -> DataFrame:
-    """PSI over a joined histogram (bucket, na, nb):
-    sum((p - q) * ln(p / q)) with epsilon-clamped proportions.
-    Returns a single row (psi).
-
-    Totals come from a whole-relation window over ``j`` (<= n_buckets rows)
-    rather than a separate aggregate + cross join — the latter re-plans
-    ``j``'s entire subtree, doubling the number of source scans."""
-    wall = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    p = F.greatest(F.col("na") / F.sum("na").over(wall), F.lit(EPS))
-    q = F.greatest(F.col("nb") / F.sum("nb").over(wall), F.lit(EPS))
-    return (
-        j.select(((p - q) * F.log(p / q)).alias("term"))
-        .agg(F.round(F.sum("term"), round_to).alias("psi"))
+    """PSI over a joined histogram (bucket, na, nb): the sum of
+    ``psi_term``. Returns a single row (psi)."""
+    return j.select(psi_term(*_joined_cols()).alias("term")).agg(
+        F.round(F.sum("term"), round_to).alias("psi")
     )
 
 
@@ -66,15 +121,10 @@ def ks_joined(j: DataFrame, round_to: int = 4) -> DataFrame:
     """KS over a joined histogram (bucket, na, nb): max |ECDF_a - ECDF_b|
     over bucket boundaries. (Exact for the bucketed distributions; bucket
     width bounds the error vs the continuous statistic.)
-    Returns a single row (ks). Totals via whole-relation window — see
-    ``psi_joined`` for why not a separate aggregate."""
-    wcum = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
-    wall = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    d = F.abs(
-        F.sum("na").over(wcum) / F.sum("na").over(wall)
-        - F.sum("nb").over(wcum) / F.sum("nb").over(wall)
+    Returns a single row (ks)."""
+    return j.select(cdf_gap(*_joined_cols(cumulative=True)).alias("d")).agg(
+        F.round(F.max("d"), round_to).alias("ks")
     )
-    return j.select(d.alias("d")).agg(F.round(F.max("d"), round_to).alias("ks"))
 
 
 def psi(hist_a: DataFrame, hist_b: DataFrame, round_to: int = 4) -> DataFrame:
@@ -108,10 +158,7 @@ def split_histograms(
     histogram-after-filter semantics (and to the DuckDB oracle arithmetic)."""
     e = F.unix_seconds(F.col(ts_col).cast("timestamp"))
     mid_df = df.agg(F.round((F.min(e) + F.max(e)) / 2).alias("_mid"))
-    b = F.least(
-        F.greatest(F.floor(F.col(value_col) / F.lit(bucket_width)), F.lit(0)),
-        F.lit(n_buckets - 1),
-    ).cast("int")
+    b = _bucket(F.col(value_col), bucket_width, n_buckets)
     return (
         df.filter(F.col(value_col).isNotNull())
         .select(b.alias("bucket"), e.alias("_e"))
@@ -124,6 +171,80 @@ def split_histograms(
     )
 
 
+def _grid(
+    df: DataFrame,
+    group_col: str,
+    value_col: str,
+    key: Column,
+    n_buckets: int | None = None,
+) -> DataFrame:
+    """The per-group drift grid from ONE scan of ``df``: rows
+    (grp, key, n, gn, tg, t) over grp x spine, where ``n`` counts the
+    group's rows at ``key``, ``gn`` the whole table's (the baseline is the
+    sum of the same aggregate — no second scan), and ``tg``/``t`` are their
+    totals. Rows with NULL ``value_col`` are dropped. The spine is the dense
+    0..n_buckets-1 bucket range, or without ``n_buckets`` the keys observed
+    anywhere in the table — either way keys a group is MISSING still appear
+    (n = 0) and contribute to its statistic.
+
+    Scale: the (grp, key) aggregate is partial+final — |groups| x |keys|
+    rows (KBs at any input size); everything after is arithmetic on that
+    tiny relation, fully distributed, no per-row Python. It is persisted:
+    four plan branches (baseline, per-group totals, grand total, grid
+    join-back) each re-plan this subtree from the SOURCE, and without the
+    persist the fact table is physically scanned once per branch (verified
+    in the executed plan). With it, the whole grid is ONE data scan plus
+    arithmetic on the cached relation."""
+    per = persist_tracked(
+        df.filter(F.col(value_col).isNotNull())
+        .select(F.col(group_col).alias("grp"), key.alias("key"))
+        .groupBy("grp", "key")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    glob = per.groupBy("key").agg(F.sum("n").alias("gn"))
+    tg = per.groupBy("grp").agg(F.sum("n").alias("tg"))
+    tot = per.agg(F.sum("n").alias("t"))
+    if n_buckets is not None:
+        spine = per.sparkSession.range(0, n_buckets).select(
+            F.col("id").cast("int").alias("key")
+        )
+        glob = spine.join(F.broadcast(glob), "key", "left")
+    return (
+        tg.crossJoin(F.broadcast(glob))
+        .join(per, ["grp", "key"], "left")
+        .fillna(0, ["n", "gn"])
+        .crossJoin(F.broadcast(tot))
+    )
+
+
+def _bucket_grid(df, group_col, value_col, bucket_width, n_buckets) -> DataFrame:
+    b = _bucket(F.col(value_col), bucket_width, n_buckets)
+    return _grid(df, group_col, value_col, b, n_buckets)
+
+
+def _grid_cols(cumulative: bool = False):
+    """Term operands over a ``_grid``: group vs whole-table counts at the
+    key, or with ``cumulative`` the running counts up to it (windowed per
+    group over the tiny grid, never over the data), and the totals."""
+    if not cumulative:
+        return F.col("n"), F.col("gn"), F.col("tg"), F.col("t")
+    w = Window.partitionBy("grp").orderBy("key").rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    return F.sum("n").over(w), F.sum("gn").over(w), F.col("tg"), F.col("t")
+
+
+def _per_group(grid: DataFrame, group_col: str, term: Column, **stats) -> DataFrame:
+    """Reduce a grid ``term`` per group: (group, n_rows, *stats), each stat
+    an aggregate over the column ``term``."""
+    return (
+        grid.select("grp", "tg", term.alias("term"))
+        .groupBy("grp")
+        .agg(F.first("tg").alias("n_rows"), *(c.alias(k) for k, c in stats.items()))
+        .select(F.col("grp").alias(group_col), "n_rows", *stats)
+    )
+
+
 def psi_by_group(
     df: DataFrame,
     group_col: str,
@@ -133,51 +254,12 @@ def psi_by_group(
     round_to: int = 4,
 ) -> DataFrame:
     """Per-partition drift: PSI of each group's value distribution against
-    the whole-table baseline, from ONE scan. Bucket counts aggregate per
-    (group, bucket); the global baseline is the sum of the same aggregate
-    (no second scan); PSI is computed over the full group x baseline-bucket
-    grid so buckets a group is *missing* still contribute (epsilon-clamped).
-    Returns (group, n_rows, psi).
-
-    Scale: the (group, bucket) aggregate is partial+final — its output is
-    |groups| x |buckets| rows (KBs at any input size); everything after is
-    arithmetic on that tiny relation, fully distributed, no per-row Python."""
-    b = F.least(
-        F.greatest(F.floor(F.col(value_col) / F.lit(bucket_width)), F.lit(0)),
-        F.lit(n_buckets - 1),
-    ).cast("int")
-    per = (
-        df.filter(F.col(value_col).isNotNull())
-        .select(F.col(group_col).alias("grp"), b.alias("bucket"))
-        .groupBy("grp", "bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        # four plan branches (baseline, per-group totals, grand total, grid
-        # join-back) each re-plan this subtree from the SOURCE — without a
-        # persist the fact table is physically scanned once per branch
-        # (verified in the executed plan). The aggregate is |groups|x|buckets|
-        # rows (KBs at any input scale), so caching it makes the whole grid
-        # ONE data scan + arithmetic on the cached relation.
-    )
-    per = persist_tracked(per)
-    glob = per.groupBy("bucket").agg(F.sum("n").alias("gn"))
-    tg = per.groupBy("grp").agg(F.sum("n").alias("tg"))
-    tot = per.agg(F.sum("n").alias("t"))
-    grid = tg.crossJoin(F.broadcast(glob))
-    j = (
-        grid.join(per, ["grp", "bucket"], "left")
-        .withColumn("n", F.coalesce("n", F.lit(0)))
-        .crossJoin(F.broadcast(tot))
-    )
-    p = F.greatest(F.col("n") / F.col("tg"), F.lit(EPS))
-    q = F.greatest(F.col("gn") / F.col("t"), F.lit(EPS))
-    return (
-        j.select("grp", "tg", ((p - q) * F.log(p / q)).alias("term"))
-        .groupBy("grp")
-        .agg(
-            F.first("tg").alias("n_rows"),
-            F.round(F.sum("term"), round_to).alias("psi"),
-        )
-        .select(F.col("grp").alias(group_col), "n_rows", "psi")
+    the whole-table baseline, from ONE scan (see ``_grid``); buckets a group
+    is missing still contribute (epsilon-clamped). Returns (group, n_rows,
+    psi)."""
+    g = _bucket_grid(df, group_col, value_col, bucket_width, n_buckets)
+    return _per_group(
+        g, group_col, psi_term(*_grid_cols()), psi=F.round(F.sum("term"), round_to)
     )
 
 
@@ -190,49 +272,15 @@ def ks_by_group(
     round_to: int = 4,
 ) -> DataFrame:
     """Per-partition KS: max |group ECDF - global ECDF| over bucket
-    boundaries, same one-scan shape as ``psi_by_group`` (the grid is
+    boundaries, same one-scan grid as ``psi_by_group`` (the grid is
     bucket-complete per group, so one window per group also accumulates the
     global ECDF). Returns (group, n_rows, ks)."""
-    b = F.least(
-        F.greatest(F.floor(F.col(value_col) / F.lit(bucket_width)), F.lit(0)),
-        F.lit(n_buckets - 1),
-    ).cast("int")
-    per = (
-        df.filter(F.col(value_col).isNotNull())
-        .select(F.col(group_col).alias("grp"), b.alias("bucket"))
-        .groupBy("grp", "bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        # four plan branches (baseline, per-group totals, grand total, grid
-        # join-back) each re-plan this subtree from the SOURCE — without a
-        # persist the fact table is physically scanned once per branch
-        # (verified in the executed plan). The aggregate is |groups|x|buckets|
-        # rows (KBs at any input scale), so caching it makes the whole grid
-        # ONE data scan + arithmetic on the cached relation.
-    )
-    per = persist_tracked(per)
-    gbase = per.groupBy("bucket").agg(F.sum("n").alias("gn"))
-    tg = per.groupBy("grp").agg(F.sum("n").alias("tg"))
-    tot = per.agg(F.sum("n").alias("t"))
-    grid = tg.crossJoin(F.broadcast(gbase))
-    j = (
-        grid.join(per, ["grp", "bucket"], "left")
-        .withColumn("n", F.coalesce("n", F.lit(0)))
-        .crossJoin(F.broadcast(tot))
-    )
-    w = Window.partitionBy("grp").orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    d = F.abs(
-        F.sum("n").over(w) / F.col("tg") - F.sum("gn").over(w) / F.col("t")
-    )
-    return (
-        j.select("grp", "tg", d.alias("d"))
-        .groupBy("grp")
-        .agg(
-            F.first("tg").alias("n_rows"),
-            F.round(F.max("d"), round_to).alias("ks"),
-        )
-        .select(F.col("grp").alias(group_col), "n_rows", "ks")
+    g = _bucket_grid(df, group_col, value_col, bucket_width, n_buckets)
+    return _per_group(
+        g,
+        group_col,
+        cdf_gap(*_grid_cols(cumulative=True)),
+        ks=F.round(F.max("term"), round_to),
     )
 
 
@@ -242,12 +290,7 @@ def js_joined(j: DataFrame, round_to: int = 4) -> DataFrame:
     epsilon-clamped proportions as ``psi_joined``. Bounded [0, ln 2] and
     symmetric — the drift score to use when PSI's unboundedness on
     vanishing buckets is unwanted. Returns a single row (js)."""
-    wall = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    p = F.greatest(F.col("na") / F.sum("na").over(wall), F.lit(EPS))
-    q = F.greatest(F.col("nb") / F.sum("nb").over(wall), F.lit(EPS))
-    m = (p + q) / 2
-    term = 0.5 * p * F.log(p / m) + 0.5 * q * F.log(q / m)
-    return j.select(term.alias("term")).agg(
+    return j.select(js_term(*_joined_cols()).alias("term")).agg(
         F.round(F.sum("term"), round_to).alias("js")
     )
 
@@ -266,47 +309,12 @@ def js_by_group(
     round_to: int = 4,
 ) -> DataFrame:
     """Per-partition Jensen-Shannon divergence of each group's value
-    distribution against the whole-table baseline — the same ONE-scan
-    grid-complete shape as ``psi_by_group`` (see its scale notes), with the
-    bounded symmetric JS term instead of PSI. Returns (group, n_rows, js)."""
-    b = F.least(
-        F.greatest(F.floor(F.col(value_col) / F.lit(bucket_width)), F.lit(0)),
-        F.lit(n_buckets - 1),
-    ).cast("int")
-    per = (
-        df.filter(F.col(value_col).isNotNull())
-        .select(F.col(group_col).alias("grp"), b.alias("bucket"))
-        .groupBy("grp", "bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        # four plan branches (baseline, per-group totals, grand total, grid
-        # join-back) each re-plan this subtree from the SOURCE — without a
-        # persist the fact table is physically scanned once per branch
-        # (verified in the executed plan). The aggregate is |groups|x|buckets|
-        # rows (KBs at any input scale), so caching it makes the whole grid
-        # ONE data scan + arithmetic on the cached relation.
-    )
-    per = persist_tracked(per)
-    glob = per.groupBy("bucket").agg(F.sum("n").alias("gn"))
-    tg = per.groupBy("grp").agg(F.sum("n").alias("tg"))
-    tot = per.agg(F.sum("n").alias("t"))
-    grid = tg.crossJoin(F.broadcast(glob))
-    j = (
-        grid.join(per, ["grp", "bucket"], "left")
-        .withColumn("n", F.coalesce("n", F.lit(0)))
-        .crossJoin(F.broadcast(tot))
-    )
-    p = F.greatest(F.col("n") / F.col("tg"), F.lit(EPS))
-    q = F.greatest(F.col("gn") / F.col("t"), F.lit(EPS))
-    m = (p + q) / 2
-    term = 0.5 * p * F.log(p / m) + 0.5 * q * F.log(q / m)
-    return (
-        j.select("grp", "tg", term.alias("term"))
-        .groupBy("grp")
-        .agg(
-            F.first("tg").alias("n_rows"),
-            F.round(F.sum("term"), round_to).alias("js"),
-        )
-        .select(F.col("grp").alias(group_col), "n_rows", "js")
+    distribution against the whole-table baseline — the same one-scan grid
+    as ``psi_by_group``, with the bounded symmetric JS term instead of PSI.
+    Returns (group, n_rows, js)."""
+    g = _bucket_grid(df, group_col, value_col, bucket_width, n_buckets)
+    return _per_group(
+        g, group_col, js_term(*_grid_cols()), js=F.round(F.sum("term"), round_to)
     )
 
 
@@ -326,13 +334,7 @@ def w1_joined(
         F.col("id").cast("int").alias("bucket")
     )
     dj = full.join(j, "bucket", "left").fillna(0, ["na", "nb"])
-    wcum = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
-    wall = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    d = F.abs(
-        F.sum("na").over(wcum) / F.sum("na").over(wall)
-        - F.sum("nb").over(wcum) / F.sum("nb").over(wall)
-    )
-    return dj.select(d.alias("d")).agg(
+    return dj.select(cdf_gap(*_joined_cols(cumulative=True)).alias("d")).agg(
         F.round(F.sum("d") * F.lit(float(bucket_width)), round_to).alias("w1")
     )
 
@@ -358,53 +360,16 @@ def w1_by_group(
 ) -> DataFrame:
     """Per-partition Wasserstein-1 distance of each group's value
     distribution against the whole-table baseline — completes the per-group
-    drift family (PSI/KS/JS/W1). Same ONE-scan cached-grid shape as
-    ``psi_by_group``, but the grid is densified to the FULL 0..n_buckets-1
-    spine per group (W1 is a sum over the integral, so both-sides-empty gap
-    buckets count — see ``w1_joined``); cumulative sums run on the tiny
-    |groups| x n_buckets relation, windowed per group, never on the data.
+    drift family (PSI/KS/JS/W1). Same one-scan grid as ``psi_by_group``,
+    whose dense 0..n_buckets-1 spine counts both-sides-empty gap buckets
+    (W1 is a sum over the integral — see ``w1_joined``).
     Returns (group, n_rows, w1)."""
-    b = F.least(
-        F.greatest(F.floor(F.col(value_col) / F.lit(bucket_width)), F.lit(0)),
-        F.lit(n_buckets - 1),
-    ).cast("int")
-    per = (
-        df.filter(F.col(value_col).isNotNull())
-        .select(F.col(group_col).alias("grp"), b.alias("bucket"))
-        .groupBy("grp", "bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    per = persist_tracked(per)  # KB-scale; 4 branches read it (see psi_by_group)
-    spine = per.sparkSession.range(0, n_buckets).select(
-        F.col("id").cast("int").alias("bucket")
-    )
-    glob = per.groupBy("bucket").agg(F.sum("n").alias("gn"))
-    tg = per.groupBy("grp").agg(F.sum("n").alias("tg"))
-    tot = per.agg(F.sum("n").alias("t"))
-    grid = tg.crossJoin(F.broadcast(spine))
-    j = (
-        grid.join(F.broadcast(glob), "bucket", "left")
-        .join(per, ["grp", "bucket"], "left")
-        .withColumn("n", F.coalesce("n", F.lit(0)))
-        .withColumn("gn", F.coalesce("gn", F.lit(0)))
-        .crossJoin(F.broadcast(tot))
-    )
-    wcum = (
-        Window.partitionBy("grp")
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    d = F.abs(
-        F.sum("n").over(wcum) / F.col("tg") - F.sum("gn").over(wcum) / F.col("t")
-    )
-    return (
-        j.select("grp", "tg", d.alias("d"))
-        .groupBy("grp")
-        .agg(
-            F.first("tg").alias("n_rows"),
-            F.round(F.sum("d") * F.lit(float(bucket_width)), round_to).alias("w1"),
-        )
-        .select(F.col("grp").alias(group_col), "n_rows", "w1")
+    g = _bucket_grid(df, group_col, value_col, bucket_width, n_buckets)
+    return _per_group(
+        g,
+        group_col,
+        cdf_gap(*_grid_cols(cumulative=True)),
+        w1=F.round(F.sum("term") * F.lit(float(bucket_width)), round_to),
     )
 
 
@@ -440,22 +405,14 @@ def chi2_drift(
 def chi2_joined(counts: DataFrame, round_to: int = 4) -> DataFrame:
     """Pearson chi-square statistic for a (category, na, nb) contingency
     table — the categorical drift test PSI/KS can't express (they need an
-    ordered or binned domain). chi2 = sum over cells (obs - exp)^2 / exp
-    with exp from the row/column margins; dof = (n_categories - 1) * (2 - 1).
-    All arithmetic happens on the |categories|-row aggregate (broadcast
-    totals, no second data scan). Returns one row (chi2, dof)."""
-    tot = counts.agg(
-        F.sum("na").alias("ta"),
-        F.sum("nb").alias("tb"),
-        (F.sum("na") + F.sum("nb")).alias("t"),
-    )
-    j = counts.crossJoin(F.broadcast(tot))
-    row = F.col("na") + F.col("nb")
-    ea = row * F.col("ta") / F.col("t")
-    eb = row * F.col("tb") / F.col("t")
-    term = (F.col("na") - ea) ** 2 / ea + (F.col("nb") - eb) ** 2 / eb
-    return j.agg(
-        F.round(F.sum(term), round_to).alias("chi2"),
+    ordered or binned domain): the sum of ``chi2_cell``;
+    dof = (n_categories - 1) * (2 - 1). All arithmetic happens on the
+    |categories|-row aggregate (broadcast totals, no second data scan).
+    Returns one row (chi2, dof)."""
+    tot = counts.agg(F.sum("na").alias("ta"), F.sum("nb").alias("tb"))
+    return counts.crossJoin(F.broadcast(tot)).agg(
+        F.round(F.sum(chi2_cell(*map(F.col, ("na", "nb", "ta", "tb")))), round_to)
+        .alias("chi2"),
         (F.count(F.lit(1)) - 1).cast("bigint").alias("dof"),
     )
 
@@ -471,18 +428,11 @@ def cvm_joined(j: DataFrame, round_to: int = 4) -> DataFrame:
     the drift family was missing.
 
     Shape: identical to ``ks_joined`` — windows over the <= n_buckets-row
-    joined histogram, totals via whole-relation window (no re-planned
-    aggregate subtree), one tiny final reduce. Returns a single row (cvm)."""
-    wcum = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
-    wall = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    fa = F.sum("na").over(wcum) / F.sum("na").over(wall)
-    fb = F.sum("nb").over(wcum) / F.sum("nb").over(wall)
-    w = (F.col("na") + F.col("nb")) / (
-        F.sum("na").over(wall) + F.sum("nb").over(wall)
-    )
-    return (
-        j.select((w * F.pow(fa - fb, F.lit(2))).alias("term"))
-        .agg(F.round(F.sum("term"), round_to).alias("cvm"))
+    joined histogram, one tiny final reduce. Returns a single row (cvm)."""
+    ca, cb, ta, tb = _joined_cols(cumulative=True)
+    w = (F.col("na") + F.col("nb")) / (ta + tb)
+    return j.select((w * F.pow(cdf_gap(ca, cb, ta, tb), F.lit(2))).alias("term")).agg(
+        F.round(F.sum("term"), round_to).alias("cvm")
     )
 
 
@@ -495,44 +445,20 @@ def chi2_by_group(
     """Per-partition CATEGORICAL drift: Pearson chi-square of each group's
     category distribution against the whole-table baseline — completes the
     per-group grid family (PSI/KS/JS/W1 cover binned numeric domains; this
-    is the unordered-category member, same one-scan cached-grid shape).
+    is the unordered-category member, same one-scan grid keyed by category
+    over the observed global categories).
 
     For each group the 2 x |categories| contingency table is (group counts,
-    global counts); chi2 = Σ cells (obs − exp)²/exp with expectations from
-    the margins, over the full group x global-category grid so categories a
-    group is MISSING still contribute (their group-cell expectation is
-    nonzero). dof = categories in the baseline − 1. All arithmetic runs on
-    the persisted |groups| x |categories| aggregate (KBs at any input
-    scale); NULL categories are dropped like ``split_category_counts``.
-    Returns (group, n_rows, chi2, dof)."""
-    per = (
-        df.filter(F.col(cat_col).isNotNull())
-        .select(F.col(group_col).alias("grp"), F.col(cat_col).alias("cat"))
-        .groupBy("grp", "cat")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    per = persist_tracked(per)  # KB-scale; 4 branches read it (see psi_by_group)
-    glob = per.groupBy("cat").agg(F.sum("n").alias("gn"))
-    tg = per.groupBy("grp").agg(F.sum("n").alias("tg"))
-    tot = per.agg(F.sum("n").alias("t"), F.countDistinct("cat").alias("k"))
-    grid = tg.crossJoin(F.broadcast(glob))
-    j = (
-        grid.join(per, ["grp", "cat"], "left")
-        .withColumn("n", F.coalesce("n", F.lit(0)))
-        .crossJoin(F.broadcast(tot))
-    )
-    row = F.col("n") + F.col("gn")
-    colsum = F.col("tg") + F.col("t")
-    eg = row * F.col("tg") / colsum
-    eb = row * F.col("t") / colsum
-    term = (F.col("n") - eg) ** 2 / eg + (F.col("gn") - eb) ** 2 / eb
-    return (
-        j.select("grp", "tg", "k", term.alias("term"))
-        .groupBy("grp")
-        .agg(
-            F.first("tg").alias("n_rows"),
-            F.round(F.sum("term"), round_to).alias("chi2"),
-            (F.first("k") - 1).cast("bigint").alias("dof"),
-        )
-        .select(F.col("grp").alias(group_col), "n_rows", "chi2", "dof")
+    global counts); chi2 sums ``chi2_cell`` over the full group x
+    global-category grid, so categories a group is MISSING still contribute
+    (their group-cell expectation is nonzero). dof = categories in the
+    baseline − 1. NULL categories are dropped like
+    ``split_category_counts``. Returns (group, n_rows, chi2, dof)."""
+    g = _grid(df, group_col, cat_col, F.col(cat_col))
+    return _per_group(
+        g,
+        group_col,
+        chi2_cell(*_grid_cols()),
+        chi2=F.round(F.sum("term"), round_to),
+        dof=(F.count(F.lit(1)) - 1).cast("bigint"),
     )

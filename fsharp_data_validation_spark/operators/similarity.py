@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import ArrayType, LongType
 
 from ..cache import persist_tracked
+from ..rounding import half_up
 
 
 def _dot(a: F.Column, b: F.Column) -> F.Column:
@@ -181,7 +182,7 @@ def near_dup_pairs_blocked(
                 {"id_a": "int64", "id_b": "int64", "sim": "float64"}
             )
         sims = (m[ia] @ m[ib].T) / np.outer(norms[ia], norms[ib])
-        idx_a, idx_b = np.nonzero(np.round(sims, round_to) >= threshold)
+        idx_a, idx_b = np.nonzero(half_up(sims, round_to) >= threshold)
         a_ids, b_ids = vids[ia][idx_a], vids[ib][idx_b]
         if bi == bj:
             # diagonal tile: every unordered pair appears twice — keep one
@@ -192,7 +193,7 @@ def near_dup_pairs_blocked(
             lo = np.minimum(a_ids, b_ids)
             hi = np.maximum(a_ids, b_ids)
             s = sims[idx_a, idx_b]
-        return pd.DataFrame({"id_a": lo, "id_b": hi, "sim": np.round(s, round_to)})
+        return pd.DataFrame({"id_a": lo, "id_b": hi, "sim": half_up(s, round_to)})
 
     return tiles.groupBy("bi", "bj").applyInPandas(tile_kernel, out_schema)
 
@@ -415,7 +416,7 @@ def semdedup(
         m = np.stack(pdf["_v"].to_numpy())[order]
         norms = np.sqrt(np.einsum("ij,ij->i", m, m))
         sims = (m @ m.T) / np.outer(norms, norms)
-        hit = np.round(sims, round_to) >= threshold
+        hit = half_up(sims, round_to) >= threshold
         # ids ascend along the axes, so strict-upper-triangle = earlier id;
         # column sums = per-vector earlier-neighbor counts
         counts = np.triu(hit, k=1).sum(axis=0).astype("int64")
@@ -601,12 +602,12 @@ def cross_corpus_cosine_pairs(
         m, norms = m_all, norms_all
         vids = pdf["vid"].to_numpy()
         sims = (m[ia] @ m[ib].T) / np.outer(norms[ia], norms[ib])
-        idx_a, idx_b = np.nonzero(np.round(sims, round_to) >= threshold)
+        idx_a, idx_b = np.nonzero(half_up(sims, round_to) >= threshold)
         return pd.DataFrame(
             {
                 "id_a": vids[ia][idx_a],
                 "id_b": vids[ib][idx_b],
-                "sim": np.round(sims[idx_a, idx_b], round_to),
+                "sim": half_up(sims[idx_a, idx_b], round_to),
             }
         )
 

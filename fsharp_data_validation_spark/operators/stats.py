@@ -16,6 +16,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..cache import persist_tracked
+from ..rounding import half_up
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -219,7 +220,7 @@ def tdigest_quantiles(
         m, w = _compress(means, weights, delta)
         return pd.DataFrame(
             {
-                c: [round(_digest_quantile(m, w, q), round_to)]
+                c: [half_up(_digest_quantile(m, w, q), round_to)]
                 for c, q in zip(qcols, qs)
             }
         )

@@ -13,11 +13,15 @@ Stateful additions here:
 
 from __future__ import annotations
 
-from typing import Callable, Optional, Sequence
+from functools import reduce
+from itertools import accumulate
+from operator import add
+from typing import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.compiler import Suite
+from ..rounding import half_up, seq_mean_std
 
 
 def validate_stream(
@@ -249,6 +253,36 @@ def stream_dedup(
     )
 
 
+def _windowed_bucket_counts(
+    stream_df, baseline_hist, value_col, ts_col, window, watermark, width, n_buckets
+):
+    """Shared input of the numeric windowed monitors: ONE watermarked window
+    aggregation (win, rows, _c0.._c{n-1}) — Structured Streaming forbids
+    chained aggregations, so the window histogram is ``n_buckets``
+    conditional sums and each statistic is then a row-local expression over
+    those count columns (append-mode compatible, state evicted by the
+    watermark) — plus the baseline histogram's per-bucket counts and total.
+    The baseline is collected once on the driver: ``n_buckets`` rows (a few
+    hundred bytes) REGARDLESS of how much data produced it, so a plan
+    literal, not a data collect."""
+    from ..operators.drift import _bucket
+
+    base = {r["bucket"]: r["n"] for r in baseline_hist.collect()}
+    counts = [
+        F.sum((F.col("_bkt") == i).cast("long")).alias(f"_c{i}")
+        for i in range(n_buckets)
+    ]
+    agg = (
+        stream_df.filter(F.col(value_col).isNotNull())
+        .withColumn("_bkt", _bucket(F.col(value_col), width, n_buckets))
+        .withWatermark(ts_col, watermark)
+        .groupBy(F.window(ts_col, window).alias("win"))
+        .agg(F.count(F.lit(1)).alias("rows"), *counts)
+    )
+    base_n = [base.get(i, 0) for i in range(n_buckets)]
+    return agg, base_n, float(sum(base.values())) or 1.0
+
+
 def windowed_drift_stream(
     stream_df: DataFrame,
     baseline_hist: DataFrame,
@@ -264,47 +298,20 @@ def windowed_drift_stream(
     event-time window, emit (win, rows, psi) where ``psi`` compares the
     window's distribution of ``value_col`` to ``baseline_hist`` (a batch
     histogram from ``operators.drift.histogram``, e.g. built over last
-    month's validated corpus).
+    month's validated corpus) — the sum of ``operators.drift.psi_term``
+    over the window counts and baseline literals (see
+    ``_windowed_bucket_counts`` for the streaming shape)."""
+    from ..operators.drift import psi_term
 
-    Shape notes for streaming:
-    - Structured Streaming forbids chained aggregations, so the histogram
-      is built as ``n_buckets`` conditional sums inside the ONE watermarked
-      window aggregation (same closed form as ``operators/drift.py``) and
-      PSI is then a row-local expression over those count columns —
-      append-mode compatible, state evicted by the watermark.
-    - the baseline histogram is collected once on the driver: it is
-      ``n_buckets`` rows (a few hundred bytes) REGARDLESS of how much data
-      produced it, so this is a plan-literal, not a data collect. Baseline
-      proportions use the same EPS clamp as the batch PSI.
-    """
-    from ..operators.drift import EPS
-
-    base = {r["bucket"]: r["n"] for r in baseline_hist.collect()}
-    tot = float(sum(base.values())) or 1.0
-
-    b = F.least(
-        F.greatest(F.floor(F.col(value_col) / F.lit(bucket_width)), F.lit(0)),
-        F.lit(n_buckets - 1),
-    ).cast("int")
-    bucketed = (
-        stream_df.filter(F.col(value_col).isNotNull())
-        .withColumn("_bkt", b)
-        .withWatermark(ts_col, watermark)
+    agg, base_n, tot = _windowed_bucket_counts(
+        stream_df, baseline_hist, value_col, ts_col, window, watermark,
+        bucket_width, n_buckets,
     )
-    counts = [
-        F.sum((F.col("_bkt") == i).cast("long")).alias(f"_c{i}")
+    terms = [
+        psi_term(F.col(f"_c{i}"), F.lit(base_n[i]), F.col("rows"), F.lit(tot))
         for i in range(n_buckets)
     ]
-    agg = bucketed.groupBy(F.window(ts_col, window).alias("win")).agg(
-        F.count(F.lit(1)).alias("rows"), *counts
-    )
-    psi_col = None
-    for i in range(n_buckets):
-        p = F.greatest(F.col(f"_c{i}") / F.col("rows"), F.lit(EPS))
-        q = max(base.get(i, 0) / tot, EPS)
-        term = (p - F.lit(q)) * F.log(p / F.lit(q))
-        psi_col = term if psi_col is None else psi_col + term
-    return agg.select("win", "rows", F.round(psi_col, round_to).alias("psi"))
+    return agg.select("win", "rows", F.round(reduce(add, terms), round_to).alias("psi"))
 
 
 def windowed_chi2_stream(
@@ -335,6 +342,8 @@ def windowed_chi2_stream(
       not a data collect. Cells empty in BOTH margins contribute 0 and
       drop out of dof.
     """
+    from ..operators.drift import chi2_cell
+
     # drop a NULL baseline category (the stream side filters NULLs too, and
     # sorted() cannot order None against str)
     base = {
@@ -343,7 +352,6 @@ def windowed_chi2_stream(
         if r["cat"] is not None
     }
     cats = sorted(base)
-    g_tot = float(sum(base.values()))
 
     c = F.col(cat_col)
     sums = [
@@ -359,23 +367,11 @@ def windowed_chi2_stream(
         .agg(F.count(F.lit(1)).alias("rows"), *sums)
     )
     tg = F.col("rows").cast("double")
-    t = F.lit(g_tot)
-    colsum = tg + t
-    chi2 = None
-    dof_cells = None
-    cells = [(F.col(f"_c{i}"), base[cat]) for i, cat in enumerate(cats)]
-    cells.append((F.col("_other"), 0.0))
-    for n, g in cells:
-        row = n + F.lit(g)
-        e1 = row * tg / colsum
-        e2 = row * t / colsum
-        term = F.when(
-            row > 0,
-            (n - e1) ** 2 / e1 + (F.lit(g) - e2) ** 2 / e2,
-        ).otherwise(F.lit(0.0))
-        present = F.when(row > 0, 1).otherwise(0)
-        chi2 = term if chi2 is None else chi2 + term
-        dof_cells = present if dof_cells is None else dof_cells + present
+    t = F.lit(float(sum(base.values())))
+    cells = [(F.col(f"_c{i}"), F.lit(base[cat])) for i, cat in enumerate(cats)]
+    cells.append((F.col("_other"), F.lit(0.0)))
+    chi2 = reduce(add, [chi2_cell(n, g, tg, t) for n, g in cells])
+    dof_cells = reduce(add, [F.when(n + g > 0, 1).otherwise(0) for n, g in cells])
     return agg.select(
         "win",
         "rows",
@@ -398,49 +394,31 @@ def windowed_w1_stream(
     """Streaming Wasserstein-1 drift monitor against a static baseline —
     the spread-sensitive numeric member of the windowed family (PSI reacts
     to per-bucket ratio changes, W1 to how far mass MOVED; chi2 covers
-    unordered categories). Same discipline as ``windowed_drift_stream``:
-    one watermarked window aggregation with a conditional sum per bucket,
-    then W1 as a ROW-LOCAL expression — the bucket CDFs are running sums
-    over the n_buckets literal columns, unrolled at plan-build time, so no
-    chained aggregation and append mode stays legal. The baseline is
-    n_buckets plan-literal proportions (collected once, KBs).
+    unordered categories). Same shape as ``windowed_drift_stream``; the
+    cumulative counts are running sums over the n_buckets count columns,
+    unrolled at plan-build time, so no chained aggregation and append mode
+    stays legal.
 
-    W1 = Σ_b |F_win(b) − F_base(b)| · bucket_width over the full 0..n-1
-    spine — gap buckets count, matching ``operators/drift.py:w1_joined``.
+    W1 = Σ_b ``cdf_gap`` · bucket_width over the full 0..n-1 spine — gap
+    buckets count, matching ``operators/drift.py:w1_joined``.
     Returns (win, rows, w1)."""
-    base = {r["bucket"]: r["n"] for r in baseline_hist.collect()}
-    tot = float(sum(base.values())) or 1.0
+    from ..operators.drift import cdf_gap
 
-    b = F.least(
-        F.greatest(F.floor(F.col(value_col) / F.lit(bucket_width)), F.lit(0)),
-        F.lit(n_buckets - 1),
-    ).cast("int")
-    bucketed = (
-        stream_df.filter(F.col(value_col).isNotNull())
-        .withColumn("_bkt", b)
-        .withWatermark(ts_col, watermark)
+    agg, base_n, tot = _windowed_bucket_counts(
+        stream_df, baseline_hist, value_col, ts_col, window, watermark,
+        bucket_width, n_buckets,
     )
-    counts = [
-        F.sum((F.col("_bkt") == i).cast("long")).alias(f"_c{i}")
-        for i in range(n_buckets)
+    cum_win = list(accumulate(F.col(f"_c{i}") for i in range(n_buckets)))
+    cum_base = list(accumulate(base_n))
+    # the last bucket's CDF gap is always 0 (both CDFs reach 1)
+    terms = [
+        cdf_gap(cum_win[i], F.lit(cum_base[i]), F.col("rows"), F.lit(tot))
+        for i in range(n_buckets - 1)
     ]
-    agg = bucketed.groupBy(F.window(ts_col, window).alias("win")).agg(
-        F.count(F.lit(1)).alias("rows"), *counts
-    )
-    w1 = None
-    cum_win = None
-    cum_base = 0.0
-    # the last bucket's CDF difference is always 0 (both CDFs reach 1)
-    for i in range(n_buckets - 1):
-        p = F.col(f"_c{i}") / F.col("rows")
-        cum_win = p if cum_win is None else cum_win + p
-        cum_base += base.get(i, 0) / tot
-        term = F.abs(cum_win - F.lit(cum_base))
-        w1 = term if w1 is None else w1 + term
     return agg.select(
         "win",
         "rows",
-        F.round(w1 * F.lit(float(bucket_width)), round_to).alias("w1"),
+        F.round(reduce(add, terms) * F.lit(float(bucket_width)), round_to).alias("w1"),
     )
 
 
@@ -532,18 +510,7 @@ def windowed_rate_anomaly_stream(
     state_schema = StructType([StructField("rates", ArrayType(DoubleType()))])
 
     def score(key, pdfs, state: GroupState):
-        import numpy as np
         import pandas as pd
-        from decimal import Decimal, ROUND_HALF_UP
-
-        def rnd(x: float, n: int) -> float:
-            # Spark's ROUND on doubles = BigDecimal.valueOf(x) (shortest
-            # repr, same as Python repr) quantized HALF_UP. Python's builtin
-            # round() is banker's — means of 6-decimal rates land on exact
-            # .5 boundaries at the 7th digit constantly, so the builtin
-            # WOULD diverge from the batch form (caught by the oracle).
-            q = Decimal(1).scaleb(-n)
-            return float(Decimal(repr(float(x))).quantize(q, ROUND_HALF_UP))
 
         hist = list(state.get[0]) if state.exists else []
         # a micro-batch may arrive as several Arrow chunks in any order:
@@ -558,16 +525,11 @@ def windowed_rate_anomaly_stream(
             for _, row in pdf.iterrows():
                 rate = float(row["rate"])
                 if hist:
-                    # sequential sum/len, NOT np.mean (pairwise summation):
-                    # the batch form's AVG accumulates sequentially in frame
+                    # the batch form's AVG / STDDEV_POP accumulate in frame
                     # order, and the published 6-decimal round sits on .5
                     # boundaries often enough that the last ulp matters
-                    acc = 0.0
-                    for h in hist:
-                        acc += h
-                    m = rnd(acc / len(hist), round_to)
-                    sd = rnd(float(np.std(hist)), round_to)
-                    z = rnd((rate - m) / sd, 4) if sd > 0 else None
+                    m, sd = (half_up(v, round_to) for v in seq_mean_std(hist))
+                    z = half_up((rate - m) / sd, 4) if sd > 0 else None
                     anom = len(hist) >= min_history and (
                         abs(z) > z_threshold if sd > 0 else rate != m
                     )

@@ -999,26 +999,6 @@ def test_schema_violations_fuzz_partition_property():
     check()
 
 
-def test_w1_counts_gap_buckets(spark):
-    """W1 must integrate |CDF diff| across buckets EMPTY ON BOTH SIDES:
-    point masses at buckets 0 and 9 are W1 = 9*width (the naive
-    joined-buckets-only sum gives 1*width); identical histograms give 0;
-    adjacent buckets give exactly width."""
-    from pyspark.sql import Row
-
-    from fsharp_data_validation_spark.operators.drift import w1
-
-    def hist(d):
-        return spark.createDataFrame([Row(bucket=b, n=n) for b, n in d.items()])
-
-    val = lambda df: df.collect()[0]["w1"]  # noqa: E731
-    assert val(w1(hist({0: 100}), hist({9: 100}), 10, 2.0)) == 18.0
-    assert val(w1(hist({0: 50, 9: 50}), hist({0: 50, 9: 50}), 10)) == 0.0
-    assert val(w1(hist({3: 10}), hist({4: 10}), 10, 5.0)) == 5.0
-    # mixed mass: a=uniform(0,1), b=all at 1 -> |cdf diff| = 0.5 at bucket 0
-    assert val(w1(hist({0: 5, 1: 5}), hist({1: 10}), 10)) == 0.5
-
-
 def test_pack_vec_kernel_equals_loop_kernel():
     """The searchsorted chunk-jump kernel must reproduce the reference
     per-row recurrence exactly — including zero-token runs (NULL texts),

@@ -1015,3 +1015,32 @@ def _rate_anomaly_stream_matches_batch(spark, tmp_path, max_records):
     # sd 0, z NULL
     spike = got[t0 + timedelta(minutes=8)]
     assert spike["anomaly"] is True and spike["z"] is None
+
+
+def test_stream_parts_mtime_order_is_series_order(spark, tmp_path):
+    """stream_rate_anomaly's source files: a file stream orders new files
+    by modification time, so the written (mtime, name) order must be the
+    series order — one file per part, named 000/001, strictly increasing
+    mtimes (files written within one timestamp tick would otherwise tie)."""
+    from datetime import datetime, timedelta
+
+    import __spark_entry__ as e
+
+    t0 = datetime(2026, 1, 1)
+    series = [(t0 + timedelta(days=d), 100 + d, d, d / 100.0) for d in range(7)]
+    sch = "win_start timestamp, n_rows bigint, n_viol bigint, rate double"
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    e._write_stream_parts(spark, [series[:3], series[3:]], sch, src)
+
+    files = sorted(
+        (os.stat(os.path.join(src, f)).st_mtime, f) for f in os.listdir(src)
+    )
+    assert [f for _, f in files] == ["000.parquet", "001.parquet"]
+    assert files[0][0] < files[1][0]
+    got = [
+        tuple(r)
+        for _, f in files
+        for r in spark.read.schema(sch).parquet(os.path.join(src, f)).collect()
+    ]
+    assert got == series

@@ -1,6 +1,6 @@
-"""Round-3 operators: conversation-flow validation, chi-square categorical
-drift, per-group W1 drift, MAD outliers, TF-IDF top terms, embedding-space
-cross-corpus contamination. Semantics pinned on hand-built fixtures; the
+"""Round-3 operators: conversation-flow validation, MAD outliers, TF-IDF
+top terms, embedding-space cross-corpus contamination (the drift members
+are pinned in test_drift.py). Semantics pinned on hand-built fixtures; the
 sf0.01 DuckDB oracles cover the derived-table scale."""
 
 import math
@@ -38,40 +38,6 @@ def test_conversation_flow_violations(spark):
         ("c3", 0, "orphan_tool_turn"),
         ("c3", 2, "orphan_tool_turn"),
     ]
-
-
-def test_chi2_known_contingency(spark):
-    """2x2 table with closed-form chi2: cells a=30,b=10 / c=10,d=30 ->
-    chi2 = n(ad-bc)^2 / ((a+b)(c+d)(a+c)(b+d)) = 80*(900-100)^2/40^4 = 20."""
-    from fsharp_data_validation_spark.operators.drift import chi2_joined
-
-    counts = spark.createDataFrame(
-        [("x", 30, 10), ("y", 10, 30)], "cat string, na long, nb long"
-    )
-    r = chi2_joined(counts).collect()[0]
-    assert r["dof"] == 1
-    assert abs(r["chi2"] - 20.0) < 1e-9
-
-    # independence -> chi2 = 0
-    indep = spark.createDataFrame(
-        [("x", 20, 20), ("y", 30, 30)], "cat string, na long, nb long"
-    )
-    assert chi2_joined(indep).collect()[0]["chi2"] == 0.0
-
-
-def test_w1_by_group_point_masses(spark):
-    """A group identical to the baseline has w1=0; a group concentrated at
-    bucket 0 vs a baseline spread to bucket 19 pays the gap distance —
-    densified-grid semantics (matching w1_joined's)."""
-    from fsharp_data_validation_spark.operators.drift import w1_by_group
-
-    rows = [("same", float(v)) for v in (0, 190)] * 10 + [("far", 0.0)] * 20
-    df = spark.createDataFrame(rows, "grp string, x double")
-    out = {r["grp"]: r["w1"] for r in w1_by_group(df, "grp", "x", 10.0, 20).collect()}
-    # baseline: 40 rows, 30 at bucket 0 and 10 at bucket 19
-    # 'same' group: half at 0, half at 19 -> |CDF diff| = .25 over 19 gaps
-    assert abs(out["far"] - (1 - 30 / 40) * 19 * 10.0) < 1e-6
-    assert abs(out["same"] - abs(0.5 - 30 / 40) * 19 * 10.0) < 1e-6
 
 
 def test_mad_outliers_robust_center(spark):
@@ -252,22 +218,6 @@ def test_repeated_turns_scoped_to_conversation(spark):
     assert (r["conv_id"], r["n_repeats"], r["first_turn"], r["last_turn"]) == (
         "c1", 3, 0, 5,
     )
-
-
-def test_cvm_closed_forms(spark):
-    from fsharp_data_validation_spark.operators.drift import cvm_joined
-
-    # identical histograms -> 0
-    same = spark.createDataFrame(
-        [(0, 10, 10), (1, 30, 30)], "bucket int, na long, nb long"
-    )
-    assert cvm_joined(same).collect()[0]["cvm"] == 0.0
-
-    # fully disjoint mass: Fa=[1,1], Fb=[0,1], w=[.5,.5] -> 0.5*1 + 0.5*0
-    disjoint = spark.createDataFrame(
-        [(0, 10, 0), (1, 0, 10)], "bucket int, na long, nb long"
-    )
-    assert abs(cvm_joined(disjoint).collect()[0]["cvm"] - 0.5) < 1e-9
 
 
 def test_misra_gries_sketch_bounds_and_merge(spark):
@@ -471,31 +421,6 @@ def test_top_ngram_fraction_tiebreak_and_short_docs(spark):
     # overlapping occurrences can cover > chars: fraction is capped at 1
     assert got[4]["n_occurrences"] == 3 and got[4]["char_frac"] == 1.0
     assert got[2]["top_ngram"] == "x y" and got[2]["char_frac"] == 1.0
-
-
-def test_chi2_by_group_identical_and_skewed(spark):
-    """A group distributed exactly like the baseline scores chi2 = 0
-    (its contingency rows are proportional); a skewed group scores > 0,
-    and a category the group is MISSING still contributes."""
-    from fsharp_data_validation_spark.operators.drift import chi2_by_group
-
-    rows = (
-        [("g1", "a")] * 30 + [("g1", "b")] * 10
-        + [("g2", "a")] * 30 + [("g2", "b")] * 10  # same 3:1 mix -> chi2 0
-    )
-    df = spark.createDataFrame(rows, "grp string, cat string")
-    got = {r["grp"]: r for r in chi2_by_group(df, "grp", "cat").collect()}
-    assert got["g1"]["chi2"] == 0.0 and got["g2"]["chi2"] == 0.0
-    assert got["g1"]["dof"] == 1 and got["g1"]["n_rows"] == 40
-
-    rows2 = [("g1", "a")] * 40 + [("g2", "b")] * 40  # disjoint categories
-    got2 = {
-        r["grp"]: r
-        for r in chi2_by_group(
-            spark.createDataFrame(rows2, "grp string, cat string"), "grp", "cat"
-        ).collect()
-    }
-    assert got2["g1"]["chi2"] > 0 and got2["g1"]["dof"] == 1
 
 
 def test_zipf_fit_exact_power_law(spark):
