@@ -604,11 +604,7 @@ class Suite:
         """Per-constraint (constraint, fires: bool, n_failures: int) columns
         with the refute masks applied — pure boolean/int algebra, NO
         array/struct allocation (stays inside whole-stage codegen)."""
-        out: List[Tuple[Constraint, Column, Column]] = []
-        refuted: dict[str, Column] = {}
-        for item in self._compiled():
-            out.append((item[1], item[2], item[3]))
-        return out
+        return [(c, fail, n) for _, c, fail, n, _ in self._compiled()]
 
     def _compiled(self):
         """Shared compile pass: yields ``(ord, constraint, fail, n_failures,

@@ -2,8 +2,12 @@
 
 - brute-force cosine top-k (the exact baseline; oracle-checkable);
 - threshold near-duplicate pairs;
-- random-hyperplane LSH bucketing via an Arrow-batched pandas UDF
+- random-hyperplane LSH bucketing via an Arrow UDF
   (numpy matmul per batch — the 100 TB scale path; no per-row Python).
+
+Every Python kernel here is an ``arrow_udf`` (``pa.Array`` in and out) or a
+``groupBy().applyInArrow`` (``pa.Table`` in and out), and vector columns
+cross the boundary only through ``_matrix``.
 
 Cosine math is done after casting to array<double> so Spark's
 element-by-element accumulation matches the DuckDB oracle bit-for-bit
@@ -15,9 +19,16 @@ from __future__ import annotations
 from typing import Optional
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from ..cache import persist_tracked
 from ..rounding import half_up
@@ -41,24 +52,46 @@ def _as_double(df: DataFrame, vec_col: str) -> DataFrame:
     return df.withColumn(vec_col, F.col(vec_col).cast("array<double>"))
 
 
-from pyspark.sql.types import DoubleType  # noqa: E402
+def _matrix(arr: pa.Array | pa.ChunkedArray) -> np.ndarray:
+    """``(n, dim)`` float64 matrix of a ``list<double>`` Arrow array or
+    ChunkedArray, read from its offsets and values buffer — no per-row
+    objects. NULL or ragged rows raise ``ValueError``; checking the offsets
+    is what catches ragged rows, which a bare reshape would misread."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    n = len(arr)
+    if arr.null_count:
+        raise ValueError("NULL vector row")
+    if n == 0:
+        return np.empty((0, 0))
+    off = arr.offsets.to_numpy()
+    dim = int(off[1] - off[0])
+    if not np.array_equal(off - off[0], np.arange(n + 1) * dim):
+        raise ValueError("ragged vector rows")
+    values = arr.values.slice(off[0], n * dim).to_numpy(zero_copy_only=False)
+    return values.astype(np.float64, copy=False).reshape(n, dim)
 
 
-@F.pandas_udf(DoubleType())
-def _pair_cosine(va: pd.Series, vb: pd.Series) -> pd.Series:
+def _list_array(m: np.ndarray) -> pa.Array:
+    """One Arrow list per row of a 2-D array, built from offsets."""
+    offsets = np.arange(m.shape[0] + 1, dtype=np.int32) * m.shape[1]
+    return pa.ListArray.from_arrays(offsets, m.ravel())
+
+
+@F.arrow_udf(DoubleType())
+def _pair_cosine(va: pa.Array, vb: pa.Array) -> pa.Array:
     """Arrow-vectorized cosine over joined pairs: one einsum per batch
     (float64), no per-row Python. This is the verify kernel for both the
     exact O(n^2) path and the LSH candidate path — at scale it only ever
     sees candidate pairs, so Arrow transfer is bounded by candidates, not
     n^2."""
-    if len(va) == 0:
-        return pd.Series([], dtype="float64")
-    a = np.stack(va.to_numpy())
-    b = np.stack(vb.to_numpy())
+    a, b = _matrix(va), _matrix(vb)
     dots = np.einsum("ij,ij->i", a, b)
     na = np.sqrt(np.einsum("ij,ij->i", a, a))
     nb = np.sqrt(np.einsum("ij,ij->i", b, b))
-    return pd.Series(dots / (na * nb))
+    # from_pandas: NaN (zero-norm or NaN-component vector) -> NULL, so such a
+    # vector fails every sim >= threshold filter and sorts last in a top-k
+    return pa.array(dots / (na * nb), from_pandas=True)
 
 
 def brute_force_topk(
@@ -133,7 +166,7 @@ def near_dup_pairs_blocked(
 ) -> DataFrame:
     """Exact all-pairs cosine via **block-matrix GEMM**: vectors are hashed
     into ``blocks`` blocks; every block pair (bi <= bj) becomes one group;
-    ``applyInPandas`` computes the (n/B x n/B) similarity tile with one
+    ``applyInArrow`` computes the (n/B x n/B) similarity tile with one
     float64 matmul and emits only pairs above threshold.
 
     Vs the naive pair join, shuffled bytes drop from O(n^2) joined array
@@ -141,12 +174,6 @@ def near_dup_pairs_blocked(
     output as ``near_dup_pairs`` (values rounded identically) — it is
     oracle-checked against the same exact-cosine SQL.
     """
-    from pyspark.sql.types import (
-        LongType,
-        StructField,
-        StructType,
-    )
-
     v = _as_double(vectors, vec_col).select(
         F.col(id_col).alias("vid"),
         F.col(vec_col).alias("v"),
@@ -169,18 +196,14 @@ def near_dup_pairs_blocked(
         ]
     )
 
-    def tile_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        bi, bj = int(pdf["bi"].iloc[0]), int(pdf["bj"].iloc[0])
-        blk = pdf["blk"].to_numpy()
-        m = np.stack(pdf["v"].to_numpy())
+    def tile_kernel(table: pa.Table) -> pa.Table:
+        bi, bj = table["bi"][0].as_py(), table["bj"][0].as_py()
+        blk = table["blk"].to_numpy()
+        m = _matrix(table["v"])
         norms = np.sqrt(np.einsum("ij,ij->i", m, m))
-        vids = pdf["vid"].to_numpy()
+        vids = table["vid"].to_numpy().astype(np.int64)
         ia = np.flatnonzero(blk == bi)
         ib = np.flatnonzero(blk == bj)
-        if len(ia) == 0 or len(ib) == 0:
-            return pd.DataFrame({"id_a": [], "id_b": [], "sim": []}).astype(
-                {"id_a": "int64", "id_b": "int64", "sim": "float64"}
-            )
         sims = (m[ia] @ m[ib].T) / np.outer(norms[ia], norms[ib])
         idx_a, idx_b = np.nonzero(half_up(sims, round_to) >= threshold)
         a_ids, b_ids = vids[ia][idx_a], vids[ib][idx_b]
@@ -193,9 +216,9 @@ def near_dup_pairs_blocked(
             lo = np.minimum(a_ids, b_ids)
             hi = np.maximum(a_ids, b_ids)
             s = sims[idx_a, idx_b]
-        return pd.DataFrame({"id_a": lo, "id_b": hi, "sim": half_up(s, round_to)})
+        return pa.table({"id_a": lo, "id_b": hi, "sim": half_up(s, round_to)})
 
-    return tiles.groupBy("bi", "bj").applyInPandas(tile_kernel, out_schema)
+    return tiles.groupBy("bi", "bj").applyInArrow(tile_kernel, out_schema)
 
 
 def _sq_dists(m: np.ndarray, centers: np.ndarray, chunk: int = 4096) -> np.ndarray:
@@ -215,6 +238,18 @@ def _sq_dists(m: np.ndarray, centers: np.ndarray, chunk: int = 4096) -> np.ndarr
         d = (t * t).sum(axis=1)[:, None] + c2 - 2.0 * (t @ centers.T)
         np.maximum(d, 0.0, out=out[lo:lo + chunk])
     return out
+
+
+def _nearest_cell(centers: np.ndarray):
+    """Arrow UDF: each vector's nearest centroid index. argmin ties ->
+    lowest cell index (matches the oracles' ORDER BY distance, cell)."""
+
+    @F.arrow_udf(IntegerType())
+    def assign_cell(batch: pa.Array) -> pa.Array:
+        d2 = _sq_dists(_matrix(batch), centers)
+        return pa.array(np.argmin(d2, axis=1).astype("int32"))
+
+    return assign_cell
 
 
 def sampled_centroids(
@@ -264,7 +299,7 @@ def ivf_topk(
     ``sampled_centroids``: deterministic AND DuckDB-replayable, which is
     how the approximate-path recall is oracle-attested). Cell assignment
     is one pass over the vectors (model transform / argmin-distance Arrow
-    UDF); the probe step broadcasts the tiny centroid matrix into a pandas
+    UDF); the probe step broadcasts the tiny centroid matrix into an Arrow
     UDF that returns each query's probe-cell list; candidates come from an
     equi-join on cell id (shuffle bounded by list sizes, not n^2); rerank
     reuses the Arrow pair-cosine kernel + a per-query top-k window.
@@ -273,8 +308,6 @@ def ivf_topk(
     ``brute_force_topk`` (ties broken identically); smaller ``n_probe`` is
     the 100 TB path, attested by ``recall_report`` (query ``ann_recall``).
     """
-    from pyspark.sql.types import ArrayType, IntegerType
-
     v = _as_double(vectors, vec_col).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("v")
     )
@@ -282,17 +315,8 @@ def ivf_topk(
         centers = np.asarray(centroids, dtype="float64")
         n_cells = len(centers)
 
-        @F.pandas_udf(IntegerType())
-        def assign_cell(batch: pd.Series) -> pd.Series:
-            if len(batch) == 0:
-                return pd.Series([], dtype="int32")
-            d2 = _sq_dists(np.stack(batch.to_numpy()), centers)
-            # argmin ties -> lowest cell index (matches the oracle's
-            # ORDER BY distance, cell)
-            return pd.Series(np.argmin(d2, axis=1).astype("int32"))
-
         assigned = v.select(
-            "neighbor_id", "v", assign_cell(F.col("v")).alias("cell")
+            "neighbor_id", "v", _nearest_cell(centers)(F.col("v")).alias("cell")
         )
     else:
         from pyspark.ml.clustering import KMeans
@@ -310,14 +334,12 @@ def ivf_topk(
              for c in model.clusterCenters()]
         )
 
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def probe_cells(qs: pd.Series) -> pd.Series:
-        if len(qs) == 0:
-            return pd.Series([], dtype="object")
-        d2 = _sq_dists(np.stack(qs.to_numpy()), centers)  # (q, cells)
+    @F.arrow_udf(ArrayType(IntegerType()))
+    def probe_cells(qs: pa.Array) -> pa.Array:
+        d2 = _sq_dists(_matrix(qs), centers)  # (q, cells)
         # stable sort: equidistant cells probe in index order (oracle parity)
         order = np.argsort(d2, axis=1, kind="stable")[:, :n_probe].astype("int32")
-        return pd.Series(list(order))
+        return _list_array(order)
 
     q = _as_double(queries, vec_col).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q")
@@ -362,7 +384,7 @@ def semdedup(
     chunked-GEMM kernel shared with ``ivf_topk``; ties -> lowest cell
     index, matching the oracle's ORDER BY distance, cell), persisted so
     the pair stage and the final report read the assignment once. The
-    within-cell pairing is ONE ``applyInPandas`` group per cell computing
+    within-cell pairing is ONE ``applyInArrow`` group per cell computing
     the cell's full cosine matrix with a single float64 GEMM and reducing
     it to per-vector earlier-neighbor counts IN the kernel — each vector
     moves through the shuffle once (O(n) bytes), not once per pair. This
@@ -383,37 +405,22 @@ def semdedup(
     if centroids is None:
         centroids = sampled_centroids(vectors, id_col, vec_col, n_cells)
     centers = np.asarray(centroids, dtype="float64")
-
-    from pyspark.sql.types import IntegerType
-
-    @F.pandas_udf(IntegerType())
-    def assign_cell(batch: pd.Series) -> pd.Series:
-        if len(batch) == 0:
-            return pd.Series([], dtype="int32")
-        d2 = _sq_dists(np.stack(batch.to_numpy()), centers)
-        return pd.Series(np.argmin(d2, axis=1).astype("int32"))
-
     assigned = persist_tracked(
         _as_double(vectors, vec_col).select(
             F.col(id_col).alias("_id"),
             F.col(vec_col).alias("_v"),
-            assign_cell(F.col(vec_col)).alias("cell"),
+            _nearest_cell(centers)(F.col(vec_col)).alias("cell"),
         )
     )
-    from pyspark.sql.types import LongType, StructField, StructType
-
     dup_schema = StructType(
         [StructField("_idb", LongType()), StructField("n_dup_earlier", LongType())]
     )
 
-    def cell_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return pd.DataFrame({"_idb": [], "n_dup_earlier": []}).astype(
-                {"_idb": "int64", "n_dup_earlier": "int64"}
-            )
-        order = np.argsort(pdf["_id"].to_numpy(), kind="stable")
-        ids = pdf["_id"].to_numpy()[order]
-        m = np.stack(pdf["_v"].to_numpy())[order]
+    def cell_kernel(table: pa.Table) -> pa.Table:
+        ids = table["_id"].to_numpy()
+        order = np.argsort(ids, kind="stable")
+        ids = ids[order]
+        m = _matrix(table["_v"])[order]
         norms = np.sqrt(np.einsum("ij,ij->i", m, m))
         sims = (m @ m.T) / np.outer(norms, norms)
         hit = half_up(sims, round_to) >= threshold
@@ -421,11 +428,11 @@ def semdedup(
         # column sums = per-vector earlier-neighbor counts
         counts = np.triu(hit, k=1).sum(axis=0).astype("int64")
         keep = counts > 0
-        return pd.DataFrame(
+        return pa.table(
             {"_idb": ids[keep].astype("int64"), "n_dup_earlier": counts[keep]}
         )
 
-    dupc = assigned.groupBy("cell").applyInPandas(cell_kernel, dup_schema)
+    dupc = assigned.groupBy("cell").applyInArrow(cell_kernel, dup_schema)
     return (
         assigned.join(dupc, assigned["_id"] == dupc["_idb"], "left")
         .select(
@@ -448,7 +455,7 @@ def lsh_buckets(
 ) -> DataFrame:
     """Random-hyperplane (sign) sketch, multi-table: per table t, bucket_t =
     bits of sign(V @ P_t^T). P is a fixed seeded Gaussian tensor; the dot
-    products run as ONE numpy matmul per Arrow batch inside a pandas UDF
+    products run as ONE numpy matmul per Arrow batch inside an Arrow UDF
     (vectorized, no per-row Python). Candidates at scale = self-join on
     (table, bucket); two vectors at angle theta share a table's bucket with
     probability (1 - theta/pi)^n_planes, and miss ALL tables with
@@ -456,16 +463,16 @@ def lsh_buckets(
     Returns (id, table, bucket) — one row per table via posexplode."""
     planes = np.random.default_rng(seed).standard_normal((n_tables * n_planes, dim))
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def sketch(batch: pd.Series) -> pd.Series:
+    @F.arrow_udf(ArrayType(LongType()))
+    def sketch(batch: pa.Array) -> pa.Array:
         if len(batch) == 0:
-            return pd.Series([], dtype="object")
-        m = np.stack(batch.to_numpy())  # (rows, dim)
+            return pa.array([], pa.list_(pa.int64()))
+        m = _matrix(batch)  # (rows, dim)
         signs = (m @ planes.T) > 0  # (rows, n_tables*n_planes)
         signs = signs.reshape(len(m), n_tables, n_planes)
         weights = (1 << np.arange(n_planes)).astype(np.int64)
         buckets = signs.astype(np.int64) @ weights  # (rows, n_tables)
-        return pd.Series(list(buckets))
+        return _list_array(buckets)
 
     sk = vectors.select(
         F.col(id_col), sketch(F.col(vec_col).cast("array<double>")).alias("bks")
@@ -550,13 +557,11 @@ def cross_corpus_cosine_pairs(
     GEMM rather than emitted as NaN; route them through
     ``embedding_health`` first if they need accounting.
 
-    ``blocks`` also BOUNDS task parallelism (one applyInPandas group per
+    ``blocks`` also BOUNDS task parallelism (one applyInArrow group per
     block): size it to a small multiple of cluster parallelism — measured
     N->4N scaling is 0.36 with blocks < cores and 0.8+ with blocks >= 4x
     cores (BENCH.md, ann family). The eval replication cost grows linearly
     with blocks, so don't overshoot by orders of magnitude."""
-    from pyspark.sql.types import StructField, StructType
-
     # the id columns keep the INPUT id type (string corpus ids are as
     # legitimate as bigint ones); both sides must agree
     id_type = train.schema[id_col].dataType
@@ -565,7 +570,6 @@ def cross_corpus_cosine_pairs(
             f"{id_col} type mismatch: train={id_type.simpleString()} "
             f"eval={eval_df.schema[id_col].dataType.simpleString()}"
         )
-    id_np = "object" if id_type.simpleString() == "string" else "int64"
 
     t = _as_double(train, vec_col).select(
         F.col(id_col).alias("vid"),
@@ -587,31 +591,25 @@ def cross_corpus_cosine_pairs(
         ]
     )
 
-    def tile_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"id_a": [], "id_b": [], "sim": []}).astype(
-            {"id_a": id_np, "id_b": id_np, "sim": "float64"}
-        )
-        m_all = np.stack(pdf["v"].to_numpy()) if len(pdf) else np.zeros((0, 1))
-        norms_all = np.sqrt(np.einsum("ij,ij->i", m_all, m_all))
-        nonzero = norms_all > 0.0  # cosine undefined for zero vectors: drop
-        side = pdf["side"].to_numpy()
+    def tile_kernel(table: pa.Table) -> pa.Table:
+        m = _matrix(table["v"])
+        norms = np.sqrt(np.einsum("ij,ij->i", m, m))
+        nonzero = norms > 0.0  # cosine undefined for zero vectors: drop
+        side = table["side"].to_numpy()
         ia = np.flatnonzero((side == 0) & nonzero)
         ib = np.flatnonzero((side == 1) & nonzero)
-        if len(ia) == 0 or len(ib) == 0:
-            return empty
-        m, norms = m_all, norms_all
-        vids = pdf["vid"].to_numpy()
         sims = (m[ia] @ m[ib].T) / np.outer(norms[ia], norms[ib])
         idx_a, idx_b = np.nonzero(half_up(sims, round_to) >= threshold)
-        return pd.DataFrame(
+        # take() keeps the input id type (bigint or string)
+        return pa.table(
             {
-                "id_a": vids[ia][idx_a],
-                "id_b": vids[ib][idx_b],
+                "id_a": table["vid"].take(ia[idx_a]),
+                "id_b": table["vid"].take(ib[idx_b]),
                 "sim": half_up(sims[idx_a, idx_b], round_to),
             }
         )
 
-    return t.unionByName(e).groupBy("blk").applyInPandas(tile_kernel, out_schema)
+    return t.unionByName(e).groupBy("blk").applyInArrow(tile_kernel, out_schema)
 
 
 def embedding_health(

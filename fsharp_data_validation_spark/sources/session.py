@@ -3,14 +3,20 @@
 Local-mode defaults follow the public Spark tuning guidance: AQE on (runtime
 re-plan + skew handling), shuffle partitions sized to cores (not 200), Arrow
 enabled for the few vectorized-UDF kernels, UTC session timezone so timestamp
-math matches the DuckDB oracle.
+math matches the DuckDB oracle. Python workers run under the engine's own
+daemon (``pyworker``), which skips re-reading unchanged zip directories on
+every task; the package root goes on the workers' path so the daemon
+imports from any working directory.
 """
 
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_ROOT = str(Path(__file__).resolve().parents[2])
 
 
 def get_spark(
@@ -36,6 +42,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "fsharp_data_validation_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)
