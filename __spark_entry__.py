@@ -63,11 +63,7 @@ def _transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    t = _transcripts(spark, "/root/testdata/sf0.001")
-    res = transcript_row_suite().run(t, KEY)
-    return res.violations.select(
-        "conv_id", "turn_idx", "ts", F.col("path_str").alias("path"), "code"
-    )
+    return q_row_suite(spark, "/root/testdata/sf0.001")
 
 
 # --------------------------------------------------------------------------
@@ -1227,7 +1223,7 @@ SELECT src AS doc_id, MIN(dst) AS component FROM reach GROUP BY src
 @query(_COMPONENTS_ORACLE, quadratic=True)
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clustering: connected components of the exact-Jaccard pair
-    graph via iterative min-label propagation (checked against a DuckDB
+    graph via large-star/small-star contraction (checked against a DuckDB
     recursive-CTE transitive closure)."""
     from fsharp_data_validation_spark.operators.dedup import near_dup_components
     from fsharp_data_validation_spark.sources.documents import load_docs

@@ -10,7 +10,7 @@ executor-memory leak across operator invocations.
 
 Every ``persist()`` in this package goes through :func:`persist_tracked`,
 which registers the DataFrame in a process-wide registry.  Callers release
-in one of three ways:
+in one of two ways:
 
 - :func:`release_caches` — unpersist everything tracked (and optionally
   sweep localCheckpoint residue).  ``bench.py`` and ``tools/check_oracle.py``
@@ -18,8 +18,6 @@ in one of three ways:
 - :func:`cache_scope` — context manager releasing only what was tracked
   inside the ``with`` block (safe inside a larger pipeline that has its own
   live caches).
-- :func:`untrack` — release one superseded intermediate early (iterative
-  loops).
 
 Unpersisting a tracked DataFrame is always SAFE, never load-bearing: these
 are ``persist()`` plans with full lineage, so a later re-evaluation simply
@@ -49,29 +47,12 @@ def persist_tracked(df: DataFrame, storage_level=None) -> DataFrame:
     return out
 
 
-def untrack(df: DataFrame, blocking: bool = False) -> None:
-    """Unpersist one tracked DataFrame early (superseded loop state)."""
-    with _LOCK:
-        try:
-            _LIVE.remove(df)
-        except ValueError:
-            pass
-    try:
-        df.unpersist(blocking)
-    except Exception:
-        pass
-
-
 def tracked_count() -> int:
     with _LOCK:
         return len(_LIVE)
 
 
-def release_caches(
-    spark: SparkSession | None = None,
-    blocking: bool = False,
-    sweep_rdds: bool = False,
-) -> int:
+def release_caches(spark: SparkSession | None = None, sweep_rdds: bool = False) -> int:
     """Unpersist every tracked DataFrame; returns how many were released.
 
     ``sweep_rdds=True`` (requires ``spark``) additionally unpersists ALL
@@ -86,7 +67,7 @@ def release_caches(
     n = 0
     for df in reversed(live):
         try:
-            df.unpersist(blocking)
+            df.unpersist()
             n += 1
         except Exception:
             pass
@@ -94,7 +75,7 @@ def release_caches(
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
         for jrdd in list(jmap.values()):
             try:
-                jrdd.unpersist(blocking)
+                jrdd.unpersist(False)
                 n += 1
             except Exception:
                 pass
@@ -102,7 +83,7 @@ def release_caches(
 
 
 @contextmanager
-def cache_scope(blocking: bool = False) -> Iterator[None]:
+def cache_scope() -> Iterator[None]:
     """Release (only) the caches tracked inside this block on exit."""
     with _LOCK:
         mark = len(_LIVE)
@@ -114,6 +95,6 @@ def cache_scope(blocking: bool = False) -> Iterator[None]:
             del _LIVE[mark:]
         for df in reversed(scoped):
             try:
-                df.unpersist(blocking)
+                df.unpersist()
             except Exception:
                 pass

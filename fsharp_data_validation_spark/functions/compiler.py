@@ -879,8 +879,6 @@ class SuiteResult:
             F.count(F.lit(1)).alias("rows_scanned"),
             F.sum((F.col("_nf") > 0).cast("long")).alias("rows_with_violations"),
             F.sum("_nf").cast("long").alias("violations"),
-            F.lit(
-                len([c for c in self.suite.constraints if c.kind != PROOF_GATE])
-            ).alias("constraints_evaluated"),
+            F.lit(len(self.suite.codes)).alias("constraints_evaluated"),
             (F.sum("_nf") == 0).alias("pass"),
         )

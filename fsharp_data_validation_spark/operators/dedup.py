@@ -26,10 +26,9 @@ Scale design (the reason these shapes were chosen):
 
 from __future__ import annotations
 
-import warnings
 from typing import List, Tuple
 
-from ..cache import persist_tracked, untrack
+from ..cache import persist_tracked
 
 from pyspark.sql import DataFrame, Window, functions as F
 
@@ -485,106 +484,32 @@ def near_dup_components(
     n: int = 3,
     threshold: float = 0.8,
     max_iter: int = 20,
-    algorithm: str = "star",
 ) -> DataFrame:
     """Connected components of the near-dup pair graph — the clustering
     step of corpus dedup (pick one representative per near-dup cluster).
-    Pairs come from the exact prefix-filtered Jaccard join; labels converge
-    by min-label propagation: every node repeatedly takes the minimum of
-    its own and its neighbors' labels. Returns (id_col, component) for
-    every doc; singletons label themselves.
-
-    Scale notes: propagation runs O(cluster diameter) rounds — near-dup
-    clusters are shallow (dups of a common source), so a handful of rounds;
-    each round is one shuffle join edge⋈labels + an aggregation, with
-    ``localCheckpoint`` truncating the growing lineage (iterative plans
-    otherwise re-plan from the root each round). The loop runs ONLY over
-    nodes that appear in some pair (graph nodes ≪ corpus — dup pairs are
-    the exception, not the rule); the corpus's singleton majority never
-    enters a round and is attached once at the end with label = self, so
-    per-round shuffle volume scales with the duplicate graph, not the
-    corpus.
-
-    ``algorithm="star"`` (default) uses alternating large-star/small-star
-    contraction (``connected_components_star`` — O(log^2 n) rounds on ANY
-    graph shape, vs O(diameter) for propagation). Measured on the sf0.1
-    corpus (local[32], min-of-2, two interleaved A/Bs in one session):
-    star 5.0-5.6 s end-to-end vs propagation 12.6-25.6 s — star converges
-    in fewer blocking rounds, and each propagation round pays a
-    localCheckpoint materialization + a convergence-check job. Both
-    variants are output-identical (equality test + oracle) and
-    ``algorithm="propagation"`` remains available."""
+    Pairs come from the exact prefix-filtered Jaccard join; components come
+    from alternating large-star/small-star contraction
+    (``connected_components_star`` — O(log^2 n) rounds on ANY graph shape).
+    Returns (id_col, component) for every doc; singletons label themselves:
+    the contraction runs ONLY over nodes that appear in some pair (graph
+    nodes ≪ corpus), and the corpus's singleton majority is attached once
+    at the end with label = self. Star contraction beat O(diameter)-round
+    min-label propagation 5.0-5.6 s vs 12.6-25.6 s on the sf0.1 corpus
+    (BENCH.md "connected-components algorithm choice")."""
     pairs = ngram_jaccard_pairs(df, id_col, text_col, n, threshold).select(
         "id_a", "id_b"
     )
-    if algorithm == "star":
-        comp = connected_components_star(
-            pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")),
-            max_iter=max_iter,
-        ).withColumnRenamed("node", "_n")
-        return (
-            df.select(F.col(id_col).alias("_n").cast("long"))
-            .distinct()
-            .join(comp, "_n", "left")
-            .select(
-                F.col("_n").alias(id_col),
-                F.coalesce(F.col("component"), F.col("_n")).alias("component"),
-            )
-        )
-    sym = persist_tracked(
-        pairs.union(
-            pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
-        )
-        .toDF("src", "dst")
-    )
-    labels = sym.select(F.col("src").alias("node")).distinct().withColumn(
-        "label", F.col("node")
-    )
-    labels = labels.localCheckpoint()
-    # labels are monotonically non-increasing per node, so sum(label) is a
-    # strictly-decreasing convergence witness: unchanged sum <=> fixpoint.
-    # One aggregate per round instead of a join+count job.
-    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-    converged = False
-    for _ in range(max_iter):
-        nbr_min = (
-            sym.join(labels, sym["dst"] == labels["node"])
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        labels = (
-            labels.join(nbr_min, labels["node"] == nbr_min["src"], "left")
-            .select(
-                labels["node"].alias("node"),
-                F.least(
-                    labels["label"], F.coalesce(F.col("nbr_label"), labels["label"])
-                ).alias("label"),
-            )
-            .localCheckpoint()
-        )
-        cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    untrack(sym)
-    if not converged:
-        warnings.warn(
-            f"near_dup_components: min-label propagation did not reach a "
-            f"fixpoint within max_iter={max_iter} rounds; component labels "
-            f"may be unmerged for clusters of diameter > {max_iter}",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    # attach the singleton majority (docs in no pair): label = self, one
-    # left join against the (small) converged graph labels
+    comp = connected_components_star(
+        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")),
+        max_iter=max_iter,
+    ).withColumnRenamed("node", "_n")
     return (
-        df.select(F.col(id_col).alias("node"))
+        df.select(F.col(id_col).alias("_n").cast("long"))
         .distinct()
-        .join(labels, "node", "left")
+        .join(comp, "_n", "left")
         .select(
-            F.col("node").alias(id_col),
-            F.coalesce(F.col("label"), F.col("node")).alias("component"),
+            F.col("_n").alias(id_col),
+            F.coalesce(F.col("component"), F.col("_n")).alias("component"),
         )
     )
 

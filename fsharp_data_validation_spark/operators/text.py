@@ -395,10 +395,8 @@ def curate_dedup_pack(
 
 
 def _pack_batch_loop(convs, ns, state, budget):
-    """Reference per-row kernel for one Arrow batch of the greedy packing
-    recurrence. ``state = [conv, chunk, acc, rn]`` carries across batches.
-    Kept as the pinned semantics (the vectorized kernel is fuzz-checked
-    against it row-for-row)."""
+    """Per-row kernel for one Arrow batch of the greedy packing recurrence.
+    ``state = [conv, chunk, acc, rn]`` carries across batches."""
     import numpy as np
 
     conv, chunk, acc, rn = state
@@ -421,67 +419,12 @@ def _pack_batch_loop(convs, ns, state, budget):
     return out_chunk, out_rn
 
 
-def _pack_batch_vec(convs, ns, state, budget):
-    """Vectorized kernel: same recurrence, one ``searchsorted`` jump per
-    CHUNK instead of one Python iteration per ROW (a budget of B over
-    ~T-token turns means ~B/T rows per jump). Per conversation segment,
-    with ``e`` the carried-inclusive running token cumsum: a chunk starting
-    at e-value ``b`` extends through the maximal prefix with e <= b+budget
-    (side='right' keeps trailing zero-token rows, which always join), and
-    when the chunk has no positive row yet (acc==0 — the loop's
-    ``acc > 0 and`` guard) it must absorb rows through the first positive
-    one even over budget."""
-    import numpy as np
-
-    m = len(ns)
-    out_chunk = np.empty(m, dtype=np.int64)
-    out_rn = np.empty(m, dtype=np.int64)
-    if m == 0:
-        return out_chunk, out_rn
-    conv0, chunk0, acc0, rn0 = state
-    bounds = np.flatnonzero(convs[1:] != convs[:-1]) + 1
-    seg_starts = np.concatenate(([0], bounds))
-    seg_ends = np.concatenate((bounds, [m]))
-    for s, t in zip(seg_starts, seg_ends):
-        cont = convs[s] == conv0
-        carried_acc = int(acc0) if cont else 0
-        chunk_no = int(chunk0) if cont else 1
-        rn_base = int(rn0) if cont else 0
-        k = t - s
-        out_rn[s:t] = rn_base + np.arange(1, k + 1, dtype=np.int64)
-        e = carried_acc + np.cumsum(ns[s:t], dtype=np.int64)
-        pos, acc_cur = 0, carried_acc
-        while pos < k:
-            prev_e = int(e[pos - 1]) if pos > 0 else carried_acc
-            b = prev_e - acc_cur  # e-value at the current chunk's start
-            end = int(np.searchsorted(e, b + budget, side="right"))
-            if acc_cur == 0:
-                j0 = int(np.searchsorted(e, b, side="right"))
-                end = max(end, j0 + 1)
-            end = min(end, k)
-            if end <= pos:
-                # current non-empty chunk can't take the next row
-                chunk_no += 1
-                acc_cur = 0
-                continue
-            out_chunk[s + pos : s + end] = chunk_no
-            acc_cur += int(e[end - 1]) - prev_e
-            pos = end
-            if pos < k:
-                chunk_no += 1
-                acc_cur = 0
-        conv0, chunk0, acc0, rn0 = convs[t - 1], chunk_no, acc_cur, rn_base + k
-    state[:] = conv0, chunk0, acc0, rn0
-    return out_chunk, out_rn
-
-
 def pack_context_windows(
     df: DataFrame,
     conv_col: str = "conv_id",
     order_col: str = "turn_idx",
     text_col: str = "text",
     budget: int = 64,
-    kernel: str = "loop",
     tokenizer: str = "whitespace",
 ) -> DataFrame:
     """Greedy context-window packing — assign each conversation turn to a
@@ -504,16 +447,6 @@ def pack_context_windows(
     conversation split across batches packs correctly; per-row state is
     O(1), never corpus-scale. The DuckDB oracle is an independent
     recursive-CTE spec of the same recurrence.
-
-    ``kernel`` selects the per-batch implementation, both fuzz-pinned
-    identical (tests/test_pipeline_ops.py::test_pack_vec_kernel_equals_loop_kernel):
-    ``"loop"`` (default) is the per-row recurrence; ``"vec"`` jumps one
-    ``searchsorted`` per CHUNK. Measured head-to-head (BENCH.md): at this
-    table's shape (~8-token turns, budget 64 → ~8 rows/chunk) the loop wins
-    (366 vs 821 ns/row pure-kernel; 5.0 vs 7.3 s end-to-end at 10M turns)
-    because per-chunk numpy call overhead exceeds the tight per-row loop,
-    and the kernel is <2% of pipeline wall anyway (shuffle/Arrow-bound).
-    ``"vec"`` wins only when budget >> per-turn tokens (long chunk jumps).
 
     ``tokenizer`` selects the budget unit: ``"whitespace"`` (default, the
     rule of ``token_count``) or ``"bpe"`` (greedy-subword counts via
@@ -562,14 +495,12 @@ def pack_context_windows(
         ]
     )
 
-    kern = _pack_batch_vec if kernel == "vec" else _pack_batch_loop
-
     def pack_iter(batches):
         state = [None, 1, 0, 0]  # conv, chunk, acc, rn — carried across batches
         for pdf in batches:
             convs = pdf[conv_col].to_numpy()
             ns = pdf["n_tokens"].to_numpy()
-            out_chunk, out_rn = kern(convs, ns, state, budget)
+            out_chunk, out_rn = _pack_batch_loop(convs, ns, state, budget)
             yield pd.DataFrame(
                 {
                     conv_col: pdf[conv_col],

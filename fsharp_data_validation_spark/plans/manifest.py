@@ -38,9 +38,9 @@ import time
 from dataclasses import dataclass
 from typing import List, Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from ..functions.compiler import PROOF_GATE, Suite
+from ..functions.compiler import Suite
 
 
 class SnapshotDriftError(RuntimeError):
@@ -112,6 +112,17 @@ def _atomic_write(path: str, payload: dict) -> None:
         f.flush()
         os.fsync(f.fileno())
     os.replace(tmp, path)
+
+
+def _write_parts(out: DataFrame, path: str) -> None:
+    """Write ``out`` under ``path`` partitioned by ``part``, replacing only
+    the partitions present in ``out`` (dynamic overwrite)."""
+    (
+        out.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("part")
+        .parquet(path)
+    )
 
 
 def _safe_name(value) -> str:
@@ -251,14 +262,6 @@ class ValidationRun:
                 return [p for p in all_parts if p not in done or p in drifted]
         return [p for p in all_parts if p not in done]
 
-    def _violations_df(self, pdf: DataFrame) -> DataFrame:
-        keys = list(self.key_cols)
-        if self.partition_col not in keys:
-            keys.append(self.partition_col)  # carried for the partitioned write
-        return self.suite.run(pdf, keys).violations.select(
-            *keys, F.col("path_str").alias("path"), "code"
-        )
-
     def run(
         self,
         df: DataFrame,
@@ -270,78 +273,47 @@ class ValidationRun:
         count is 2*ceil(P/K) instead of 2*P — at thousands of Iceberg
         day/bucket partitions this is the difference between a scheduler
         stall and a handful of wide jobs. Manifest entries are recorded per
-        batch; an interrupted run redoes at most one batch."""
+        batch; an interrupted run redoes at most one batch.
+
+        Each batch is one ``Suite.run`` over the batch input plus a string
+        ``part`` column (the partition value): the stats come from its
+        ``verdict`` and every output is written partitioned by ``part``."""
         pending = self.pending_partitions(df)
         if max_partitions is not None:
             pending = pending[:max_partitions]
-        nf = self.suite.failure_count_column()
         pcol = F.col(self.partition_col).cast("string")
+        # "part" carries the partition value; a key of that name is that column
+        keys = [k for k in self.key_cols if k != "part"] + ["part"]
+        step = max(batch_size, 1)
         outcomes = []
-        for i in range(0, len(pending), max(batch_size, 1)):
-            batch = pending[i : i + max(batch_size, 1)]
+        for i in range(0, len(pending), step):
+            batch = pending[i : i + step]
             started = time.time()
             # partition predicates -> partition pruning on a partitioned table
-            pdf = df.filter(pcol.isin(batch))
-            stats = {
-                r["_part"]: r
-                for r in pdf.select(pcol.alias("_part"), nf.alias("_nf"))
-                .groupBy("_part")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum((F.col("_nf") > 0).cast("long")).alias("rv"),
-                    F.sum("_nf").alias("v"),
-                )
-                .collect()
-            }
-            viol = self._violations_df(pdf).withColumn("part", pcol)
-            if self.partition_col not in self.key_cols and self.partition_col != "part":
-                viol = viol.drop(self.partition_col)
-            (
-                viol.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("part")
-                .parquet(self.violations_dir)
+            pdf = df.filter(pcol.isin(batch)).withColumn("part", pcol)
+            res = self.suite.run(pdf, keys)
+            stats = {r["part"]: r.asDict() for r in res.verdict(["part"], pdf).collect()}
+            _write_parts(
+                res.violations.select(*keys, F.col("path_str").alias("path"), "code"),
+                self.violations_dir,
             )
             if self.emit_valid:
                 # the pipeline-gate output (Giraffe-shape): only fully clean
                 # rows flow onward, partitioned like the input
-                valid = (
-                    pdf.filter(~self.suite.any_failure_column())
-                    .withColumn("part", pcol)
-                )
-                (
-                    valid.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("part")
-                    .parquet(self.valid_dir)
-                )
+                _write_parts(res.valid, self.valid_dir)
             if self.emit_reports:
                 # reference-wire-format JSON document per failing row
-                reps = (
-                    pdf.filter(self.suite.any_failure_column())
-                    .select(
-                        *self.key_cols,
-                        self.suite.report_json_column().alias("report"),
-                        pcol.alias("part"),
-                    )
-                )
-                (
-                    reps.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("part")
-                    .parquet(self.reports_dir)
-                )
+                _write_parts(res.reports(pdf, keys), self.reports_dir)
             for part in batch:
-                r = stats.get(part)
+                r = stats.get(part, {})
+                violations = r.get("violations") or 0
                 outcome = PartitionOutcome(
                     partition=part,
-                    status="pass" if r is None or (r["v"] or 0) == 0 else "fail",
-                    rows_scanned=r["n"] if r is not None else 0,
-                    rows_with_violations=(r["rv"] or 0) if r is not None else 0,
-                    violations=(r["v"] or 0) if r is not None else 0,
-                    constraints_evaluated=len(
-                        [c for c in self.suite.constraints if c.kind != PROOF_GATE]
-                    ),
+                    status="fail" if violations else "pass",
+                    rows_scanned=r.get("rows_scanned", 0),
+                    rows_with_violations=r.get("rows_with_violations") or 0,
+                    violations=violations,
+                    constraints_evaluated=len(self.suite.codes),
                 )
                 self._record(outcome, started)
                 outcomes.append(outcome)

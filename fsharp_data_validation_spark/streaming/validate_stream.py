@@ -1,5 +1,5 @@
 """Structured Streaming validation: the same compiled suite applied to a
-stream — readStream -> with_failures -> split -> sinks, with event-time
+stream — readStream -> ``Suite.run`` -> sinks, with event-time
 watermarking for the windowed violation-rate aggregation.
 
 The suite compiles to stateless column expressions, so it attaches to a
@@ -28,28 +28,12 @@ def validate_stream(
     stream_df: DataFrame, suite: Suite, key_cols: Sequence[str]
 ):
     """Attach the suite to a streaming DataFrame; returns (valid, violations)
-    streaming frames. Both share the single-projection plan — Spark evaluates
-    the constraint expressions once per micro-batch pass."""
-    flagged = suite.with_failures(stream_df)
-    valid = flagged.filter(F.size("failures") == 0).drop("failures")
-    violations = (
-        flagged.filter(F.size("failures") > 0)
-        .select(*key_cols, F.explode("failures").alias("f"))
-        .select(
-            *key_cols,
-            F.array_join(
-                F.transform(
-                    "f.path",
-                    lambda s: F.concat(
-                        F.lower(F.substring(s, 1, 1)), F.substring(s, 2, 2_000_000)
-                    ),
-                ),
-                ".",
-            ).alias("path"),
-            F.col("f.code").alias("code"),
-        )
+    streaming frames — ``Suite.run`` with violations projected to
+    (keys..., path, code), ``path`` the camelCase-dotted rendering."""
+    res = suite.run(stream_df, key_cols)
+    return res.valid, res.violations.select(
+        *key_cols, F.col("path_str").alias("path"), "code"
     )
-    return valid, violations
 
 
 def windowed_violation_rate(
@@ -60,12 +44,16 @@ def windowed_violation_rate(
     watermark: str = "2 minutes",
 ) -> DataFrame:
     """Event-time windowed violation metrics with late-data watermarking:
-    (window, rows, rows_with_violations, violations)."""
-    flagged = suite.with_failures(stream_df).withWatermark(ts_col, watermark)
-    return flagged.groupBy(F.window(ts_col, window).alias("win")).agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.sum((F.size("failures") > 0).cast("long")).alias("rows_with_violations"),
-        F.sum(F.size("failures")).alias("violations"),
+    (window, rows, rows_with_violations, violations), counted from the
+    suite's allocation-free flag and count columns (no failure arrays)."""
+    return (
+        stream_df.withWatermark(ts_col, watermark)
+        .groupBy(F.window(ts_col, window).alias("win"))
+        .agg(
+            F.count(F.lit(1)).alias("rows"),
+            F.sum(suite.any_failure_column().cast("long")).alias("rows_with_violations"),
+            F.sum(suite.failure_count_column()).alias("violations"),
+        )
     )
 
 
@@ -161,25 +149,21 @@ def run_stream_to_parquet(
     key_cols: Sequence[str],
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Drive the stream with foreachBatch writing violations to parquet;
-    ``available_now`` processes the backlog and stops (batch-like testing)."""
+    processes the backlog (``availableNow``) and stops."""
     _, violations = validate_stream(stream_df, suite, key_cols)
 
     def write_batch(batch_df: DataFrame, batch_id: int):
         batch_df.write.mode("append").parquet(out_dir)
 
-    writer = (
+    return (
         violations.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-    else:
-        q = writer.start()
-    return q
 
 
 def run_suite_available_now(
@@ -437,19 +421,11 @@ def windowed_rates_to_sink(
     as its input stream (Spark does not allow a stateful operator after a
     streaming aggregation in one query, so the monitoring loop is the
     standard two-query topology)."""
-    flagged = suite.with_failures(stream_df).withWatermark(ts_col, watermark)
-    return (
-        flagged.groupBy(F.window(ts_col, window).alias("win"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum((F.size("failures") > 0).cast("long")).alias("n_viol"),
-        )
-        .select(
-            F.col("win.start").alias("win_start"),
-            "n_rows",
-            "n_viol",
-            F.round(F.col("n_viol") / F.col("n_rows"), round_to).alias("rate"),
-        )
+    return windowed_violation_rate(stream_df, suite, ts_col, window, watermark).select(
+        F.col("win.start").alias("win_start"),
+        F.col("rows").alias("n_rows"),
+        F.col("rows_with_violations").alias("n_viol"),
+        F.round(F.col("rows_with_violations") / F.col("rows"), round_to).alias("rate"),
     )
 
 

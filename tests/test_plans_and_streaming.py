@@ -393,6 +393,54 @@ def test_manifest_emit_valid(spark, tmp_path):
     assert keys == {("c1", 0): "hi", ("c3", 0): "ok"}  # failing rows gated
 
 
+def test_manifest_date_partition_outputs(spark, tmp_path):
+    """A date-typed partition column not named ``part``: every output is
+    laid out under ``part=<date>``, only the valid rows keep the input's
+    partition column as data, and the manifest records the counts."""
+    import datetime as dt
+
+    day = F.when(F.col("part") == "a", F.lit(dt.date(2024, 1, 1))).otherwise(
+        F.lit(dt.date(2024, 1, 2))
+    )
+    df = _df(spark).withColumn("day", day).drop("part")
+    out = str(tmp_path / "out_dates")
+    run = ValidationRun(
+        transcript_row_suite(), out, ["conv_id", "turn_idx"], "day",
+        emit_valid=True, emit_reports=True,
+    )
+    run.run(df, batch_size=2)
+
+    def columns(name):
+        return spark.read.parquet(os.path.join(out, name)).columns
+
+    assert columns("violations") == ["conv_id", "turn_idx", "path", "code", "part"]
+    assert columns("valid") == ["conv_id", "turn_idx", "role", "text", "tool", "day", "part"]
+    assert columns("reports") == ["conv_id", "turn_idx", "report", "part"]
+    for name in ("violations", "valid", "reports"):
+        assert sorted(
+            d for d in os.listdir(os.path.join(out, name)) if not d.startswith((".", "_"))
+        ) == ["part=2024-01-01", "part=2024-01-02"]
+    assert sorted(os.listdir(os.path.join(out, "manifest"))) == [
+        "2024-01-01.json",
+        "2024-01-02.json",
+    ]
+    docs = run.completed_partitions()
+    for doc in docs.values():
+        assert doc.pop("finished_at") >= doc.pop("started_at")
+    assert docs == {
+        p: {
+            "partition": p,
+            "status": "fail",
+            "rows_scanned": 2,
+            "rows_with_violations": 1,
+            "violations": 1,
+            "constraints_evaluated": 12,
+            "input_snapshot": None,
+        }
+        for p in ("2024-01-01", "2024-01-02")
+    }
+
+
 def test_stream_dedup_drops_watermark_window_duplicates(spark, tmp_path):
     """Streaming content dedup: duplicate digests arriving within the
     watermark horizon are dropped; state is watermark-evicted (plan shows

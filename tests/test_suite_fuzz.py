@@ -238,10 +238,22 @@ def test_random_suite_shapes_match_kernel(spark):
             ],
             schema=SCHEMA,
         )
-        res = spark_suite(spec).run(df, ["rid"])
-        got = {}
+        suite = spark_suite(spec)
+        res = suite.run(df, ["rid"])
+        got, n_rows = {}, {}
         for r in res.violations.collect():
             got.setdefault(r["rid"], set()).add((r["path_str"], r["code"]))
+            n_rows[r["rid"]] = n_rows.get(r["rid"], 0) + 1
+        # the allocation-free columns the verdict and the streaming
+        # aggregates count with agree with the violation rows, per row
+        flags = {
+            r["rid"]: (r["n"], r["any"])
+            for r in df.select(
+                "rid",
+                suite.failure_count_column().alias("n"),
+                suite.any_failure_column().alias("any"),
+            ).collect()
+        }
         valid_ids = {r["rid"] for r in res.valid.select("rid").collect()}
         got_reports = {
             r["rid"]: r["report"] for r in res.reports(df, ["rid"]).collect()
@@ -254,6 +266,8 @@ def test_random_suite_shapes_match_kernel(spark):
                 f"spark={sorted(actual)}\nkernel={sorted(expected)}"
             )
             assert (row["rid"] in valid_ids) == (not expected)
+            n = n_rows.get(row["rid"], 0)
+            assert flags[row["rid"]] == (n, n > 0), (trial, row, flags[row["rid"]], n)
             # byte-parity of the JSON report with the reference serializer
             exp_report = kernel_report(spec, row)
             assert got_reports.get(row["rid"]) == exp_report, (
