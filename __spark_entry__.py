@@ -40,8 +40,11 @@ from fsharp_data_validation_spark.operators.stats import column_profile, exact_q
 from fsharp_data_validation_spark.operators.text import bpe_oracle_expr
 from fsharp_data_validation_spark.operators.transcript_suite import transcript_row_suite
 from fsharp_data_validation_spark.sources.documents import (
+    COSINE_SQL as _COSINE_SQL,
     DOCS_SQL as _DOCS_SQL,
     ann_recall_oracle_sql as _ann_recall_oracle,
+    load_docs,
+    load_vecs,
     lsh_construction_oracle_sql as _lsh_oracle,
     with_docs,
     with_vecs,
@@ -928,7 +931,6 @@ def q_each_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: content-hash groupBy (map-side combine, one shuffle)."""
     from fsharp_data_validation_spark.operators.dedup import exact_duplicates
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return exact_duplicates(load_docs(spark, sf_dir), "doc_id", "text")
 
@@ -993,7 +995,6 @@ def q_ngram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     perplexity-filtering architecture; off-reference (non-en) docs surface
     with higher perplexity."""
     from fsharp_data_validation_spark.operators.text import ngram_perplexity
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return ngram_perplexity(
         load_docs(spark, sf_dir), "doc_id", "text", F.col("lang") == "en", k=0.1
@@ -1060,7 +1061,6 @@ def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     family (Lee et al. 2022). gram_len=8 at the oracle scale so the
     injected near-dup/exact-copy docs genuinely exercise the splice."""
     from fsharp_data_validation_spark.operators.dedup import span_dedup
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return span_dedup(load_docs(spark, sf_dir), "doc_id", "text", gram_len=8)
 
@@ -1129,7 +1129,6 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     published data-selection scoring step; exp(score) feeds the A-ES
     weighted sampler for the resampling half."""
     from fsharp_data_validation_spark.operators.sampling import dsir_weights
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return dsir_weights(
         load_docs(spark, sf_dir),
@@ -1164,7 +1163,6 @@ SELECT id_a, id_b, sim FROM (
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard near-dup pairs via shingle inverted index."""
     from fsharp_data_validation_spark.operators.dedup import ngram_jaccard_pairs
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return ngram_jaccard_pairs(load_docs(spark, sf_dir), "doc_id", "text", 3, 0.8)
 
@@ -1181,7 +1179,6 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized exact dedup (keep lowest-id per content group)."""
     from fsharp_data_validation_spark.operators.dedup import dedup_keep_first
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return dedup_keep_first(load_docs(spark, sf_dir), "doc_id", "text").select("doc_id")
 
@@ -1226,7 +1223,6 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph via large-star/small-star contraction (checked against a DuckDB
     recursive-CTE transitive closure)."""
     from fsharp_data_validation_spark.operators.dedup import near_dup_components
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return near_dup_components(load_docs(spark, sf_dir), "doc_id", "text", 3, 0.8)
 
@@ -1253,7 +1249,6 @@ def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow mapInPandas numpy slicing (operators/multimodal.py:frame_sample);
     frames decoded back to text for engine-portable comparison."""
     from fsharp_data_validation_spark.operators.multimodal import frame_sample
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     d = load_docs(spark, sf_dir)
     n = (F.col("doc_id") % 5 + 2).cast("int")
@@ -1539,15 +1534,8 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking on the rounded score + lexicographic tiebreak so the window
     order is engine-portable."""
     from fsharp_data_validation_spark.operators.text import tfidf_top_terms
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return tfidf_top_terms(load_docs(spark, sf_dir), "doc_id", "text", 3)
-
-
-_COSINE_SQL = (
-    "list_dot_product({a}, {b}) / "
-    "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
-)
 
 
 @query(with_vecs(
@@ -1574,7 +1562,6 @@ def q_embedding_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fsharp_data_validation_spark.operators.similarity import (
         cross_corpus_cosine_pairs,
     )
-    from fsharp_data_validation_spark.sources.documents import load_vecs
 
     v = hash_split(load_vecs(spark, sf_dir), "vec_id", 80)
     return cross_corpus_cosine_pairs(
@@ -2052,7 +2039,6 @@ def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB agree bit-for-bit (log10-based extraction misclassifies exact
     powers of ten)."""
     from fsharp_data_validation_spark.operators.checks import benford_check
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return benford_check(load_docs(spark, sf_dir), "n_chars")
 
@@ -2089,7 +2075,6 @@ def q_top_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     available and fuzz-pinned identical). Ties break lexicographically on
     both engines."""
     from fsharp_data_validation_spark.operators.text import top_ngram_fraction
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return top_ngram_fraction(load_docs(spark, sf_dir), "doc_id", "text", n=2)
 
@@ -2170,7 +2155,6 @@ def q_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the top-500 tokens — corpus-health diagnostic; the top-k cut is
     distributed TakeOrdered, never a single-task global sort."""
     from fsharp_data_validation_spark.operators.text import zipf_fit
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return zipf_fit(load_docs(spark, sf_dir), "text", top_k=500, min_count=2)
 
@@ -2200,7 +2184,6 @@ def q_dup_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/text.py:dup_ngram_fraction) — catches diffuse repetition
     the top-1-n-gram rule misses."""
     from fsharp_data_validation_spark.operators.text import dup_ngram_fraction
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return dup_ngram_fraction(load_docs(spark, sf_dir), "doc_id", "text", n=3)
 
@@ -2245,7 +2228,6 @@ def q_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     word-keyed shuffle joins, ranking on the ROUNDED score for
     cross-engine determinism."""
     from fsharp_data_validation_spark.operators.text import pmi_bigrams
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return pmi_bigrams(load_docs(spark, sf_dir), "text", min_count=5, top_k=20)
 
@@ -2303,7 +2285,6 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     a salted-md5 uniform): 100 docs drawn proportional to n_chars,
     reproducible and engine-portable; top-k via distributed TakeOrdered."""
     from fsharp_data_validation_spark.operators.sampling import weighted_sample
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return weighted_sample(load_docs(spark, sf_dir), "doc_id", "n_chars", 100)
 
@@ -2498,7 +2479,6 @@ def q_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         decode_audio_meta,
         make_wav_payload,
     )
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     rates = [8000, 16000, 44100]
 
@@ -2547,7 +2527,6 @@ def q_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         cluster_size_histogram,
         near_dup_components,
     )
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     comp = near_dup_components(load_docs(spark, sf_dir), "doc_id", "text", 3, 0.8)
     return cluster_size_histogram(comp, "component")
@@ -2579,7 +2558,6 @@ def q_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     against a full inverted index (operators/dedup.py:
     containment_dedup_pairs), checked against the naive all-pairs spec."""
     from fsharp_data_validation_spark.operators.dedup import containment_dedup_pairs
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return containment_dedup_pairs(load_docs(spark, sf_dir), "doc_id", "text", 3, 0.8)
 
@@ -2600,7 +2578,6 @@ _SPLIT_BUCKET_SQL = (
 def q_sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic hash train/test split (row-local, reproducible)."""
     from fsharp_data_validation_spark.operators.sampling import hash_split
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return hash_split(load_docs(spark, sf_dir), "doc_id", 80).select("doc_id", "split")
 
@@ -2640,7 +2617,6 @@ def q_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank via balanced fixed-width hash buckets + broadcast offsets — never
     a single-task global sort (operators/sampling.py:global_shuffle)."""
     from fsharp_data_validation_spark.operators.sampling import global_shuffle
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return global_shuffle(load_docs(spark, sf_dir), "doc_id", 64).select(
         "doc_id", "rank"
@@ -2662,7 +2638,6 @@ def q_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     share — one hash aggregate + a window over its |groups|-row output
     (operators/text.py:mixture_report)."""
     from fsharp_data_validation_spark.operators.text import mixture_report
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return mixture_report(load_docs(spark, sf_dir), ["lang", "source"])
 
@@ -2691,7 +2666,6 @@ def q_upsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     posexplode(sequence), zero shuffle (operators/sampling.py:
     replicate_sample)."""
     from fsharp_data_validation_spark.operators.sampling import replicate_sample
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return replicate_sample(
         load_docs(spark, sf_dir), "lang", "doc_id", {"fr": 2.5, "zh": 1.25}
@@ -2710,7 +2684,6 @@ def q_encoding_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mojibake / control-char / ASCII-ratio encoding hygiene signals —
     pure column regexes, zero shuffle (operators/text.py:encoding_quality)."""
     from fsharp_data_validation_spark.operators.text import encoding_quality
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return encoding_quality(load_docs(spark, sf_dir), "doc_id", "text")
 
@@ -2729,7 +2702,6 @@ def q_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     languages) — one row-local scan-stage predicate, zero shuffle
     (operators/sampling.py:quota_sample)."""
     from fsharp_data_validation_spark.operators.sampling import quota_sample
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return quota_sample(
         load_docs(spark, sf_dir), "lang", "doc_id", {"en": 0.5, "zh": 0.9}
@@ -2753,7 +2725,6 @@ def q_temp_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the corpus): one tiny count agg + broadcast rate join + row-local
     hash filter (operators/sampling.py:temperature_sample)."""
     from fsharp_data_validation_spark.operators.sampling import temperature_sample
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return temperature_sample(
         load_docs(spark, sf_dir), "lang", "doc_id", 0.7, 0.8
@@ -2773,8 +2744,6 @@ def q_vocab_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-level token statistics: docs, total tokens, vocabulary size
     (exact distinct words). One explode + one aggregate; at 100 TB swap the
     exact distinct for approx_count_distinct (same plan shape)."""
-    from fsharp_data_validation_spark.sources.documents import load_docs
-
     d = load_docs(spark, sf_dir)
     w = d.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("w")
@@ -2801,8 +2770,6 @@ def q_top_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 corpus tokens (stopwords excluded, deterministic (n desc,
     word asc) tie-break) — the vocabulary head a filtering pipeline
     inspects. ORDER BY + LIMIT = Spark TakeOrdered (no full sort)."""
-    from fsharp_data_validation_spark.sources.documents import load_docs
-
     stop = ["the", "a", "and", "of", "to", "in"]
     d = load_docs(spark, sf_dir)
     w = (
@@ -2822,7 +2789,6 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(32) + 16x2 banded LSH -> exact-Jaccard verify; checked
     against the exact-pairs oracle (high-recall banding)."""
     from fsharp_data_validation_spark.operators.dedup import minhash_lsh_pairs
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return minhash_lsh_pairs(load_docs(spark, sf_dir), "doc_id", "text", 3, 32, 16, 0.8)
 
@@ -2859,7 +2825,6 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """60-bit SimHash near-dup pairs (hamming <= 3)."""
     from fsharp_data_validation_spark.operators.dedup import simhash_banded_pairs
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return simhash_banded_pairs(load_docs(spark, sf_dir), "doc_id", "text", 3).select(
         "id_a", "id_b", F.col("hamming").cast("int").alias("hamming")
@@ -2873,7 +2838,6 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 ))
 def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fsharp_data_validation_spark.operators.text import token_count
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     t = token_count(load_docs(spark, sf_dir), "doc_id", "text")
     return t.select(
@@ -2904,7 +2868,6 @@ def q_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics). Emits the whitespace count and the realized chars-per-token
     calibration ratio alongside."""
     from fsharp_data_validation_spark.operators.text import token_count_bpe
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return token_count_bpe(load_docs(spark, sf_dir), "doc_id", "text")
 
@@ -2919,7 +2882,6 @@ def q_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 ))
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fsharp_data_validation_spark.operators.text import quality_score
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     t = quality_score(load_docs(spark, sf_dir), "doc_id", "text")
     return t.select(
@@ -2951,7 +2913,6 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 ))
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fsharp_data_validation_spark.operators.text import lang_id
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return lang_id(load_docs(spark, sf_dir), "doc_id", "text")
 
@@ -2962,7 +2923,6 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 ))
 def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fsharp_data_validation_spark.operators.text import fingerprint
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return fingerprint(load_docs(spark, sf_dir), "doc_id", "text")
 
@@ -2981,7 +2941,6 @@ def q_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-batched mapInPandas header parser. Oracle = the closed form the
     payloads were built from."""
     from fsharp_data_validation_spark.operators.multimodal import decode_image_meta
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     d = load_docs(spark, sf_dir)
     width = (F.col("doc_id") % 32 + 64).cast("int")
@@ -3023,7 +2982,6 @@ def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
         decode_image_meta,
         resize_images,
     )
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     d = load_docs(spark, sf_dir)
     width = (F.col("doc_id") % 32 + 64).cast("int")
@@ -3057,7 +3015,6 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-3 for query vectors (vec_id % 100 == 0):
     broadcast queries x one scan of the vectors."""
     from fsharp_data_validation_spark.operators.similarity import brute_force_topk
-    from fsharp_data_validation_spark.sources.documents import load_vecs
 
     vecs = load_vecs(spark, sf_dir)
     return brute_force_topk(vecs, vecs.filter(F.col("vec_id") % 100 == 0), k=3)
@@ -3076,7 +3033,6 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs (sim >= 0.8, exact): blocked
     all-pairs GEMM (O(n*B) shuffle instead of O(n^2) joined pairs)."""
     from fsharp_data_validation_spark.operators.similarity import near_dup_pairs_blocked
-    from fsharp_data_validation_spark.sources.documents import load_vecs
 
     return near_dup_pairs_blocked(load_vecs(spark, sf_dir), threshold=0.8)
 
@@ -3121,7 +3077,6 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL-replayable one, so assignment, pairing, and the keep flag are all
     oracle-attested end-to-end (the ann_recall evidence design)."""
     from fsharp_data_validation_spark.operators.similarity import semdedup
-    from fsharp_data_validation_spark.sources.documents import load_vecs
 
     return semdedup(
         load_vecs(spark, sf_dir), "vec_id", "embedding", n_cells=8, threshold=0.85
@@ -3147,7 +3102,6 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     probing here so the result is exact and shares the brute-force oracle;
     n_probe < n_cells is the scale path."""
     from fsharp_data_validation_spark.operators.similarity import ivf_topk
-    from fsharp_data_validation_spark.sources.documents import load_vecs
 
     vecs = load_vecs(spark, sf_dir)
     # few k-means iterations: with full probing the answer is exact for ANY
@@ -3174,7 +3128,6 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     so candidate generation and verification are checked exactly at any
     scale/seed (see sources.documents.lsh_construction_oracle_sql)."""
     from fsharp_data_validation_spark.operators.similarity import lsh_near_dup_pairs
-    from fsharp_data_validation_spark.sources.documents import load_vecs
 
     return lsh_near_dup_pairs(
         load_vecs(spark, sf_dir), threshold=0.8, n_planes=6, n_tables=12
@@ -3226,7 +3179,6 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         recall_report,
         sampled_centroids,
     )
-    from fsharp_data_validation_spark.sources.documents import load_vecs
 
     vecs = load_vecs(spark, sf_dir)
     qs = vecs.filter(F.col("vec_id") % 100 == 0)
@@ -3534,7 +3486,6 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hash-threshold prefilter + tiny window rank —
     operators/sampling.py:stratified_sample)."""
     from fsharp_data_validation_spark.operators.sampling import stratified_sample
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return stratified_sample(load_docs(spark, sf_dir), "lang", "doc_id", 20).select(
         "lang", "doc_id", "rnk"
@@ -3580,7 +3531,6 @@ def q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     signal) — row-local array expressions, no shuffle
     (operators/text.py:repetition_score)."""
     from fsharp_data_validation_spark.operators.text import repetition_score
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return repetition_score(load_docs(spark, sf_dir), "doc_id", "text")
 
@@ -3588,8 +3538,6 @@ def q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _corpus_split(spark: SparkSession, sf_dir: str):
     """Deterministic train/eval corpus split for the decontamination
     queries: eval = doc_id % 10 == 3 (same predicate in the oracles)."""
-    from fsharp_data_validation_spark.sources.documents import load_docs
-
     docs = load_docs(spark, sf_dir)
     return docs.filter(F.col("doc_id") % 10 != 3), docs.filter(
         F.col("doc_id") % 10 == 3
@@ -3804,7 +3752,6 @@ def q_dedup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     line-per-word rendering of the docs corpus so duplicates exist
     (operators/text.py:dedup_lines — row-local HOF, zero shuffle)."""
     from fsharp_data_validation_spark.operators.text import dedup_lines
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     d = load_docs(spark, sf_dir).select(
         "doc_id", F.translate(F.col("text"), " ", "\n").alias("text")
@@ -3836,7 +3783,6 @@ def q_chunk_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus — row-local sequence+posexplode+slice, zero shuffle
     (operators/text.py:chunk_text)."""
     from fsharp_data_validation_spark.operators.text import chunk_text
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return chunk_text(load_docs(spark, sf_dir), "doc_id", "text", 16, 8)
 
@@ -3861,7 +3807,6 @@ def q_corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one digest shuffle), deterministic hash split
     (operators/text.py:curate_corpus)."""
     from fsharp_data_validation_spark.operators.text import curate_corpus
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return curate_corpus(load_docs(spark, sf_dir), "doc_id", "text")
 
@@ -4072,7 +4017,6 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages sequentially, incl. the all-pairs exact-Jaccard drop set and the
     recursive-CTE packing recurrence."""
     from fsharp_data_validation_spark.operators.text import curate_dedup_pack
-    from fsharp_data_validation_spark.sources.documents import load_docs
 
     return curate_dedup_pack(load_docs(spark, sf_dir), "doc_id", "text")
 

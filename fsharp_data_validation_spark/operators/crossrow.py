@@ -1,6 +1,6 @@
 """Cross-row constraints — the table-level checks the reference cannot
 express (single-value library; §2.8 of SURVEY.md) but the north rule
-requires: uniqueness, referential integrity, ordering/ts-gap.
+requires: uniqueness, referential integrity, ordering.
 
 Scale design (10^12 turns):
 - uniqueness: hash aggregation with map-side partial combine — one shuffle on
@@ -67,14 +67,6 @@ def referential_violations(
     )
 
 
-def referential_passes(
-    df: DataFrame, fk_col: str, catalog: DataFrame, pk_col: str
-) -> DataFrame:
-    """LEFT SEMI companion (valid side of the referential gate)."""
-    cat = F.broadcast(catalog.select(F.col(pk_col).alias(fk_col)).distinct())
-    return df.filter(F.col(fk_col).isNotNull()).join(cat, on=fk_col, how="left_semi")
-
-
 def ordering_violations(
     df: DataFrame,
     part_col: str = "conv_id",
@@ -102,25 +94,6 @@ def ordering_violations(
         idx_col,
         F.col(ts_col),
         F.col("_prev_ts").alias("prev_ts"),
-    )
-
-
-def turn_gap_seconds(
-    df: DataFrame,
-    part_col: str = "conv_id",
-    idx_col: str = "turn_idx",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Per-turn gap to the previous turn in whole seconds (NULL for the
-    first turn of a conversation). Input to ts-gap stats and drift."""
-    w = Window.partitionBy(part_col).orderBy(idx_col, ts_col)
-    return df.select(
-        part_col,
-        idx_col,
-        ts_col,
-        (
-            F.col(ts_col).cast("long") - F.lag(F.col(ts_col).cast("long")).over(w)
-        ).alias("gap_s"),
     )
 
 

@@ -34,20 +34,6 @@ from ..cache import persist_tracked
 from ..rounding import half_up
 
 
-def _dot(a: F.Column, b: F.Column) -> F.Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
-def _norm(a: F.Column) -> F.Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
-def cosine(a: F.Column, b: F.Column) -> F.Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 def _as_double(df: DataFrame, vec_col: str) -> DataFrame:
     return df.withColumn(vec_col, F.col(vec_col).cast("array<double>"))
 
@@ -76,6 +62,39 @@ def _list_array(m: np.ndarray) -> pa.Array:
     """One Arrow list per row of a 2-D array, built from offsets."""
     offsets = np.arange(m.shape[0] + 1, dtype=np.int32) * m.shape[1]
     return pa.ListArray.from_arrays(offsets, m.ravel())
+
+
+# rows per side of one GEMM block: a kernel holds a few _TILE x _TILE
+# float64 blocks (128 MB each) whatever the size of its group
+_TILE = 4096
+
+
+def _cosine_hits(
+    a: np.ndarray, b: np.ndarray, threshold: float, round_to: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Row offsets ``(i, j)`` into ``a`` and ``b`` of the pairs whose cosine,
+    rounded HALF_UP to ``round_to`` decimals, is ``>= threshold``, and that
+    ``sim``: the one hit rule of the GEMM kernels. ``a @ b.T`` runs in
+    ``_TILE x _TILE`` blocks, so memory is bounded by the tile plus the
+    hits. Zero-norm rows (cosine undefined) never hit. Only entries within
+    ``10**-round_to`` of the threshold are rounded: rounding adds at most
+    ``0.5 * 10**-round_to``, so an entry below that margin cannot hit."""
+    na = np.sqrt(np.einsum("ij,ij->i", a, a))
+    nb = np.sqrt(np.einsum("ij,ij->i", b, b))
+    ra, rb = np.flatnonzero(na > 0.0), np.flatnonzero(nb > 0.0)
+    a, na, b, nb = a[ra], na[ra], b[rb], nb[rb]
+    floor = threshold - 10.0**-round_to
+    parts = [(np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0))]
+    for lo in range(0, len(a), _TILE):
+        for lo_b in range(0, len(b), _TILE):
+            s = a[lo:lo + _TILE] @ b[lo_b:lo_b + _TILE].T
+            s /= np.outer(na[lo:lo + _TILE], nb[lo_b:lo_b + _TILE])
+            i, j = np.nonzero(s >= floor)
+            sim = half_up(s[i, j], round_to)
+            hit = sim >= threshold
+            parts.append((ra[lo + i[hit]], rb[lo_b + j[hit]], sim[hit]))
+    i, j, sim = zip(*parts)
+    return np.concatenate(i), np.concatenate(j), np.concatenate(sim)
 
 
 @F.arrow_udf(DoubleType())
@@ -166,8 +185,9 @@ def near_dup_pairs_blocked(
 ) -> DataFrame:
     """Exact all-pairs cosine via **block-matrix GEMM**: vectors are hashed
     into ``blocks`` blocks; every block pair (bi <= bj) becomes one group;
-    ``applyInArrow`` computes the (n/B x n/B) similarity tile with one
-    float64 matmul and emits only pairs above threshold.
+    ``applyInArrow`` scores the block pair with ``_cosine_hits`` (float64
+    GEMM) and emits only pairs above threshold. Kernel memory is bounded by
+    ``_TILE``, not by the block; only work is quadratic in the block.
 
     Vs the naive pair join, shuffled bytes drop from O(n^2) joined array
     pairs to O(n * B) replicated vectors, and the math runs in BLAS. Same
@@ -200,31 +220,24 @@ def near_dup_pairs_blocked(
         bi, bj = table["bi"][0].as_py(), table["bj"][0].as_py()
         blk = table["blk"].to_numpy()
         m = _matrix(table["v"])
-        norms = np.sqrt(np.einsum("ij,ij->i", m, m))
         vids = table["vid"].to_numpy().astype(np.int64)
-        ia = np.flatnonzero(blk == bi)
-        ib = np.flatnonzero(blk == bj)
-        sims = (m[ia] @ m[ib].T) / np.outer(norms[ia], norms[ib])
-        idx_a, idx_b = np.nonzero(half_up(sims, round_to) >= threshold)
-        a_ids, b_ids = vids[ia][idx_a], vids[ib][idx_b]
-        if bi == bj:
-            # diagonal tile: every unordered pair appears twice — keep one
-            keep = a_ids < b_ids
-            lo, hi, s = a_ids[keep], b_ids[keep], sims[idx_a[keep], idx_b[keep]]
-        else:
-            # off-diagonal: pair appears once; normalize order (id_a < id_b)
-            lo = np.minimum(a_ids, b_ids)
-            hi = np.maximum(a_ids, b_ids)
-            s = sims[idx_a, idx_b]
-        return pa.table({"id_a": lo, "id_b": hi, "sim": half_up(s, round_to)})
+        ia, ib = np.flatnonzero(blk == bi), np.flatnonzero(blk == bj)
+        i, j, sim = _cosine_hits(m[ia], m[ib], threshold, round_to)
+        a_ids, b_ids = vids[ia][i], vids[ib][j]
+        # a diagonal tile sees every unordered pair twice: keep one; an
+        # off-diagonal tile sees it once, in either order
+        keep = (bi != bj) | (a_ids < b_ids)
+        a_ids, b_ids = a_ids[keep], b_ids[keep]
+        lo, hi = np.minimum(a_ids, b_ids), np.maximum(a_ids, b_ids)
+        return pa.table({"id_a": lo, "id_b": hi, "sim": sim[keep]})
 
     return tiles.groupBy("bi", "bj").applyInArrow(tile_kernel, out_schema)
 
 
-def _sq_dists(m: np.ndarray, centers: np.ndarray, chunk: int = 4096) -> np.ndarray:
+def _sq_dists(m: np.ndarray, centers: np.ndarray) -> np.ndarray:
     """Squared euclidean distances (rows x centers) via the GEMM identity
     ||a-c||^2 = ||a||^2 + ||c||^2 - 2 a.c — O(rows x cells) memory in
-    ``chunk``-row tiles, vs the 3-D broadcast (rows x cells x dim) the
+    ``_TILE``-row tiles, vs the 3-D broadcast (rows x cells x dim) the
     naive form materializes. At the 10^4-10^5 cells a web-scale quantizer
     uses, the broadcast is a >10 GB allocation per Arrow batch and the
     GEMM is a BLAS call; at the 8-16 cells of the oracle configs both are
@@ -233,10 +246,10 @@ def _sq_dists(m: np.ndarray, centers: np.ndarray, chunk: int = 4096) -> np.ndarr
     cancellation can't produce tiny negatives."""
     c2 = (centers * centers).sum(axis=1)[None, :]
     out = np.empty((m.shape[0], centers.shape[0]), dtype="float64")
-    for lo in range(0, m.shape[0], chunk):
-        t = m[lo:lo + chunk]
+    for lo in range(0, m.shape[0], _TILE):
+        t = m[lo:lo + _TILE]
         d = (t * t).sum(axis=1)[:, None] + c2 - 2.0 * (t @ centers.T)
-        np.maximum(d, 0.0, out=out[lo:lo + chunk])
+        np.maximum(d, 0.0, out=out[lo:lo + _TILE])
     return out
 
 
@@ -384,17 +397,15 @@ def semdedup(
     chunked-GEMM kernel shared with ``ivf_topk``; ties -> lowest cell
     index, matching the oracle's ORDER BY distance, cell), persisted so
     the pair stage and the final report read the assignment once. The
-    within-cell pairing is ONE ``applyInArrow`` group per cell computing
-    the cell's full cosine matrix with a single float64 GEMM and reducing
-    it to per-vector earlier-neighbor counts IN the kernel — each vector
-    moves through the shuffle once (O(n) bytes), not once per pair. This
-    replaced a cell-keyed self-join + per-pair Arrow cosine that shipped
-    both 64-dim vectors for every candidate pair (O(pairs) bytes, ~100x
-    more traffic at ~100 vectors/cell; measured N->4N efficiency 0.44 on
-    a 200k-vector corpus — bandwidth-bound — vs the GEMM form below).
-    Work and kernel memory are quadratic in the LARGEST cell, never in n —
-    ``n_cells`` is the knob (pick n/n_cells ~ the pair budget per cell; at
-    10^9 vectors that means 10^4-10^5 cells from a trained quantizer). The
+    within-cell pairing is ONE ``applyInArrow`` group per cell scoring the
+    cell against itself with ``_cosine_hits`` (float64 GEMM) and reducing
+    the hits to per-vector earlier-neighbor counts IN the kernel — each
+    vector moves through the shuffle once (O(n) bytes), not once per pair
+    as in a cell-keyed self-join (~100x the bytes at ~100 vectors/cell).
+    Kernel memory is bounded by ``_TILE`` (plus the hits), so a hot cell
+    costs a slow task, not an out-of-memory one; only work is quadratic in
+    the LARGEST cell, never in n (at 10^9 vectors, 10^4-10^5 cells from a
+    trained quantizer keep it small). The
     default ``sampled_centroids`` quantizer is deterministic AND
     SQL-replayable, so the whole construction — assignment, pairing,
     keep-earliest — is oracle-attested end-to-end (query ``semdedup``),
@@ -418,15 +429,10 @@ def semdedup(
 
     def cell_kernel(table: pa.Table) -> pa.Table:
         ids = table["_id"].to_numpy()
-        order = np.argsort(ids, kind="stable")
-        ids = ids[order]
-        m = _matrix(table["_v"])[order]
-        norms = np.sqrt(np.einsum("ij,ij->i", m, m))
-        sims = (m @ m.T) / np.outer(norms, norms)
-        hit = half_up(sims, round_to) >= threshold
-        # ids ascend along the axes, so strict-upper-triangle = earlier id;
-        # column sums = per-vector earlier-neighbor counts
-        counts = np.triu(hit, k=1).sum(axis=0).astype("int64")
+        m = _matrix(table["_v"])
+        i, j, _ = _cosine_hits(m, m, threshold, round_to)
+        # per-vector earlier-neighbor counts: hits (i, j) with ids[i] < ids[j]
+        counts = np.bincount(j[ids[i] < ids[j]], minlength=len(ids))
         keep = counts > 0
         return pa.table(
             {"_idb": ids[keep].astype("int64"), "n_dup_earlier": counts[keep]}
@@ -592,20 +598,16 @@ def cross_corpus_cosine_pairs(
     )
 
     def tile_kernel(table: pa.Table) -> pa.Table:
-        m = _matrix(table["v"])
-        norms = np.sqrt(np.einsum("ij,ij->i", m, m))
-        nonzero = norms > 0.0  # cosine undefined for zero vectors: drop
         side = table["side"].to_numpy()
-        ia = np.flatnonzero((side == 0) & nonzero)
-        ib = np.flatnonzero((side == 1) & nonzero)
-        sims = (m[ia] @ m[ib].T) / np.outer(norms[ia], norms[ib])
-        idx_a, idx_b = np.nonzero(half_up(sims, round_to) >= threshold)
+        ia, ib = np.flatnonzero(side == 0), np.flatnonzero(side == 1)
+        m = _matrix(table["v"])
+        i, j, sim = _cosine_hits(m[ia], m[ib], threshold, round_to)
         # take() keeps the input id type (bigint or string)
         return pa.table(
             {
-                "id_a": table["vid"].take(ia[idx_a]),
-                "id_b": table["vid"].take(ib[idx_b]),
-                "sim": half_up(sims[idx_a, idx_b], round_to),
+                "id_a": table["vid"].take(ia[i]),
+                "id_b": table["vid"].take(ib[j]),
+                "sim": sim,
             }
         )
 

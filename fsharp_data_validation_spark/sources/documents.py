@@ -53,6 +53,12 @@ SELECT vec_id + 1000000 AS vec_id,
 FROM embeddings WHERE vec_id % 50 = 0
 """
 
+# exact cosine of two DOUBLE[] columns, formatted with ``a``/``b``
+COSINE_SQL = (
+    "list_dot_product({a}, {b}) / "
+    "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
+)
+
 
 def load_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, embedding: array<double>) with injected near-duplicates —
@@ -112,10 +118,6 @@ def lsh_construction_oracle_sql(
     must agree exactly (sign flips need |dot| ~ 1e-13, vanishing for
     Gaussian planes)."""
     planes_sql = _plane_rows_sql(dim, n_planes, n_tables, seed)
-    cosine = (
-        "list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a})) "
-        "* sqrt(list_dot_product({b}, {b})))"
-    )
     return f"""WITH vecs AS ({VECS_ORACLE_SQL}),
 planes(t, j, p) AS (VALUES {planes_sql}),
 bk AS (
@@ -131,7 +133,7 @@ cand AS (
 )
 SELECT id_a, id_b, sim FROM (
   SELECT c.id_a, c.id_b,
-         ROUND({cosine.format(a="va.e", b="vb.e")}, {round_to}) AS sim
+         ROUND({COSINE_SQL.format(a="va.e", b="vb.e")}, {round_to}) AS sim
   FROM cand c
   JOIN vecs va ON va.vec_id = c.id_a
   JOIN vecs vb ON vb.vec_id = c.id_b
@@ -168,10 +170,6 @@ def ann_recall_oracle_sql(
 
     The recall FORMULA (left join + counts + rounded ratio + >= target) is
     thereby checked end-to-end on both engines."""
-    cosine = (
-        "list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a})) "
-        "* sqrt(list_dot_product({b}, {b})))"
-    )
     planes_sql = _plane_rows_sql(dim, n_planes, n_tables, seed)
     return f"""WITH vecs AS ({VECS_ORACLE_SQL}),
 q AS (SELECT vec_id AS query_id, e AS qe FROM vecs WHERE vec_id % 100 = 0),
@@ -182,7 +180,7 @@ exact_topk AS (
            ROW_NUMBER() OVER (PARTITION BY query_id
                               ORDER BY sim DESC, neighbor_id ASC) AS rnk
     FROM (SELECT query_id, neighbor_id,
-                 ROUND({cosine.format(a='qe', b='ve')}, 6) AS sim
+                 ROUND({COSINE_SQL.format(a='qe', b='ve')}, 6) AS sim
           FROM q JOIN v ON query_id != neighbor_id) s) r
   WHERE rnk <= {k}
 ),
@@ -216,7 +214,7 @@ ivf_topk AS (
            ROW_NUMBER() OVER (PARTITION BY query_id
                               ORDER BY sim DESC, neighbor_id ASC) AS rnk
     FROM (SELECT qc.query_id, a.neighbor_id,
-                 ROUND({cosine.format(a='qc.qe', b='a.ve')}, 6) AS sim
+                 ROUND({COSINE_SQL.format(a='qc.qe', b='a.ve')}, 6) AS sim
           FROM qcells qc JOIN assigned a USING (cell)
           WHERE qc.query_id != a.neighbor_id) s) r
   WHERE rnk <= {k}
@@ -231,7 +229,7 @@ bk AS (
 lsh_pairs AS (
   SELECT id_a, id_b FROM (
     SELECT c.id_a, c.id_b,
-           ROUND({cosine.format(a='va.e', b='vb.e')}, 6) AS sim
+           ROUND({COSINE_SQL.format(a='va.e', b='vb.e')}, 6) AS sim
     FROM (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
           FROM bk a JOIN bk b
             ON a.t = b.t AND a.bucket = b.bucket AND a.vec_id < b.vec_id) c
@@ -242,7 +240,7 @@ lsh_pairs AS (
 exact_pairs AS (
   SELECT id_a, id_b FROM (
     SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           ROUND({cosine.format(a='a.e', b='b.e')}, 6) AS sim
+           ROUND({COSINE_SQL.format(a='a.e', b='b.e')}, 6) AS sim
     FROM vecs a JOIN vecs b ON a.vec_id < b.vec_id) p
   WHERE sim >= {threshold}
 ),

@@ -1,7 +1,7 @@
 """Round-3 operators: conversation-flow validation, MAD outliers, TF-IDF
-top terms, embedding-space cross-corpus contamination (the drift members
-are pinned in test_drift.py). Semantics pinned on hand-built fixtures; the
-sf0.01 DuckDB oracles cover the derived-table scale."""
+top terms (the drift members are pinned in test_drift.py, the similarity
+members in test_similarity.py). Semantics pinned on hand-built fixtures;
+the sf0.01 DuckDB oracles cover the derived-table scale."""
 
 import math
 
@@ -80,42 +80,6 @@ def test_tfidf_top_terms_scores_and_ties(spark):
     assert out[(2, 1)][0] == "banana" and out[(2, 2)][0] == "cherry"
     # 'shared' in every doc -> idf ln(1)=0, never ranks above positives
     assert all(term != "shared" or rnk > 1 for (_, rnk), (term, _, _) in out.items())
-
-
-def test_cross_corpus_cosine_equals_bruteforce(spark):
-    import numpy as np
-
-    from fsharp_data_validation_spark.operators.similarity import (
-        cross_corpus_cosine_pairs,
-    )
-
-    rng = np.random.default_rng(3)
-    base = rng.standard_normal((30, 8))
-    # eval vectors 0..4 are noisy copies of train vectors 0..4
-    train_rows = [(int(i), [float(x) for x in base[i]]) for i in range(30)]
-    eval_rows = [
-        (int(100 + i), [float(x) for x in base[i] + 0.05 * rng.standard_normal(8)])
-        for i in range(5)
-    ] + [(int(200 + i), [float(x) for x in rng.standard_normal(8)]) for i in range(5)]
-    t = spark.createDataFrame(train_rows, "vec_id long, embedding array<double>")
-    e = spark.createDataFrame(eval_rows, "vec_id long, embedding array<double>")
-
-    got = sorted(
-        (r["id_a"], r["id_b"], r["sim"])
-        for r in cross_corpus_cosine_pairs(t, e, threshold=0.8, blocks=4).collect()
-    )
-
-    def cos(a, b):
-        a, b = np.array(a), np.array(b)
-        return float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b)))
-
-    want = sorted(
-        (ta, eb, round(cos(va, vb), 6))
-        for ta, va in train_rows
-        for eb, vb in eval_rows
-        if round(cos(va, vb), 6) >= 0.8
-    )
-    assert got == want and len(want) >= 5
 
 
 def test_dataset_checks_one_pass(spark):
@@ -587,27 +551,6 @@ def test_weighted_sample_determinism_and_bias(spark):
         got = weighted_sample(df, "doc_id", "w", 10, salt=s).collect()
         hits += any(r["id"] == 0 for r in got)
     assert hits == 5
-
-
-def test_embedding_health_flags(spark):
-    from fsharp_data_validation_spark.operators.similarity import embedding_health
-
-    rows = [
-        (1, [3.0, 4.0]),          # norm 5
-        (2, [0.0, 0.0]),          # zero vector
-        (3, None),                # null
-        (4, [1.0]),               # wrong dim
-        (5, [float("nan"), 1.0]), # NaN component
-        (6, [0.0, 2.0]),          # norm 2
-    ]
-    rows.append((7, [None, 1.0]))  # NULL component: its own defect class
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    r = embedding_health(df, "embedding", 2, round_to=6).collect()[0]
-    assert (
-        r["n_vecs"], r["n_null"], r["n_wrong_dim"], r["n_nan"],
-        r["n_null_comp"], r["n_zero"],
-    ) == (7, 1, 1, 1, 1, 1)
-    assert r["mean_norm"] == 3.5 and r["min_norm"] == 2.0 and r["max_norm"] == 5.0
 
 
 def test_violation_examples_null_key_hashing(spark):

@@ -1,6 +1,7 @@
 """Round-4 operator tests: ADVICE fixes (manifest legacy-pin grace, Check
-name validation, cosine-pairs generic ids + zero-norm masking) and the new
-round-4 surface (ANN recall attestation, BPE-ish tokenizer kernel)."""
+name validation) and the new round-4 surface (BPE-ish tokenizer kernel,
+salted sessionize/as-of join); the similarity pins are in
+test_similarity.py."""
 
 import os
 
@@ -94,42 +95,6 @@ def test_check_name_charset_validated():
     for bad in ("bad'name", "", "semi;colon", 'dq"uote', "new\nline"):
         with pytest.raises(ValueError):
             Check(bad, F.count(F.lit(1)), ">=", 0.0)
-
-
-# -- cross_corpus_cosine_pairs: generic ids + zero-norm masking ---------------
-
-
-def test_cross_corpus_cosine_string_ids_and_zero_norm(spark):
-    import numpy as np
-
-    from fsharp_data_validation_spark.operators.similarity import (
-        cross_corpus_cosine_pairs,
-    )
-
-    rng = np.random.default_rng(11)
-    base = rng.standard_normal((6, 4))
-    train_rows = [(f"t{i}", [float(x) for x in base[i]]) for i in range(6)]
-    train_rows.append(("tz", [0.0, 0.0, 0.0, 0.0]))  # zero-norm train vector
-    eval_rows = [
-        ("e0", [float(x) for x in base[0]]),  # exact copy of t0 -> sim 1.0
-        ("ez", [0.0, 0.0, 0.0, 0.0]),  # zero-norm eval vector
-    ]
-    t = spark.createDataFrame(train_rows, "vec_id string, embedding array<double>")
-    e = spark.createDataFrame(eval_rows, "vec_id string, embedding array<double>")
-
-    got = cross_corpus_cosine_pairs(t, e, threshold=0.99, blocks=2).collect()
-    pairs = {(r["id_a"], r["id_b"]): r["sim"] for r in got}
-    assert pairs[("t0", "e0")] == 1.0
-    # zero-norm vectors never appear (no NaN rows)
-    assert all("tz" != a and "ez" != b for (a, b) in pairs)
-    assert all(r["sim"] == r["sim"] for r in got)  # no NaN
-
-    # id-type mismatch fails loudly at plan-build time
-    e_long = spark.createDataFrame(
-        [(1, [1.0, 0.0, 0.0, 0.0])], "vec_id long, embedding array<double>"
-    )
-    with pytest.raises(TypeError):
-        cross_corpus_cosine_pairs(t, e_long)
 
 
 # -- BPE-style subword tokenizer ----------------------------------------------
@@ -258,59 +223,6 @@ def test_context_budget_bpe(spark):
     assert [(r["turn_idx"], r["cum_tokens"]) for r in out] == [
         (2, ns[0] + ns[1] + ns[2])
     ]
-
-
-# -- ANN recall attestation -----------------------------------------------------
-
-
-def test_recall_report_formula(spark):
-    from fsharp_data_validation_spark.operators.similarity import recall_report
-
-    exact = spark.createDataFrame(
-        [(1, 10), (1, 11), (2, 10), (2, 12)], "query_id int, neighbor_id int"
-    )
-    approx = spark.createDataFrame(
-        [(1, 10), (2, 12), (2, 99), (2, 12)],  # one dup, one non-hit extra
-        "query_id int, neighbor_id int",
-    )
-    row = recall_report(
-        approx, exact, ["query_id", "neighbor_id"], "m", target=0.5
-    ).collect()[0]
-    assert (row["method"], row["n_expected"], row["n_hit"]) == ("m", 4, 2)
-    assert row["recall"] == 0.5 and row["ok"] is True
-
-    # empty approx -> zero hits, ok False
-    empty = approx.filter("query_id < 0")
-    row = recall_report(
-        empty, exact, ["query_id", "neighbor_id"], "m", target=0.5
-    ).collect()[0]
-    assert row["n_hit"] == 0 and row["ok"] is False
-
-
-def test_ivf_fixed_centroids_full_probe_equals_bruteforce(spark):
-    """With centroids supplied and n_probe == n_cells the probe covers every
-    cell, so the fixed-centroid path must equal brute force exactly —
-    pinning the assignment/probe/rerank machinery independently of
-    quantizer quality."""
-    import numpy as np
-
-    from fsharp_data_validation_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_topk,
-        sampled_centroids,
-    )
-
-    rng = np.random.default_rng(5)
-    rows = [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(40)]
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    qs = vecs.filter("vec_id % 10 = 0")
-    cents = sampled_centroids(vecs, n_cells=4)
-    assert cents.shape == (4, 8)
-    got = sorted(
-        tuple(r) for r in ivf_topk(vecs, qs, k=3, n_probe=4, centroids=cents).collect()
-    )
-    want = sorted(tuple(r) for r in brute_force_topk(vecs, qs, k=3).collect())
-    assert got == want
 
 
 # -- salted sessionize --------------------------------------------------------

@@ -1,10 +1,9 @@
-"""Round-5 additions: degenerate-input pins and the trained-quantizer IVF
-recall gate (r4 verdict tasks #3 and ADVICE low items).
+"""Round-5 additions: degenerate-input pins (r4 ADVICE low items); the
+trained-quantizer IVF recall gate and SemDeDup are in test_similarity.py.
 
 Reference parity notes: the validation semantics under test are unchanged
 (core kernel is the oracle); these tests pin ENGINE-level behavior —
-division guards that must agree across Spark and DuckDB, and the measured
-recall of the KMeans-fit IVF path that has no SQL oracle.
+division guards that must agree across Spark and DuckDB.
 """
 
 from __future__ import annotations
@@ -68,42 +67,6 @@ def test_stream_suite_equals_batch_row_suite(spark):
     streamed = [tuple(r) for r in e.q_stream_suite(spark, sf).collect()]
     assert len(streamed) == len(batch) > 0  # no duplicated micro-batch rows
     assert set(streamed) == batch
-
-
-def test_ivf_kmeans_trained_quantizer_recall(spark):
-    """Recall gate for the TRAINED-quantizer IVF path (r4 verdict task #3):
-    ``ivf_topk``'s default seeded-KMeans fit at n_probe=4 < n_cells=16 —
-    the configuration a user with MLlib actually runs at scale. The
-    SQL-replayable sampled-centroid variant is oracle-attested by
-    ann_recall; the KMeans fit has no DuckDB oracle (not SQL-replayable),
-    so this pytest recall gate is the strongest available check. Floor
-    0.7 (measured 0.80 on the sf0.001 corpus; the trained quantizer must
-    also clear the sampled-centroid path's 0.6 target)."""
-    from pyspark.sql import functions as F
-
-    from __spark_entry__ import ANN_RECALL_TARGETS
-    from fsharp_data_validation_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_topk,
-        recall_report,
-    )
-    from fsharp_data_validation_spark.sources.documents import load_vecs
-
-    floor = ANN_RECALL_TARGETS["ivf_kmeans"]
-    assert floor >= ANN_RECALL_TARGETS["ivf"]
-    vecs = load_vecs(spark, "/root/testdata/sf0.001")
-    qs = vecs.filter(F.col("vec_id") % 50 == 0)
-    ivf = ivf_topk(vecs, qs, k=5, n_cells=16, n_probe=4)  # default KMeans fit
-    exact = brute_force_topk(vecs, qs, k=5)
-    rep = recall_report(
-        ivf, exact, ["query_id", "neighbor_id"], "ivf_kmeans", floor
-    ).collect()
-    assert len(rep) == 1
-    r = rep[0]
-    assert r["n_expected"] > 0
-    # genuinely approximate at 4/16 probing (not full-probe exactness) AND
-    # above the documented floor
-    assert r["ok"] and r["recall"] >= floor, (r["recall"], floor)
 
 
 def test_token_count_bpe_empty_text_null_ratio(spark):
@@ -351,39 +314,6 @@ def test_dsir_weights_direction_and_counts(spark):
     # identical texts with identical label context score identically
     assert out[1]["logratio"] == out[2]["logratio"]
     assert out[3]["logratio"] == out[4]["logratio"]
-
-
-def test_semdedup_keep_earliest_within_cells(spark):
-    """SemDeDup (operators/similarity.py:semdedup) with pinned centroids:
-    same-direction vectors land in the same cell and all but the smallest
-    id are dropped (keep-earliest); dissimilar vectors in the same cell
-    survive; clustering bounds the pair scope to within-cell."""
-    import numpy as np
-
-    from fsharp_data_validation_spark.operators.similarity import semdedup
-
-    df = spark.createDataFrame(
-        [
-            (1, [0.0, 1.0]),   # cell 0
-            (2, [0.0, 2.0]),   # cell 0, cos(v1,v2)=1 -> drop
-            (3, [1.0, 0.0]),   # cell 1
-            (4, [2.0, 0.0]),   # cell 1, cos(v3,v4)=1 -> drop
-            (5, [0.6, 0.8]),   # cell 0, cos(v1,v5)=0.8 < threshold -> keep
-        ],
-        "vec_id int, embedding array<double>",
-    )
-    cents = np.array([[0.0, 1.0], [1.0, 0.0]])
-    out = {
-        r["vec_id"]: r
-        for r in semdedup(
-            df, "vec_id", "embedding", threshold=0.999, centroids=cents
-        ).collect()
-    }
-    assert [out[i]["cell"] for i in (1, 2, 3, 4, 5)] == [0, 0, 1, 1, 0]
-    assert out[1]["keep"] and out[3]["keep"] and out[5]["keep"]
-    assert not out[2]["keep"] and out[2]["n_dup_earlier"] == 1
-    assert not out[4]["keep"] and out[4]["n_dup_earlier"] == 1
-    assert out[1]["n_dup_earlier"] == 0
 
 
 def test_ngram_perplexity_reference_model(spark):
