@@ -3811,62 +3811,29 @@ def q_corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curate_corpus(load_docs(spark, sf_dir), "doc_id", "text")
 
 
-_STREAM_SUITE_RUNS = iter(range(1, 10_000))
-_STREAM_RA_RUNS = iter(range(1, 10_000))
-
-
 # the streaming path must concatenate micro-batches to EXACTLY the
 # batch answer (stateless suite), so it shares row_suite's oracle
 @query(_ROW_SUITE_ORACLE)
 def q_stream_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING surface's first oracle-attested query: the stateless
-    suite driven through a real file stream (readStream + availableNow,
-    maxFilesPerTrigger=2 over 8 source files -> multiple genuine
-    micro-batches) into a memory sink
-    (streaming/validate_stream.py:run_suite_available_now). The suite
-    compiles to stateless column expressions, so the concatenated
-    micro-batch outputs must hash-equal the batch row_suite — this query
-    therefore shares row_suite's DuckDB oracle, turning the streaming
-    path's batch-equivalence claim (previously pytest-only) into a
-    driver-checked row."""
-    import tempfile
-
+    suite driven through a real file stream (streaming/validate_stream.py:
+    run_available_now; the transcripts split by conv_id hash into 4 parts
+    -> 4 genuine micro-batches) into a memory sink. The suite compiles to
+    stateless column expressions, so the concatenated micro-batch outputs
+    must hash-equal the batch row_suite — this query therefore shares
+    row_suite's DuckDB oracle, turning the streaming path's
+    batch-equivalence claim (previously pytest-only) into a driver-checked
+    row."""
     from fsharp_data_validation_spark.streaming.validate_stream import (
-        run_suite_available_now,
+        run_available_now,
+        validate_stream,
     )
 
     t = _transcripts(spark, sf_dir)
-    mem_table = f"stream_suite_v{next(_STREAM_SUITE_RUNS)}"
-    out = run_suite_available_now(
-        spark,
-        t,
-        transcript_row_suite(),
-        KEY,
-        tempfile.mkdtemp(prefix="stream_suite_"),
-        mem_table,
-    )
+    parts = [t.filter(F.pmod(F.hash("conv_id"), F.lit(4)) == i) for i in range(4)]
+    suite = transcript_row_suite()
+    out = run_available_now(parts, lambda s: validate_stream(s, suite, KEY)[1])
     return out.select("conv_id", "turn_idx", "ts", "path", "code")
-
-
-def _write_stream_parts(spark: SparkSession, parts, schema: str, src: str) -> None:
-    """Write each non-empty part of a series as ONE parquet file
-    ``src/000.parquet``, ``001.parquet``, ... with strictly increasing
-    mtimes. A file stream source picks up new files in modification-time
-    order, and files written within one timestamp tick would tie; explicit
-    names and ``os.utime`` make the stream's input order the series order."""
-    import glob
-    import os
-    import shutil
-    import time
-
-    t0 = int(time.time()) - len(parts)
-    for i, part in enumerate(p for p in parts if p):
-        tmp = f"{src}/_part{i:03d}"
-        spark.createDataFrame(part, schema).coalesce(1).write.parquet(tmp)
-        dst = f"{src}/{i:03d}.parquet"
-        os.replace(glob.glob(f"{tmp}/part-*.parquet")[0], dst)
-        shutil.rmtree(tmp)
-        os.utime(dst, (t0 + i, t0 + i))
 
 
 # the streaming control chart must concatenate micro-batches to
@@ -3877,16 +3844,14 @@ def q_stream_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming control-chart monitoring driven for real (streaming/
     validate_stream.py:windowed_rate_anomaly_stream): the daily
     violation-rate series flows through a genuine file stream
-    (maxFilesPerTrigger=2 -> multiple micro-batches, the trailing baseline
-    carried in applyInPandasWithState state) and the concatenated append
-    output must hash-equal the BATCH rate_anomaly closed form — so this
-    query shares rate_anomaly's DuckDB oracle (day aliased from the window
-    start), the stream_suite evidence design applied to the stateful
-    surface."""
-    import itertools
-    import tempfile
-
+    (run_available_now, two parts -> two micro-batches, the trailing
+    baseline carried in applyInPandasWithState state) and the concatenated
+    append output must hash-equal the BATCH rate_anomaly closed form — so
+    this query shares rate_anomaly's DuckDB oracle (day aliased from the
+    window start), the stream_suite evidence design applied to the
+    stateful surface."""
     from fsharp_data_validation_spark.streaming.validate_stream import (
+        run_available_now,
         windowed_rate_anomaly_stream,
     )
 
@@ -3906,32 +3871,19 @@ def q_stream_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("win_start")
     )
-    src = tempfile.mkdtemp(prefix="stream_ra_src_")
-    # two single-file parts (first half of the series, then the second) so
-    # maxFilesPerTrigger=1 makes two genuine micro-batches with the baseline
-    # carried across the batch boundary — the per-day-file variant (30
-    # write jobs + 15 micro-batches) cost 163 s in the driver bench for the
-    # same attestation; the fine-grained multi-batch carry is pytest-pinned
+    # two parts (first half of the series, then the second): two genuine
+    # micro-batches with the baseline carried across the batch boundary —
+    # the per-day-file variant (30 write jobs + 15 micro-batches) cost
+    # 163 s in the driver bench for the same attestation; the fine-grained
+    # multi-batch carry is pytest-pinned
     # (test_windowed_rate_anomaly_stream_matches_batch)
     rows = daily.collect()
     half = max(1, len(rows) // 2)
-    sch = "win_start timestamp, n_rows bigint, n_viol bigint, rate double"
-    _write_stream_parts(spark, [rows[:half], rows[half:]], sch, src)
-    rstream = (
-        spark.readStream.schema(sch).option("maxFilesPerTrigger", 1).parquet(src)
+    parts = [spark.createDataFrame(p, daily.schema) for p in (rows[:half], rows[half:])]
+    out = run_available_now(
+        parts, lambda s: windowed_rate_anomaly_stream(s, baseline=7, z_threshold=2.0)
     )
-    mem_table = f"stream_ra_v{next(_STREAM_RA_RUNS)}"
-    q = (
-        windowed_rate_anomaly_stream(rstream, baseline=7, z_threshold=2.0)
-        .writeStream.format("memory")
-        .queryName(mem_table)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="stream_ra_ck_"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(mem_table).select(
+    return out.select(
         F.col("win_start").cast("date").alias("day"),
         "n_rows",
         "n_viol",

@@ -8,17 +8,27 @@ Stateful additions here:
 - watermarked per-window violation counts (late data handled by the
   watermark, not dropped silently);
 - ``foreachBatch`` writer so violations/valid rows can go to any batch sink
-  (parquet/Iceberg) with exactly-once per micro-batch semantics.
+  (parquet/Iceberg). ``foreachBatch`` is at-least-once: a micro-batch
+  replayed after a failure is written again, and ``run_stream_to_parquet``
+  appends, so a replay duplicates its rows.
+
+``run_available_now`` drives every "stream equals batch" pin (driver
+queries ``stream_*``, ``tests/test_streaming.py``) to its batch answer.
 """
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
+import tempfile
+import time
 from functools import reduce
-from itertools import accumulate
+from itertools import accumulate, count
 from operator import add
-from typing import Sequence
+from typing import Callable, Sequence
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.compiler import Suite
 from ..rounding import half_up, seq_mean_std
@@ -151,7 +161,9 @@ def run_stream_to_parquet(
     checkpoint_dir: str,
 ):
     """Drive the stream with foreachBatch writing violations to parquet;
-    processes the backlog (``availableNow``) and stops."""
+    processes the backlog (``availableNow``) and stops. Each micro-batch
+    APPENDS to ``out_dir`` and ``foreachBatch`` is at-least-once, so a
+    micro-batch replayed after a failure duplicates its violation rows."""
     _, violations = validate_stream(stream_df, suite, key_cols)
 
     def write_batch(batch_df: DataFrame, batch_id: int):
@@ -166,55 +178,62 @@ def run_stream_to_parquet(
     )
 
 
-def run_suite_available_now(
-    spark,
-    batch_df: DataFrame,
-    suite: Suite,
-    key_cols: Sequence[str],
-    work_dir: str,
-    mem_table: str,
-    n_files: int = 8,
-    max_files_per_trigger: int = 2,
-    timeout_sec: int = 600,
+_TIMEOUT_S = 600  # how long run_available_now waits for the backlog
+_RUNS = count()  # memory sinks accumulate per query name: one name per run
+
+
+def _write_series(parts: Sequence[DataFrame], src: str) -> None:
+    """Write part ``i`` of a series as ONE parquet file ``src/{i:03d}.parquet``
+    with strictly increasing mtimes. A file stream source picks up new files
+    in modification-time order, and files written within one timestamp tick
+    would tie; explicit names and ``os.utime`` make the stream's input order
+    the series order."""
+    t0 = int(time.time()) - len(parts)
+    for i, part in enumerate(parts):
+        tmp = f"{src}/_part{i:03d}"
+        part.coalesce(1).write.parquet(tmp)
+        dst = f"{src}/{i:03d}.parquet"
+        os.replace(glob.glob(f"{tmp}/part-*.parquet")[0], dst)
+        shutil.rmtree(tmp)
+        os.utime(dst, (t0 + i, t0 + i))
+
+
+def run_available_now(
+    parts: Sequence[DataFrame], monitor: Callable[[DataFrame], DataFrame]
 ) -> DataFrame:
-    """Drive the stateless suite through a REAL file stream end-to-end and
-    return the violations as a batch DataFrame — the batch-equivalence
-    attestation path for the streaming surface (driver query
-    ``stream_suite``: its output must hash-equal the batch ``row_suite``,
-    so it shares that query's DuckDB oracle).
-
-    Shape: ``batch_df`` is materialized to ``work_dir/src`` as ``n_files``
-    parquet files; ``readStream`` + ``availableNow`` with
-    ``maxFilesPerTrigger`` then processes them in MULTIPLE micro-batches
-    (genuinely incremental — not one batch wearing a streaming hat), the
-    stateless suite violations stream appends into a memory sink, and the
-    sink table is returned once the query terminates. The suite compiles to
-    stateless column expressions, so no state store is involved and
-    per-micro-batch results concatenate to exactly the batch answer.
-
-    ``mem_table`` must be fresh per invocation (memory sinks accumulate per
-    query name); callers pass a counter-suffixed name."""
-    src = f"{work_dir}/src"
-    batch_df.repartition(n_files).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src)
-    )
-    _, violations = validate_stream(stream, suite, key_cols)
-    q = (
-        violations.writeStream.format("memory")
-        .queryName(mem_table)
-        .outputMode("append")
-        .option("checkpointLocation", f"{work_dir}/ckpt_{mem_table}")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:  # defensive: never leave a stuck query behind
-        q.stop()
-        raise TimeoutError(f"stream_suite did not drain in {timeout_sec}s")
-    return spark.table(mem_table)
+    """Drive ``monitor`` over a REAL file stream and return its output as a
+    batch table. Each part is one source file and, at
+    ``maxFilesPerTrigger=1``, one micro-batch in series order, so state and
+    watermarks carry across genuine batch boundaries. Files and checkpoint
+    live in a temp dir removed before returning; the memory sink keeps its
+    rows on the driver, so the table outlives it. A query still running
+    after ``_TIMEOUT_S`` is stopped and raises ``TimeoutError``."""
+    spark = parts[0].sparkSession
+    name = f"available_now_{next(_RUNS)}"
+    with tempfile.TemporaryDirectory(prefix="available_now_") as work:
+        _write_series(parts, f"{work}/src")
+        stream = (
+            spark.readStream.schema(parts[0].schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{work}/src")
+        )
+        q = (
+            monitor(stream)
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .option("checkpointLocation", f"{work}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            if _TIMEOUT_S > 0:  # awaitTermination rejects 0
+                q.awaitTermination(_TIMEOUT_S)
+            if q.isActive:
+                raise TimeoutError(f"{name} did not drain in {_TIMEOUT_S}s")
+        finally:
+            q.stop()  # no-op once terminated; never outlives its temp dir
+    return spark.table(name)
 
 
 def stream_dedup(
@@ -237,34 +256,29 @@ def stream_dedup(
     )
 
 
-def _windowed_bucket_counts(
-    stream_df, baseline_hist, value_col, ts_col, window, watermark, width, n_buckets
-):
-    """Shared input of the numeric windowed monitors: ONE watermarked window
-    aggregation (win, rows, _c0.._c{n-1}) — Structured Streaming forbids
-    chained aggregations, so the window histogram is ``n_buckets``
-    conditional sums and each statistic is then a row-local expression over
-    those count columns (append-mode compatible, state evicted by the
-    watermark) — plus the baseline histogram's per-bucket counts and total.
-    The baseline is collected once on the driver: ``n_buckets`` rows (a few
-    hundred bytes) REGARDLESS of how much data produced it, so a plan
-    literal, not a data collect."""
-    from ..operators.drift import _bucket
-
-    base = {r["bucket"]: r["n"] for r in baseline_hist.collect()}
-    counts = [
-        F.sum((F.col("_bkt") == i).cast("long")).alias(f"_c{i}")
-        for i in range(n_buckets)
-    ]
-    agg = (
-        stream_df.filter(F.col(value_col).isNotNull())
-        .withColumn("_bkt", _bucket(F.col(value_col), width, n_buckets))
+def _window_counts(
+    stream_df: DataFrame,
+    value: Column,
+    cells: Sequence[Column],
+    ts_col: str,
+    window: str,
+    watermark: str,
+) -> DataFrame:
+    """Shared input of the windowed drift monitors: ONE watermarked window
+    aggregation (win, rows, _c0.._c{k-1}) over the non-NULL ``value`` rows,
+    ``_c{i}`` counting the rows where ``cells[i]`` holds. Structured
+    Streaming forbids chained aggregations, so each statistic is a row-local
+    expression over these count columns (append-mode compatible, state
+    evicted by the watermark)."""
+    return (
+        stream_df.filter(value.isNotNull())
         .withWatermark(ts_col, watermark)
         .groupBy(F.window(ts_col, window).alias("win"))
-        .agg(F.count(F.lit(1)).alias("rows"), *counts)
+        .agg(
+            F.count(F.lit(1)).alias("rows"),
+            *(F.sum(c.cast("long")).alias(f"_c{i}") for i, c in enumerate(cells)),
+        )
     )
-    base_n = [base.get(i, 0) for i in range(n_buckets)]
-    return agg, base_n, float(sum(base.values())) or 1.0
 
 
 def windowed_drift_stream(
@@ -283,14 +297,16 @@ def windowed_drift_stream(
     window's distribution of ``value_col`` to ``baseline_hist`` (a batch
     histogram from ``operators.drift.histogram``, e.g. built over last
     month's validated corpus) — the sum of ``operators.drift.psi_term``
-    over the window counts and baseline literals (see
-    ``_windowed_bucket_counts`` for the streaming shape)."""
-    from ..operators.drift import psi_term
+    over the window counts and baseline literals (``n_buckets`` rows
+    collected once: a plan literal, not a data collect)."""
+    from ..operators.drift import _bucket, psi_term
 
-    agg, base_n, tot = _windowed_bucket_counts(
-        stream_df, baseline_hist, value_col, ts_col, window, watermark,
-        bucket_width, n_buckets,
-    )
+    v = F.col(value_col)
+    cells = [_bucket(v, bucket_width, n_buckets) == i for i in range(n_buckets)]
+    agg = _window_counts(stream_df, v, cells, ts_col, window, watermark)
+    base = {r["bucket"]: r["n"] for r in baseline_hist.collect()}
+    base_n = [base.get(i, 0) for i in range(n_buckets)]
+    tot = float(sum(base.values())) or 1.0
     terms = [
         psi_term(F.col(f"_c{i}"), F.lit(base_n[i]), F.col("rows"), F.lit(tot))
         for i in range(n_buckets)
@@ -315,16 +331,12 @@ def windowed_chi2_stream(
     ``operators/drift.py:chi2_joined``, completing the windowed family
     (PSI covers binned numerics; this covers unordered categories).
 
-    Shape notes (same discipline as ``windowed_drift_stream``):
-    - one watermarked window aggregation with one conditional sum per
-      baseline category plus an OTHER cell for categories the baseline has
-      never seen (their appearance IS drift — they inflate chi2 through a
-      zero-expectation-free margin cell rather than being dropped);
-    - chi2/dof are row-local expressions over those count columns —
-      append-mode compatible, state bounded by the watermark;
-    - the baseline is |categories| rows collected once as plan literals,
-      not a data collect. Cells empty in BOTH margins contribute 0 and
-      drop out of dof.
+    Shape (``_window_counts``): one cell per baseline category plus an
+    OTHER cell for categories the baseline has never seen (their appearance
+    IS drift — they inflate chi2 through a zero-expectation margin cell
+    rather than being dropped). The baseline is |categories| rows collected
+    once as plan literals, not a data collect. Cells empty in BOTH margins
+    contribute 0 and drop out of dof.
     """
     from ..operators.drift import chi2_cell
 
@@ -338,22 +350,13 @@ def windowed_chi2_stream(
     cats = sorted(base)
 
     c = F.col(cat_col)
-    sums = [
-        F.sum((c == F.lit(cat)).cast("long")).alias(f"_c{i}")
-        for i, cat in enumerate(cats)
-    ] + [
-        F.sum((~c.isin(list(cats))).cast("long")).alias("_other"),
-    ]
-    agg = (
-        stream_df.filter(c.isNotNull())
-        .withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("win"))
-        .agg(F.count(F.lit(1)).alias("rows"), *sums)
-    )
+    # one cell per baseline category, then the OTHER cell: _c{len(cats)}
+    in_cat = [c == F.lit(cat) for cat in cats] + [~c.isin(cats)]
+    agg = _window_counts(stream_df, c, in_cat, ts_col, window, watermark)
     tg = F.col("rows").cast("double")
     t = F.lit(float(sum(base.values())))
     cells = [(F.col(f"_c{i}"), F.lit(base[cat])) for i, cat in enumerate(cats)]
-    cells.append((F.col("_other"), F.lit(0.0)))
+    cells.append((F.col(f"_c{len(cats)}"), F.lit(0.0)))
     chi2 = reduce(add, [chi2_cell(n, g, tg, t) for n, g in cells])
     dof_cells = reduce(add, [F.when(n + g > 0, 1).otherwise(0) for n, g in cells])
     return agg.select(
@@ -386,12 +389,14 @@ def windowed_w1_stream(
     W1 = Σ_b ``cdf_gap`` · bucket_width over the full 0..n-1 spine — gap
     buckets count, matching ``operators/drift.py:w1_joined``.
     Returns (win, rows, w1)."""
-    from ..operators.drift import cdf_gap
+    from ..operators.drift import _bucket, cdf_gap
 
-    agg, base_n, tot = _windowed_bucket_counts(
-        stream_df, baseline_hist, value_col, ts_col, window, watermark,
-        bucket_width, n_buckets,
-    )
+    v = F.col(value_col)
+    cells = [_bucket(v, bucket_width, n_buckets) == i for i in range(n_buckets)]
+    agg = _window_counts(stream_df, v, cells, ts_col, window, watermark)
+    base = {r["bucket"]: r["n"] for r in baseline_hist.collect()}
+    base_n = [base.get(i, 0) for i in range(n_buckets)]
+    tot = float(sum(base.values())) or 1.0
     cum_win = list(accumulate(F.col(f"_c{i}") for i in range(n_buckets)))
     cum_base = list(accumulate(base_n))
     # the last bucket's CDF gap is always 0 (both CDFs reach 1)

@@ -54,21 +54,6 @@ def test_curate_dedup_pack_keep_earliest_chain(spark):
         assert r["pack_group"].split("|")[0] in ("train", "test")
 
 
-def test_stream_suite_equals_batch_row_suite(spark):
-    """The streaming stateless-suite path (readStream + availableNow with
-    maxFilesPerTrigger=2 -> multiple genuine micro-batches -> memory sink)
-    must produce EXACTLY the batch row_suite violations — same rows, same
-    camelCase-dotted paths — which is why driver query `stream_suite`
-    shares row_suite's DuckDB oracle."""
-    import __spark_entry__ as e
-
-    sf = "/root/testdata/sf0.001"
-    batch = {tuple(r) for r in e.q_row_suite(spark, sf).collect()}
-    streamed = [tuple(r) for r in e.q_stream_suite(spark, sf).collect()]
-    assert len(streamed) == len(batch) > 0  # no duplicated micro-batch rows
-    assert set(streamed) == batch
-
-
 def test_token_count_bpe_empty_text_null_ratio(spark):
     """Empty/degenerate text is 0 BPE tokens -> chars_per_token must be NULL
     (not NaN, not a crash) on BOTH engines. Spark side: NULLIF guard in
