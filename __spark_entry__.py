@@ -31,6 +31,7 @@ from fsharp_data_validation_spark.operators.crossrow import (
     uniqueness_violations,
 )
 from fsharp_data_validation_spark.operators.drift import (
+    histogram,
     js_joined,
     ks_joined,
     psi_joined,
@@ -55,6 +56,15 @@ from fsharp_data_validation_spark.sources.transcripts import (
     tool_catalog,
     transcripts_cte,
     with_transcripts,
+)
+from fsharp_data_validation_spark.streaming.validate_stream import (
+    run_available_now,
+    validate_stream,
+    windowed_chi2_stream,
+    windowed_drift_stream,
+    windowed_rate_anomaly_stream,
+    windowed_rates_to_sink,
+    windowed_w1_stream,
 )
 
 KEY = ["conv_id", "turn_idx", "ts"]
@@ -594,7 +604,8 @@ def q_quantiles_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_quantiles_by_group(t, "part_date", "text_len", [0.5, 0.95])
 
 
-@query(with_transcripts(
+#: shared by psi_by_day (batch) and stream_psi (streaming)
+_PSI_BY_DAY_ORACLE = with_transcripts(
     """
             , per AS (
               SELECT CAST(ts AS DATE) AS grp,
@@ -615,7 +626,10 @@ def q_quantiles_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
                                   / GREATEST(gn * 1.0 / t, 0.000001))), 4) AS psi
             FROM j CROSS JOIN tot GROUP BY grp
             """
-))
+)
+
+
+@query(_PSI_BY_DAY_ORACLE)
 def q_psi_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-partition drift: PSI of each day's turn-length distribution vs
     the whole-table baseline — the production shape of the north rule's
@@ -1385,7 +1399,8 @@ def q_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chi2_drift(_transcripts(spark, sf_dir), "role", "ts")
 
 
-@query(with_transcripts(
+#: shared by w1_by_day (batch) and stream_w1 (streaming)
+_W1_BY_DAY_ORACLE = with_transcripts(
     """
             , per AS (
               SELECT CAST(ts AS DATE) AS grp,
@@ -1413,7 +1428,10 @@ def q_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                    ROUND(SUM(ABS(cn * 1.0 / tg - cg * 1.0 / (SELECT t FROM tot))) * 25.0, 4) AS w1
             FROM c GROUP BY grp
             """
-))
+)
+
+
+@query(_W1_BY_DAY_ORACLE)
 def q_w1_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-day Wasserstein-1 drift of turn length vs the whole-table
     baseline — completes the per-group drift family (PSI/KS/JS/W1); grid
@@ -2079,7 +2097,8 @@ def q_top_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top_ngram_fraction(load_docs(spark, sf_dir), "doc_id", "text", n=2)
 
 
-@query(with_transcripts(
+#: shared by chi2_by_day (batch) and stream_chi2 (streaming)
+_CHI2_BY_DAY_ORACLE = with_transcripts(
     """
             , per AS (
               SELECT CAST(ts AS DATE) AS day, role AS cat, COUNT(*) AS n
@@ -2113,7 +2132,10 @@ def q_top_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
                    CAST(MAX(k) - 1 AS BIGINT) AS dof
             FROM j GROUP BY day, tgn
             """
-))
+)
+
+
+@query(_CHI2_BY_DAY_ORACLE)
 def q_chi2_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-day CATEGORICAL drift: chi-square of each day's role
     distribution against the whole-table baseline
@@ -3824,16 +3846,74 @@ def q_stream_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_suite's DuckDB oracle, turning the streaming path's
     batch-equivalence claim (previously pytest-only) into a driver-checked
     row."""
-    from fsharp_data_validation_spark.streaming.validate_stream import (
-        run_available_now,
-        validate_stream,
-    )
-
     t = _transcripts(spark, sf_dir)
     parts = [t.filter(F.pmod(F.hash("conv_id"), F.lit(4)) == i) for i in range(4)]
     suite = transcript_row_suite()
     out = run_available_now(parts, lambda s: validate_stream(s, suite, KEY)[1])
     return out.select("conv_id", "turn_idx", "ts", "path", "code")
+
+
+def _stream_days(t: DataFrame, day: str, monitor) -> DataFrame:
+    """Drive a daily windowed drift monitor over the transcripts as a real
+    stream (run_available_now) and name its window start ``day``. ``ts`` is
+    cast to TIMESTAMP (withWatermark rejects TIMESTAMP_NTZ); the rows are
+    split at the midpoint instant of ``ts``, earlier half first, so the
+    middle day's window state crosses a micro-batch boundary; a third part
+    of ONE sentinel row at 2100-01-01 closes every real day (its own window
+    never closes). The sentinel's ``text`` and ``role`` are non-NULL: the
+    monitors drop NULL values before the watermark."""
+    t = t.withColumn("ts", F.col("ts").cast("timestamp"))
+    us = F.unix_micros("ts")
+    mid = t.agg((F.min(us) + F.max(us)) / 2).first()[0]
+    sentinel = (
+        t.filter(F.col("text").isNotNull() & F.col("role").isNotNull())
+        .limit(1)
+        .withColumn("ts", F.lit("2100-01-01").cast("timestamp"))
+    )
+    out = run_available_now([t.filter(us < mid), t.filter(us >= mid), sentinel], monitor)
+    stats = [c for c in out.columns if c not in ("win", "rows")]
+    return out.select(F.to_date("win.start").alias(day), F.col("rows").alias("n_rows"), *stats)
+
+
+# each windowed drift monitor's daily windows must concatenate to EXACTLY
+# its batch per-day twin, so each shares that twin's oracle
+@query(_PSI_BY_DAY_ORACLE)
+def q_stream_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming PSI drift (streaming/validate_stream.py:
+    windowed_drift_stream) over daily event-time windows against the
+    whole-table text-length baseline: the stream form of psi_by_day."""
+    t = _transcripts(spark, sf_dir).withColumn("text_len", F.length("text"))
+    base = histogram(t, "text_len", 25.0, 20)
+    return _stream_days(
+        t,
+        "part_date",
+        lambda s: windowed_drift_stream(s, base, "text_len", "ts", "1 day", "1 hour", 25.0, 20),
+    )
+
+
+@query(_W1_BY_DAY_ORACLE)
+def q_stream_w1(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming Wasserstein-1 drift (streaming/validate_stream.py:
+    windowed_w1_stream), the stream form of w1_by_day."""
+    t = _transcripts(spark, sf_dir).withColumn("text_len", F.length("text"))
+    base = histogram(t, "text_len", 25.0, 20)
+    return _stream_days(
+        t,
+        "part_date",
+        lambda s: windowed_w1_stream(s, base, "text_len", "ts", "1 day", "1 hour", 25.0, 20),
+    )
+
+
+@query(_CHI2_BY_DAY_ORACLE)
+def q_stream_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming categorical chi2 drift of the role mix
+    (streaming/validate_stream.py:windowed_chi2_stream) against the
+    whole-table role counts, the stream form of chi2_by_day."""
+    t = _transcripts(spark, sf_dir)
+    base = t.groupBy(F.col("role").alias("cat")).agg(F.count(F.lit(1)).alias("n"))
+    return _stream_days(
+        t, "day", lambda s: windowed_chi2_stream(s, base, "role", "ts", "1 day", "1 hour")
+    )
 
 
 # the streaming control chart must concatenate micro-batches to
@@ -3850,26 +3930,9 @@ def q_stream_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     this query shares rate_anomaly's DuckDB oracle (day aliased from the
     window start), the stream_suite evidence design applied to the
     stateful surface."""
-    from fsharp_data_validation_spark.streaming.validate_stream import (
-        run_available_now,
-        windowed_rate_anomaly_stream,
-    )
-
-    t = _transcripts(spark, sf_dir)
-    anyf = transcript_row_suite().any_failure_column()
-    daily = (
-        t.groupBy(F.to_date("ts").alias("day"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(anyf.cast("long")).alias("n_viol"),
-        )
-        .select(
-            F.col("day").cast("timestamp").alias("win_start"),
-            "n_rows",
-            "n_viol",
-            F.round(F.col("n_viol") / F.col("n_rows"), 6).alias("rate"),
-        )
-        .orderBy("win_start")
+    t = _transcripts(spark, sf_dir).withColumn("ts", F.col("ts").cast("timestamp"))
+    daily = windowed_rates_to_sink(t, transcript_row_suite(), "ts", "1 day").orderBy(
+        "win_start"
     )
     # two parts (first half of the series, then the second): two genuine
     # micro-batches with the baseline carried across the batch boundary —

@@ -988,7 +988,6 @@ def pmi_bigrams(
     min_count: int = 5,
     top_k: int = 20,
     round_to: int = 4,
-    prune: bool = False,
 ) -> DataFrame:
     """Top corpus collocations by pointwise mutual information:
     PMI(a,b) = ln( p(ab) / (p(a)·p(b)) ) with p(ab) over bigram tokens and
@@ -1007,24 +1006,10 @@ def pmi_bigrams(
 
     100 TB note: the bigram count is the one inherently corpus-scale
     shuffle (bigram keys are near-unique, so map-side combine can't shrink
-    it — measured memory-bandwidth-bound, BENCH.md). ``prune=True``
-    switches to the two-pass form built on the LOSSLESS prune
-    c(ab) <= min(c(a), c(b)): pass 1 counts unigrams (a heavily
-    map-side-combined vocab-scale aggregate) plus one 'd' marker per doc,
-    giving the exact totals algebraically (nb = nw − n_docs, since every
-    doc contributes size words and size−1 bigrams); pass 2 drops any
-    bigram with an infrequent constituent via broadcast hash semi-joins
-    BEFORE the bigram shuffle. On Zipf-distributed real text that prunes
-    the long tail — most of the shuffle; output is identical by
-    construction (test-pinned). The default single-pass form is better on
-    this benchmark's uniform-vocab synthetic corpus (every word frequent —
-    the no-prune worst case, and one scan beats two).
+    it — measured memory-bandwidth-bound, BENCH.md).
 
     Returns (bigram, n_ab, pmi) — top_k rows."""
     from ..cache import persist_tracked
-
-    if prune:
-        return _pmi_bigrams_pruned(df, text_col, min_count, top_k, round_to)
 
     words = F.split(F.col(text_col), " ")
     grams = _ngrams_expr(words, 2)
@@ -1059,93 +1044,6 @@ def pmi_bigrams(
         .join(uni.select(F.col("w").alias("_b"), F.col("cw").alias("cb")), "_b")
         .crossJoin(F.broadcast(nw))
         .crossJoin(F.broadcast(nb))
-        .select(
-            "bigram",
-            F.col("n_ab").cast("bigint").alias("n_ab"),
-            F.round(
-                F.log(
-                    (F.col("n_ab") / F.col("_nb"))
-                    / ((F.col("ca") / F.col("_nw")) * (F.col("cb") / F.col("_nw")))
-                ),
-                round_to,
-            ).alias("pmi"),
-        )
-    )
-    return scored.orderBy(F.desc("pmi"), F.asc("bigram")).limit(top_k)
-
-
-def _pmi_bigrams_pruned(
-    df: DataFrame,
-    text_col: str,
-    min_count: int,
-    top_k: int,
-    round_to: int,
-) -> DataFrame:
-    """Two-pass PMI with the frequent-word prefilter (see ``pmi_bigrams``):
-
-    - pass 1: one exploded aggregate over words + a 'd' marker per doc →
-      persisted unigram counts and the exact totals (nw = Σ c over words;
-      nb = nw − n_docs, because each doc of size s contributes s words and
-      s−1 bigrams, and split() never yields an empty array);
-    - pass 2: bigrams whose BOTH constituents have c(w) >= min_count
-      (broadcast hash semi-joins before the shuffle — lossless, since
-      c(ab) <= min(c(a), c(b)) < min_count would fail the count cut
-      anyway) → hash aggregate over the surviving bigrams only.
-
-    Output is identical to the single-pass form by construction."""
-    from ..cache import persist_tracked
-
-    words = F.split(F.col(text_col), " ")
-    base = df.filter(F.col(text_col).isNotNull())
-    tagged1 = F.concat(
-        F.transform(words, lambda w: F.struct(F.lit("w").alias("kind"), w.alias("tok"))),
-        F.array(F.struct(F.lit("d").alias("kind"), F.lit("").alias("tok"))),
-    )
-    counts1 = persist_tracked(
-        base.select(F.explode(tagged1).alias("t"))
-        .groupBy(F.col("t.kind").alias("kind"), F.col("t.tok").alias("tok"))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    uni = counts1.filter(F.col("kind") == "w").select(
-        F.col("tok").alias("w"), F.col("c").alias("cw")
-    )
-    totals = counts1.groupBy().agg(
-        F.sum(F.when(F.col("kind") == "w", F.col("c")).otherwise(0)).alias("_nw"),
-        (
-            F.sum(F.when(F.col("kind") == "w", F.col("c")).otherwise(0))
-            - F.sum(F.when(F.col("kind") == "d", F.col("c")).otherwise(0))
-        ).alias("_nb"),
-    )
-    frequent = uni.filter(F.col("cw") >= min_count)
-    grams = _ngrams_expr(words, 2)
-    exploded = (
-        base.filter(F.size(words) >= 2)
-        .select(F.explode(grams).alias("bigram"))
-        .select(
-            "bigram",
-            F.split(F.col("bigram"), " ").getItem(0).alias("_a"),
-            F.split(F.col("bigram"), " ").getItem(1).alias("_b"),
-        )
-        .join(
-            F.broadcast(frequent.select(F.col("w").alias("_a"))),
-            "_a",
-            "left_semi",
-        )
-        .join(
-            F.broadcast(frequent.select(F.col("w").alias("_b"))),
-            "_b",
-            "left_semi",
-        )
-    )
-    bi = exploded.groupBy("bigram").agg(F.count(F.lit(1)).alias("n_ab")).filter(
-        F.col("n_ab") >= min_count
-    )
-    a = F.split(F.col("bigram"), " ")
-    scored = (
-        bi.select("bigram", "n_ab", a.getItem(0).alias("_a"), a.getItem(1).alias("_b"))
-        .join(uni.select(F.col("w").alias("_a"), F.col("cw").alias("ca")), "_a")
-        .join(uni.select(F.col("w").alias("_b"), F.col("cw").alias("cb")), "_b")
-        .crossJoin(F.broadcast(totals))
         .select(
             "bigram",
             F.col("n_ab").cast("bigint").alias("n_ab"),

@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass
 from typing import List, Optional, Sequence
@@ -123,6 +124,19 @@ def _write_parts(out: DataFrame, path: str) -> None:
         .partitionBy("part")
         .parquet(path)
     )
+
+
+def _clear_parts(spark, dirs: Sequence[str], parts: Sequence[str]) -> None:
+    """Delete ``part=<value>`` under each of ``dirs`` for every value in
+    ``parts``. Dynamic overwrite replaces only the partitions a write has
+    rows for, so without this a redone partition keeps its old rows in any
+    output where it now has none. The directory name is Spark's own
+    partition-path escaping, so the deleted path is the one Spark writes."""
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    for part in parts:
+        name = f"part={utils.escapePathName(part)}"
+        for d in dirs:
+            shutil.rmtree(os.path.join(d, name), ignore_errors=True)
 
 
 def _safe_name(value) -> str:
@@ -277,7 +291,8 @@ class ValidationRun:
 
         Each batch is one ``Suite.run`` over the batch input plus a string
         ``part`` column (the partition value): the stats come from its
-        ``verdict`` and every output is written partitioned by ``part``."""
+        ``verdict`` and every output is written partitioned by ``part``,
+        after the batch's ``part=`` directories are cleared from each."""
         pending = self.pending_partitions(df)
         if max_partitions is not None:
             pending = pending[:max_partitions]
@@ -285,6 +300,9 @@ class ValidationRun:
         # "part" carries the partition value; a key of that name is that column
         keys = [k for k in self.key_cols if k != "part"] + ["part"]
         step = max(batch_size, 1)
+        out_dirs = [self.violations_dir]
+        out_dirs += [self.valid_dir] if self.emit_valid else []
+        out_dirs += [self.reports_dir] if self.emit_reports else []
         outcomes = []
         for i in range(0, len(pending), step):
             batch = pending[i : i + step]
@@ -293,6 +311,7 @@ class ValidationRun:
             pdf = df.filter(pcol.isin(batch)).withColumn("part", pcol)
             res = self.suite.run(pdf, keys)
             stats = {r["part"]: r.asDict() for r in res.verdict(["part"], pdf).collect()}
+            _clear_parts(df.sparkSession, out_dirs, batch)
             _write_parts(
                 res.violations.select(*keys, F.col("path_str").alias("path"), "code"),
                 self.violations_dir,

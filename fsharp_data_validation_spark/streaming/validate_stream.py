@@ -4,16 +4,21 @@ watermarking for the windowed violation-rate aggregation.
 
 The suite compiles to stateless column expressions, so it attaches to a
 streaming DataFrame unchanged (no state store needed for the row checks).
-Stateful additions here:
+Additions here:
 - watermarked per-window violation counts (late data handled by the
   watermark, not dropped silently);
+- windowed PSI / W1 / chi2 drift monitors against a static baseline, and
+  the stateful control-chart rate anomaly;
 - ``foreachBatch`` writer so violations/valid rows can go to any batch sink
   (parquet/Iceberg). ``foreachBatch`` is at-least-once: a micro-batch
   replayed after a failure is written again, and ``run_stream_to_parquet``
   appends, so a replay duplicates its rows.
 
-``run_available_now`` drives every "stream equals batch" pin (driver
-queries ``stream_*``, ``tests/test_streaming.py``) to its batch answer.
+``run_available_now`` drives every "stream equals batch" pin to its batch
+answer: each monitor has a driver query sharing its batch twin's oracle
+(``stream_suite``, ``stream_psi``, ``stream_w1``, ``stream_chi2``,
+``stream_rate_anomaly``), and ``tests/test_streaming.py`` pins each one on
+hand-built series.
 """
 
 from __future__ import annotations
@@ -63,92 +68,6 @@ def windowed_violation_rate(
             F.count(F.lit(1)).alias("rows"),
             F.sum(suite.any_failure_column().cast("long")).alias("rows_with_violations"),
             F.sum(suite.failure_count_column()).alias("violations"),
-        )
-    )
-
-
-def turn_continuity_stream(
-    stream_df: DataFrame,
-    conv_col: str = "conv_id",
-    idx_col: str = "turn_idx",
-    watermark_col: str = "ts",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Custom STATEFUL streaming operator (``applyInPandasWithState``):
-    per-conversation turn-index continuity across micro-batches.
-
-    State per conv_id: the highest turn_idx seen so far. Each batch's turns
-    are checked against it, emitting violation rows for
-    - ``turn_gap``: turn_idx jumps by more than 1 vs the running max;
-    - ``turn_regression``: turn_idx arrives at or below the running max
-      (duplicate or out-of-order turn in a *later* micro-batch).
-
-    This is the cross-batch generalization of the batch uniqueness/ordering
-    checks — the reference library cannot express cross-value state at all
-    (single-value design, SURVEY.md §2.8); Spark's state store makes it a
-    keyed incremental computation. The kernel is pandas-vectorized (numpy
-    on the batch's column arrays; no per-row Python beyond the group loop).
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    out_schema = StructType(
-        [
-            StructField("conv_id", StringType()),
-            StructField("turn_idx", IntegerType()),
-            StructField("code", StringType()),
-            StructField("prev_max", IntegerType()),
-        ]
-    )
-    state_schema = StructType([StructField("max_idx", LongType())])
-
-    def check(key, pdfs, state: GroupState):
-        import numpy as np
-        import pandas as pd
-
-        (conv,) = key
-        max_idx = state.get[0] if state.exists else -1
-        out = []
-        for pdf in pdfs:
-            idx = np.sort(pdf[idx_col].to_numpy())
-            prev = np.concatenate(([max_idx], idx[:-1]))
-            gap = idx > prev + 1
-            reg = idx <= prev
-            if gap.any() or reg.any():
-                bad = gap | reg
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "conv_id": conv,
-                            "turn_idx": idx[bad].astype("int32"),
-                            "code": np.where(gap[bad], "turn_gap", "turn_regression"),
-                            "prev_max": np.asarray(prev[bad], dtype="int64").astype(
-                                "int32"
-                            ),
-                        }
-                    )
-                )
-            if len(idx):
-                max_idx = max(max_idx, int(idx[-1]))
-        state.update((max_idx,))
-        for o in out:
-            yield o
-
-    return (
-        stream_df.withWatermark(watermark_col, watermark)
-        .groupBy(conv_col)
-        .applyInPandasWithState(
-            check,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
 
@@ -236,26 +155,6 @@ def run_available_now(
     return spark.table(name)
 
 
-def stream_dedup(
-    stream_df: DataFrame,
-    id_cols: Sequence[str],
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming exact dedup: drop rows whose ``id_cols`` were already seen
-    within the watermark horizon (``dropDuplicatesWithinWatermark`` — the
-    state store keeps one entry per key and EVICTS it once the watermark
-    passes, so state is bounded by the duplicate-arrival window, not the
-    stream's lifetime; plain ``dropDuplicates`` on a stream would grow state
-    forever). For content dedup, pre-compute a digest column (e.g.
-    ``F.md5(text)``) and pass it as the key — state then stores 32-byte
-    digests, never documents.
-    """
-    return stream_df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        list(id_cols)
-    )
-
-
 def _window_counts(
     stream_df: DataFrame,
     value: Column,
@@ -281,6 +180,30 @@ def _window_counts(
     )
 
 
+def _binned_window_counts(
+    stream_df: DataFrame,
+    baseline_hist: DataFrame,
+    value_col: str,
+    ts_col: str,
+    window: str,
+    watermark: str,
+    bucket_width: float,
+    n_buckets: int,
+):
+    """Shared input of the binned numeric monitors (PSI, W1): the window
+    counts of ``value_col``'s ``n_buckets`` buckets, plus the baseline
+    histogram collected once as plan literals — (agg, per-bucket baseline
+    counts, baseline total)."""
+    from ..operators.drift import _bucket
+
+    v = F.col(value_col)
+    cells = [_bucket(v, bucket_width, n_buckets) == i for i in range(n_buckets)]
+    agg = _window_counts(stream_df, v, cells, ts_col, window, watermark)
+    base = {r["bucket"]: r["n"] for r in baseline_hist.collect()}
+    base_n = [base.get(i, 0) for i in range(n_buckets)]
+    return agg, base_n, float(sum(base.values())) or 1.0
+
+
 def windowed_drift_stream(
     stream_df: DataFrame,
     baseline_hist: DataFrame,
@@ -299,14 +222,12 @@ def windowed_drift_stream(
     month's validated corpus) — the sum of ``operators.drift.psi_term``
     over the window counts and baseline literals (``n_buckets`` rows
     collected once: a plan literal, not a data collect)."""
-    from ..operators.drift import _bucket, psi_term
+    from ..operators.drift import psi_term
 
-    v = F.col(value_col)
-    cells = [_bucket(v, bucket_width, n_buckets) == i for i in range(n_buckets)]
-    agg = _window_counts(stream_df, v, cells, ts_col, window, watermark)
-    base = {r["bucket"]: r["n"] for r in baseline_hist.collect()}
-    base_n = [base.get(i, 0) for i in range(n_buckets)]
-    tot = float(sum(base.values())) or 1.0
+    agg, base_n, tot = _binned_window_counts(
+        stream_df, baseline_hist, value_col, ts_col, window, watermark,
+        bucket_width, n_buckets,
+    )
     terms = [
         psi_term(F.col(f"_c{i}"), F.lit(base_n[i]), F.col("rows"), F.lit(tot))
         for i in range(n_buckets)
@@ -389,14 +310,12 @@ def windowed_w1_stream(
     W1 = Σ_b ``cdf_gap`` · bucket_width over the full 0..n-1 spine — gap
     buckets count, matching ``operators/drift.py:w1_joined``.
     Returns (win, rows, w1)."""
-    from ..operators.drift import _bucket, cdf_gap
+    from ..operators.drift import cdf_gap
 
-    v = F.col(value_col)
-    cells = [_bucket(v, bucket_width, n_buckets) == i for i in range(n_buckets)]
-    agg = _window_counts(stream_df, v, cells, ts_col, window, watermark)
-    base = {r["bucket"]: r["n"] for r in baseline_hist.collect()}
-    base_n = [base.get(i, 0) for i in range(n_buckets)]
-    tot = float(sum(base.values())) or 1.0
+    agg, base_n, tot = _binned_window_counts(
+        stream_df, baseline_hist, value_col, ts_col, window, watermark,
+        bucket_width, n_buckets,
+    )
     cum_win = list(accumulate(F.col(f"_c{i}") for i in range(n_buckets)))
     cum_base = list(accumulate(base_n))
     # the last bucket's CDF gap is always 0 (both CDFs reach 1)
@@ -425,7 +344,8 @@ def windowed_rates_to_sink(
     parquet/Kafka sink; ``windowed_rate_anomaly_stream`` consumes that sink
     as its input stream (Spark does not allow a stateful operator after a
     streaming aggregation in one query, so the monitoring loop is the
-    standard two-query topology)."""
+    standard two-query topology). On a batch frame the watermark is a
+    no-op, so the same call builds the batch rate series."""
     return windowed_violation_rate(stream_df, suite, ts_col, window, watermark).select(
         F.col("win.start").alias("win_start"),
         F.col("rows").alias("n_rows"),

@@ -2,9 +2,13 @@
 declaration per query feeds ``queries()``, ``oracle_sql()`` and the
 quadratic flag, in ``attestation_order``."""
 
+import ast
 import json
+from pathlib import Path
 
 import __spark_entry__ as e
+
+ROOT = Path(e.__file__).resolve().parent
 
 OK = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
 
@@ -55,3 +59,35 @@ def test_registry_feeds_queries_and_oracles_in_one_order():
         assert qs[name] is fn and oracles[name] == oracle
         assert isinstance(oracle, str) and oracle.strip(), name
         assert isinstance(quadratic, bool)
+
+
+def _names(trees):
+    """Every ``ast.Name`` and imported name in ``trees``."""
+    out = set()
+    for tree in trees:
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Name):
+                out.add(n.id)
+            elif isinstance(n, ast.alias):
+                out.add(n.name)
+    return out
+
+
+def test_streaming_surface_has_consumers():
+    """Every public function of the streaming module is used outside its
+    own definition: by the driver entry, perfbench, or another function of
+    the module. A monitor ships with a consumer or not at all; ast, not
+    text search, so a docstring mention is not a use."""
+    module = ast.parse(
+        (ROOT / "fsharp_data_validation_spark/streaming/validate_stream.py").read_text()
+    )
+    consumers = [ROOT / "__spark_entry__.py", *(ROOT / "perfbench").glob("*.py")]
+    used = _names(ast.parse(p.read_text()) for p in consumers)
+    unused = [
+        f.name
+        for f in module.body
+        if isinstance(f, ast.FunctionDef)
+        and not f.name.startswith("_")
+        and f.name not in used | _names(n for n in module.body if n is not f)
+    ]
+    assert unused == []

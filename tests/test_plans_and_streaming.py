@@ -40,6 +40,56 @@ def _df(spark):
     return spark.createDataFrame(rows, schema=SCHEMA)
 
 
+def _revalidate_rewritten(spark, tmp_path, part, row, **kw):
+    """Run over ``_df`` laid out by ``part``, rewrite that one partition to
+    hold only ``row``, revalidate; returns (out dir, manifest entries)."""
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    _df(spark).write.partitionBy("part").parquet(src)
+
+    def run(**more):
+        ValidationRun(
+            transcript_row_suite(), out, ["conv_id", "turn_idx"], "part",
+            input_path=src, **kw, **more,
+        ).run(spark.read.parquet(src))
+
+    run()
+    no_part = StructType([f for f in SCHEMA.fields if f.name != "part"])
+    spark.createDataFrame([row], schema=no_part).write.mode("overwrite").parquet(
+        os.path.join(src, f"part={part}")
+    )
+    run(on_drift="revalidate")
+    docs = ValidationRun(
+        transcript_row_suite(), out, ["conv_id", "turn_idx"], "part"
+    ).completed_partitions()
+    return out, docs
+
+
+def test_revalidated_clean_partition_drops_stale_violations(spark, tmp_path):
+    """Partition b (a missing text) is rewritten clean: the manifest says
+    pass, so violations must hold no row for b any more."""
+    out, docs = _revalidate_rewritten(
+        spark, tmp_path, "b", Row(conv_id="c2", turn_idx=0, role="user", text="ok", tool=None)
+    )
+    assert docs["b"]["status"] == "pass"
+    viol = spark.read.parquet(os.path.join(out, "violations"))
+    assert viol.filter(F.col("part") == "b").count() == 0
+    assert viol.filter(F.col("part") == "a").count() == 1  # untouched
+
+
+def test_revalidated_dirty_partition_drops_stale_valid_rows(spark, tmp_path):
+    """Partition c (one clean row) is rewritten dirty: the manifest says
+    fail, so the pipeline-gate output must not serve c's old clean row."""
+    out, docs = _revalidate_rewritten(
+        spark, tmp_path, "c",
+        Row(conv_id="c3", turn_idx=0, role="user", text=None, tool=None),
+        emit_valid=True,
+    )
+    assert docs["c"]["status"] == "fail"
+    valid = spark.read.parquet(os.path.join(out, "valid"))
+    assert valid.filter(F.col("part") == "c").count() == 0
+    assert valid.filter(F.col("part") == "a").count() == 1  # untouched
+
+
 def test_manifest_run_and_resume(spark, tmp_path):
     out = str(tmp_path / "out")
     run = ValidationRun(

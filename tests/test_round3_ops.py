@@ -509,28 +509,6 @@ def test_gopher_kernels_equivalent(spark):
         assert c == d, f"dup_ngram kernels diverge at n={n}"
 
 
-def test_pmi_prune_identical_output(spark):
-    """The two-pass frequent-word-prefilter form must equal the single-pass
-    form exactly — on a Zipf-ish corpus where the prune actually drops
-    words (rare words below min_count), plus single-word and empty docs."""
-    import random
-
-    from fsharp_data_validation_spark.operators.text import pmi_bigrams
-
-    rng = random.Random(5)
-    vocab = ["the", "cat", "sat", "mat"] + [f"rare{i}" for i in range(40)]
-    weights = [50, 30, 30, 20] + [1] * 40
-    rows = []
-    for _ in range(300):
-        m = rng.randint(1, 10)
-        rows.append((" ".join(rng.choices(vocab, weights=weights, k=m)),))
-    rows += [("",), ("solo",)]
-    df = spark.createDataFrame(rows, "text string")
-    a = sorted(map(tuple, pmi_bigrams(df, "text", 3, 100, prune=False).collect()))
-    b = sorted(map(tuple, pmi_bigrams(df, "text", 3, 100, prune=True).collect()))
-    assert a == b and len(a) > 3
-
-
 def test_weighted_sample_determinism_and_bias(spark):
     """A-ES: deterministic across runs, excludes non-positive weights, and
     heavily-weighted rows are sampled (far) more often — checked by giving

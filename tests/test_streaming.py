@@ -11,7 +11,7 @@ import tempfile
 from datetime import datetime, timedelta
 
 import pytest
-from pyspark.sql import Row, functions as F
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -48,48 +48,6 @@ def test_run_available_now_cleans_up(spark, tmp_path, monkeypatch):
     assert os.listdir(tmp_path) == []
 
 
-def test_turn_continuity_stateful_stream(spark):
-    """applyInPandasWithState keeps per-conversation max turn_idx across
-    micro-batches: a replayed turn in a LATER batch is a turn_regression,
-    a skipped index is a turn_gap."""
-    from fsharp_data_validation_spark.streaming.validate_stream import (
-        turn_continuity_stream,
-    )
-
-    schema = StructType(
-        [
-            StructField("conv_id", StringType()),
-            StructField("turn_idx", IntegerType()),
-            StructField("ts", TimestampType()),
-        ]
-    )
-    t0 = datetime(2024, 1, 1)
-
-    def rows(batch):
-        return spark.createDataFrame(
-            [Row(conv_id=c, turn_idx=i, ts=t0 + timedelta(seconds=s))
-             for c, i, s in batch],
-            schema=schema,
-        )
-
-    out = run_available_now(
-        [
-            # batch 1: c1 turns 0,1 ; c2 turns 0,2 (gap within batch)
-            rows([("c1", 0, 0), ("c1", 1, 1), ("c2", 0, 0), ("c2", 2, 2)]),
-            # batch 2: c1 replays turn 1 (regression vs state), then jumps
-            # to 5 (gap)
-            rows([("c1", 1, 10), ("c1", 5, 11)]),
-        ],
-        turn_continuity_stream,
-    )
-
-    got = {(r["conv_id"], r["turn_idx"], r["code"]) for r in out.collect()}
-    assert ("c2", 2, "turn_gap") in got  # within-batch gap
-    assert ("c1", 1, "turn_regression") in got  # cross-batch replay
-    assert ("c1", 5, "turn_gap") in got  # cross-batch gap
-    assert ("c1", 0, "turn_gap") not in got and ("c1", 1, "turn_gap") not in got
-
-
 def test_windowed_violation_rate_plan(spark):
     """Streaming windowed agg with watermark builds, is streaming, and
     runs to its declared columns."""
@@ -115,37 +73,6 @@ def test_windowed_violation_rate_plan(spark):
 
     agg = run_available_now([turns], monitor)
     assert set(agg.columns) == {"win", "rows", "rows_with_violations", "violations"}
-
-
-def test_stream_dedup_drops_watermark_window_duplicates(spark):
-    """Streaming content dedup: duplicate digests arriving within the
-    watermark horizon are dropped; state is watermark-evicted (plan shows
-    the within-watermark dedup operator, not unbounded dropDuplicates)."""
-    from fsharp_data_validation_spark.streaming.validate_stream import stream_dedup
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("ts", TimestampType()),
-        ]
-    )
-    t0 = datetime(2026, 1, 1, 12, 0, 0)
-    rows = [
-        (1, "alpha", t0),
-        (2, "alpha", t0),   # duplicate content, same window -> dropped
-        (3, "beta", t0),
-        (4, "beta", t0),
-        (5, "gamma", t0),
-    ]
-    out = run_available_now(
-        [spark.createDataFrame(rows, schema)],
-        lambda s: stream_dedup(
-            s.withColumn("digest", F.md5("text")), ["digest"], "ts", "10 minutes"
-        ),
-    ).collect()
-    texts = sorted(r["text"] for r in out)
-    assert texts == ["alpha", "beta", "gamma"]  # one survivor per digest
 
 
 def _drift_rows():
