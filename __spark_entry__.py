@@ -52,9 +52,9 @@ from fsharp_data_validation_spark.sources.documents import (
 )
 from fsharp_data_validation_spark.sources.transcripts import (
     ROLES,
+    TRANSCRIPTS_SQL,
     derive_transcripts,
     tool_catalog,
-    transcripts_cte,
     with_transcripts,
 )
 from fsharp_data_validation_spark.streaming.validate_stream import (
@@ -3635,7 +3635,7 @@ def q_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "WITH RECURSIVE transcripts AS ("
-    + transcripts_cte()
+    + TRANSCRIPTS_SQL
     + "), t AS ("
     "  SELECT conv_id, turn_idx, "
     "    CASE WHEN text IS NULL THEN 0 "
@@ -3673,7 +3673,7 @@ def q_pack_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 # with_transcripts, so the transcripts CTE is inlined)
 @query(
     "WITH RECURSIVE transcripts AS ("
-    + transcripts_cte()
+    + TRANSCRIPTS_SQL
     + "), t AS ("
     "  SELECT conv_id, turn_idx, "
     f"    {_BPE_SQL} AS n_tokens, "

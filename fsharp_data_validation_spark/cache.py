@@ -10,14 +10,10 @@ executor-memory leak across operator invocations.
 
 Every ``persist()`` in this package goes through :func:`persist_tracked`,
 which registers the DataFrame in a process-wide registry.  Callers release
-in one of two ways:
-
-- :func:`release_caches` — unpersist everything tracked (and optionally
-  sweep localCheckpoint residue).  ``bench.py`` and ``tools/check_oracle.py``
-  call this between queries; ``jobs/validate.py`` calls it per stage.
-- :func:`cache_scope` — context manager releasing only what was tracked
-  inside the ``with`` block (safe inside a larger pipeline that has its own
-  live caches).
+with :func:`release_caches`, which unpersists everything tracked (and
+optionally sweeps localCheckpoint residue).  ``bench.py`` and
+``tools/check_oracle.py`` call it between queries; ``jobs/validate.py`` calls
+it per stage.
 
 Unpersisting a tracked DataFrame is always SAFE, never load-bearing: these
 are ``persist()`` plans with full lineage, so a later re-evaluation simply
@@ -30,8 +26,6 @@ the consuming action has run.
 from __future__ import annotations
 
 import threading
-from contextlib import contextmanager
-from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -39,9 +33,9 @@ _LIVE: list[DataFrame] = []
 _LOCK = threading.Lock()
 
 
-def persist_tracked(df: DataFrame, storage_level=None) -> DataFrame:
+def persist_tracked(df: DataFrame) -> DataFrame:
     """``df.persist()`` + register in the release registry."""
-    out = df.persist() if storage_level is None else df.persist(storage_level)
+    out = df.persist()
     with _LOCK:
         _LIVE.append(out)
     return out
@@ -80,21 +74,3 @@ def release_caches(spark: SparkSession | None = None, sweep_rdds: bool = False) 
             except Exception:
                 pass
     return n
-
-
-@contextmanager
-def cache_scope() -> Iterator[None]:
-    """Release (only) the caches tracked inside this block on exit."""
-    with _LOCK:
-        mark = len(_LIVE)
-    try:
-        yield
-    finally:
-        with _LOCK:
-            scoped = _LIVE[mark:]
-            del _LIVE[mark:]
-        for df in reversed(scoped):
-            try:
-                df.unpersist()
-            except Exception:
-                pass

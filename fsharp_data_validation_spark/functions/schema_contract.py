@@ -122,14 +122,12 @@ def schema_violations(actual: StructType, expected: StructType) -> list[dict]:
     return out
 
 
-def schema_report(
-    spark: SparkSession, df: DataFrame, expected: StructType = TRANSCRIPT_CONTRACT
-) -> DataFrame:
+def schema_report(spark: SparkSession, df: DataFrame) -> DataFrame:
     """The metadata compare as a tiny DataFrame (one row per column) so it
     composes with the rest of the reporting surface."""
     rows = [
         (v["column"], v["status"], v["expected_type"], v["actual_type"])
-        for v in schema_violations(df.schema, expected)
+        for v in schema_violations(df.schema, TRANSCRIPT_CONTRACT)
     ]
     return spark.createDataFrame(rows, REPORT_SCHEMA)
 

@@ -68,9 +68,7 @@ def uniqueness(cols: Sequence[str]) -> Column:
     return F.countDistinct(*[F.col(c) for c in cols]) / F.count(F.lit(1))
 
 
-def dataset_checks(
-    df: DataFrame, checks: Sequence[Check], round_to: int = 4
-) -> DataFrame:
+def dataset_checks(df: DataFrame, checks: Sequence[Check]) -> DataFrame:
     """Evaluate a check suite in one aggregation pass.
 
     Returns (check_name, metric_value, op, threshold, status) — one row per
@@ -87,7 +85,7 @@ def dataset_checks(
     if len(set(names)) != len(names):
         raise ValueError("check names must be unique")
     aggs = [
-        F.round(c.metric.cast("double"), round_to).alias(f"_m_{i}")
+        F.round(c.metric.cast("double"), 4).alias(f"_m_{i}")
         for i, c in enumerate(checks)
     ]
     wide = df.agg(*aggs)
@@ -116,11 +114,7 @@ def dataset_checks(
     )
 
 
-def fd_violations(
-    df: DataFrame,
-    fds: Sequence[tuple[Sequence[str], str]],
-    round_to: int = 4,
-) -> DataFrame:
+def fd_violations(df: DataFrame, fds: Sequence[tuple[Sequence[str], str]]) -> DataFrame:
     """Functional-dependency violation profile: for each candidate FD
     ``lhs -> rhs``, how many lhs keys map to MORE than one distinct rhs
     value (and how many rows sit under those keys).
@@ -155,7 +149,7 @@ def fd_violations(
                 F.sum(F.when(bad, F.col("_n_rows")).otherwise(F.lit(0))).alias(
                     "violating_rows"
                 ),
-                F.round(F.avg(bad.cast("double")), round_to).alias("violation_rate"),
+                F.round(F.avg(bad.cast("double")), 4).alias("violation_rate"),
             )
         )
     res = outs[0]
@@ -169,7 +163,6 @@ def suggest_constraints(
     string_cols: Sequence[str] = (),
     numeric_cols: Sequence[str] = (),
     max_domain: int = 10,
-    round_to: int = 4,
 ) -> DataFrame:
     """Profile-driven constraint SUGGESTION (the Deequ ConstraintSuggestion
     architecture: Schelter et al., VLDB 2018) — the discovery complement of
@@ -226,7 +219,7 @@ def suggest_constraints(
         aggs += [
             F.count(F.col(c)).alias(f"nn_{c}"),
             F.countDistinct(F.col(c)).alias(f"d_{c}"),
-            F.round(F.avg(notnull.cast("double")), round_to).alias(f"comp_{c}"),
+            F.round(F.avg(notnull.cast("double")), 4).alias(f"comp_{c}"),
             (F.floor(F.avg(notnull.cast("double")) * 100) / 100.0).alias(
                 f"floor_{c}"
             ),
@@ -237,8 +230,8 @@ def suggest_constraints(
         )
     for c in numeric_cols:
         aggs += [
-            F.round(F.min(F.col(c)).cast("double"), round_to).alias(f"lo_{c}"),
-            F.round(F.max(F.col(c)).cast("double"), round_to).alias(f"hi_{c}"),
+            F.round(F.min(F.col(c)).cast("double"), 4).alias(f"lo_{c}"),
+            F.round(F.max(F.col(c)).cast("double"), 4).alias(f"hi_{c}"),
         ]
     prof = df.agg(*aggs).collect()[0].asDict()
 
@@ -287,8 +280,6 @@ def rate_anomaly(
     fail_col: Column,
     window: int = 7,
     z_threshold: float = 3.0,
-    min_history: int = 3,
-    round_to: int = 6,
 ) -> DataFrame:
     """Control-chart anomaly detection on the daily violation-rate series —
     the Deequ AnomalyDetection architecture (Schelter et al., VLDB 2018)
@@ -302,7 +293,7 @@ def rate_anomaly(
     windowed stage still touches ~#days rows. The rate entering the
     mean/stddev baseline is the ROUNDED rate, so both engines aggregate
     bit-identical inputs — and the baseline mean/sd are themselves ROUNDED
-    at ``round_to`` BEFORE the z/anomaly branch. This is load-bearing twice:
+    at 6 decimals BEFORE the z/anomaly branch. This is load-bearing twice:
     (a) ``stddev_pop`` over identical rounded rates returns ~1e-17 float
     noise (the mean is inexact), and branching on the RAW sd would divide
     by that noise and flag every steady day; (b) it makes every published
@@ -310,7 +301,7 @@ def rate_anomaly(
     and the whole row a pure function of 6-decimal doubles, so Spark and
     the DuckDB oracle agree bit-for-bit.
 
-    A day is ``anomaly`` when it has >= ``min_history`` trailing days AND
+    A day is ``anomaly`` when it has >= 3 trailing days AND
     either |z| > ``z_threshold`` (sd > 0) or the rate moved off a constant
     baseline (sd == 0, where z is undefined and emitted NULL).
 
@@ -322,11 +313,11 @@ def rate_anomaly(
         F.sum(fail_col.cast("long")).alias("n_viol"),
     )
     rated = daily.withColumn(
-        "rate", F.round(F.col("n_viol") / F.col("n_rows"), round_to)
+        "rate", F.round(F.col("n_viol") / F.col("n_rows"), 6)
     )
     w = Window.orderBy("day").rowsBetween(-window, -1)
-    mean = F.round(F.avg("rate").over(w), round_to)
-    sd = F.round(F.stddev_pop("rate").over(w), round_to)
+    mean = F.round(F.avg("rate").over(w), 6)
+    sd = F.round(F.stddev_pop("rate").over(w), 6)
     hist = F.count("rate").over(w)
     z = F.when(sd > 0, F.round((F.col("rate") - mean) / sd, 4))
     return rated.select(
@@ -338,7 +329,7 @@ def rate_anomaly(
         sd.alias("sd_rate"),
         z.alias("z"),
         (
-            (hist >= min_history)
+            (hist >= 3)
             & F.coalesce(
                 F.when(sd > 0, F.abs(z) > z_threshold).otherwise(
                     F.col("rate") != mean

@@ -89,12 +89,7 @@ def cross_contamination_pairs(
 
 
 def ngram_containment(
-    train: DataFrame,
-    eval_df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    round_to: int = 4,
+    train: DataFrame, eval_df: DataFrame, id_col: str, text_col: str, n: int = 3
 ) -> DataFrame:
     """Per eval doc: (eval_id, n_grams, n_hit, containment) where
     ``containment`` = |distinct n-grams of the doc ∩ train n-gram set| /
@@ -117,6 +112,6 @@ def ngram_containment(
         F.coalesce(F.sum("_hit"), F.lit(0)).cast("bigint").alias("n_hit"),
         F.round(
             F.coalesce(F.sum("_hit"), F.lit(0)).cast("double") / F.count(F.lit(1)),
-            round_to,
+            4,
         ).alias("containment"),
     )

@@ -67,53 +67,39 @@ def referential_violations(
     )
 
 
-def ordering_violations(
-    df: DataFrame,
-    part_col: str = "conv_id",
-    idx_col: str = "turn_idx",
-    ts_col: str = "ts",
-) -> DataFrame:
+def ordering_violations(df: DataFrame) -> DataFrame:
     """Timestamp regressions against turn ordering: within a conversation
     ordered by ``(turn_idx, ts)`` (total order; ts breaks duplicate-turn
     ties deterministically), flag rows where turn_idx advanced but ts went
     backwards. ≅ lag-window re-expression of per-turn ordering invariants."""
-    w = Window.partitionBy(part_col).orderBy(idx_col, ts_col)
+    w = Window.partitionBy("conv_id").orderBy("turn_idx", "ts")
     lagged = df.select(
-        part_col,
-        idx_col,
-        ts_col,
-        F.lag(idx_col).over(w).alias("_prev_idx"),
-        F.lag(ts_col).over(w).alias("_prev_ts"),
+        "conv_id",
+        "turn_idx",
+        "ts",
+        F.lag("turn_idx").over(w).alias("_prev_idx"),
+        F.lag("ts").over(w).alias("_prev_ts"),
     )
     return lagged.filter(
         (F.col("_prev_idx").isNotNull())
-        & (F.col(idx_col) > F.col("_prev_idx"))
-        & (F.col(ts_col) < F.col("_prev_ts"))
+        & (F.col("turn_idx") > F.col("_prev_idx"))
+        & (F.col("ts") < F.col("_prev_ts"))
     ).select(
-        part_col,
-        idx_col,
-        F.col(ts_col),
+        "conv_id",
+        "turn_idx",
+        F.col("ts"),
         F.col("_prev_ts").alias("prev_ts"),
     )
 
 
-def conversation_flow_violations(
-    df: DataFrame,
-    conv_col: str = "conv_id",
-    idx_col: str = "turn_idx",
-    role_col: str = "role",
-    ts_col: str = "ts",
-    text_col: str = "text",
-    tool_col: str = "tool",
-    start_roles: Sequence[str] = ("system", "user"),
-) -> DataFrame:
+def conversation_flow_violations(df: DataFrame) -> DataFrame:
     """Structural conversation-flow validation — the cross-row shape of the
     reference's role-enum membership (Library.fs:97 ``hasElem``): the enum
     check constrains one turn's role, these constrain the SEQUENCE of roles.
     Flags, per turn, any of:
 
-    - ``conversation_start``: the first turn's role is not in
-      ``start_roles`` (a transcript must open with system/user);
+    - ``conversation_start``: the first turn's role is not
+      system or user (a transcript must open with one of them);
     - ``consecutive_same_role``: a turn repeats the previous turn's role
       (turn-taking invariant);
     - ``orphan_tool_turn``: a ``tool`` turn not directly preceded by an
@@ -125,21 +111,21 @@ def conversation_flow_violations(
     lag comparison needs a total order to be deterministic on both engines
     — then a row-local code array + explode: one shuffle (zero on a
     conv_id-bucketed layout), output proportional to violations."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
-    o = F.coalesce(F.col(tool_col), F.lit(""))
-    w = Window.partitionBy(conv_col).orderBy(idx_col, ts_col, role_col, t, o)
-    role = F.col(role_col)
+    t = F.coalesce(F.col("text"), F.lit(""))
+    o = F.coalesce(F.col("tool"), F.lit(""))
+    w = Window.partitionBy("conv_id").orderBy("turn_idx", "ts", "role", t, o)
+    role = F.col("role")
     lagged = df.select(
-        conv_col,
-        idx_col,
-        role_col,
-        F.lag(role_col).over(w).alias("_prev_role"),
+        "conv_id",
+        "turn_idx",
+        "role",
+        F.lag("role").over(w).alias("_prev_role"),
         F.row_number().over(w).alias("_rn"),
     )
     prev = F.col("_prev_role")
     codes = F.array(
         F.when(
-            (F.col("_rn") == 1) & ~role.isin(list(start_roles)),
+            (F.col("_rn") == 1) & ~role.isin(["system", "user"]),
             F.lit("conversation_start"),
         ),
         F.when(prev.isNotNull() & (role == prev), F.lit("consecutive_same_role")),
@@ -149,23 +135,15 @@ def conversation_flow_violations(
         ),
     )
     return lagged.select(
-        conv_col,
-        idx_col,
-        role_col,
+        "conv_id",
+        "turn_idx",
+        "role",
         F.explode(F.filter(codes, lambda c: c.isNotNull())).alias("code"),
     )
 
 
 def context_budget_violations(
-    df: DataFrame,
-    budget: int,
-    conv_col: str = "conv_id",
-    idx_col: str = "turn_idx",
-    role_col: str = "role",
-    ts_col: str = "ts",
-    text_col: str = "text",
-    tool_col: str = "tool",
-    tokenizer: str = "whitespace",
+    df: DataFrame, budget: int, tokenizer: str = "whitespace"
 ) -> DataFrame:
     """Context-window budget validation: the running whitespace-token total
     of a conversation (ordered by turn) must stay within ``budget`` — the
@@ -184,44 +162,38 @@ def context_budget_violations(
     ``operators/text.py:token_count`` (single-space split; NULL -> 0);
     ``tokenizer="bpe"`` budgets in greedy-subword tokens instead
     (``operators/text.py:bpe_token_count_col`` — still a column expr)."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
-    o = F.coalesce(F.col(tool_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
+    o = F.coalesce(F.col("tool"), F.lit(""))
     if tokenizer == "bpe":
         from .text import bpe_token_count_col
 
-        n_tokens = bpe_token_count_col(text_col)
+        n_tokens = bpe_token_count_col("text")
     elif tokenizer == "whitespace":
         n_tokens = (
-            F.when(F.col(text_col).isNull(), F.lit(0))
-            .otherwise(F.size(F.split(F.col(text_col), " ")))
+            F.when(F.col("text").isNull(), F.lit(0))
+            .otherwise(F.size(F.split(F.col("text"), " ")))
             .cast("bigint")
         )
     else:
         raise ValueError(f"tokenizer must be whitespace|bpe, got {tokenizer!r}")
     w = (
-        Window.partitionBy(conv_col)
-        .orderBy(idx_col, ts_col, role_col, t, o)
+        Window.partitionBy("conv_id")
+        .orderBy("turn_idx", "ts", "role", t, o)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     with_cum = df.select(
-        conv_col,
-        idx_col,
-        role_col,
+        "conv_id",
+        "turn_idx",
+        "role",
         n_tokens.alias("n_tokens"),
         F.sum(n_tokens).over(w).alias("cum_tokens"),
     )
     return with_cum.filter(F.col("cum_tokens") > budget)
 
 
-def repeated_turns(
-    df: DataFrame,
-    conv_col: str = "conv_id",
-    idx_col: str = "turn_idx",
-    text_col: str = "text",
-    min_repeats: int = 2,
-) -> DataFrame:
+def repeated_turns(df: DataFrame) -> DataFrame:
     """Intra-conversation loop detection: the same normalized turn text
-    appearing ``min_repeats``+ times within ONE conversation — the signature
+    appearing 2+ times within ONE conversation — the signature
     of a stuck agent loop (and of copy-paste template turns). Distinct from
     corpus-level dedup (operators/dedup.py): the group key is
     (conversation, content), so a phrase common ACROSS conversations is not
@@ -233,17 +205,17 @@ def repeated_turns(
     length, not corpus frequency, because the digest is scoped to the
     conversation. Empty/NULL text is excluded (emptiness is the row suite's
     ``isNotNull`` job — Library.fs:62-67)."""
-    norm = F.lower(F.trim(F.col(text_col)))
+    norm = F.lower(F.trim(F.col("text")))
     return (
-        df.filter(F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != ""))
+        df.filter(F.col("text").isNotNull() & (F.trim(F.col("text")) != ""))
         .groupBy(
-            F.col(conv_col),
+            F.col("conv_id"),
             F.md5(norm).alias("text_digest"),
         )
         .agg(
             F.count(F.lit(1)).alias("n_repeats"),
-            F.min(idx_col).alias("first_turn"),
-            F.max(idx_col).alias("last_turn"),
+            F.min("turn_idx").alias("first_turn"),
+            F.max("turn_idx").alias("last_turn"),
         )
-        .filter(F.col("n_repeats") >= min_repeats)
+        .filter(F.col("n_repeats") >= 2)
     )

@@ -35,11 +35,11 @@ from pyspark.sql import DataFrame, Window, functions as F
 SIMHASH_BITS = 60  # keep signatures positive in a signed 64-bit integer
 
 
-def md5_int(col: F.Column, hex_chars: int = 15, salt: str | None = None) -> F.Column:
-    """Portable deterministic hash: first ``hex_chars`` of md5 as a BIGINT.
+def md5_int(col: F.Column, salt: str | None = None) -> F.Column:
+    """Portable deterministic hash: first 15 hex chars of md5 as a BIGINT.
     (DuckDB equivalent: ``CAST(('0x' || substr(md5(x), 1, n)) AS BIGINT)``.)"""
     x = F.concat(F.lit(salt), F.lit("|"), col) if salt is not None else col
-    return F.conv(F.substring(F.md5(x), 1, hex_chars), 16, 10).cast("bigint")
+    return F.conv(F.substring(F.md5(x), 1, 15), 16, 10).cast("bigint")
 
 
 def shingles(text_col: F.Column, n: int = 3) -> F.Column:
@@ -478,12 +478,7 @@ def dedup_keep_first(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def near_dup_components(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    threshold: float = 0.8,
-    max_iter: int = 20,
+    df: DataFrame, id_col: str, text_col: str, n: int = 3, threshold: float = 0.8
 ) -> DataFrame:
     """Connected components of the near-dup pair graph — the clustering
     step of corpus dedup (pick one representative per near-dup cluster).
@@ -501,7 +496,7 @@ def near_dup_components(
     )
     comp = connected_components_star(
         pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")),
-        max_iter=max_iter,
+        max_iter=20,
     ).withColumnRenamed("node", "_n")
     return (
         df.select(F.col(id_col).alias("_n").cast("long"))
@@ -514,14 +509,7 @@ def near_dup_components(
     )
 
 
-def conversation_digests(
-    df: DataFrame,
-    conv_col: str = "conv_id",
-    order_col: str = "turn_idx",
-    text_col: str = "text",
-    flow_cols: tuple = ("role", "tool"),
-    sep: str = "\x1f",
-) -> DataFrame:
+def conversation_digests(df: DataFrame) -> DataFrame:
     """Conversation-level exact dedup: one row per conversation with
     (a) ``text_digest`` — md5 of the full turn text concatenated in stable
     (turn_idx, text) order, and (b) ``flow_digest`` — md5 of the
@@ -529,36 +517,36 @@ def conversation_digests(
     differs). Plus per-digest group size and the canonical keeper
     (min conv_id sharing the text digest).
 
-    Scale: one shuffle on conv_col to assemble each conversation
+    Scale: one shuffle on conv_id to assemble each conversation
     (state bounded by turns-per-conversation; zero exchange on a
-    conv_id-bucketed layout, see sources.transcripts.write_bucketed);
+    conv_id-bucketed layout);
     the digest windows then run over the one-row-per-conversation table
     (32-byte digests), so the second stage is ~n_convs rows regardless
     of corpus size. Deterministic + portable: md5 over coalesced text,
-    ties in ``order_col`` (injected duplicate turn_idx) broken by the
+    ties in turn_idx (injected duplicates) broken by the
     text itself on both engines.
     """
-    txt = F.coalesce(F.col(text_col), F.lit(""))
-    flow = F.concat_ws("|", *[F.coalesce(F.col(c), F.lit("")) for c in flow_cols])
+    txt = F.coalesce(F.col("text"), F.lit(""))
+    flow = F.concat_ws("|", *[F.coalesce(F.col(c), F.lit("")) for c in ("role", "tool")])
 
     def ordered_digest(tok: F.Column) -> F.Column:
-        item = F.struct(F.col(order_col).alias("i"), tok.alias("t"))
+        item = F.struct(F.col("turn_idx").alias("i"), tok.alias("t"))
         arr = F.array_sort(F.collect_list(item))
-        return F.md5(F.array_join(F.transform(arr, lambda s: s["t"]), sep))
+        return F.md5(F.array_join(F.transform(arr, lambda s: s["t"]), "\x1f"))
 
-    per_conv = df.groupBy(conv_col).agg(
+    per_conv = df.groupBy("conv_id").agg(
         ordered_digest(txt).alias("text_digest"),
         ordered_digest(flow).alias("flow_digest"),
     )
     wt = Window.partitionBy("text_digest")
     wf = Window.partitionBy("flow_digest")
     return per_conv.select(
-        F.col(conv_col),
+        F.col("conv_id"),
         "text_digest",
         "flow_digest",
         F.count(F.lit(1)).over(wt).cast("bigint").alias("n_same_text"),
         F.count(F.lit(1)).over(wf).cast("bigint").alias("n_same_flow"),
-        F.min(conv_col).over(wt).alias("keep_conv_id"),
+        F.min("conv_id").over(wt).alias("keep_conv_id"),
     )
 
 
@@ -624,12 +612,7 @@ def connected_components_star(edges: DataFrame, max_iter: int = 50) -> DataFrame
 
 
 def containment_dedup_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    threshold: float = 0.8,
-    round_to: int = 6,
+    df: DataFrame, id_col: str, text_col: str, n: int = 3, threshold: float = 0.8
 ) -> DataFrame:
     """EXACT asymmetric containment near-dup pairs:
     C(a ⊆ b) = |A∩B| / |A| >= threshold with |A| <= |B| — the dedup class
@@ -680,7 +663,7 @@ def containment_dedup_pairs(
         .select(
             "id_a",
             "id_b",
-            F.round(inter.cast("double") / F.size("sh_a"), round_to).alias(
+            F.round(inter.cast("double") / F.size("sh_a"), 6).alias(
                 "containment"
             ),
         )

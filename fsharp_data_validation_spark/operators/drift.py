@@ -109,32 +109,27 @@ def _joined_hist(hist_a: DataFrame, hist_b: DataFrame) -> DataFrame:
     )
 
 
-def psi_joined(j: DataFrame, round_to: int = 4) -> DataFrame:
+def psi_joined(j: DataFrame) -> DataFrame:
     """PSI over a joined histogram (bucket, na, nb): the sum of
     ``psi_term``. Returns a single row (psi)."""
     return j.select(psi_term(*_joined_cols()).alias("term")).agg(
-        F.round(F.sum("term"), round_to).alias("psi")
+        F.round(F.sum("term"), 4).alias("psi")
     )
 
 
-def ks_joined(j: DataFrame, round_to: int = 4) -> DataFrame:
+def ks_joined(j: DataFrame) -> DataFrame:
     """KS over a joined histogram (bucket, na, nb): max |ECDF_a - ECDF_b|
     over bucket boundaries. (Exact for the bucketed distributions; bucket
     width bounds the error vs the continuous statistic.)
     Returns a single row (ks)."""
     return j.select(cdf_gap(*_joined_cols(cumulative=True)).alias("d")).agg(
-        F.round(F.max("d"), round_to).alias("ks")
+        F.round(F.max("d"), 4).alias("ks")
     )
 
 
-def psi(hist_a: DataFrame, hist_b: DataFrame, round_to: int = 4) -> DataFrame:
+def psi(hist_a: DataFrame, hist_b: DataFrame) -> DataFrame:
     """Population Stability Index between two separate histograms."""
-    return psi_joined(_joined_hist(hist_a, hist_b), round_to)
-
-
-def ks(hist_a: DataFrame, hist_b: DataFrame, round_to: int = 4) -> DataFrame:
-    """Kolmogorov-Smirnov statistic between two separate histograms."""
-    return ks_joined(_joined_hist(hist_a, hist_b), round_to)
+    return psi_joined(_joined_hist(hist_a, hist_b))
 
 
 def split_histograms(
@@ -246,12 +241,7 @@ def _per_group(grid: DataFrame, group_col: str, term: Column, **stats) -> DataFr
 
 
 def psi_by_group(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    bucket_width: float,
-    n_buckets: int,
-    round_to: int = 4,
+    df: DataFrame, group_col: str, value_col: str, bucket_width: float, n_buckets: int
 ) -> DataFrame:
     """Per-partition drift: PSI of each group's value distribution against
     the whole-table baseline, from ONE scan (see ``_grid``); buckets a group
@@ -259,17 +249,12 @@ def psi_by_group(
     psi)."""
     g = _bucket_grid(df, group_col, value_col, bucket_width, n_buckets)
     return _per_group(
-        g, group_col, psi_term(*_grid_cols()), psi=F.round(F.sum("term"), round_to)
+        g, group_col, psi_term(*_grid_cols()), psi=F.round(F.sum("term"), 4)
     )
 
 
 def ks_by_group(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    bucket_width: float,
-    n_buckets: int,
-    round_to: int = 4,
+    df: DataFrame, group_col: str, value_col: str, bucket_width: float, n_buckets: int
 ) -> DataFrame:
     """Per-partition KS: max |group ECDF - global ECDF| over bucket
     boundaries, same one-scan grid as ``psi_by_group`` (the grid is
@@ -280,33 +265,23 @@ def ks_by_group(
         g,
         group_col,
         cdf_gap(*_grid_cols(cumulative=True)),
-        ks=F.round(F.max("term"), round_to),
+        ks=F.round(F.max("term"), 4),
     )
 
 
-def js_joined(j: DataFrame, round_to: int = 4) -> DataFrame:
+def js_joined(j: DataFrame) -> DataFrame:
     """Jensen-Shannon divergence over a joined histogram (bucket, na, nb):
     0.5*KL(p||m) + 0.5*KL(q||m) with m = (p+q)/2, natural log, the same
     epsilon-clamped proportions as ``psi_joined``. Bounded [0, ln 2] and
     symmetric — the drift score to use when PSI's unboundedness on
     vanishing buckets is unwanted. Returns a single row (js)."""
     return j.select(js_term(*_joined_cols()).alias("term")).agg(
-        F.round(F.sum("term"), round_to).alias("js")
+        F.round(F.sum("term"), 4).alias("js")
     )
 
 
-def js(hist_a: DataFrame, hist_b: DataFrame, round_to: int = 4) -> DataFrame:
-    """Jensen-Shannon divergence between two separate histograms."""
-    return js_joined(_joined_hist(hist_a, hist_b), round_to)
-
-
 def js_by_group(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    bucket_width: float,
-    n_buckets: int,
-    round_to: int = 4,
+    df: DataFrame, group_col: str, value_col: str, bucket_width: float, n_buckets: int
 ) -> DataFrame:
     """Per-partition Jensen-Shannon divergence of each group's value
     distribution against the whole-table baseline — the same one-scan grid
@@ -314,7 +289,7 @@ def js_by_group(
     Returns (group, n_rows, js)."""
     g = _bucket_grid(df, group_col, value_col, bucket_width, n_buckets)
     return _per_group(
-        g, group_col, js_term(*_grid_cols()), js=F.round(F.sum("term"), round_to)
+        g, group_col, js_term(*_grid_cols()), js=F.round(F.sum("term"), 4)
     )
 
 
@@ -351,12 +326,7 @@ def w1(
 
 
 def w1_by_group(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    bucket_width: float,
-    n_buckets: int,
-    round_to: int = 4,
+    df: DataFrame, group_col: str, value_col: str, bucket_width: float, n_buckets: int
 ) -> DataFrame:
     """Per-partition Wasserstein-1 distance of each group's value
     distribution against the whole-table baseline — completes the per-group
@@ -369,7 +339,7 @@ def w1_by_group(
         g,
         group_col,
         cdf_gap(*_grid_cols(cumulative=True)),
-        w1=F.round(F.sum("term") * F.lit(float(bucket_width)), round_to),
+        w1=F.round(F.sum("term") * F.lit(float(bucket_width)), 4),
     )
 
 
@@ -392,14 +362,12 @@ def split_category_counts(df: DataFrame, cat_col: str, ts_col: str) -> DataFrame
     )
 
 
-def chi2_drift(
-    df: DataFrame, cat_col: str, ts_col: str, round_to: int = 4
-) -> DataFrame:
+def chi2_drift(df: DataFrame, cat_col: str, ts_col: str) -> DataFrame:
     """split_category_counts + chi2_joined with the tiny count table
     persisted (tracked): chi2_joined reads it twice (margins + cells), and
     without the persist each branch re-executes the data aggregate."""
     counts = persist_tracked(split_category_counts(df, cat_col, ts_col))
-    return chi2_joined(counts, round_to)
+    return chi2_joined(counts)
 
 
 def chi2_joined(counts: DataFrame, round_to: int = 4) -> DataFrame:
@@ -436,12 +404,7 @@ def cvm_joined(j: DataFrame, round_to: int = 4) -> DataFrame:
     )
 
 
-def chi2_by_group(
-    df: DataFrame,
-    group_col: str,
-    cat_col: str,
-    round_to: int = 4,
-) -> DataFrame:
+def chi2_by_group(df: DataFrame, group_col: str, cat_col: str) -> DataFrame:
     """Per-partition CATEGORICAL drift: Pearson chi-square of each group's
     category distribution against the whole-table baseline — completes the
     per-group grid family (PSI/KS/JS/W1 cover binned numeric domains; this
@@ -459,6 +422,6 @@ def chi2_by_group(
         g,
         group_col,
         chi2_cell(*_grid_cols()),
-        chi2=F.round(F.sum("term"), round_to),
+        chi2=F.round(F.sum("term"), 4),
         dof=(F.count(F.lit(1)) - 1).cast("bigint"),
     )

@@ -8,8 +8,7 @@ codec decode is STUBBED (this environment has no image/audio libraries):
 - ``decode_image_meta``: parses a deterministic fake header (our synthetic
   payloads carry width/height/channels as big-endian uint16/8 in the first
   5 bytes) — swap ``_parse_header`` for a real codec (PIL/libvips) in prod.
-- ``byte_histogram_features``: REAL feature extraction — 16-bin byte
-  histogram per payload, vectorized with numpy.frombuffer/bincount.
+  The synthetic image and RAWV payload generators live with their tests.
 - ``frame_sample``: REAL frame extraction for the uncompressed RAWV
   raw-frame container (numpy byte slicing per sampled index); compressed
   codecs still raise NotImplementedError — a real decoder (pyav/ffmpeg)
@@ -24,7 +23,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     BooleanType,
     DoubleType,
@@ -62,26 +60,6 @@ IMAGE_META_SCHEMA = StructType(
     ]
 )
 
-FEATURE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("features", ArrayType(DoubleType())),
-    ]
-)
-
-
-def make_fake_image_payload(width: int, height: int, channels: int, seed: int) -> bytes:
-    """Deterministic synthetic 'image': 5-byte header + seeded body."""
-    header = (
-        int(width).to_bytes(2, "big")
-        + int(height).to_bytes(2, "big")
-        + int(channels).to_bytes(1, "big")
-    )
-    rng = np.random.default_rng(seed)
-    body = rng.integers(0, 256, size=min(width * height, 256), dtype=np.uint8)
-    return header + body.tobytes()
-
-
 def _parse_header(payload: bytes):
     # STUB decode: replace with a real image codec in production.
     if payload is None or len(payload) < 5:
@@ -112,28 +90,6 @@ def decode_image_meta(df: DataFrame) -> DataFrame:
             )
 
     return df.mapInPandas(go, schema=IMAGE_META_SCHEMA)
-
-
-def byte_histogram_features(df: DataFrame, bins: int = 16) -> DataFrame:
-    """Real (non-stub) feature extraction: normalized byte histogram per
-    payload. numpy-vectorized inside the Arrow batch; this is the template
-    for embedding-model feature UDFs at scale."""
-    schema = FEATURE_SCHEMA
-
-    def go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        width = 256 // bins
-        for pdf in batches:
-            feats = []
-            for p in pdf["payload"]:
-                if p is None or len(p) == 0:
-                    feats.append([0.0] * bins)
-                    continue
-                arr = np.frombuffer(p, dtype=np.uint8)
-                hist = np.bincount(arr // width, minlength=bins).astype(float)
-                feats.append((hist / hist.sum()).tolist())
-            yield pd.DataFrame({"media_id": pdf["media_id"], "features": feats})
-
-    return df.mapInPandas(go, schema=schema)
 
 
 def resize_images(df: DataFrame, factor: int = 2) -> DataFrame:
@@ -179,22 +135,6 @@ VIDEO_FRAME_SCHEMA = StructType(
         StructField("frame", BinaryType()),
     ]
 )
-
-
-def make_fake_video_payload(
-    n_frames: int, width: int, height: int, seed: int
-) -> bytes:
-    """Deterministic RAWV container: 8-byte header ('RV' + BE uint16
-    n_frames/width/height) + n_frames contiguous w*h grayscale frames."""
-    header = (
-        RAWV_MAGIC
-        + int(n_frames).to_bytes(2, "big")
-        + int(width).to_bytes(2, "big")
-        + int(height).to_bytes(2, "big")
-    )
-    rng = np.random.default_rng(seed)
-    body = rng.integers(0, 256, size=n_frames * width * height, dtype=np.uint8)
-    return header + body.tobytes()
 
 
 def frame_sample(df: DataFrame, every_n: int = 30) -> DataFrame:
@@ -252,7 +192,7 @@ def make_wav_payload(
     sample_rate: int, channels: int, bits: int, n_samples: int, seed: int
 ) -> bytes:
     """REAL canonical 44-byte PCM WAV (RIFF) file: header + deterministic
-    sample bytes. Unlike the RAWV/fake-image containers above, this is the
+    sample bytes. Unlike the RAWV/fake-image containers, this is the
     actual public WAV format — ``decode_audio_meta`` below parses genuine
     WAV files, no codec library needed (PCM is uncompressed)."""
     import struct

@@ -31,11 +31,7 @@ def hash_split(
 
 
 def stratified_sample(
-    df: DataFrame,
-    stratum_col: str,
-    id_col: str,
-    k: int,
-    salt: str = "strat",
+    df: DataFrame, stratum_col: str, id_col: str, k: int
 ) -> DataFrame:
     """Deterministic exact-k sample per stratum: the k rows with the
     smallest salted md5 hash of the id, ranked (``rnk`` 1..k) within each
@@ -52,7 +48,7 @@ def stratified_sample(
     the filter. The slack guard is deterministic for fixed data — the
     DuckDB oracle (plain ROW_NUMBER spec) would flag any loss.
     """
-    h = md5_int(F.col(id_col).cast("string"), salt=salt)
+    h = md5_int(F.col(id_col).cast("string"), salt="strat")
     counts = df.groupBy(stratum_col).agg(F.count(F.lit(1)).alias("_n_s"))
     joined = df.join(F.broadcast(counts), stratum_col)
     keep_all = F.col("_n_s") <= (3 * k + 20)
@@ -69,14 +65,7 @@ def stratified_sample(
     )
 
 
-def quota_sample(
-    df: DataFrame,
-    group_col: str,
-    id_col: str,
-    rates: dict,
-    default_rate: float = 1.0,
-    salt: str = "quota",
-) -> DataFrame:
+def quota_sample(df: DataFrame, group_col: str, id_col: str, rates: dict) -> DataFrame:
     """Deterministic per-group rate sampling: keep a row of group g iff its
     salted md5 hash falls below ``round(rate_g, 6) * 16^15``. The rate map
     is a compile-time CASE expression, so the whole operator is ONE
@@ -90,11 +79,11 @@ def quota_sample(
         lit = F.lit(float(r))
         rate = F.when(cond, lit) if rate is None else rate.when(cond, lit)
     rate = (
-        rate.otherwise(F.lit(float(default_rate)))
+        rate.otherwise(F.lit(1.0))
         if rate is not None
-        else F.lit(float(default_rate))
+        else F.lit(1.0)
     )
-    h = md5_int(F.col(id_col).cast("string"), salt=salt)
+    h = md5_int(F.col(id_col).cast("string"), salt="quota")
     # floor semantics on both engines: Spark's double->bigint cast truncates;
     # the DuckDB oracle must write CAST(FLOOR(rate * 16^15) AS BIGINT)
     thresh = (F.round(rate, 6) * F.lit(float(_MD5_15_MAX))).cast("bigint")
@@ -107,7 +96,6 @@ def temperature_sample(
     id_col: str,
     tau: float = 0.7,
     target_frac: float = 1.0,
-    salt: str = "temp",
 ) -> DataFrame:
     """Temperature-flattened group rebalancing — the multilingual-corpus
     resampling rule (sample group g proportionally to n_g^tau, tau<1
@@ -147,17 +135,12 @@ def temperature_sample(
             6,
         ).alias("keep_rate"),
     )
-    h = md5_int(F.col(id_col).cast("string"), salt=salt)
+    h = md5_int(F.col(id_col).cast("string"), salt="temp")
     thresh = (F.col("keep_rate") * F.lit(float(_MD5_15_MAX))).cast("bigint")
     return df.join(F.broadcast(rates), group_col).filter(h < thresh)
 
 
-def global_shuffle(
-    df: DataFrame,
-    id_col: str,
-    n_buckets: int = 1024,
-    salt: str = "shuffle",
-) -> DataFrame:
+def global_shuffle(df: DataFrame, id_col: str, n_buckets: int = 1024) -> DataFrame:
     """Deterministic global training-order shuffle: assign every row a
     contiguous 1-based ``rank`` in salted-md5-hash order (a reproducible
     pseudorandom permutation, identical across runs and cluster sizes).
@@ -176,7 +159,7 @@ def global_shuffle(
     would mean caching the whole corpus, which does not scale. Output:
     df + (rank). Equals the naive form exactly (pinned by the oracle
     query)."""
-    h = md5_int(F.col(id_col).cast("string"), salt=salt)
+    h = md5_int(F.col(id_col).cast("string"), salt="shuffle")
     width = _MD5_15_MAX // n_buckets + 1
     bucketed = df.withColumn("_h", h).withColumn(
         "_bkt", (F.col("_h") / F.lit(width)).cast("int")
@@ -195,12 +178,7 @@ def global_shuffle(
 
 
 def replicate_sample(
-    df: DataFrame,
-    group_col: str,
-    id_col: str,
-    factors: dict,
-    default_factor: float = 1.0,
-    salt: str = "upsample",
+    df: DataFrame, group_col: str, id_col: str, factors: dict
 ) -> DataFrame:
     """Deterministic per-group UP-sampling (the other half of corpus
     rebalancing — ``quota_sample``/``temperature_sample`` only keep rates
@@ -221,11 +199,11 @@ def replicate_sample(
         lit = F.lit(float(f))
         factor = F.when(cond, lit) if factor is None else factor.when(cond, lit)
     factor = (
-        factor.otherwise(F.lit(float(default_factor)))
+        factor.otherwise(F.lit(1.0))
         if factor is not None
-        else F.lit(float(default_factor))
+        else F.lit(1.0)
     )
-    h = md5_int(F.col(id_col).cast("string"), salt=salt)
+    h = md5_int(F.col(id_col).cast("string"), salt="upsample")
     base = F.floor(factor).cast("bigint")
     frac = factor - F.floor(factor)
     extra = (
@@ -289,13 +267,7 @@ def weighted_sample(
 
 
 def dsir_weights(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    target_col,
-    n_buckets: int = 10000,
-    smoothing: float = 1.0,
-    round_to: int = 4,
+    df: DataFrame, id_col: str, text_col: str, target_col, n_buckets: int = 10000
 ) -> DataFrame:
     """DSIR-style importance weights (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling" — the public hashed-n-gram
@@ -322,11 +294,11 @@ def dsir_weights(
        engine's standard tiny-aggregate pattern).
 
     Float note: the per-doc score is an unordered double sum; published at
-    ``round_to`` decimals the summation-order difference (~1e-13 at
+    4 decimals the summation-order difference (~1e-13 at
     realistic gram counts) is invisible, same as the drift family. NULL
     text -> 0 grams, NULL score. Returns (id_col, is_target, n_grams,
     logratio)."""
-    lam = float(smoothing)
+    lam = 1.0
     b = int(n_buckets)
     words = F.split(F.col(text_col), " ")
     bigrams = F.when(
@@ -377,7 +349,7 @@ def dsir_weights(
         .groupBy("_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_grams"),
-            F.round(F.sum("_lw"), round_to).alias("logratio"),
+            F.round(F.sum("_lw"), 4).alias("logratio"),
         )
     )
     return (

@@ -113,29 +113,22 @@ def _pair_cosine(va: pa.Array, vb: pa.Array) -> pa.Array:
     return pa.array(dots / (na * nb), from_pandas=True)
 
 
-def brute_force_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 3,
-    round_to: int = 6,
-) -> DataFrame:
+def brute_force_topk(vectors: DataFrame, queries: DataFrame, k: int = 3) -> DataFrame:
     """Exact cosine top-k per query: broadcast the (small) query set against
     the vector table — one scan of the vectors, no shuffle of the big side;
     rank per query. Returns (query_id, neighbor_id, rnk, sim)."""
-    v = _as_double(vectors, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("v")
+    v = _as_double(vectors, "embedding").select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("v")
     )
-    q = _as_double(queries, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q")
+    q = _as_double(queries, "embedding").select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q")
     )
     scored = (
         v.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id",
             "neighbor_id",
-            F.round(_pair_cosine(F.col("q"), F.col("v")), round_to).alias("sim"),
+            F.round(_pair_cosine(F.col("q"), F.col("v")), 6).alias("sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -148,40 +141,29 @@ def brute_force_topk(
     )
 
 
-def near_dup_pairs(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.8,
-    round_to: int = 6,
-) -> DataFrame:
+def near_dup_pairs(vectors: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Embedding-cosine near-dup pairs (id_a < id_b, sim >= threshold).
     Exact O(n^2) form — the oracle path; use lsh_buckets to prefilter at
     scale (candidates only within matching sign-sketch buckets)."""
-    a = _as_double(vectors, vec_col).select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va")
+    a = _as_double(vectors, "embedding").select(
+        F.col("vec_id").alias("id_a"), F.col("embedding").alias("va")
     )
-    b = _as_double(vectors, vec_col).select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb")
+    b = _as_double(vectors, "embedding").select(
+        F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb")
     )
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
         .select(
             "id_a",
             "id_b",
-            F.round(_pair_cosine(F.col("va"), F.col("vb")), round_to).alias("sim"),
+            F.round(_pair_cosine(F.col("va"), F.col("vb")), 6).alias("sim"),
         )
         .filter(F.col("sim") >= threshold)
     )
 
 
 def near_dup_pairs_blocked(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.8,
-    blocks: int = 8,
-    round_to: int = 6,
+    vectors: DataFrame, threshold: float = 0.8, blocks: int = 8
 ) -> DataFrame:
     """Exact all-pairs cosine via **block-matrix GEMM**: vectors are hashed
     into ``blocks`` blocks; every block pair (bi <= bj) becomes one group;
@@ -194,10 +176,10 @@ def near_dup_pairs_blocked(
     output as ``near_dup_pairs`` (values rounded identically) — it is
     oracle-checked against the same exact-cosine SQL.
     """
-    v = _as_double(vectors, vec_col).select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("v"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(blocks)).cast("int").alias("blk"),
+    v = _as_double(vectors, "embedding").select(
+        F.col("vec_id").alias("vid"),
+        F.col("embedding").alias("v"),
+        F.pmod(F.xxhash64(F.col("vec_id")), F.lit(blocks)).cast("int").alias("blk"),
     )
     ids = [(bi, bj) for bi in range(blocks) for bj in range(blocks) if bi <= bj]
     pair_ids = v.sparkSession.createDataFrame(ids, "bi int, bj int")
@@ -222,7 +204,7 @@ def near_dup_pairs_blocked(
         m = _matrix(table["v"])
         vids = table["vid"].to_numpy().astype(np.int64)
         ia, ib = np.flatnonzero(blk == bi), np.flatnonzero(blk == bj)
-        i, j, sim = _cosine_hits(m[ia], m[ib], threshold, round_to)
+        i, j, sim = _cosine_hits(m[ia], m[ib], threshold, 6)
         a_ids, b_ids = vids[ia][i], vids[ib][j]
         # a diagonal tile sees every unordered pair twice: keep one; an
         # off-diagonal tile sees it once, in either order
@@ -293,13 +275,9 @@ def sampled_centroids(
 def ivf_topk(
     vectors: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 3,
     n_cells: int = 16,
     n_probe: int = 4,
-    seed: int = 13,
-    round_to: int = 6,
     max_iter: int = 20,
     centroids: Optional[np.ndarray] = None,
 ) -> DataFrame:
@@ -321,8 +299,8 @@ def ivf_topk(
     ``brute_force_topk`` (ties broken identically); smaller ``n_probe`` is
     the 100 TB path, attested by ``recall_report`` (query ``ann_recall``).
     """
-    v = _as_double(vectors, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("v")
+    v = _as_double(vectors, "embedding").select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("v")
     )
     if centroids is not None:
         centers = np.asarray(centroids, dtype="float64")
@@ -337,7 +315,7 @@ def ivf_topk(
 
         ml_df = v.withColumn("features", array_to_vector("v"))
         model = KMeans(
-            k=n_cells, seed=seed, featuresCol="features", maxIter=max_iter
+            k=n_cells, seed=13, featuresCol="features", maxIter=max_iter
         ).fit(ml_df)
         assigned = model.transform(ml_df).select(
             "neighbor_id", "v", F.col("prediction").alias("cell")
@@ -354,8 +332,8 @@ def ivf_topk(
         order = np.argsort(d2, axis=1, kind="stable")[:, :n_probe].astype("int32")
         return _list_array(order)
 
-    q = _as_double(queries, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q")
+    q = _as_double(queries, "embedding").select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q")
     )
     q_cells = q.select(
         "query_id", "q", F.explode(probe_cells(F.col("q"))).alias("cell")
@@ -366,7 +344,7 @@ def ivf_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(_pair_cosine(F.col("q"), F.col("v")), round_to).alias("sim"),
+            F.round(_pair_cosine(F.col("q"), F.col("v")), 6).alias("sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
@@ -383,7 +361,6 @@ def semdedup(
     vec_col: str = "embedding",
     n_cells: int = 8,
     threshold: float = 0.85,
-    round_to: int = 6,
     centroids: Optional[np.ndarray] = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
@@ -430,7 +407,7 @@ def semdedup(
     def cell_kernel(table: pa.Table) -> pa.Table:
         ids = table["_id"].to_numpy()
         m = _matrix(table["_v"])
-        i, j, _ = _cosine_hits(m, m, threshold, round_to)
+        i, j, _ = _cosine_hits(m, m, threshold, 6)
         # per-vector earlier-neighbor counts: hits (i, j) with ids[i] < ids[j]
         counts = np.bincount(j[ids[i] < ids[j]], minlength=len(ids))
         keep = counts > 0
@@ -451,13 +428,7 @@ def semdedup(
 
 
 def lsh_buckets(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_planes: int = 6,
-    n_tables: int = 4,
-    seed: int = 7,
+    vectors: DataFrame, dim: int = 64, n_planes: int = 6, n_tables: int = 4
 ) -> DataFrame:
     """Random-hyperplane (sign) sketch, multi-table: per table t, bucket_t =
     bits of sign(V @ P_t^T). P is a fixed seeded Gaussian tensor; the dot
@@ -466,8 +437,8 @@ def lsh_buckets(
     (table, bucket); two vectors at angle theta share a table's bucket with
     probability (1 - theta/pi)^n_planes, and miss ALL tables with
     probability (1 - p)^n_tables — tune the pair for the target recall.
-    Returns (id, table, bucket) — one row per table via posexplode."""
-    planes = np.random.default_rng(seed).standard_normal((n_tables * n_planes, dim))
+    Returns (vec_id, table, bucket) — one row per table via posexplode."""
+    planes = np.random.default_rng(7).standard_normal((n_tables * n_planes, dim))
 
     @F.arrow_udf(ArrayType(LongType()))
     def sketch(batch: pa.Array) -> pa.Array:
@@ -481,22 +452,17 @@ def lsh_buckets(
         return _list_array(buckets)
 
     sk = vectors.select(
-        F.col(id_col), sketch(F.col(vec_col).cast("array<double>")).alias("bks")
+        F.col("vec_id"), sketch(F.col("embedding").cast("array<double>")).alias("bks")
     )
-    return sk.select(
-        F.col(id_col), F.posexplode("bks").alias("table", "bucket")
-    )
+    return sk.select(F.col("vec_id"), F.posexplode("bks").alias("table", "bucket"))
 
 
 def lsh_near_dup_pairs(
     vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.8,
     dim: int = 64,
     n_planes: int = 6,
     n_tables: int = 4,
-    round_to: int = 6,
 ) -> DataFrame:
     """Scale path: multi-table sign-sketch bucket join -> exact cosine
     verify on the (deduplicated) candidates only. Recall < 1 by
@@ -506,26 +472,26 @@ def lsh_near_dup_pairs(
     s=0.8, ~2.4e-3 at s=0.9; size (n_planes, n_tables) for the target
     recall/candidate-volume tradeoff (fewer planes = higher recall but
     coarser, fuller buckets)."""
-    b = lsh_buckets(vectors, id_col, vec_col, dim, n_planes, n_tables)
+    b = lsh_buckets(vectors, dim, n_planes, n_tables)
     cand = (
         b.alias("a")
         .join(
             b.alias("b"),
             (F.col("a.table") == F.col("b.table"))
             & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.vec_id").alias("id_a"),
+            F.col("b.vec_id").alias("id_b"),
         )
         .distinct()
     )
-    va = _as_double(vectors, vec_col).select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va")
+    va = _as_double(vectors, "embedding").select(
+        F.col("vec_id").alias("id_a"), F.col("embedding").alias("va")
     )
-    vb = _as_double(vectors, vec_col).select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb")
+    vb = _as_double(vectors, "embedding").select(
+        F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb")
     )
     return (
         cand.join(va, "id_a")
@@ -533,20 +499,14 @@ def lsh_near_dup_pairs(
         .select(
             "id_a",
             "id_b",
-            F.round(_pair_cosine(F.col("va"), F.col("vb")), round_to).alias("sim"),
+            F.round(_pair_cosine(F.col("va"), F.col("vb")), 6).alias("sim"),
         )
         .filter(F.col("sim") >= threshold)
     )
 
 
 def cross_corpus_cosine_pairs(
-    train: DataFrame,
-    eval_df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.8,
-    blocks: int = 8,
-    round_to: int = 6,
+    train: DataFrame, eval_df: DataFrame, threshold: float = 0.8, blocks: int = 8
 ) -> DataFrame:
     """Embedding-space benchmark decontamination: exact train x eval cosine
     pairs >= threshold — the semantic sibling of the n-gram
@@ -570,22 +530,22 @@ def cross_corpus_cosine_pairs(
     with blocks, so don't overshoot by orders of magnitude."""
     # the id columns keep the INPUT id type (string corpus ids are as
     # legitimate as bigint ones); both sides must agree
-    id_type = train.schema[id_col].dataType
-    if eval_df.schema[id_col].dataType != id_type:
+    id_type = train.schema["vec_id"].dataType
+    if eval_df.schema["vec_id"].dataType != id_type:
         raise TypeError(
-            f"{id_col} type mismatch: train={id_type.simpleString()} "
-            f"eval={eval_df.schema[id_col].dataType.simpleString()}"
+            f"vec_id type mismatch: train={id_type.simpleString()} "
+            f"eval={eval_df.schema['vec_id'].dataType.simpleString()}"
         )
 
-    t = _as_double(train, vec_col).select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("v"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(blocks)).cast("int").alias("blk"),
+    t = _as_double(train, "embedding").select(
+        F.col("vec_id").alias("vid"),
+        F.col("embedding").alias("v"),
+        F.pmod(F.xxhash64(F.col("vec_id")), F.lit(blocks)).cast("int").alias("blk"),
         F.lit(0).alias("side"),
     )
-    e = _as_double(eval_df, vec_col).select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("v"),
+    e = _as_double(eval_df, "embedding").select(
+        F.col("vec_id").alias("vid"),
+        F.col("embedding").alias("v"),
         F.explode(F.sequence(F.lit(0), F.lit(blocks - 1))).alias("blk"),
         F.lit(1).alias("side"),
     )
@@ -601,7 +561,7 @@ def cross_corpus_cosine_pairs(
         side = table["side"].to_numpy()
         ia, ib = np.flatnonzero(side == 0), np.flatnonzero(side == 1)
         m = _matrix(table["v"])
-        i, j, sim = _cosine_hits(m[ia], m[ib], threshold, round_to)
+        i, j, sim = _cosine_hits(m[ia], m[ib], threshold, 6)
         # take() keeps the input id type (bigint or string)
         return pa.table(
             {
@@ -664,12 +624,7 @@ def embedding_health(
 
 
 def recall_report(
-    approx: DataFrame,
-    exact: DataFrame,
-    keys: "list[str]",
-    method: str,
-    target: float,
-    round_to: int = 4,
+    approx: DataFrame, exact: DataFrame, keys: "list[str]", method: str, target: float
 ) -> DataFrame:
     """Measured recall of an approximate result against the exact result on
     the same input — the attestation a 100 TB user needs before trusting an
@@ -687,7 +642,7 @@ def recall_report(
         F.count(F.lit(1)).cast("bigint").alias("n_expected"),
         F.coalesce(F.sum("_hit"), F.lit(0)).cast("bigint").alias("n_hit"),
     )
-    recall = F.round(F.col("n_hit") / F.col("n_expected"), round_to)
+    recall = F.round(F.col("n_hit") / F.col("n_expected"), 4)
     return counted.select(
         F.lit(method).alias("method"),
         "n_expected",

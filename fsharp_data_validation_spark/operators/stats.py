@@ -27,7 +27,7 @@ from pyspark.sql.types import (
 
 
 def column_profile(
-    df: DataFrame, cols: Sequence[str], exact_distinct: bool = True, round_to: int = 4
+    df: DataFrame, cols: Sequence[str], exact_distinct: bool = True
 ) -> DataFrame:
     """One row per column: (column, n_rows, n_nulls, null_rate, n_distinct).
 
@@ -56,7 +56,7 @@ def column_profile(
             "col_name",
             F.col("_n").alias("n_rows"),
             "n_nulls",
-            F.round(F.col("n_nulls") / F.col("_n"), round_to).alias("null_rate"),
+            F.round(F.col("n_nulls") / F.col("_n"), 4).alias("null_rate"),
             "n_distinct",
         )
     )
@@ -75,13 +75,11 @@ def numeric_minmax(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     )
 
 
-def exact_quantiles(
-    df: DataFrame, col: str, qs: Sequence[float], round_to: int = 4
-) -> DataFrame:
+def exact_quantiles(df: DataFrame, col: str, qs: Sequence[float]) -> DataFrame:
     """Exact continuous-interpolation percentiles (built-in ``percentile``)
     — the oracle-checkable variant; use t-digest below at scale."""
     exprs = [
-        F.round(F.expr(f"percentile({col}, {q})"), round_to).alias(f"q{int(q * 100)}")
+        F.round(F.expr(f"percentile({col}, {q})"), 4).alias(f"q{int(q * 100)}")
         for q in qs
     ]
     return df.agg(*exprs)
@@ -153,20 +151,15 @@ def _digest_quantile(means, weights, q: float) -> float:
 
 
 def tdigest_quantiles(
-    df: DataFrame,
-    col: str,
-    qs: Sequence[float],
-    delta: int = 200,
-    fanout: int = 32,
-    round_to: int = 4,
+    df: DataFrame, col: str, qs: Sequence[float], round_to: int = 4
 ) -> DataFrame:
     """Fully distributed t-digest quantiles: per-partition digests via
     applyInPandas (Arrow batches; numpy-vectorized, no per-row Python), then
     a TWO-LEVEL TREE MERGE inside Spark — level 1 merges partition digests
-    into ``fanout`` groups, level 2 merges those into the final digest and
+    into 32 groups, level 2 merges those into the final digest and
     evaluates the quantiles. Returns a ONE-ROW DataFrame (q50, q95, ...)
     like the sibling quantile operators; the driver never materializes
-    digests and the final task merges <= fanout of them, so the merge cost
+    digests and the final task merges <= 32 of them, so the merge cost
     is independent of partition count (vs the old driver-side collect()).
 
     Deterministic for a fixed partitioning: every merge kernel sorts its
@@ -183,11 +176,11 @@ def tdigest_quantiles(
     )
 
     def per_partition(pdf: pd.DataFrame) -> pd.DataFrame:
-        gid = str(int(pdf["_pid"].iloc[0]) % fanout)
+        gid = str(int(pdf["_pid"].iloc[0]) % 32)
         vals = pdf[col].dropna().to_numpy(dtype=float)
         if len(vals) == 0:
             return pd.DataFrame({"gid": [gid], "means": [[]], "weights": [[]]})
-        m, w = _compress(vals, np.ones_like(vals), delta)
+        m, w = _compress(vals, np.ones_like(vals), 200)
         return pd.DataFrame(
             {"gid": [gid], "means": [m.tolist()], "weights": [w.tolist()]}
         )
@@ -201,7 +194,7 @@ def tdigest_quantiles(
         gid = str(pdf["gid"].iloc[0])
         if len(means) == 0:
             return pd.DataFrame({"gid": [gid], "means": [[]], "weights": [[]]})
-        m, w = _compress(means, weights, delta)
+        m, w = _compress(means, weights, 200)
         return pd.DataFrame(
             {"gid": [gid], "means": [m.tolist()], "weights": [w.tolist()]}
         )
@@ -217,7 +210,7 @@ def tdigest_quantiles(
         )
         if len(means) == 0:
             return pd.DataFrame({c: [float("nan")] for c in qcols})
-        m, w = _compress(means, weights, delta)
+        m, w = _compress(means, weights, 200)
         return pd.DataFrame(
             {
                 c: [half_up(_digest_quantile(m, w, q), round_to)]
@@ -240,29 +233,20 @@ def tdigest_quantiles(
 
 
 def exact_quantiles_by_group(
-    df: DataFrame,
-    group_col: str,
-    col: str,
-    qs: Sequence[float],
-    round_to: int = 4,
+    df: DataFrame, group_col: str, col: str, qs: Sequence[float]
 ) -> DataFrame:
     """Per-group exact percentiles — the per-partition profile variant of
     ``exact_quantiles``. One hash aggregation (Spark's ``percentile`` is a
     partial-aggregating ImperativeAggregate, so map-side combine applies);
     at 100 TB swap for ``percentile_approx``/t-digest with the same shape."""
     exprs = [
-        F.round(F.expr(f"percentile({col}, {q})"), round_to).alias(f"q{int(q * 100)}")
+        F.round(F.expr(f"percentile({col}, {q})"), 4).alias(f"q{int(q * 100)}")
         for q in qs
     ]
     return df.groupBy(group_col).agg(*exprs)
 
 
-def hll_partition_sketches(
-    df: DataFrame,
-    part_col: str,
-    value_col: str,
-    lg_k: int = 12,
-) -> DataFrame:
+def hll_partition_sketches(df: DataFrame, part_col: str, value_col: str) -> DataFrame:
     """Materialize a mergeable Apache DataSketches HLL sketch of
     ``value_col``'s distinct values PER PARTITION: (part, sketch, estimate).
 
@@ -271,12 +255,12 @@ def hll_partition_sketches(
     cardinality), persist the tiny sketch table alongside the manifest, and
     answer any later distinct-count question — any date range, the whole
     table, month-over-month overlap growth — by UNIONING sketches
-    (``hll_rollup``) without ever rescanning the data. lg_k=12 gives
+    (``hll_rollup``) without ever rescanning the data. lg_k = 12 gives
     ~1.6% relative standard error."""
     return df.groupBy(F.col(part_col).alias("part")).agg(
-        F.hll_sketch_agg(F.col(value_col), F.lit(lg_k)).alias("sketch"),
+        F.hll_sketch_agg(F.col(value_col), F.lit(12)).alias("sketch"),
         F.hll_sketch_estimate(
-            F.hll_sketch_agg(F.col(value_col), F.lit(lg_k))
+            F.hll_sketch_agg(F.col(value_col), F.lit(12))
         ).alias("estimate"),
     )
 
@@ -294,15 +278,9 @@ def hll_rollup(sketches: DataFrame, parts: Sequence[str] | None = None) -> DataF
     )
 
 
-def mad_outliers_by_group(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    k: float = 3.0,
-    round_to: int = 4,
-) -> DataFrame:
+def mad_outliers_by_group(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     """Robust per-group outlier profile: a row is an outlier when
-    ``|x - median_g| > k * 1.4826 * MAD_g`` (median absolute deviation,
+    ``|x - median_g| > 3 * 1.4826 * MAD_g`` (median absolute deviation,
     scaled to sigma-equivalence for normal data) — the outlier check
     mean/stddev z-scores get wrong under heavy tails, because both the
     center and the spread estimate are themselves robust.
@@ -330,17 +308,17 @@ def mad_outliers_by_group(
         .groupBy("grp")
         .agg(F.expr("percentile(_dev, 0.5)").alias("_mad"))
     )
-    out = F.abs(F.col("x") - F.col("_med")) > F.lit(k * 1.4826) * F.col("_mad")
+    out = F.abs(F.col("x") - F.col("_med")) > F.lit(3.0 * 1.4826) * F.col("_mad")
     return (
         base.join(F.broadcast(med), "grp")
         .join(F.broadcast(mad), "grp")
         .groupBy("grp")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.round(F.first("_med"), round_to).alias("med"),
-            F.round(F.first("_mad"), round_to).alias("mad"),
+            F.round(F.first("_med"), 4).alias("med"),
+            F.round(F.first("_mad"), 4).alias("mad"),
             F.sum(out.cast("long")).alias("n_outliers"),
-            F.round(F.sum(out.cast("long")) / F.count(F.lit(1)), round_to).alias(
+            F.round(F.sum(out.cast("long")) / F.count(F.lit(1)), 4).alias(
                 "outlier_rate"
             ),
         )
@@ -577,12 +555,7 @@ def moments_rollup(
     )
 
 
-def skew_report(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    top: int = 5,
-    round_to: int = 4,
-) -> DataFrame:
+def skew_report(df: DataFrame, key_cols: Sequence[str], top: int = 5) -> DataFrame:
     """Join/aggregation-key skew diagnostic — the pre-flight check before
     any key-partitioned operation at scale: for each candidate key column,
     the top-``top`` heaviest values with their share of all rows, plus the
@@ -620,7 +593,7 @@ def skew_report(
                 "value",
                 rnk.cast("int").alias("rnk"),
                 F.col("n").cast("bigint").alias("n"),
-                F.round(F.col("n") / F.lit(float(total)), round_to).alias("share"),
+                F.round(F.col("n") / F.lit(float(total)), 4).alias("share"),
                 F.col("_nd").cast("bigint").alias("n_distinct"),
             )
         )

@@ -145,7 +145,6 @@ def time_rollup(
     ts_col: str = "ts",
     dim_col: str = "event_type",
     value_col: str = "value",
-    grain: str = "day",
 ) -> DataFrame:
     """Multi-granularity time rollup ("hypertable rollup"): (bucket, dim),
     (bucket) and grand-total aggregates in ONE pass via ``GROUP BY ROLLUP``.
@@ -161,7 +160,7 @@ def time_rollup(
     groupBy then re-aggregate upward from the (small) grid — same result,
     no Expand.
     """
-    day = F.date_trunc(grain, F.col(ts_col)).cast("date").alias("day")
+    day = F.date_trunc("day", F.col(ts_col)).cast("date").alias("day")
     return (
         df.select(day, F.col(dim_col), F.col(value_col))
         .rollup("day", dim_col)

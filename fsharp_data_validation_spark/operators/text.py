@@ -88,27 +88,25 @@ def bpe_pattern(vocab=None) -> str:
     return "(?:" + "|".join(pieces) + "|[^ ])"
 
 
-def bpe_token_count_col(text_col, vocab=None) -> F.Column:
+def bpe_token_count_col(text_col) -> F.Column:
     """Subword token count as a pure JVM column expression (codegen'd
     regexp_extract_all over the lowercased text; NULL text -> 0)."""
     c = F.col(text_col) if isinstance(text_col, str) else text_col
-    n = F.size(F.regexp_extract_all(F.lower(c), F.lit(bpe_pattern(vocab)), 0))
+    n = F.size(F.regexp_extract_all(F.lower(c), F.lit(bpe_pattern()), 0))
     return F.when(c.isNull(), F.lit(0)).otherwise(n).cast("bigint")
 
 
-def bpe_oracle_expr(text_expr: str, vocab=None) -> str:
+def bpe_oracle_expr(text_expr: str) -> str:
     """The DuckDB rendering of ``bpe_token_count_col`` (same pattern
     string, RE2 leftmost-first) for oracle SQL construction."""
-    pat = bpe_pattern(vocab).replace("'", "''")
+    pat = bpe_pattern().replace("'", "''")
     return (
         f"CAST(CASE WHEN {text_expr} IS NULL THEN 0 ELSE "
         f"len(regexp_extract_all(lower({text_expr}), '{pat}')) END AS BIGINT)"
     )
 
 
-def token_count_bpe(
-    df: DataFrame, id_col: str, text_col: str, round_to: int = 4
-) -> DataFrame:
+def token_count_bpe(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Tokenizer-aware token counting: (id, n_tokens, n_bpe, chars_per_token)
     — whitespace words, greedy-subword tokens over ``BPE_VOCAB``, and the
     realized chars-per-token ratio (the calibration number pipelines use to
@@ -130,13 +128,13 @@ def token_count_bpe(
         # NULLIF guard: empty text is 0/0 — Spark (non-ANSI) gives NULL but
         # DuckDB's default ieee float ops give NaN; NULLIF on BOTH engines
         # (oracle uses NULLIF too) pins the divergence to NULL everywhere
-        F.round(F.col("_nc") / F.nullif(F.col("n_bpe"), F.lit(0)), round_to).alias(
+        F.round(F.col("_nc") / F.nullif(F.col("n_bpe"), F.lit(0)), 4).alias(
             "chars_per_token"
         ),
     )
 
 
-def quality_score(df: DataFrame, id_col: str, text_col: str, round_to: int = 4) -> DataFrame:
+def quality_score(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Length / alpha-ratio / mean-word-length / stopword-ratio quality
     signals, one projection."""
     words = F.split(F.col(text_col), " ")
@@ -149,11 +147,11 @@ def quality_score(df: DataFrame, id_col: str, text_col: str, round_to: int = 4) 
     return df.select(
         F.col(id_col),
         n_tokens.alias("n_tokens"),
-        F.round(alpha.cast("double") / n_chars, round_to).alias("alpha_ratio"),
-        F.round((n_chars - n_tokens + 1).cast("double") / n_tokens, round_to).alias(
+        F.round(alpha.cast("double") / n_chars, 4).alias("alpha_ratio"),
+        F.round((n_chars - n_tokens + 1).cast("double") / n_tokens, 4).alias(
             "mean_word_len"
         ),
-        F.round(stop.cast("double") / n_tokens, round_to).alias("stopword_ratio"),
+        F.round(stop.cast("double") / n_tokens, 4).alias("stopword_ratio"),
     )
 
 
@@ -222,9 +220,7 @@ def redact_pii(
     )
 
 
-def repetition_score(
-    df: DataFrame, id_col: str, text_col: str = "text", round_to: int = 4
-) -> DataFrame:
+def repetition_score(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
     """Repeated-bigram ratio — the standard template/boilerplate quality
     signal (1 - distinct bigrams / total bigrams; 0 = no repetition).
     Row-local array expressions (split -> indexed transform -> distinct):
@@ -252,7 +248,7 @@ def repetition_score(
                 F.when(F.size(g) == 0, F.lit(0.0)).otherwise(
                     1.0 - F.size(F.array_distinct(g)) / F.size(g)
                 ),
-                round_to,
+                4,
             ).alias("rep_ratio"),
         )
     )
@@ -262,12 +258,9 @@ def curate_corpus(
     df: DataFrame,
     id_col: str,
     text_col: str = "text",
-    lang_col: str = "lang",
-    lang: str = "en",
     min_tokens: int = 10,
     max_tokens: int = 500,
     min_alpha: float = 0.5,
-    train_pct: int = 90,
 ) -> DataFrame:
     """End-to-end corpus curation — the composed pipeline a training-data
     user actually runs: language filter + token-length bounds + alpha-ratio
@@ -280,18 +273,14 @@ def curate_corpus(
     materialized stages."""
     from .sampling import hash_split
 
-    first = _curate_survivors(
-        df, id_col, text_col, lang_col, lang, min_tokens, max_tokens, min_alpha
-    )
-    return hash_split(first, id_col, train_pct).select(id_col, "split")
+    first = _curate_survivors(df, id_col, text_col, min_tokens, max_tokens, min_alpha)
+    return hash_split(first, id_col, 90).select(id_col, "split")
 
 
 def _curate_survivors(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    lang_col: str,
-    lang: str,
     min_tokens: int,
     max_tokens: int,
     min_alpha: float,
@@ -307,7 +296,7 @@ def _curate_survivors(
     alpha = F.length(F.regexp_replace(F.col(text_col), "[^a-z]", ""))
     alpha_ratio = alpha.cast("double") / F.length(text_col)
     kept = df.filter(
-        (F.col(lang_col) == lang)
+        (F.col("lang") == "en")
         & n_tokens.between(min_tokens, max_tokens)
         & (alpha_ratio >= min_alpha)
     )
@@ -323,18 +312,8 @@ def curate_dedup_pack(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    lang_col: str = "lang",
-    lang: str = "en",
-    min_tokens: int = 10,
-    max_tokens: int = 500,
     min_alpha: float = 0.5,
-    train_pct: int = 90,
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 16,
-    threshold: float = 0.8,
     n_shards: int = 8,
-    budget: int = 2048,
 ) -> DataFrame:
     """The composed END-TO-END training-data pipeline as ONE lineage —
     what a 100 TB user actually runs, and what per-stage benches miss
@@ -353,7 +332,7 @@ def curate_dedup_pack(
        parallelism — at 100 TB you raise ``n_shards`` to O(cores), each
        pack group stays independent;
     4. pack: greedy context-window packing of surviving docs into chunks
-       of <= ``budget`` BPE tokens per (split, shard) group ordered by id
+       of <= 2048 BPE tokens per (split, shard) group ordered by id
        (``pack_context_windows(tokenizer="bpe")`` — token counts JVM-side,
        one carried-state Arrow pass).
 
@@ -364,15 +343,11 @@ def curate_dedup_pack(
     from .dedup import md5_int, minhash_lsh_pairs
     from .sampling import hash_split
 
-    survivors = _curate_survivors(
-        df, id_col, text_col, lang_col, lang, min_tokens, max_tokens, min_alpha
-    )
-    pairs = minhash_lsh_pairs(
-        survivors, id_col, text_col, n, num_hashes, bands, threshold
-    )
+    survivors = _curate_survivors(df, id_col, text_col, 10, 500, min_alpha)
+    pairs = minhash_lsh_pairs(survivors, id_col, text_col)
     drop = pairs.select(F.col("id_b").alias(id_col)).distinct()
     kept = survivors.join(drop, id_col, "left_anti")
-    grouped = hash_split(kept, id_col, train_pct).withColumn(
+    grouped = hash_split(kept, id_col, 90).withColumn(
         "pack_group",
         F.concat_ws(
             "|",
@@ -383,7 +358,7 @@ def curate_dedup_pack(
         ),
     )
     packed = pack_context_windows(
-        grouped, "pack_group", id_col, text_col, budget, tokenizer="bpe"
+        grouped, "pack_group", id_col, text_col, 2048, tokenizer="bpe"
     )
     return packed.select(
         "pack_group",
@@ -563,7 +538,7 @@ def chunk_text(
     )
 
 
-def encoding_quality(df: DataFrame, id_col: str, text_col: str, round_to: int = 4) -> DataFrame:
+def encoding_quality(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Encoding-hygiene signals for corpus filtering: U+FFFD replacement
     characters (mojibake markers), C0 control characters (excluding
     tab/newline/CR), and the ASCII ratio. Counting is done as
@@ -583,7 +558,7 @@ def encoding_quality(df: DataFrame, id_col: str, text_col: str, round_to: int = 
         n_chars.cast("bigint").alias("n_chars"),
         repl.cast("bigint").alias("n_repl"),
         ctrl.cast("bigint").alias("n_ctrl"),
-        F.when(n_chars > 0, F.round(n_ascii.cast("double") / n_chars, round_to)).alias(
+        F.when(n_chars > 0, F.round(n_ascii.cast("double") / n_chars, 4)).alias(
             "ascii_ratio"
         ),
     )
@@ -610,12 +585,7 @@ def dedup_lines(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def mixture_report(
-    df: DataFrame,
-    group_cols,
-    text_col: str = "text",
-    round_to: int = 6,
-) -> DataFrame:
+def mixture_report(df: DataFrame, group_cols) -> DataFrame:
     """Data-mixture report — the per-source/language accounting every
     training run publishes: docs, whitespace tokens, and each group's share
     of corpus tokens. ONE partial+final hash aggregate over the corpus
@@ -625,10 +595,10 @@ def mixture_report(
     from pyspark.sql import Window
 
     gs = [group_cols] if isinstance(group_cols, str) else list(group_cols)
-    n_tok = F.size(F.split(F.col(text_col), " "))
+    n_tok = F.size(F.split(F.col("text"), " "))
     agg = df.groupBy(*gs).agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.when(F.col(text_col).isNull(), 0).otherwise(n_tok))
+        F.sum(F.when(F.col("text").isNull(), 0).otherwise(n_tok))
         .cast("bigint")
         .alias("n_tokens"),
     )
@@ -638,17 +608,13 @@ def mixture_report(
         "n_docs",
         "n_tokens",
         F.round(
-            F.col("n_tokens").cast("double") / F.sum("n_tokens").over(wall), round_to
+            F.col("n_tokens").cast("double") / F.sum("n_tokens").over(wall), 6
         ).alias("token_share"),
     )
 
 
 def tfidf_top_terms(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    top_k: int = 3,
-    round_to: int = 4,
+    df: DataFrame, id_col: str, text_col: str, top_k: int = 3
 ) -> DataFrame:
     """Per-document top-k TF-IDF terms (whitespace tokens, raw tf,
     idf = ln(N / df)) — the keyword-extraction profile of a curation
@@ -677,7 +643,7 @@ def tfidf_top_terms(
     n_docs = df.filter(F.col(text_col).isNotNull()).agg(
         F.countDistinct(id_col).alias("n_docs")
     )
-    score = F.round(F.col("tf") * F.log(F.col("n_docs") / df_t), round_to)
+    score = F.round(F.col("tf") * F.log(F.col("n_docs") / df_t), 4)
     w = Window.partitionBy("doc").orderBy(F.col("score").desc(), F.col("term").asc())
     return (
         tf.crossJoin(F.broadcast(n_docs))
@@ -700,12 +666,7 @@ def _ngrams_expr(words, n: int):
 
 
 def top_ngram_fraction(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 2,
-    round_to: int = 4,
-    kernel: str = "local",
+    df: DataFrame, id_col: str, text_col: str, n: int = 2, kernel: str = "local"
 ) -> DataFrame:
     """Per-document top word-n-gram character fraction — the Gopher
     repetition-quality rule (Rae et al. 2021, public): the share of a
@@ -787,7 +748,7 @@ def top_ngram_fraction(
                     F.lit(1.0),
                     F.col("_b.best_run") * F.length("_b.best") / F.col("_chars"),
                 ),
-                round_to,
+                4,
             ).alias("char_frac"),
         )
 
@@ -815,19 +776,14 @@ def top_ngram_fraction(
                     F.lit(1.0),
                     F.col("n_occurrences") * F.length("ngram") / F.col("_chars"),
                 ),
-                round_to,
+                4,
             ).alias("char_frac"),
         )
     )
 
 
 def dup_ngram_fraction(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 5,
-    round_to: int = 4,
-    kernel: str = "local",
+    df: DataFrame, id_col: str, text_col: str, n: int = 5, kernel: str = "local"
 ) -> DataFrame:
     """Per-document DUPLICATED word-n-gram character fraction — the second
     Gopher repetition rule (Rae et al. 2021): the share of a document's
@@ -910,7 +866,7 @@ def dup_ngram_fraction(
                     F.least(
                         F.lit(1.0), F.col("_f.dup_chars") / F.col("_chars")
                     ),
-                    round_to,
+                    4,
                 ).alias("dup_char_frac"),
             )
         )
@@ -933,18 +889,14 @@ def dup_ngram_fraction(
                     F.lit(1.0),
                     F.sum(F.col("c") * F.length("ngram")) / F.max("_chars"),
                 ),
-                round_to,
+                4,
             ).alias("dup_char_frac"),
         )
     )
 
 
 def zipf_fit(
-    df: DataFrame,
-    text_col: str,
-    top_k: int = 1000,
-    min_count: int = 2,
-    round_to: int = 4,
+    df: DataFrame, text_col: str, top_k: int = 1000, min_count: int = 2
 ) -> DataFrame:
     """Zipf rank-frequency fit over the corpus vocabulary: least-squares
     slope of ln(freq) on ln(rank) for the top-``top_k`` tokens — the
@@ -977,17 +929,13 @@ def zipf_fit(
     )
     return xy.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_types"),
-        F.round(F.covar_pop("x", "y") / F.var_pop("x"), round_to).alias("slope"),
-        F.round(F.pow(F.corr("x", "y"), F.lit(2)), round_to).alias("r_squared"),
+        F.round(F.covar_pop("x", "y") / F.var_pop("x"), 4).alias("slope"),
+        F.round(F.pow(F.corr("x", "y"), F.lit(2)), 4).alias("r_squared"),
     )
 
 
 def pmi_bigrams(
-    df: DataFrame,
-    text_col: str,
-    min_count: int = 5,
-    top_k: int = 20,
-    round_to: int = 4,
+    df: DataFrame, text_col: str, min_count: int = 5, top_k: int = 20
 ) -> DataFrame:
     """Top corpus collocations by pointwise mutual information:
     PMI(a,b) = ln( p(ab) / (p(a)·p(b)) ) with p(ab) over bigram tokens and
@@ -1052,7 +1000,7 @@ def pmi_bigrams(
                     (F.col("n_ab") / F.col("_nb"))
                     / ((F.col("ca") / F.col("_nw")) * (F.col("cb") / F.col("_nw")))
                 ),
-                round_to,
+                4,
             ).alias("pmi"),
         )
     )
@@ -1111,12 +1059,7 @@ def vocab_growth(
 
 
 def ngram_perplexity(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    ref_col,
-    k: float = 0.1,
-    round_to: int = 4,
+    df: DataFrame, id_col: str, text_col: str, ref_col, k: float = 0.1
 ) -> DataFrame:
     """Bigram-LM perplexity quality filter (the CCNet / RefinedWeb
     architecture: Wenzek et al. 2020 score documents against a reference-
@@ -1142,7 +1085,7 @@ def ngram_perplexity(
     Nothing is driver-side; nothing is quadratic.
 
     Float note: the per-doc mean of log2 terms is an unordered double sum,
-    published at ``round_to`` decimals — same tolerance class as the drift
+    published at 4 decimals — same tolerance class as the drift
     family. Returns (id_col, is_ref, n_bigrams, ppl)."""
     from ..cache import persist_tracked
 
@@ -1199,7 +1142,7 @@ def ngram_perplexity(
     )
     per = scored.groupBy("_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_bigrams"),
-        F.round(F.pow(F.lit(2.0), -F.avg("_lp")), round_to).alias("ppl"),
+        F.round(F.pow(F.lit(2.0), -F.avg("_lp")), 4).alias("ppl"),
     )
     return (
         base.select("_id", "is_ref")

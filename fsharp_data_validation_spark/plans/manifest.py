@@ -8,7 +8,9 @@ manifest — completed partitions are skipped entirely (their input is never
 scanned: partition pruning via the partition predicate).
 
 Manifest entry fields:
-  partition        partition value (string-rendered)
+  partition        partition value, rendered by Spark (``cast(.. as string)``;
+                   NULL is ``__HIVE_DEFAULT_PARTITION__``, the directory
+                   name Hive layouts give it)
   status           "pass" | "fail"
   rows_scanned     rows validated in the partition
   rows_with_violations / violations
@@ -42,6 +44,10 @@ from typing import List, Optional, Sequence
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.compiler import Suite
+
+# the rendering of a NULL partition value: Hive's directory name for it, so
+# ``partition_snapshots`` keys a NULL partition the same way
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
 class SnapshotDriftError(RuntimeError):
@@ -262,10 +268,19 @@ class ValidationRun:
             p for p, doc in self.completed_partitions().items() if _drifted(p, doc)
         )
 
+    def _part(self):
+        """The partition value as a string, rendered by Spark: the pending
+        list and the batch filter both use it, so every value a partition
+        holds (NULL and booleans included) selects that partition's rows."""
+        return F.coalesce(
+            F.col(self.partition_col).cast("string"), F.lit(_NULL_PARTITION)
+        )
+
     def pending_partitions(self, df: DataFrame) -> List[str]:
+        pcol = self.partition_col
         all_parts = [
-            str(r[0])
-            for r in df.select(self.partition_col).distinct().orderBy(self.partition_col).collect()
+            r[0]
+            for r in df.select(pcol).distinct().orderBy(pcol).select(self._part()).collect()
         ]
         done = self.completed_partitions()
         drifted = set(self.drifted_partitions())
@@ -296,7 +311,7 @@ class ValidationRun:
         pending = self.pending_partitions(df)
         if max_partitions is not None:
             pending = pending[:max_partitions]
-        pcol = F.col(self.partition_col).cast("string")
+        pvalue = self._part()
         # "part" carries the partition value; a key of that name is that column
         keys = [k for k in self.key_cols if k != "part"] + ["part"]
         step = max(batch_size, 1)
@@ -308,7 +323,7 @@ class ValidationRun:
             batch = pending[i : i + step]
             started = time.time()
             # partition predicates -> partition pruning on a partitioned table
-            pdf = df.filter(pcol.isin(batch)).withColumn("part", pcol)
+            pdf = df.filter(pvalue.isin(batch)).withColumn("part", pvalue)
             res = self.suite.run(pdf, keys)
             stats = {r["part"]: r.asDict() for r in res.verdict(["part"], pdf).collect()}
             _clear_parts(df.sparkSession, out_dirs, batch)

@@ -84,14 +84,14 @@ def with_vecs(sql: str) -> str:
     return f"WITH vecs AS ({VECS_ORACLE_SQL})\n" + sql
 
 
-def _plane_rows_sql(dim: int, n_planes: int, n_tables: int, seed: int) -> str:
+def _plane_rows_sql(n_planes: int, n_tables: int, seed: int) -> str:
     """The seeded Gaussian hyperplanes of ``operators.similarity.lsh_buckets``
     rendered as DuckDB VALUES rows ``(table, plane_idx, DOUBLE[])`` — the
     same ``np.random.default_rng(seed).standard_normal`` tensor, inlined as
     literals so DuckDB replays the identical sketch."""
     import numpy as np
 
-    planes = np.random.default_rng(seed).standard_normal((n_tables * n_planes, dim))
+    planes = np.random.default_rng(seed).standard_normal((n_tables * n_planes, 64))
     rows = []
     for r in range(n_tables * n_planes):
         t, j = divmod(r, n_planes)
@@ -101,12 +101,7 @@ def _plane_rows_sql(dim: int, n_planes: int, n_tables: int, seed: int) -> str:
 
 
 def lsh_construction_oracle_sql(
-    threshold: float = 0.8,
-    dim: int = 64,
-    n_planes: int = 6,
-    n_tables: int = 12,
-    seed: int = 7,
-    round_to: int = 6,
+    threshold: float = 0.8, n_planes: int = 6, n_tables: int = 12, seed: int = 7
 ) -> str:
     """DuckDB replay of ``lsh_near_dup_pairs``' FULL construction: the same
     seeded Gaussian hyperplanes (inlined as double literals), sign buckets
@@ -117,7 +112,7 @@ def lsh_construction_oracle_sql(
     tables is ~3%), but two independent implementations of the same sketch
     must agree exactly (sign flips need |dot| ~ 1e-13, vanishing for
     Gaussian planes)."""
-    planes_sql = _plane_rows_sql(dim, n_planes, n_tables, seed)
+    planes_sql = _plane_rows_sql(n_planes, n_tables, seed)
     return f"""WITH vecs AS ({VECS_ORACLE_SQL}),
 planes(t, j, p) AS (VALUES {planes_sql}),
 bk AS (
@@ -133,7 +128,7 @@ cand AS (
 )
 SELECT id_a, id_b, sim FROM (
   SELECT c.id_a, c.id_b,
-         ROUND({COSINE_SQL.format(a="va.e", b="vb.e")}, {round_to}) AS sim
+         ROUND({COSINE_SQL.format(a="va.e", b="vb.e")}, 6) AS sim
   FROM cand c
   JOIN vecs va ON va.vec_id = c.id_a
   JOIN vecs vb ON vb.vec_id = c.id_b
@@ -145,13 +140,11 @@ def ann_recall_oracle_sql(
     n_cells: int = 8,
     n_probe: int = 4,
     threshold: float = 0.8,
-    dim: int = 64,
     n_planes: int = 6,
     n_tables: int = 4,
     seed: int = 7,
     ivf_target: float = 0.6,
     lsh_target: float = 0.6,
-    recall_round: int = 4,
 ) -> str:
     """DuckDB replay of the ``ann_recall`` query: recall of the APPROXIMATE
     ANN configurations against the exact results on the same vectors.
@@ -170,7 +163,7 @@ def ann_recall_oracle_sql(
 
     The recall FORMULA (left join + counts + rounded ratio + >= target) is
     thereby checked end-to-end on both engines."""
-    planes_sql = _plane_rows_sql(dim, n_planes, n_tables, seed)
+    planes_sql = _plane_rows_sql(n_planes, n_tables, seed)
     return f"""WITH vecs AS ({VECS_ORACLE_SQL}),
 q AS (SELECT vec_id AS query_id, e AS qe FROM vecs WHERE vec_id % 100 = 0),
 v AS (SELECT vec_id AS neighbor_id, e AS ve FROM vecs),
@@ -262,7 +255,7 @@ counts AS (
     ON e.id_a = l.id_a AND e.id_b = l.id_b
 )
 SELECT method, n_expected, n_hit,
-       ROUND(n_hit * 1.0 / n_expected, {recall_round}) AS recall,
+       ROUND(n_hit * 1.0 / n_expected, 4) AS recall,
        target,
-       ROUND(n_hit * 1.0 / n_expected, {recall_round}) >= target AS ok
+       ROUND(n_hit * 1.0 / n_expected, 4) >= target AS ok
 FROM counts"""

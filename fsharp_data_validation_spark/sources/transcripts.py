@@ -20,8 +20,6 @@ isRequired (Library.fs:16-19), text-length bounds ≅ minLength/maxLength
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 ROLES = ("system", "user", "assistant", "tool")
@@ -60,12 +58,6 @@ FROM (
 """
 
 
-def transcripts_cte(events_rel: str = "events") -> str:
-    """The derivation as a CTE body, parameterized on the events relation
-    name, for embedding in oracle SQL: ``WITH transcripts AS (<this>)``."""
-    return TRANSCRIPTS_SQL.replace("FROM events", f"FROM {events_rel}")
-
-
 def with_transcripts(sql: str) -> str:
     """Wrap a query in the shared CTEs ``transcripts`` and ``tool_catalog``.
 
@@ -97,57 +89,3 @@ def load_transcripts(spark: SparkSession, table_or_path: str) -> DataFrame:
     if "/" in table_or_path or table_or_path.endswith(".parquet"):
         return spark.read.parquet(table_or_path)
     return spark.table(table_or_path)
-
-
-def write_bucketed(
-    df, table_name: str, bucket_cols, n_buckets: int = 32, sort_cols=None,
-    path: str | None = None,
-):
-    """Persist a DataFrame as a bucketed (+ optionally sorted) table —
-    the co-located-join layout for repeated joins/aggregations on the
-    bucket key. Two tables bucketed identically join with ZERO exchange
-    (both sides already hash-distributed on the key), and sorted buckets
-    make it a merge join with no sort stage. At 10^12-turn scale this is
-    the layout for conv_id-keyed cross-row checks (≅ Iceberg
-    ``bucket(N, conv_id)`` partition transform behind the same seam)."""
-    cols = [bucket_cols] if isinstance(bucket_cols, str) else list(bucket_cols)
-    w = df.write.bucketBy(n_buckets, *cols)
-    if path is not None:
-        w = w.option("path", path)  # external table at an explicit location
-    if sort_cols:
-        scols = [sort_cols] if isinstance(sort_cols, str) else list(sort_cols)
-        w = w.sortBy(*scols)
-    w.mode("overwrite").format("parquet").saveAsTable(table_name)
-    # record the snapshot this write produced (the Iceberg commit-snapshot
-    # analogue): downstream ValidationRuns pin against it, so a later
-    # rewrite of the table is detected as drift end-to-end. `_`-prefixed
-    # files are invisible to Spark readers and excluded from the pin itself.
-    import json as _json
-    import time as _time
-
-    from ..plans.manifest import parquet_snapshot
-
-    location = path
-    if location is None:
-        spark = df.sparkSession
-        row = (
-            spark.sql(f"DESCRIBE TABLE EXTENDED {table_name}")
-            .filter("col_name = 'Location'")
-            .collect()
-        )
-        location = row[0]["data_type"] if row else None
-        if location and location.startswith("file:"):
-            location = location[len("file:"):]
-    snapshot = parquet_snapshot(location) if location else None
-    if location:
-        with open(os.path.join(location, "_snapshot.json"), "w") as f:
-            _json.dump(
-                {
-                    "table": table_name,
-                    "snapshot": snapshot,
-                    "written_at": int(_time.time()),
-                },
-                f,
-                sort_keys=True,
-            )
-    return table_name, snapshot

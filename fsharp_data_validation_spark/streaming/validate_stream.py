@@ -52,17 +52,13 @@ def validate_stream(
 
 
 def windowed_violation_rate(
-    stream_df: DataFrame,
-    suite: Suite,
-    ts_col: str = "ts",
-    window: str = "1 minute",
-    watermark: str = "2 minutes",
+    stream_df: DataFrame, suite: Suite, ts_col: str = "ts", window: str = "1 minute"
 ) -> DataFrame:
     """Event-time windowed violation metrics with late-data watermarking:
     (window, rows, rows_with_violations, violations), counted from the
     suite's allocation-free flag and count columns (no failure arrays)."""
     return (
-        stream_df.withWatermark(ts_col, watermark)
+        stream_df.withWatermark(ts_col, "2 minutes")
         .groupBy(F.window(ts_col, window).alias("win"))
         .agg(
             F.count(F.lit(1)).alias("rows"),
@@ -213,7 +209,6 @@ def windowed_drift_stream(
     watermark: str = "2 minutes",
     bucket_width: float = 25.0,
     n_buckets: int = 20,
-    round_to: int = 4,
 ) -> DataFrame:
     """Streaming PSI drift monitor against a static baseline: per
     event-time window, emit (win, rows, psi) where ``psi`` compares the
@@ -232,7 +227,7 @@ def windowed_drift_stream(
         psi_term(F.col(f"_c{i}"), F.lit(base_n[i]), F.col("rows"), F.lit(tot))
         for i in range(n_buckets)
     ]
-    return agg.select("win", "rows", F.round(reduce(add, terms), round_to).alias("psi"))
+    return agg.select("win", "rows", F.round(reduce(add, terms), 4).alias("psi"))
 
 
 def windowed_chi2_stream(
@@ -331,12 +326,7 @@ def windowed_w1_stream(
 
 
 def windowed_rates_to_sink(
-    stream_df: DataFrame,
-    suite: Suite,
-    ts_col: str = "ts",
-    window: str = "1 minute",
-    watermark: str = "2 minutes",
-    round_to: int = 6,
+    stream_df: DataFrame, suite: Suite, ts_col: str = "ts", window: str = "1 minute"
 ) -> DataFrame:
     """Stage 1 of the streaming control chart: the watermarked windowed
     violation-rate aggregation flattened to the sink schema
@@ -346,20 +336,16 @@ def windowed_rates_to_sink(
     streaming aggregation in one query, so the monitoring loop is the
     standard two-query topology). On a batch frame the watermark is a
     no-op, so the same call builds the batch rate series."""
-    return windowed_violation_rate(stream_df, suite, ts_col, window, watermark).select(
+    return windowed_violation_rate(stream_df, suite, ts_col, window).select(
         F.col("win.start").alias("win_start"),
         F.col("rows").alias("n_rows"),
         F.col("rows_with_violations").alias("n_viol"),
-        F.round(F.col("rows_with_violations") / F.col("rows"), round_to).alias("rate"),
+        F.round(F.col("rows_with_violations") / F.col("rows"), 6).alias("rate"),
     )
 
 
 def windowed_rate_anomaly_stream(
-    rates_stream: DataFrame,
-    baseline: int = 7,
-    z_threshold: float = 3.0,
-    min_history: int = 3,
-    round_to: int = 6,
+    rates_stream: DataFrame, baseline: int = 7, z_threshold: float = 3.0
 ) -> DataFrame:
     """STREAMING control-chart anomaly detection — the streaming sibling of
     ``operators/checks.rate_anomaly``, closing the Deequ monitoring loop on
@@ -429,9 +415,9 @@ def windowed_rate_anomaly_stream(
                     # the batch form's AVG / STDDEV_POP accumulate in frame
                     # order, and the published 6-decimal round sits on .5
                     # boundaries often enough that the last ulp matters
-                    m, sd = (half_up(v, round_to) for v in seq_mean_std(hist))
+                    m, sd = (half_up(v, 6) for v in seq_mean_std(hist))
                     z = half_up((rate - m) / sd, 4) if sd > 0 else None
-                    anom = len(hist) >= min_history and (
+                    anom = len(hist) >= 3 and (
                         abs(z) > z_threshold if sd > 0 else rate != m
                     )
                 else:

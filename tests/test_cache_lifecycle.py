@@ -1,16 +1,11 @@
 """Cache-lifecycle invariants: every operator that persists intermediates
-registers them in fsharp_data_validation_spark.cache, and release_caches /
-cache_scope leave ZERO storage behind — no monotonic executor-storage growth
+registers them in fsharp_data_validation_spark.cache, and release_caches
+leaves ZERO storage behind — no monotonic executor-storage growth
 across a multi-operator session (the 71-query bench; any real pipeline)."""
 
 from pyspark.sql import Row, functions as F
 
-from fsharp_data_validation_spark.cache import (
-    cache_scope,
-    persist_tracked,
-    release_caches,
-    tracked_count,
-)
+from fsharp_data_validation_spark.cache import release_caches, tracked_count
 
 
 def _docs(spark, n=40):
@@ -73,20 +68,6 @@ def test_drift_and_sampling_grids_release(spark):
     psi_by_group(df, "grp", "x", 10.0, 10).collect()
     temperature_sample(df, "grp", "doc_id").collect()
     assert tracked_count() >= 2
-    release_caches(spark, sweep_rdds=True)
-    assert _storage_entries(spark) == 0
-
-
-def test_cache_scope_releases_only_inner(spark):
-    release_caches(spark, sweep_rdds=True)
-    outer = persist_tracked(spark.range(10))
-    outer.count()
-    with cache_scope():
-        inner = persist_tracked(spark.range(20))
-        inner.count()
-        assert tracked_count() == 2
-    assert tracked_count() == 1  # inner gone, outer alive
-    assert outer.storageLevel.useMemory
     release_caches(spark, sweep_rdds=True)
     assert _storage_entries(spark) == 0
 

@@ -139,8 +139,8 @@ def test_by_group_equals_joined_per_group(spark):
         hg = hist(part)
         joined = {
             "psi": D.psi(hg, whole),
-            "ks": D.ks(hg, whole),
-            "js": D.js(hg, whole),
+            "ks": D.ks_joined(D._joined_hist(hg, whole)),
+            "js": D.js_joined(D._joined_hist(hg, whole)),
             "w1": D.w1(hg, whole, n, width),
         }
         for name, out in joined.items():

@@ -1,9 +1,13 @@
 """The driver-query registry in ``__spark_entry__``: one ``@query``
 declaration per query feeds ``queries()``, ``oracle_sql()`` and the
-quadratic flag, in ``attestation_order``."""
+quadratic flag, in ``attestation_order``. Also the package-surface guards:
+every public function has a non-test consumer and every option a call site
+that passes it (pure ``ast``, no JVM)."""
 
 import ast
 import json
+import math
+import sys
 from pathlib import Path
 
 import __spark_entry__ as e
@@ -61,33 +65,119 @@ def test_registry_feeds_queries_and_oracles_in_one_order():
         assert isinstance(quadratic, bool)
 
 
-def _names(trees):
-    """Every ``ast.Name`` and imported name in ``trees``."""
+PKG = ROOT / "fsharp_data_validation_spark"
+CONSUMERS = [
+    ROOT / "__spark_entry__.py",
+    ROOT / "bench.py",
+    *PKG.rglob("*.py"),
+    *(p for d in ("jobs", "perfbench", "tools") for p in (ROOT / d).rglob("*.py")),
+]
+# O(n^2) reference implementations that the LSH and banded tests compare the
+# approximate kernels against; both call private package kernels.
+REFERENCE_ONLY = {"near_dup_pairs", "simhash_pairs"}
+
+
+def _trees(paths):
+    return {p: ast.parse(p.read_text()) for p in paths}
+
+
+def _defs():
+    """(path, def) for each top-level function of the package outside
+    ``core/``, the row-level oracle."""
+    pkg = (p for p in PKG.rglob("*.py") if "core" not in p.relative_to(PKG).parts)
+    return [
+        (p, f)
+        for p, tree in _trees(pkg).items()
+        for f in tree.body
+        if isinstance(f, ast.FunctionDef)
+    ]
+
+
+def _refs(node):
+    """Every name ``node`` references: ``ast.Name`` ids, ``ast.Attribute``
+    attrs and imported names."""
     out = set()
-    for tree in trees:
-        for n in ast.walk(tree):
-            if isinstance(n, ast.Name):
-                out.add(n.id)
-            elif isinstance(n, ast.alias):
-                out.add(n.name)
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name)
     return out
 
 
-def test_streaming_surface_has_consumers():
-    """Every public function of the streaming module is used outside its
-    own definition: by the driver entry, perfbench, or another function of
-    the module. A monitor ships with a consumer or not at all; ast, not
-    text search, so a docstring mention is not a use."""
-    module = ast.parse(
-        (ROOT / "fsharp_data_validation_spark/streaming/validate_stream.py").read_text()
-    )
-    consumers = [ROOT / "__spark_entry__.py", *(ROOT / "perfbench").glob("*.py")]
-    used = _names(ast.parse(p.read_text()) for p in consumers)
-    unused = [
-        f.name
-        for f in module.body
-        if isinstance(f, ast.FunctionDef)
-        and not f.name.startswith("_")
-        and f.name not in used | _names(n for n in module.body if n is not f)
-    ]
-    assert unused == []
+def test_every_public_function_has_a_consumer():
+    """A public package function is referenced outside its own definition by
+    the package, ``__spark_entry__.py``, bench.py, jobs/, perfbench/ or tools/.
+    Tests do not count: a function only tests call is deleted or moves into
+    tests/. A reference from a function that is itself dead does not count
+    either, so a test-only function takes its private helpers with it. ast,
+    not text search, so a docstring mention is not a use."""
+    refs = {
+        (p, n.lineno): _refs(n) for p, t in _trees(CONSUMERS).items() for n in t.body
+    }
+    defs = {(p, f.lineno): f.name for p, f in _defs() if f.name not in REFERENCE_ONLY}
+    dead = set()
+    while True:
+        now = {
+            k
+            for k, name in defs.items()
+            if not any(name in r for n, r in refs.items() if n != k and n not in dead)
+        }
+        if now == dead:
+            break
+        dead = now
+    assert sorted(defs[k] for k in dead if not defs[k].startswith("_")) == []
+
+
+def _calls(tree):
+    """(callee name, call) for each call in ``tree``; a callee imported
+    ``as`` another name is resolved to its own name."""
+    alias = {
+        a.asname: a.name
+        for n in ast.walk(tree)
+        if isinstance(n, ast.ImportFrom)
+        for a in n.names
+        if a.asname
+    }
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Call):
+            name = getattr(n.func, "id", None) or getattr(n.func, "attr", None)
+            if name:
+                yield alias.get(name, name), n
+
+
+def test_every_option_is_passed_somewhere():
+    """Each defaulted parameter of a public package function is passed, by
+    keyword or by position, at one or more call sites anywhere in the repo,
+    tests included (``kernel="explode"`` and ``blocks=1`` are reference
+    paths only tests take). An option no caller sets only ever takes its
+    default, so it is a constant. A call with ``*args`` or ``**kw`` passes
+    every parameter."""
+    n_pos, kws = {}, {}  # callee -> most positional args, keywords passed
+    for tree in _trees([*CONSUMERS, *(ROOT / "tests").glob("*.py")]).values():
+        for name, c in _calls(tree):
+            spread = any(isinstance(a, ast.Starred) for a in c.args) or any(
+                k.arg is None for k in c.keywords
+            )
+            n = math.inf if spread else len(c.args)
+            n_pos[name] = max(n_pos.get(name, 0), n)
+            kws.setdefault(name, set()).update(k.arg for k in c.keywords)
+    unpassed = []
+    for p, f in _defs():
+        a = f.args
+        positional = a.posonlyargs + a.args
+        first = len(positional) - len(a.defaults)
+        # (position, name); a keyword-only option has no position to pass it at
+        defaulted = [(i, x.arg) for i, x in enumerate(positional) if i >= first] + [
+            (sys.maxsize, x.arg) for x, d in zip(a.kwonlyargs, a.kw_defaults) if d
+        ]
+        unpassed += [
+            f"{p.relative_to(PKG)}:{f.name}({arg}=)"
+            for i, arg in defaulted
+            if not f.name.startswith("_")
+            and arg not in kws.get(f.name, ())
+            and n_pos.get(f.name, 0) <= i
+        ]
+    assert sorted(unpassed) == []

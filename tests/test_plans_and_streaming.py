@@ -6,6 +6,7 @@ The "stream equals batch" pins live in test_streaming.py."""
 import json
 import os
 
+import numpy as np
 import pytest
 from pyspark.sql import Row, functions as F
 from pyspark.sql.types import (
@@ -15,6 +16,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from fsharp_data_validation_spark.operators.multimodal import RAWV_MAGIC
 from fsharp_data_validation_spark.operators.transcript_suite import transcript_row_suite
 from fsharp_data_validation_spark.plans.manifest import ValidationRun
 
@@ -123,6 +125,28 @@ def test_manifest_run_and_resume(spark, tmp_path):
     ).run(_df(spark)) == []
 
 
+def test_null_and_boolean_partitions_are_scanned(spark, tmp_path):
+    """Partition values that Python and Spark render differently (NULL,
+    booleans) still select their rows: every input row counts in
+    ``rows_scanned`` and every violation is written."""
+    df = _df(spark).withColumns(
+        {
+            "part": F.when(F.col("part") != "b", F.col("part")),  # c2 -> NULL
+            "flag": F.col("conv_id") == "c1",
+        }
+    )
+    for pcol in ("part", "flag"):
+        out = str(tmp_path / pcol)
+        run = ValidationRun(transcript_row_suite(), out, ["conv_id", "turn_idx"], pcol)
+        run.run(df, batch_size=2)
+        assert run.summary()["rows_scanned"] == 4, pcol
+        got = {
+            (r["conv_id"], r["path"], r["code"])
+            for r in spark.read.parquet(os.path.join(out, "violations")).collect()
+        }
+        assert got == {("c1", "role", "role_enum"), ("c2", "text", "text_required")}
+
+
 def test_manifest_snapshot_drift(spark, tmp_path):
     from fsharp_data_validation_spark.plans.manifest import (
         SnapshotDriftError,
@@ -206,20 +230,44 @@ def test_streaming_validation(spark, tmp_path):
     assert ("c2", "text", "text_required") in got
 
 
+def _fake_image_payload(width: int, height: int, channels: int, seed: int) -> bytes:
+    """Deterministic synthetic 'image': 5-byte header + seeded body."""
+    header = (
+        int(width).to_bytes(2, "big")
+        + int(height).to_bytes(2, "big")
+        + int(channels).to_bytes(1, "big")
+    )
+    rng = np.random.default_rng(seed)
+    body = rng.integers(0, 256, size=min(width * height, 256), dtype=np.uint8)
+    return header + body.tobytes()
+
+
+def _fake_video_payload(n_frames: int, width: int, height: int, seed: int) -> bytes:
+    """Deterministic RAWV container: 8-byte header ('RV' + BE uint16
+    n_frames/width/height) + n_frames contiguous w*h grayscale frames."""
+    header = (
+        RAWV_MAGIC
+        + int(n_frames).to_bytes(2, "big")
+        + int(width).to_bytes(2, "big")
+        + int(height).to_bytes(2, "big")
+    )
+    rng = np.random.default_rng(seed)
+    body = rng.integers(0, 256, size=n_frames * width * height, dtype=np.uint8)
+    return header + body.tobytes()
+
+
 def test_multimodal_plumbing(spark):
     from fsharp_data_validation_spark.operators.multimodal import (
         MEDIA_SCHEMA,
-        byte_histogram_features,
         decode_image_meta,
         frame_sample,
-        make_fake_image_payload,
     )
 
     rows = [
         Row(
             media_id=i,
             kind="image",
-            payload=make_fake_image_payload(64 + i, 32, 3, seed=i),
+            payload=_fake_image_payload(64 + i, 32, 3, seed=i),
             meta=Row(source="synthetic", n_bytes=0),
         )
         for i in range(5)
@@ -228,12 +276,6 @@ def test_multimodal_plumbing(spark):
     meta = {r["media_id"]: r for r in decode_image_meta(df).collect()}
     assert meta[0]["width"] == 64 and meta[4]["width"] == 68
     assert meta[0]["height"] == 32 and meta[0]["channels"] == 3
-    feats = {r["media_id"]: r["features"] for r in byte_histogram_features(df).collect()}
-    assert len(feats[0]) == 16
-    assert abs(sum(feats[0]) - 1.0) < 1e-9
-    # deterministic across runs
-    feats2 = {r["media_id"]: r["features"] for r in byte_histogram_features(df).collect()}
-    assert feats == feats2
     # image payloads are not a RAWV video container: the codec stub now
     # raises lazily, per payload, at execution time
     with pytest.raises(Exception, match="RAWV|NotImplementedError"):
@@ -263,6 +305,98 @@ def test_job_entry_main(spark, tmp_path):
     assert len(manifest) == 3
     doc = json.load(open(str(tmp_path / "job_out" / "manifest" / manifest[0])))
     assert doc["constraints_evaluated"] == 12
+
+
+# jobs/validate.py (argv[3:]) with ValidationRun._record wrapped: right after
+# the 9th record, the first of batch 2 at --batch-size 8 and so after that
+# batch's writes, the job process writes its JVM's pid to the file argv[2]
+# and SIGKILLs itself.
+_KILL_IN_BATCH_2 = """
+import os, signal, sys
+from pyspark import SparkContext
+from fsharp_data_validation_spark.plans.manifest import ValidationRun
+sys.path.insert(0, sys.argv[1])
+import validate
+record, calls = ValidationRun._record, []
+def _record(self, outcome, started):
+    record(self, outcome, started)
+    calls.append(outcome.partition)
+    if len(calls) == 9:
+        with open(sys.argv[2], "w") as f:
+            f.write(str(SparkContext._gateway.proc.pid))
+        os.kill(os.getpid(), signal.SIGKILL)
+ValidationRun._record = _record
+sys.exit(validate.main(sys.argv[3:]))
+"""
+
+
+def _job_outputs(spark, out):
+    """Row multisets of violations/, valid/ and reports/ and the manifest
+    documents without their timestamps."""
+    from collections import Counter
+
+    rows = {
+        d: Counter(
+            tuple(sorted(r.asDict().items()))
+            for r in spark.read.parquet(os.path.join(out, d)).collect()
+        )
+        for d in ("violations", "valid", "reports")
+    }
+    mdir = os.path.join(out, "manifest")
+    docs = {}
+    for name in os.listdir(mdir):
+        with open(os.path.join(mdir, name)) as f:
+            doc = json.load(f)
+        docs[doc.pop("partition")] = {
+            k: v for k, v in doc.items() if k not in ("started_at", "finished_at")
+        }
+    return rows, docs
+
+
+def _process_gone(pid, timeout_s=60):
+    import time
+
+    deadline = time.time() + timeout_s
+    while time.time() < deadline:
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                if f.read().rsplit(")", 1)[1].split()[0] == "Z":
+                    return True
+        except FileNotFoundError:
+            return True
+        time.sleep(0.5)
+    return False
+
+
+def test_job_killed_after_batch_writes_resumes_exactly(spark, tmp_path):
+    """SIGKILL the job right after the first manifest record of batch 2,
+    then resume on the same --output: every output's rows and every
+    manifest document equal an uninterrupted run's, and the killed
+    process's JVM does not outlive it. A run that recorded partitions
+    before writing their rows would resume past rows it never wrote."""
+    import signal
+    import subprocess
+    import sys
+
+    jobs = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "jobs")
+    sys.path.insert(0, jobs)
+    import validate as job
+
+    args = ["--events-dir", "/root/testdata/sf0.001", "--batch-size", "8",
+            "--emit-valid", "--emit-reports", "--output"]
+    whole, resumed = str(tmp_path / "whole"), str(tmp_path / "resumed")
+    assert job.main(args + [whole]) == 0
+    pid_file = str(tmp_path / "jvm.pid")
+    killed = subprocess.run(
+        [sys.executable, "-c", _KILL_IN_BATCH_2, jobs, pid_file, *args, resumed],
+        cwd=os.path.dirname(jobs), capture_output=True, timeout=600,
+    )
+    assert killed.returncode == -signal.SIGKILL, killed.stderr.decode()[-2000:]
+    assert len(os.listdir(os.path.join(resumed, "manifest"))) == 9
+    with open(pid_file) as f:
+        assert _process_gone(int(f.read()))
+    assert job.main(args + [resumed]) == 0
+    assert _job_outputs(spark, resumed) == _job_outputs(spark, whole)
 
 
 def test_manifest_emit_reports(spark, tmp_path):
@@ -445,13 +579,10 @@ def test_frame_sample_rawv_extraction(spark):
     yield nothing, and compressed/unknown containers raise (stubbed codec)."""
     from pyspark.sql.types import BinaryType, LongType
 
-    from fsharp_data_validation_spark.operators.multimodal import (
-        frame_sample,
-        make_fake_video_payload,
-    )
+    from fsharp_data_validation_spark.operators.multimodal import frame_sample
 
-    p1 = make_fake_video_payload(7, 8, 6, seed=1)   # 7 frames of 48 bytes
-    p2 = make_fake_video_payload(1, 4, 4, seed=2)
+    p1 = _fake_video_payload(7, 8, 6, seed=1)   # 7 frames of 48 bytes
+    p2 = _fake_video_payload(1, 4, 4, seed=2)
     schema = StructType(
         [StructField("media_id", LongType()), StructField("payload", BinaryType())]
     )
@@ -524,29 +655,6 @@ def test_partition_pinned_drift_revalidates_exactly(spark, tmp_path):
     assert {p: d["input_snapshot"] for p, d in docs.items()} == pins2
     # untouched partitions kept their original manifest timestamps/pins
     assert docs["a"]["input_snapshot"] == pins1["a"]
-
-
-def test_write_bucketed_records_snapshot(spark, tmp_path):
-    """The write path records the snapshot it produced (_snapshot.json,
-    invisible to readers and excluded from the pin); a rewrite changes it,
-    closing the produce->pin->drift loop end-to-end."""
-    import json as jsonlib
-
-    from fsharp_data_validation_spark.plans.manifest import parquet_snapshot
-    from fsharp_data_validation_spark.sources.transcripts import write_bucketed
-
-    loc = str(tmp_path / "bt")
-    df = _df(spark).select("conv_id", "turn_idx", "text")
-    name, snap = write_bucketed(df, "t_snap", "conv_id", 4, path=loc)
-    assert name == "t_snap" and snap == parquet_snapshot(loc)
-    doc = jsonlib.load(open(os.path.join(loc, "_snapshot.json")))
-    assert doc["snapshot"] == snap and doc["table"] == "t_snap"
-    # reading back ignores the sidecar; rewrite produces a NEW snapshot
-    assert spark.table("t_snap").count() == df.count()
-    spark.sql("DROP TABLE t_snap")
-    _, snap2 = write_bucketed(df, "t_snap", "conv_id", 4, path=loc)
-    assert snap2 != snap
-    spark.sql("DROP TABLE t_snap")
 
 
 def test_job_profile_flag(spark, tmp_path):

@@ -1,16 +1,11 @@
-"""Valid-branch serialization parity: Spark ``valid_json_column`` must
-byte-match the kernel ``render_proof_json(Valid(row))``, which is
-itself pinned to the reference's ``ProofConverter.Write`` Valid arm
-(/root/reference/src/FSharp.Data.Validation/Proof.fs:74-79; golden at
-Tests/Proof.fs:92-101)."""
-
-from datetime import datetime
-
-import pytest
+"""Valid-branch serialization in the kernel: ``render_proof_json(Valid(..))``
+and its System.Text.Json-compatible encoder ``dumps_stj``, pinned to the
+reference's ``ProofConverter.Write`` Valid arm (Proof.fs:74-79; golden at
+Tests/Proof.fs:92-101). The Valid branch is kernel-only: the Spark job
+writes valid rows as parquet, not as JSON documents."""
 
 from fsharp_data_validation_spark.core.proof import Valid
 from fsharp_data_validation_spark.core.serialize import dumps_stj, render_proof_json
-from fsharp_data_validation_spark.functions.valid_json import valid_json_column
 
 
 def test_reference_valid_golden_kernel():
@@ -37,48 +32,3 @@ def test_dumps_stj_scalars_and_nesting():
     assert dumps_stj({"k": {"n": "é"}}) == '{"k":{"n":"\\u00e9"}}'
     # astral chars render as a UTF-16 surrogate pair, like System.Text.Json
     assert dumps_stj("x\U0001F600y") == '"x\\ud83d\\ude00y"'
-
-
-HOSTILE_ROWS = [
-    # (conv_id, turn_idx, role, text, tool, ts)
-    ("c1", 0, "system", "plain ascii only", None, datetime(2026, 1, 1, 8, 0, 0)),
-    ("c2", 1, "user", 'quote " backslash \\ done', "t1", datetime(2026, 1, 1, 8, 0, 1)),
-    ("c3", 2, "assistant", "html <b>&amp;</b> 'x' + `y`", None, None),
-    ("c4", 3, "tool", "unicode é ñ 中文 end", "t2", datetime(2026, 1, 2, 9, 30, 5)),
-    ("c5", 4, "user", "ctl\ttab\nnl\rcr\x08b\x0cf\x01raw", None, datetime(2026, 1, 3)),
-    ("c6", 5, "assistant", "astral \U0001F600 pair", "t3", datetime(2026, 1, 4)),
-    ("c7", 6, "user", "", "t4", datetime(2026, 1, 5, 1, 2, 3, 123456)),
-]
-
-
-@pytest.fixture(scope="module")
-def hostile_df(spark):
-    return spark.createDataFrame(
-        HOSTILE_ROWS, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-    )
-
-
-def test_spark_valid_json_matches_kernel(spark, hostile_df):
-    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-    got = {
-        r["conv_id"]: r["j"]
-        for r in hostile_df.select(
-            "conv_id", valid_json_column(hostile_df).alias("j")
-        ).collect()
-    }
-    for row in HOSTILE_ROWS:
-        d = dict(zip(cols, row))
-        expected = render_proof_json(Valid(d))
-        assert got[d["conv_id"]] == expected, d["conv_id"]
-
-
-def test_spark_valid_json_field_subset_and_escaped_names(spark, hostile_df):
-    df = hostile_df.withColumnRenamed("text", "te<xt")
-    out = df.select(valid_json_column(df, ["conv_id", "te<xt"]).alias("j")).collect()
-    expected = {
-        render_proof_json(
-            Valid({"conv_id": r[0], "te<xt": r[3]})
-        )
-        for r in HOSTILE_ROWS
-    }
-    assert {r["j"] for r in out} == expected
