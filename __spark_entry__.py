@@ -384,112 +384,123 @@ WHERE text IS NOT NULL AND CAST(FLOOR(epoch(ts)) AS BIGINT) {op} (SELECT mid FRO
 GROUP BY 1
 """
 
+#: (head, histogram, separator) of a first-half/second-half split: the
+#: head defines the epoch midpoint ``m``, the histogram template the
+#: ``{op}`` side of it; the separator between ``ha`` and ``hb`` is
+#: whitespace only, so each oracle keeps its attested text
+_LEN_SPLIT = (f"\n, m AS ({_MID_SQL})\n", _HIST_SQL, " ")
 
-@query(with_transcripts(
-    f"""
-            , m AS ({_MID_SQL})
-            , ha AS ({_HIST_SQL.format(op='<')})
-            , hb AS ({_HIST_SQL.format(op='>=')})
-            , j AS (
-              SELECT COALESCE(ha.bucket, hb.bucket) AS bucket,
-                     COALESCE(ha.n, 0) AS na, COALESCE(hb.n, 0) AS nb
-              FROM ha FULL OUTER JOIN hb ON ha.bucket = hb.bucket
-            )
-            SELECT ROUND(SUM((p - q) * LN(p / q)), 4) AS psi FROM (
-              SELECT GREATEST(na * 1.0 / (SELECT SUM(na) FROM j), 1e-6) AS p,
-                     GREATEST(nb * 1.0 / (SELECT SUM(nb) FROM j), 1e-6) AS q
-              FROM j
-            ) t
-            """
-))
+#: ``ha`` and ``hb`` outer-joined over the buckets either half has
+_J_SQL = """
+, j AS (
+  SELECT COALESCE(ha.bucket, hb.bucket) AS bucket,
+         COALESCE(ha.n, 0) AS na, COALESCE(hb.n, 0) AS nb
+  FROM ha FULL OUTER JOIN hb ON ha.bucket = hb.bucket
+)
+"""
+
+
+def _split_drift_oracle(
+    split: tuple[str, str, str], stat_sql: str, j_sql: str = _J_SQL
+) -> str:
+    """Drift between the halves of ``split``: the ``j`` of bucket counts
+    ``na``/``nb`` that ``stat_sql`` reads."""
+    head, hist, sep = split
+    return with_transcripts(
+        head
+        + f", ha AS ({hist.format(op='<')}){sep}, hb AS ({hist.format(op='>=')})"
+        + j_sql
+        + stat_sql
+    )
+
+
+def _len_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Turn-length histograms (10-char buckets, 20 of them) of the first and
+    second half by event time, from ONE conditional aggregate
+    (split_histograms); the epoch midpoint is a broadcast scalar subplan,
+    not a driver collect."""
+    t = _transcripts(spark, sf_dir).select(F.length("text").alias("text_len"), "ts")
+    return split_histograms(t, "text_len", "ts", 10.0, 20)
+
+
+_PSI_FROM_J = """
+SELECT ROUND(SUM((p - q) * LN(p / q)), 4) AS psi FROM (
+  SELECT GREATEST(na * 1.0 / (SELECT SUM(na) FROM j), 1e-6) AS p,
+         GREATEST(nb * 1.0 / (SELECT SUM(nb) FROM j), 1e-6) AS q
+  FROM j
+) t
+"""
+
+
+@query(_split_drift_oracle(_LEN_SPLIT, _PSI_FROM_J))
 def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PSI on turn-length histograms, first half vs second half by event
-    time (epsilon-clamped closed form over bucketed proportions). Both
-    halves come from ONE conditional aggregate (split_histograms); the
-    epoch midpoint is a broadcast scalar subplan, not a driver collect."""
-    t = _transcripts(spark, sf_dir).select(F.length("text").alias("text_len"), "ts")
-    return psi_joined(split_histograms(t, "text_len", "ts", 10.0, 20))
+    time (epsilon-clamped closed form over bucketed proportions)."""
+    return psi_joined(_len_halves(spark, sf_dir))
 
 
-@query(with_transcripts(
-    f"""
-            , m AS ({_MID_SQL})
-            , ha AS ({_HIST_SQL.format(op='<')})
-            , hb AS ({_HIST_SQL.format(op='>=')})
-            , j AS (
-              SELECT COALESCE(ha.bucket, hb.bucket) AS bucket,
-                     COALESCE(ha.n, 0) AS na, COALESCE(hb.n, 0) AS nb
-              FROM ha FULL OUTER JOIN hb ON ha.bucket = hb.bucket
-            )
-            SELECT ROUND(MAX(ABS(ca * 1.0 / (SELECT SUM(na) FROM j)
-                               - cb * 1.0 / (SELECT SUM(nb) FROM j))), 4) AS ks
-            FROM (
-              SELECT SUM(na) OVER (ORDER BY bucket) AS ca,
-                     SUM(nb) OVER (ORDER BY bucket) AS cb
-              FROM j
-            ) t
-            """
-))
+_KS_FROM_J = """
+SELECT ROUND(MAX(ABS(ca * 1.0 / (SELECT SUM(na) FROM j)
+                   - cb * 1.0 / (SELECT SUM(nb) FROM j))), 4) AS ks
+FROM (
+  SELECT SUM(na) OVER (ORDER BY bucket) AS ca,
+         SUM(nb) OVER (ORDER BY bucket) AS cb
+  FROM j
+) t
+"""
+
+
+@query(_split_drift_oracle(_LEN_SPLIT, _KS_FROM_J))
 def q_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KS statistic on the same split (max |ECDF diff| over buckets)."""
-    t = _transcripts(spark, sf_dir).select(F.length("text").alias("text_len"), "ts")
-    return ks_joined(split_histograms(t, "text_len", "ts", 10.0, 20))
+    return ks_joined(_len_halves(spark, sf_dir))
 
 
-@query(with_transcripts(
-    f"""
-            , m AS ({_MID_SQL})
-            , ha AS ({_HIST_SQL.format(op='<')})
-            , hb AS ({_HIST_SQL.format(op='>=')})
-            , j AS (
-              SELECT COALESCE(ha.bucket, hb.bucket) AS bucket,
-                     COALESCE(ha.n, 0) AS na, COALESCE(hb.n, 0) AS nb
-              FROM ha FULL OUTER JOIN hb ON ha.bucket = hb.bucket
-            )
-            SELECT ROUND(SUM(0.5 * p * LN(p / ((p + q) / 2))
-                           + 0.5 * q * LN(q / ((p + q) / 2))), 4) AS js FROM (
-              SELECT GREATEST(na * 1.0 / (SELECT SUM(na) FROM j), 1e-6) AS p,
-                     GREATEST(nb * 1.0 / (SELECT SUM(nb) FROM j), 1e-6) AS q
-              FROM j
-            ) t
-            """
-))
+_JS_FROM_J = """
+SELECT ROUND(SUM(0.5 * p * LN(p / ((p + q) / 2))
+               + 0.5 * q * LN(q / ((p + q) / 2))), 4) AS js FROM (
+  SELECT GREATEST(na * 1.0 / (SELECT SUM(na) FROM j), 1e-6) AS p,
+         GREATEST(nb * 1.0 / (SELECT SUM(nb) FROM j), 1e-6) AS q
+  FROM j
+) t
+"""
+
+
+@query(_split_drift_oracle(_LEN_SPLIT, _JS_FROM_J))
 def q_js_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jensen-Shannon divergence on the same split (bounded, symmetric —
     operators/drift.py:js_joined)."""
-    t = _transcripts(spark, sf_dir).select(F.length("text").alias("text_len"), "ts")
-    return js_joined(split_histograms(t, "text_len", "ts", 10.0, 20))
+    return js_joined(_len_halves(spark, sf_dir))
 
 
-@query(with_transcripts(
-    f"""
-            , m AS ({_MID_SQL})
-            , ha AS ({_HIST_SQL.format(op='<')})
-            , hb AS ({_HIST_SQL.format(op='>=')})
-            , grid AS (SELECT unnest(range(0, 20)) AS bucket)
-            , j AS (
-              SELECT grid.bucket,
-                     COALESCE(ha.n, 0) AS na, COALESCE(hb.n, 0) AS nb
-              FROM grid LEFT JOIN ha ON ha.bucket = grid.bucket
-                        LEFT JOIN hb ON hb.bucket = grid.bucket
-            )
-            SELECT ROUND(SUM(ABS(ca * 1.0 / (SELECT SUM(na) FROM j)
-                               - cb * 1.0 / (SELECT SUM(nb) FROM j))) * 10.0, 4) AS w1
-            FROM (
-              SELECT SUM(na) OVER (ORDER BY bucket) AS ca,
-                     SUM(nb) OVER (ORDER BY bucket) AS cb
-              FROM j
-            ) t
-            """
-))
+_W1_FROM_J = """
+SELECT ROUND(SUM(ABS(ca * 1.0 / (SELECT SUM(na) FROM j)
+                   - cb * 1.0 / (SELECT SUM(nb) FROM j))) * 10.0, 4) AS w1
+FROM (
+  SELECT SUM(na) OVER (ORDER BY bucket) AS ca,
+         SUM(nb) OVER (ORDER BY bucket) AS cb
+  FROM j
+) t
+"""
+
+
+# W1 is a sum over the bucket grid, so j is the densified 20-bucket spine
+@query(_split_drift_oracle(_LEN_SPLIT, _W1_FROM_J, """
+, grid AS (SELECT unnest(range(0, 20)) AS bucket)
+, j AS (
+  SELECT grid.bucket,
+         COALESCE(ha.n, 0) AS na, COALESCE(hb.n, 0) AS nb
+  FROM grid LEFT JOIN ha ON ha.bucket = grid.bucket
+            LEFT JOIN hb ON hb.bucket = grid.bucket
+)
+"""))
 def q_w1_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wasserstein-1 (earth-mover) distance on the same split — integral of
     |CDF difference| over the DENSIFIED bucket grid
     (operators/drift.py:w1_joined)."""
     from fsharp_data_validation_spark.operators.drift import w1_joined
 
-    t = _transcripts(spark, sf_dir).select(F.length("text").alias("text_len"), "ts")
-    return w1_joined(split_histograms(t, "text_len", "ts", 10.0, 20), 20, 10.0)
+    return w1_joined(_len_halves(spark, sf_dir), 20, 10.0)
 
 
 def _ts_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -531,32 +542,10 @@ WHERE CAST(FLOOR(epoch(ts)) AS BIGINT) {op} (SELECT mid FROM m)
 GROUP BY 1
 """
 
-_PSI_FROM_J = """
-SELECT ROUND(SUM((p - q) * LN(p / q)), 4) AS psi FROM (
-  SELECT GREATEST(na * 1.0 / (SELECT SUM(na) FROM j), 1e-6) AS p,
-         GREATEST(nb * 1.0 / (SELECT SUM(nb) FROM j), 1e-6) AS q
-  FROM j
-) t
-"""
+_GAP_SPLIT = (_GAPS_SQL, _GAP_HIST_SQL, "")
 
 
-def _gap_drift_oracle(stat_sql: str) -> str:
-    return with_transcripts(
-        _GAPS_SQL
-        + f", ha AS ({_GAP_HIST_SQL.format(op='<')})"
-        + f", hb AS ({_GAP_HIST_SQL.format(op='>=')})"
-        + """
-        , j AS (
-          SELECT COALESCE(ha.bucket, hb.bucket) AS bucket,
-                 COALESCE(ha.n, 0) AS na, COALESCE(hb.n, 0) AS nb
-          FROM ha FULL OUTER JOIN hb ON ha.bucket = hb.bucket
-        )
-        """
-        + stat_sql
-    )
-
-
-@query(_gap_drift_oracle(_PSI_FROM_J))
+@query(_split_drift_oracle(_GAP_SPLIT, _PSI_FROM_J))
 def q_ts_gap_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PSI drift on ts-gap histograms (1h buckets), first vs second half —
     same one-aggregate split shape as q_psi_drift."""
@@ -564,22 +553,21 @@ def q_ts_gap_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     return psi_joined(split_histograms(g, "gap_s", "ts", 3600.0, 24))
 
 
-_KS_FROM_J = """
-SELECT ROUND(MAX(ABS(ca * 1.0 / (SELECT SUM(na) FROM j)
-                   - cb * 1.0 / (SELECT SUM(nb) FROM j))), 4) AS ks
-FROM (
-  SELECT SUM(na) OVER (ORDER BY bucket) AS ca,
-         SUM(nb) OVER (ORDER BY bucket) AS cb
-  FROM j
-) t
-"""
-
-
-@query(_gap_drift_oracle(_KS_FROM_J))
+@query(_split_drift_oracle(_GAP_SPLIT, _KS_FROM_J))
 def q_ts_gap_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KS drift on the same ts-gap split."""
     g = _ts_gaps(spark, sf_dir)
     return ks_joined(split_histograms(g, "gap_s", "ts", 3600.0, 24))
+
+
+def _day_text_len(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Non-null turns as (part_date, text_len): the input of every per-day
+    turn-length profile and drift query."""
+    return (
+        _transcripts(spark, sf_dir)
+        .filter(F.col("text").isNotNull())
+        .select(F.to_date("ts").alias("part_date"), F.length("text").alias("text_len"))
+    )
 
 
 @query(with_transcripts(
@@ -596,36 +584,50 @@ def q_quantiles_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, so this is one shuffle at any scale)."""
     from fsharp_data_validation_spark.operators.stats import exact_quantiles_by_group
 
-    t = (
-        _transcripts(spark, sf_dir)
-        .filter(F.col("text").isNotNull())
-        .select(F.to_date("ts").alias("part_date"), F.length("text").alias("text_len"))
+    return exact_quantiles_by_group(
+        _day_text_len(spark, sf_dir), "part_date", "text_len", [0.5, 0.95]
     )
-    return exact_quantiles_by_group(t, "part_date", "text_len", [0.5, 0.95])
 
+
+#: per-day turn-length counts ``per`` (25-char buckets, 20 of them), the
+#: whole-table baseline ``gbase``, per-day totals ``tg`` and the grand total
+#: ``tot``: what every per-day drift oracle compares
+_PER_DAY_SQL = """
+, per AS (
+  SELECT CAST(ts AS DATE) AS grp,
+         LEAST(GREATEST(CAST(FLOOR(length(text) / 25.0) AS INT), 0), 19) AS bucket,
+         COUNT(*) AS n
+  FROM transcripts WHERE text IS NOT NULL GROUP BY 1, 2
+), gbase AS (SELECT bucket, SUM(n) AS gn FROM per GROUP BY 1),
+tg AS (SELECT grp, SUM(n) AS tg FROM per GROUP BY 1),
+tot AS (SELECT SUM(n) AS t FROM per),
+"""
+
+
+def _by_day_oracle(stat_sql: str) -> str:
+    """Per-day drift of turn length vs the whole-table baseline: ``stat_sql``
+    continues the CTE list after ``_PER_DAY_SQL``."""
+    return with_transcripts(_PER_DAY_SQL + stat_sql)
+
+
+#: each day's bucket count ``n`` beside the baseline's ``gn``, over the
+#: buckets the baseline has (psi and js)
+_DAY_J_SQL = """
+grid AS (SELECT tg.grp, tg.tg, gbase.bucket, gbase.gn FROM tg CROSS JOIN gbase),
+j AS (
+  SELECT g.grp, g.tg, g.gn, COALESCE(per.n, 0) AS n
+  FROM grid g LEFT JOIN per ON per.grp = g.grp AND per.bucket = g.bucket
+)"""
 
 #: shared by psi_by_day (batch) and stream_psi (streaming)
-_PSI_BY_DAY_ORACLE = with_transcripts(
-    """
-            , per AS (
-              SELECT CAST(ts AS DATE) AS grp,
-                     LEAST(GREATEST(CAST(FLOOR(length(text) / 25.0) AS INT), 0), 19) AS bucket,
-                     COUNT(*) AS n
-              FROM transcripts WHERE text IS NOT NULL GROUP BY 1, 2
-            ), gbase AS (SELECT bucket, SUM(n) AS gn FROM per GROUP BY 1),
-            tg AS (SELECT grp, SUM(n) AS tg FROM per GROUP BY 1),
-            tot AS (SELECT SUM(n) AS t FROM per),
-            grid AS (SELECT tg.grp, tg.tg, gbase.bucket, gbase.gn FROM tg CROSS JOIN gbase),
-            j AS (
-              SELECT g.grp, g.tg, g.gn, COALESCE(per.n, 0) AS n
-              FROM grid g LEFT JOIN per ON per.grp = g.grp AND per.bucket = g.bucket
-            )
-            SELECT grp AS part_date, CAST(MIN(tg) AS BIGINT) AS n_rows,
-                   ROUND(SUM((GREATEST(n * 1.0 / tg, 0.000001) - GREATEST(gn * 1.0 / t, 0.000001))
-                             * LN(GREATEST(n * 1.0 / tg, 0.000001)
-                                  / GREATEST(gn * 1.0 / t, 0.000001))), 4) AS psi
-            FROM j CROSS JOIN tot GROUP BY grp
-            """
+_PSI_BY_DAY_ORACLE = _by_day_oracle(
+    _DAY_J_SQL + """
+SELECT grp AS part_date, CAST(MIN(tg) AS BIGINT) AS n_rows,
+       ROUND(SUM((GREATEST(n * 1.0 / tg, 0.000001) - GREATEST(gn * 1.0 / t, 0.000001))
+                 * LN(GREATEST(n * 1.0 / tg, 0.000001)
+                      / GREATEST(gn * 1.0 / t, 0.000001))), 4) AS psi
+FROM j CROSS JOIN tot GROUP BY grp
+"""
 )
 
 
@@ -636,91 +638,55 @@ def q_psi_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift check (one scan, grid-complete closed form)."""
     from fsharp_data_validation_spark.operators.drift import psi_by_group
 
-    t = (
-        _transcripts(spark, sf_dir)
-        .filter(F.col("text").isNotNull())
-        .select(F.to_date("ts").alias("part_date"), F.length("text").alias("text_len"))
-    )
-    return psi_by_group(t, "part_date", "text_len", 25.0, 20)
+    return psi_by_group(_day_text_len(spark, sf_dir), "part_date", "text_len", 25.0, 20)
 
 
-@query(with_transcripts(
-    """
-            , per AS (
-              SELECT CAST(ts AS DATE) AS grp,
-                     LEAST(GREATEST(CAST(FLOOR(length(text) / 25.0) AS INT), 0), 19) AS bucket,
-                     COUNT(*) AS n
-              FROM transcripts WHERE text IS NOT NULL GROUP BY 1, 2
-            ), gbase AS (SELECT bucket, SUM(n) AS gn FROM per GROUP BY 1),
-            tg AS (SELECT grp, SUM(n) AS tg FROM per GROUP BY 1),
-            tot AS (SELECT SUM(n) AS t FROM per),
-            grid AS (SELECT tg.grp, tg.tg, gbase.bucket, gbase.gn FROM tg CROSS JOIN gbase),
-            j AS (
-              SELECT g.grp, g.tg, g.gn, COALESCE(per.n, 0) AS n
-              FROM grid g LEFT JOIN per ON per.grp = g.grp AND per.bucket = g.bucket
-            ), pq AS (
-              SELECT grp, tg,
-                     GREATEST(n * 1.0 / tg, 0.000001) AS p,
-                     GREATEST(gn * 1.0 / t, 0.000001) AS q
-              FROM j CROSS JOIN tot
-            )
-            SELECT grp AS part_date, CAST(MIN(tg) AS BIGINT) AS n_rows,
-                   ROUND(SUM(0.5 * p * LN(p / ((p + q) / 2))
-                           + 0.5 * q * LN(q / ((p + q) / 2))), 4) AS js
-            FROM pq GROUP BY grp
-            """
+@query(_by_day_oracle(
+    _DAY_J_SQL + """, pq AS (
+  SELECT grp, tg,
+         GREATEST(n * 1.0 / tg, 0.000001) AS p,
+         GREATEST(gn * 1.0 / t, 0.000001) AS q
+  FROM j CROSS JOIN tot
+)
+SELECT grp AS part_date, CAST(MIN(tg) AS BIGINT) AS n_rows,
+       ROUND(SUM(0.5 * p * LN(p / ((p + q) / 2))
+               + 0.5 * q * LN(q / ((p + q) / 2))), 4) AS js
+FROM pq GROUP BY grp
+"""
 ))
 def q_js_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-day Jensen-Shannon divergence vs the whole-table baseline
     (one-scan grid shape, operators/drift.py:js_by_group)."""
     from fsharp_data_validation_spark.operators.drift import js_by_group
 
-    t = (
-        _transcripts(spark, sf_dir)
-        .filter(F.col("text").isNotNull())
-        .select(F.to_date("ts").alias("part_date"), F.length("text").alias("text_len"))
-    )
-    return js_by_group(t, "part_date", "text_len", 25.0, 20)
+    return js_by_group(_day_text_len(spark, sf_dir), "part_date", "text_len", 25.0, 20)
 
 
-@query(with_transcripts(
+@query(_by_day_oracle(
     """
-            , per AS (
-              SELECT CAST(ts AS DATE) AS grp,
-                     LEAST(GREATEST(CAST(FLOOR(length(text) / 25.0) AS INT), 0), 19) AS bucket,
-                     COUNT(*) AS n
-              FROM transcripts WHERE text IS NOT NULL GROUP BY 1, 2
-            ), gbase AS (SELECT bucket, SUM(n) AS gn FROM per GROUP BY 1),
-            tg AS (SELECT grp, SUM(n) AS tg FROM per GROUP BY 1),
-            tot AS (SELECT SUM(n) AS t FROM per),
-            grid AS (SELECT tg.grp, tg.tg, gbase.bucket, gbase.gn FROM tg CROSS JOIN gbase),
-            j AS (
-              SELECT g.grp, g.tg, g.bucket, g.gn, COALESCE(per.n, 0) AS n
-              FROM grid g LEFT JOIN per ON per.grp = g.grp AND per.bucket = g.bucket
-            ), c AS (
-              SELECT grp, tg,
-                     SUM(n) OVER (PARTITION BY grp ORDER BY bucket
-                                  ROWS UNBOUNDED PRECEDING) AS cn,
-                     SUM(gn) OVER (PARTITION BY grp ORDER BY bucket
-                                   ROWS UNBOUNDED PRECEDING) AS cgn
-              FROM j
-            )
-            SELECT grp AS part_date, CAST(MIN(tg) AS BIGINT) AS n_rows,
-                   ROUND(MAX(ABS(cn * 1.0 / tg - cgn * 1.0 / (SELECT t FROM tot))), 4) AS ks
-            FROM c GROUP BY grp
-            """
+grid AS (SELECT tg.grp, tg.tg, gbase.bucket, gbase.gn FROM tg CROSS JOIN gbase),
+j AS (
+  SELECT g.grp, g.tg, g.bucket, g.gn, COALESCE(per.n, 0) AS n
+  FROM grid g LEFT JOIN per ON per.grp = g.grp AND per.bucket = g.bucket
+), c AS (
+  SELECT grp, tg,
+         SUM(n) OVER (PARTITION BY grp ORDER BY bucket
+                      ROWS UNBOUNDED PRECEDING) AS cn,
+         SUM(gn) OVER (PARTITION BY grp ORDER BY bucket
+                       ROWS UNBOUNDED PRECEDING) AS cgn
+  FROM j
+)
+SELECT grp AS part_date, CAST(MIN(tg) AS BIGINT) AS n_rows,
+       ROUND(MAX(ABS(cn * 1.0 / tg - cgn * 1.0 / (SELECT t FROM tot))), 4) AS ks
+FROM c GROUP BY grp
+"""
 ))
 def q_ks_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-partition KS: each day's turn-length ECDF vs the whole-table
     baseline (same one-scan grid shape as psi_by_day)."""
     from fsharp_data_validation_spark.operators.drift import ks_by_group
 
-    t = (
-        _transcripts(spark, sf_dir)
-        .filter(F.col("text").isNotNull())
-        .select(F.to_date("ts").alias("part_date"), F.length("text").alias("text_len"))
-    )
-    return ks_by_group(t, "part_date", "text_len", 25.0, 20)
+    return ks_by_group(_day_text_len(spark, sf_dir), "part_date", "text_len", 25.0, 20)
 
 
 @query(with_transcripts(
@@ -1153,24 +1119,36 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# shingle sets + exact-Jaccard pairs in DuckDB (oracle for both the exact
-# inverted-index query AND the LSH+verify query — high-recall banding means
-# they agree)
-_JACCARD_ORACLE = """
+#: the 3-word shingles of the word list ``w``, and their distinct set
+_SHINGLE_LIST_SQL = "[w[i] || ' ' || w[i+1] || ' ' || w[i+2] for i in range(1, len(w) - 1)]"
+_SHINGLES_SQL = f"list_distinct({_SHINGLE_LIST_SQL})"
+
+#: shingle set ``sh`` of every doc with at least 3 words
+_DOC_SHINGLES_SQL = f"""
 , d AS (
-  SELECT doc_id,
-         list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                        for i in range(1, len(w) - 1)]) AS sh
+  SELECT doc_id, {_SHINGLES_SQL} AS sh
   FROM (SELECT doc_id, string_split(text, ' ') AS w FROM docs)
   WHERE len(w) >= 3
+)"""
+
+#: exact Jaccard similarity of the shingle sets of ``a`` and ``b``
+_JACCARD_SQL = (
+    "len(list_intersect(a.sh, b.sh)) * 1.0 / "
+    "(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))"
 )
-SELECT id_a, id_b, sim FROM (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         ROUND(len(list_intersect(a.sh, b.sh)) * 1.0 /
-               (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) AS sim
+
+#: doc pairs of Jaccard similarity >= 0.8, ``id_a < id_b``
+_PAIRS_SQL = f"""
+FROM (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b, ROUND({_JACCARD_SQL}, 6) AS sim
   FROM d a JOIN d b ON a.doc_id < b.doc_id
 ) p WHERE sim >= 0.8
 """
+
+# shingle sets + exact-Jaccard pairs in DuckDB (oracle for both the exact
+# inverted-index query AND the LSH+verify query — high-recall banding means
+# they agree)
+_JACCARD_ORACLE = _DOC_SHINGLES_SQL + "\nSELECT id_a, id_b, sim" + _PAIRS_SQL
 
 
 @query(with_docs(_JACCARD_ORACLE), quadratic=True)
@@ -1203,21 +1181,10 @@ def q_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 # docs CTE instead of using with_docs().)
 _COMPONENTS_ORACLE = (
     "WITH RECURSIVE docs AS (" + _DOCS_SQL + ")"
-    + """
-, d AS (
-  SELECT doc_id,
-         list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                        for i in range(1, len(w) - 1)]) AS sh
-  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM docs)
-  WHERE len(w) >= 3
-), pairs AS (
-  SELECT id_a, id_b FROM (
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           ROUND(len(list_intersect(a.sh, b.sh)) * 1.0 /
-                 (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) AS sim
-    FROM d a JOIN d b ON a.doc_id < b.doc_id
-  ) p WHERE sim >= 0.8
-), sym AS (
+    + _DOC_SHINGLES_SQL
+    + ", pairs AS (\nSELECT id_a, id_b"
+    + _PAIRS_SQL
+    + """), sym AS (
   SELECT id_a AS src, id_b AS dst FROM pairs
   UNION ALL
   SELECT id_b AS src, id_a AS dst FROM pairs
@@ -1400,34 +1367,26 @@ def q_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: shared by w1_by_day (batch) and stream_w1 (streaming)
-_W1_BY_DAY_ORACLE = with_transcripts(
+_W1_BY_DAY_ORACLE = _by_day_oracle(
     """
-            , per AS (
-              SELECT CAST(ts AS DATE) AS grp,
-                     LEAST(GREATEST(CAST(FLOOR(length(text) / 25.0) AS INT), 0), 19) AS bucket,
-                     COUNT(*) AS n
-              FROM transcripts WHERE text IS NOT NULL GROUP BY 1, 2
-            ), gbase AS (SELECT bucket, SUM(n) AS gn FROM per GROUP BY 1),
-            tg AS (SELECT grp, SUM(n) AS tg FROM per GROUP BY 1),
-            tot AS (SELECT SUM(n) AS t FROM per),
-            spine AS (SELECT unnest(range(0, 20)) AS bucket),
-            grid AS (SELECT tg.grp, tg.tg, s.bucket FROM tg CROSS JOIN spine s),
-            j AS (
-              SELECT g.grp, g.tg, g.bucket,
-                     COALESCE(gb.gn, 0) AS gn, COALESCE(per.n, 0) AS n
-              FROM grid g LEFT JOIN gbase gb ON gb.bucket = g.bucket
-                          LEFT JOIN per ON per.grp = g.grp AND per.bucket = g.bucket
-            ),
-            c AS (
-              SELECT grp, tg,
-                     SUM(n) OVER (PARTITION BY grp ORDER BY bucket) AS cn,
-                     SUM(gn) OVER (PARTITION BY grp ORDER BY bucket) AS cg
-              FROM j
-            )
-            SELECT grp AS part_date, CAST(MIN(tg) AS BIGINT) AS n_rows,
-                   ROUND(SUM(ABS(cn * 1.0 / tg - cg * 1.0 / (SELECT t FROM tot))) * 25.0, 4) AS w1
-            FROM c GROUP BY grp
-            """
+spine AS (SELECT unnest(range(0, 20)) AS bucket),
+grid AS (SELECT tg.grp, tg.tg, s.bucket FROM tg CROSS JOIN spine s),
+j AS (
+  SELECT g.grp, g.tg, g.bucket,
+         COALESCE(gb.gn, 0) AS gn, COALESCE(per.n, 0) AS n
+  FROM grid g LEFT JOIN gbase gb ON gb.bucket = g.bucket
+              LEFT JOIN per ON per.grp = g.grp AND per.bucket = g.bucket
+),
+c AS (
+  SELECT grp, tg,
+         SUM(n) OVER (PARTITION BY grp ORDER BY bucket) AS cn,
+         SUM(gn) OVER (PARTITION BY grp ORDER BY bucket) AS cg
+  FROM j
+)
+SELECT grp AS part_date, CAST(MIN(tg) AS BIGINT) AS n_rows,
+       ROUND(SUM(ABS(cn * 1.0 / tg - cg * 1.0 / (SELECT t FROM tot))) * 25.0, 4) AS w1
+FROM c GROUP BY grp
+"""
 )
 
 
@@ -1439,12 +1398,7 @@ def q_w1_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/drift.py:w1_by_group)."""
     from fsharp_data_validation_spark.operators.drift import w1_by_group
 
-    t = (
-        _transcripts(spark, sf_dir)
-        .filter(F.col("text").isNotNull())
-        .select(F.to_date("ts").alias("part_date"), F.length("text").alias("text_len"))
-    )
-    return w1_by_group(t, "part_date", "text_len", 25.0, 20)
+    return w1_by_group(_day_text_len(spark, sf_dir), "part_date", "text_len", 25.0, 20)
 
 
 @query(with_transcripts(
@@ -1516,12 +1470,7 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant of z-score outlier checks."""
     from fsharp_data_validation_spark.operators.stats import mad_outliers_by_group
 
-    t = (
-        _transcripts(spark, sf_dir)
-        .filter(F.col("text").isNotNull())
-        .select(F.to_date("ts").alias("part_date"), F.length("text").alias("text_len"))
-    )
-    return mad_outliers_by_group(t, "part_date", "text_len")
+    return mad_outliers_by_group(_day_text_len(spark, sf_dir), "part_date", "text_len")
 
 
 @query(with_docs(
@@ -1841,27 +1790,20 @@ def q_turn_loops(spark: SparkSession, sf_dir: str) -> DataFrame:
     return repeated_turns(_transcripts(spark, sf_dir))
 
 
-@query(with_transcripts(
-    f"""
-            , m AS ({_MID_SQL})
-            , ha AS ({_HIST_SQL.format(op='<')})
-            , hb AS ({_HIST_SQL.format(op='>=')})
-            , j AS (
-              SELECT COALESCE(ha.bucket, hb.bucket) AS bucket,
-                     COALESCE(ha.n, 0) AS na, COALESCE(hb.n, 0) AS nb
-              FROM ha FULL OUTER JOIN hb ON ha.bucket = hb.bucket
-            )
-            SELECT ROUND(SUM(w * (fa - fb) * (fa - fb)), 6) AS cvm FROM (
-              SELECT (na + nb) * 1.0
-                       / ((SELECT SUM(na) FROM j) + (SELECT SUM(nb) FROM j)) AS w,
-                     SUM(na) OVER (ORDER BY bucket) * 1.0
-                       / (SELECT SUM(na) FROM j) AS fa,
-                     SUM(nb) OVER (ORDER BY bucket) * 1.0
-                       / (SELECT SUM(nb) FROM j) AS fb
-              FROM j
-            ) t
-            """
-))
+_CVM_FROM_J = """
+SELECT ROUND(SUM(w * (fa - fb) * (fa - fb)), 6) AS cvm FROM (
+  SELECT (na + nb) * 1.0
+           / ((SELECT SUM(na) FROM j) + (SELECT SUM(nb) FROM j)) AS w,
+         SUM(na) OVER (ORDER BY bucket) * 1.0
+           / (SELECT SUM(na) FROM j) AS fa,
+         SUM(nb) OVER (ORDER BY bucket) * 1.0
+           / (SELECT SUM(nb) FROM j) AS fb
+  FROM j
+) t
+"""
+
+
+@query(_split_drift_oracle(_LEN_SPLIT, _CVM_FROM_J))
 def q_cvm_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cramér-von Mises drift on the standard first/second-half split
     (operators/drift.py:cvm_joined) — integrates squared ECDF differences
@@ -1869,8 +1811,7 @@ def q_cvm_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     max misses. Same one-scan conditional split as psi/ks/js/w1."""
     from fsharp_data_validation_spark.operators.drift import cvm_joined
 
-    t = _transcripts(spark, sf_dir).select(F.length("text").alias("text_len"), "ts")
-    return cvm_joined(split_histograms(t, "text_len", "ts", 10.0, 20), round_to=6)
+    return cvm_joined(_len_halves(spark, sf_dir), round_to=6)
 
 
 @query(with_transcripts(
@@ -2558,14 +2499,8 @@ def q_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # correct O(n^2) form the asymmetric prefix-filtered join must
 # equal); id_a is the contained (smaller-set) side
 @query(with_docs(
-    """
-, d AS (
-  SELECT doc_id,
-         list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                        for i in range(1, len(w) - 1)]) AS sh
-  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM docs)
-  WHERE len(w) >= 3
-)
+    _DOC_SHINGLES_SQL
+    + """
 SELECT id_a, id_b, containment FROM (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b,
          ROUND(len(list_intersect(a.sh, b.sh)) * 1.0 / len(a.sh), 6) AS containment
@@ -2949,6 +2884,21 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fingerprint(load_docs(spark, sf_dir), "doc_id", "text")
 
 
+def _image_payload() -> "F.Column":
+    """A synthetic image per doc: 5-byte header (BE uint16 width = doc_id %
+    32 + 64, height = doc_id % 24 + 48, uint8 channels = doc_id % 3 + 1),
+    then the text bytes as fake pixel data."""
+    width = (F.col("doc_id") % 32 + 64).cast("int")
+    height = (F.col("doc_id") % 24 + 48).cast("int")
+    channels = (F.col("doc_id") % 3 + 1).cast("int")
+    return F.concat(
+        F.unhex(F.lpad(F.hex(width), 4, "0")),
+        F.unhex(F.lpad(F.hex(height), 4, "0")),
+        F.unhex(F.lpad(F.hex(channels), 2, "0")),
+        F.encode(F.col("text"), "UTF-8"),
+    )
+
+
 @query(with_docs(
     "SELECT doc_id AS media_id, "
     "CAST(doc_id % 32 + 64 AS INT) AS width, "
@@ -2958,22 +2908,13 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 ))
 def q_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal plumbing end-to-end: synthesize binary image payloads in
-    Spark SQL (5-byte header: BE uint16 width/height + uint8 channels,
-    then the text bytes as fake pixel data), decode them back with the
-    Arrow-batched mapInPandas header parser. Oracle = the closed form the
-    payloads were built from."""
+    Spark SQL (_image_payload), decode them back with the Arrow-batched
+    mapInPandas header parser. Oracle = the closed form the payloads were
+    built from."""
     from fsharp_data_validation_spark.operators.multimodal import decode_image_meta
 
     d = load_docs(spark, sf_dir)
-    width = (F.col("doc_id") % 32 + 64).cast("int")
-    height = (F.col("doc_id") % 24 + 48).cast("int")
-    channels = (F.col("doc_id") % 3 + 1).cast("int")
-    payload = F.concat(
-        F.unhex(F.lpad(F.hex(width), 4, "0")),
-        F.unhex(F.lpad(F.hex(height), 4, "0")),
-        F.unhex(F.lpad(F.hex(channels), 2, "0")),
-        F.encode(F.col("text"), "UTF-8"),
-    )
+    payload = _image_payload()
     media = d.select(
         F.col("doc_id").alias("media_id"),
         F.lit("image").alias("kind"),
@@ -3005,34 +2946,31 @@ def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
         resize_images,
     )
 
-    d = load_docs(spark, sf_dir)
-    width = (F.col("doc_id") % 32 + 64).cast("int")
-    height = (F.col("doc_id") % 24 + 48).cast("int")
-    channels = (F.col("doc_id") % 3 + 1).cast("int")
-    payload = F.concat(
-        F.unhex(F.lpad(F.hex(width), 4, "0")),
-        F.unhex(F.lpad(F.hex(height), 4, "0")),
-        F.unhex(F.lpad(F.hex(channels), 2, "0")),
-        F.encode(F.col("text"), "UTF-8"),
+    media = load_docs(spark, sf_dir).select(
+        F.col("doc_id").alias("media_id"), _image_payload().alias("payload")
     )
-    media = d.select(F.col("doc_id").alias("media_id"), payload.alias("payload"))
     return decode_image_meta(resize_images(media, 2))
 
 
-@query(with_vecs(
+#: brute-force cosine top-3 of each query vector (vec_id % 100 == 0);
+#: shared by ann_topk and ann_ivf, which probes every cell and so is exact
+_TOPK_ORACLE = with_vecs(
     f"""
-            , q AS (SELECT vec_id AS query_id, e AS qe FROM vecs WHERE vec_id % 100 = 0),
-            v AS (SELECT vec_id AS neighbor_id, e AS ve FROM vecs),
-            scored AS (
-              SELECT query_id, neighbor_id,
-                     ROUND({_COSINE_SQL.format(a='qe', b='ve')}, 6) AS sim
-              FROM q JOIN v ON query_id != neighbor_id
-            ),
-            r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                    ORDER BY sim DESC, neighbor_id ASC) AS rnk FROM scored)
-            SELECT query_id, neighbor_id, rnk, sim FROM r WHERE rnk <= 3
-            """
-), quadratic=True)
+, q AS (SELECT vec_id AS query_id, e AS qe FROM vecs WHERE vec_id % 100 = 0),
+v AS (SELECT vec_id AS neighbor_id, e AS ve FROM vecs),
+scored AS (
+  SELECT query_id, neighbor_id,
+         ROUND({_COSINE_SQL.format(a='qe', b='ve')}, 6) AS sim
+  FROM q JOIN v ON query_id != neighbor_id
+),
+r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+        ORDER BY sim DESC, neighbor_id ASC) AS rnk FROM scored)
+SELECT query_id, neighbor_id, rnk, sim FROM r WHERE rnk <= 3
+"""
+)
+
+
+@query(_TOPK_ORACLE, quadratic=True)
 def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-3 for query vectors (vec_id % 100 == 0):
     broadcast queries x one scan of the vectors."""
@@ -3105,20 +3043,7 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(with_vecs(
-    f"""
-            , q AS (SELECT vec_id AS query_id, e AS qe FROM vecs WHERE vec_id % 100 = 0),
-            v AS (SELECT vec_id AS neighbor_id, e AS ve FROM vecs),
-            scored AS (
-              SELECT query_id, neighbor_id,
-                     ROUND({_COSINE_SQL.format(a='qe', b='ve')}, 6) AS sim
-              FROM q JOIN v ON query_id != neighbor_id
-            ),
-            r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                    ORDER BY sim DESC, neighbor_id ASC) AS rnk FROM scored)
-            SELECT query_id, neighbor_id, rnk, sim FROM r WHERE rnk <= 3
-            """
-), quadratic=True)
+@query(_TOPK_ORACLE, quadratic=True)
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN (k-means cells -> probe -> exact rerank). Run with full
     probing here so the result is exact and shares the brute-force oracle;
@@ -3309,31 +3234,34 @@ def q_q1_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    """
-            WITH g AS (
-              SELECT user_id, ts, event_id,
-                     date_diff('microsecond', LAG(ts) OVER w, ts) AS gap_us
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-            ), m AS (
-              SELECT user_id, ts, event_id,
-                     CASE WHEN gap_us IS NULL OR gap_us > 1800 * 1000000
-                          THEN 1 ELSE 0 END AS is_new
-              FROM g
-            ), s AS (
-              SELECT user_id, ts,
-                     CAST(SUM(is_new) OVER (PARTITION BY user_id
-                          ORDER BY ts, event_id
-                          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_no
-              FROM m
-            )
-            SELECT user_id, session_no, COUNT(*) AS n_events,
-                   MIN(ts) AS session_start, MAX(ts) AS session_end,
-                   date_diff('microsecond', MIN(ts), MAX(ts)) AS duration_us
-            FROM s GROUP BY user_id, session_no
-            """
+#: gap-based sessions (30-min gap) as a window spec; shared by sessionize
+#: and its output-identical hot-key twin sessionize_salted
+_SESSIONIZE_ORACLE = """
+WITH g AS (
+  SELECT user_id, ts, event_id,
+         date_diff('microsecond', LAG(ts) OVER w, ts) AS gap_us
+  FROM events
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+), m AS (
+  SELECT user_id, ts, event_id,
+         CASE WHEN gap_us IS NULL OR gap_us > 1800 * 1000000
+              THEN 1 ELSE 0 END AS is_new
+  FROM g
+), s AS (
+  SELECT user_id, ts,
+         CAST(SUM(is_new) OVER (PARTITION BY user_id
+              ORDER BY ts, event_id
+              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_no
+  FROM m
 )
+SELECT user_id, session_no, COUNT(*) AS n_events,
+       MIN(ts) AS session_start, MAX(ts) AS session_end,
+       date_diff('microsecond', MIN(ts), MAX(ts)) AS duration_us
+FROM s GROUP BY user_id, session_no
+"""
+
+
+@query(_SESSIONIZE_ORACLE)
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization of the events stream (30-min gap): one
     shuffle on user_id, lag + running-sum windows, map-side-combinable
@@ -3344,31 +3272,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sessionize(ev, "user_id", "ts", "event_id", gap_seconds=1800)
 
 
-@query(
-    """
-            WITH g AS (
-              SELECT user_id, ts, event_id,
-                     date_diff('microsecond', LAG(ts) OVER w, ts) AS gap_us
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-            ), m AS (
-              SELECT user_id, ts, event_id,
-                     CASE WHEN gap_us IS NULL OR gap_us > 1800 * 1000000
-                          THEN 1 ELSE 0 END AS is_new
-              FROM g
-            ), s AS (
-              SELECT user_id, ts,
-                     CAST(SUM(is_new) OVER (PARTITION BY user_id
-                          ORDER BY ts, event_id
-                          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_no
-              FROM m
-            )
-            SELECT user_id, session_no, COUNT(*) AS n_events,
-                   MIN(ts) AS session_start, MAX(ts) AS session_end,
-                   date_diff('microsecond', MIN(ts), MAX(ts)) AS duration_us
-            FROM s GROUP BY user_id, session_no
-            """
-)
+@query(_SESSIONIZE_ORACLE)
 def q_sessionize_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The hot-key-safe sessionize (operators/temporal.py:sessionize_salted)
     on the same events/gap shape as `sessionize`: output-identical by
@@ -3383,7 +3287,12 @@ def q_sessionize_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# independent spec of the as-of semantics (correlated subquery — the
+# obviously-correct form, deliberately NOT the union/window shape the
+# Spark operator uses, so a shared bug can't hide); asof_salted is
+# output-identical to asof_join (parity-fuzzed in tests/test_round4_ops.py),
+# so both share it
+_ASOF_ORACLE = (
     "SELECT l.event_id, "
     "  (SELECT r.event_id FROM events r WHERE r.user_id = l.user_id "
     "     AND r.event_type = 'click' AND r.ts <= l.ts "
@@ -3394,12 +3303,14 @@ def q_sessionize_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     "   ORDER BY r.ts DESC, r.event_id DESC LIMIT 1) AS gap_us "
     "FROM events l WHERE l.event_type = 'error'"
 )
-def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed as-of join: for every 'error' event, the latest 'click'
-    by the same user at or before it (union-tag + running last(ignorenulls)
-    window — one shuffle, no range-join row amplification)."""
-    from fsharp_data_validation_spark.operators.temporal import asof_join
 
+
+def _error_prev_click(
+    spark: SparkSession, sf_dir: str, join: Callable[..., DataFrame], **kw
+) -> DataFrame:
+    """Each 'error' event with the latest 'click' by the same user at or
+    before it, found by the as-of operator ``join`` (``kw`` are its own
+    options), as (event_id, prev_click_id, gap_us)."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     errors = ev.filter(F.col("event_type") == "error").select(
         "event_id", "user_id", "ts"
@@ -3407,9 +3318,9 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     clicks = ev.filter(F.col("event_type") == "click").select(
         "event_id", "user_id", "ts"
     )
-    joined = asof_join(
+    joined = join(
         errors, clicks, by=["user_id"], right_cols=["event_id", "ts"],
-        tie_col="event_id",
+        tie_col="event_id", **kw,
     )
     return joined.select(
         "event_id",
@@ -3419,6 +3330,16 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             - F.unix_micros(F.col("ts_asof").cast("timestamp"))
         ).alias("gap_us"),
     )
+
+
+@query(_ASOF_ORACLE)
+def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distributed as-of join: for every 'error' event, the latest 'click'
+    by the same user at or before it (union-tag + running last(ignorenulls)
+    window — one shuffle, no range-join row amplification)."""
+    from fsharp_data_validation_spark.operators.temporal import asof_join
+
+    return _error_prev_click(spark, sf_dir, asof_join)
 
 
 # independent spec: a plain correlated BETWEEN join — the obviously-
@@ -3569,22 +3490,14 @@ def _corpus_split(spark: SparkSession, sf_dir: str):
 # independent spec: naive all-pairs cross-corpus Jaccard (the
 # obviously-correct O(n*m) form the prefix-filtered join must equal)
 @query(with_docs(
-    """
-            , d AS (
-              SELECT doc_id,
-                     list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                                    for i in range(1, len(w) - 1)]) AS sh
-              FROM (SELECT doc_id, string_split(text, ' ') AS w FROM docs)
-              WHERE len(w) >= 3
-            )
-            SELECT train_id, eval_id, sim FROM (
-              SELECT a.doc_id AS train_id, b.doc_id AS eval_id,
-                     ROUND(len(list_intersect(a.sh, b.sh)) * 1.0 /
-                           (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) AS sim
-              FROM d a JOIN d b
-                ON a.doc_id % 10 != 3 AND b.doc_id % 10 = 3
-            ) p WHERE sim >= 0.8
-            """
+    _DOC_SHINGLES_SQL
+    + f"""
+SELECT train_id, eval_id, sim FROM (
+  SELECT a.doc_id AS train_id, b.doc_id AS eval_id, ROUND({_JACCARD_SQL}, 6) AS sim
+  FROM d a JOIN d b
+    ON a.doc_id % 10 != 3 AND b.doc_id % 10 = 3
+) p WHERE sim >= 0.8
+"""
 ), quadratic=True)
 def q_contamination_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decontamination: eval docs that are near-duplicates (3-gram Jaccard
@@ -3599,17 +3512,14 @@ def q_contamination_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(with_docs(
-    """
+    f"""
             , tg AS (
-              SELECT DISTINCT unnest([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                                      for i in range(1, len(w) - 1)]) AS g
+              SELECT DISTINCT unnest({_SHINGLE_LIST_SQL}) AS g
               FROM (SELECT doc_id, string_split(text, ' ') AS w FROM docs
                     WHERE doc_id % 10 != 3)
               WHERE len(w) >= 3
             ), eg AS (
-              SELECT doc_id,
-                     unnest(list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                                           for i in range(1, len(w) - 1)])) AS g
+              SELECT doc_id, unnest({_SHINGLES_SQL}) AS g
               FROM (SELECT doc_id, string_split(text, ' ') AS w FROM docs
                     WHERE doc_id % 10 = 3)
               WHERE len(w) >= 3
@@ -3709,22 +3619,7 @@ def q_pack_windows_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# independent spec of the as-of semantics (correlated subquery — the
-# obviously-correct form, deliberately NOT the union/window shape the
-# Spark operator uses, so a shared bug can't hide)
-# asof_salted is output-identical to asof_join (parity-fuzzed in
-# tests/test_round4_ops.py); both share the correlated-subquery spec
-@query(
-    "SELECT l.event_id, "
-    "  (SELECT r.event_id FROM events r WHERE r.user_id = l.user_id "
-    "     AND r.event_type = 'click' AND r.ts <= l.ts "
-    "   ORDER BY r.ts DESC, r.event_id DESC LIMIT 1) AS prev_click_id, "
-    "  (SELECT date_diff('microsecond', r.ts, l.ts) FROM events r "
-    "   WHERE r.user_id = l.user_id AND r.event_type = 'click' "
-    "     AND r.ts <= l.ts "
-    "   ORDER BY r.ts DESC, r.event_id DESC LIMIT 1) AS gap_us "
-    "FROM events l WHERE l.event_type = 'error'"
-)
+@query(_ASOF_ORACLE)
 def q_asof_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The hot-key-safe as-of (operators/temporal.py:asof_join_salted) on the
     same error<-latest-click shape as `asof_join`: output-identical by
@@ -3733,25 +3628,7 @@ def q_asof_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     the real event timeline rather than degenerating to one bucket."""
     from fsharp_data_validation_spark.operators.temporal import asof_join_salted
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    errors = ev.filter(F.col("event_type") == "error").select(
-        "event_id", "user_id", "ts"
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts"
-    )
-    joined = asof_join_salted(
-        errors, clicks, by=["user_id"], right_cols=["event_id", "ts"],
-        tie_col="event_id", bucket_seconds=3600,
-    )
-    return joined.select(
-        "event_id",
-        F.col("event_id_asof").alias("prev_click_id"),
-        (
-            F.unix_micros(F.col("ts").cast("timestamp"))
-            - F.unix_micros(F.col("ts_asof").cast("timestamp"))
-        ).alias("gap_us"),
-    )
+    return _error_prev_click(spark, sf_dir, asof_join_salted, bucket_seconds=3600)
 
 
 # independent spec of sliding-window chunking: DuckDB 1-based
@@ -3977,16 +3854,13 @@ def q_stream_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     "          / length(text) >= 0.5"
     "  ) k WHERE krn = 1"
     "), d AS ("
-    "  SELECT doc_id, "
-    "         list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] "
-    "                        for i in range(1, len(w) - 1)]) AS sh "
+    f"  SELECT doc_id, {_SHINGLES_SQL} AS sh "
     "  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM cur) "
     "  WHERE len(w) >= 3"
     "), dropped AS ("
     "  SELECT DISTINCT id_b AS doc_id FROM ("
     "    SELECT b.doc_id AS id_b, "
-    "           len(list_intersect(a.sh, b.sh)) * 1.0 / "
-    "           (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS sim "
+    f"           {_JACCARD_SQL} AS sim "
     "    FROM d a JOIN d b ON a.doc_id < b.doc_id"
     "  ) p WHERE sim >= 0.8"
     "), kept AS ("

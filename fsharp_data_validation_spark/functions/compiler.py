@@ -507,6 +507,8 @@ class Suite:
     def __init__(self, name: str = "suite"):
         self.name = name
         self._constraints: List[Constraint] = []
+        # (constraint count, compiled) — see _compiled
+        self._memo: Tuple[int, tuple] = (-1, ())
 
     # -- builders -----------------------------------------------------------
     def field(self, name: str, column: Optional[ColumnLike] = None) -> _Branch:
@@ -600,14 +602,8 @@ class Suite:
         return [c.code for c in self._constraints if c.kind != PROOF_GATE]
 
     # -- compilation ----------------------------------------------------------
-    def _flag_columns(self) -> List[Tuple[Constraint, Column, Column]]:
-        """Per-constraint (constraint, fires: bool, n_failures: int) columns
-        with the refute masks applied — pure boolean/int algebra, NO
-        array/struct allocation (stays inside whole-stage codegen)."""
-        return [(c, fail, n) for _, c, fail, n, _ in self._compiled()]
-
-    def _compiled(self):
-        """Shared compile pass: yields ``(ord, constraint, fail, n_failures,
+    def _compiled(self) -> tuple:
+        """Shared compile pass: ``(ord, constraint, fail, n_failures,
         prev_refuted)`` for every non-gate constraint, applying the full
         mask algebra exactly once for all consumers:
 
@@ -619,7 +615,15 @@ class Suite:
           (``gate_on="any"`` ≅ refuteWithProof) or were refuted
           (``gate_on="refute"`` ≅ applyFailures/optional composition); the
           gate itself files nothing.
+
+        ``fail``/``n_failures`` are pure boolean/int algebra, no array or
+        struct allocation (they stay inside whole-stage codegen). Memoized by
+        constraint count: the builders only append, so a suite compiles once
+        however many consumers (split, verdict, reports) read it.
         """
+        if self._memo[0] == len(self._constraints):
+            return self._memo[1]
+        out = []
         refuted: dict[str, Column] = {}
         br_any: dict[str, Column] = {}
         br_refute: dict[str, Column] = {}
@@ -663,13 +667,15 @@ class Suite:
             if c.kind in (REFUTE, EACH_REFUTE):
                 refuted[c.branch] = prev_refuted | fail
                 br_refute[c.branch] = br_refute.get(c.branch, F.lit(False)) | fail
-            yield ord_, c, fail, n, prev_refuted
+            out.append((ord_, c, fail, n, prev_refuted))
+        self._memo = (len(self._constraints), tuple(out))
+        return self._memo[1]
 
     def any_failure_column(self) -> Column:
         """Boolean 'row emits at least one failure' — used as the split
         predicate in ``run`` so the failure-array construction cost is paid
         only for rows that already failed (typically a few percent)."""
-        flags = [fail for _, fail, _ in self._flag_columns()]
+        flags = [fail for _, _, fail, _, _ in self._compiled()]
         if not flags:
             return F.lit(False)
         out = flags[0]
@@ -680,7 +686,7 @@ class Suite:
     def failure_count_column(self) -> Column:
         """Total failures emitted for the row (== size of the failures
         array) without building the array — for verdict aggregation."""
-        counts = [n for _, _, n in self._flag_columns()]
+        counts = [n for _, _, _, n, _ in self._compiled()]
         if not counts:
             return F.lit(0)
         out = counts[0]

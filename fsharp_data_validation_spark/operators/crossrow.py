@@ -5,9 +5,9 @@ requires: uniqueness, referential integrity, ordering.
 Scale design (10^12 turns):
 - uniqueness: hash aggregation with map-side partial combine — one shuffle on
   the key. Keys ``(conv_id, turn_idx)`` are near-unique, so per-group state is
-  tiny; hot conv_ids do NOT skew this shuffle because turn_idx spreads them.
-  For pathological single-key floods, ``salt`` splits the count into a salted
-  partial + final stage.
+  tiny; hot conv_ids do NOT skew this shuffle because turn_idx spreads them,
+  and even a single flooded key is collapsed to one row per partition before
+  the exchange (measured, BENCH.md "skew handling"), so it needs no salting.
 - referential: the catalog is tiny — broadcast LEFT ANTI join, no shuffle of
   the fact side.
 - ordering: per-conversation windows. Window partitions are bounded by the
@@ -22,31 +22,9 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-def uniqueness_violations(
-    df: DataFrame, keys: Sequence[str], salt_buckets: int = 0
-) -> DataFrame:
-    """Key groups with more than one row -> (keys..., n_dups).
-
-    With ``salt_buckets > 0``, counts are computed in two stages —
-    ``groupBy(keys, salt)`` partial then ``groupBy(keys)`` final — which
-    bounds per-task state when a single key floods (skew salting per
-    SURVEY.md §4). Partial aggregation already gives map-side combine in the
-    unsalted path, so salting is only for adversarial key distributions.
-    """
-    if salt_buckets and salt_buckets > 1:
-        # row-level salt, independent of physical partitioning: a hash of
-        # monotonically_increasing_id spreads a flooded key uniformly over
-        # the buckets even after AQE coalescing reshapes the input
-        # partitions (spark_partition_id-based salt can collapse to a few
-        # distinct values there). The salt never reaches the output, so the
-        # id's nondeterminism across runs is irrelevant.
-        salt = F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_buckets))
-        salted = df.groupBy(*keys, salt.alias("_salt")).agg(
-            F.count(F.lit(1)).alias("_partial")
-        )
-        counts = salted.groupBy(*keys).agg(F.sum("_partial").alias("n_dups"))
-    else:
-        counts = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n_dups"))
+def uniqueness_violations(df: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """Key groups with more than one row -> (keys..., n_dups)."""
+    counts = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n_dups"))
     return counts.filter(F.col("n_dups") > 1)
 
 

@@ -28,26 +28,8 @@ from pyspark.sql.types import (
     DoubleType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("kind", StringType()),  # image | audio | video
-        StructField("payload", BinaryType()),
-        StructField(
-            "meta",
-            StructType(
-                [
-                    StructField("source", StringType()),
-                    StructField("n_bytes", LongType()),
-                ]
-            ),
-        ),
-    ]
 )
 
 IMAGE_META_SCHEMA = StructType(

@@ -67,7 +67,8 @@ class SnapshotDriftError(RuntimeError):
 
 def parquet_snapshot(path: str) -> str:
     """Deterministic pin of a parquet directory's current state: sha256 over
-    the sorted (relative path, size, mtime_ns) of every data file. This is
+    the sorted (relative path, size, mtime_ns) of every data file; a single
+    parquet file is pinned by its own (name, size, mtime_ns). This is
     the parquet-fallback analogue of an Iceberg snapshot id — any append,
     rewrite, or delete changes it, while re-reading unchanged data does not.
     Metadata-only (no file bytes read): O(files) stat calls, same cost class
@@ -77,7 +78,10 @@ def parquet_snapshot(path: str) -> str:
     import hashlib
 
     entries = []
-    for root, _dirs, files in os.walk(path):
+    if os.path.isfile(path):
+        st = os.stat(path)
+        entries.append((os.path.basename(path), st.st_size, st.st_mtime_ns))
+    for root, _dirs, files in os.walk(path):  # yields nothing for a file
         for name in files:
             if name.startswith((".", "_")) or name.endswith(".crc"):
                 continue

@@ -3,10 +3,10 @@
 Local-mode defaults follow the public Spark tuning guidance: AQE on (runtime
 re-plan + skew handling), shuffle partitions sized to cores (not 200), Arrow
 enabled for the few vectorized-UDF kernels, UTC session timezone so timestamp
-math matches the DuckDB oracle. Python workers run under the engine's own
-daemon (``pyworker``), which skips re-reading unchanged zip directories on
-every task; the package root goes on the workers' path so the daemon
-imports from any working directory.
+math matches the DuckDB oracle, a driver heap of at most half the machine.
+Python workers run under the engine's own daemon (``pyworker``), which skips
+re-reading unchanged zip directories on every task; the package root goes on
+the workers' path so the daemon imports from any working directory.
 """
 
 from __future__ import annotations
@@ -17,6 +17,17 @@ from pathlib import Path
 from pyspark.sql import SparkSession
 
 _PACKAGE_ROOT = str(Path(__file__).resolve().parents[2])
+
+
+def _driver_memory() -> str:
+    """``SPARK_DRIVER_MEMORY``, else half the machine's physical memory
+    (whole GiB, at least 1g) capped at 24g: a local-mode driver heap sized
+    past the machine gets the JVM killed when memory runs short, not just
+    slowed."""
+    if "SPARK_DRIVER_MEMORY" in os.environ:
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    half_gib = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**31
+    return f"{min(max(half_gib, 1), 24)}g"
 
 
 def get_spark(
@@ -40,7 +51,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "fsharp_data_validation_spark.pyworker")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)

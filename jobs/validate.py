@@ -52,7 +52,8 @@ def main(argv=None) -> int:
         "--snapshot",
         default=None,
         help="input snapshot pin for lineage (e.g. an Iceberg snapshot id); "
-        "defaults to an automatic file-listing pin of --input",
+        "defaults to an automatic file-listing pin of --input or of "
+        "--events-dir's events.parquet",
     )
     ap.add_argument(
         "--on-drift",
@@ -138,13 +139,18 @@ def main(argv=None) -> int:
     if args.partition_col not in df.columns:
         df = df.withColumn(args.partition_col, F.to_date("ts"))
 
+    # the input the run pins: events.parquet for --events-dir, else --input
+    if args.events_dir:
+        input_path = os.path.join(args.events_dir, "events.parquet")
+    else:
+        input_path = args.input if os.path.exists(args.input) else None
     run = ValidationRun(
         suite=transcript_row_suite(),
         out_dir=args.output,
         key_cols=["conv_id", "turn_idx", "ts"],
         partition_col=args.partition_col,
         input_snapshot=args.snapshot,
-        input_path=args.input if args.input and os.path.isdir(args.input) else None,
+        input_path=input_path,
         on_drift=args.on_drift,
         emit_reports=args.emit_reports,
         emit_valid=args.emit_valid,

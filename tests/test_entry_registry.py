@@ -1,8 +1,9 @@
 """The driver-query registry in ``__spark_entry__``: one ``@query``
 declaration per query feeds ``queries()``, ``oracle_sql()`` and the
-quadratic flag, in ``attestation_order``. Also the package-surface guards:
-every public function has a non-test consumer and every option a call site
-that passes it (pure ``ast``, no JVM)."""
+quadratic flag, in ``attestation_order``, and no oracle is spelled twice.
+Also the package-surface guards: every public function and constant has a
+non-test consumer and every option a call site that passes it (pure
+``ast``, no JVM)."""
 
 import ast
 import json
@@ -107,17 +108,27 @@ def _refs(node):
     return out
 
 
-def test_every_public_function_has_a_consumer():
-    """A public package function is referenced outside its own definition by
-    the package, ``__spark_entry__.py``, bench.py, jobs/, perfbench/ or tools/.
-    Tests do not count: a function only tests call is deleted or moves into
-    tests/. A reference from a function that is itself dead does not count
-    either, so a test-only function takes its private helpers with it. ast,
-    not text search, so a docstring mention is not a use."""
+def _constants():
+    """(path, assignment, name) for each module-level name the package binds
+    by assignment outside ``core/``."""
+    pkg = (p for p in PKG.rglob("*.py") if "core" not in p.relative_to(PKG).parts)
+    return [
+        (p, a, t.id)
+        for p, tree in _trees(pkg).items()
+        for a in tree.body
+        if isinstance(a, (ast.Assign, ast.AnnAssign))
+        for t in (a.targets if isinstance(a, ast.Assign) else [a.target])
+        if isinstance(t, ast.Name)
+    ]
+
+
+def _dead(defs):
+    """The keys of ``defs`` ({(path, lineno): name}) that no top-level node
+    of CONSUMERS references outside its own definition, where a reference
+    from a dead definition does not count either."""
     refs = {
         (p, n.lineno): _refs(n) for p, t in _trees(CONSUMERS).items() for n in t.body
     }
-    defs = {(p, f.lineno): f.name for p, f in _defs() if f.name not in REFERENCE_ONLY}
     dead = set()
     while True:
         now = {
@@ -126,9 +137,67 @@ def test_every_public_function_has_a_consumer():
             if not any(name in r for n, r in refs.items() if n != k and n not in dead)
         }
         if now == dead:
-            break
+            return dead
         dead = now
-    assert sorted(defs[k] for k in dead if not defs[k].startswith("_")) == []
+
+
+def test_every_public_function_has_a_consumer():
+    """A public package function is referenced outside its own definition by
+    the package, ``__spark_entry__.py``, bench.py, jobs/, perfbench/ or tools/.
+    Tests do not count: a function only tests call is deleted or moves into
+    tests/. A reference from a function that is itself dead does not count
+    either, so a test-only function takes its private helpers with it. ast,
+    not text search, so a docstring mention is not a use."""
+    defs = {(p, f.lineno): f.name for p, f in _defs() if f.name not in REFERENCE_ONLY}
+    assert sorted(defs[k] for k in _dead(defs) if not defs[k].startswith("_")) == []
+
+
+def test_every_public_constant_has_a_consumer():
+    """The same rule for module-level constants: a public one is referenced
+    by the package, the entry, bench.py, jobs/, perfbench/ or tools/ outside
+    its own assignment, and a test fixture such as a schema only tests build
+    lives in tests/."""
+    consts = {(p, a.lineno): name for p, a, name in _constants()}
+    defs = {(p, f.lineno): f.name for p, f in _defs() if f.name not in REFERENCE_ONLY}
+    dead = _dead({**defs, **consts})
+    assert sorted(
+        f"{k[0].relative_to(PKG)}:{name}"
+        for k, name in consts.items()
+        if k in dead and not name.startswith("_")
+    ) == []
+
+
+def _literal_oracles():
+    """Names of the queries whose ``@query`` oracle argument spells SQL
+    inline: it holds a string literal rather than only naming a shared
+    constant or calling a builder over constants."""
+    tree = ast.parse((ROOT / "__spark_entry__.py").read_text())
+    return [
+        f.name.removeprefix("q_")
+        for f in tree.body
+        if isinstance(f, ast.FunctionDef)
+        for d in f.decorator_list
+        if isinstance(d, ast.Call) and getattr(d.func, "id", None) == "query"
+        if any(
+            isinstance(n, ast.Constant) and isinstance(n.value, str)
+            for n in ast.walk(d.args[0])
+        )
+    ]
+
+
+def test_no_oracle_is_spelled_twice():
+    """A query whose oracle equals another query's (twins such as a salted
+    and a plain operator) names one shared constant: no inline oracle equals
+    any other oracle once whitespace runs are collapsed, so twins cannot
+    drift apart."""
+    text = {n: " ".join(q.oracle.split()) for n, q in e.REGISTRY.items()}
+    twins = {
+        tuple(sorted((n, m)))
+        for n in _literal_oracles()
+        for m in text
+        if m != n and text[m] == text[n]
+    }
+    assert sorted(twins) == []
 
 
 def _calls(tree):

@@ -187,22 +187,6 @@ def test_ivf_topk_recall(spark):
     assert recall >= 0.8, recall
 
 
-def test_salted_uniqueness_equivalent(spark):
-    """Two-stage salted aggregation (adversarial hot-key path) returns the
-    same duplicate groups as the direct hash agg."""
-    from fsharp_data_validation_spark.operators.crossrow import uniqueness_violations
-
-    t = spark.range(0, 5000, 1, 8).selectExpr(
-        "concat('c', cast(id % 7 as string)) AS conv_id",  # 7 hot keys
-        "cast(id % 40 as int) AS turn_idx",
-    )
-    direct = sorted(map(tuple, uniqueness_violations(t, ["conv_id", "turn_idx"]).collect()))
-    salted = sorted(
-        map(tuple, uniqueness_violations(t, ["conv_id", "turn_idx"], salt_buckets=8).collect())
-    )
-    assert direct and direct == salted
-
-
 def test_tdigest_matches_exact_quantiles(spark):
     """Fully distributed t-digest (applyInPandas partials + two-level tree
     merge INSIDE Spark — no driver collect) returns a one-row DataFrame and

@@ -10,7 +10,9 @@ import numpy as np
 import pytest
 from pyspark.sql import Row, functions as F
 from pyspark.sql.types import (
+    BinaryType,
     IntegerType,
+    LongType,
     StringType,
     StructField,
     StructType,
@@ -256,9 +258,27 @@ def _fake_video_payload(n_frames: int, width: int, height: int, seed: int) -> by
     return header + body.tobytes()
 
 
+# image/audio/video as an opaque binary payload with typed metadata
+MEDIA_SCHEMA = StructType(
+    [
+        StructField("media_id", LongType()),
+        StructField("kind", StringType()),  # image | audio | video
+        StructField("payload", BinaryType()),
+        StructField(
+            "meta",
+            StructType(
+                [
+                    StructField("source", StringType()),
+                    StructField("n_bytes", LongType()),
+                ]
+            ),
+        ),
+    ]
+)
+
+
 def test_multimodal_plumbing(spark):
     from fsharp_data_validation_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
         decode_image_meta,
         frame_sample,
     )
@@ -305,6 +325,55 @@ def test_job_entry_main(spark, tmp_path):
     assert len(manifest) == 3
     doc = json.load(open(str(tmp_path / "job_out" / "manifest" / manifest[0])))
     assert doc["constraints_evaluated"] == 12
+
+
+def test_job_pins_events_file(spark, tmp_path):
+    """A --events-dir run pins its events.parquet file: rerunning over an
+    events file with other bytes raises SnapshotDriftError instead of
+    resuming over results of data that no longer exists."""
+    import shutil
+    import sys
+
+    from fsharp_data_validation_spark.plans.manifest import (
+        SnapshotDriftError,
+        parquet_snapshot,
+    )
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "jobs"))
+    import validate as job
+
+    events = tmp_path / "events"
+    events.mkdir()
+    shutil.copy("/root/testdata/sf0.001/events.parquet", events / "events.parquet")
+    out = tmp_path / "out"
+    args = ["--events-dir", str(events), "--output", str(out), "--max-partitions", "2"]
+    assert job.main(args) == 0
+    pin = parquet_snapshot(str(events / "events.parquet"))
+    docs = [json.load(open(out / "manifest" / n)) for n in os.listdir(out / "manifest")]
+    assert len(docs) == 2 and all(d["input_snapshot"] == pin for d in docs)
+    shutil.copy("/root/testdata/sf0.01/events.parquet", events / "events.parquet")
+    with pytest.raises(SnapshotDriftError):
+        job.main(args)
+
+
+def test_driver_memory_default_fits_the_machine(monkeypatch):
+    """get_spark's default driver heap is half the machine's memory, capped
+    at 24g; SPARK_DRIVER_MEMORY overrides it."""
+    from fsharp_data_validation_spark.sources import session
+
+    def machine(gib):
+        pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": gib * 2**30 // 4096}
+        monkeypatch.setattr(session.os, "sysconf", pages.__getitem__)
+
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    machine(8)
+    assert session._driver_memory() == "4g"
+    machine(64)
+    assert session._driver_memory() == "24g"
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "1g")
+    assert session._driver_memory() == "1g"
+    machine(8)
+    assert session._driver_memory() == "1g"
 
 
 # jobs/validate.py (argv[3:]) with ValidationRun._record wrapped: right after
@@ -397,6 +466,32 @@ def test_job_killed_after_batch_writes_resumes_exactly(spark, tmp_path):
         assert _process_gone(int(f.read()))
     assert job.main(args + [resumed]) == 0
     assert _job_outputs(spark, resumed) == _job_outputs(spark, whole)
+
+
+def test_batch_compiles_suite_once(spark, tmp_path, monkeypatch):
+    """One ValidationRun batch that writes violations, valid rows and
+    reports runs the suite's mask algebra once: the split, the verdict
+    counts and the reports read one compile pass. A pass is counted by its
+    read of one constraint's check column."""
+    from fsharp_data_validation_spark.functions import compiler
+
+    suite = transcript_row_suite()
+    probe = suite.constraints[0].ok
+    passes = []
+    coalesce = compiler.F.coalesce
+
+    def counting(*cols):
+        if cols[0] is probe:
+            passes.append(1)
+        return coalesce(*cols)
+
+    monkeypatch.setattr(compiler.F, "coalesce", counting)
+    run = ValidationRun(
+        suite, str(tmp_path / "out"), ["conv_id", "turn_idx"], "part",
+        emit_valid=True, emit_reports=True,
+    )
+    assert len(run.run(_df(spark), batch_size=3)) == 3  # parts a, b, c
+    assert len(passes) == 1
 
 
 def test_manifest_emit_reports(spark, tmp_path):
