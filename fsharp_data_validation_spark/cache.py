@@ -11,9 +11,11 @@ executor-memory leak across operator invocations.
 Every ``persist()`` in this package goes through :func:`persist_tracked`,
 which registers the DataFrame in a process-wide registry.  Callers release
 with :func:`release_caches`, which unpersists everything tracked (and
-optionally sweeps localCheckpoint residue).  ``bench.py`` and
-``tools/check_oracle.py`` call it between queries; ``jobs/validate.py`` calls
-it per stage.
+optionally sweeps localCheckpoint residue), or free one DataFrame they
+persisted themselves with :func:`unpersist_tracked`.  ``bench.py`` and
+``tools/check_oracle.py`` call ``release_caches`` between queries;
+``jobs/validate.py`` calls it per stage, and ``ValidationRun`` frees its
+per-batch failing slice with ``unpersist_tracked``.
 
 Unpersisting a tracked DataFrame is always SAFE, never load-bearing: these
 are ``persist()`` plans with full lineage, so a later re-evaluation simply
@@ -39,6 +41,15 @@ def persist_tracked(df: DataFrame) -> DataFrame:
     with _LOCK:
         _LIVE.append(out)
     return out
+
+
+def unpersist_tracked(df: DataFrame) -> None:
+    """Unpersist one tracked DataFrame and drop it from the registry; every
+    other tracked DataFrame stays cached (a scoped release, unlike
+    :func:`release_caches`)."""
+    with _LOCK:
+        _LIVE[:] = [d for d in _LIVE if d is not df]
+    df.unpersist()
 
 
 def tracked_count() -> int:

@@ -36,6 +36,8 @@ parallel at any scale.
 from __future__ import annotations
 
 from dataclasses import dataclass, field as dc_field, replace as dc_replace
+from functools import reduce
+from operator import add, and_, or_
 from typing import Callable, List, Optional, Sequence, Tuple, Union
 
 from pyspark.sql import Column, DataFrame, functions as F
@@ -54,6 +56,30 @@ PROOF_GATE = "proof_gate"  # refuteWithProof: child failure refutes parent
 
 def _col(c: ColumnLike) -> Column:
     return F.col(c) if isinstance(c, str) else c
+
+
+def _length_within(c: Column, lo: Optional[int], hi: Optional[int]) -> Column:
+    """``lo <= length(c) <= hi`` (``None`` = no bound), NULL for a NULL
+    ``c``, settled on the byte length where it can be. Spark's ``length``
+    counts 1-4 bytes per character (invalid UTF-8 included), so
+    ``ceil(b / 4) <= length(c) <= b`` for ``b = octet_length(c)``:
+    characters are counted (a walk over every byte) only in the band where
+    ``b`` cannot decide; ``octet_length`` is a field read."""
+    b, n = F.octet_length(c), F.length(c)
+    no, yes, chars = [], [], []
+    if lo is not None:
+        no.append(b < lo)
+        yes.append(b >= 4 * lo - 3)
+        chars.append(n >= lo)
+    if hi is not None:
+        no.append(b > 4 * hi)
+        yes.append(b <= hi)
+        chars.append(n <= hi)
+    return (
+        F.when(reduce(or_, no), F.lit(False))
+        .when(reduce(and_, yes), F.lit(True))
+        .otherwise(n == lo if lo == hi else reduce(and_, chars))
+    )
 
 
 @dataclass
@@ -212,24 +238,24 @@ class _Branch:
 
     def min_length(self, code: str, n: int) -> "_Branch":
         """minLength (Library.fs:61)."""
-        return self.check(code, F.length(self.column) >= n)
+        return self.check(code, _length_within(self.column, n, None))
 
     def max_length(self, code: str, n: int) -> "_Branch":
         """maxLength (Library.fs:65)."""
-        return self.check(code, F.length(self.column) <= n)
+        return self.check(code, _length_within(self.column, None, n))
 
     def is_length(self, code: str, n: int) -> "_Branch":
         """isLength (Library.fs:69)."""
-        return self.check(code, F.length(self.column) == n)
+        return self.check(code, _length_within(self.column, n, n))
 
     def not_empty(self, code: str) -> "_Branch":
         """isNotNull = non-emptiness, NOT SQL NULL (Library.fs:57 and
-        tests/.../Tests/Library.fs:126-139)."""
-        return self.check(code, F.length(self.column) > 0)
+        tests/.../Tests/Library.fs:126-139). No bytes <=> no characters."""
+        return self.check(code, F.octet_length(self.column) > 0)
 
     def is_empty(self, code: str) -> "_Branch":
         """isNull = emptiness, NOT SQL NULL (Library.fs:53)."""
-        return self.check(code, F.length(self.column) == 0)
+        return self.check(code, F.octet_length(self.column) == 0)
 
     def is_equal(self, code: str, v) -> "_Branch":
         """isEqual (Library.fs:73)."""
@@ -507,8 +533,8 @@ class Suite:
     def __init__(self, name: str = "suite"):
         self.name = name
         self._constraints: List[Constraint] = []
-        # (constraint count, compiled) — see _compiled
-        self._memo: Tuple[int, tuple] = (-1, ())
+        # (constraint count, {key: compile pass or Column}) — see _memoized
+        self._memo: Tuple[int, dict] = (-1, {})
 
     # -- builders -----------------------------------------------------------
     def field(self, name: str, column: Optional[ColumnLike] = None) -> _Branch:
@@ -602,7 +628,24 @@ class Suite:
         return [c.code for c in self._constraints if c.kind != PROOF_GATE]
 
     # -- compilation ----------------------------------------------------------
+    def _memoized(self, key, build: Callable):
+        """``build()`` once per ``key`` for the suite as it stands. The
+        builders only append, so the constraint count identifies the suite's
+        state: a suite compiles once, and builds each output column once
+        (every py4j call of a build is paid once, not once per batch),
+        however many consumers (split, verdict, reports) read them."""
+        n = len(self._constraints)
+        if self._memo[0] != n:
+            self._memo = (n, {})
+        built = self._memo[1]
+        if key not in built:
+            built[key] = build()
+        return built[key]
+
     def _compiled(self) -> tuple:
+        return self._memoized("compiled", self._compile)
+
+    def _compile(self) -> tuple:
         """Shared compile pass: ``(ord, constraint, fail, n_failures,
         prev_refuted)`` for every non-gate constraint, applying the full
         mask algebra exactly once for all consumers:
@@ -617,12 +660,8 @@ class Suite:
           gate itself files nothing.
 
         ``fail``/``n_failures`` are pure boolean/int algebra, no array or
-        struct allocation (they stay inside whole-stage codegen). Memoized by
-        constraint count: the builders only append, so a suite compiles once
-        however many consumers (split, verdict, reports) read it.
+        struct allocation (they stay inside whole-stage codegen).
         """
-        if self._memo[0] == len(self._constraints):
-            return self._memo[1]
         out = []
         refuted: dict[str, Column] = {}
         br_any: dict[str, Column] = {}
@@ -668,34 +707,24 @@ class Suite:
                 refuted[c.branch] = prev_refuted | fail
                 br_refute[c.branch] = br_refute.get(c.branch, F.lit(False)) | fail
             out.append((ord_, c, fail, n, prev_refuted))
-        self._memo = (len(self._constraints), tuple(out))
-        return self._memo[1]
+        return tuple(out)
 
     def any_failure_column(self) -> Column:
         """Boolean 'row emits at least one failure' — used as the split
         predicate in ``run`` so the failure-array construction cost is paid
         only for rows that already failed (typically a few percent)."""
         flags = [fail for _, _, fail, _, _ in self._compiled()]
-        if not flags:
-            return F.lit(False)
-        out = flags[0]
-        for f in flags[1:]:
-            out = out | f
-        return out
+        return self._memoized("any", lambda: reduce(or_, flags) if flags else F.lit(False))
 
     def failure_count_column(self) -> Column:
         """Total failures emitted for the row (== size of the failures
         array) without building the array — for verdict aggregation."""
         counts = [n for _, _, _, n, _ in self._compiled()]
-        if not counts:
-            return F.lit(0)
-        out = counts[0]
-        for n in counts[1:]:
-            out = out + n
-        return out
+        return self._memoized("count", lambda: reduce(add, counts) if counts else F.lit(0))
 
     def failures_column(self, for_report: bool = False) -> Column:
-        """Compile the whole suite into ONE array<struct> expression.
+        """Compile the whole suite into ONE array<struct> expression
+        (built once per ``for_report``, see ``_memoized``).
 
         With ``for_report`` the compile-time literals are pre-rendered for
         the JSON wire format: static path segments camelCased
@@ -705,6 +734,9 @@ class Suite:
         JSON verbatim. Dynamic ``"[i]"`` segments are digits/brackets,
         inherently camelCase-stable and JSON-safe. Default (data-facing)
         output keeps raw segments/codes."""
+        return self._memoized(("failures", for_report), lambda: self._failures(for_report))
+
+    def _failures(self, for_report: bool) -> Column:
         if for_report:
             seg = lambda p: escape_json(to_camel_case(p))  # noqa: E731
             code_lit = escape_json
@@ -777,13 +809,23 @@ class Suite:
         like the byte-pinned kernel serializer. Segment-sort note: keys sort
         by the escaped dotted string; this matches the reference's
         Name-list sort for all path alphabets without ``.``/``-``/escaped
-        chars inside a segment (codes here are identifier-like)."""
+        chars inside a segment (codes here are identifier-like). Built once
+        (see ``_memoized``)."""
+        return self._memoized(
+            "report", lambda: self._report_json(self.failures_column(for_report=True))
+        )
+
+    @staticmethod
+    def _report_json(f: Column) -> Column:
+        """The report of the ``failures_column(for_report=True)`` array
+        ``f``, which three of its lambdas read. ``run`` projects the array
+        first and passes a column reference, so each failing row builds the
+        array once (Spark keeps the two projections apart)."""
 
         def path_str(p: Column) -> Column:
             # segments arrive pre-camelCased + escaped (for_report)
             return F.array_join(p, ".")
 
-        f = self.failures_column(for_report=True)
         gcodes = F.transform(
             F.filter(f, lambda x: F.size(x["path"]) == 0), lambda x: x["code"]
         )
@@ -823,21 +865,60 @@ class Suite:
         )
 
     def run(self, df: DataFrame, key_cols: Sequence[str]) -> "SuiteResult":
-        """Split into (valid_df, violations_df) — the vectorized
+        """Split into (valid_df, failing slice) — the vectorized
         ``fromVCtx`` + MergeSources collapse (Library.fs:8-12, VCtx.fs:53-63):
         a row with ANY failure produces no valid-output row.
 
         Plan shape: both outputs filter on the allocation-free boolean
         ``any_failure_column`` (whole-stage codegen over the scan); the
-        failure array+structs are constructed only for the failing slice."""
+        failure array+structs and the report are constructed only for the
+        failing slice, and only when a consumer selects them (column
+        pruning drops an unused one)."""
         any_fail = self.any_failure_column()
-        valid = df.filter(~any_fail)
-        violations = (
+        failing = (
             df.filter(any_fail)
-            .select(*key_cols, self.failures_column().alias("failures"))
-            .select(*key_cols, F.explode("failures").alias("f"))
             .select(
                 *key_cols,
+                self.failures_column().alias("failures"),
+                self.failures_column(for_report=True).alias("report_failures"),
+            )
+            .select(
+                *key_cols,
+                "failures",
+                self._memoized(
+                    "report_of_column",
+                    lambda: self._report_json(F.col("report_failures")),
+                ).alias("report"),
+            )
+        )
+        return SuiteResult(df.filter(~any_fail), failing, list(key_cols), self)
+
+
+@dataclass
+class SuiteResult:
+    """(valid_df, violations_df) pair ≅ Proof.toResult (Proof.fs:120-123);
+    the pipeline-gate shape of the Giraffe integration
+    (src/FSharp.Data.Validation.Giraffe/Library.fs:15-36).
+
+    ``failing`` is the one suite evaluation the violation outputs share:
+    ``(key..., failures, report)``, one row per failing row. ``violations``,
+    ``reports`` and ``failing_counts`` are derived from it, so a caller
+    that persists ``failing`` (``dataclasses.replace(res, failing=...)``)
+    derives all three from the persisted rows."""
+
+    valid: DataFrame
+    failing: DataFrame
+    key_cols: List[str]
+    suite: Suite
+
+    @property
+    def violations(self) -> DataFrame:
+        """(key..., path, path_str, code, ord), one row per failure."""
+        keys = self.key_cols
+        return (
+            self.failing.select(*keys, F.explode("failures").alias("f"))
+            .select(
+                *keys,
                 F.col("f.path").alias("path"),
                 # camelCase-dotted rendering ≅ reference serializer
                 # (Proof.fs:13-25): first char lowered per segment
@@ -855,30 +936,35 @@ class Suite:
                 F.col("f.ord").alias("ord"),
             )
         )
-        return SuiteResult(valid, violations, self)
 
-
-@dataclass
-class SuiteResult:
-    """(valid_df, violations_df) pair ≅ Proof.toResult (Proof.fs:120-123);
-    the pipeline-gate shape of the Giraffe integration
-    (src/FSharp.Data.Validation.Giraffe/Library.fs:15-36)."""
-
-    valid: DataFrame
-    violations: DataFrame
-    suite: Suite
-
-    def reports(self, df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
+    @property
+    def reports(self) -> DataFrame:
         """(key..., report) for every failing row — the reference's JSON
         violation document per row (see ``Suite.report_json_column``)."""
-        return df.filter(self.suite.any_failure_column()).select(
-            *key_cols, self.suite.report_json_column().alias("report")
-        )
+        return self.failing.select(*self.key_cols, "report")
+
+    def failing_counts(self, group_col: str, groups: Sequence[str]) -> List[Column]:
+        """Aggregates over ``failing`` for the i-th value of ``groups``:
+        ``rows_with_violations_i`` (its failing rows) and ``violations_i``
+        (their ``sum(size(failures))``, NULL when it has none). Observed
+        (``DataFrame.observe``) on a write that reads ``failing`` anyway,
+        they cost no job of their own."""
+        out = []
+        for i, g in enumerate(groups):
+            hit = F.col(group_col) == g
+            out += [
+                F.count(F.when(hit, F.lit(1))).alias(f"rows_with_violations_{i}"),
+                F.sum(F.when(hit, F.size("failures"))).alias(f"violations_{i}"),
+            ]
+        return out
 
     def verdict(self, partition_cols: Sequence[str], df: DataFrame) -> DataFrame:
         """Per-partition pass/fail + metrics (north rule): rows scanned,
-        violations, pass = no violations. Partial aggregation (map-side
-        combine) keeps this a single shuffle at any scale."""
+        violations, pass = no violations, over every row of ``df`` (one
+        all-rows job; ``ValidationRun`` takes the same counts from
+        ``failing_counts`` and its pending scan instead). Partial
+        aggregation (map-side combine) keeps this a single shuffle at any
+        scale."""
         nf = self.suite.failure_count_column()
         flagged = df.select(*partition_cols, nf.alias("_nf"))
         return flagged.groupBy(*partition_cols).agg(

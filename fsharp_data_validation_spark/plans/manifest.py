@@ -38,11 +38,12 @@ import json
 import os
 import shutil
 import time
-from dataclasses import dataclass
-from typing import List, Optional, Sequence
+from dataclasses import dataclass, replace
+from typing import Dict, List, Optional, Sequence
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
+from ..cache import persist_tracked, unpersist_tracked
 from ..functions.compiler import Suite
 
 # the rendering of a NULL partition value: Hive's directory name for it, so
@@ -280,20 +281,24 @@ class ValidationRun:
             F.col(self.partition_col).cast("string"), F.lit(_NULL_PARTITION)
         )
 
-    def pending_partitions(self, df: DataFrame) -> List[str]:
+    def pending_partitions(self, df: DataFrame) -> Dict[str, int]:
+        """{partition: rows} for every partition still to validate, in
+        partition order. One scan counts the rows of every partition; the
+        counts are keyed by the rendered value, so values that render alike
+        (NULL and a literal ``__HIVE_DEFAULT_PARTITION__``) add up."""
         pcol = self.partition_col
-        all_parts = [
-            r[0]
-            for r in df.select(pcol).distinct().orderBy(pcol).select(self._part()).collect()
-        ]
+        rows: Dict[str, int] = {}
+        counts = df.groupBy(pcol).count().orderBy(pcol).select(self._part(), "count")
+        for part, n in counts.collect():
+            rows[part] = rows.get(part, 0) + n
         done = self.completed_partitions()
         drifted = set(self.drifted_partitions())
         if drifted:
             if self.on_drift == "error":
                 raise SnapshotDriftError(sorted(drifted), self.input_snapshot)
             if self.on_drift == "revalidate":
-                return [p for p in all_parts if p not in done or p in drifted]
-        return [p for p in all_parts if p not in done]
+                return {p: n for p, n in rows.items() if p not in done or p in drifted}
+        return {p: n for p, n in rows.items() if p not in done}
 
     def run(
         self,
@@ -302,54 +307,79 @@ class ValidationRun:
         batch_size: int = 1,
     ) -> List[PartitionOutcome]:
         """Validate pending partitions; ``batch_size`` partitions share one
-        stats job + one partitioned write (dynamic overwrite), so the job
-        count is 2*ceil(P/K) instead of 2*P — at thousands of Iceberg
-        day/bucket partitions this is the difference between a scheduler
-        stall and a handful of wide jobs. Manifest entries are recorded per
-        batch; an interrupted run redoes at most one batch.
+        evaluation and one partitioned write per output (dynamic overwrite),
+        so the job count grows with ceil(P/K), not P — at thousands of
+        Iceberg day/bucket partitions this is the difference between a
+        scheduler stall and a handful of wide jobs. Manifest entries are
+        recorded per batch, after its writes; an interrupted run redoes at
+        most one batch.
 
         Each batch is one ``Suite.run`` over the batch input plus a string
-        ``part`` column (the partition value): the stats come from its
-        ``verdict`` and every output is written partitioned by ``part``,
-        after the batch's ``part=`` directories are cleared from each."""
+        ``part`` column (the partition value). Its failing slice — keys,
+        ``part``, failures and (with ``emit_reports``) the report, one row
+        per failing row — is evaluated once, persisted, and freed when the
+        batch ends, raised or not. The violations write materializes it and
+        observes the per-partition ``rows_with_violations``/``violations``
+        counts on the way; the reports write reads it again; ``valid`` is
+        one filtered scan, and ``rows_scanned`` comes from the pending scan.
+        So a batch runs no all-rows stats job. Every output is written
+        partitioned by ``part``, after the batch's ``part=`` directories are
+        cleared from each."""
         pending = self.pending_partitions(df)
+        parts = list(pending)
         if max_partitions is not None:
-            pending = pending[:max_partitions]
+            parts = parts[:max_partitions]
         pvalue = self._part()
         # "part" carries the partition value; a key of that name is that column
         keys = [k for k in self.key_cols if k != "part"] + ["part"]
+        kept = ["failures"] + (["report"] if self.emit_reports else [])
         step = max(batch_size, 1)
         out_dirs = [self.violations_dir]
         out_dirs += [self.valid_dir] if self.emit_valid else []
         out_dirs += [self.reports_dir] if self.emit_reports else []
         outcomes = []
-        for i in range(0, len(pending), step):
-            batch = pending[i : i + step]
+        for i in range(0, len(parts), step):
+            batch = parts[i : i + step]
             started = time.time()
             # partition predicates -> partition pruning on a partitioned table
             pdf = df.filter(pvalue.isin(batch)).withColumn("part", pvalue)
             res = self.suite.run(pdf, keys)
-            stats = {r["part"]: r.asDict() for r in res.verdict(["part"], pdf).collect()}
-            _clear_parts(df.sparkSession, out_dirs, batch)
-            _write_parts(
-                res.violations.select(*keys, F.col("path_str").alias("path"), "code"),
-                self.violations_dir,
+            # one cached partition per batch partition: a cached plan runs
+            # without adaptive coalescing, so a shuffle above the input (a
+            # derived table) would otherwise leave spark.sql.shuffle.partitions
+            # partitions, and every write would open a file per part in each
+            failing = persist_tracked(
+                res.failing.select(*keys, *kept).repartition(len(batch), "part")
             )
-            if self.emit_valid:
-                # the pipeline-gate output (Giraffe-shape): only fully clean
-                # rows flow onward, partitioned like the input
-                _write_parts(res.valid, self.valid_dir)
-            if self.emit_reports:
-                # reference-wire-format JSON document per failing row
-                _write_parts(res.reports(pdf, keys), self.reports_dir)
-            for part in batch:
-                r = stats.get(part, {})
-                violations = r.get("violations") or 0
+            try:
+                res = replace(res, failing=failing)
+                # the violations write is the slice's first reader: it
+                # materializes the cache and counts the batch's failures
+                counts = Observation()
+                observed = failing.observe(counts, *res.failing_counts("part", batch))
+                _clear_parts(df.sparkSession, out_dirs, batch)
+                _write_parts(
+                    replace(res, failing=observed)
+                    .violations.select(*keys, F.col("path_str").alias("path"), "code"),
+                    self.violations_dir,
+                )
+                if self.emit_valid:
+                    # the pipeline-gate output (Giraffe-shape): only fully clean
+                    # rows flow onward, partitioned like the input
+                    _write_parts(res.valid, self.valid_dir)
+                if self.emit_reports:
+                    # reference-wire-format JSON document per failing row
+                    _write_parts(res.reports, self.reports_dir)
+            finally:
+                unpersist_tracked(failing)
+            stats = counts.get
+            for j, part in enumerate(batch):
+                violations = stats[f"violations_{j}"] or 0
                 outcome = PartitionOutcome(
                     partition=part,
                     status="fail" if violations else "pass",
-                    rows_scanned=r.get("rows_scanned", 0),
-                    rows_with_violations=r.get("rows_with_violations") or 0,
+                    rows_scanned=pending[part],
+                    rows_with_violations=stats[f"rows_with_violations_{j}"],
                     violations=violations,
                     constraints_evaluated=len(self.suite.codes),
                 )

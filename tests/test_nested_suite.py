@@ -664,7 +664,7 @@ def test_report_json_matches_reference_serializer(spark):
     # add a global (type-level) rule so the "failures" list is exercised
     suite.global_().check("rowConsistent", F.col("other") != -1)
     res = suite.run(_rows_df(spark, rows), ["rid"])
-    got = {r["rid"]: r["report"] for r in res.reports(_rows_df(spark, rows), ["rid"]).collect()}
+    got = {r["rid"]: r["report"] for r in res.reports.collect()}
 
     for row in rows:
         def child_proof(m):
@@ -737,7 +737,7 @@ def test_report_json_escapes_hostile_codes_and_names(spark):
     suite.global_().check(hostile_global, F.lit(False))
     got = {
         r["rid"]: r["report"]
-        for r in suite.run(df, ["rid"]).reports(df, ["rid"]).collect()
+        for r in suite.run(df, ["rid"]).reports.collect()
     }
 
     expected = render_failures_json(

@@ -494,6 +494,133 @@ def test_batch_compiles_suite_once(spark, tmp_path, monkeypatch):
     assert len(passes) == 1
 
 
+def test_batch_builds_each_column_once(spark, tmp_path, monkeypatch):
+    """A 3-batch run builds the failures arrays (data-facing and report
+    forms) and the report column once for the run, not once per batch:
+    each build is a burst of py4j calls."""
+    from fsharp_data_validation_spark.functions.compiler import Suite
+
+    builds = []
+    real_failures, real_report = Suite._failures, Suite._report_json
+
+    def failures(self, for_report):
+        builds.append(("failures", for_report))
+        return real_failures(self, for_report)
+
+    def report(f):
+        builds.append(("report",))
+        return real_report(f)
+
+    monkeypatch.setattr(Suite, "_failures", failures)
+    monkeypatch.setattr(Suite, "_report_json", staticmethod(report))
+    run = ValidationRun(
+        transcript_row_suite(), str(tmp_path / "out"), ["conv_id", "turn_idx"], "part",
+        emit_valid=True, emit_reports=True,
+    )
+    assert len(run.run(_df(spark), batch_size=1)) == 3  # parts a, b, c
+    assert sorted(builds) == [("failures", False), ("failures", True), ("report",)]
+
+
+def test_run_frees_only_its_failing_slice(spark, tmp_path, monkeypatch):
+    """Each batch persists its failing slice and frees that slice alone
+    when the batch ends, also when the batch raises: a caller's tracked
+    frame stays cached and the tracked count returns to its value before
+    the run."""
+    from fsharp_data_validation_spark import cache
+    from fsharp_data_validation_spark.plans import manifest
+
+    mine = cache.persist_tracked(_df(spark))
+    mine.count()
+    before = cache.tracked_count()
+    during = []
+    write = manifest._write_parts
+
+    def tracking(out, path):
+        during.append(cache.tracked_count())
+        write(out, path)
+
+    def raising(out, path):
+        raise RuntimeError("write failed")
+
+    try:
+        monkeypatch.setattr(manifest, "_write_parts", tracking)
+        run = ValidationRun(
+            transcript_row_suite(), str(tmp_path / "ok"), ["conv_id", "turn_idx"], "part",
+            emit_reports=True,
+        )
+        assert len(run.run(_df(spark), batch_size=2)) == 3
+        assert during and all(n == before + 1 for n in during)  # the batch's slice
+        assert cache.tracked_count() == before
+
+        monkeypatch.setattr(manifest, "_write_parts", raising)
+        run = ValidationRun(
+            transcript_row_suite(), str(tmp_path / "raises"), ["conv_id", "turn_idx"], "part",
+        )
+        with pytest.raises(RuntimeError, match="write failed"):
+            run.run(_df(spark), batch_size=2)
+        assert cache.tracked_count() == before
+        assert run.completed_partitions() == {}
+        level = mine.storageLevel
+        assert level.useMemory or level.useDisk  # the caller's frame is still cached
+    finally:
+        cache.unpersist_tracked(mine)
+
+
+@pytest.mark.parametrize("batch_size", [1, 3])
+def test_manifest_stats_equal_all_rows_verdict(spark, tmp_path, batch_size):
+    """The manifest's counts (failing-slice counts plus the pending scan's
+    row counts) equal the all-rows ``verdict`` per partition: for a string
+    partition column with a clean partition, a NULL and a literal
+    ``__HIVE_DEFAULT_PARTITION__`` (which render alike and add up), and for
+    a boolean one with NULLs."""
+    from fsharp_data_validation_spark.plans.manifest import _NULL_PARTITION
+
+    extra = spark.createDataFrame(
+        [
+            Row(conv_id="x9", turn_idx=0, role="user", text="a", tool=None, part=_NULL_PARTITION),
+            Row(conv_id="c4", turn_idx=0, role="user", text="fine", tool=None, part=_NULL_PARTITION),
+            Row(conv_id="c5", turn_idx=0, role="tool", text=None, tool="bad", part="c"),
+        ],
+        schema=SCHEMA,
+    )
+    df = _df(spark).union(extra).withColumns(
+        {
+            "part": F.when(F.col("part") != "b", F.col("part")),  # c2 -> NULL
+            "flag": F.when(F.col("conv_id") != "c3", F.col("conv_id") == "c1"),
+        }
+    )
+    df = df.union(  # partition d: no failing row
+        spark.createDataFrame(
+            [Row(conv_id="c6", turn_idx=0, role="user", text="ok", tool=None, part="d")],
+            schema=SCHEMA,
+        ).withColumn("flag", F.lit(False))
+    )
+    suite = transcript_row_suite()
+    keys = ["conv_id", "turn_idx"]
+    for pcol in ("part", "flag"):
+        out = str(tmp_path / f"{pcol}{batch_size}")
+        run = ValidationRun(suite, out, keys, pcol)
+        run.run(df, batch_size=batch_size)
+        got = {
+            p: (d["rows_scanned"], d["rows_with_violations"], d["violations"], d["status"])
+            for p, d in run.completed_partitions().items()
+        }
+        rendered = F.coalesce(F.col(pcol).cast("string"), F.lit(_NULL_PARTITION))
+        pdf = df.withColumn("part", rendered)
+        want = {
+            r["part"]: (
+                r["rows_scanned"],
+                r["rows_with_violations"],
+                r["violations"],
+                "pass" if r["pass"] else "fail",
+            )
+            for r in suite.run(pdf, keys + ["part"]).verdict(["part"], pdf).collect()
+        }
+        assert got == want, pcol
+        assert "pass" in {v[3] for v in want.values()}, pcol  # a clean partition
+    assert set(got) == {"true", "false", _NULL_PARTITION}
+
+
 def test_manifest_emit_reports(spark, tmp_path):
     """--emit-reports: per-row reference-wire-format JSON documents written
     alongside violations, partition-pruned and resume-consistent."""

@@ -248,3 +248,68 @@ def test_per_turn_text_equality_under_stable_ordering(spark):
     seq1 = [r["text"] for r in res.valid.orderBy(*key).select(*key, "text").collect()]
     seq2 = [r["text"] for r in res.valid.orderBy(*key).select(*key, "text").collect()]
     assert seq1 == seq2
+
+
+def _random_bytes(rng: random.Random, size: int) -> bytes:
+    """``size`` bytes of 1-4-byte UTF-8 characters, cut at ``size`` (so the
+    tail may be a truncated sequence), with stray invalid bytes mixed in."""
+    pieces = ["a", "é", "€", "中", "😀"]
+    out = b""
+    while len(out) < size:
+        if rng.random() < 0.1:
+            out += bytes([rng.choice([0x80, 0xBF, 0xC0, 0xF5, 0xFF])])
+        else:
+            out += rng.choice(pieces).encode()
+    return out[:size]
+
+
+def test_length_checks_match_character_length(spark):
+    """The length checks decide on ``octet_length`` where the byte length
+    settles the answer and count characters only in between; every result,
+    NULL included, equals the plain ``F.length`` predicate. Inputs: 1-4-byte
+    characters, invalid UTF-8 cast from binary, NULL, and byte lengths at
+    n, 4n and 4n+-1 (and n+-1, 4n-4, 4n-3) for each bound n."""
+    from pyspark.sql.types import BinaryType
+
+    rng = random.Random(13)
+    bounds = [0, 1, 2, 3, 5, 8]
+    sizes = sorted(
+        {
+            max(s, 0)
+            for n in bounds
+            for s in (n - 1, n, n + 1, 4 * n - 4, 4 * n - 3, 4 * n - 1, 4 * n, 4 * n + 1)
+        }
+    )
+    # per size: the fewest characters (4-byte ones, the last cut short),
+    # the most (ASCII), and random mixes
+    values = [None]
+    for s in sizes:
+        values += [("😀" * s).encode()[:s], b"a" * s]
+        values += [_random_bytes(rng, s) for _ in range(12)]
+    df = spark.createDataFrame(
+        [(bytearray(v) if v is not None else None,) for v in values],
+        StructType([StructField("b", BinaryType())]),
+    ).select(F.col("b").cast("string").alias("s"))
+
+    suite = Suite("len")
+    branch = suite.field("s")
+    want = []
+    for n in bounds:
+        branch.min_length(f"min{n}", n).max_length(f"max{n}", n).is_length(f"is{n}", n)
+        length = F.length("s")
+        want += [length >= n, length <= n, length == n]
+    branch.not_empty("not_empty").is_empty("is_empty")
+    want += [F.length("s") > 0, F.length("s") == 0]
+    got = [c.ok for c in suite.constraints]
+    assert len(got) == len(want)
+
+    rows = df.select(
+        "s",
+        *[c.alias(f"got{i}") for i, c in enumerate(got)],
+        *[c.alias(f"want{i}") for i, c in enumerate(want)],
+    ).collect()
+    assert len(rows) == len(values)
+    assert any(r["s"] is None for r in rows)
+    for r in rows:
+        for i in range(len(got)):
+            assert r[f"got{i}"] == r[f"want{i}"], (r["s"], suite.constraints[i].code)

@@ -245,18 +245,20 @@ def test_random_suite_shapes_match_kernel(spark):
             got.setdefault(r["rid"], set()).add((r["path_str"], r["code"]))
             n_rows[r["rid"]] = n_rows.get(r["rid"], 0) + 1
         # the allocation-free columns the verdict and the streaming
-        # aggregates count with agree with the violation rows, per row
+        # aggregates count with agree with the violation rows and with the
+        # failures array ValidationRun counts, per row
         flags = {
-            r["rid"]: (r["n"], r["any"])
+            r["rid"]: (r["n"], r["any"], r["size"])
             for r in df.select(
                 "rid",
                 suite.failure_count_column().alias("n"),
                 suite.any_failure_column().alias("any"),
+                F.size(suite.failures_column()).alias("size"),
             ).collect()
         }
         valid_ids = {r["rid"] for r in res.valid.select("rid").collect()}
         got_reports = {
-            r["rid"]: r["report"] for r in res.reports(df, ["rid"]).collect()
+            r["rid"]: r["report"] for r in res.reports.collect()
         }
         for row in rows:
             expected = kernel_failures(spec, row)
@@ -267,7 +269,7 @@ def test_random_suite_shapes_match_kernel(spark):
             )
             assert (row["rid"] in valid_ids) == (not expected)
             n = n_rows.get(row["rid"], 0)
-            assert flags[row["rid"]] == (n, n > 0), (trial, row, flags[row["rid"]], n)
+            assert flags[row["rid"]] == (n, n > 0, n), (trial, row, flags[row["rid"]], n)
             # byte-parity of the JSON report with the reference serializer
             exp_report = kernel_report(spec, row)
             assert got_reports.get(row["rid"]) == exp_report, (
