@@ -2028,11 +2028,10 @@ def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
 ))
 def q_top_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher repetition rule: per-document top word-bigram character
-    fraction (operators/text.py:top_ngram_fraction) — default "local"
-    kernel: row-local array_sort + run-length fold, ZERO shuffles (plan
-    pinned Exchange-free; the explode + hash-agg spec kernel remains
-    available and fuzz-pinned identical). Ties break lexicographically on
-    both engines."""
+    fraction (operators/text.py:top_ngram_fraction): row-local array_sort +
+    run-length fold, ZERO shuffles (plan pinned Exchange-free; fuzz-pinned
+    identical to the explode + hash-agg spec in the tests). Ties break
+    lexicographically on both engines."""
     from fsharp_data_validation_spark.operators.text import top_ngram_fraction
 
     return top_ngram_fraction(load_docs(spark, sf_dir), "doc_id", "text", n=2)

@@ -54,7 +54,8 @@ def _burn(n: int) -> int:
 def cpu_probe(procs: int, work: int = 30_000_000) -> float:
     """Fixed-work CPU probe: wall seconds for ``procs`` concurrent burn
     processes (the load shape the bench itself creates), min-of-3 after a
-    warm pass. Same kernel as tools/bench_scaling.py's cpu_ceiling."""
+    warm pass. tools/bench_scaling.py's cpu_ceiling calls it at N and 4N
+    processes for the hardware scaling ceiling."""
     import multiprocessing as mp
 
     def run() -> float:

@@ -23,10 +23,16 @@ validation library.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..cache import persist_tracked
-from .dedup import _shingle_sets, _verify_jaccard, shingles
+from .dedup import (
+    _rarest_prefix,
+    _shingle_rows,
+    _shingle_sets,
+    _verify_jaccard,
+    shingles,
+)
 
 
 def cross_contamination_pairs(
@@ -46,27 +52,11 @@ def cross_contamination_pairs(
     sets_t = persist_tracked(_shingle_sets(train, id_col, text_col, n))
     sets_e = persist_tracked(_shingle_sets(eval_df, id_col, text_col, n))
 
-    ex_t = sets_t.select(
-        "doc_id", F.size("sh").alias("n_sh"), F.explode("sh").alias("sh1")
-    )
-    ex_e = sets_e.select(
-        "doc_id", F.size("sh").alias("n_sh"), F.explode("sh").alias("sh1")
-    )
-    dfreq = (
-        ex_t.select("sh1")
-        .union(ex_e.select("sh1"))
-        .groupBy("sh1")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
+    ex_t, ex_e = _shingle_rows(sets_t), _shingle_rows(sets_e)
+    corpus = ex_t.select("sh1").union(ex_e.select("sh1"))
 
     def prefix(ex):
-        w = Window.partitionBy("doc_id").orderBy("df", "sh1")
-        return (
-            ex.join(dfreq, "sh1")
-            .withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") <= F.floor((1 - threshold) * F.col("n_sh")) + 1)
-            .select("doc_id", "sh1")
-        )
+        return _rarest_prefix(ex, corpus, threshold).select("doc_id", "sh1")
 
     cand = (
         prefix(ex_t)

@@ -113,6 +113,28 @@ def _verify_jaccard(
     )
 
 
+def _shingle_rows(sets_df: DataFrame) -> DataFrame:
+    """(doc_id, n_sh, sh1): one row per shingle of each set in ``sets_df``."""
+    return sets_df.select(
+        "doc_id", F.size("sh").alias("n_sh"), F.explode("sh").alias("sh1")
+    )
+
+
+def _rarest_prefix(ex: DataFrame, corpus: DataFrame, threshold: float) -> DataFrame:
+    """The AllPairs prefix of each doc in ``ex`` (``_shingle_rows``): its
+    ``floor((1-t)*n_sh) + 1`` shingles rarest by document frequency over
+    ``corpus``'s ``sh1`` rows, ties broken by shingle. Two sets with
+    Jaccard >= t (or a set contained >= t in another) share a prefix
+    shingle, so only prefixes need to enter the candidate join."""
+    dfreq = corpus.groupBy("sh1").agg(F.count(F.lit(1)).alias("df"))
+    w = Window.partitionBy("doc_id").orderBy("df", "sh1")
+    return (
+        ex.join(dfreq, "sh1")
+        .withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") <= F.floor((1 - threshold) * F.col("n_sh")) + 1)
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -137,15 +159,9 @@ def ngram_jaccard_pairs(
     sides); it is persisted so the tokenize/shingle pass runs once — at real
     scale this is the materialized intermediate of the dedup pipeline stage."""
     sets_df = persist_tracked(_shingle_sets(df, id_col, text_col, n))
-    ex = sets_df.select("doc_id", F.size("sh").alias("n_sh"), F.explode("sh").alias("sh1"))
-    dfreq = ex.groupBy("sh1").agg(F.count(F.lit(1)).alias("df"))
-    # rank each doc's shingles rarest-first; keep the prefix
-    w = Window.partitionBy("doc_id").orderBy("df", "sh1")
+    ex = _shingle_rows(sets_df)
     prefix = persist_tracked(  # both sides of the candidate self-join
-        ex.join(dfreq, "sh1")
-        .withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= F.floor((1 - threshold) * F.col("n_sh")) + 1)
-        .select("doc_id", "sh1")
+        _rarest_prefix(ex, ex, threshold).select("doc_id", "sh1")
     )
     cand = (
         prefix.alias("a")
@@ -631,16 +647,9 @@ def containment_dedup_pairs(
     keeps df small, hot shingles never enter prefixes. Verify is the exact
     set intersection, same persisted set table as the Jaccard path."""
     sets_df = persist_tracked(_shingle_sets(df, id_col, text_col, n))
-    ex = sets_df.select(
-        "doc_id", F.size("sh").alias("n_sh"), F.explode("sh").alias("sh1")
-    )
-    dfreq = ex.groupBy("sh1").agg(F.count(F.lit(1)).alias("df"))
-    w = Window.partitionBy("doc_id").orderBy("df", "sh1")
-    prefix = (
-        ex.join(dfreq, "sh1")
-        .withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= F.floor((1 - threshold) * F.col("n_sh")) + 1)
-        .select(F.col("doc_id").alias("id_a"), F.col("n_sh").alias("n_a"), "sh1")
+    ex = _shingle_rows(sets_df)
+    prefix = _rarest_prefix(ex, ex, threshold).select(
+        F.col("doc_id").alias("id_a"), F.col("n_sh").alias("n_a"), "sh1"
     )
     full = ex.select(
         F.col("doc_id").alias("id_b"), F.col("n_sh").alias("n_b"), "sh1"

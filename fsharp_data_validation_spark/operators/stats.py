@@ -85,16 +85,6 @@ def exact_quantiles(df: DataFrame, col: str, qs: Sequence[float]) -> DataFrame:
     return df.agg(*exprs)
 
 
-def approx_quantiles(df: DataFrame, col: str, qs: Sequence[float]) -> DataFrame:
-    """Built-in mergeable sketch (``percentile_approx``; GK-style) —
-    single-pass, partial-aggregating, the default at 100 TB."""
-    exprs = [
-        F.expr(f"percentile_approx({col}, {q}, 10000)").alias(f"q{int(q * 100)}")
-        for q in qs
-    ]
-    return df.agg(*exprs)
-
-
 # --- t-digest quantiles (Arrow-batched; zero per-row Python) -------------------
 #
 # Partition-local digests built vectorized over numpy arrays inside

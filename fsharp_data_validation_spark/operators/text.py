@@ -666,29 +666,25 @@ def _ngrams_expr(words, n: int):
 
 
 def top_ngram_fraction(
-    df: DataFrame, id_col: str, text_col: str, n: int = 2, kernel: str = "local"
+    df: DataFrame, id_col: str, text_col: str, n: int = 2
 ) -> DataFrame:
     """Per-document top word-n-gram character fraction — the Gopher
     repetition-quality rule (Rae et al. 2021, public): the share of a
     document's characters covered by occurrences of its single most
     frequent word n-gram. Template/boilerplate-heavy documents score high.
 
-    Two kernels, identical output (fuzz-pinned):
-
-    - ``kernel="local"`` (default): the per-doc mode needs NO cross-row
-      aggregation, so it is computed row-locally — ``array_sort`` the
-      n-gram array, then one fold (``F.aggregate``) finds the longest run
-      (= most frequent n-gram; strict ``>`` keeps the lexicographically
-      first on ties since the array is sorted). ZERO shuffles, perfectly
-      parallel. Measured on the 1M-doc bench corpus (one session, min-of-3,
-      BENCH.md): 29.7s vs 52.4s for the explode kernel at local[16]
-      (1.76x) and 89.6s vs 141.9s at local[4] (1.58x), N→4N scaling 0.75
-      vs 0.68 — the explode kernel's two corpus-scale shuffles of
-      near-unique (id, ngram) string keys are memory-bandwidth-bound.
-    - ``kernel="explode"``: explode + hash aggregate on (doc, ngram) +
-      per-doc window ranked (count desc, ngram asc). Kept as the
-      independent spec the local kernel is pinned against, and for inputs
-      whose per-doc arrays don't fit a row (pathological single-doc GBs).
+    The per-doc mode needs NO cross-row aggregation, so it is computed
+    row-locally — ``array_sort`` the n-gram array, then one fold
+    (``F.aggregate``) finds the longest run (= most frequent n-gram; strict
+    ``>`` keeps the lexicographically first on ties since the array is
+    sorted). ZERO shuffles, perfectly parallel. Measured on the 1M-doc bench
+    corpus against explode + hash aggregate on (doc, ngram) + a per-doc
+    window (one session, min-of-3, BENCH.md): 29.7s vs 52.4s at local[16]
+    (1.76x) and 89.6s vs 141.9s at local[4] (1.58x), N→4N scaling 0.75 vs
+    0.68 — the explode form's two corpus-scale shuffles of near-unique (id,
+    ngram) string keys are memory-bandwidth-bound. That explode form is the
+    independent spec this kernel is fuzz-pinned against
+    (``tests/test_round3_ops.py``).
 
     char_frac = occurrences · length(ngram) / length(text), LEAST-capped at
     1 (overlapping occurrences are counted per occurrence, the standard
@@ -696,8 +692,6 @@ def top_ngram_fraction(
     with fewer than ``n`` words emit no row (no n-gram exists).
 
     Returns (id, top_ngram, n_occurrences, char_frac)."""
-    from pyspark.sql import Window
-
     words = F.split(F.col(text_col), " ")
     grams = _ngrams_expr(words, n)
     # length > 0: an empty doc has no characters — the fraction is
@@ -708,82 +702,52 @@ def top_ngram_fraction(
         & (F.size(words) >= n)
     )
 
-    if kernel == "local":
-        best = F.aggregate(
-            F.array_sort(grams),
-            F.struct(
-                F.lit("").alias("prev"),
-                F.lit(0).alias("run"),
-                F.lit("").alias("best"),
-                F.lit(0).alias("best_run"),
-            ),
-            lambda acc, x: F.struct(
-                x.alias("prev"),
-                F.when(x == acc["prev"], acc["run"] + 1)
-                .otherwise(F.lit(1))
-                .alias("run"),
-                F.when(
-                    F.when(x == acc["prev"], acc["run"] + 1).otherwise(F.lit(1))
-                    > acc["best_run"],
-                    x,
-                )
-                .otherwise(acc["best"])
-                .alias("best"),
-                F.greatest(
-                    F.when(x == acc["prev"], acc["run"] + 1).otherwise(F.lit(1)),
-                    acc["best_run"],
-                ).alias("best_run"),
-            ),
-        )
-        return base.select(
-            F.col(id_col).alias("id"),
-            F.length(F.col(text_col)).alias("_chars"),
-            best.alias("_b"),
-        ).select(
-            "id",
-            F.col("_b.best").alias("top_ngram"),
-            F.col("_b.best_run").cast("bigint").alias("n_occurrences"),
-            F.round(
-                F.least(
-                    F.lit(1.0),
-                    F.col("_b.best_run") * F.length("_b.best") / F.col("_chars"),
-                ),
-                4,
-            ).alias("char_frac"),
-        )
-
-    exploded = base.select(
+    best = F.aggregate(
+        F.array_sort(grams),
+        F.struct(
+            F.lit("").alias("prev"),
+            F.lit(0).alias("run"),
+            F.lit("").alias("best"),
+            F.lit(0).alias("best_run"),
+        ),
+        lambda acc, x: F.struct(
+            x.alias("prev"),
+            F.when(x == acc["prev"], acc["run"] + 1)
+            .otherwise(F.lit(1))
+            .alias("run"),
+            F.when(
+                F.when(x == acc["prev"], acc["run"] + 1).otherwise(F.lit(1))
+                > acc["best_run"],
+                x,
+            )
+            .otherwise(acc["best"])
+            .alias("best"),
+            F.greatest(
+                F.when(x == acc["prev"], acc["run"] + 1).otherwise(F.lit(1)),
+                acc["best_run"],
+            ).alias("best_run"),
+        ),
+    )
+    return base.select(
         F.col(id_col).alias("id"),
         F.length(F.col(text_col)).alias("_chars"),
-        F.explode(grams).alias("ngram"),
-    )
-    counts = exploded.groupBy("id", "ngram").agg(
-        F.count(F.lit(1)).alias("n_occurrences"),
-        F.max("_chars").alias("_chars"),
-    )
-    w = Window.partitionBy("id").orderBy(
-        F.desc("n_occurrences"), F.asc("ngram")
-    )
-    return (
-        counts.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") == 1)
-        .select(
-            "id",
-            F.col("ngram").alias("top_ngram"),
-            F.col("n_occurrences").cast("bigint").alias("n_occurrences"),
-            F.round(
-                F.least(
-                    F.lit(1.0),
-                    F.col("n_occurrences") * F.length("ngram") / F.col("_chars"),
-                ),
-                4,
-            ).alias("char_frac"),
-        )
+        best.alias("_b"),
+    ).select(
+        "id",
+        F.col("_b.best").alias("top_ngram"),
+        F.col("_b.best_run").cast("bigint").alias("n_occurrences"),
+        F.round(
+            F.least(
+                F.lit(1.0),
+                F.col("_b.best_run") * F.length("_b.best") / F.col("_chars"),
+            ),
+            4,
+        ).alias("char_frac"),
     )
 
 
 def dup_ngram_fraction(
-    df: DataFrame, id_col: str, text_col: str, n: int = 5, kernel: str = "local"
+    df: DataFrame, id_col: str, text_col: str, n: int = 5
 ) -> DataFrame:
     """Per-document DUPLICATED word-n-gram character fraction — the second
     Gopher repetition rule (Rae et al. 2021): the share of a document's
@@ -793,13 +757,12 @@ def dup_ngram_fraction(
     standard approximation), so the ratio is LEAST-capped at 1. Only
     documents with at least one duplicated n-gram emit a row.
 
-    Kernels as in ``top_ngram_fraction`` (identical output, fuzz-pinned):
-    ``"local"`` (default) sorts the per-doc n-gram array and folds over
-    runs — a run of length c >= 2 closing contributes (1 dup n-gram,
-    c·len chars), with the final run flushed in the aggregate's finish
-    lambda; zero shuffles. ``"explode"`` is the explode + (doc, ngram)
-    hash-agg independent spec — same memory-bandwidth-bound shuffle story
-    as top_ngram_fraction's (BENCH.md).
+    Row-local like ``top_ngram_fraction``: sort the per-doc n-gram array
+    and fold over runs — a run of length c >= 2 closing contributes (1 dup
+    n-gram, c·len chars), with the final run flushed in the aggregate's
+    finish lambda; zero shuffles. Fuzz-pinned against the explode +
+    (doc, ngram) hash-agg spec, whose corpus-scale shuffles are the same
+    memory-bandwidth-bound story as top_ngram_fraction's (BENCH.md).
 
     Returns (id, n_dup_ngrams, dup_char_frac)."""
     words = F.split(F.col(text_col), " ")
@@ -810,84 +773,60 @@ def dup_ngram_fraction(
         & (F.size(words) >= n)
     )
 
-    if kernel == "local":
-        # close_run: the (dup count, dup chars) contribution of the run
-        # that just ended — 0 unless it reached length 2
-        def step(acc, x):
-            closing = (x != acc["prev"]) & (acc["run"] >= 2)
-            return F.struct(
-                x.alias("prev"),
-                F.when(x == acc["prev"], acc["run"] + 1)
-                .otherwise(F.lit(1))
-                .alias("run"),
-                (acc["dup_n"] + F.when(closing, 1).otherwise(0)).alias("dup_n"),
-                (
-                    acc["dup_chars"]
-                    + F.when(
-                        closing, acc["run"].cast("long") * F.length(acc["prev"])
-                    ).otherwise(F.lit(0))
-                ).alias("dup_chars"),
-            )
-
-        def finish(acc):
-            last_dup = acc["run"] >= 2
-            return F.struct(
-                (acc["dup_n"] + F.when(last_dup, 1).otherwise(0)).alias("dup_n"),
-                (
-                    acc["dup_chars"]
-                    + F.when(
-                        last_dup, acc["run"].cast("long") * F.length(acc["prev"])
-                    ).otherwise(F.lit(0))
-                ).alias("dup_chars"),
-            )
-
-        folded = F.aggregate(
-            F.array_sort(grams),
-            F.struct(
-                F.lit("").alias("prev"),
-                F.lit(0).alias("run"),
-                F.lit(0).alias("dup_n"),
-                F.lit(0).cast("long").alias("dup_chars"),
-            ),
-            step,
-            finish,
-        )
-        return (
-            base.select(
-                F.col(id_col).alias("id"),
-                F.length(F.col(text_col)).alias("_chars"),
-                folded.alias("_f"),
-            )
-            .filter(F.col("_f.dup_n") > 0)
-            .select(
-                "id",
-                F.col("_f.dup_n").cast("bigint").alias("n_dup_ngrams"),
-                F.round(
-                    F.least(
-                        F.lit(1.0), F.col("_f.dup_chars") / F.col("_chars")
-                    ),
-                    4,
-                ).alias("dup_char_frac"),
-            )
+    # close_run: the (dup count, dup chars) contribution of the run
+    # that just ended — 0 unless it reached length 2
+    def step(acc, x):
+        closing = (x != acc["prev"]) & (acc["run"] >= 2)
+        return F.struct(
+            x.alias("prev"),
+            F.when(x == acc["prev"], acc["run"] + 1)
+            .otherwise(F.lit(1))
+            .alias("run"),
+            (acc["dup_n"] + F.when(closing, 1).otherwise(0)).alias("dup_n"),
+            (
+                acc["dup_chars"]
+                + F.when(
+                    closing, acc["run"].cast("long") * F.length(acc["prev"])
+                ).otherwise(F.lit(0))
+            ).alias("dup_chars"),
         )
 
-    exploded = base.select(
-        F.col(id_col).alias("id"),
-        F.length(F.col(text_col)).alias("_chars"),
-        F.explode(grams).alias("ngram"),
-    )
-    counts = exploded.groupBy("id", "ngram").agg(
-        F.count(F.lit(1)).alias("c"), F.max("_chars").alias("_chars")
+    def finish(acc):
+        last_dup = acc["run"] >= 2
+        return F.struct(
+            (acc["dup_n"] + F.when(last_dup, 1).otherwise(0)).alias("dup_n"),
+            (
+                acc["dup_chars"]
+                + F.when(
+                    last_dup, acc["run"].cast("long") * F.length(acc["prev"])
+                ).otherwise(F.lit(0))
+            ).alias("dup_chars"),
+        )
+
+    folded = F.aggregate(
+        F.array_sort(grams),
+        F.struct(
+            F.lit("").alias("prev"),
+            F.lit(0).alias("run"),
+            F.lit(0).alias("dup_n"),
+            F.lit(0).cast("long").alias("dup_chars"),
+        ),
+        step,
+        finish,
     )
     return (
-        counts.filter(F.col("c") >= 2)
-        .groupBy("id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_dup_ngrams"),
+        base.select(
+            F.col(id_col).alias("id"),
+            F.length(F.col(text_col)).alias("_chars"),
+            folded.alias("_f"),
+        )
+        .filter(F.col("_f.dup_n") > 0)
+        .select(
+            "id",
+            F.col("_f.dup_n").cast("bigint").alias("n_dup_ngrams"),
             F.round(
                 F.least(
-                    F.lit(1.0),
-                    F.sum(F.col("c") * F.length("ngram")) / F.max("_chars"),
+                    F.lit(1.0), F.col("_f.dup_chars") / F.col("_chars")
                 ),
                 4,
             ).alias("dup_char_frac"),

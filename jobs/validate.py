@@ -18,6 +18,7 @@ import json
 import os
 import sys
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession, functions as F
 
 # running straight from the repo (no --py-files): put the repo root on the path
@@ -25,10 +26,29 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from fsharp_data_validation_spark.operators.transcript_suite import transcript_row_suite
 from fsharp_data_validation_spark.plans.manifest import ValidationRun
+from fsharp_data_validation_spark.sources.session import get_spark
 from fsharp_data_validation_spark.sources.transcripts import (
     derive_transcripts,
     load_transcripts,
 )
+
+
+def _session() -> SparkSession:
+    """The caller's active session when ``main`` runs in-process, used as
+    it is. Otherwise ``get_spark``'s session (UTC session time zone, so
+    ``to_date(ts)`` partitions do not follow the host's zone; shuffle
+    partitions sized to the cores; the ``pyworker`` daemon) on the master
+    spark-submit launched this process with: ``builder.master()`` would
+    override its ``--master``. Run as a plain script, get_spark's local
+    default applies."""
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
+    master = None
+    if "PYSPARK_GATEWAY_PORT" in os.environ:  # launched by spark-submit
+        SparkContext._ensure_initialized()  # attach to the launching JVM
+        master = SparkConf().get("spark.master", None)
+    return get_spark(app="validate_transcripts", master=master)
 
 
 def main(argv=None) -> int:
@@ -100,7 +120,7 @@ def main(argv=None) -> int:
     )
     args = ap.parse_args(argv)
 
-    spark = SparkSession.builder.appName("validate_transcripts").getOrCreate()
+    spark = _session()
     spark.sparkContext.setLogLevel("WARN")
 
     if args.events_dir:

@@ -220,10 +220,9 @@ def _calls(tree):
 def test_every_option_is_passed_somewhere():
     """Each defaulted parameter of a public package function is passed, by
     keyword or by position, at one or more call sites anywhere in the repo,
-    tests included (``kernel="explode"`` and ``blocks=1`` are reference
-    paths only tests take). An option no caller sets only ever takes its
-    default, so it is a constant. A call with ``*args`` or ``**kw`` passes
-    every parameter."""
+    tests included (``blocks=1`` is a reference path only tests take). An
+    option no caller sets only ever takes its default, so it is a constant.
+    A call with ``*args`` or ``**kw`` passes every parameter."""
     n_pos, kws = {}, {}  # callee -> most positional args, keywords passed
     for tree in _trees([*CONSUMERS, *(ROOT / "tests").glob("*.py")]).values():
         for name, c in _calls(tree):

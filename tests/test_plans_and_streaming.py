@@ -468,6 +468,33 @@ def test_job_killed_after_batch_writes_resumes_exactly(spark, tmp_path):
     assert _job_outputs(spark, resumed) == _job_outputs(spark, whole)
 
 
+def test_job_partitions_by_utc_date_in_any_host_zone(spark, tmp_path):
+    """jobs/validate.py run in a process whose host time zone is
+    Asia/Tokyo writes the same rows, partitions and manifest documents as
+    an in-process run: its session has get_spark's UTC session time zone,
+    so the ``to_date(ts)`` partitions do not follow the host's zone."""
+    import subprocess
+    import sys
+
+    jobs = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "jobs")
+    sys.path.insert(0, jobs)
+    import validate as job
+
+    args = ["--events-dir", "/root/testdata/sf0.001", "--emit-valid",
+            "--emit-reports", "--output"]
+    here, tokyo = str(tmp_path / "here"), str(tmp_path / "tokyo")
+    assert job.main(args + [here]) == 0
+    run = subprocess.run(
+        [sys.executable, "-c",
+         "import sys; sys.path.insert(0, sys.argv[1]); import validate; "
+         "sys.exit(validate.main(sys.argv[2:]))", jobs, *args, tokyo],
+        cwd=os.path.dirname(jobs), env={**os.environ, "TZ": "Asia/Tokyo"},
+        capture_output=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr.decode()[-2000:]
+    assert _job_outputs(spark, tokyo) == _job_outputs(spark, here)
+
+
 def test_batch_compiles_suite_once(spark, tmp_path, monkeypatch):
     """One ValidationRun batch that writes violations, valid rows and
     reports runs the suite's mask algebra once: the split, the verdict

@@ -461,9 +461,73 @@ def test_vocab_growth_first_appearance(spark):
     assert got["2024-01-04"]["vocab_size"] == 5
 
 
+def _explode_ngrams(df, n):
+    """(id, _chars, ngram) per n-gram occurrence of each doc with >= n words
+    and non-empty text: the explode side of the Gopher reference specs."""
+    from fsharp_data_validation_spark.operators.text import _ngrams_expr
+
+    words = F.split(F.col("text"), " ")
+    return df.filter(
+        F.col("text").isNotNull() & (F.length("text") > 0) & (F.size(words) >= n)
+    ).select(
+        F.col("doc_id").alias("id"),
+        F.length("text").alias("_chars"),
+        F.explode(_ngrams_expr(words, n)).alias("ngram"),
+    )
+
+
+def _top_ngram_explode(df, n):
+    """Reference spec of ``top_ngram_fraction``: explode + hash aggregate on
+    (doc, ngram) + per-doc window ranked (count desc, ngram asc)."""
+    from pyspark.sql import Window
+
+    counts = _explode_ngrams(df, n).groupBy("id", "ngram").agg(
+        F.count(F.lit(1)).alias("n_occurrences"), F.max("_chars").alias("_chars")
+    )
+    w = Window.partitionBy("id").orderBy(F.desc("n_occurrences"), F.asc("ngram"))
+    return (
+        counts.withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") == 1)
+        .select(
+            "id",
+            F.col("ngram").alias("top_ngram"),
+            F.col("n_occurrences").cast("bigint").alias("n_occurrences"),
+            F.round(
+                F.least(
+                    F.lit(1.0),
+                    F.col("n_occurrences") * F.length("ngram") / F.col("_chars"),
+                ),
+                4,
+            ).alias("char_frac"),
+        )
+    )
+
+
+def _dup_ngram_explode(df, n):
+    """Reference spec of ``dup_ngram_fraction``: explode + (doc, ngram)
+    hash aggregate, then a per-doc sum over the n-grams seen 2+ times."""
+    counts = _explode_ngrams(df, n).groupBy("id", "ngram").agg(
+        F.count(F.lit(1)).alias("c"), F.max("_chars").alias("_chars")
+    )
+    return (
+        counts.filter(F.col("c") >= 2)
+        .groupBy("id")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_dup_ngrams"),
+            F.round(
+                F.least(
+                    F.lit(1.0),
+                    F.sum(F.col("c") * F.length("ngram")) / F.max("_chars"),
+                ),
+                4,
+            ).alias("dup_char_frac"),
+        )
+    )
+
+
 def test_gopher_kernels_equivalent(spark):
     """The zero-shuffle sorted-runs fold kernels must produce EXACTLY the
-    explode + hash-agg spec's output — fuzzed over random short docs plus
+    explode + hash-agg specs' output — fuzzed over random short docs plus
     the adversarial edges (empty text, single word, all-same words,
     empty-string words from double spaces)."""
     import random
@@ -493,19 +557,11 @@ def test_gopher_kernels_equivalent(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     for n in (1, 2, 3):
-        a = sorted(
-            map(tuple, top_ngram_fraction(df, "doc_id", "text", n, kernel="local").collect())
-        )
-        b = sorted(
-            map(tuple, top_ngram_fraction(df, "doc_id", "text", n, kernel="explode").collect())
-        )
+        a = sorted(map(tuple, top_ngram_fraction(df, "doc_id", "text", n).collect()))
+        b = sorted(map(tuple, _top_ngram_explode(df, n).collect()))
         assert a == b, f"top_ngram kernels diverge at n={n}"
-        c = sorted(
-            map(tuple, dup_ngram_fraction(df, "doc_id", "text", n, kernel="local").collect())
-        )
-        d = sorted(
-            map(tuple, dup_ngram_fraction(df, "doc_id", "text", n, kernel="explode").collect())
-        )
+        c = sorted(map(tuple, dup_ngram_fraction(df, "doc_id", "text", n).collect()))
+        d = sorted(map(tuple, _dup_ngram_explode(df, n).collect()))
         assert c == d, f"dup_ngram kernels diverge at n={n}"
 
 
