@@ -136,24 +136,15 @@ def context_budget_violations(
     running frame over the same total order as ``conversation_flow_violations``
     (turn_idx, ts, role, text, tool) so tie handling is engine-portable:
     fully-identical rows are the only possible ties, and their cum values
-    form the same multiset under any tiebreak. Token rule matches
-    ``operators/text.py:token_count`` (single-space split; NULL -> 0);
-    ``tokenizer="bpe"`` budgets in greedy-subword tokens instead
-    (``operators/text.py:bpe_token_count_col`` — still a column expr)."""
+    form the same multiset under any tiebreak. Tokens are counted by
+    ``operators/text.py:token_count_col`` (single-space split; NULL -> 0);
+    ``tokenizer="bpe"`` budgets in greedy-subword tokens instead (still a
+    column expr)."""
     t = F.coalesce(F.col("text"), F.lit(""))
     o = F.coalesce(F.col("tool"), F.lit(""))
-    if tokenizer == "bpe":
-        from .text import bpe_token_count_col
+    from .text import token_count_col
 
-        n_tokens = bpe_token_count_col("text")
-    elif tokenizer == "whitespace":
-        n_tokens = (
-            F.when(F.col("text").isNull(), F.lit(0))
-            .otherwise(F.size(F.split(F.col("text"), " ")))
-            .cast("bigint")
-        )
-    else:
-        raise ValueError(f"tokenizer must be whitespace|bpe, got {tokenizer!r}")
+    n_tokens = token_count_col("text", tokenizer)
     w = (
         Window.partitionBy("conv_id")
         .orderBy("turn_idx", "ts", "role", t, o)

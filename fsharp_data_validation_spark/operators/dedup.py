@@ -29,6 +29,7 @@ from __future__ import annotations
 from typing import List, Tuple
 
 from ..cache import persist_tracked
+from .text import word_ngrams
 
 from pyspark.sql import DataFrame, Window, functions as F
 
@@ -43,16 +44,9 @@ def md5_int(col: F.Column, salt: str | None = None) -> F.Column:
 
 
 def shingles(text_col: F.Column, n: int = 3) -> F.Column:
-    """Distinct word n-gram shingles of a text column (higher-order
-    functions only). Empty/short texts yield an empty array."""
-    words = F.split(text_col, " ")
-    idx = F.sequence(F.lit(0), F.size(words) - n)
-    grams = F.transform(idx, lambda i: F.array_join(F.slice(words, i + 1, n), " "))
-    # texts shorter than n words have no shingles (sequence() would count
-    # backwards for a negative stop, so gate it)
-    return F.when(F.size(words) >= n, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<string>")
-    )
+    """Distinct word n-gram shingles of a text column (``word_ngrams``).
+    NULL, empty and short texts yield an empty array."""
+    return F.array_distinct(word_ngrams(F.split(text_col, " "), n))
 
 
 def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -721,11 +715,11 @@ def span_dedup(
     gram-inverted-index formulation does, and is the standard Spark
     re-expression):
 
-    1. ONE projection builds per-doc gram structs row-locally (split +
-       sequence + transform over token slices, all codegen'd; the md5 gram
-       key is portable to DuckDB). Explode -> (key, doc_id, start): one row
-       per token, the same explode factor as the shingle inverted index
-       ``ngram_jaccard_pairs`` already carries.
+    1. ONE projection builds per-doc gram structs row-locally
+       (``word_ngrams``, then an indexed transform to (start, md5 key); the
+       md5 gram key is portable to DuckDB). Explode -> (key, doc_id,
+       start): one row per token, the same explode factor as the shingle
+       inverted index ``ngram_jaccard_pairs`` already carries.
     2. ONE shuffle of the gram table: a row_number window over (key)
        ordered by (doc_id, start) — rank 1 is the canonical occurrence,
        everything else is a duplicated span. This was first built as
@@ -751,20 +745,11 @@ def span_dedup(
     A doc with NULL text is passed through with NULL text_clean and zero
     counts. Returns (doc_id-aliased id_col, n_tokens, n_dup_grams,
     n_removed, text_clean)."""
-    words = F.split(F.col(text_col), " ")
-    starts = F.sequence(F.lit(0), F.size(words) - gram_len)
-    gram_structs = F.when(
-        (F.col(text_col).isNotNull()) & (F.size(words) >= gram_len),
-        F.transform(
-            starts,
-            lambda i: F.struct(
-                i.alias("start"),
-                F.md5(F.array_join(F.slice(words, i + 1, gram_len), " ")).alias(
-                    "key"
-                ),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<start:int,key:string>>"))
+    # a 2-arg lambda binds (element, index): the index is the gram's start
+    gram_structs = F.transform(
+        word_ngrams(F.split(F.col(text_col), " "), gram_len),
+        lambda g, i: F.struct(i.alias("start"), F.md5(g).alias("key")),
+    )
 
     occ = (
         df.select(F.col(id_col).alias("_id"), F.explode(gram_structs).alias("g"))

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from ..cache import persist_tracked
 from .dedup import md5_int
+from .text import word_ngrams
 
 #: md5_int(hex_chars=15) is uniform on [0, 16**15).
 _MD5_15_MAX = 16 ** 15
@@ -282,7 +283,7 @@ def dsir_weights(
     quadratic and nothing model-sized beyond ``n_buckets`` rows:
 
     1. One row-local projection builds unigrams + bigrams (split +
-       transform, codegen'd) and hashes each into one of ``n_buckets``
+       ``word_ngrams``) and hashes each into one of ``n_buckets``
        buckets with the portable md5 bucket hash (``md5_int % B`` — the
        same gram may collide, which IS the method: hashing is the
        dimensionality bound that lets the model stay KB-scale at any
@@ -301,15 +302,8 @@ def dsir_weights(
     lam = 1.0
     b = int(n_buckets)
     words = F.split(F.col(text_col), " ")
-    bigrams = F.when(
-        F.size(words) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - 2),
-            lambda i: F.array_join(F.slice(words, i + 1, 2), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     grams = F.when(
-        F.col(text_col).isNotNull(), F.concat(words, bigrams)
+        F.col(text_col).isNotNull(), F.concat(words, word_ngrams(words, 2))
     ).otherwise(F.array().cast("array<string>"))
 
     base = df.select(

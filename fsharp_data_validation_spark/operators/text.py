@@ -96,6 +96,47 @@ def bpe_token_count_col(text_col) -> F.Column:
     return F.when(c.isNull(), F.lit(0)).otherwise(n).cast("bigint")
 
 
+def token_count_col(text_col: str, tokenizer: str) -> F.Column:
+    """The text family's token count of a text column as a BIGINT, NULL
+    text counting 0: single-space words (``"whitespace"``; ``''`` is one
+    empty word) or greedy-subword tokens (``"bpe"``,
+    ``bpe_token_count_col``). A budget or report that counts tokens calls
+    it."""
+    if tokenizer == "bpe":
+        return bpe_token_count_col(text_col)
+    if tokenizer != "whitespace":
+        raise ValueError(f"tokenizer must be whitespace|bpe, got {tokenizer!r}")
+    c = F.col(text_col)
+    return F.when(c.isNull(), F.lit(0)).otherwise(F.size(F.split(c, " "))).cast("bigint")
+
+
+def word_ngrams(words, n: int) -> F.Column:
+    """The positional word n-grams of a split-words array column: element
+    ``i`` joins words ``i .. i+n-1`` with single spaces, and the array is
+    empty when there are fewer than ``n`` words (NULL words included). The
+    text family's one n-gram builder: a new consumer calls it.
+
+    ``words`` is bound once, as the variable of a ``transform`` over a
+    one-element array. A higher-order lambda runs interpreted and
+    evaluates every outer expression it mentions on each call, so a lambda
+    over ``split(text)`` itself splits the text again for every word of
+    every n-gram: 11.1 s against 0.93 s for the bigrams of 100k
+    35-55-word docs (local[4], BENCH.md "One word-n-gram builder")."""
+
+    def grams(ws):
+        return F.when(
+            F.size(ws) >= n,
+            F.transform(
+                F.sequence(F.lit(0), F.size(ws) - n),
+                lambda i: F.concat_ws(
+                    " ", *[F.element_at(ws, i + (k + 1)) for k in range(n)]
+                ),
+            ),
+        ).otherwise(F.array())
+
+    return F.element_at(F.transform(F.array(words), grams), 1)
+
+
 def bpe_oracle_expr(text_expr: str) -> str:
     """The DuckDB rendering of ``bpe_token_count_col`` (same pattern
     string, RE2 leftmost-first) for oracle SQL construction."""
@@ -222,24 +263,17 @@ def redact_pii(
 
 def repetition_score(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
     """Repeated-bigram ratio — the standard template/boilerplate quality
-    signal (1 - distinct bigrams / total bigrams; 0 = no repetition).
-    Row-local array expressions (split -> indexed transform -> distinct):
-    no explode, no shuffle, embarrassingly parallel. The indexed-transform
-    lambda is interpreted (see BENCH.md HOF note) but runs once per DOC on
-    a words array, not per token via explode+agg — for a per-doc score the
-    row-local form wins because nothing needs aggregating."""
+    signal (1 - distinct bigrams / total bigrams; 0 = no repetition) over
+    the non-empty words. Row-local array expressions (split -> filter ->
+    ``word_ngrams`` -> distinct): no explode, no shuffle, embarrassingly
+    parallel. The n-gram lambda is interpreted (see BENCH.md HOF note) but
+    runs once per DOC on a words array, not per token via explode+agg — for
+    a per-doc score the row-local form wins because nothing needs
+    aggregating."""
     words = F.filter(F.split(F.col(text_col), " "), lambda x: F.length(x) > 0)
-    grams = F.when(
-        F.size(F.col("_w")) >= 2,
-        F.expr(
-            "transform(sequence(1, size(_w) - 1), "
-            "i -> concat(element_at(_w, i), ' ', element_at(_w, i + 1)))"
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     g = F.col("_g")
     return (
-        df.select(F.col(id_col), words.alias("_w"))
-        .select(F.col(id_col), grams.alias("_g"))
+        df.select(F.col(id_col), word_ngrams(words, 2).alias("_g"))
         .select(
             F.col(id_col),
             F.size(g).cast("bigint").alias("n_grams"),
@@ -423,10 +457,11 @@ def pack_context_windows(
     O(1), never corpus-scale. The DuckDB oracle is an independent
     recursive-CTE spec of the same recurrence.
 
-    ``tokenizer`` selects the budget unit: ``"whitespace"`` (default, the
-    rule of ``token_count``) or ``"bpe"`` (greedy-subword counts via
-    ``bpe_token_count_col`` — still a JVM column expression, so the packing
-    recurrence is unchanged and Python still never sees the text).
+    ``tokenizer`` selects the budget unit of ``token_count_col``:
+    ``"whitespace"`` (default) or ``"bpe"`` (greedy-subword counts — still a
+    JVM column expression, so the packing recurrence is unchanged and
+    Python still never sees the text). NULL text counts 0 tokens, as in the
+    oracle, and ``''`` one (one empty token) on both engines.
     """
     import numpy as np
     import pandas as pd
@@ -437,23 +472,11 @@ def pack_context_windows(
         StructType,
     )
 
-    if tokenizer == "bpe":
-        n_tok = bpe_token_count_col(text_col).cast("long")
-    elif tokenizer == "whitespace":
-        # NULL text counts 0 tokens (len(string_split(NULL)) is NULL -> 0 in
-        # the oracle); '' counts 1 (one empty token) on both engines
-        n_tok = (
-            F.when(F.col(text_col).isNull(), F.lit(0))
-            .otherwise(F.size(F.split(F.col(text_col), " ")))
-            .cast("long")
-        )
-    else:
-        raise ValueError(f"tokenizer must be whitespace|bpe, got {tokenizer!r}")
     proj = (
         df.select(
             F.col(conv_col),
             F.col(order_col),
-            n_tok.alias("n_tokens"),
+            token_count_col(text_col, tokenizer).alias("n_tokens"),
             F.coalesce(F.col(text_col), F.lit("")).alias("_t"),
         )
         .repartition(F.col(conv_col))
@@ -595,12 +618,9 @@ def mixture_report(df: DataFrame, group_cols) -> DataFrame:
     from pyspark.sql import Window
 
     gs = [group_cols] if isinstance(group_cols, str) else list(group_cols)
-    n_tok = F.size(F.split(F.col("text"), " "))
     agg = df.groupBy(*gs).agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.when(F.col("text").isNull(), 0).otherwise(n_tok))
-        .cast("bigint")
-        .alias("n_tokens"),
+        F.sum(token_count_col("text", "whitespace")).alias("n_tokens"),
     )
     wall = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     return agg.select(
@@ -654,14 +674,22 @@ def tfidf_top_terms(
     )
 
 
-def _ngrams_expr(words, n: int):
-    """Word n-gram array, built row-locally: sequence(0, size-n) indexes
-    each n-gram start; element_at is 1-based."""
-    return F.transform(
-        F.sequence(F.lit(0), F.size(words) - F.lit(n)),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(words, (i + F.lit(k + 1)).cast("int")) for k in range(n)]
-        ),
+def _gopher_grams(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """The two Gopher rules' shared prelude: (id, _chars, _g) for each
+    document with non-NULL, non-empty text and at least ``n`` words, where
+    ``_g`` is its sorted word n-grams, so each distinct n-gram's
+    occurrences form one run for the rule's fold."""
+    words = F.split(F.col(text_col), " ")
+    # length > 0: an empty doc has no characters — the fraction is
+    # undefined (and ANSI mode would reject the 0 divisor)
+    return df.filter(
+        F.col(text_col).isNotNull()
+        & (F.length(F.col(text_col)) > 0)
+        & (F.size(words) >= n)
+    ).select(
+        F.col(id_col).alias("id"),
+        F.length(F.col(text_col)).alias("_chars"),
+        F.array_sort(word_ngrams(words, n)).alias("_g"),
     )
 
 
@@ -684,7 +712,7 @@ def top_ngram_fraction(
     0.68 — the explode form's two corpus-scale shuffles of near-unique (id,
     ngram) string keys are memory-bandwidth-bound. That explode form is the
     independent spec this kernel is fuzz-pinned against
-    (``tests/test_round3_ops.py``).
+    (``tests/test_text.py``).
 
     char_frac = occurrences · length(ngram) / length(text), LEAST-capped at
     1 (overlapping occurrences are counted per occurrence, the standard
@@ -692,18 +720,8 @@ def top_ngram_fraction(
     with fewer than ``n`` words emit no row (no n-gram exists).
 
     Returns (id, top_ngram, n_occurrences, char_frac)."""
-    words = F.split(F.col(text_col), " ")
-    grams = _ngrams_expr(words, n)
-    # length > 0: an empty doc has no characters — the fraction is
-    # undefined (and ANSI mode would reject the 0 divisor)
-    base = df.filter(
-        F.col(text_col).isNotNull()
-        & (F.length(F.col(text_col)) > 0)
-        & (F.size(words) >= n)
-    )
-
     best = F.aggregate(
-        F.array_sort(grams),
+        F.col("_g"),
         F.struct(
             F.lit("").alias("prev"),
             F.lit(0).alias("run"),
@@ -728,10 +746,8 @@ def top_ngram_fraction(
             ).alias("best_run"),
         ),
     )
-    return base.select(
-        F.col(id_col).alias("id"),
-        F.length(F.col(text_col)).alias("_chars"),
-        best.alias("_b"),
+    return _gopher_grams(df, id_col, text_col, n).select(
+        "id", "_chars", best.alias("_b")
     ).select(
         "id",
         F.col("_b.best").alias("top_ngram"),
@@ -765,14 +781,6 @@ def dup_ngram_fraction(
     memory-bandwidth-bound story as top_ngram_fraction's (BENCH.md).
 
     Returns (id, n_dup_ngrams, dup_char_frac)."""
-    words = F.split(F.col(text_col), " ")
-    grams = _ngrams_expr(words, n)
-    base = df.filter(
-        F.col(text_col).isNotNull()
-        & (F.length(F.col(text_col)) > 0)
-        & (F.size(words) >= n)
-    )
-
     # close_run: the (dup count, dup chars) contribution of the run
     # that just ended — 0 unless it reached length 2
     def step(acc, x):
@@ -804,7 +812,7 @@ def dup_ngram_fraction(
         )
 
     folded = F.aggregate(
-        F.array_sort(grams),
+        F.col("_g"),
         F.struct(
             F.lit("").alias("prev"),
             F.lit(0).alias("run"),
@@ -815,11 +823,8 @@ def dup_ngram_fraction(
         finish,
     )
     return (
-        base.select(
-            F.col(id_col).alias("id"),
-            F.length(F.col(text_col)).alias("_chars"),
-            folded.alias("_f"),
-        )
+        _gopher_grams(df, id_col, text_col, n)
+        .select("id", "_chars", folded.alias("_f"))
         .filter(F.col("_f.dup_n") > 0)
         .select(
             "id",
@@ -899,11 +904,10 @@ def pmi_bigrams(
     from ..cache import persist_tracked
 
     words = F.split(F.col(text_col), " ")
-    grams = _ngrams_expr(words, 2)
     tagged = F.concat(
         F.transform(words, lambda w: F.struct(F.lit("w").alias("kind"), w.alias("tok"))),
         F.transform(
-            F.when(F.size(words) >= 2, grams).otherwise(F.array()),
+            word_ngrams(words, 2),
             lambda g: F.struct(F.lit("b").alias("kind"), g.alias("tok")),
         ),
     )

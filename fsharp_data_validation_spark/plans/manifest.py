@@ -127,22 +127,19 @@ def _atomic_write(path: str, payload: dict) -> None:
 
 
 def _write_parts(out: DataFrame, path: str) -> None:
-    """Write ``out`` under ``path`` partitioned by ``part``, replacing only
-    the partitions present in ``out`` (dynamic overwrite)."""
-    (
-        out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("part")
-        .parquet(path)
-    )
+    """Append ``out`` under ``path`` partitioned by ``part``. The batch's
+    ``part=`` directories were deleted by ``_clear_parts`` first, so the
+    append replaces them; a dynamic overwrite would redo that with a staging
+    directory and one rename per partition."""
+    out.write.mode("append").partitionBy("part").parquet(path)
 
 
 def _clear_parts(spark, dirs: Sequence[str], parts: Sequence[str]) -> None:
     """Delete ``part=<value>`` under each of ``dirs`` for every value in
-    ``parts``. Dynamic overwrite replaces only the partitions a write has
-    rows for, so without this a redone partition keeps its old rows in any
-    output where it now has none. The directory name is Spark's own
-    partition-path escaping, so the deleted path is the one Spark writes."""
+    ``parts``, so a redone partition keeps none of its old rows in any
+    output, including one where it now has none. The directory name is
+    Spark's own partition-path escaping, so the deleted path is the one
+    Spark writes."""
     utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     for part in parts:
         name = f"part={utils.escapePathName(part)}"
@@ -307,7 +304,7 @@ class ValidationRun:
         batch_size: int = 1,
     ) -> List[PartitionOutcome]:
         """Validate pending partitions; ``batch_size`` partitions share one
-        evaluation and one partitioned write per output (dynamic overwrite),
+        evaluation and one partitioned write per output,
         so the job count grows with ceil(P/K), not P — at thousands of
         Iceberg day/bucket partitions this is the difference between a
         scheduler stall and a handful of wide jobs. Manifest entries are

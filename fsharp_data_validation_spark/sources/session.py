@@ -30,13 +30,20 @@ def _driver_memory() -> str:
     return f"{min(max(half_gib, 1), 24)}g"
 
 
+def _cpus() -> int:
+    """``SPARK_GRAFT_CPUS``, else the cores this process may run on: the
+    default ``local[N]`` master and the shuffle partitions under
+    ``local[*]`` follow the host, not a fixed core count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app: str = "fsharp_data_validation_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = _cpus()
     master = master or f"local[{cpus}]"
     # parse local[N] to size shuffle partitions to parallelism
     if shuffle_partitions is None:

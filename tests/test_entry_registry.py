@@ -82,6 +82,17 @@ def _trees(paths):
     return {p: ast.parse(p.read_text()) for p in paths}
 
 
+def _aliases(tree):
+    """``{asname: name}`` for each ``import … as`` binding in ``tree``."""
+    return {
+        a.asname: a.name.rsplit(".", 1)[-1]
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.Import, ast.ImportFrom))
+        for a in n.names
+        if a.asname
+    }
+
+
 def _defs():
     """(path, def) for each top-level function of the package outside
     ``core/``, the row-level oracle."""
@@ -94,18 +105,27 @@ def _defs():
     ]
 
 
-def _refs(node):
-    """Every name ``node`` references: ``ast.Name`` ids, ``ast.Attribute``
-    attrs and imported names."""
+def _refs(node, aliases):
+    """Every name ``node`` uses: ``ast.Name`` ids and ``ast.Attribute``
+    attrs, where a use of an ``import … as`` name in ``aliases`` also counts
+    for the imported name. An import on its own uses nothing."""
     out = set()
     for n in ast.walk(node):
         if isinstance(n, ast.Name):
-            out.add(n.id)
+            out |= {n.id, aliases.get(n.id, n.id)}
         elif isinstance(n, ast.Attribute):
             out.add(n.attr)
-        elif isinstance(n, ast.alias):
-            out.add(n.name)
     return out
+
+
+def test_refs_count_uses_not_imports():
+    """An imported name counts once something uses it, under its own name
+    or its alias; an import that nothing uses counts for nothing."""
+    tree = ast.parse("from m import a as b, c\ndef f():\n    return b()\n")
+    imports, f = tree.body
+    aliases = _aliases(tree)
+    assert _refs(imports, aliases) == set()
+    assert "a" in _refs(f, aliases) and "c" not in _refs(f, aliases)
 
 
 def _constants():
@@ -127,7 +147,10 @@ def _dead(defs):
     of CONSUMERS references outside its own definition, where a reference
     from a dead definition does not count either."""
     refs = {
-        (p, n.lineno): _refs(n) for p, t in _trees(CONSUMERS).items() for n in t.body
+        (p, n.lineno): _refs(n, aliases)
+        for p, t in _trees(CONSUMERS).items()
+        for aliases in [_aliases(t)]
+        for n in t.body
     }
     dead = set()
     while True:
@@ -203,13 +226,7 @@ def test_no_oracle_is_spelled_twice():
 def _calls(tree):
     """(callee name, call) for each call in ``tree``; a callee imported
     ``as`` another name is resolved to its own name."""
-    alias = {
-        a.asname: a.name
-        for n in ast.walk(tree)
-        if isinstance(n, ast.ImportFrom)
-        for a in n.names
-        if a.asname
-    }
+    alias = _aliases(tree)
     for n in ast.walk(tree):
         if isinstance(n, ast.Call):
             name = getattr(n.func, "id", None) or getattr(n.func, "attr", None)

@@ -630,6 +630,7 @@ def test_indexed_element_checks_and_required_unless(spark):
         [
             Row(rid=0, xs=[10, 11, 0], tool=None, role="user"),
             Row(rid=1, xs=[5], tool=None, role="admin"),
+            Row(rid=2, xs=[0], tool=None, role="user"),
         ],
         schema=schema,
     )
@@ -638,14 +639,20 @@ def test_indexed_element_checks_and_required_unless(spark):
         .field("xs")
         # element must be >= its index * 10 -> fails for [2]=0 (needs 20)
         .each_check_indexed("tooSmallForIndex", lambda x, i: x >= i * 10)
+        # element + index must stay below 12 -> fails for [1]=11, and the
+        # refute skips the branch's later checks
+        .each_refute_check_indexed("tooBigForIndex", lambda x, i: x + i < 12)
+        .each_check("zero", lambda x: x != 0)
         .field("tool")
         # required unless role is a known enum member
         .required_unless("toolRequiredForUnknownRole", F.col("role").isin(ROLES3))
         .done()
     )
     got = _collect_failures(suite.run(df, ["rid"]))
-    assert got[0] == {("xs.[2]", "tooSmallForIndex")}
+    # rid 0's [2]=0 would fail "zero", but its refuted branch skips the check
+    assert got[0] == {("xs.[2]", "tooSmallForIndex"), ("xs.[1]", "tooBigForIndex")}
     assert got[1] == {("tool", "toolRequiredForUnknownRole")}
+    assert got[2] == {("xs.[0]", "zero")}
 
 
 # --------------------------------------------------------------------------
@@ -778,14 +785,20 @@ def test_library_helper_sugar(spark):
         .greater_than_or_equal("nNegative", 0)
         .less_than("nTooBig", 100)
         .is_equal("nNotFive", 5)
+        # strict and inclusive bounds, both at n = -1
+        .greater_than("nNotAboveMinusOne", -1)
+        .less_than_or_equal("nAboveMinusOne", -1)
         .field("xs")
         .has_elem("xsMissingA", "a")
         .does_not_have_elem("xsHasBad", "bad")
         .done()
     )
     got = _collect_failures(suite.run(df, ["rid"]))
-    assert got.get(0) == {("s", "sEmpty")}
-    assert got.get(1) == {("n", "nNegative"), ("n", "nNotFive"), ("xs", "xsMissingA"), ("xs", "xsHasBad")}
+    assert got.get(0) == {("s", "sEmpty"), ("n", "nAboveMinusOne")}
+    assert got.get(1) == {
+        ("n", "nNegative"), ("n", "nNotFive"), ("n", "nNotAboveMinusOne"),
+        ("xs", "xsMissingA"), ("xs", "xsHasBad"),
+    }
     assert 2 not in got  # NULL values skip (optional-style 3VL)
 
 

@@ -94,6 +94,20 @@ def test_revalidated_dirty_partition_drops_stale_valid_rows(spark, tmp_path):
     assert valid.filter(F.col("part") == "a").count() == 1  # untouched
 
 
+def test_revalidated_dirty_partition_holds_only_new_violations(spark, tmp_path):
+    """Partition b (a missing text) is rewritten differently dirty: its
+    violations are exactly the new row's, none of the old row's."""
+    out, docs = _revalidate_rewritten(
+        spark, tmp_path, "b", Row(conv_id="x2", turn_idx=0, role="robot", text="ok", tool=None)
+    )
+    assert docs["b"]["status"] == "fail" and docs["b"]["violations"] == 2
+    viol = spark.read.parquet(os.path.join(out, "violations"))
+    got = {tuple(r) for r in viol.filter(F.col("part") == "b")
+           .select("conv_id", "turn_idx", "code").collect()}
+    assert got == {("x2", 0, "conv_id_format"), ("x2", 0, "role_enum")}
+    assert viol.filter(F.col("part") == "a").count() == 1  # untouched
+
+
 def test_manifest_run_and_resume(spark, tmp_path):
     out = str(tmp_path / "out")
     run = ValidationRun(
@@ -374,6 +388,19 @@ def test_driver_memory_default_fits_the_machine(monkeypatch):
     assert session._driver_memory() == "1g"
     machine(8)
     assert session._driver_memory() == "1g"
+
+
+def test_default_cores_follow_the_host(monkeypatch):
+    """get_spark's core count (default master local[N], shuffle partitions
+    under local[*]) is the cores this process may run on; SPARK_GRAFT_CPUS
+    overrides it."""
+    from fsharp_data_validation_spark.sources import session
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(session.os, "sched_getaffinity", lambda pid: {0, 1, 2})
+    assert session._cpus() == 3
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "12")
+    assert session._cpus() == 12
 
 
 # jobs/validate.py (argv[3:]) with ValidationRun._record wrapped: right after

@@ -1,6 +1,7 @@
 """Round-3 operators: conversation-flow validation, MAD outliers, TF-IDF
 top terms (the drift members are pinned in test_drift.py, the similarity
-members in test_similarity.py). Semantics pinned on hand-built fixtures;
+members in test_similarity.py, the Gopher/Zipf/PMI/vocab-growth members in
+test_text.py). Semantics pinned on hand-built fixtures;
 the sf0.01 DuckDB oracles cover the derived-table scale."""
 
 import math
@@ -364,205 +365,6 @@ def test_benford_digits_and_chi2(spark):
         chi2 += (obs - exp) ** 2 / exp
     assert abs(got[1]["chi2"] - chi2) < 1e-4
     assert abs(got[1]["obs_p"] - 4 / 9) < 1e-5
-
-
-def test_top_ngram_fraction_tiebreak_and_short_docs(spark):
-    from fsharp_data_validation_spark.operators.text import top_ngram_fraction
-
-    docs = [
-        (1, "a b a b a b"),  # "a b" x3 beats "b a" x2
-        (2, "x y"),  # single bigram
-        (3, "solo"),  # < n words: no row
-        (4, "t t t t"),  # "t t" x3
-        (5, None),
-    ]
-    df = spark.createDataFrame(docs, "doc_id int, text string")
-    got = {r["id"]: r for r in top_ngram_fraction(df, "doc_id", "text", 2).collect()}
-    assert set(got) == {1, 2, 4}
-    assert got[1]["top_ngram"] == "a b" and got[1]["n_occurrences"] == 3
-    # 3 occurrences x 3 chars / 11 chars
-    assert abs(got[1]["char_frac"] - 9 / 11) < 1e-3
-    # overlapping occurrences can cover > chars: fraction is capped at 1
-    assert got[4]["n_occurrences"] == 3 and got[4]["char_frac"] == 1.0
-    assert got[2]["top_ngram"] == "x y" and got[2]["char_frac"] == 1.0
-
-
-def test_zipf_fit_exact_power_law(spark):
-    """freq = 48/rank is exactly log-log linear: slope -1, r^2 = 1."""
-    from fsharp_data_validation_spark.operators.text import zipf_fit
-
-    text = " ".join(["a"] * 48 + ["b"] * 24 + ["c"] * 16 + ["d"] * 12)
-    df = spark.createDataFrame([(text,)], "text string")
-    got = zipf_fit(df, "text", top_k=10, min_count=2).collect()[0]
-    assert got["n_types"] == 4
-    assert abs(got["slope"] + 1.0) < 1e-6
-    assert abs(got["r_squared"] - 1.0) < 1e-6
-
-
-def test_dup_ngram_fraction_counts_and_cap(spark):
-    from fsharp_data_validation_spark.operators.text import dup_ngram_fraction
-
-    docs = [
-        (1, "x y z x y z x y z"),  # all three 3-grams duplicated; cap at 1
-        (2, "a b c d e"),  # no duplicated 3-gram: no row
-        (3, None),
-    ]
-    df = spark.createDataFrame(docs, "doc_id int, text string")
-    got = {r["id"]: r for r in dup_ngram_fraction(df, "doc_id", "text", 3).collect()}
-    assert set(got) == {1}
-    assert got[1]["n_dup_ngrams"] == 3
-    assert got[1]["dup_char_frac"] == 1.0  # 35 covered chars / 17 -> capped
-
-
-def test_pmi_bigrams_hand_value(spark):
-    """Six 'a b' docs: p(ab)=1, p(a)=p(b)=1/2 -> PMI = ln 4."""
-    from fsharp_data_validation_spark.operators.text import pmi_bigrams
-
-    df = spark.createDataFrame([("a b",)] * 6, "text string")
-    got = pmi_bigrams(df, "text", min_count=5, top_k=5).collect()
-    assert len(got) == 1
-    assert got[0]["bigram"] == "a b" and got[0]["n_ab"] == 6
-    assert abs(got[0]["pmi"] - math.log(4.0)) < 1e-3
-
-
-def test_pmi_total_uses_unfiltered_bigrams(spark):
-    """min_count prunes which pairs are SCORED, not p(ab)'s denominator."""
-    from fsharp_data_validation_spark.operators.text import pmi_bigrams
-
-    # 5x "a b" + 2x "c d": nb must be 7, so pmi(a b) = ln((5/7)/(0.5^2 ... ))
-    df = spark.createDataFrame([("a b",)] * 5 + [("c d",)] * 2, "text string")
-    got = pmi_bigrams(df, "text", min_count=5, top_k=5).collect()
-    assert len(got) == 1 and got[0]["bigram"] == "a b"
-    # p(ab) = 5/7 over ALL bigram tokens; p(a) = p(b) = 5/14 unigram tokens
-    expect = math.log((5 / 7) / ((5 / 14) * (5 / 14)))
-    assert abs(got[0]["pmi"] - expect) < 1e-3
-
-
-def test_vocab_growth_first_appearance(spark):
-    from fsharp_data_validation_spark.operators.text import vocab_growth
-
-    rows = [
-        ("2024-01-01 00:00:00", "a b c"),
-        ("2024-01-01 05:00:00", "a b"),  # no new tokens
-        ("2024-01-02 00:00:00", "a d"),  # d is new
-        ("2024-01-03 00:00:00", None),  # ignored
-        ("2024-01-04 00:00:00", "e e e"),  # e counted once
-    ]
-    df = spark.createDataFrame(rows, "ts string, text string").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    got = {str(r["day"]): r for r in vocab_growth(df, "ts", "text").collect()}
-    assert got["2024-01-01"]["new_tokens"] == 3
-    assert got["2024-01-01"]["tokens"] == 5  # daily volume counts repeats
-    assert got["2024-01-02"]["new_tokens"] == 1
-    assert "2024-01-03" not in got  # NULL-text-only day: no data
-    assert got["2024-01-04"]["new_tokens"] == 1  # e counted once
-    assert got["2024-01-04"]["tokens"] == 3
-    assert got["2024-01-04"]["vocab_size"] == 5
-
-
-def _explode_ngrams(df, n):
-    """(id, _chars, ngram) per n-gram occurrence of each doc with >= n words
-    and non-empty text: the explode side of the Gopher reference specs."""
-    from fsharp_data_validation_spark.operators.text import _ngrams_expr
-
-    words = F.split(F.col("text"), " ")
-    return df.filter(
-        F.col("text").isNotNull() & (F.length("text") > 0) & (F.size(words) >= n)
-    ).select(
-        F.col("doc_id").alias("id"),
-        F.length("text").alias("_chars"),
-        F.explode(_ngrams_expr(words, n)).alias("ngram"),
-    )
-
-
-def _top_ngram_explode(df, n):
-    """Reference spec of ``top_ngram_fraction``: explode + hash aggregate on
-    (doc, ngram) + per-doc window ranked (count desc, ngram asc)."""
-    from pyspark.sql import Window
-
-    counts = _explode_ngrams(df, n).groupBy("id", "ngram").agg(
-        F.count(F.lit(1)).alias("n_occurrences"), F.max("_chars").alias("_chars")
-    )
-    w = Window.partitionBy("id").orderBy(F.desc("n_occurrences"), F.asc("ngram"))
-    return (
-        counts.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") == 1)
-        .select(
-            "id",
-            F.col("ngram").alias("top_ngram"),
-            F.col("n_occurrences").cast("bigint").alias("n_occurrences"),
-            F.round(
-                F.least(
-                    F.lit(1.0),
-                    F.col("n_occurrences") * F.length("ngram") / F.col("_chars"),
-                ),
-                4,
-            ).alias("char_frac"),
-        )
-    )
-
-
-def _dup_ngram_explode(df, n):
-    """Reference spec of ``dup_ngram_fraction``: explode + (doc, ngram)
-    hash aggregate, then a per-doc sum over the n-grams seen 2+ times."""
-    counts = _explode_ngrams(df, n).groupBy("id", "ngram").agg(
-        F.count(F.lit(1)).alias("c"), F.max("_chars").alias("_chars")
-    )
-    return (
-        counts.filter(F.col("c") >= 2)
-        .groupBy("id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_dup_ngrams"),
-            F.round(
-                F.least(
-                    F.lit(1.0),
-                    F.sum(F.col("c") * F.length("ngram")) / F.max("_chars"),
-                ),
-                4,
-            ).alias("dup_char_frac"),
-        )
-    )
-
-
-def test_gopher_kernels_equivalent(spark):
-    """The zero-shuffle sorted-runs fold kernels must produce EXACTLY the
-    explode + hash-agg specs' output — fuzzed over random short docs plus
-    the adversarial edges (empty text, single word, all-same words,
-    empty-string words from double spaces)."""
-    import random
-
-    from fsharp_data_validation_spark.operators.text import (
-        dup_ngram_fraction,
-        top_ngram_fraction,
-    )
-
-    rng = random.Random(23)
-    rows = []
-    for i in range(300):
-        m = rng.randint(0, 15)
-        rows.append((i, " ".join(rng.choice("abcx") for _ in range(m))))
-    rows += [
-        (900, None),
-        (901, ""),
-        (902, "solo"),
-        (903, "t t t t t t"),
-        (904, "a  b  a  b"),  # double spaces -> empty-string words
-    ]
-    # unicode tokens + longer docs (sort order exercised beyond ASCII)
-    uni = ["héllo", "wörld", "日本", "ß", "a"]
-    rows += [
-        (1100 + i, " ".join(rng.choice(uni) for _ in range(rng.randint(20, 60))))
-        for i in range(50)
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    for n in (1, 2, 3):
-        a = sorted(map(tuple, top_ngram_fraction(df, "doc_id", "text", n).collect()))
-        b = sorted(map(tuple, _top_ngram_explode(df, n).collect()))
-        assert a == b, f"top_ngram kernels diverge at n={n}"
-        c = sorted(map(tuple, dup_ngram_fraction(df, "doc_id", "text", n).collect()))
-        d = sorted(map(tuple, _dup_ngram_explode(df, n).collect()))
-        assert c == d, f"dup_ngram kernels diverge at n={n}"
 
 
 def test_weighted_sample_determinism_and_bias(spark):
