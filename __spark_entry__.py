@@ -1156,7 +1156,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard near-dup pairs via shingle inverted index."""
     from fsharp_data_validation_spark.operators.dedup import ngram_jaccard_pairs
 
-    return ngram_jaccard_pairs(load_docs(spark, sf_dir), "doc_id", "text", 3, 0.8)
+    return ngram_jaccard_pairs(load_docs(spark, sf_dir), "doc_id", "text", 0.8)
 
 
 @query(with_docs(
@@ -1205,7 +1205,7 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE transitive closure)."""
     from fsharp_data_validation_spark.operators.dedup import near_dup_components
 
-    return near_dup_components(load_docs(spark, sf_dir), "doc_id", "text", 3, 0.8)
+    return near_dup_components(load_docs(spark, sf_dir), "doc_id", "text", 0.8)
 
 
 # independent spec of RAWV frame sampling: each sampled frame is
@@ -2490,7 +2490,7 @@ def q_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         near_dup_components,
     )
 
-    comp = near_dup_components(load_docs(spark, sf_dir), "doc_id", "text", 3, 0.8)
+    comp = near_dup_components(load_docs(spark, sf_dir), "doc_id", "text", 0.8)
     return cluster_size_histogram(comp, "component")
 
 
@@ -2515,7 +2515,7 @@ def q_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     containment_dedup_pairs), checked against the naive all-pairs spec."""
     from fsharp_data_validation_spark.operators.dedup import containment_dedup_pairs
 
-    return containment_dedup_pairs(load_docs(spark, sf_dir), "doc_id", "text", 3, 0.8)
+    return containment_dedup_pairs(load_docs(spark, sf_dir), "doc_id", "text")
 
 
 _SPLIT_BUCKET_SQL = (
@@ -2746,7 +2746,7 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the exact-pairs oracle (high-recall banding)."""
     from fsharp_data_validation_spark.operators.dedup import minhash_lsh_pairs
 
-    return minhash_lsh_pairs(load_docs(spark, sf_dir), "doc_id", "text", 3, 32, 16, 0.8)
+    return minhash_lsh_pairs(load_docs(spark, sf_dir), "doc_id", "text", 0.8)
 
 
 _SIMHASH_BITS_SQL = ", ".join(
@@ -3507,7 +3507,7 @@ def q_contamination_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     tr, ev = _corpus_split(spark, sf_dir)
-    return cross_contamination_pairs(tr, ev, "doc_id", "text", 3, 0.8)
+    return cross_contamination_pairs(tr, ev, "doc_id", "text")
 
 
 @query(with_docs(
@@ -3539,7 +3539,7 @@ def q_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     tr, ev = _corpus_split(spark, sf_dir)
-    return ngram_containment(tr, ev, "doc_id", "text", 3)
+    return ngram_containment(tr, ev, "doc_id", "text")
 
 
 @query(

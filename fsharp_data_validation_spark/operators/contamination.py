@@ -27,36 +27,34 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..cache import persist_tracked
 from .dedup import (
+    _jaccard,
     _rarest_prefix,
     _shingle_rows,
     _shingle_sets,
-    _verify_jaccard,
+    _verify_sets,
     shingles,
 )
 
+_THRESHOLD = 0.8  # cross-corpus Jaccard of a contaminated pair
+
 
 def cross_contamination_pairs(
-    train: DataFrame,
-    eval_df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    threshold: float = 0.8,
+    train: DataFrame, eval_df: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """(train_id, eval_id, sim) for every cross-corpus pair with exact
-    n-gram Jaccard >= threshold. Prefix filter (AllPairs/PPJoin, no recall
+    shingle Jaccard >= ``_THRESHOLD``. Prefix filter (AllPairs/PPJoin, no recall
     loss): document frequencies are computed over BOTH corpora so the
     rarest-first shingle ranking is one global order; a true pair's
     prefixes must intersect, and only prefix shingles enter the candidate
     join — restricted to (train x eval), never within a side."""
-    sets_t = persist_tracked(_shingle_sets(train, id_col, text_col, n))
-    sets_e = persist_tracked(_shingle_sets(eval_df, id_col, text_col, n))
+    sets_t = persist_tracked(_shingle_sets(train, id_col, text_col))
+    sets_e = persist_tracked(_shingle_sets(eval_df, id_col, text_col))
 
     ex_t, ex_e = _shingle_rows(sets_t), _shingle_rows(sets_e)
     corpus = ex_t.select("sh1").union(ex_e.select("sh1"))
 
     def prefix(ex):
-        return _rarest_prefix(ex, corpus, threshold).select("doc_id", "sh1")
+        return _rarest_prefix(ex, corpus, _THRESHOLD).select("doc_id", "sh1")
 
     cand = (
         prefix(ex_t)
@@ -73,28 +71,28 @@ def cross_contamination_pairs(
     # drop the cache BEFORE the caller ever evaluates the DataFrame, making
     # every downstream branch (dfreq, both prefixes, verify) re-shingle
     # from scratch.
-    return _verify_jaccard(cand, sets_all, threshold).select(
+    return _verify_sets(cand, sets_all, _jaccard, "sim", _THRESHOLD).select(
         F.col("id_a").alias("train_id"), F.col("id_b").alias("eval_id"), "sim"
     )
 
 
 def ngram_containment(
-    train: DataFrame, eval_df: DataFrame, id_col: str, text_col: str, n: int = 3
+    train: DataFrame, eval_df: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """Per eval doc: (eval_id, n_grams, n_hit, containment) where
-    ``containment`` = |distinct n-grams of the doc ∩ train n-gram set| /
-    |distinct n-grams of the doc|. Raw STRING shingles (not hashed) so the
-    metric is exact and the DuckDB oracle runs the identical construction.
-    Eval docs with fewer than ``n`` words have no shingles and are absent
-    from the output (consistent on both engines)."""
+    ``containment`` = |distinct shingles of the doc ∩ train shingle set| /
+    |distinct shingles of the doc| (``dedup.shingles``). Raw STRING
+    shingles (not hashed) so the metric is exact and the DuckDB oracle runs
+    the identical construction. Eval docs too short for one shingle are
+    absent from the output (consistent on both engines)."""
     tg = (
-        train.select(F.explode(shingles(F.col(text_col), n)).alias("g"))
+        train.select(F.explode(shingles(F.col(text_col))).alias("g"))
         .distinct()
         .withColumn("_hit", F.lit(1))
     )
     eg = eval_df.select(
         F.col(id_col).alias("eval_id"),
-        F.explode(shingles(F.col(text_col), n)).alias("g"),
+        F.explode(shingles(F.col(text_col))).alias("g"),
     )
     joined = eg.join(tg, "g", "left")
     return joined.groupBy("eval_id").agg(

@@ -22,11 +22,19 @@ Scale design (the reason these shapes were chosen):
   codegen'd aggregation; pairs by hamming distance, with the banded variant
   giving the exact sub-quadratic candidate step at scale (same bucket-join
   pattern as LSH).
+
+Every bucket join — the Jaccard prefix index, the MinHash bands, the
+SimHash signatures and chunks, and ``similarity.lsh_near_dup_pairs`` — is
+one ``_bucket_pairs`` self-join, and every shingle-set pair is verified by
+one ``_verify_sets``. The shingle size, the MinHash shape and the
+containment threshold are module constants: each has one value.
 """
 
 from __future__ import annotations
 
-from typing import List, Tuple
+import operator
+from functools import reduce
+from typing import Callable, List
 
 from ..cache import persist_tracked
 from .text import word_ngrams
@@ -34,6 +42,10 @@ from .text import word_ngrams
 from pyspark.sql import DataFrame, Window, functions as F
 
 SIMHASH_BITS = 60  # keep signatures positive in a signed 64-bit integer
+_SHINGLE_N = 3  # word 3-gram shingles, as the oracles' ``_SHINGLES_SQL``
+_NUM_HASHES, _BANDS = 32, 16  # MinHash: 16 bands x 2 rows
+_CONTAINMENT_THRESHOLD = 0.8
+_BUCKET_CAP = 100_000  # SimHash: distinct signatures per (band, key) bucket
 
 
 def md5_int(col: F.Column, salt: str | None = None) -> F.Column:
@@ -43,10 +55,10 @@ def md5_int(col: F.Column, salt: str | None = None) -> F.Column:
     return F.conv(F.substring(F.md5(x), 1, 15), 16, 10).cast("bigint")
 
 
-def shingles(text_col: F.Column, n: int = 3) -> F.Column:
-    """Distinct word n-gram shingles of a text column (``word_ngrams``).
-    NULL, empty and short texts yield an empty array."""
-    return F.array_distinct(word_ngrams(F.split(text_col, " "), n))
+def shingles(text_col: F.Column) -> F.Column:
+    """Distinct word ``_SHINGLE_N``-gram shingles of a text column
+    (``word_ngrams``). NULL, empty and short texts yield an empty array."""
+    return F.array_distinct(word_ngrams(F.split(text_col, " "), _SHINGLE_N))
 
 
 def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -60,7 +72,7 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def _shingle_sets(
-    df: DataFrame, id_col: str, text_col: str, n: int, hash_bits: int = 64
+    df: DataFrame, id_col: str, text_col: str, hash_bits: int = 64
 ) -> DataFrame:
     """(doc_id, sh) where ``sh`` is the distinct shingle set, each shingle
     xxhash64'd to an integer at creation: ~5x less heap per cached set than
@@ -76,7 +88,7 @@ def _shingle_sets(
     construction's own miss probability, so it does not change the
     pipeline's accuracy class. Collisions across *different* pairs are
     harmless (each pair is verified on its own union)."""
-    sh = shingles(F.col(text_col), n)
+    sh = shingles(F.col(text_col))
     sh = F.transform(
         sh,
         lambda s: F.xxhash64(s).bitwiseAND(F.lit(0x7FFFFFFF)).cast("int")
@@ -88,22 +100,45 @@ def _shingle_sets(
     )
 
 
-def _verify_jaccard(
-    pairs: DataFrame, sets_df: DataFrame, threshold: float, round_to: int = 6
+def _bucket_pairs(rows: DataFrame, id_col: str, keys: List[str]) -> DataFrame:
+    """(id_a, id_b) for every pair of ``rows`` equal on all ``keys``, with
+    id_a < id_b: the candidate self-join of every bucket join. A pair
+    sharing several buckets repeats; callers add their own ``distinct()``."""
+    same = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    cond = reduce(operator.and_, same + [F.col(f"a.{id_col}") < F.col(f"b.{id_col}")])
+    return (
+        rows.alias("a")
+        .join(rows.alias("b"), cond)
+        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+    )
+
+
+def _jaccard(inter: F.Column) -> F.Column:
+    return inter.cast("double") / (F.size("sh_a") + F.size("sh_b") - inter)
+
+
+def _containment(inter: F.Column) -> F.Column:
+    return inter.cast("double") / F.size("sh_a")
+
+
+def _verify_sets(
+    pairs: DataFrame,
+    sets_df: DataFrame,
+    ratio: Callable[[F.Column], F.Column],
+    name: str,
+    threshold: float,
 ) -> DataFrame:
-    """Exact Jaccard for candidate pairs (the verify step of LSH)."""
+    """Exact verify of candidate (id_a, id_b) pairs: attach both sides'
+    shingle sets ``sh_a``/``sh_b`` from ``sets_df`` and keep (id_a, id_b,
+    ``name``) where ``name`` = ``ratio(|A ∩ B|)`` rounded to 6 places is
+    >= threshold (``_jaccard`` or ``_containment``)."""
     a = sets_df.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
     b = sets_df.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
     return (
         pairs.join(a, "id_a").join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(inter.cast("double") / union, round_to).alias("sim"),
-        )
-        .filter(F.col("sim") >= threshold)
+        .select("id_a", "id_b", F.round(ratio(inter), 6).alias(name))
+        .filter(F.col(name) >= threshold)
     )
 
 
@@ -130,11 +165,7 @@ def _rarest_prefix(ex: DataFrame, corpus: DataFrame, threshold: float) -> DataFr
 
 
 def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    threshold: float = 0.8,
+    df: DataFrame, id_col: str, text_col: str, threshold: float = 0.8
 ) -> DataFrame:
     """EXACT n-gram Jaccard near-dup pairs with **prefix filtering**
     (AllPairs/PPJoin-style, no recall loss): for J(a,b) >= t, a and b must
@@ -152,31 +183,18 @@ def ngram_jaccard_pairs(
     The shingle-set table feeds three plan branches (index build, a/b verify
     sides); it is persisted so the tokenize/shingle pass runs once — at real
     scale this is the materialized intermediate of the dedup pipeline stage."""
-    sets_df = persist_tracked(_shingle_sets(df, id_col, text_col, n))
+    sets_df = persist_tracked(_shingle_sets(df, id_col, text_col))
     ex = _shingle_rows(sets_df)
     prefix = persist_tracked(  # both sides of the candidate self-join
         _rarest_prefix(ex, ex, threshold).select("doc_id", "sh1")
     )
-    cand = (
-        prefix.alias("a")
-        .join(
-            prefix.alias("b"),
-            (F.col("a.sh1") == F.col("b.sh1"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-        )
-        .distinct()
-    )
-    return _verify_jaccard(cand, sets_df, threshold)
+    cand = _bucket_pairs(prefix, "doc_id", ["sh1"]).distinct()
+    return _verify_sets(cand, sets_df, _jaccard, "sim", threshold)
 
 
-def minhash_signatures(
-    sets_df: DataFrame, num_hashes: int = 32
-) -> DataFrame:
-    """(doc_id, mh_0..mh_{k-1}): k seeded min-hashes in ONE hash
-    aggregation over the exploded shingles. Hashing is native ``xxhash64``
+def minhash_signatures(sets_df: DataFrame) -> DataFrame:
+    """(doc_id, mh_0..mh_{k-1}): k = ``_NUM_HASHES`` seeded min-hashes in ONE
+    hash aggregation over the exploded shingles. Hashing is native ``xxhash64``
     (JVM, codegen'd); the seed is the per-hash literal. The LSH output is
     oracle-checked against exact Jaccard *pairs*, so the hash family is an
     internal choice.
@@ -193,33 +211,27 @@ def minhash_signatures(
     ex = sets_df.select("doc_id", F.explode("sh").alias("sh1"))
     aggs = [
         F.min(F.xxhash64(F.lit(i), F.col("sh1"))).alias(f"mh_{i}")
-        for i in range(num_hashes)
+        for i in range(_NUM_HASHES)
     ]
     return ex.groupBy("doc_id").agg(*aggs)
 
 
 def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 16,
-    threshold: float = 0.8,
+    df: DataFrame, id_col: str, text_col: str, threshold: float = 0.8
 ) -> DataFrame:
     """MinHash + banded LSH candidate generation, exact-Jaccard verify.
     Returns the same schema as ngram_jaccard_pairs — at high recall the two
     agree, which is exactly what the oracle checks."""
-    rows = num_hashes // bands
+    rows = _NUM_HASHES // _BANDS
     # reused by the signature build and both verify sides -> persist.
     # 32-bit shingle hashes: the LSH path's accuracy class already admits
     # ~1e-6 per-pair error (band construction), so the narrower hash is free
     # and halves the dominant cached/shuffled payload (see _shingle_sets).
-    sets_df = persist_tracked(_shingle_sets(df, id_col, text_col, n, hash_bits=32))
-    sig = minhash_signatures(sets_df, num_hashes)
+    sets_df = persist_tracked(_shingle_sets(df, id_col, text_col, hash_bits=32))
+    sig = minhash_signatures(sets_df)
     # all band keys in ONE pass over the signatures (explode of an array of
     # structs) — not a 16-way union, which would re-plan the signature
-    # aggregation per band and shuffle it `bands` times. Band key is a
+    # aggregation per band and shuffle it `_BANDS` times. Band key is a
     # native xxhash64 BIGINT over the band's signature columns (8 bytes),
     # not an md5 hex string (32 chars + object overhead): the bucket
     # self-join shuffles and caches 4x fewer key bytes, and key equality is
@@ -233,7 +245,7 @@ def minhash_lsh_pairs(
                 *[F.col(f"mh_{b * rows + r}") for r in range(rows)]
             ).alias("bkey"),
         )
-        for b in range(bands)
+        for b in range(_BANDS)
     ]
     buckets = persist_tracked(  # both sides of the bucket self-join share one sig pass
         sig.select("doc_id", F.explode(F.array(*band_structs)).alias("bs"))
@@ -241,20 +253,8 @@ def minhash_lsh_pairs(
             "doc_id", F.col("bs.band").alias("band"), F.col("bs.bkey").alias("bkey")
         )
     )
-    cand = (
-        buckets.alias("a")
-        .join(
-            buckets.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-        )
-        .distinct()
-    )
-    return _verify_jaccard(cand, sets_df, threshold)
+    cand = _bucket_pairs(buckets, "doc_id", ["band", "bkey"]).distinct()
+    return _verify_sets(cand, sets_df, _jaccard, "sim", threshold)
 
 
 def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -309,11 +309,7 @@ def simhash_pairs(
 
 
 def simhash_banded_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int = 3,
-    bucket_cap: int | None = 100_000,
+    df: DataFrame, id_col: str, text_col: str, max_hamming: int = 3
 ) -> DataFrame:
     """EXACT SimHash near-dup pairs, sub-quadratic: the 60-bit signature is
     split into ``max_hamming + 1`` chunks; by pigeonhole, any pair within
@@ -342,13 +338,13 @@ def simhash_banded_pairs(
        pairs expand to doc pairs with output-proportional member joins.
        The hamming verify itself becomes free: both signature values sit
        in the candidate row (no verify joins at all).
-    2. **Sub-band fallback** (``bucket_cap``): a distinct-signature bucket
-       above the cap joins on (band, key, sub, subkey) instead — those
+    2. **Sub-band fallback**: a distinct-signature bucket measured above
+       ``_BUCKET_CAP`` joins on (band, key, sub, subkey) instead — those
        signatures agree on chunk ``band``, so any pair within the budget
        has all <= max_hamming differing bits in the 60 - chunk_bits
        complement; splitting the complement into max_hamming + 1
        sub-chunks pigeonholes again (one must be clean). Recall stays 1.0
-       by construction. ``bucket_cap=None`` disables only this fallback.
+       by construction.
 
     Measured on the adversarial template corpus (BENCH.md): sub-banding
     alone does NOT help when a family's complement bits are also shared
@@ -362,19 +358,7 @@ def simhash_banded_pairs(
     sig = persist_tracked(simhash_signatures(df, id_col, text_col))
     # docs sharing a signature are hamming-0 pairs by definition — emit
     # directly; candidate generation then works on DISTINCT signatures
-    intra = (
-        sig.alias("a")
-        .join(
-            sig.alias("b"),
-            (F.col("a.simhash") == F.col("b.simhash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            F.lit(0).alias("hamming"),
-        )
-    )
+    intra = _bucket_pairs(sig, "doc_id", ["simhash"]).withColumn("hamming", F.lit(0))
     usig = persist_tracked(sig.select("simhash").distinct())
     chunk_structs = [
         F.struct(
@@ -388,72 +372,51 @@ def simhash_banded_pairs(
     buckets = usig.select(
         "simhash", F.explode(F.array(*chunk_structs)).alias("bs")
     ).select("simhash", F.col("bs.band").alias("band"), F.col("bs.key").alias("key"))
+    sizes = buckets.groupBy("band", "key").agg(F.count(F.lit(1)).alias("_bsz"))
+    tagged = buckets.join(sizes, ["band", "key"])
+    cold = tagged.filter(F.col("_bsz") <= _BUCKET_CAP).select("simhash", "band", "key")
+    # hot signatures agree on chunk `band`; sub-band the complement
+    # bits. complement(band) = signature with chunk `band` spliced out
+    # (low bits below the chunk | high bits above it shifted down) —
+    # band is a column, shift amounts must be literals, so build a
+    # small CASE over the `bands` possible values.
+    comp_bits = SIMHASH_BITS - chunk_bits
+    sub_bits = (comp_bits + bands - 1) // bands
+    sub_mask = (1 << sub_bits) - 1
+    s = F.col("simhash")
 
-    def self_join_pairs(b: DataFrame, keys: List[str]) -> DataFrame:
-        cond = F.col("a.simhash") < F.col("b.simhash")
-        for k in keys:
-            cond = (F.col(f"a.{k}") == F.col(f"b.{k}")) & cond
-        return (
-            b.alias("a")
-            .join(b.alias("b"), cond)
-            .select(F.col("a.simhash").alias("ha"), F.col("b.simhash").alias("hb"))
-        )
+    def comp_for(b: int) -> F.Column:
+        low = s.bitwiseAND(F.lit((1 << (b * chunk_bits)) - 1))
+        high = F.shiftright(s, (b + 1) * chunk_bits)
+        return low + F.shiftleft(high, b * chunk_bits)
 
-    if bucket_cap is None:
-        cand = self_join_pairs(buckets, ["band", "key"]).distinct()
-    else:
-        sizes = buckets.groupBy("band", "key").agg(
-            F.count(F.lit(1)).alias("_bsz")
+    comp = F.lit(0).cast("bigint")
+    for b in range(bands):
+        comp = F.when(F.col("band") == b, comp_for(b)).otherwise(comp)
+    sub_structs = [
+        F.struct(
+            F.lit(j).alias("sub"),
+            F.shiftright(comp, j * sub_bits).bitwiseAND(F.lit(sub_mask)).alias("subkey"),
         )
-        tagged = buckets.join(sizes, ["band", "key"])
-        cold = tagged.filter(F.col("_bsz") <= bucket_cap).select(
-            "simhash", "band", "key"
+        for j in range(bands)
+    ]
+    hot = (
+        tagged.filter(F.col("_bsz") > _BUCKET_CAP)
+        .select("simhash", "band", "key", F.explode(F.array(*sub_structs)).alias("ss"))
+        .select(
+            "simhash",
+            "band",
+            "key",
+            F.col("ss.sub").alias("sub"),
+            F.col("ss.subkey").alias("subkey"),
         )
-        # hot signatures agree on chunk `band`; sub-band the complement
-        # bits. complement(band) = signature with chunk `band` spliced out
-        # (low bits below the chunk | high bits above it shifted down) —
-        # band is a column, shift amounts must be literals, so build a
-        # small CASE over the `bands` possible values.
-        comp_bits = SIMHASH_BITS - chunk_bits
-        sub_bits = (comp_bits + bands - 1) // bands
-        sub_mask = (1 << sub_bits) - 1
-        s = F.col("simhash")
-
-        def comp_for(b: int) -> F.Column:
-            low = s.bitwiseAND(F.lit((1 << (b * chunk_bits)) - 1))
-            high = F.shiftright(s, (b + 1) * chunk_bits)
-            return low + F.shiftleft(high, b * chunk_bits)
-
-        comp = F.lit(0).cast("bigint")
-        for b in range(bands):
-            comp = F.when(F.col("band") == b, comp_for(b)).otherwise(comp)
-        sub_structs = [
-            F.struct(
-                F.lit(j).alias("sub"),
-                F.shiftright(comp, j * sub_bits)
-                .bitwiseAND(F.lit(sub_mask))
-                .alias("subkey"),
-            )
-            for j in range(bands)
-        ]
-        hot = (
-            tagged.filter(F.col("_bsz") > bucket_cap)
-            .select(
-                "simhash", "band", "key", F.explode(F.array(*sub_structs)).alias("ss")
-            )
-            .select(
-                "simhash",
-                "band",
-                "key",
-                F.col("ss.sub").alias("sub"),
-                F.col("ss.subkey").alias("subkey"),
-            )
-        )
-        cand = (
-            self_join_pairs(cold, ["band", "key"])
-            .union(self_join_pairs(hot, ["band", "key", "sub", "subkey"]))
-            .distinct()
-        )
+    )
+    hot_keys = ["subkey", "sub", "key", "band"]
+    cand = (
+        _bucket_pairs(cold, "simhash", ["key", "band"]).toDF("ha", "hb")
+        .union(_bucket_pairs(hot, "simhash", hot_keys).toDF("ha", "hb"))
+        .distinct()
+    )
     # verify is join-free: both signatures sit in the candidate row
     verified = cand.select(
         "ha", "hb", F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))).alias("hamming")
@@ -488,7 +451,7 @@ def dedup_keep_first(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def near_dup_components(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, threshold: float = 0.8
+    df: DataFrame, id_col: str, text_col: str, threshold: float = 0.8
 ) -> DataFrame:
     """Connected components of the near-dup pair graph — the clustering
     step of corpus dedup (pick one representative per near-dup cluster).
@@ -501,7 +464,7 @@ def near_dup_components(
     at the end with label = self. Star contraction beat O(diameter)-round
     min-label propagation 5.0-5.6 s vs 12.6-25.6 s on the sf0.1 corpus
     (BENCH.md "connected-components algorithm choice")."""
-    pairs = ngram_jaccard_pairs(df, id_col, text_col, n, threshold).select(
+    pairs = ngram_jaccard_pairs(df, id_col, text_col, threshold).select(
         "id_a", "id_b"
     )
     comp = connected_components_star(
@@ -621,14 +584,12 @@ def connected_components_star(edges: DataFrame, max_iter: int = 50) -> DataFrame
     return nodes.groupBy("node").agg(F.min("label").alias("component"))
 
 
-def containment_dedup_pairs(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, threshold: float = 0.8
-) -> DataFrame:
+def containment_dedup_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """EXACT asymmetric containment near-dup pairs:
-    C(a ⊆ b) = |A∩B| / |A| >= threshold with |A| <= |B| — the dedup class
-    Jaccard misses entirely (a 10-shingle snippet quoted inside a
-    500-shingle doc has J ≈ 0.02 but containment 1.0; boilerplate, quotes,
-    chunk-of-larger-doc leaks). Returns (id_a, id_b, containment) with
+    C(a ⊆ b) = |A∩B| / |A| >= t (``_CONTAINMENT_THRESHOLD``) with
+    |A| <= |B| — the dedup class Jaccard misses entirely (a 10-shingle
+    snippet quoted inside a 500-shingle doc has J ≈ 0.02 but containment
+    1.0; boilerplate, quotes, chunk-of-larger-doc leaks). Returns (id_a, id_b, containment) with
     id_a the contained (smaller) side; equal sizes orient id_a < id_b.
 
     Prefix filtering is ASYMMETRIC here (no recall loss): the symmetric
@@ -640,9 +601,9 @@ def containment_dedup_pairs(
     sum over A-prefix occurrences of df(shingle): rarest-first ranking
     keeps df small, hot shingles never enter prefixes. Verify is the exact
     set intersection, same persisted set table as the Jaccard path."""
-    sets_df = persist_tracked(_shingle_sets(df, id_col, text_col, n))
+    sets_df = persist_tracked(_shingle_sets(df, id_col, text_col))
     ex = _shingle_rows(sets_df)
-    prefix = _rarest_prefix(ex, ex, threshold).select(
+    prefix = _rarest_prefix(ex, ex, _CONTAINMENT_THRESHOLD).select(
         F.col("doc_id").alias("id_a"), F.col("n_sh").alias("n_a"), "sh1"
     )
     full = ex.select(
@@ -657,20 +618,8 @@ def containment_dedup_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    a = sets_df.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sets_df.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(inter.cast("double") / F.size("sh_a"), 6).alias(
-                "containment"
-            ),
-        )
-        .filter(F.col("containment") >= threshold)
+    return _verify_sets(
+        cand, sets_df, _containment, "containment", _CONTAINMENT_THRESHOLD
     )
 
 

@@ -32,6 +32,7 @@ from pyspark.sql.types import (
 
 from ..cache import persist_tracked
 from ..rounding import half_up
+from .dedup import _bucket_pairs
 
 
 def _as_double(df: DataFrame, vec_col: str) -> DataFrame:
@@ -428,23 +429,26 @@ def semdedup(
 
 
 def lsh_buckets(
-    vectors: DataFrame, dim: int = 64, n_planes: int = 6, n_tables: int = 4
+    vectors: DataFrame, n_planes: int = 6, n_tables: int = 4
 ) -> DataFrame:
     """Random-hyperplane (sign) sketch, multi-table: per table t, bucket_t =
-    bits of sign(V @ P_t^T). P is a fixed seeded Gaussian tensor; the dot
-    products run as ONE numpy matmul per Arrow batch inside an Arrow UDF
-    (vectorized, no per-row Python). Candidates at scale = self-join on
-    (table, bucket); two vectors at angle theta share a table's bucket with
+    bits of sign(V @ P_t^T). P is a fixed seeded Gaussian tensor, one
+    column per vector dimension (read off the batch); the dot products run
+    as ONE numpy matmul per Arrow batch inside an Arrow UDF (vectorized, no
+    per-row Python). Candidates at scale = self-join on (table, bucket);
+    two vectors at angle theta share a table's bucket with
     probability (1 - theta/pi)^n_planes, and miss ALL tables with
     probability (1 - p)^n_tables — tune the pair for the target recall.
     Returns (vec_id, table, bucket) — one row per table via posexplode."""
-    planes = np.random.default_rng(7).standard_normal((n_tables * n_planes, dim))
 
     @F.arrow_udf(ArrayType(LongType()))
     def sketch(batch: pa.Array) -> pa.Array:
         if len(batch) == 0:
             return pa.array([], pa.list_(pa.int64()))
         m = _matrix(batch)  # (rows, dim)
+        planes = np.random.default_rng(7).standard_normal(
+            (n_tables * n_planes, m.shape[1])
+        )
         signs = (m @ planes.T) > 0  # (rows, n_tables*n_planes)
         signs = signs.reshape(len(m), n_tables, n_planes)
         weights = (1 << np.arange(n_planes)).astype(np.int64)
@@ -458,11 +462,7 @@ def lsh_buckets(
 
 
 def lsh_near_dup_pairs(
-    vectors: DataFrame,
-    threshold: float = 0.8,
-    dim: int = 64,
-    n_planes: int = 6,
-    n_tables: int = 4,
+    vectors: DataFrame, threshold: float = 0.8, n_planes: int = 6, n_tables: int = 4
 ) -> DataFrame:
     """Scale path: multi-table sign-sketch bucket join -> exact cosine
     verify on the (deduplicated) candidates only. Recall < 1 by
@@ -472,21 +472,8 @@ def lsh_near_dup_pairs(
     s=0.8, ~2.4e-3 at s=0.9; size (n_planes, n_tables) for the target
     recall/candidate-volume tradeoff (fewer planes = higher recall but
     coarser, fuller buckets)."""
-    b = lsh_buckets(vectors, dim, n_planes, n_tables)
-    cand = (
-        b.alias("a")
-        .join(
-            b.alias("b"),
-            (F.col("a.table") == F.col("b.table"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("id_a"),
-            F.col("b.vec_id").alias("id_b"),
-        )
-        .distinct()
-    )
+    b = lsh_buckets(vectors, n_planes, n_tables)
+    cand = _bucket_pairs(b, "vec_id", ["table", "bucket"]).distinct()
     va = _as_double(vectors, "embedding").select(
         F.col("vec_id").alias("id_a"), F.col("embedding").alias("va")
     )

@@ -165,42 +165,34 @@ def tdigest_quantiles(
         ]
     )
 
-    def per_partition(pdf: pd.DataFrame) -> pd.DataFrame:
-        gid = str(int(pdf["_pid"].iloc[0]) % 32)
-        vals = pdf[col].dropna().to_numpy(dtype=float)
-        if len(vals) == 0:
-            return pd.DataFrame({"gid": [gid], "means": [[]], "weights": [[]]})
-        m, w = _compress(vals, np.ones_like(vals), 200)
-        return pd.DataFrame(
-            {"gid": [gid], "means": [m.tolist()], "weights": [w.tolist()]}
+    def digest(gid: str, m, w) -> pd.DataFrame:
+        return pd.DataFrame({"gid": [gid], "means": [m.tolist()], "weights": [w.tolist()]})
+
+    def merged(pdf: pd.DataFrame):
+        """The group's digests concatenated in gid order, compressed (empty
+        when no digest holds a centroid)."""
+        pdf = pdf.sort_values("gid", kind="stable")  # deterministic order
+        means, weights = (
+            np.concatenate([np.asarray(x, dtype=float) for x in pdf[c]])
+            for c in ("means", "weights")
         )
+        return _compress(means, weights, 200)
+
+    def per_partition(pdf: pd.DataFrame) -> pd.DataFrame:
+        vals = pdf[col].dropna().to_numpy(dtype=float)
+        m, w = _compress(vals, np.ones_like(vals), 200)
+        return digest(str(int(pdf["_pid"].iloc[0]) % 32), m, w)
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("gid", kind="stable")  # deterministic order
-        means = np.concatenate([np.asarray(x, dtype=float) for x in pdf["means"]])
-        weights = np.concatenate(
-            [np.asarray(x, dtype=float) for x in pdf["weights"]]
-        )
-        gid = str(pdf["gid"].iloc[0])
-        if len(means) == 0:
-            return pd.DataFrame({"gid": [gid], "means": [[]], "weights": [[]]})
-        m, w = _compress(means, weights, 200)
-        return pd.DataFrame(
-            {"gid": [gid], "means": [m.tolist()], "weights": [w.tolist()]}
-        )
+        return digest(str(pdf["gid"].iloc[0]), *merged(pdf))
 
     qcols = [f"q{int(q * 100)}" for q in qs]
     final_schema = StructType([StructField(c, DoubleType()) for c in qcols])
 
     def finalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("gid", kind="stable")
-        means = np.concatenate([np.asarray(x, dtype=float) for x in pdf["means"]])
-        weights = np.concatenate(
-            [np.asarray(x, dtype=float) for x in pdf["weights"]]
-        )
-        if len(means) == 0:
+        m, w = merged(pdf)
+        if len(m) == 0:
             return pd.DataFrame({c: [float("nan")] for c in qcols})
-        m, w = _compress(means, weights, 200)
         return pd.DataFrame(
             {
                 c: [half_up(_digest_quantile(m, w, q), round_to)]

@@ -110,18 +110,23 @@ def token_count_col(text_col: str, tokenizer: str) -> F.Column:
     return F.when(c.isNull(), F.lit(0)).otherwise(F.size(F.split(c, " "))).cast("bigint")
 
 
+def _bound(value: F.Column, body) -> F.Column:
+    """``body(v)`` with ``value`` evaluated once, as the variable ``v`` of a
+    ``transform`` over a one-element array. A higher-order lambda runs
+    interpreted and evaluates every outer expression it mentions on each
+    call, so a lambda over ``split(text)`` itself splits the text again for
+    every word of every n-gram: 11.1 s against 0.93 s for the bigrams of
+    100k 35-55-word docs (local[4], BENCH.md "One word-n-gram builder").
+    A lambda over split words takes them from here."""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
 def word_ngrams(words, n: int) -> F.Column:
     """The positional word n-grams of a split-words array column: element
     ``i`` joins words ``i .. i+n-1`` with single spaces, and the array is
     empty when there are fewer than ``n`` words (NULL words included). The
-    text family's one n-gram builder: a new consumer calls it.
-
-    ``words`` is bound once, as the variable of a ``transform`` over a
-    one-element array. A higher-order lambda runs interpreted and
-    evaluates every outer expression it mentions on each call, so a lambda
-    over ``split(text)`` itself splits the text again for every word of
-    every n-gram: 11.1 s against 0.93 s for the bigrams of 100k
-    35-55-word docs (local[4], BENCH.md "One word-n-gram builder")."""
+    text family's one n-gram builder: a new consumer calls it. ``words``
+    is evaluated once (``_bound``)."""
 
     def grams(ws):
         return F.when(
@@ -134,7 +139,7 @@ def word_ngrams(words, n: int) -> F.Column:
             ),
         ).otherwise(F.array())
 
-    return F.element_at(F.transform(F.array(words), grams), 1)
+    return _bound(words, grams)
 
 
 def bpe_oracle_expr(text_expr: str) -> str:
@@ -1033,16 +1038,20 @@ def ngram_perplexity(
     from ..cache import persist_tracked
 
     words = F.split(F.col(text_col), " ")
-    bigrams = F.when(
-        (F.col(text_col).isNotNull()) & (F.size(words) >= 2),
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - 2),
-            lambda i: F.struct(
-                F.element_at(words, i + 1).alias("w1"),
-                F.element_at(words, i + 2).alias("w2"),
+    # (w1, w2) structs, the model's join key; NULL text has none
+    bigrams = _bound(
+        words,
+        lambda ws: F.when(
+            F.size(ws) >= 2,
+            F.transform(
+                F.sequence(F.lit(0), F.size(ws) - 2),
+                lambda i: F.struct(
+                    F.element_at(ws, i + 1).alias("w1"),
+                    F.element_at(ws, i + 2).alias("w2"),
+                ),
             ),
-        ),
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
+        ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>")),
+    )
 
     base = df.select(
         F.col(id_col).alias("_id"),

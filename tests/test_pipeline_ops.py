@@ -1,51 +1,16 @@
-"""Tests for training-data pipeline operators: dedup family agreement
-(exact inverted-index vs prefix-filter vs MinHash-LSH), blocked-GEMM vs
-naive all-pairs cosine, and the deterministic bench synthesizer."""
+"""Tests for training-data pipeline operators: blocked-GEMM vs naive
+all-pairs cosine, sampling, packing, text cleaning, the schema contract
+and the deterministic bench synthesizer (the dedup family is pinned in
+test_dedup.py)."""
 
 import pytest
 from pyspark.sql import Row, functions as F
+from test_dedup import _docs, _pairs
 
-from fsharp_data_validation_spark.operators.dedup import (
-    exact_duplicates,
-    minhash_lsh_pairs,
-    ngram_jaccard_pairs,
-)
 from fsharp_data_validation_spark.operators.similarity import (
     near_dup_pairs,
     near_dup_pairs_blocked,
 )
-
-
-def _docs(spark):
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    rows = [
-        Row(doc_id=1, text=base),
-        Row(doc_id=2, text=base),  # exact dup of 1
-        Row(doc_id=3, text=base + " tail"),  # near dup of 1/2
-        Row(doc_id=4, text="completely different words in this sentence here"),
-        Row(doc_id=5, text="short text"),  # < 3 words after split? no: 2 words
-        Row(doc_id=6, text=base.replace("fox", "cat")),
-    ]
-    return spark.createDataFrame(rows)
-
-
-def _pairs(df):
-    return sorted((r["id_a"], r["id_b"], r["sim"]) for r in df.collect())
-
-
-def test_exact_duplicates(spark):
-    got = exact_duplicates(_docs(spark), "doc_id", "text").collect()
-    assert len(got) == 1
-    assert got[0]["n_dups"] == 2 and got[0]["min_id"] == 1
-
-
-def test_prefix_jaccard_equals_lsh(spark):
-    docs = _docs(spark)
-    exact = _pairs(ngram_jaccard_pairs(docs, "doc_id", "text", 3, 0.5))
-    lsh = _pairs(minhash_lsh_pairs(docs, "doc_id", "text", 3, 32, 16, 0.5))
-    assert exact, "fixture should contain near-dup pairs"
-    assert (1, 2, 1.0) in exact
-    assert exact == lsh  # high-recall banding -> identical verified output
 
 
 def test_blocked_gemm_equals_naive_pairs(spark):
@@ -86,64 +51,12 @@ def test_lsh_near_dup_recall(spark):
     exact = {(r["id_a"], r["id_b"]) for r in near_dup_pairs(df, threshold=0.8).collect()}
     approx = {
         (r["id_a"], r["id_b"])
-        for r in lsh_near_dup_pairs(df, threshold=0.8, dim=64).collect()
+        for r in lsh_near_dup_pairs(df, threshold=0.8).collect()
     }
     assert exact, "fixture should contain exact near-dup pairs"
     assert approx <= exact  # verified candidates: no false positives
     recall = len(approx & exact) / len(exact)
     assert recall >= 0.7, recall
-
-
-def test_simhash_banded_equals_allpairs(spark):
-    """Pigeonhole banding loses nothing: banded candidates + verify produce
-    exactly the all-pairs result."""
-    from fsharp_data_validation_spark.operators.dedup import (
-        simhash_banded_pairs,
-        simhash_pairs,
-    )
-
-    docs = _docs(spark)
-    allp = sorted(map(tuple, simhash_pairs(docs, "doc_id", "text", 8).collect()))
-    banded = sorted(
-        map(tuple, simhash_banded_pairs(docs, "doc_id", "text", 8).collect())
-    )
-    assert allp and allp == banded
-
-
-def test_simhash_skew_guard_output_unchanged(spark):
-    """A bucket_cap small enough to force EVERY bucket through the
-    sub-banding fallback must still produce the exact all-pairs result
-    (pigeonhole on the complement bits loses nothing), on a corpus with a
-    dominant template (boilerplate prefix + small mutations) that drags
-    signatures into shared chunk buckets."""
-    from pyspark.sql import Row
-
-    from fsharp_data_validation_spark.operators.dedup import (
-        simhash_banded_pairs,
-        simhash_pairs,
-    )
-
-    template = " ".join(f"boiler{i}" for i in range(40))
-    rows = [
-        Row(doc_id=i, text=f"{template} tail{i % 7} extra{i % 3} uniq{i // 9}")
-        for i in range(120)
-    ] + [Row(doc_id=200 + i, text=f"free text body {i} alpha beta") for i in range(20)]
-    docs = spark.createDataFrame(rows)
-    allp = sorted(map(tuple, simhash_pairs(docs, "doc_id", "text", 3).collect()))
-    guarded = sorted(
-        map(
-            tuple,
-            simhash_banded_pairs(docs, "doc_id", "text", 3, bucket_cap=5).collect(),
-        )
-    )
-    unguarded = sorted(
-        map(
-            tuple,
-            simhash_banded_pairs(docs, "doc_id", "text", 3, bucket_cap=None).collect(),
-        )
-    )
-    assert allp, "fixture should contain near-dup pairs"
-    assert guarded == allp == unguarded
 
 
 def test_ivf_topk_recall(spark):
@@ -235,64 +148,6 @@ def test_synth_transcripts_deterministic(spark):
     assert mx > 50  # hot conversations concentrate ~1.25% of rows each
 
 
-def test_rowlocal_signatures_equal_explode_formulation(spark):
-    """Pin the shuffle-free (array_min over transform) MinHash signatures to
-    the reference explode+groupBy formulation, and pin that distinct seeds
-    produce distinct hash columns (guards the pyspark higher-order-function
-    arity trap: a two-arg lambda binds (element, index), so a default-arg
-    seed capture silently degrades every column to the same hash)."""
-    from fsharp_data_validation_spark.operators.dedup import (
-        _shingle_sets,
-        minhash_signatures,
-    )
-
-    k = 8
-    sets_df = _shingle_sets(_docs(spark), "doc_id", "text", 3)
-    new = {
-        r["doc_id"]: [r[f"mh_{i}"] for i in range(k)]
-        for r in minhash_signatures(sets_df, k).collect()
-    }
-    ex = sets_df.select("doc_id", F.explode("sh").alias("x"))
-    old = {
-        r["doc_id"]: [r[f"m{i}"] for i in range(k)]
-        for r in ex.groupBy("doc_id")
-        .agg(
-            *[
-                F.min(F.xxhash64(F.lit(i), F.col("x"))).alias(f"m{i}")
-                for i in range(k)
-            ]
-        )
-        .collect()
-    }
-    assert new == old
-    for sig in new.values():
-        assert len(set(sig)) > 1, "seeds collapsed: every min-hash identical"
-
-
-def test_near_dup_components_and_keep_first(spark):
-    from fsharp_data_validation_spark.operators.dedup import (
-        dedup_keep_first,
-        near_dup_components,
-    )
-
-    docs = _docs(spark)
-    comp = {
-        r["doc_id"]: r["component"]
-        for r in near_dup_components(docs, "doc_id", "text", 3, 0.5).collect()
-    }
-    # docs 1,2 are exact dups, 3 a near dup of both, 6 a near dup of 1/2/3
-    # at the 0.5 threshold -> one cluster labeled by the smallest id
-    assert comp[1] == comp[2] == comp[3] == 1
-    assert comp[4] == 4 and comp[5] == 5  # singletons label themselves
-    assert len(comp) == docs.count()
-
-    kept = sorted(
-        r["doc_id"] for r in dedup_keep_first(docs, "doc_id", "text").collect()
-    )
-    # only the exact-dup pair collapses (1 kept, 2 dropped)
-    assert kept == [1, 3, 4, 5, 6]
-
-
 def test_hash_split_deterministic(spark):
     from fsharp_data_validation_spark.operators.sampling import hash_split
 
@@ -359,59 +214,6 @@ def test_time_rollup_grains_consistent(spark):
         assert abs(day[d]["total_value"] - round(sum(r["total_value"] for r in kids), 2)) < 1e-6
 
 
-def test_conversation_digests_dup_and_flow(spark):
-    """Two text-identical conversations share text_digest (keeper = min
-    conv_id); a template-identical-but-different-text conversation shares
-    only flow_digest. Turn order must not matter (digest sorts by turn_idx)."""
-    from fsharp_data_validation_spark.operators.dedup import conversation_digests
-
-    def conv(cid, turns, shuffle=False):
-        ts = list(turns)
-        if shuffle:
-            ts = ts[::-1]
-        return [
-            Row(conv_id=cid, turn_idx=i, role=r, text=t, tool=tool)
-            for (i, r, t, tool) in ts
-        ]
-
-    base = [(0, "user", "hi", None), (1, "assistant", "hello", None),
-            (2, "tool", None, "tool_1")]
-    rows = (
-        conv("c1", base)
-        + conv("c2", base, shuffle=True)          # same text, rows unordered
-        + conv("c3", [(0, "user", "yo", None), (1, "assistant", "sup", None),
-                      (2, "tool", None, "tool_1")])  # same flow, different text
-    )
-    out = {r["conv_id"]: r for r in conversation_digests(spark.createDataFrame(rows)).collect()}
-    assert out["c1"]["text_digest"] == out["c2"]["text_digest"]
-    assert out["c1"]["text_digest"] != out["c3"]["text_digest"]
-    assert out["c1"]["flow_digest"] == out["c3"]["flow_digest"]
-    assert out["c1"]["n_same_text"] == 2 and out["c3"]["n_same_text"] == 1
-    assert out["c1"]["n_same_flow"] == 3
-    assert out["c2"]["keep_conv_id"] == "c1"
-
-
-def test_star_components_equal_propagation_and_handle_chains(spark):
-    """large-star/small-star CC must converge on a long chain (diameter
-    1000) in logarithmic rounds where plain propagation would need 1000,
-    and label each clique by its minimum node."""
-    from fsharp_data_validation_spark.operators.dedup import (
-        connected_components_star,
-    )
-
-    # long chain 0-1-2-...-1000 plus two small cliques
-    chain = [(i, i + 1) for i in range(1000)]
-    cliques = [(2000, 2001), (2001, 2002), (3000, 3001)]
-    edges = spark.createDataFrame(chain + cliques, ["u", "v"])
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components_star(edges, max_iter=12).collect()
-    }
-    assert all(got[i] == 0 for i in range(1001))
-    assert got[2000] == got[2001] == got[2002] == 2000
-    assert got[3000] == got[3001] == 3000
-
-
 def test_redact_pii_and_repetition_edges(spark):
     """Pins: email + number redaction with counts, NULL text passthrough,
     empty/1-word texts score 0 repetition, fully-repeated text scores
@@ -440,49 +242,6 @@ def test_redact_pii_and_repetition_edges(spark):
     assert rep[3]["n_grams"] == 0 and rep[3]["rep_ratio"] == 0.0
     assert rep[5]["n_grams"] == 0
     assert rep[2]["n_grams"] == 0  # NULL text -> empty gram array
-
-
-def test_contamination_cross_corpus_only(spark):
-    """Decontamination: cross-corpus near-dups are reported, within-corpus
-    dups are NOT; containment is 1.0 for a leaked doc, 0.0 for a fresh one,
-    partial for a half-overlapping one."""
-    from fsharp_data_validation_spark.operators.contamination import (
-        cross_contamination_pairs,
-        ngram_containment,
-    )
-
-    leaked = "alpha beta gamma delta epsilon zeta eta theta"
-    train = spark.createDataFrame(
-        [
-            Row(doc_id=1, text=leaked),
-            Row(doc_id=2, text=leaked),  # within-train dup: must NOT appear
-            Row(doc_id=3, text="one two three four five six seven eight"),
-        ]
-    )
-    ev = spark.createDataFrame(
-        [
-            Row(doc_id=100, text=leaked),                      # exact leak
-            Row(doc_id=101, text="totally fresh eval words here now ok"),
-            Row(doc_id=102, text="alpha beta gamma delta nine ten"),  # partial
-        ]
-    )
-    pairs = {
-        (r["train_id"], r["eval_id"]): r["sim"]
-        for r in cross_contamination_pairs(train, ev, "doc_id", "text", 3, 0.8).collect()
-    }
-    assert (1, 100) in pairs and pairs[(1, 100)] == 1.0
-    assert (2, 100) in pairs
-    assert all(t in (1, 2, 3) and e in (100, 101, 102) for t, e in pairs)
-
-    cont = {
-        r["eval_id"]: r for r in ngram_containment(train, ev, "doc_id", "text", 3).collect()
-    }
-    assert cont[100]["containment"] == 1.0
-    assert cont[101]["containment"] == 0.0
-    # doc 102: 4 trigrams, 2 present in train ("alpha beta gamma",
-    # "beta gamma delta")
-    assert cont[102]["n_grams"] == 4 and cont[102]["n_hit"] == 2
-    assert cont[102]["containment"] == 0.5
 
 
 def test_pack_context_windows_greedy(spark):
@@ -710,43 +469,6 @@ def test_schema_contract_report_and_conform(spark):
             spark.createDataFrame([("s", "s", 1.0)], "a STRING, b STRING, c DOUBLE"),
             contract,
         )
-
-
-def test_containment_catches_snippet_jaccard_misses(spark):
-    """A short snippet quoted inside a long doc has containment 1.0 but
-    tiny Jaccard: containment_dedup_pairs reports it (oriented small->big),
-    ngram_jaccard_pairs at the same threshold does not; unrelated docs are
-    absent; exact dups orient by id."""
-    from fsharp_data_validation_spark.operators.dedup import (
-        containment_dedup_pairs,
-        ngram_jaccard_pairs,
-    )
-
-    snippet = "alpha beta gamma delta epsilon"
-    long_doc = " ".join(f"w{i}" for i in range(60)) + " " + snippet + " " + " ".join(
-        f"v{i}" for i in range(60)
-    )
-    rows = [
-        Row(doc_id=1, text=snippet),
-        Row(doc_id=2, text=long_doc),
-        Row(doc_id=3, text="totally unrelated words here in this doc"),
-        Row(doc_id=4, text=snippet),   # exact dup of 1
-    ]
-    df = spark.createDataFrame(rows)
-    cont = {
-        (r["id_a"], r["id_b"]): r["containment"]
-        for r in containment_dedup_pairs(df, "doc_id", "text", 3, 0.8).collect()
-    }
-    assert cont[(1, 2)] == 1.0          # snippet contained in long doc
-    assert cont[(4, 2)] == 1.0
-    assert cont[(1, 4)] == 1.0          # equal sizes -> id order
-    assert all(3 not in k for k in cont)
-    jac = {
-        (r["id_a"], r["id_b"])
-        for r in ngram_jaccard_pairs(df, "doc_id", "text", 3, 0.8).collect()
-    }
-    assert (1, 2) not in jac            # Jaccard blind to containment
-    assert (1, 4) in jac
 
 
 def test_hll_sketch_rollup_merge_property(spark):

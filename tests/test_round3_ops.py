@@ -467,16 +467,3 @@ def test_audio_meta_roundtrip_and_hygiene(spark):
     assert abs(got[2]["duration_s"] - 0.01) < 1e-9
     for mid in (3, 4, 5):
         assert got[mid]["ok"] is False and got[mid]["sample_rate"] is None
-
-
-def test_cluster_size_histogram(spark):
-    from fsharp_data_validation_spark.operators.dedup import cluster_size_histogram
-
-    comp = spark.createDataFrame(
-        [(1, 1), (2, 1), (3, 1), (4, 4), (5, 5), (6, 5)],
-        "doc_id int, component int",
-    )
-    got = {r["cluster_size"]: r for r in cluster_size_histogram(comp).collect()}
-    assert got[3]["n_clusters"] == 1 and got[3]["n_docs"] == 3
-    assert got[2]["n_clusters"] == 1 and got[2]["n_docs"] == 2
-    assert got[1]["n_clusters"] == 1 and got[1]["n_docs"] == 1

@@ -211,51 +211,6 @@ def test_rate_anomaly_control_chart(spark):
     assert abs(after["z"]) < 3.0 and after["anomaly"] is False
 
 
-def test_span_dedup_semantics(spark):
-    """ExactSubstr span removal (operators/dedup.py:span_dedup) pins, at
-    gram_len=4: cross-doc keep-earliest (the lexicographically-first
-    (doc_id, start) occurrence keeps its text), in-doc repeats (second
-    occurrence spliced), short docs untouched, a whole-doc exact copy
-    reduced to '' (not NULL), NULL text passed through as NULL with zero
-    counts, and overlapping dup grams removed as a coverage UNION (not
-    double-counted)."""
-    from fsharp_data_validation_spark.operators.dedup import span_dedup
-
-    d1 = "a1 a2 a3 a4 a5 a6"
-    d2 = "b1 b2 a1 a2 a3 a4 b3"
-    d3 = "c1 c2 c3 c4 x c1 c2 c3 c4"
-    d4 = "d1 d2 d3"
-    df = spark.createDataFrame(
-        [(1, d1), (2, d2), (3, d3), (4, d4), (5, d1), (6, None)],
-        "doc_id int, text string",
-    )
-    out = {r["doc_id"]: r for r in span_dedup(df, "doc_id", "text", 4).collect()}
-
-    # owner doc keeps its text verbatim
-    assert out[1]["text_clean"] == d1 and out[1]["n_removed"] == 0
-    assert out[1]["n_dup_grams"] == 0 and out[1]["n_tokens"] == 6
-
-    # cross-doc: doc2's copy of "a1 a2 a3 a4" spliced out
-    assert out[2]["text_clean"] == "b1 b2 b3"
-    assert out[2]["n_dup_grams"] == 1 and out[2]["n_removed"] == 4
-
-    # in-doc repeat: second "c1 c2 c3 c4" run removed, first kept
-    assert out[3]["text_clean"] == "c1 c2 c3 c4 x"
-    assert out[3]["n_dup_grams"] == 1 and out[3]["n_removed"] == 4
-
-    # shorter than gram_len: untouched, no grams at all
-    assert out[4]["text_clean"] == d4 and out[4]["n_removed"] == 0
-
-    # exact whole-doc copy: every gram duplicated, coverage is the UNION of
-    # the 3 overlapping spans = all 6 tokens (not 3*4), clean is '' not NULL
-    assert out[5]["n_dup_grams"] == 3 and out[5]["n_removed"] == 6
-    assert out[5]["text_clean"] == ""
-
-    # NULL text: passed through, zero counts, NULL clean
-    assert out[6]["n_tokens"] == 0 and out[6]["n_removed"] == 0
-    assert out[6]["text_clean"] is None
-
-
 def test_dsir_weights_direction_and_counts(spark):
     """DSIR importance scoring (operators/sampling.py:dsir_weights) pins:
     a doc whose hashed-n-gram mass sits in target-corpus buckets scores

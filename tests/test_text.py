@@ -31,6 +31,21 @@ def test_word_ngrams_match_python(spark):
             assert got[i] == want, (n, t)
 
 
+def test_ngram_perplexity_splits_text_once(spark):
+    """``ngram_perplexity``'s bigram array ``_bg`` mentions ``split(text)``
+    once: its lambdas read the words bound outside them, so the text is
+    not split again for every bigram."""
+    import re
+
+    from fsharp_data_validation_spark.operators.text import ngram_perplexity
+
+    df = spark.createDataFrame([(1, "a b c", True)], "doc_id int, text string, r boolean")
+    out = ngram_perplexity(df, "doc_id", "text", F.col("r"))
+    plan = out._jdf.queryExecution().analyzed().toString()
+    bg = re.search(r" AS is_ref#\d+, (.*?) AS _bg#", plan).group(1)
+    assert bg.count("split(") == 1, bg
+
+
 def test_top_ngram_fraction_tiebreak_and_short_docs(spark):
     from fsharp_data_validation_spark.operators.text import top_ngram_fraction
 

@@ -219,7 +219,7 @@ MODES = {
         "gen_docs`)",
         "docs/sec",
         lambda spark, docs: [("minhash_lsh_pairs", dedup.minhash_lsh_pairs(
-            docs, "doc_id", "text", 3, 32, 16, 0.8))],
+            docs, "doc_id", "text", 0.8))],
     ),
     "curate": Mode(
         DOCS,
@@ -287,7 +287,7 @@ MODES = {
             # collapses the candidate set: planted near-dups miss a 28-bit
             # table with ~33%, all four with ~1.2%)
             ("lsh_near_dup_pairs", similarity.lsh_near_dup_pairs(
-                vecs, threshold=0.9, dim=64, n_planes=28, n_tables=4
+                vecs, threshold=0.9, n_planes=28, n_tables=4
             )),
         ],
         load=lambda vecs: (vecs, {"eval_side": vecs.filter(F.col("vec_id") % 200 == 0)}),
