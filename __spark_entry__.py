@@ -25,6 +25,7 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from fsharp_data_validation_spark.operators.checks import MAX_DOMAIN, RATE_WINDOW
 from fsharp_data_validation_spark.operators.crossrow import (
     ordering_violations,
     referential_violations,
@@ -32,10 +33,14 @@ from fsharp_data_validation_spark.operators.crossrow import (
 )
 from fsharp_data_validation_spark.operators.drift import (
     histogram,
+    js_by_group,
     js_joined,
+    ks_by_group,
     ks_joined,
+    psi_by_group,
     psi_joined,
     split_histograms,
+    w1_by_group,
 )
 from fsharp_data_validation_spark.operators.stats import column_profile, exact_quantiles
 from fsharp_data_validation_spark.operators.text import bpe_oracle_expr
@@ -376,11 +381,16 @@ _MID_SQL = (
     " + MAX(CAST(FLOOR(epoch(ts)) AS BIGINT))) / 2) AS mid FROM transcripts"
 )
 
-_HIST_SQL = """
-SELECT LEAST(GREATEST(CAST(FLOOR(length(text) / 10.0) AS INT), 0), 19) AS bucket,
+#: the bucket shape (width in characters, count; the last bucket takes the
+#: rest) of every text-length drift histogram, split-half and per-day. The
+#: derived texts are 13-18 characters long, so 1-character buckets split them
+_LEN_WIDTH, _LEN_BUCKETS = 1.0, 20
+
+_HIST_SQL = f"""
+SELECT LEAST(GREATEST(CAST(FLOOR(length(text) / {_LEN_WIDTH}) AS INT), 0), {_LEN_BUCKETS - 1}) AS bucket,
        COUNT(*) AS n
 FROM transcripts
-WHERE text IS NOT NULL AND CAST(FLOOR(epoch(ts)) AS BIGINT) {op} (SELECT mid FROM m)
+WHERE text IS NOT NULL AND CAST(FLOOR(epoch(ts)) AS BIGINT) {{op}} (SELECT mid FROM m)
 GROUP BY 1
 """
 
@@ -415,12 +425,12 @@ def _split_drift_oracle(
 
 
 def _len_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Turn-length histograms (10-char buckets, 20 of them) of the first and
-    second half by event time, from ONE conditional aggregate
+    """Turn-length histograms (``_LEN_WIDTH``, ``_LEN_BUCKETS``) of the first
+    and second half by event time, from ONE conditional aggregate
     (split_histograms); the epoch midpoint is a broadcast scalar subplan,
     not a driver collect."""
     t = _transcripts(spark, sf_dir).select(F.length("text").alias("text_len"), "ts")
-    return split_histograms(t, "text_len", "ts", 10.0, 20)
+    return split_histograms(t, "text_len", "ts", _LEN_WIDTH, _LEN_BUCKETS)
 
 
 _PSI_FROM_J = """
@@ -473,9 +483,9 @@ def q_js_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return js_joined(_len_halves(spark, sf_dir))
 
 
-_W1_FROM_J = """
+_W1_FROM_J = f"""
 SELECT ROUND(SUM(ABS(ca * 1.0 / (SELECT SUM(na) FROM j)
-                   - cb * 1.0 / (SELECT SUM(nb) FROM j))) * 10.0, 4) AS w1
+                   - cb * 1.0 / (SELECT SUM(nb) FROM j))) * {_LEN_WIDTH}, 4) AS w1
 FROM (
   SELECT SUM(na) OVER (ORDER BY bucket) AS ca,
          SUM(nb) OVER (ORDER BY bucket) AS cb
@@ -484,9 +494,9 @@ FROM (
 """
 
 
-# W1 is a sum over the bucket grid, so j is the densified 20-bucket spine
-@query(_split_drift_oracle(_LEN_SPLIT, _W1_FROM_J, """
-, grid AS (SELECT unnest(range(0, 20)) AS bucket)
+# W1 is a sum over the bucket grid, so j is the densified bucket spine
+@query(_split_drift_oracle(_LEN_SPLIT, _W1_FROM_J, f"""
+, grid AS (SELECT unnest(range(0, {_LEN_BUCKETS})) AS bucket)
 , j AS (
   SELECT grid.bucket,
          COALESCE(ha.n, 0) AS na, COALESCE(hb.n, 0) AS nb
@@ -500,7 +510,7 @@ def q_w1_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/drift.py:w1_joined)."""
     from fsharp_data_validation_spark.operators.drift import w1_joined
 
-    return w1_joined(_len_halves(spark, sf_dir), 20, 10.0)
+    return w1_joined(_len_halves(spark, sf_dir), _LEN_BUCKETS, _LEN_WIDTH)
 
 
 def _ts_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -570,6 +580,13 @@ def _day_text_len(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _len_by_day(spark: SparkSession, sf_dir: str, by_group) -> DataFrame:
+    """``by_group`` (an ``operators.drift`` per-group statistic) of each
+    day's turn lengths against the whole table's."""
+    t = _day_text_len(spark, sf_dir)
+    return by_group(t, "part_date", "text_len", _LEN_WIDTH, _LEN_BUCKETS)
+
+
 @query(with_transcripts(
     """
             SELECT CAST(ts AS DATE) AS part_date,
@@ -589,13 +606,13 @@ def q_quantiles_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: per-day turn-length counts ``per`` (25-char buckets, 20 of them), the
-#: whole-table baseline ``gbase``, per-day totals ``tg`` and the grand total
-#: ``tot``: what every per-day drift oracle compares
-_PER_DAY_SQL = """
+#: per-day turn-length counts ``per`` (``_LEN_WIDTH``, ``_LEN_BUCKETS``),
+#: the whole-table baseline ``gbase``, per-day totals ``tg`` and the grand
+#: total ``tot``: what every per-day drift oracle compares
+_PER_DAY_SQL = f"""
 , per AS (
   SELECT CAST(ts AS DATE) AS grp,
-         LEAST(GREATEST(CAST(FLOOR(length(text) / 25.0) AS INT), 0), 19) AS bucket,
+         LEAST(GREATEST(CAST(FLOOR(length(text) / {_LEN_WIDTH}) AS INT), 0), {_LEN_BUCKETS - 1}) AS bucket,
          COUNT(*) AS n
   FROM transcripts WHERE text IS NOT NULL GROUP BY 1, 2
 ), gbase AS (SELECT bucket, SUM(n) AS gn FROM per GROUP BY 1),
@@ -636,9 +653,7 @@ def q_psi_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-partition drift: PSI of each day's turn-length distribution vs
     the whole-table baseline — the production shape of the north rule's
     drift check (one scan, grid-complete closed form)."""
-    from fsharp_data_validation_spark.operators.drift import psi_by_group
-
-    return psi_by_group(_day_text_len(spark, sf_dir), "part_date", "text_len", 25.0, 20)
+    return _len_by_day(spark, sf_dir, psi_by_group)
 
 
 @query(_by_day_oracle(
@@ -657,9 +672,7 @@ FROM pq GROUP BY grp
 def q_js_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-day Jensen-Shannon divergence vs the whole-table baseline
     (one-scan grid shape, operators/drift.py:js_by_group)."""
-    from fsharp_data_validation_spark.operators.drift import js_by_group
-
-    return js_by_group(_day_text_len(spark, sf_dir), "part_date", "text_len", 25.0, 20)
+    return _len_by_day(spark, sf_dir, js_by_group)
 
 
 @query(_by_day_oracle(
@@ -684,9 +697,7 @@ FROM c GROUP BY grp
 def q_ks_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-partition KS: each day's turn-length ECDF vs the whole-table
     baseline (same one-scan grid shape as psi_by_day)."""
-    from fsharp_data_validation_spark.operators.drift import ks_by_group
-
-    return ks_by_group(_day_text_len(spark, sf_dir), "part_date", "text_len", 25.0, 20)
+    return _len_by_day(spark, sf_dir, ks_by_group)
 
 
 @query(with_transcripts(
@@ -976,9 +987,7 @@ def q_ngram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     with higher perplexity."""
     from fsharp_data_validation_spark.operators.text import ngram_perplexity
 
-    return ngram_perplexity(
-        load_docs(spark, sf_dir), "doc_id", "text", F.col("lang") == "en", k=0.1
-    )
+    return ngram_perplexity(load_docs(spark, sf_dir), "doc_id", "text", F.col("lang") == "en")
 
 
 # keep-earliest = ROW_NUMBER over (doc_id, start); splice = token
@@ -1368,8 +1377,8 @@ def q_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: shared by w1_by_day (batch) and stream_w1 (streaming)
 _W1_BY_DAY_ORACLE = _by_day_oracle(
-    """
-spine AS (SELECT unnest(range(0, 20)) AS bucket),
+    f"""
+spine AS (SELECT unnest(range(0, {_LEN_BUCKETS})) AS bucket),
 grid AS (SELECT tg.grp, tg.tg, s.bucket FROM tg CROSS JOIN spine s),
 j AS (
   SELECT g.grp, g.tg, g.bucket,
@@ -1384,7 +1393,7 @@ c AS (
   FROM j
 )
 SELECT grp AS part_date, CAST(MIN(tg) AS BIGINT) AS n_rows,
-       ROUND(SUM(ABS(cn * 1.0 / tg - cg * 1.0 / (SELECT t FROM tot))) * 25.0, 4) AS w1
+       ROUND(SUM(ABS(cn * 1.0 / tg - cg * 1.0 / (SELECT t FROM tot))) * {_LEN_WIDTH}, 4) AS w1
 FROM c GROUP BY grp
 """
 )
@@ -1396,9 +1405,7 @@ def q_w1_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline — completes the per-group drift family (PSI/KS/JS/W1); grid
     densified to the full bucket spine because W1 is a sum, not a max
     (operators/drift.py:w1_by_group)."""
-    from fsharp_data_validation_spark.operators.drift import w1_by_group
-
-    return w1_by_group(_day_text_len(spark, sf_dir), "part_date", "text_len", 25.0, 20)
+    return _len_by_day(spark, sf_dir, w1_by_group)
 
 
 @query(with_transcripts(
@@ -1596,15 +1603,13 @@ def q_dataset_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dataset_checks(t, checks)
 
 
-def _suggest_oracle(
-    string_cols: list[str], numeric_cols: list[str], max_domain: int = 10
-) -> str:
+def _suggest_oracle(string_cols: list[str], numeric_cols: list[str]) -> str:
     """Spec form of operators/checks.py:suggest_constraints over the
     transcripts table: ONE profile aggregate + a sorted-domain aggregate,
     then one UNION ALL arm per (column, suggestion-kind) with the same
     emission guards the operator applies (the oracle computes every string
     column's domain unconditionally — spec-form latitude — but only emits
-    it under the same ``0 < distinct <= max_domain`` guard)."""
+    it under the same ``0 < distinct <= MAX_DOMAIN`` guard)."""
     cols = string_cols + numeric_cols
     prof = ["CAST(COUNT(*) AS BIGINT) AS n"]
     for c in cols:
@@ -1643,7 +1648,7 @@ def _suggest_oracle(
     for c in string_cols:
         arms.append(
             f"SELECT '{c}', 'domain', (SELECT dom_{c} FROM dom), {nul_d}, {nul_d}, "
-            f"CAST(comp_{c} AS DOUBLE) FROM prof WHERE d_{c} > 0 AND d_{c} <= {max_domain}"
+            f"CAST(comp_{c} AS DOUBLE) FROM prof WHERE d_{c} > 0 AND d_{c} <= {MAX_DOMAIN}"
         )
     for c in numeric_cols:
         arms.append(
@@ -1663,9 +1668,7 @@ def _suggest_oracle(
     )
 
 
-@query(_suggest_oracle(
-    ["conv_id", "role", "text", "tool"], ["turn_idx"], max_domain=10
-))
+@query(_suggest_oracle(["conv_id", "role", "text", "tool"], ["turn_idx"]))
 def q_suggest_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deequ-style constraint SUGGESTION (operators/checks.py:
     suggest_constraints): profile the transcripts table in one aggregation
@@ -1679,7 +1682,6 @@ def q_suggest_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
         _transcripts(spark, sf_dir),
         string_cols=["conv_id", "role", "text", "tool"],
         numeric_cols=["turn_idx"],
-        max_domain=10,
     )
 
 
@@ -1704,7 +1706,7 @@ f"""
                      ROUND(STDDEV_POP(rate) OVER w, 6) AS s,
                      COUNT(rate) OVER w AS hist
               FROM r
-              WINDOW w AS (ORDER BY day ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)
+              WINDOW w AS (ORDER BY day ROWS BETWEEN {RATE_WINDOW} PRECEDING AND 1 PRECEDING)
             )
             SELECT day, n_rows, n_viol, rate,
                    m AS mean_rate,
@@ -1722,14 +1724,14 @@ f"""
 def q_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Control-chart anomaly detection on the daily suite-violation-rate
     series (operators/checks.py:rate_anomaly): each day scored against the
-    trailing 7 days' mean ± z·stddev with the day excluded from its own
-    baseline — the Deequ AnomalyDetection lift of ``rolling_rate``'s
-    monitoring series."""
+    trailing ``RATE_WINDOW`` days' mean ± z·stddev with the day excluded
+    from its own baseline — the Deequ AnomalyDetection lift of
+    ``rolling_rate``'s monitoring series."""
     from fsharp_data_validation_spark.operators.checks import rate_anomaly
 
     t = _transcripts(spark, sf_dir)
     anyf = transcript_row_suite().any_failure_column()
-    return rate_anomaly(t, F.to_date("ts"), anyf, window=7, z_threshold=2.0)
+    return rate_anomaly(t, F.to_date("ts"), anyf, z_threshold=2.0)
 
 
 @query(with_transcripts(
@@ -2118,7 +2120,7 @@ def q_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed TakeOrdered, never a single-task global sort."""
     from fsharp_data_validation_spark.operators.text import zipf_fit
 
-    return zipf_fit(load_docs(spark, sf_dir), "text", top_k=500, min_count=2)
+    return zipf_fit(load_docs(spark, sf_dir), "text", top_k=500)
 
 
 @query(with_docs(
@@ -2948,7 +2950,7 @@ def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = load_docs(spark, sf_dir).select(
         F.col("doc_id").alias("media_id"), _image_payload().alias("payload")
     )
-    return decode_image_meta(resize_images(media, 2))
+    return decode_image_meta(resize_images(media))
 
 
 #: brute-force cosine top-3 of each query vector (vec_id % 100 == 0);
@@ -3037,9 +3039,7 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-attested end-to-end (the ann_recall evidence design)."""
     from fsharp_data_validation_spark.operators.similarity import semdedup
 
-    return semdedup(
-        load_vecs(spark, sf_dir), "vec_id", "embedding", n_cells=8, threshold=0.85
-    )
+    return semdedup(load_vecs(spark, sf_dir), "vec_id", "embedding", threshold=0.85)
 
 
 @query(_TOPK_ORACLE, quadratic=True)
@@ -3058,11 +3058,14 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_ANN_LSH = {"threshold": 0.8, "n_planes": 6, "n_tables": 12}  # query and oracle
+
+
 # construction replay: the oracle rebuilds the SAME seeded
 # hyperplane sketch (literals), sign buckets, bucket join and exact
 # verify in DuckDB — robust to scale/seed, unlike asserting full
 # recall of an approximate method (per-pair miss ~3% at sim=0.8)
-@query(_lsh_oracle(threshold=0.8, n_planes=6, n_tables=12, seed=7), quadratic=True)
+@query(_lsh_oracle(**_ANN_LSH), quadratic=True)
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale path: sign-sketch buckets (Arrow pandas UDF) -> exact cosine
     verify. Approximate by construction: with 6 planes x 12 tables the
@@ -3075,9 +3078,7 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale/seed (see sources.documents.lsh_construction_oracle_sql)."""
     from fsharp_data_validation_spark.operators.similarity import lsh_near_dup_pairs
 
-    return lsh_near_dup_pairs(
-        load_vecs(spark, sf_dir), threshold=0.8, n_planes=6, n_tables=12
-    )
+    return lsh_near_dup_pairs(load_vecs(spark, sf_dir), **_ANN_LSH)
 
 
 #: documented recall floors for the approximate ANN configurations in
@@ -3086,9 +3087,13 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: n_probe=4 of n_cells=16 — no DuckDB oracle is possible (a KMeans fit
 #: isn't SQL-replayable; the sampled-centroid design exists precisely for
 #: that), so its floor is pinned by pytest instead
-#: (tests/test_round5_ops.py::test_ivf_kmeans_trained_quantizer_recall;
+#: (tests/test_similarity.py::test_ivf_kmeans_trained_quantizer_recall;
 #: measured 0.80 on the sf0.001 corpus, floor 0.7 with regeneration slack).
 ANN_RECALL_TARGETS = {"ivf": 0.6, "lsh": 0.6, "ivf_kmeans": 0.7}
+
+#: ann_recall's IVF and LSH configurations, read by the query and its oracle
+_ANN_IVF = {"k": 5, "n_cells": 8, "n_probe": 4}
+_ANN_RECALL_LSH = {"threshold": 0.8, "n_planes": 6, "n_tables": 4}
 
 
 # full construction replay of BOTH approximate ANN paths + the
@@ -3096,8 +3101,7 @@ ANN_RECALL_TARGETS = {"ivf": 0.6, "lsh": 0.6, "ivf_kmeans": 0.7}
 # quadratic: replays both exact references via the same all-pairs
 # exact-cosine CTE as embedding_near_dup
 @query(_ann_recall_oracle(
-    k=5, n_cells=8, n_probe=4, threshold=0.8, n_planes=6, n_tables=4,
-    seed=7, ivf_target=ANN_RECALL_TARGETS["ivf"],
+    **_ANN_IVF, **_ANN_RECALL_LSH, ivf_target=ANN_RECALL_TARGETS["ivf"],
     lsh_target=ANN_RECALL_TARGETS["lsh"],
 ), quadratic=True)
 def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3128,11 +3132,12 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     vecs = load_vecs(spark, sf_dir)
     qs = vecs.filter(F.col("vec_id") % 100 == 0)
-    cents = sampled_centroids(vecs, n_cells=8)
-    ivf = ivf_topk(vecs, qs, k=5, n_probe=4, centroids=cents)
-    exact_topk = brute_force_topk(vecs, qs, k=5)
-    lsh = lsh_near_dup_pairs(vecs, threshold=0.8, n_planes=6, n_tables=4)
-    exact_pairs = near_dup_pairs_blocked(vecs, threshold=0.8)
+    k = _ANN_IVF["k"]
+    cents = sampled_centroids(vecs, n_cells=_ANN_IVF["n_cells"])
+    ivf = ivf_topk(vecs, qs, k=k, n_probe=_ANN_IVF["n_probe"], centroids=cents)
+    exact_topk = brute_force_topk(vecs, qs, k=k)
+    lsh = lsh_near_dup_pairs(vecs, **_ANN_RECALL_LSH)
+    exact_pairs = near_dup_pairs_blocked(vecs, threshold=_ANN_RECALL_LSH["threshold"])
     return recall_report(
         ivf, exact_topk, ["query_id", "neighbor_id"], "ivf", ANN_RECALL_TARGETS["ivf"]
     ).unionByName(
@@ -3268,7 +3273,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fsharp_data_validation_spark.operators.temporal import sessionize
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return sessionize(ev, "user_id", "ts", "event_id", gap_seconds=1800)
+    return sessionize(ev, "user_id", "ts", "event_id")
 
 
 @query(_SESSIONIZE_ORACLE)
@@ -3281,9 +3286,7 @@ def q_sessionize_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fsharp_data_validation_spark.operators.temporal import sessionize_salted
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return sessionize_salted(
-        ev, "user_id", "ts", "event_id", gap_seconds=1800, bucket_seconds=3600
-    )
+    return sessionize_salted(ev, "user_id", "ts", "event_id", bucket_seconds=3600)
 
 
 # independent spec of the as-of semantics (correlated subquery — the
@@ -3373,7 +3376,7 @@ def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = interval_join(
         clicks, purchases, by=["user_id"], point_ts="ts",
-        start_col="start_ts", end_col="end_ts", bucket_seconds=3600,
+        start_col="start_ts", end_col="end_ts",
     )
     per_purchase = pairs.groupBy("purchase_id").agg(
         F.count(F.lit(1)).alias("n_clicks_1h")
@@ -3751,6 +3754,14 @@ def _stream_days(t: DataFrame, day: str, monitor) -> DataFrame:
     return out.select(F.to_date("win.start").alias(day), F.col("rows").alias("n_rows"), *stats)
 
 
+def _len_stream_days(spark: SparkSession, sf_dir: str, monitor) -> DataFrame:
+    """``monitor(stream, baseline)`` over daily windows of turn length,
+    against the whole-table turn-length histogram."""
+    t = _transcripts(spark, sf_dir).withColumn("text_len", F.length("text"))
+    base = histogram(t, "text_len", _LEN_WIDTH, _LEN_BUCKETS)
+    return _stream_days(t, "part_date", lambda s: monitor(s, base))
+
+
 # each windowed drift monitor's daily windows must concatenate to EXACTLY
 # its batch per-day twin, so each shares that twin's oracle
 @query(_PSI_BY_DAY_ORACLE)
@@ -3758,26 +3769,18 @@ def q_stream_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming PSI drift (streaming/validate_stream.py:
     windowed_drift_stream) over daily event-time windows against the
     whole-table text-length baseline: the stream form of psi_by_day."""
-    t = _transcripts(spark, sf_dir).withColumn("text_len", F.length("text"))
-    base = histogram(t, "text_len", 25.0, 20)
-    return _stream_days(
-        t,
-        "part_date",
-        lambda s: windowed_drift_stream(s, base, "text_len", "ts", "1 day", "1 hour", 25.0, 20),
-    )
+    return _len_stream_days(spark, sf_dir, lambda s, base: windowed_drift_stream(
+        s, base, "text_len", _LEN_WIDTH, _LEN_BUCKETS, "ts", "1 day", "1 hour"
+    ))
 
 
 @query(_W1_BY_DAY_ORACLE)
 def q_stream_w1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Wasserstein-1 drift (streaming/validate_stream.py:
     windowed_w1_stream), the stream form of w1_by_day."""
-    t = _transcripts(spark, sf_dir).withColumn("text_len", F.length("text"))
-    base = histogram(t, "text_len", 25.0, 20)
-    return _stream_days(
-        t,
-        "part_date",
-        lambda s: windowed_w1_stream(s, base, "text_len", "ts", "1 day", "1 hour", 25.0, 20),
-    )
+    return _len_stream_days(spark, sf_dir, lambda s, base: windowed_w1_stream(
+        s, base, "text_len", _LEN_WIDTH, _LEN_BUCKETS, "ts", "1 day", "1 hour"
+    ))
 
 
 @query(_CHI2_BY_DAY_ORACLE)
@@ -3820,7 +3823,7 @@ def q_stream_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     half = max(1, len(rows) // 2)
     parts = [spark.createDataFrame(p, daily.schema) for p in (rows[:half], rows[half:])]
     out = run_available_now(
-        parts, lambda s: windowed_rate_anomaly_stream(s, baseline=7, z_threshold=2.0)
+        parts, lambda s: windowed_rate_anomaly_stream(s, z_threshold=2.0)
     )
     return out.select(
         F.col("win_start").cast("date").alias("day"),

@@ -26,6 +26,9 @@ from pyspark.sql import Column, DataFrame, functions as F
 #: status expression stays a plain Column and the DuckDB oracle can mirror it)
 _OPS = {">=", "<=", ">", "<", "=="}
 
+MAX_DOMAIN = 10  # suggest_constraints: the largest value domain it collects
+RATE_WINDOW = 7  # control-chart baseline days, batch and streaming
+
 
 @dataclass(frozen=True)
 class Check:
@@ -162,7 +165,6 @@ def suggest_constraints(
     df: DataFrame,
     string_cols: Sequence[str] = (),
     numeric_cols: Sequence[str] = (),
-    max_domain: int = 10,
 ) -> DataFrame:
     """Profile-driven constraint SUGGESTION (the Deequ ConstraintSuggestion
     architecture: Schelter et al., VLDB 2018) — the discovery complement of
@@ -184,9 +186,9 @@ def suggest_constraints(
        agg + one-row reduce.
     2. The collected one-row profile (a control-plane O(#columns) scalar
        read, same pattern as the dedup convergence witnesses) decides which
-       string columns are low-cardinality (0 < distinct <= ``max_domain``);
+       string columns are low-cardinality (0 < distinct <= ``MAX_DOMAIN``);
        ONE more aggregation collects the sorted pipe-joined value domain for
-       just those columns — bounded at ``max_domain`` values per column, so
+       just those columns — bounded at ``MAX_DOMAIN`` values per column, so
        the second pass is safe at any scale (it never runs for high-
        cardinality columns).
 
@@ -237,7 +239,7 @@ def suggest_constraints(
 
     n = prof["n_rows"]
     domain_cols = [
-        c for c in string_cols if 0 < prof[f"d_{c}"] <= max_domain
+        c for c in string_cols if 0 < prof[f"d_{c}"] <= MAX_DOMAIN
     ]
     domains: dict[str, str] = {}
     if domain_cols:
@@ -278,13 +280,12 @@ def rate_anomaly(
     df: DataFrame,
     day_col: Column,
     fail_col: Column,
-    window: int = 7,
     z_threshold: float = 3.0,
 ) -> DataFrame:
     """Control-chart anomaly detection on the daily violation-rate series —
     the Deequ AnomalyDetection architecture (Schelter et al., VLDB 2018)
     over the monitoring time series ``rolling_rate`` already reports: each
-    day's suite violation rate is scored against the trailing ``window``
+    day's suite violation rate is scored against the trailing ``RATE_WINDOW``
     days' mean ± z·stddev (the current day EXCLUDED from its own baseline,
     so a spike can't mask itself).
 
@@ -315,7 +316,7 @@ def rate_anomaly(
     rated = daily.withColumn(
         "rate", F.round(F.col("n_viol") / F.col("n_rows"), 6)
     )
-    w = Window.orderBy("day").rowsBetween(-window, -1)
+    w = Window.orderBy("day").rowsBetween(-RATE_WINDOW, -1)
     mean = F.round(F.avg("rate").over(w), 6)
     sd = F.round(F.stddev_pop("rate").over(w), 6)
     hist = F.count("rate").over(w)

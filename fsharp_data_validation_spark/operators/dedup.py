@@ -33,6 +33,7 @@ containment threshold are module constants: each has one value.
 from __future__ import annotations
 
 import operator
+from decimal import Decimal
 from functools import reduce
 from typing import Callable, List
 
@@ -151,16 +152,19 @@ def _shingle_rows(sets_df: DataFrame) -> DataFrame:
 
 def _rarest_prefix(ex: DataFrame, corpus: DataFrame, threshold: float) -> DataFrame:
     """The AllPairs prefix of each doc in ``ex`` (``_shingle_rows``): its
-    ``floor((1-t)*n_sh) + 1`` shingles rarest by document frequency over
-    ``corpus``'s ``sh1`` rows, ties broken by shingle. Two sets with
-    Jaccard >= t (or a set contained >= t in another) share a prefix
-    shingle, so only prefixes need to enter the candidate join."""
+    ``n_sh - ceil(t*n_sh) + 1`` shingles rarest by document frequency over
+    ``corpus``'s ``sh1`` rows, ties broken by shingle. Each caller's ratio
+    >= t — Jaccard, within a corpus or across two, and containment of A —
+    gives |A∩B| >= t*|A|, so A's prefix holds a shared shingle and only
+    prefixes enter the candidate join. ``t`` is a decimal: in floating
+    point ``(1 - 0.8) * 10`` is 1.9999999999999996, a prefix one short."""
     dfreq = corpus.groupBy("sh1").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy("doc_id").orderBy("df", "sh1")
+    overlap = F.ceil(F.lit(Decimal(repr(threshold))) * F.col("n_sh"))
     return (
         ex.join(dfreq, "sh1")
         .withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= F.floor((1 - threshold) * F.col("n_sh")) + 1)
+        .filter(F.col("_rk") <= F.col("n_sh") - overlap + 1)
     )
 
 
@@ -169,7 +173,7 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """EXACT n-gram Jaccard near-dup pairs with **prefix filtering**
     (AllPairs/PPJoin-style, no recall loss): for J(a,b) >= t, a and b must
-    share at least one of each other's ``floor((1-t)*|s|) + 1`` globally
+    share at least one of each other's ``|s| - ceil(t*|s|) + 1`` globally
     rarest shingles. Only those prefix shingles enter the inverted index,
     so the per-shingle c^2 candidate blowup collapses (hot/common shingles
     never generate candidates); candidates are then verified with the exact
@@ -596,7 +600,7 @@ def containment_dedup_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFr
     Jaccard bound indexes only prefixes on both sides, but for containment
     the big side's shared fraction can be arbitrarily small, so B's FULL
     shingle list is indexed and only the QUERY side A is prefix-pruned —
-    if none of A's floor((1-t)*|A|)+1 globally-rarest shingles hits B,
+    if none of A's |A| - ceil(t*|A|) + 1 globally-rarest shingles hits B,
     then |A∩B| < t*|A| and the pair cannot qualify. Candidate volume is
     sum over A-prefix occurrences of df(shingle): rarest-first ranking
     keeps df small, hot shingles never enter prefixes. Verify is the exact

@@ -74,11 +74,14 @@ def decode_image_meta(df: DataFrame) -> DataFrame:
     return df.mapInPandas(go, schema=IMAGE_META_SCHEMA)
 
 
-def resize_images(df: DataFrame, factor: int = 2) -> DataFrame:
-    """Nearest-neighbor downsample by ``factor`` on the synthetic payload
-    format: header dims divide by ``factor``; the pixel-byte stream keeps
-    every ``factor``-th byte (numpy slice — vectorized, no copies beyond
-    the output). REAL plumbing (Arrow batches, binary out, header rewrite);
+_RESIZE_FACTOR = 2
+
+
+def resize_images(df: DataFrame) -> DataFrame:
+    """Nearest-neighbor downsample by ``_RESIZE_FACTOR`` on the synthetic
+    payload format: header dims divide by it; the pixel-byte stream keeps
+    every n-th byte (numpy slice — vectorized, no copies beyond the
+    output). REAL plumbing (Arrow batches, binary out, header rewrite);
     swap the body transform for a real resampler (PIL/libvips) in prod.
     Returns (media_id, payload) with the resized payload."""
     schema = StructType(
@@ -94,13 +97,13 @@ def resize_images(df: DataFrame, factor: int = 2) -> DataFrame:
                     out.append(None)
                     continue
                 body = np.frombuffer(p[5:], dtype=np.uint8)
-                nw, nh = w // factor, h // factor
+                nw, nh = w // _RESIZE_FACTOR, h // _RESIZE_FACTOR
                 header = (
                     int(nw).to_bytes(2, "big")
                     + int(nh).to_bytes(2, "big")
                     + int(c).to_bytes(1, "big")
                 )
-                out.append(header + body[::factor].tobytes())
+                out.append(header + body[::_RESIZE_FACTOR].tobytes())
             yield pd.DataFrame({"media_id": pdf["media_id"], "payload": out})
 
     return df.mapInPandas(go, schema=schema)

@@ -360,7 +360,6 @@ def semdedup(
     vectors: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_cells: int = 8,
     threshold: float = 0.85,
     centroids: Optional[np.ndarray] = None,
 ) -> DataFrame:
@@ -392,7 +391,7 @@ def semdedup(
     Returns (id_col, cell, n_dup_earlier, keep) — one row per vector;
     ``keep = false`` marks the semantic duplicates to drop."""
     if centroids is None:
-        centroids = sampled_centroids(vectors, id_col, vec_col, n_cells)
+        centroids = sampled_centroids(vectors, id_col, vec_col)
     centers = np.asarray(centroids, dtype="float64")
     assigned = persist_tracked(
         _as_double(vectors, vec_col).select(
@@ -428,6 +427,13 @@ def semdedup(
     )
 
 
+def lsh_planes(n_planes: int, n_tables: int, dim: int) -> np.ndarray:
+    """The sign sketch's fixed Gaussian hyperplanes, ``(n_tables * n_planes,
+    dim)``, table-major: ``lsh_buckets`` projects onto them and the DuckDB
+    oracles inline the same tensor as literals."""
+    return np.random.default_rng(7).standard_normal((n_tables * n_planes, dim))
+
+
 def lsh_buckets(
     vectors: DataFrame, n_planes: int = 6, n_tables: int = 4
 ) -> DataFrame:
@@ -446,9 +452,7 @@ def lsh_buckets(
         if len(batch) == 0:
             return pa.array([], pa.list_(pa.int64()))
         m = _matrix(batch)  # (rows, dim)
-        planes = np.random.default_rng(7).standard_normal(
-            (n_tables * n_planes, m.shape[1])
-        )
+        planes = lsh_planes(n_planes, n_tables, m.shape[1])
         signs = (m @ planes.T) > 0  # (rows, n_tables*n_planes)
         signs = signs.reshape(len(m), n_tables, n_planes)
         weights = (1 << np.arange(n_planes)).astype(np.int64)

@@ -23,6 +23,9 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+_SESSION_GAP_S = 1800  # sessionize's default gap, sessionize_salted's gap
+_INTERVAL_BUCKET_S = 3600  # interval_join's time bucket
+
 
 def _micros(c: F.Column) -> F.Column:
     """Epoch microseconds for Timestamp/TimestampNTZ (UTC session tz makes
@@ -102,7 +105,6 @@ def interval_join(
     point_ts: str = "ts",
     start_col: str = "start_ts",
     end_col: str = "end_ts",
-    bucket_seconds: int = 3600,
 ) -> DataFrame:
     """Range join: every (point, interval) pair of the same ``by`` key with
     ``start <= point_ts <= end`` (inclusive both ends). Spark's native plan
@@ -114,15 +116,16 @@ def interval_join(
     to exactly ONE bucket, and the join becomes an equi-join on
     (key…, bucket) + an exact containment filter. One shuffle each side,
     hash join, no row explosion beyond the interval/bucket replication.
-    Pick ``bucket_seconds`` ≈ the typical interval length: shorter buckets
-    amplify intervals, longer buckets fatten candidate lists.
+    The bucket width ``_INTERVAL_BUCKET_S`` is about the typical interval
+    length: shorter buckets amplify intervals, longer buckets fatten
+    candidate lists.
 
     ``points`` and ``intervals`` must not share column names other than
     ``by`` (the containment filter references ``point_ts``/``start_col``/
     ``end_col`` unqualified).
     """
     by = list(by)
-    w_us = F.lit(int(bucket_seconds) * 1_000_000)
+    w_us = F.lit(_INTERVAL_BUCKET_S * 1_000_000)
     ib = intervals.withColumn(
         "_b",
         F.explode(
@@ -177,7 +180,7 @@ def sessionize(
     key_col: str = "user_id",
     ts_col: str = "ts",
     id_col: str = "event_id",
-    gap_seconds: int = 1800,
+    gap_seconds: int = _SESSION_GAP_S,
 ) -> DataFrame:
     """Gap-based sessions: within a key, ordered by (ts, id), a new session
     starts when the gap to the previous event exceeds ``gap_seconds``.
@@ -211,12 +214,11 @@ def sessionize_salted(
     key_col: str = "user_id",
     ts_col: str = "ts",
     id_col: str = "event_id",
-    gap_seconds: int = 1800,
     bucket_seconds: int = 86400,
 ) -> DataFrame:
-    """``sessionize`` for Zipf-hot keys: output-identical, but the event
-    window runs over (key, time_bucket) instead of (key), so no single
-    task ever sorts a whole hot key's timeline.
+    """``sessionize`` at its default gap, for Zipf-hot keys: output-identical,
+    but the event window runs over (key, time_bucket) instead of (key), so
+    no single task ever sorts a whole hot key's timeline.
 
     Phase 1 — local sessionize: events are bucketed by
     ``floor(ts / bucket_seconds)`` (a deterministic time salt: unlike a
@@ -248,7 +250,7 @@ def sessionize_salted(
     wb = Window.partitionBy(key_col, "_bk").orderBy(F.col(ts_col), F.col(id_col))
     gap_us = _micros(F.col(ts_col)) - _micros(F.lag(ts_col).over(wb))
     is_new = F.when(
-        gap_us.isNull() | (gap_us > gap_seconds * 1_000_000), F.lit(1)
+        gap_us.isNull() | (gap_us > _SESSION_GAP_S * 1_000_000), F.lit(1)
     ).otherwise(F.lit(0))
     runb = wb.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     local = ev.select(
@@ -269,7 +271,7 @@ def sessionize_salted(
         F.lag("_last_ts").over(wk)
     )
     merged = F.when(
-        boundary_gap.isNotNull() & (boundary_gap <= gap_seconds * 1_000_000),
+        boundary_gap.isNotNull() & (boundary_gap <= _SESSION_GAP_S * 1_000_000),
         F.lit(1),
     ).otherwise(F.lit(0))
     with_merge = summary.select(key_col, "_bk", "_n", merged.alias("_merged"))

@@ -293,36 +293,33 @@ def repetition_score(df: DataFrame, id_col: str, text_col: str = "text") -> Data
     )
 
 
+_MIN_TOKENS, _MAX_TOKENS = 10, 500  # a curated doc's token count, inclusive
+
+
 def curate_corpus(
     df: DataFrame,
     id_col: str,
     text_col: str = "text",
-    min_tokens: int = 10,
-    max_tokens: int = 500,
     min_alpha: float = 0.5,
 ) -> DataFrame:
     """End-to-end corpus curation — the composed pipeline a training-data
-    user actually runs: language filter + token-length bounds + alpha-ratio
-    quality gate (all row-local predicates in ONE projection, evaluated in
-    the scan stage), exact-dedup keep-first (ONE shuffle, on the content
-    digest), then the deterministic hash train/test split (row-local).
+    user actually runs: language filter + token-length bounds
+    (``_MIN_TOKENS``..``_MAX_TOKENS``) + alpha-ratio quality gate (all
+    row-local predicates in ONE projection, evaluated in the scan stage),
+    exact-dedup keep-first (ONE shuffle, on the content digest), then the
+    deterministic hash train/test split (row-local).
     Returns (id, split) for surviving docs. Total plan: one scan + one
     shuffle regardless of how many filters compose — the point of
     expressing curation as Column predicates instead of chained
     materialized stages."""
     from .sampling import hash_split
 
-    first = _curate_survivors(df, id_col, text_col, min_tokens, max_tokens, min_alpha)
+    first = _curate_survivors(df, id_col, text_col, min_alpha)
     return hash_split(first, id_col, 90).select(id_col, "split")
 
 
 def _curate_survivors(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    min_tokens: int,
-    max_tokens: int,
-    min_alpha: float,
+    df: DataFrame, id_col: str, text_col: str, min_alpha: float
 ) -> DataFrame:
     """Curation gates + exact-dedup keep-first, returning the surviving
     FULL rows (shared by ``curate_corpus`` and ``curate_dedup_pack``).
@@ -336,7 +333,7 @@ def _curate_survivors(
     alpha_ratio = alpha.cast("double") / F.length(text_col)
     kept = df.filter(
         (F.col("lang") == "en")
-        & n_tokens.between(min_tokens, max_tokens)
+        & n_tokens.between(_MIN_TOKENS, _MAX_TOKENS)
         & (alpha_ratio >= min_alpha)
     )
     w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(F.col(id_col))
@@ -382,7 +379,7 @@ def curate_dedup_pack(
     from .dedup import md5_int, minhash_lsh_pairs
     from .sampling import hash_split
 
-    survivors = _curate_survivors(df, id_col, text_col, 10, 500, min_alpha)
+    survivors = _curate_survivors(df, id_col, text_col, min_alpha)
     pairs = minhash_lsh_pairs(survivors, id_col, text_col)
     drop = pairs.select(F.col("id_b").alias(id_col)).distinct()
     kept = survivors.join(drop, id_col, "left_anti")
@@ -844,13 +841,15 @@ def dup_ngram_fraction(
     )
 
 
-def zipf_fit(
-    df: DataFrame, text_col: str, top_k: int = 1000, min_count: int = 2
-) -> DataFrame:
+_ZIPF_MIN_COUNT = 2
+
+
+def zipf_fit(df: DataFrame, text_col: str, top_k: int = 1000) -> DataFrame:
     """Zipf rank-frequency fit over the corpus vocabulary: least-squares
-    slope of ln(freq) on ln(rank) for the top-``top_k`` tokens — the
-    classic corpus-health diagnostic (natural text ≈ −1; synthetic or
-    template-heavy corpora deviate; Zipf 1949 / Piantadosi 2014, public).
+    slope of ln(freq) on ln(rank) for the top-``top_k`` tokens seen at
+    least ``_ZIPF_MIN_COUNT`` times — the classic corpus-health diagnostic
+    (natural text ≈ −1; synthetic or template-heavy corpora deviate; Zipf
+    1949 / Piantadosi 2014, public).
 
     Scale shape: explode + one map-side-combined hash aggregate for token
     counts; the top-k cut is ``ORDER BY ... LIMIT k`` — Spark executes it
@@ -867,7 +866,7 @@ def zipf_fit(
         .select(F.explode(F.split(F.col(text_col), " ")).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("freq"))
-        .filter(F.col("freq") >= min_count)
+        .filter(F.col("freq") >= _ZIPF_MIN_COUNT)
         .orderBy(F.desc("freq"), F.asc("token"))
         .limit(top_k)
     )
@@ -1006,15 +1005,16 @@ def vocab_growth(
     )
 
 
-def ngram_perplexity(
-    df: DataFrame, id_col: str, text_col: str, ref_col, k: float = 0.1
-) -> DataFrame:
+_ADD_K = 0.1
+
+
+def ngram_perplexity(df: DataFrame, id_col: str, text_col: str, ref_col) -> DataFrame:
     """Bigram-LM perplexity quality filter (the CCNet / RefinedWeb
     architecture: Wenzek et al. 2020 score documents against a reference-
     domain LM and drop the high-perplexity tail). The model is a bigram
-    add-k language model trained on the REFERENCE sub-corpus (rows where
-    ``ref_col`` is true); every document — reference or not — is scored
-    with its perplexity under that model:
+    add-k (k = ``_ADD_K``) language model trained on the REFERENCE
+    sub-corpus (rows where ``ref_col`` is true); every document — reference
+    or not — is scored with its perplexity under that model:
 
         P(w2 | w1) = (c(w1 w2) + k) / (c(w1 .) + k * (V + 1))
         ppl(doc)   = 2 ^ ( -mean_i log2 P(w_i | w_{i-1}) )
@@ -1059,9 +1059,14 @@ def ngram_perplexity(
         bigrams.alias("_bg"),
         words.alias("_w"),
     )
-    ref_occ = base.filter("is_ref").select(F.explode("_bg").alias("g")).select(
-        "g.w1", "g.w2"
-    )
+
+    def bigram_rows(rows: DataFrame, *keep: str) -> DataFrame:
+        # not explode: Catalyst infers `size(_bg) > 0` from it, a filter that
+        # evaluates the interpreted bigram lambda again
+        g = rows.select(*keep, F.explode_outer("_bg").alias("g"))
+        return g.filter(F.col("g").isNotNull()).select(*keep, "g.w1", "g.w2")
+
+    ref_occ = bigram_rows(base.filter("is_ref"))
     bg = persist_tracked(
         ref_occ.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("_c12"))
     )
@@ -1072,9 +1077,7 @@ def ngram_perplexity(
         .agg(F.countDistinct("w").cast("double").alias("_v"))
     )
 
-    occ = base.select("_id", F.explode("_bg").alias("g")).select(
-        "_id", "g.w1", "g.w2"
-    )
+    occ = bigram_rows(base, "_id")
     scored = (
         occ.join(bg, ["w1", "w2"], "left")
         .join(ctx, ["w1"], "left")
@@ -1083,10 +1086,10 @@ def ngram_perplexity(
             "_id",
             (
                 F.log2(
-                    (F.coalesce(F.col("_c12"), F.lit(0)) + F.lit(k))
+                    (F.coalesce(F.col("_c12"), F.lit(0)) + F.lit(_ADD_K))
                     / (
                         F.coalesce(F.col("_c1"), F.lit(0))
-                        + F.lit(k) * (F.col("_v") + F.lit(1.0))
+                        + F.lit(_ADD_K) * (F.col("_v") + F.lit(1.0))
                     )
                 )
             ).alias("_lp"),

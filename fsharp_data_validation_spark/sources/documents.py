@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.similarity import lsh_planes
+
 DOCS_SQL = """
 SELECT doc_id, text, lang, source, n_chars FROM documents
 UNION ALL
@@ -84,25 +86,18 @@ def with_vecs(sql: str) -> str:
     return f"WITH vecs AS ({VECS_ORACLE_SQL})\n" + sql
 
 
-def _plane_rows_sql(n_planes: int, n_tables: int, seed: int) -> str:
-    """The seeded Gaussian hyperplanes of ``operators.similarity.lsh_buckets``
-    rendered as DuckDB VALUES rows ``(table, plane_idx, DOUBLE[])`` — the
-    same ``np.random.default_rng(seed).standard_normal`` tensor, inlined as
-    literals so DuckDB replays the identical sketch."""
-    import numpy as np
-
-    planes = np.random.default_rng(seed).standard_normal((n_tables * n_planes, 64))
-    rows = []
-    for r in range(n_tables * n_planes):
-        t, j = divmod(r, n_planes)
-        vec = "[" + ",".join(repr(float(x)) for x in planes[r]) + "]::DOUBLE[]"
-        rows.append(f"({t},{j},{vec})")
-    return ",\n".join(rows)
+def _planes_cte(n_planes: int, n_tables: int) -> str:
+    """The CTE ``planes(t, j, p)``: ``lsh_planes`` over the 64-d vectors as
+    DuckDB VALUES rows (table, plane_idx, DOUBLE[]), literals so DuckDB
+    replays the sketch of ``operators.similarity.lsh_buckets`` exactly."""
+    rows = ",\n".join(
+        f"({r // n_planes},{r % n_planes},[{','.join(repr(float(x)) for x in p)}]::DOUBLE[])"
+        for r, p in enumerate(lsh_planes(n_planes, n_tables, 64))
+    )
+    return f"planes(t, j, p) AS (VALUES {rows})"
 
 
-def lsh_construction_oracle_sql(
-    threshold: float = 0.8, n_planes: int = 6, n_tables: int = 12, seed: int = 7
-) -> str:
+def lsh_construction_oracle_sql(threshold: float, n_planes: int, n_tables: int) -> str:
     """DuckDB replay of ``lsh_near_dup_pairs``' FULL construction: the same
     seeded Gaussian hyperplanes (inlined as double literals), sign buckets
     ``sum((dot > 0) << j)`` per table, (table, bucket) candidate self-join,
@@ -112,9 +107,8 @@ def lsh_construction_oracle_sql(
     tables is ~3%), but two independent implementations of the same sketch
     must agree exactly (sign flips need |dot| ~ 1e-13, vanishing for
     Gaussian planes)."""
-    planes_sql = _plane_rows_sql(n_planes, n_tables, seed)
     return f"""WITH vecs AS ({VECS_ORACLE_SQL}),
-planes(t, j, p) AS (VALUES {planes_sql}),
+{_planes_cte(n_planes, n_tables)},
 bk AS (
   SELECT v.vec_id, pl.t,
          SUM(CASE WHEN list_dot_product(v.e, pl.p) > 0
@@ -136,15 +130,8 @@ SELECT id_a, id_b, sim FROM (
 
 
 def ann_recall_oracle_sql(
-    k: int = 5,
-    n_cells: int = 8,
-    n_probe: int = 4,
-    threshold: float = 0.8,
-    n_planes: int = 6,
-    n_tables: int = 4,
-    seed: int = 7,
-    ivf_target: float = 0.6,
-    lsh_target: float = 0.6,
+    k: int, n_cells: int, n_probe: int, threshold: float, n_planes: int, n_tables: int,
+    ivf_target: float = 0.6, lsh_target: float = 0.6,
 ) -> str:
     """DuckDB replay of the ``ann_recall`` query: recall of the APPROXIMATE
     ANN configurations against the exact results on the same vectors.
@@ -158,12 +145,11 @@ def ann_recall_oracle_sql(
       distances equal to ~1e-15 relative (same acceptance as the LSH
       sign-replay oracle).
     - LSH arm: the full seeded-hyperplane construction replay
-      (``_plane_rows_sql``) at the reduced, genuinely-approximate table
+      (``_planes_cte``) at the reduced, genuinely-approximate table
       count, pair recall vs the exact >= threshold pairs.
 
     The recall FORMULA (left join + counts + rounded ratio + >= target) is
     thereby checked end-to-end on both engines."""
-    planes_sql = _plane_rows_sql(n_planes, n_tables, seed)
     return f"""WITH vecs AS ({VECS_ORACLE_SQL}),
 q AS (SELECT vec_id AS query_id, e AS qe FROM vecs WHERE vec_id % 100 = 0),
 v AS (SELECT vec_id AS neighbor_id, e AS ve FROM vecs),
@@ -212,7 +198,7 @@ ivf_topk AS (
           WHERE qc.query_id != a.neighbor_id) s) r
   WHERE rnk <= {k}
 ),
-planes(t, j, p) AS (VALUES {planes_sql}),
+{_planes_cte(n_planes, n_tables)},
 bk AS (
   SELECT v2.vec_id, pl.t,
          SUM(CASE WHEN list_dot_product(v2.e, pl.p) > 0

@@ -36,6 +36,7 @@ from typing import Callable, Sequence
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.compiler import Suite
+from ..operators.checks import RATE_WINDOW
 from ..rounding import half_up, seq_mean_std
 
 
@@ -177,14 +178,8 @@ def _window_counts(
 
 
 def _binned_window_counts(
-    stream_df: DataFrame,
-    baseline_hist: DataFrame,
-    value_col: str,
-    ts_col: str,
-    window: str,
-    watermark: str,
-    bucket_width: float,
-    n_buckets: int,
+    stream_df: DataFrame, baseline_hist: DataFrame, value_col: str, bucket_width: float,
+    n_buckets: int, ts_col: str, window: str, watermark: str,
 ):
     """Shared input of the binned numeric monitors (PSI, W1): the window
     counts of ``value_col``'s ``n_buckets`` buckets, plus the baseline
@@ -204,24 +199,24 @@ def windowed_drift_stream(
     stream_df: DataFrame,
     baseline_hist: DataFrame,
     value_col: str,
+    bucket_width: float,
+    n_buckets: int,
     ts_col: str = "ts",
     window: str = "1 minute",
     watermark: str = "2 minutes",
-    bucket_width: float = 25.0,
-    n_buckets: int = 20,
 ) -> DataFrame:
     """Streaming PSI drift monitor against a static baseline: per
     event-time window, emit (win, rows, psi) where ``psi`` compares the
     window's distribution of ``value_col`` to ``baseline_hist`` (a batch
     histogram from ``operators.drift.histogram``, e.g. built over last
-    month's validated corpus) — the sum of ``operators.drift.psi_term``
-    over the window counts and baseline literals (``n_buckets`` rows
-    collected once: a plan literal, not a data collect)."""
+    month's validated corpus, with the same ``bucket_width`` and
+    ``n_buckets``) — the sum of ``operators.drift.psi_term`` over the
+    window counts and baseline literals (``n_buckets`` rows collected once:
+    a plan literal, not a data collect)."""
     from ..operators.drift import psi_term
 
     agg, base_n, tot = _binned_window_counts(
-        stream_df, baseline_hist, value_col, ts_col, window, watermark,
-        bucket_width, n_buckets,
+        stream_df, baseline_hist, value_col, bucket_width, n_buckets, ts_col, window, watermark
     )
     terms = [
         psi_term(F.col(f"_c{i}"), F.lit(base_n[i]), F.col("rows"), F.lit(tot))
@@ -287,11 +282,11 @@ def windowed_w1_stream(
     stream_df: DataFrame,
     baseline_hist: DataFrame,
     value_col: str,
+    bucket_width: float,
+    n_buckets: int,
     ts_col: str = "ts",
     window: str = "1 minute",
     watermark: str = "2 minutes",
-    bucket_width: float = 25.0,
-    n_buckets: int = 20,
     round_to: int = 4,
 ) -> DataFrame:
     """Streaming Wasserstein-1 drift monitor against a static baseline —
@@ -308,8 +303,7 @@ def windowed_w1_stream(
     from ..operators.drift import cdf_gap
 
     agg, base_n, tot = _binned_window_counts(
-        stream_df, baseline_hist, value_col, ts_col, window, watermark,
-        bucket_width, n_buckets,
+        stream_df, baseline_hist, value_col, bucket_width, n_buckets, ts_col, window, watermark
     )
     cum_win = list(accumulate(F.col(f"_c{i}") for i in range(n_buckets)))
     cum_base = list(accumulate(base_n))
@@ -345,12 +339,12 @@ def windowed_rates_to_sink(
 
 
 def windowed_rate_anomaly_stream(
-    rates_stream: DataFrame, baseline: int = 7, z_threshold: float = 3.0
+    rates_stream: DataFrame, z_threshold: float = 3.0
 ) -> DataFrame:
     """STREAMING control-chart anomaly detection — the streaming sibling of
     ``operators/checks.rate_anomaly``, closing the Deequ monitoring loop on
     the live path: each CLOSED event-time window's violation rate is scored
-    against the trailing ``baseline`` closed windows' mean ± z·stddev, the
+    against the trailing ``RATE_WINDOW`` closed windows' mean ± z·stddev, the
     window itself excluded from its own baseline, with the same
     rounded-before-branching float discipline as the batch form (a raw
     stddev of ~1e-17 noise over identical rates must not divide a z).
@@ -360,7 +354,7 @@ def windowed_rate_anomaly_stream(
     topology; a stateful operator cannot follow a streaming aggregation in
     one query). A single control-plane key carries the trailing rate deque
     across micro-batches via ``applyInPandasWithState`` — state is
-    O(baseline) floats and the operator sees one row per closed window, so
+    O(RATE_WINDOW) floats and the operator sees one row per closed window, so
     the stateful stage is KB-scale at any stream rate. Windows inside one
     batch are scored in event-time order; watermark semantics make
     cross-batch closes monotone.
@@ -393,7 +387,7 @@ def windowed_rate_anomaly_stream(
             StructField("anomaly", BooleanType()),
         ]
     )
-    # carried baseline: the last ``baseline`` closed-window rates, oldest first
+    # carried baseline: the last RATE_WINDOW closed-window rates, oldest first
     state_schema = StructType([StructField("rates", ArrayType(DoubleType()))])
 
     def score(key, pdfs, state: GroupState):
@@ -432,8 +426,8 @@ def windowed_rate_anomaly_stream(
                 out["z"].append(z)
                 out["anomaly"].append(bool(anom))
                 hist.append(rate)
-                if len(hist) > baseline:
-                    hist = hist[-baseline:]
+                if len(hist) > RATE_WINDOW:
+                    hist = hist[-RATE_WINDOW:]
             yield pd.DataFrame(out)
         state.update((hist,))
 

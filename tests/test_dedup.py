@@ -46,6 +46,21 @@ def test_prefix_jaccard_equals_lsh(spark):
     assert exact == lsh  # high-recall banding -> identical verified output
 
 
+def test_prefix_jaccard_keeps_a_pair_at_the_threshold(spark):
+    """A pair at exactly J = t survives the AllPairs prefix: 10 and 8
+    shingles sharing 8 (J = 0.8). The 10-shingle set's prefix is
+    10 - ceil(0.8 * 10) + 1 = 3 shingles; its two unshared shingles are the
+    rarest, so a prefix one shingle short (the float form
+    ``floor((1 - 0.8) * 10) + 1`` is 2) misses the pair."""
+    words = [f"w{i}" for i in range(12)]
+    docs = spark.createDataFrame(
+        [Row(doc_id=1, text=" ".join(words)), Row(doc_id=2, text=" ".join(words[:10]))]
+    )
+    want = [(1, 2, 0.8)]
+    assert _pairs(minhash_lsh_pairs(docs, "doc_id", "text", 0.8)) == want
+    assert _pairs(ngram_jaccard_pairs(docs, "doc_id", "text", 0.8)) == want
+
+
 def test_simhash_banded_equals_allpairs(spark):
     """Pigeonhole banding loses nothing: banded candidates + verify produce
     exactly the all-pairs result."""

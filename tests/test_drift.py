@@ -150,3 +150,13 @@ def test_by_group_equals_joined_per_group(spark):
         ).fillna(0, ["na"])
         want = D.chi2_joined(counts).collect()[0]
         assert (chi2[g]["chi2"], chi2[g]["dof"]) == (want["chi2"], want["dof"]), g
+
+
+def test_psi_by_day_text_length_buckets_split_the_texts(spark):
+    """The text-length drift queries' bucket shape splits the derived texts:
+    on sf0.001 some day's length distribution differs from the whole
+    table's, so psi_by_day attests arithmetic, not a single-bucket 0.0."""
+    import __spark_entry__ as e
+
+    out = e.q_psi_by_day(spark, "/root/testdata/sf0.001").collect()
+    assert out and max(r["psi"] for r in out) > 0

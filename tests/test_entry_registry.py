@@ -6,9 +6,8 @@ non-test consumer and every option a call site that passes it (pure
 ``ast``, no JVM)."""
 
 import ast
+import fnmatch
 import json
-import math
-import sys
 from pathlib import Path
 
 import __spark_entry__ as e
@@ -234,35 +233,126 @@ def _calls(tree):
                 yield alias.get(name, name), n
 
 
+#: parameters that name columns bind the caller's schema, so passing one at
+#: any call site is enough (perfbench passes semdedup's positionally)
+COLUMN_OPTIONS = ("*_col", "*_cols", "*_ts")
+
+
+def _options(trees):
+    """(label, callee, position, name, default) for each defaulted parameter
+    of the public top-level functions in ``trees`` and of the public methods
+    and ``__init__`` of their top-level classes. ``callee`` is the name a call
+    uses (the class for ``__init__``, the attribute for a method);
+    ``position`` is the index a call passes the parameter at, after a
+    method's ``self``, and ``None`` for a keyword-only parameter."""
+    out = []
+    for p, tree in trees.items():
+        defs = [(f.name, f, 0) for f in tree.body if isinstance(f, ast.FunctionDef)]
+        for c in tree.body:
+            if isinstance(c, ast.ClassDef):
+                for m in c.body:
+                    if isinstance(m, ast.FunctionDef):
+                        static = any(
+                            getattr(d, "id", None) == "staticmethod"
+                            for d in m.decorator_list
+                        )
+                        name = c.name if m.name == "__init__" else m.name
+                        defs.append((name, m, 0 if static else 1))
+        for name, f, skip in defs:
+            if name.startswith("_"):
+                continue
+            a = f.args
+            positional = a.posonlyargs + a.args
+            first = len(positional) - len(a.defaults)
+            opts = [
+                (i - skip, x.arg, d)
+                for i, (x, d) in enumerate(zip(positional[first:], a.defaults), first)
+            ] + [(None, x.arg, d) for x, d in zip(a.kwonlyargs, a.kw_defaults) if d]
+            out += [
+                (f"{p.relative_to(PKG)}:{name}({arg}=)", name, i, arg, d)
+                for i, arg, d in opts
+            ]
+    return out
+
+
+def _frozen(v):
+    """``v`` with its lists, sets and dicts made hashable."""
+    if isinstance(v, (list, tuple)):
+        return tuple(map(_frozen, v))
+    if isinstance(v, (set, frozenset)):
+        return frozenset(map(_frozen, v))
+    if isinstance(v, dict):
+        return frozenset((k, _frozen(x)) for k, x in v.items())
+    return v
+
+
+def _value(node):
+    """The literal ``node`` spells, or, where it spells none, a fresh object
+    that equals no other value."""
+    try:
+        return _frozen(ast.literal_eval(node))
+    except (ValueError, TypeError, SyntaxError):
+        return object()
+
+
+def _unvaried(options, calls):
+    """Labels of ``options`` (see ``_options``) that take fewer than two
+    values across ``calls`` ({callee: [ast.Call]}). The default is one value,
+    and a call that omits the option or spells the default out adds no
+    other; a literal argument adds its value; a non-literal argument or a
+    ``*``/``**`` spread adds a value of its own, because the guard cannot
+    evaluate it. A column-name option (COLUMN_OPTIONS) passes once any
+    call passes it."""
+    out = []
+    for label, callee, i, arg, default in options:
+        column = any(fnmatch.fnmatch(arg, g) for g in COLUMN_OPTIONS)
+        values = [] if column else [_value(default)]
+        for c in calls.get(callee, ()):
+            kw = [k.value for k in c.keywords if k.arg == arg]
+            if any(isinstance(x, ast.Starred) for x in c.args) or any(
+                k.arg is None for k in c.keywords
+            ):
+                values.append(object())
+            elif kw:
+                values.append(_value(kw[0]))
+            elif i is not None and i < len(c.args):
+                values.append(_value(c.args[i]))
+        if len(set(values)) < (1 if column else 2):
+            out.append(label)
+    return sorted(out)
+
+
+def test_unvaried_ignores_a_spelled_out_default():
+    """A call that spells out the default sets nothing; a different literal,
+    a non-literal or a spread does, and a column name needs one pass."""
+    (f,) = ast.parse("def f(a, k=3, *, by_col='x'):\n    pass\n").body
+    opts = [
+        ("k", "f", 1, "k", f.args.defaults[0]),
+        ("by_col", "f", None, "by_col", f.args.kw_defaults[0]),
+    ]
+
+    def unvaried(*srcs):
+        calls = [c for s in srcs for _, c in _calls(ast.parse(s))]
+        return _unvaried(opts, {"f": calls})
+
+    assert unvaried("f(1)", "f(1, 3)", "f(1, k=3.0)") == ["by_col", "k"]
+    assert unvaried("f(1, 4)", "f(1, by_col='y')") == []
+    assert unvaried("f(1, k=n, by_col='x')") == []
+    assert unvaried("f(*a)", "f(1, **kw)") == []
+
+
 def test_every_option_is_passed_somewhere():
-    """Each defaulted parameter of a public package function is passed, by
-    keyword or by position, at one or more call sites anywhere in the repo,
-    tests included (``blocks=1`` is a reference path only tests take). An
-    option no caller sets only ever takes its default, so it is a constant.
-    A call with ``*args`` or ``**kw`` passes every parameter."""
-    n_pos, kws = {}, {}  # callee -> most positional args, keywords passed
+    """Each option — a defaulted parameter of a public package function, or
+    of a public method or ``__init__`` of a package class, outside
+    ``core/`` — takes at least two values across the calls anywhere in the
+    repo, tests included (``blocks=1`` is a reference path only tests take).
+    An option that every call leaves at its default, or sets to it by
+    hand, only ever takes that value, so it is a constant. Calls match by
+    name, so a method's calls are the calls of any attribute of that name:
+    a collision can only pass an option, never fail one."""
+    pkg = (p for p in PKG.rglob("*.py") if "core" not in p.relative_to(PKG).parts)
+    calls = {}
     for tree in _trees([*CONSUMERS, *(ROOT / "tests").glob("*.py")]).values():
         for name, c in _calls(tree):
-            spread = any(isinstance(a, ast.Starred) for a in c.args) or any(
-                k.arg is None for k in c.keywords
-            )
-            n = math.inf if spread else len(c.args)
-            n_pos[name] = max(n_pos.get(name, 0), n)
-            kws.setdefault(name, set()).update(k.arg for k in c.keywords)
-    unpassed = []
-    for p, f in _defs():
-        a = f.args
-        positional = a.posonlyargs + a.args
-        first = len(positional) - len(a.defaults)
-        # (position, name); a keyword-only option has no position to pass it at
-        defaulted = [(i, x.arg) for i, x in enumerate(positional) if i >= first] + [
-            (sys.maxsize, x.arg) for x, d in zip(a.kwonlyargs, a.kw_defaults) if d
-        ]
-        unpassed += [
-            f"{p.relative_to(PKG)}:{f.name}({arg}=)"
-            for i, arg in defaulted
-            if not f.name.startswith("_")
-            and arg not in kws.get(f.name, ())
-            and n_pos.get(f.name, 0) <= i
-        ]
-    assert sorted(unpassed) == []
+            calls.setdefault(name, []).append(c)
+    assert _unvaried(_options(_trees(pkg)), calls) == []

@@ -264,8 +264,7 @@ def test_sessionize_salted_equals_sessionize(spark):
         got = sorted(
             tuple(r)
             for r in sessionize_salted(
-                df, "user_id", "ts", "event_id",
-                gap_seconds=1800, bucket_seconds=bucket_seconds,
+                df, "user_id", "ts", "event_id", bucket_seconds=bucket_seconds
             ).collect()
         )
         assert got == want, f"bucket_seconds={bucket_seconds}"

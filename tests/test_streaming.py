@@ -109,7 +109,7 @@ def test_windowed_drift_stream_matches_batch_psi(spark):
     drift = run_available_now(
         [spark.createDataFrame(p, schema) for p in (w1, w2, sentinel)],
         lambda s: windowed_drift_stream(
-            s, baseline, "v", "ts", "1 minute", "2 minutes", 25.0, 20
+            s, baseline, "v", 25.0, 20, "ts", "1 minute", "2 minutes"
         ),
     )
     out = sorted(drift.collect(), key=lambda r: r["win"]["start"])
@@ -194,7 +194,7 @@ def test_windowed_w1_stream_matches_batch(spark):
     out_stream = run_available_now(
         [spark.createDataFrame(p, schema) for p in (w1rows, w2rows, sentinel)],
         lambda s: windowed_w1_stream(
-            s, baseline, "v", "ts", "1 minute", "2 minutes", 25.0, 20, round_to=6
+            s, baseline, "v", 25.0, 20, "ts", "1 minute", "2 minutes", round_to=6
         ),
     )
     out = sorted(out_stream.collect(), key=lambda r: r["win"]["start"])
@@ -300,7 +300,7 @@ def _rate_anomaly_stream_matches_batch(spark, max_records):
             spark.conf.set(conf, str(max_records))
         ra = run_available_now(
             parts,
-            lambda s: windowed_rate_anomaly_stream(s, baseline=7, z_threshold=3.0),
+            lambda s: windowed_rate_anomaly_stream(s, z_threshold=3.0),
         )
     finally:
         spark.conf.set(conf, old)
@@ -314,7 +314,7 @@ def _rate_anomaly_stream_matches_batch(spark, max_records):
     want = {
         r["day"]: r
         for r in rate_anomaly(
-            batch_df, F.date_trunc("minute", F.col("ts")), anyf, window=7
+            batch_df, F.date_trunc("minute", F.col("ts")), anyf
         ).collect()
     }
     assert set(got) == set(want)

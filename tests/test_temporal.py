@@ -108,7 +108,7 @@ def test_interval_join_bounds_buckets_and_keys(spark):
     )
     out = interval_join(
         points, intervals, by=["k"], point_ts="ts",
-        start_col="start_ts", end_col="end_ts", bucket_seconds=3600,
+        start_col="start_ts", end_col="end_ts",
     )
     got = sorted((r["pid"], r["iid"]) for r in out.collect())
     assert got == [(1, 100), (2, 100), (5, 100), (5, 101)]

@@ -1,8 +1,9 @@
 """The text family (``operators/text.py``): the word-n-gram builder
 against a pure-Python spec, the Gopher repetition rules against their
-explode + hash-aggregate specs, Zipf, PMI and vocabulary growth. Semantics
-pinned on hand-built fixtures; the sf0.01 DuckDB oracles cover the
-derived-table scale."""
+explode + hash-aggregate specs, Zipf, PMI, vocabulary growth, the
+curate-dedup-pack pipeline, BPE token counts and bigram perplexity.
+Semantics pinned on hand-built fixtures; the sf0.01 DuckDB oracles cover
+the derived-table scale."""
 
 import math
 
@@ -46,6 +47,21 @@ def test_ngram_perplexity_splits_text_once(spark):
     assert bg.count("split(") == 1, bg
 
 
+def test_ngram_perplexity_builds_bigrams_once_per_branch(spark):
+    """In the optimized plan the interpreted bigram ``transform`` sits in
+    one Project per branch: no Filter holds it (Catalyst infers
+    ``size(_bg) > 0`` from a plain explode) and no node holds it twice."""
+    from fsharp_data_validation_spark.operators.text import ngram_perplexity
+
+    df = spark.createDataFrame([(1, "a b c", True)], "doc_id int, text string, r boolean")
+    out = ngram_perplexity(df, "doc_id", "text", F.col("r"))
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    nodes = [ln.lstrip(" :+-|") for ln in plan.splitlines()]
+    holders = [n for n in nodes if "struct(w1, " in n]
+    assert holders and all(n.count("struct(w1, ") == 1 for n in holders), holders
+    assert not [n for n in holders if n.startswith("Filter")], holders
+
+
 def test_top_ngram_fraction_tiebreak_and_short_docs(spark):
     from fsharp_data_validation_spark.operators.text import top_ngram_fraction
 
@@ -73,7 +89,7 @@ def test_zipf_fit_exact_power_law(spark):
 
     text = " ".join(["a"] * 48 + ["b"] * 24 + ["c"] * 16 + ["d"] * 12)
     df = spark.createDataFrame([(text,)], "text string")
-    got = zipf_fit(df, "text", top_k=10, min_count=2).collect()[0]
+    got = zipf_fit(df, "text", top_k=10).collect()[0]
     assert got["n_types"] == 4
     assert abs(got["slope"] + 1.0) < 1e-6
     assert abs(got["r_squared"] - 1.0) < 1e-6
@@ -243,3 +259,133 @@ def test_gopher_kernels_equivalent(spark):
         c = sorted(map(tuple, dup_ngram_fraction(df, "doc_id", "text", n).collect()))
         d = sorted(map(tuple, _dup_ngram_explode(df, n).collect()))
         assert c == d, f"dup_ngram kernels diverge at n={n}"
+
+
+def test_curate_dedup_pack_keep_earliest_chain(spark):
+    """The composed pipeline's near-dup policy is greedy KEEP-EARLIEST:
+    drop every doc with a verified near-dup of SMALLER id — including the
+    chain case a~b~c (a<b<c, a~b, b~c, a!~c) where b is itself dropped but
+    c must still be dropped because b<c. This is deliberately NOT
+    transitive-closure clustering (operators/text.py:curate_dedup_pack).
+    The premise Jaccards are asserted in-test so the fixture can't drift."""
+    from fsharp_data_validation_spark.operators.text import curate_dedup_pack
+
+    base = [f"tok{i}a" for i in range(30)]
+    a = " ".join(base)
+    b = " ".join(base + ["extraa", "extrab", "extrac", "extrad"])
+    c = " ".join(
+        base + ["extraa", "extrab", "extrac", "extrad", "extre", "extrf", "extrg", "extrh"]
+    )
+
+    def jac(x, y):
+        def sh(t):
+            w = t.split(" ")
+            return {" ".join(w[i : i + 3]) for i in range(len(w) - 2)}
+
+        sx, sy = sh(x), sh(y)
+        return len(sx & sy) / len(sx | sy)
+
+    assert jac(a, b) >= 0.8 and jac(b, c) >= 0.8 and jac(a, c) < 0.8
+
+    # unrelated doc survives; ids far apart so every md5 split/shard differs
+    d = " ".join(f"other{i}x" for i in range(25))
+    df = spark.createDataFrame(
+        [(1, a, "en"), (2, b, "en"), (3, c, "en"), (4, d, "en")],
+        "doc_id int, text string, lang string",
+    )
+    out = curate_dedup_pack(df, "doc_id", "text").collect()
+    kept_ids = sorted(r["doc_id"] for r in out)
+    assert kept_ids == [1, 4]  # b dropped (a<b), c dropped (b<c) despite b gone
+    by_id = {r["doc_id"]: r for r in out}
+    # each survivor packs alone here (distinct pack groups / small corpus):
+    # rn and chunk_id restart at 1 per group
+    for r in by_id.values():
+        assert r["rn"] == 1 and r["chunk_id"] == 1 and r["n_bpe"] > 0
+        assert r["pack_group"].split("|")[0] in ("train", "test")
+
+
+def test_token_count_bpe_empty_text_null_ratio(spark):
+    """Empty/degenerate text is 0 BPE tokens -> chars_per_token must be NULL
+    (not NaN, not a crash) on BOTH engines. Spark side: NULLIF guard in
+    operators/text.py; DuckDB side: NULLIF in the token_count_bpe oracle.
+    DuckDB's default ieee_floating_point_ops would give NaN for 0/0 — the
+    guard pins the engines to agree (ADVICE r4, text.py:130)."""
+    import duckdb
+
+    from fsharp_data_validation_spark.operators.text import (
+        bpe_oracle_expr,
+        token_count_bpe,
+    )
+
+    df = spark.createDataFrame(
+        [(1, ""), (2, "the cat sat"), (3, None)], "doc_id int, text string"
+    )
+    rows = {r["doc_id"]: r for r in token_count_bpe(df, "doc_id", "text").collect()}
+    assert rows[1]["n_bpe"] == 0
+    assert rows[1]["chars_per_token"] is None
+    assert rows[2]["n_bpe"] > 0 and rows[2]["chars_per_token"] is not None
+    # NULL text: count pinned to 0, ratio NULL
+    assert rows[3]["n_bpe"] == 0 and rows[3]["chars_per_token"] is None
+
+    # DuckDB replay of the oracle expression on the same degenerate inputs
+    con = duckdb.connect()
+    expr = bpe_oracle_expr("text")
+    orows = con.sql(
+        "SELECT doc_id, "
+        f"{expr} AS n_bpe, "
+        f"ROUND(length(text) * 1.0 / NULLIF({expr}, 0), 4) AS chars_per_token "
+        "FROM (VALUES (1, ''), (2, 'the cat sat'), (3, NULL)) t(doc_id, text)"
+    ).fetchall()
+    od = {r[0]: r for r in orows}
+    assert od[1][1] == 0 and od[1][2] is None
+    assert od[2][1] == rows[2]["n_bpe"]
+    assert od[3][2] is None
+
+
+def test_ngram_perplexity_reference_model(spark):
+    """Bigram-LM perplexity (operators/text.py:ngram_perplexity) pins: a
+    doc made of reference bigrams scores LOW perplexity; a doc of tokens
+    the reference never saw scores the uniform-unseen level (every bigram
+    backs off to 1/(V+1)); short docs (<2 tokens) get NULL; n_bigrams =
+    tokens - 1; the model trains ONLY on reference rows (the off-reference
+    doc's own bigrams must not teach the model)."""
+    import math
+
+    import pyspark.sql.functions as F
+
+    from fsharp_data_validation_spark.operators.text import ngram_perplexity
+
+    ref = "a b a b a b a b"
+    df = spark.createDataFrame(
+        [
+            (1, ref, True),
+            (2, ref, True),
+            (3, "a b a b", False),     # in-distribution, off-reference
+            (4, "z q z q z q", False), # fully out-of-vocabulary
+            (5, "solo", False),        # < 2 tokens
+            (6, None, False),
+            (7, "a b a b a b a b", False),  # ref text, non-ref label
+        ],
+        "doc_id int, text string, is_ref boolean",
+    )
+    out = {
+        r["doc_id"]: r
+        for r in ngram_perplexity(
+            df, "doc_id", "text", F.col("is_ref")
+        ).collect()
+    }
+    assert out[1]["n_bigrams"] == 7 and out[3]["n_bigrams"] == 3
+    assert out[5]["ppl"] is None and out[5]["n_bigrams"] == 0
+    assert out[6]["ppl"] is None
+
+    # in-distribution doc is near-certain under the model -> ppl near 1;
+    # OOV doc backs off to uniform 1/(V+1) with V=2 -> ppl exactly 3.0
+    assert out[3]["ppl"] < 1.5
+    assert abs(out[4]["ppl"] - 3.0) < 1e-6
+    assert out[3]["ppl"] < out[4]["ppl"]
+    # scoring is label-blind: a reference doc and an identical-text
+    # non-reference doc score identically (the label only gates training)
+    assert out[7]["ppl"] == out[1]["ppl"]
+
+    # analytic check for the OOV level: -mean log2(1/(V+1)) = log2(3)
+    assert abs(math.log2(3.0) - math.log2(out[4]["ppl"])) < 1e-9

@@ -231,7 +231,7 @@ MODES = {
         "docs/sec",
         # min_alpha=0: the synthetic vocabulary is digit-heavy ('w12345')
         lambda spark, docs: [("curate_corpus", text.curate_corpus(
-            docs, "doc_id", "text", min_tokens=10, max_tokens=500, min_alpha=0.0))],
+            docs, "doc_id", "text", min_alpha=0.0))],
         load=_with_lang,
     ),
     # the custom stateful Arrow op: evidences that the mapInPandas +
@@ -258,7 +258,7 @@ MODES = {
         "docs/sec",
         lambda spark, docs: [
             ("top_ngram_fraction", text.top_ngram_fraction(docs, "doc_id", "text", 2)),
-            ("zipf_fit", text.zipf_fit(docs, "text", top_k=1000, min_count=2)),
+            ("zipf_fit", text.zipf_fit(docs, "text", top_k=1000)),
             ("pmi_bigrams", text.pmi_bigrams(docs, "text", min_count=25, top_k=50)),
         ],
     ),
