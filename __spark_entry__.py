@@ -43,6 +43,7 @@ from fsharp_data_validation_spark.operators.drift import (
     w1_by_group,
 )
 from fsharp_data_validation_spark.operators.stats import column_profile, exact_quantiles
+from fsharp_data_validation_spark.operators.temporal import SESSION_GAP_S
 from fsharp_data_validation_spark.operators.text import bpe_oracle_expr
 from fsharp_data_validation_spark.operators.transcript_suite import transcript_row_suite
 from fsharp_data_validation_spark.sources.documents import (
@@ -315,12 +316,12 @@ def q_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 ))
 def q_text_len_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles of turn length (oracle-checkable
-    variant of the t-digest path)."""
+    variant of ``approx_quantiles``)."""
     t = _transcripts(spark, sf_dir).select(F.length("text").alias("text_len"))
     return exact_quantiles(t, "text_len", [0.25, 0.5, 0.75, 0.95])
 
 
-# t-digest is approximate by construction, so the oracle pins the
+# the estimate is approximate by construction, so the oracle pins the
 # PUBLISHED ACCURACY BOUND rather than value equality: n_vals must
 # equal the table's exact non-null count and every rank-error
 # boolean (computed distributed on the Spark side) must be TRUE.
@@ -329,28 +330,27 @@ def q_text_len_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     " TRUE AS q25_ok, TRUE AS q50_ok, TRUE AS q75_ok, TRUE AS q95_ok"
     " FROM transcripts WHERE text IS NOT NULL"
 ))
-def q_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fully distributed t-digest quantiles of turn length (applyInPandas
-    partial digests + two-level tree merge INSIDE Spark — the driver never
-    sees a digest), then a distributed rank-error verification: for each
-    estimated quantile value v_q the true-rank interval
-    [count(<v_q)/n, count(<=v_q)/n] must intersect [q - eps, q + eps]
-    (eps=0.02, conservative vs the t-digest k1 bound ~ q(1-q)/delta at
-    delta=200). Output: n_vals (exact non-null count, ties the result to
-    the table) + one bound-holds boolean per quantile. The oracle pins
-    n_vals from the same table and the booleans to TRUE — i.e. the oracle
-    checks the published accuracy bound, not value equality (the estimate
-    is approximate by construction)."""
-    from fsharp_data_validation_spark.operators.stats import tdigest_quantiles
+def q_approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Approximate quantiles of turn length (stats.approx_quantiles: the
+    built-in ``percentile_approx``, one JVM aggregate), then a distributed
+    rank-error verification: for each estimated quantile value v_q the
+    true-rank interval [count(<v_q)/n, count(<=v_q)/n] must intersect
+    [q - eps, q + eps] (eps=1e-4, the built-in's documented 1/accuracy
+    bound at its default accuracy 10000). Output: n_vals (exact non-null
+    count, ties the result to the table) + one bound-holds boolean per
+    quantile. The oracle pins n_vals from the same table and the booleans
+    to TRUE — i.e. the oracle checks the published accuracy bound, not
+    value equality (the estimate is approximate by construction)."""
+    from fsharp_data_validation_spark.operators.stats import approx_quantiles
 
     qs = [0.25, 0.5, 0.75, 0.95]
-    eps = 0.02
+    eps = 1e-4
     t = (
         _transcripts(spark, sf_dir)
         .where(F.col("text").isNotNull())
         .select(F.length("text").cast("double").alias("text_len"))
     )
-    td = tdigest_quantiles(t, "text_len", qs, round_to=6)
+    td = approx_quantiles(t, "text_len", qs)
     aggs = [F.count(F.lit(1)).alias("n_vals")]
     for q in qs:
         k = f"q{int(q * 100)}"
@@ -725,7 +725,7 @@ def q_element_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = _transcripts(spark, sf_dir).filter(F.col("text").isNotNull())
     suite = (
-        Suite("elements")
+        Suite()
         .field("words", F.split(F.col("text"), " "))
         .each_check("word_too_long", lambda x: F.length(x) <= 6)
         .done()
@@ -779,7 +779,7 @@ def q_nested_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     child = (
-        Suite("metaChild")
+        Suite()
         .field("role", F.col("meta.role"))
         .required("roleRequired")
         .isin("roleEnum", ROLES)
@@ -789,7 +789,7 @@ def q_nested_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .done()
     )
     suite = (
-        Suite("nested")
+        Suite()
         .field("meta", F.col("meta"))
         .required("metaRequired")
         .done()
@@ -848,7 +848,7 @@ def q_each_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_sort(F.collect_list(F.struct("turn_idx", "role"))).alias("turns")
     )
     child = (
-        ElementSuite("turn")
+        ElementSuite()
         .field("role")
         .required("roleRequired")
         .isin("roleEnum", ROLES)
@@ -856,7 +856,7 @@ def q_each_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
         .check("turnIdxNonNegative", lambda v: v >= 0)
         .done()
     )
-    suite = Suite("convTurns").field("turns").each_nested(child).done()
+    suite = Suite().field("turns").each_nested(child).done()
     res = suite.run(conv, ["conv_id"])
     return res.violations.select("conv_id", F.col("path_str").alias("path"), "code")
 
@@ -898,14 +898,14 @@ def q_each_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_sort(F.collect_list(F.struct("turn_idx", "role"))).alias("turns")
     )
     child = (
-        ElementSuite("turn")
+        ElementSuite()
         .field("role")
         .check_indexed("firstMustBeSystem", lambda v, i: (i > 0) | (v == "system"))
         .field("turn_idx")
         .refute_check_indexed("turnIdxMatchesPosition", lambda v, i: v >= i)
         .done()
     )
-    suite = Suite("convIdx").field("turns").each_nested(child).done()
+    suite = Suite().field("turns").each_nested(child).done()
     res = suite.run(conv, ["conv_id"])
     return res.violations.select("conv_id", F.col("path_str").alias("path"), "code")
 
@@ -3240,7 +3240,7 @@ def q_q1_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: gap-based sessions (30-min gap) as a window spec; shared by sessionize
 #: and its output-identical hot-key twin sessionize_salted
-_SESSIONIZE_ORACLE = """
+_SESSIONIZE_ORACLE = f"""
 WITH g AS (
   SELECT user_id, ts, event_id,
          date_diff('microsecond', LAG(ts) OVER w, ts) AS gap_us
@@ -3248,7 +3248,7 @@ WITH g AS (
   WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 ), m AS (
   SELECT user_id, ts, event_id,
-         CASE WHEN gap_us IS NULL OR gap_us > 1800 * 1000000
+         CASE WHEN gap_us IS NULL OR gap_us > {SESSION_GAP_S} * 1000000
               THEN 1 ELSE 0 END AS is_new
   FROM g
 ), s AS (
@@ -3545,31 +3545,40 @@ def q_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_containment(tr, ev, "doc_id", "text")
 
 
-@query(
-    "WITH RECURSIVE transcripts AS ("
-    + TRANSCRIPTS_SQL
-    + "), t AS ("
-    "  SELECT conv_id, turn_idx, "
-    "    CASE WHEN text IS NULL THEN 0 "
-    "         ELSE len(string_split(text, ' ')) END AS n_tokens, "
-    "    ROW_NUMBER() OVER (PARTITION BY conv_id "
-    "                       ORDER BY turn_idx, coalesce(text, '')) AS rn "
-    "  FROM transcripts"
-    "), r AS ("
-    "  SELECT conv_id, rn, turn_idx, n_tokens, 1 AS chunk_id, "
-    "         n_tokens AS acc FROM t WHERE rn = 1 "
-    "  UNION ALL "
-    "  SELECT t.conv_id, t.rn, t.turn_idx, t.n_tokens, "
-    "    CASE WHEN r.acc > 0 AND r.acc + t.n_tokens > 64 "
-    "         THEN r.chunk_id + 1 ELSE r.chunk_id END, "
-    "    CASE WHEN r.acc > 0 AND r.acc + t.n_tokens > 64 "
-    "         THEN t.n_tokens ELSE r.acc + t.n_tokens END "
-    "  FROM r JOIN t ON t.conv_id = r.conv_id AND t.rn = r.rn + 1"
-    ") "
-    "SELECT conv_id, CAST(rn AS BIGINT) AS rn, turn_idx, "
-    "  CAST(n_tokens AS BIGINT) AS n_tokens, "
-    "  CAST(chunk_id AS BIGINT) AS chunk_id FROM r"
-)
+# independent spec of the greedy packing recurrence: row-at-a-time
+# recursive CTE (DuckDB-only; WITH RECURSIVE can't be composed via
+# with_transcripts, so the transcripts CTE is inlined), over a turn's
+# token count ``n_tokens_sql``
+def _pack_oracle(n_tokens_sql: str) -> str:
+    return (
+        "WITH RECURSIVE transcripts AS ("
+        + TRANSCRIPTS_SQL
+        + "), t AS ("
+        "  SELECT conv_id, turn_idx, "
+        f"    {n_tokens_sql} AS n_tokens, "
+        "    ROW_NUMBER() OVER (PARTITION BY conv_id "
+        "                       ORDER BY turn_idx, coalesce(text, '')) AS rn "
+        "  FROM transcripts"
+        "), r AS ("
+        "  SELECT conv_id, rn, turn_idx, n_tokens, 1 AS chunk_id, "
+        "         n_tokens AS acc FROM t WHERE rn = 1 "
+        "  UNION ALL "
+        "  SELECT t.conv_id, t.rn, t.turn_idx, t.n_tokens, "
+        "    CASE WHEN r.acc > 0 AND r.acc + t.n_tokens > 64 "
+        "         THEN r.chunk_id + 1 ELSE r.chunk_id END, "
+        "    CASE WHEN r.acc > 0 AND r.acc + t.n_tokens > 64 "
+        "         THEN t.n_tokens ELSE r.acc + t.n_tokens END "
+        "  FROM r JOIN t ON t.conv_id = r.conv_id AND t.rn = r.rn + 1"
+        ") "
+        "SELECT conv_id, CAST(rn AS BIGINT) AS rn, turn_idx, "
+        "  CAST(n_tokens AS BIGINT) AS n_tokens, "
+        "  CAST(chunk_id AS BIGINT) AS chunk_id FROM r"
+    )
+
+
+@query(_pack_oracle(
+    "CASE WHEN text IS NULL THEN 0 ELSE len(string_split(text, ' ')) END"
+))
 def q_pack_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy context-window packing of conversation turns into <=64-token
     chunks — custom stateful operator via Arrow applyInPandas, checked
@@ -3580,33 +3589,7 @@ def q_pack_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pack_context_windows(_transcripts(spark, sf_dir), "conv_id", "turn_idx", "text", 64)
 
 
-# independent spec of the greedy packing recurrence: row-at-a-time
-# recursive CTE (DuckDB-only; WITH RECURSIVE can't be composed via
-# with_transcripts, so the transcripts CTE is inlined)
-@query(
-    "WITH RECURSIVE transcripts AS ("
-    + TRANSCRIPTS_SQL
-    + "), t AS ("
-    "  SELECT conv_id, turn_idx, "
-    f"    {_BPE_SQL} AS n_tokens, "
-    "    ROW_NUMBER() OVER (PARTITION BY conv_id "
-    "                       ORDER BY turn_idx, coalesce(text, '')) AS rn "
-    "  FROM transcripts"
-    "), r AS ("
-    "  SELECT conv_id, rn, turn_idx, n_tokens, 1 AS chunk_id, "
-    "         n_tokens AS acc FROM t WHERE rn = 1 "
-    "  UNION ALL "
-    "  SELECT t.conv_id, t.rn, t.turn_idx, t.n_tokens, "
-    "    CASE WHEN r.acc > 0 AND r.acc + t.n_tokens > 64 "
-    "         THEN r.chunk_id + 1 ELSE r.chunk_id END, "
-    "    CASE WHEN r.acc > 0 AND r.acc + t.n_tokens > 64 "
-    "         THEN t.n_tokens ELSE r.acc + t.n_tokens END "
-    "  FROM r JOIN t ON t.conv_id = r.conv_id AND t.rn = r.rn + 1"
-    ") "
-    "SELECT conv_id, CAST(rn AS BIGINT) AS rn, turn_idx, "
-    "  CAST(n_tokens AS BIGINT) AS n_tokens, "
-    "  CAST(chunk_id AS BIGINT) AS chunk_id FROM r"
-)
+@query(_pack_oracle(_BPE_SQL))
 def q_pack_windows_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same stateful packing recurrence budgeted in SUBWORD tokens
     (tokenizer='bpe' — greedy longest-match counts as a JVM column expr,

@@ -114,8 +114,7 @@ class ElementSuite:
     element's later checks (the child CE's own bind chain), while the
     element's branches stay applicative."""
 
-    def __init__(self, name: str = "each"):
-        self.name = name
+    def __init__(self):
         # (subpath, code, kind, ok_fn: (elem Column, index Column) -> bool
         # Column) — stored uniformly 2-arg; the non-indexed builder methods
         # ignore the index, the *_indexed ones (reference indexed overloads,
@@ -530,8 +529,7 @@ class Suite:
     are acted on, so Catalyst sees every predicate at once.
     """
 
-    def __init__(self, name: str = "suite"):
-        self.name = name
+    def __init__(self):
         self._constraints: List[Constraint] = []
         # (constraint count, {key: compile pass or Column}) — see _memoized
         self._memo: Tuple[int, dict] = (-1, {})

@@ -434,9 +434,7 @@ def lsh_planes(n_planes: int, n_tables: int, dim: int) -> np.ndarray:
     return np.random.default_rng(7).standard_normal((n_tables * n_planes, dim))
 
 
-def lsh_buckets(
-    vectors: DataFrame, n_planes: int = 6, n_tables: int = 4
-) -> DataFrame:
+def lsh_buckets(vectors: DataFrame, n_planes: int, n_tables: int) -> DataFrame:
     """Random-hyperplane (sign) sketch, multi-table: per table t, bucket_t =
     bits of sign(V @ P_t^T). P is a fixed seeded Gaussian tensor, one
     column per vector dimension (read off the batch); the dot products run

@@ -1,6 +1,6 @@
 """Per-column statistics — the dataset-profile side of the north rule:
 null rate, distinct count (exact + HLL sketch), min/max, quantiles
-(built-in approx + t-digest via Arrow-batched applyInPandas).
+(exact, and approximate through the built-in ``percentile_approx``).
 
 ≅ the reference's ``flattenProofs``/``Proof.combine`` aggregation semantics
 (Library.fs:113-115, Proof.fs:102-113): every statistic here is an
@@ -10,20 +10,11 @@ associative merge, so Spark's partial (map-side) + final aggregation applies
 
 from __future__ import annotations
 
-from typing import Dict, List, Sequence
+from typing import Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..cache import persist_tracked
-from ..rounding import half_up
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 
 def column_profile(
@@ -77,7 +68,7 @@ def numeric_minmax(df: DataFrame, cols: Sequence[str]) -> DataFrame:
 
 def exact_quantiles(df: DataFrame, col: str, qs: Sequence[float]) -> DataFrame:
     """Exact continuous-interpolation percentiles (built-in ``percentile``)
-    — the oracle-checkable variant; use t-digest below at scale."""
+    — the oracle-checkable variant; use ``approx_quantiles`` at scale."""
     exprs = [
         F.round(F.expr(f"percentile({col}, {q})"), 4).alias(f"q{int(q * 100)}")
         for q in qs
@@ -85,132 +76,14 @@ def exact_quantiles(df: DataFrame, col: str, qs: Sequence[float]) -> DataFrame:
     return df.agg(*exprs)
 
 
-# --- t-digest quantiles (Arrow-batched; zero per-row Python) -------------------
-#
-# Partition-local digests built vectorized over numpy arrays inside
-# applyInPandas, merged on the driver (digests are ~KB each). This follows the
-# published t-digest merging-digest algorithm (Dunning & Ertl,
-# "Computing Extremely Accurate Quantiles Using t-Digests", 2019).
-
-
-def _compress(means, weights, delta: int):
-    import numpy as np
-
-    order = np.argsort(means, kind="stable")
-    means, weights = means[order], weights[order]
-    total = weights.sum()
-    if total == 0:
-        return means[:0], weights[:0]
-    out_m: List[float] = []
-    out_w: List[float] = []
-    cum = 0.0
-    cur_m, cur_w = float(means[0]), float(weights[0])
-    for m, w in zip(means[1:], weights[1:]):
-        q = (cum + cur_w / 2.0) / total
-        limit = 4.0 * total * q * (1.0 - q) / delta
-        if cur_w + w <= max(limit, 1.0):
-            cur_m = (cur_m * cur_w + float(m) * float(w)) / (cur_w + float(w))
-            cur_w += float(w)
-        else:
-            out_m.append(cur_m)
-            out_w.append(cur_w)
-            cum += cur_w
-            cur_m, cur_w = float(m), float(w)
-    out_m.append(cur_m)
-    out_w.append(cur_w)
-    import numpy as np
-
-    return np.asarray(out_m), np.asarray(out_w)
-
-
-def _digest_quantile(means, weights, q: float) -> float:
-    """Interpolated quantile from a compressed digest (midpoint rule)."""
-    import numpy as np
-
-    cum = weights.cumsum() - weights / 2.0
-    total = weights.sum()
-    target = q * total
-    idx = int(np.searchsorted(cum, target))
-    if idx <= 0:
-        return float(means[0])
-    if idx >= len(means):
-        return float(means[-1])
-    lo, hi = cum[idx - 1], cum[idx]
-    frac = 0.0 if hi == lo else (target - lo) / (hi - lo)
-    return float(means[idx - 1] + frac * (means[idx] - means[idx - 1]))
-
-
-def tdigest_quantiles(
-    df: DataFrame, col: str, qs: Sequence[float], round_to: int = 4
-) -> DataFrame:
-    """Fully distributed t-digest quantiles: per-partition digests via
-    applyInPandas (Arrow batches; numpy-vectorized, no per-row Python), then
-    a TWO-LEVEL TREE MERGE inside Spark — level 1 merges partition digests
-    into 32 groups, level 2 merges those into the final digest and
-    evaluates the quantiles. Returns a ONE-ROW DataFrame (q50, q95, ...)
-    like the sibling quantile operators; the driver never materializes
-    digests and the final task merges <= 32 of them, so the merge cost
-    is independent of partition count (vs the old driver-side collect()).
-
-    Deterministic for a fixed partitioning: every merge kernel sorts its
-    inputs by group key before concatenating, so Arrow batch arrival order
-    cannot change the result."""
-    import numpy as np
-
-    digest_schema = StructType(
-        [
-            StructField("gid", StringType()),
-            StructField("means", ArrayType(DoubleType())),
-            StructField("weights", ArrayType(DoubleType())),
-        ]
-    )
-
-    def digest(gid: str, m, w) -> pd.DataFrame:
-        return pd.DataFrame({"gid": [gid], "means": [m.tolist()], "weights": [w.tolist()]})
-
-    def merged(pdf: pd.DataFrame):
-        """The group's digests concatenated in gid order, compressed (empty
-        when no digest holds a centroid)."""
-        pdf = pdf.sort_values("gid", kind="stable")  # deterministic order
-        means, weights = (
-            np.concatenate([np.asarray(x, dtype=float) for x in pdf[c]])
-            for c in ("means", "weights")
-        )
-        return _compress(means, weights, 200)
-
-    def per_partition(pdf: pd.DataFrame) -> pd.DataFrame:
-        vals = pdf[col].dropna().to_numpy(dtype=float)
-        m, w = _compress(vals, np.ones_like(vals), 200)
-        return digest(str(int(pdf["_pid"].iloc[0]) % 32), m, w)
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        return digest(str(pdf["gid"].iloc[0]), *merged(pdf))
-
-    qcols = [f"q{int(q * 100)}" for q in qs]
-    final_schema = StructType([StructField(c, DoubleType()) for c in qcols])
-
-    def finalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        m, w = merged(pdf)
-        if len(m) == 0:
-            return pd.DataFrame({c: [float("nan")] for c in qcols})
-        return pd.DataFrame(
-            {
-                c: [half_up(_digest_quantile(m, w, q), round_to)]
-                for c, q in zip(qcols, qs)
-            }
-        )
-
-    part = (
-        df.select(F.col(col))
-        .withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .applyInPandas(per_partition, schema=digest_schema)
-    )
-    level1 = part.groupBy("gid").applyInPandas(merge_group, schema=digest_schema)
-    return (
-        level1.withColumn("_z", F.lit(0))
-        .groupBy("_z")
-        .applyInPandas(finalize, schema=final_schema)
+def approx_quantiles(df: DataFrame, col: str, qs: Sequence[float]) -> DataFrame:
+    """Approximate percentiles (built-in ``percentile_approx`` at its default
+    accuracy, 10000: the rank of each value is within 1/10000 of its ``q``)
+    in the same one-row ``q<NN>`` shape as ``exact_quantiles``. One JVM
+    aggregate: a sketch per partition, then a merge. Every value returned
+    is an element of ``col``, so nothing is rounded."""
+    return df.agg(
+        *[F.percentile_approx(col, q).alias(f"q{int(q * 100)}") for q in qs]
     )
 
 
@@ -220,7 +93,8 @@ def exact_quantiles_by_group(
     """Per-group exact percentiles — the per-partition profile variant of
     ``exact_quantiles``. One hash aggregation (Spark's ``percentile`` is a
     partial-aggregating ImperativeAggregate, so map-side combine applies);
-    at 100 TB swap for ``percentile_approx``/t-digest with the same shape."""
+    at 100 TB swap ``percentile`` for ``percentile_approx``, as
+    ``approx_quantiles`` does, with the same shape."""
     exprs = [
         F.round(F.expr(f"percentile({col}, {q})"), 4).alias(f"q{int(q * 100)}")
         for q in qs
@@ -271,8 +145,8 @@ def mad_outliers_by_group(df: DataFrame, group_col: str, value_col: str) -> Data
     (one partial-aggregating percentile), deviation medians (join back the
     KB-scale median table, broadcast), and the final flag pass (both tiny
     tables broadcast). The two-level median is inherently two-pass; at
-    10^12 rows swap ``percentile`` for ``percentile_approx``/t-digest with
-    the same shape. MAD = 0 (a majority-constant group) flags every
+    10^12 rows swap ``percentile`` for ``percentile_approx`` with the
+    same shape. MAD = 0 (a majority-constant group) flags every
     off-median row, deterministically on both engines (strict >).
     Returns (group, n_rows, med, mad, n_outliers, outlier_rate)."""
     base = df.select(F.col(group_col).alias("grp"), F.col(value_col).alias("x")).filter(

@@ -23,7 +23,8 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-_SESSION_GAP_S = 1800  # sessionize's default gap, sessionize_salted's gap
+SESSION_GAP_S = 1800  # sessionize's default gap, sessionize_salted's gap
+_ASOF_SUFFIX = "_asof"  # the as-of joins' suffix on the right columns
 _INTERVAL_BUCKET_S = 3600  # interval_join's time bucket
 
 
@@ -42,7 +43,6 @@ def asof_join(
     right_ts: str = "ts",
     right_cols: Optional[Sequence[str]] = None,
     tie_col: Optional[str] = None,
-    suffix: str = "_asof",
 ) -> DataFrame:
     """For every left row, attach the LATEST right row of the same ``by``
     key with ``right.ts <= left.ts`` (inclusive). Deterministic tie-break:
@@ -54,7 +54,7 @@ def asof_join(
     ``last(payload, ignorenulls=True)`` window ordered by
     (ts, side, tie) — right rows sort before left rows at equal ts, so
     equality is inclusive; left rows then read the carried payload.
-    Returns the left rows plus ``<right_col><suffix>`` columns (NULL when
+    Returns the left rows plus ``<right_col>_asof`` columns (NULL when
     no right row precedes).
     """
     right_cols = list(right_cols) if right_cols is not None else [
@@ -93,7 +93,7 @@ def asof_join(
     carried = u.withColumn("_last_pay", F.last("_pay", ignorenulls=True).over(w))
     out = carried.filter(F.col("_side") == 1).select(
         *left.columns,
-        *[F.col(f"_last_pay.{c}").alias(f"{c}{suffix}") for c in right_cols],
+        *[F.col(f"_last_pay.{c}").alias(f"{c}{_ASOF_SUFFIX}") for c in right_cols],
     )
     return out
 
@@ -180,7 +180,7 @@ def sessionize(
     key_col: str = "user_id",
     ts_col: str = "ts",
     id_col: str = "event_id",
-    gap_seconds: int = _SESSION_GAP_S,
+    gap_seconds: int = SESSION_GAP_S,
 ) -> DataFrame:
     """Gap-based sessions: within a key, ordered by (ts, id), a new session
     starts when the gap to the previous event exceeds ``gap_seconds``.
@@ -214,7 +214,8 @@ def sessionize_salted(
     key_col: str = "user_id",
     ts_col: str = "ts",
     id_col: str = "event_id",
-    bucket_seconds: int = 86400,
+    *,
+    bucket_seconds: int,
 ) -> DataFrame:
     """``sessionize`` at its default gap, for Zipf-hot keys: output-identical,
     but the event window runs over (key, time_bucket) instead of (key), so
@@ -250,7 +251,7 @@ def sessionize_salted(
     wb = Window.partitionBy(key_col, "_bk").orderBy(F.col(ts_col), F.col(id_col))
     gap_us = _micros(F.col(ts_col)) - _micros(F.lag(ts_col).over(wb))
     is_new = F.when(
-        gap_us.isNull() | (gap_us > _SESSION_GAP_S * 1_000_000), F.lit(1)
+        gap_us.isNull() | (gap_us > SESSION_GAP_S * 1_000_000), F.lit(1)
     ).otherwise(F.lit(0))
     runb = wb.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     local = ev.select(
@@ -271,7 +272,7 @@ def sessionize_salted(
         F.lag("_last_ts").over(wk)
     )
     merged = F.when(
-        boundary_gap.isNotNull() & (boundary_gap <= _SESSION_GAP_S * 1_000_000),
+        boundary_gap.isNotNull() & (boundary_gap <= SESSION_GAP_S * 1_000_000),
         F.lit(1),
     ).otherwise(F.lit(0))
     with_merge = summary.select(key_col, "_bk", "_n", merged.alias("_merged"))
@@ -312,8 +313,8 @@ def asof_join_salted(
     right_ts: str = "ts",
     right_cols: Optional[Sequence[str]] = None,
     tie_col: Optional[str] = None,
-    suffix: str = "_asof",
-    bucket_seconds: int = 86400,
+    *,
+    bucket_seconds: int,
 ) -> DataFrame:
     """``asof_join`` for Zipf-hot keys: output-identical, but the
     union-and-scan window runs over (key, time_bucket) instead of (key) —
@@ -409,7 +410,7 @@ def asof_join_salted(
         .join(carried, by + ["_bk"])
         .select(
             *left.columns,
-            *[final_pay.getField(c).alias(f"{c}{suffix}") for c in right_cols],
+            *[final_pay.getField(c).alias(f"{c}{_ASOF_SUFFIX}") for c in right_cols],
         )
     )
     return out

@@ -19,7 +19,7 @@ TEXT_MAX = 10_000
 
 def transcript_row_suite() -> Suite:
     return (
-        Suite("transcripts_row")
+        Suite()
         # conv_id: refuteWith(isRequired) then format pattern
         .field("conv_id")
         .required("conv_id_required")

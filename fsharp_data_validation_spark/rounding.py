@@ -5,7 +5,7 @@ Spark's ROUND on a double is ``BigDecimal.valueOf(x)`` (the shortest repr,
 the same digits as Python's ``repr``) quantized HALF_UP. Python's builtin
 ``round`` is banker's and ``np.round`` scales by 10^n in binary, so both
 disagree with the engines on values that sit on a ``.5`` boundary — which
-means of 6-decimal rates and quantiles of short decimals do constantly.
+means of 6-decimal rates do constantly.
 Likewise SQL aggregates accumulate sequentially in frame order, while
 ``np.mean``/``np.std`` sum pairwise.
 """

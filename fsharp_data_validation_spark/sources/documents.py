@@ -131,7 +131,7 @@ SELECT id_a, id_b, sim FROM (
 
 def ann_recall_oracle_sql(
     k: int, n_cells: int, n_probe: int, threshold: float, n_planes: int, n_tables: int,
-    ivf_target: float = 0.6, lsh_target: float = 0.6,
+    ivf_target: float, lsh_target: float,
 ) -> str:
     """DuckDB replay of the ``ann_recall`` query: recall of the APPROXIMATE
     ANN configurations against the exact results on the same vectors.

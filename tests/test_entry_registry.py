@@ -297,16 +297,16 @@ def _value(node):
 
 def _unvaried(options, calls):
     """Labels of ``options`` (see ``_options``) that take fewer than two
-    values across ``calls`` ({callee: [ast.Call]}). The default is one value,
-    and a call that omits the option or spells the default out adds no
-    other; a literal argument adds its value; a non-literal argument or a
-    ``*``/``**`` spread adds a value of its own, because the guard cannot
-    evaluate it. A column-name option (COLUMN_OPTIONS) passes once any
-    call passes it."""
+    values across ``calls`` ({callee: [ast.Call]}). A call that omits the
+    option or spells the default out adds the default, so a default no call
+    takes is no value; a literal argument adds its value; a non-literal
+    argument or a ``*``/``**`` spread adds a value of its own, because the
+    guard cannot evaluate it. A column-name option (COLUMN_OPTIONS) passes
+    once any call passes it."""
     out = []
     for label, callee, i, arg, default in options:
         column = any(fnmatch.fnmatch(arg, g) for g in COLUMN_OPTIONS)
-        values = [] if column else [_value(default)]
+        values = []
         for c in calls.get(callee, ()):
             kw = [k.value for k in c.keywords if k.arg == arg]
             if any(isinstance(x, ast.Starred) for x in c.args) or any(
@@ -317,14 +317,17 @@ def _unvaried(options, calls):
                 values.append(_value(kw[0]))
             elif i is not None and i < len(c.args):
                 values.append(_value(c.args[i]))
+            elif not column:
+                values.append(_value(default))
         if len(set(values)) < (1 if column else 2):
             out.append(label)
     return sorted(out)
 
 
 def test_unvaried_ignores_a_spelled_out_default():
-    """A call that spells out the default sets nothing; a different literal,
-    a non-literal or a spread does, and a column name needs one pass."""
+    """A call that spells out the default sets nothing, and a default no
+    call takes is no value; a different literal, a non-literal or a spread
+    is a value of its own, and a column name needs one pass."""
     (f,) = ast.parse("def f(a, k=3, *, by_col='x'):\n    pass\n").body
     opts = [
         ("k", "f", 1, "k", f.args.defaults[0]),
@@ -337,7 +340,9 @@ def test_unvaried_ignores_a_spelled_out_default():
 
     assert unvaried("f(1)", "f(1, 3)", "f(1, k=3.0)") == ["by_col", "k"]
     assert unvaried("f(1, 4)", "f(1, by_col='y')") == []
-    assert unvaried("f(1, k=n, by_col='x')") == []
+    assert unvaried("f(1, 4)", "f(1, k=4, by_col='y')") == ["k"]
+    assert unvaried("f(1, k=n, by_col='x')") == ["k"]
+    assert unvaried("f(1, k=n, by_col='x')", "f(1)") == []
     assert unvaried("f(*a)", "f(1, **kw)") == []
 
 
@@ -347,7 +352,8 @@ def test_every_option_is_passed_somewhere():
     ``core/`` — takes at least two values across the calls anywhere in the
     repo, tests included (``blocks=1`` is a reference path only tests take).
     An option that every call leaves at its default, or sets to it by
-    hand, only ever takes that value, so it is a constant. Calls match by
+    hand, only ever takes that value, so it is a constant; one that every
+    call sets to the same other value is a required parameter. Calls match by
     name, so a method's calls are the calls of any attribute of that name:
     a collision can only pass an option, never fail one."""
     pkg = (p for p in PKG.rglob("*.py") if "core" not in p.relative_to(PKG).parts)

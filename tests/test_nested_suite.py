@@ -85,7 +85,7 @@ def value_matrix():
 
 def _multi_branch_child() -> Suite:
     return (
-        Suite("metaChild")
+        Suite()
         .field("role", F.col("meta.role"))
         .required("roleRequired")
         .isin("roleEnum", ROLES3)
@@ -98,7 +98,7 @@ def _multi_branch_child() -> Suite:
 
 def _parent_suite(mode: str) -> Suite:
     suite = (
-        Suite("parent")
+        Suite()
         .field("meta", F.col("meta"))
         .required("metaRequired")
         .done()
@@ -177,14 +177,14 @@ def test_proof_mode_matches_kernel(spark):
 
 def _single_branch_suite() -> Suite:
     child = (
-        Suite("roleChild")
+        Suite()
         .field("role", F.col("meta.role"))
         .required("roleRequired")
         .isin("roleEnum", ROLES3)
         .done()
     )
     return (
-        Suite("parent")
+        Suite()
         .field("meta", F.col("meta"))
         .required("metaRequired")
         .done()
@@ -261,16 +261,16 @@ def test_two_level_nesting(spark):
     schema = StructType(
         [StructField("rid", IntegerType()), StructField("a", mid_schema)]
     )
-    inner = Suite("inner").field("c", F.col("a.b.c")).required("cRequired").done()
+    inner = Suite().field("c", F.col("a.b.c")).required("cRequired").done()
     mid = (
-        Suite("mid")
+        Suite()
         .field("b", F.col("a.b"))
         .required("bRequired")
         .done()
         .nested("b", inner, guard=F.col("a.b").isNotNull())
     )
     outer = (
-        Suite("outer")
+        Suite()
         .field("a", F.col("a"))
         .required("aRequired")
         .done()
@@ -319,7 +319,7 @@ EACH_SCHEMA = StructType(
 
 def _each_suite() -> Suite:
     child = (
-        ElementSuite("turn")
+        ElementSuite()
         .field("role")
         .required("roleRequired")
         .isin("roleEnum", ROLES3)
@@ -328,7 +328,7 @@ def _each_suite() -> Suite:
         .done()
     )
     suite = (
-        Suite("each")
+        Suite()
         .field("turns")
         .required("turnsRequired")
         .each_nested(child)
@@ -424,7 +424,7 @@ def test_each_all_check_matches_kernel(spark):
     ]
     df = spark.createDataFrame([Row(**r) for r in rows], schema=schema)
     suite = (
-        Suite("allneg")
+        Suite()
         .field("xs")
         .each_all_check("AllNeg", lambda x: x >= 0)
         .check("xsShort", F.size(F.col("xs")) <= 10)  # continues after fire
@@ -469,7 +469,7 @@ def test_each_all_check_many_matches_kernel(spark):
         ("TooBig", lambda x: x < 100),
     ]
     suite = (
-        Suite("allmany")
+        Suite()
         .field("xs")
         .each_all_check_many(checks)
         .check("xsShort", F.size(F.col("xs")) <= 10)  # continues after fire
@@ -511,7 +511,7 @@ def test_each_nested_indexed_matches_kernel(spark):
         {"rid": 4, "turns": [{"role": None, "n": 5}]},  # refute gates indexed check
     ]
     child = (
-        ElementSuite("turn")
+        ElementSuite()
         .field("role")
         .required("roleRequired")
         .check_indexed("firstMustBeSystem", lambda v, i: (i > 0) | (v == "system"))
@@ -520,7 +520,7 @@ def test_each_nested_indexed_matches_kernel(spark):
         .check("nPositive", lambda v: v > 0)
         .done()
     )
-    suite = Suite("eachidx").field("turns").each_nested(child).done()
+    suite = Suite().field("turns").each_nested(child).done()
     df = spark.createDataFrame(
         [
             Row(rid=r["rid"], turns=[Row(**t) for t in r["turns"]])
@@ -566,14 +566,14 @@ def test_each_nested_validate_mode_matches_kernel(spark):
     """mode='validate' ≅ validateEach: element disputes leave the branch
     disputed (later checks continue); element refutes refute it."""
     child = (
-        ElementSuite("turn")
+        ElementSuite()
         .field("role")
         .required("roleRequired")
         .isin("roleEnum", ROLES3)
         .done()
     )
     suite = (
-        Suite("validateEach")
+        Suite()
         .field("turns")
         .required("turnsRequired")
         .each_nested(child, mode="validate")
@@ -635,7 +635,7 @@ def test_indexed_element_checks_and_required_unless(spark):
         schema=schema,
     )
     suite = (
-        Suite("idx")
+        Suite()
         .field("xs")
         # element must be >= its index * 10 -> fails for [2]=0 (needs 20)
         .each_check_indexed("tooSmallForIndex", lambda x, i: x >= i * 10)
@@ -777,7 +777,7 @@ def test_library_helper_sugar(spark):
         schema=schema,
     )
     suite = (
-        Suite("helpers")
+        Suite()
         .field("s")
         .not_empty("sEmpty")
         .is_not_equal("sReserved", "reserved")

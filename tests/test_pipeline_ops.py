@@ -100,31 +100,6 @@ def test_ivf_topk_recall(spark):
     assert recall >= 0.8, recall
 
 
-def test_tdigest_matches_exact_quantiles(spark):
-    """Fully distributed t-digest (applyInPandas partials + two-level tree
-    merge INSIDE Spark — no driver collect) returns a one-row DataFrame and
-    tracks the exact interpolated percentiles within digest accuracy on a
-    skewed column. Also deterministic across reruns."""
-    from fsharp_data_validation_spark.operators.stats import (
-        exact_quantiles,
-        tdigest_quantiles,
-    )
-
-    df = spark.range(0, 20000, 1, 8).selectExpr("cast(id * id as double) AS v")
-    qs = [0.25, 0.5, 0.75, 0.95]
-    exact = exact_quantiles(df, "v", qs).collect()[0].asDict()
-    out = tdigest_quantiles(df, "v", qs, round_to=6)
-    assert out.columns == [f"q{int(q * 100)}" for q in qs]
-    approx = out.collect()[0].asDict()
-    for q in qs:
-        key = f"q{int(q * 100)}"
-        rel = abs(approx[key] - exact[key]) / max(exact[key], 1.0)
-        assert rel < 0.02, (key, approx[key], exact[key])
-    # determinism: merge order is pinned by the gid sort inside each kernel
-    again = tdigest_quantiles(df, "v", qs, round_to=6).collect()[0].asDict()
-    assert again == approx
-
-
 def test_synth_transcripts_deterministic(spark):
     from fsharp_data_validation_spark.sources.synth import synth_transcripts
 
@@ -469,49 +444,6 @@ def test_schema_contract_report_and_conform(spark):
             spark.createDataFrame([("s", "s", 1.0)], "a STRING, b STRING, c DOUBLE"),
             contract,
         )
-
-
-def test_hll_sketch_rollup_merge_property(spark):
-    """Per-partition HLL sketches answer subset distinct counts by UNION
-    without rescanning: the union estimate over all partitions equals the
-    whole-table sketch estimate exactly (same sketch algebra), per-subset
-    estimates are within the published HLL error of exact, and sketches
-    are small (KBs)."""
-    from fsharp_data_validation_spark.operators.stats import (
-        hll_partition_sketches,
-        hll_rollup,
-    )
-
-    df = spark.range(0, 50_000).selectExpr(
-        "cast(id % 10 as string) AS day",
-        # ~5k distinct values per day, heavy cross-day overlap
-        "concat('u', cast(id % 13337 as string)) AS user"
-    )
-    sk = hll_partition_sketches(df, "day", "user").cache()
-    assert sk.count() == 10
-    assert max(len(r["sketch"]) for r in sk.collect()) < 20_000  # bytes
-
-    whole = hll_rollup(sk).collect()[0]
-    exact_whole = df.selectExpr("count(distinct user) AS d").collect()[0]["d"]
-    assert whole["n_parts"] == 10
-    assert abs(whole["distinct_estimate"] - exact_whole) / exact_whole < 0.05
-
-    subset = hll_rollup(sk, ["0", "1", "2"]).collect()[0]
-    exact_subset = (
-        df.filter("day in ('0','1','2')")
-        .selectExpr("count(distinct user) AS d")
-        .collect()[0]["d"]
-    )
-    assert subset["n_parts"] == 3
-    assert abs(subset["distinct_estimate"] - exact_subset) / exact_subset < 0.05
-
-    # merge property: union of all per-part sketches == one whole-table sketch
-    from pyspark.sql import functions as F
-    one_shot = df.agg(
-        F.hll_sketch_estimate(F.hll_sketch_agg(F.col("user"), F.lit(12))).alias("d")
-    ).collect()[0]["d"]
-    assert whole["distinct_estimate"] == one_shot
-    sk.unpersist()
 
 
 def test_dedup_lines_first_occurrence(spark):

@@ -1,8 +1,9 @@
-"""Round-3 operators: conversation-flow validation, MAD outliers, TF-IDF
-top terms (the drift members are pinned in test_drift.py, the similarity
-members in test_similarity.py, the Gopher/Zipf/PMI/vocab-growth members in
-test_text.py). Semantics pinned on hand-built fixtures;
-the sf0.01 DuckDB oracles cover the derived-table scale."""
+"""Round-3 operators: conversation-flow validation, TF-IDF top terms
+(the drift members are pinned in test_drift.py, the similarity members in
+test_similarity.py, the Gopher/Zipf/PMI/vocab-growth members in
+test_text.py, the stats members in test_stats.py). Semantics pinned on
+hand-built fixtures; the sf0.01 DuckDB oracles cover the derived-table
+scale."""
 
 import math
 
@@ -39,24 +40,6 @@ def test_conversation_flow_violations(spark):
         ("c3", 0, "orphan_tool_turn"),
         ("c3", 2, "orphan_tool_turn"),
     ]
-
-
-def test_mad_outliers_robust_center(spark):
-    from fsharp_data_validation_spark.operators.stats import mad_outliers_by_group
-
-    # 9 values near 10 (MAD=1), one extreme value -> exactly one outlier;
-    # the extreme value barely moves the median (robustness)
-    vals = [9, 9, 10, 10, 10, 11, 11, 12, 8, 1000]
-    df = spark.createDataFrame([("g", float(v)) for v in vals], "grp string, x double")
-    r = mad_outliers_by_group(df, "grp", "x").collect()[0]
-    assert r["med"] == 10.0
-    assert r["n_outliers"] == 1 and r["n_rows"] == 10
-    # constant group: MAD = 0 -> every off-median row flags (strict >)
-    df2 = spark.createDataFrame(
-        [("c", 5.0)] * 8 + [("c", 6.0)], "grp string, x double"
-    )
-    r2 = mad_outliers_by_group(df2, "grp", "x").collect()[0]
-    assert r2["mad"] == 0.0 and r2["n_outliers"] == 1
 
 
 def test_tfidf_top_terms_scores_and_ties(spark):
@@ -185,132 +168,6 @@ def test_repeated_turns_scoped_to_conversation(spark):
     )
 
 
-def test_misra_gries_sketch_bounds_and_merge(spark):
-    from fsharp_data_validation_spark.operators.stats import (
-        mg_partition_sketches,
-        mg_rollup,
-    )
-
-    # two partitions with a known skewed stream; k=2 forces truncation
-    data = (
-        [("p1", "a")] * 10 + [("p1", "b")] * 6 + [("p1", "c")] * 3
-        + [("p1", "d")] * 1
-        + [("p2", "a")] * 4 + [("p2", "c")] * 5 + [("p2", "e")] * 2
-    )
-    df = spark.createDataFrame(data, "part string, v string")
-    sk = mg_partition_sketches(df, "part", "v", k=2).collect()
-    by_part = {}
-    for r in sk:
-        by_part.setdefault(r["part"], {})[r["item"]] = (r["est"], r["err"])
-    # p1: counts a=10 b=6 c=3 d=1 -> d(threshold)=c's 3; kept a:7 b:3, err=3
-    assert by_part["p1"] == {"a": (7, 3), "b": (3, 3)}
-    # p2: counts c=5 a=4 e=2 -> threshold=2; kept c:3 a:2, err=2
-    assert by_part["p2"] == {"c": (3, 2), "a": (2, 2)}
-
-    rolled = {
-        r["item"]: (r["est_count"], r["err_bound"])
-        for r in mg_rollup(
-            mg_partition_sketches(df, "part", "v", k=2)
-        ).collect()
-    }
-    true = {"a": 14, "b": 6, "c": 8, "d": 1, "e": 2}
-    # merge rule: est sums, errs add (3 + 2 = 5); est <= true <= est + err
-    assert rolled == {"a": (9, 5), "b": (3, 5), "c": (3, 5)}
-    for item, (est, err) in rolled.items():
-        assert est <= true[item] <= est + err
-
-    # re-truncation to k=1 moves the subtracted count into the error bound
-    retrunc = mg_rollup(mg_partition_sketches(df, "part", "v", k=2), k=1).collect()
-    assert len(retrunc) == 1
-    r = retrunc[0]
-    assert r["item"] == "a" and r["est_count"] == 6 and r["err_bound"] == 8
-    assert r["est_count"] <= true["a"] <= r["est_count"] + r["err_bound"]
-
-    # partition-subset rollup never rescans: restrict to p2 only
-    only_p2 = {
-        r["item"]: (r["est_count"], r["err_bound"])
-        for r in mg_rollup(
-            mg_partition_sketches(df, "part", "v", k=2), parts=["p2"]
-        ).collect()
-    }
-    assert only_p2 == {"c": (3, 2), "a": (2, 2)}
-
-
-def test_misra_gries_exact_when_k_exceeds_vocab(spark):
-    from fsharp_data_validation_spark.operators.stats import (
-        mg_partition_sketches,
-        mg_rollup,
-    )
-
-    data = [("p1", "x")] * 3 + [("p1", "y")] * 2 + [("p2", "x")] * 4
-    df = spark.createDataFrame(data, "part string, v string")
-    rolled = {
-        r["item"]: (r["est_count"], r["err_bound"])
-        for r in mg_rollup(mg_partition_sketches(df, "part", "v", k=16)).collect()
-    }
-    assert rolled == {"x": (7, 0), "y": (2, 0)}
-
-
-def test_moments_rollup_exact_merge(spark):
-    """Chan-merged per-partition sketches must equal moments computed on
-    the whole data directly — for skewed, multi-partition input including
-    a constant partition (NaN-guard path) and a singleton partition."""
-    import random
-
-    rng = random.Random(7)
-    rows = (
-        [("a", rng.expovariate(0.1)) for _ in range(400)]
-        + [("b", rng.gauss(50, 5)) for _ in range(300)]
-        + [("c", 42.0) for _ in range(50)]  # constant partition: var_pop = 0
-        + [("d", 999.0)]  # singleton partition
-    )
-    df = spark.createDataFrame(rows, "part string, v double")
-    from fsharp_data_validation_spark.operators.stats import (
-        moments_partition_sketches,
-        moments_rollup,
-    )
-
-    got = moments_rollup(
-        moments_partition_sketches(df, "part", "v"), round_to=6
-    ).collect()[0]
-
-    vals = [v for _, v in rows]
-    n = len(vals)
-    mu = sum(vals) / n
-    m2 = sum((x - mu) ** 2 for x in vals)
-    m3 = sum((x - mu) ** 3 for x in vals)
-    m4 = sum((x - mu) ** 4 for x in vals)
-    assert got["n_parts"] == 4 and got["n_values"] == n
-    assert math.isclose(got["mean"], mu, rel_tol=1e-9, abs_tol=1e-6)
-    assert math.isclose(got["var_pop"], m2 / n, rel_tol=1e-6)
-    assert math.isclose(
-        got["skew"], math.sqrt(n) * m3 / m2**1.5, rel_tol=1e-5, abs_tol=1e-5
-    )
-    assert math.isclose(
-        got["kurt"], n * m4 / (m2 * m2) - 3, rel_tol=1e-5, abs_tol=1e-5
-    )
-
-
-def test_moments_rollup_subset_and_degenerate(spark):
-    """Partition-subset rollup answers from the sketch table alone; an
-    all-constant subset exercises the M2=0 guard (skew/kurt -> 0)."""
-    from fsharp_data_validation_spark.operators.stats import (
-        moments_partition_sketches,
-        moments_rollup,
-    )
-
-    rows = [("a", 1.0), ("a", 3.0), ("b", 7.0), ("b", 7.0), ("b", 7.0)]
-    sk = moments_partition_sketches(
-        spark.createDataFrame(rows, "part string, v double"), "part", "v"
-    )
-    only_a = moments_rollup(sk, parts=["a"], round_to=6).collect()[0]
-    assert only_a["n_values"] == 2 and only_a["mean"] == 2.0
-    assert only_a["var_pop"] == 1.0  # population variance of {1,3}
-    only_b = moments_rollup(sk, parts=["b"], round_to=6).collect()[0]
-    assert only_b["var_pop"] == 0.0 and only_b["skew"] == 0.0
-    assert only_b["kurt"] == 0.0  # guard, not NaN
-
-
 def test_fd_violations_counts(spark):
     from fsharp_data_validation_spark.operators.checks import fd_violations
 
@@ -425,19 +282,6 @@ def test_violation_examples_null_key_hashing(spark):
 
     want = sorted(rows, key=lambda r: py_h(*r))
     assert got == [tuple(r) for r in want]
-
-
-def test_skew_report_null_and_shares(spark):
-    from fsharp_data_validation_spark.operators.stats import skew_report
-
-    rows = [("hot", "x")] * 6 + [(None, "x")] * 3 + [("a", "y")]
-    df = spark.createDataFrame(rows, "k string, other string")
-    got = {
-        (r["key"], r["rnk"]): (r["value"], r["n"], r["share"], r["n_distinct"])
-        for r in skew_report(df, ["k"], top=2).collect()
-    }
-    assert got[("k", 1)] == ("hot", 6, 0.6, 3)
-    assert got[("k", 2)] == ("<NULL>", 3, 0.3, 3)  # NULL keys count
 
 
 def test_audio_meta_roundtrip_and_hygiene(spark):

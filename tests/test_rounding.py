@@ -48,14 +48,3 @@ def test_seq_mean_std_matches_sequential_definitions():
     assert mean == acc / len(xs)
     assert abs(sd - float(np.std(xs))) < 1e-15
     assert seq_mean_std([0.3, 0.3, 0.3])[1] < 1e-16
-
-
-def test_tdigest_constant_column_rounds_half_up(spark):
-    """A constant column's quantiles are the constant itself; 0.03125 sits
-    exactly on a 4-decimal tie, which Spark's ROUND and DuckDB's ROUND
-    both take up to 0.0313 (builtin round() gave 0.0312)."""
-    from fsharp_data_validation_spark.operators.stats import tdigest_quantiles
-
-    df = spark.createDataFrame([(0.03125,)] * 50, "v double")
-    out = tdigest_quantiles(df, "v", [0.5, 0.95]).collect()[0]
-    assert (out["q50"], out["q95"]) == (0.0313, 0.0313)

@@ -166,7 +166,7 @@ def test_element_constraints(spark):
         schema=schema,
     )
     suite = (
-        Suite("vec")
+        Suite()
         .field("vec")
         .each_check("vec_negative", lambda x: x >= 0)
         .done()
@@ -188,7 +188,7 @@ def test_each_refute_gates_branch(spark):
         [Row(rid=1, vec=[-1.0]), Row(rid=2, vec=[1.0])], schema=schema
     )
     suite = (
-        Suite("vec")
+        Suite()
         .field("vec")
         .each_refute_check("neg", lambda x: x >= 0)
         .check("sum_small", F.aggregate("vec", F.lit(0.0), lambda a, x: a + x) < 100)
@@ -291,7 +291,7 @@ def test_length_checks_match_character_length(spark):
         StructType([StructField("b", BinaryType())]),
     ).select(F.col("b").cast("string").alias("s"))
 
-    suite = Suite("len")
+    suite = Suite()
     branch = suite.field("s")
     want = []
     for n in bounds:

@@ -102,11 +102,11 @@ def _apply_chain_spark(branch, ops, prefix: str):
 
 
 def spark_suite(spec: dict) -> Suite:
-    suite = Suite("fuzz")
+    suite = Suite()
     for f, ops in spec["scalars"].items():
         _apply_chain_spark(suite.field(f), ops, f)
     n = spec["nested"]
-    child = Suite("child")
+    child = Suite()
     _apply_chain_spark(child.field("x", F.col("s.x")), n["x"], "sx")
     if n["y"]:
         _apply_chain_spark(child.field("y", F.col("s.y")), n["y"], "sy")
@@ -292,11 +292,11 @@ def test_random_apply_mode_shapes_match_kernel_optional(spark):
         post_ge = rng.randint(-3, 3)
         parent_required = rng.random() < 0.5
 
-        suite = Suite("applyFuzz")
+        suite = Suite()
         pb = suite.field("s")
         if parent_required:
             pb = pb.required("s_required")
-        child = Suite("c")
+        child = Suite()
         _apply_chain_spark(child.field("x", F.col("s.x")), ops, "sx")
         suite.nested("s", child, guard=F.col("s").isNotNull(), mode="apply")
         suite.field("s").check("s_post", F.col("s.x") >= F.lit(post_ge))
