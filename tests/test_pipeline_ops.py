@@ -100,6 +100,30 @@ def test_ivf_topk_recall(spark):
     assert recall >= 0.8, recall
 
 
+def test_tdigest_matches_exact_quantiles(spark):
+    """The approximate quantiles that replaced the t-digest (the built-in
+    ``percentile_approx``, one JVM aggregate) return a one-row DataFrame
+    and track the exact interpolated percentiles within 2% on a skewed
+    column. Also deterministic across reruns."""
+    from fsharp_data_validation_spark.operators.stats import (
+        approx_quantiles,
+        exact_quantiles,
+    )
+
+    df = spark.range(0, 20000, 1, 8).selectExpr("cast(id * id as double) AS v")
+    qs = [0.25, 0.5, 0.75, 0.95]
+    exact = exact_quantiles(df, "v", qs).collect()[0].asDict()
+    out = approx_quantiles(df, "v", qs)
+    assert out.columns == [f"q{int(q * 100)}" for q in qs]
+    approx = out.collect()[0].asDict()
+    for q in qs:
+        key = f"q{int(q * 100)}"
+        rel = abs(approx[key] - exact[key]) / max(exact[key], 1.0)
+        assert rel < 0.02, (key, approx[key], exact[key])
+    again = approx_quantiles(df, "v", qs).collect()[0].asDict()
+    assert again == approx
+
+
 def test_synth_transcripts_deterministic(spark):
     from fsharp_data_validation_spark.sources.synth import synth_transcripts
 

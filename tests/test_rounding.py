@@ -48,3 +48,22 @@ def test_seq_mean_std_matches_sequential_definitions():
     assert mean == acc / len(xs)
     assert abs(sd - float(np.std(xs))) < 1e-15
     assert seq_mean_std([0.3, 0.3, 0.3])[1] < 1e-16
+
+
+def test_tdigest_constant_column_rounds_half_up(spark):
+    """A constant column's quantiles are the constant itself; 0.03125 sits
+    exactly on a 4-decimal tie. The approximate quantiles (which replaced
+    the t-digest) return that column element unrounded, and the exact
+    quantiles' Spark ROUND takes it up to 0.0313, as DuckDB's ROUND and
+    ``half_up`` do (builtin round() gives 0.0312)."""
+    from fsharp_data_validation_spark.operators.stats import (
+        approx_quantiles,
+        exact_quantiles,
+    )
+
+    df = spark.createDataFrame([(0.03125,)] * 50, "v double")
+    out = approx_quantiles(df, "v", [0.5, 0.95]).collect()[0]
+    assert (out["q50"], out["q95"]) == (0.03125, 0.03125)
+    exact = exact_quantiles(df, "v", [0.5, 0.95]).collect()[0]
+    assert (exact["q50"], exact["q95"]) == (0.0313, 0.0313)
+    assert half_up(out["q50"], 4) == exact["q50"]

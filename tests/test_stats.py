@@ -205,31 +205,3 @@ def test_hll_sketch_rollup_merge_property(spark):
     ).collect()[0]["d"]
     assert whole["distinct_estimate"] == one_shot
     sk.unpersist()
-
-
-def test_approx_quantiles_match_exact_quantiles(spark):
-    """The built-in ``percentile_approx`` aggregate returns a one-row
-    DataFrame and tracks the exact interpolated percentiles on a skewed
-    column; deterministic across reruns. A constant column's quantiles are
-    the constant itself, unrounded (0.03125 sits on a 4-decimal tie)."""
-    from fsharp_data_validation_spark.operators.stats import (
-        approx_quantiles,
-        exact_quantiles,
-    )
-
-    df = spark.range(0, 20000, 1, 8).selectExpr("cast(id * id as double) AS v")
-    qs = [0.25, 0.5, 0.75, 0.95]
-    exact = exact_quantiles(df, "v", qs).collect()[0].asDict()
-    out = approx_quantiles(df, "v", qs)
-    assert out.columns == [f"q{int(q * 100)}" for q in qs]
-    approx = out.collect()[0].asDict()
-    for q in qs:
-        key = f"q{int(q * 100)}"
-        rel = abs(approx[key] - exact[key]) / max(exact[key], 1.0)
-        assert rel < 0.02, (key, approx[key], exact[key])
-    again = approx_quantiles(df, "v", qs).collect()[0].asDict()
-    assert again == approx
-
-    const = spark.createDataFrame([(0.03125,)] * 50, "v double")
-    got = approx_quantiles(const, "v", [0.5, 0.95]).collect()[0]
-    assert (got["q50"], got["q95"]) == (0.03125, 0.03125)
