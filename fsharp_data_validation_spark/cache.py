@@ -1,9 +1,16 @@
 """Cache-lifecycle registry for persisting operators.
 
-Several operators persist corpus-scale intermediates (shingle-set tables,
-LSH bucket tables, drift histograms) because the intermediate feeds 2-3 plan
-branches and must be computed once.  ``DataFrame.persist`` has no scope: the
-storage lives until someone unpersists it, so a long session running many
+An operator persists an intermediate only for data that several actions
+read (``ValidationRun``'s per-batch failing slice) or for plan branches that
+neither exchange reuse nor a window can merge into one read (both sides of
+a corpus-scale self-join; an aggregate whose branches each re-plan a scan);
+totals over a small aggregate come from a whole-relation window over it.
+The persisting operators: ``ValidationRun.run``, the shingle-set and bucket
+tables of ``ngram_jaccard_pairs``, ``minhash_lsh_pairs``,
+``containment_dedup_pairs`` and ``cross_contamination_pairs``,
+``semdedup``, the drift ``_grid``, ``skew_report``, ``pmi_bigrams`` and
+``ngram_perplexity``.  ``DataFrame.persist`` has no scope: the storage
+lives until someone unpersists it, so a long session running many
 operators (the 71-query bench; any real multi-stage curation pipeline)
 accumulates executor storage monotonically — at 10^12-row scale that is an
 executor-memory leak across operator invocations.

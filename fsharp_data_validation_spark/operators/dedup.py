@@ -359,11 +359,11 @@ def simhash_banded_pairs(
     bands = max_hamming + 1
     chunk_bits = (SIMHASH_BITS + bands - 1) // bands
     mask = (1 << chunk_bits) - 1
-    sig = persist_tracked(simhash_signatures(df, id_col, text_col))
+    sig = simhash_signatures(df, id_col, text_col)
     # docs sharing a signature are hamming-0 pairs by definition — emit
     # directly; candidate generation then works on DISTINCT signatures
     intra = _bucket_pairs(sig, "doc_id", ["simhash"]).withColumn("hamming", F.lit(0))
-    usig = persist_tracked(sig.select("simhash").distinct())
+    usig = sig.select("simhash").distinct()
     chunk_structs = [
         F.struct(
             F.lit(i).alias("band"),

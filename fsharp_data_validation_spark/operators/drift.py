@@ -71,12 +71,12 @@ def cdf_gap(a: Column, b: Column, ta: Column, tb: Column) -> Column:
 
 
 def _joined_cols(cumulative: bool = False):
-    """Term operands over a joined histogram (bucket, na, nb): the bucket's
-    counts, or with ``cumulative`` the running counts up to it, and the
-    totals. Totals come from a whole-relation window over the histogram
-    (<= n_buckets rows) rather than a separate aggregate + cross join — the
-    latter re-plans the histogram's entire subtree, doubling the number of
-    source scans."""
+    """Term operands over a joined histogram (bucket, na, nb) or contingency
+    table (cat, na, nb): the row's counts, or with ``cumulative`` the
+    running counts up to the bucket, and the totals. Totals come from a
+    whole-relation window over the small table rather than a separate
+    aggregate + cross join — the latter re-plans the table's entire
+    subtree, doubling the number of source scans."""
     wall = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     ta, tb = F.sum("na").over(wall), F.sum("nb").over(wall)
     if not cumulative:
@@ -314,17 +314,6 @@ def w1_joined(
     )
 
 
-def w1(
-    hist_a: DataFrame,
-    hist_b: DataFrame,
-    n_buckets: int,
-    bucket_width: float = 1.0,
-    round_to: int = 4,
-) -> DataFrame:
-    """Wasserstein-1 distance between two separate histograms."""
-    return w1_joined(_joined_hist(hist_a, hist_b), n_buckets, bucket_width, round_to)
-
-
 def w1_by_group(
     df: DataFrame, group_col: str, value_col: str, bucket_width: float, n_buckets: int
 ) -> DataFrame:
@@ -363,11 +352,9 @@ def split_category_counts(df: DataFrame, cat_col: str, ts_col: str) -> DataFrame
 
 
 def chi2_drift(df: DataFrame, cat_col: str, ts_col: str) -> DataFrame:
-    """split_category_counts + chi2_joined with the tiny count table
-    persisted (tracked): chi2_joined reads it twice (margins + cells), and
-    without the persist each branch re-executes the data aggregate."""
-    counts = persist_tracked(split_category_counts(df, cat_col, ts_col))
-    return chi2_joined(counts)
+    """Chi-square drift of ``cat_col`` between the two halves of the
+    ``ts_col`` range: ``chi2_joined`` over ``split_category_counts``."""
+    return chi2_joined(split_category_counts(df, cat_col, ts_col))
 
 
 def chi2_joined(counts: DataFrame, round_to: int = 4) -> DataFrame:
@@ -375,12 +362,10 @@ def chi2_joined(counts: DataFrame, round_to: int = 4) -> DataFrame:
     table — the categorical drift test PSI/KS can't express (they need an
     ordered or binned domain): the sum of ``chi2_cell``;
     dof = (n_categories - 1) * (2 - 1). All arithmetic happens on the
-    |categories|-row aggregate (broadcast totals, no second data scan).
+    |categories|-row aggregate (window totals, no second data scan).
     Returns one row (chi2, dof)."""
-    tot = counts.agg(F.sum("na").alias("ta"), F.sum("nb").alias("tb"))
-    return counts.crossJoin(F.broadcast(tot)).agg(
-        F.round(F.sum(chi2_cell(*map(F.col, ("na", "nb", "ta", "tb")))), round_to)
-        .alias("chi2"),
+    return counts.select(chi2_cell(*_joined_cols()).alias("term")).agg(
+        F.round(F.sum("term"), round_to).alias("chi2"),
         (F.count(F.lit(1)) - 1).cast("bigint").alias("dof"),
     )
 

@@ -10,7 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..cache import persist_tracked
 from .dedup import md5_int
 from .text import word_ngrams
 
@@ -110,27 +109,21 @@ def temperature_sample(
     bit-stable across engines (DuckDB oracle parity).
 
     Scale shape: ONE count aggregate over the group key (map-side combine;
-    group domain ~ languages, tiny), a 1-row broadcast for the normalizer,
-    a broadcast join of the rate table, and a row-local filter — the data
-    itself is never shuffled. Output adds ``keep_rate``."""
-    # two consumers (the normalizer aggregate and the rate projection)
-    # would each re-plan this subtree from the source — persist the
-    # |groups|-row aggregate so the corpus is read once for counting and
-    # once for the filter pass (the minimum without caching the corpus)
-    counts = persist_tracked(df.groupBy(group_col).agg(F.count(F.lit(1)).alias("_n_g")))
-    tot = counts.agg(
-        F.sum(F.pow(F.col("_n_g").cast("double"), F.lit(tau))).alias("_wsum"),
-        F.sum("_n_g").alias("_N"),
-    )
-    rates = counts.crossJoin(F.broadcast(tot)).select(
+    group domain ~ languages, tiny) whose totals come from a whole-relation
+    window over it, a broadcast join of the rate table, and a row-local
+    filter — the data itself is never shuffled. Output adds ``keep_rate``."""
+    counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("_n_g"))
+    wall = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    w_g = F.pow(F.col("_n_g").cast("double"), F.lit(tau))
+    rates = counts.select(
         group_col,
         F.round(
             F.least(
                 F.lit(1.0),
                 F.lit(float(target_frac))
-                * F.col("_N")
-                * F.pow(F.col("_n_g").cast("double"), F.lit(tau))
-                / F.col("_wsum")
+                * F.sum("_n_g").over(wall)
+                * w_g
+                / F.sum(w_g).over(wall)
                 / F.col("_n_g"),
             ),
             6,
@@ -291,8 +284,8 @@ def dsir_weights(
        conditional target/raw counts (map-side combined; output <= B rows).
     2. Laplace-smoothed per-bucket log-ratios joined back to the gram
        stream as a BROADCAST (B rows), then one hash aggregation per doc
-       sums them. Totals enter via a broadcast 1-row crossJoin (the
-       engine's standard tiny-aggregate pattern).
+       sums them. Totals come from a whole-relation window over the
+       bucket aggregate.
 
     Float note: the per-doc score is an unordered double sum; published at
     4 decimals the summation-order difference (~1e-13 at
@@ -318,24 +311,18 @@ def dsir_weights(
         "is_target",
         F.pmod(md5_int(F.col("_g")), F.lit(b)).alias("_b"),
     )
-    # persist the <=B-row bucket model: totals and log-ratios both read it,
-    # and without the persist Catalyst re-derives each branch from the
-    # corpus-wide gram explode (3 Generates instead of 2 in the plan)
-    bc = persist_tracked(
-        occ.groupBy("_b").agg(
-            F.sum(F.col("is_target").cast("long")).alias("_ct"),
-            F.sum((~F.col("is_target")).cast("long")).alias("_cr"),
-        )
+    bc = occ.groupBy("_b").agg(
+        F.sum(F.col("is_target").cast("long")).alias("_ct"),
+        F.sum((~F.col("is_target")).cast("long")).alias("_cr"),
     )
-    tot = bc.agg(
-        F.sum("_ct").cast("double").alias("_tt"),
-        F.sum("_cr").cast("double").alias("_tr"),
-    )
-    lw = bc.crossJoin(F.broadcast(tot)).select(
+    wall = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    tt = F.sum("_ct").over(wall).cast("double")
+    tr = F.sum("_cr").over(wall).cast("double")
+    lw = bc.select(
         "_b",
         (
-            F.log((F.col("_ct") + lam) / (F.col("_tt") + lam * b))
-            - F.log((F.col("_cr") + lam) / (F.col("_tr") + lam * b))
+            F.log((F.col("_ct") + lam) / (tt + lam * b))
+            - F.log((F.col("_cr") + lam) / (tr + lam * b))
         ).alias("_lw"),
     )
     per = (

@@ -152,13 +152,8 @@ def mad_outliers_by_group(df: DataFrame, group_col: str, value_col: str) -> Data
     base = df.select(F.col(group_col).alias("grp"), F.col(value_col).alias("x")).filter(
         F.col("x").isNotNull()
     )
-    # the per-group stat tables are KB-scale but feed 2 branches each —
-    # persist them (tracked) or every consumer re-executes the percentile
-    # pass over the data (no common-subplan dedup in Spark)
-    med = persist_tracked(
-        base.groupBy("grp").agg(F.expr("percentile(x, 0.5)").alias("_med"))
-    )
-    mad = persist_tracked(
+    med = base.groupBy("grp").agg(F.expr("percentile(x, 0.5)").alias("_med"))
+    mad = (
         base.join(F.broadcast(med), "grp")
         .select("grp", F.abs(F.col("x") - F.col("_med")).alias("_dev"))
         .groupBy("grp")
@@ -217,11 +212,11 @@ def mg_partition_sketches(
     Shape: the build is an exact (part, item) hash aggregation — map-side
     combine, one shuffle, per-task state bounded by distinct-per-task — then
     the exact->MG reduction entirely JVM-side: rank items per part (count
-    desc, item asc: deterministic), subtract the (k+1)-th count from the
-    kept k and drop non-positives. The MATERIALIZED summary is what's
-    bounded (k rows/part at any scale); for adversarially unbounded vocab
-    swap the build stage for a streaming per-partition MG (applyInPandas)
-    with the same merge contract."""
+    desc, item asc: deterministic), subtract the (k+1)-th count (a per-part
+    window beside the rank window) from the kept k and drop non-positives.
+    The MATERIALIZED summary is what's bounded (k rows/part at any scale);
+    for adversarially unbounded vocab swap the build stage for a streaming
+    per-partition MG (applyInPandas) with the same merge contract."""
     from pyspark.sql import Window
 
     counts = (
@@ -230,22 +225,13 @@ def mg_partition_sketches(
         .agg(F.count(F.lit(1)).alias("n"))
     )
     w = Window.partitionBy("part").orderBy(F.desc("n"), F.asc("item"))
-    ranked = persist_tracked(
-        counts.select("part", "item", "n", F.row_number().over(w).alias("rnk"))
-    )
+    ranked = counts.select("part", "item", "n", F.row_number().over(w).alias("rnk"))
     # per-part truncation threshold d = count of the (k+1)-th item (0 if none)
-    thresh = ranked.filter(F.col("rnk") == k + 1).select(
-        "part", F.col("n").alias("d")
-    )
+    d = F.max(F.when(F.col("rnk") == k + 1, F.col("n"))).over(Window.partitionBy("part"))
     return (
-        ranked.filter(F.col("rnk") <= k)
-        .join(F.broadcast(thresh), "part", "left")
-        .select(
-            "part",
-            "item",
-            (F.col("n") - F.coalesce(F.col("d"), F.lit(0))).alias("est"),
-            F.coalesce(F.col("d"), F.lit(0)).alias("err"),
-        )
+        ranked.select("*", F.coalesce(d, F.lit(0)).alias("err"))
+        .filter(F.col("rnk") <= k)
+        .select("part", "item", (F.col("n") - F.col("err")).alias("est"), "err")
         .filter(F.col("est") > 0)
     )
 
@@ -348,45 +334,37 @@ def moments_rollup(
         M3 = Σ M3_i + 3·Σ d_i·M2_i + Σ n_i·d_i³
         M4 = Σ M4_i + 4·Σ d_i·M3_i + 6·Σ d_i²·M2_i + Σ n_i·d_i⁴
 
-    with d_i = mean_i − grand_mean. Two aggregates over the KB-scale sketch
-    table (grand mean first, then the delta-corrected sums with the one-row
-    total broadcast). Returns one row:
+    with d_i = mean_i − grand_mean. The grand totals come from a
+    whole-relation window over the KB-scale sketch table, then one
+    aggregate takes the delta-corrected sums. Returns one row:
     (n_parts, n_values, mean, var_pop, skew, kurt) — population formulas,
     rounded so the DuckDB oracle (which recomputes Σ(x-μ)^k directly on the
-    raw data) hash-matches.
-
-    The sketch relation feeds BOTH aggregates, so it is persisted (tracked —
-    see cache.py) before branching: without the persist each branch re-plans
-    the subtree from the source and the data is scanned twice (the same
-    multi-branch re-plan bug class the drift grids fixed in round 2;
-    pinned by tests/test_plan_shapes.py)."""
-    from ..cache import persist_tracked
+    raw data) hash-matches."""
+    from pyspark.sql import Window
 
     s = sketches if parts is None else sketches.filter(F.col("part").isin(list(parts)))
-    s = persist_tracked(s)
-    tot = s.agg(
-        F.count(F.lit(1)).alias("_p"),
-        F.sum("n").alias("_N"),
-        (F.sum(F.col("mean") * F.col("n")) / F.sum("n")).alias("_MU"),
-    )
+    wall = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    mu = F.sum(F.col("mean") * F.col("n")).over(wall) / F.sum("n").over(wall)
     d = F.col("mean") - F.col("_MU")
-    merged = (
-        s.crossJoin(F.broadcast(tot))
-        .agg(
-            F.max("_p").alias("n_parts"),
-            F.max("_N").alias("N"),
-            F.max("_MU").alias("MU"),
-            F.sum(F.col("m2") + F.col("n") * d * d).alias("M2"),
-            F.sum(
-                F.col("m3") + F.lit(3.0) * d * F.col("m2") + F.col("n") * d * d * d
-            ).alias("M3"),
-            F.sum(
-                F.col("m4")
-                + F.lit(4.0) * d * F.col("m3")
-                + F.lit(6.0) * d * d * F.col("m2")
-                + F.col("n") * d * d * d * d
-            ).alias("M4"),
-        )
+    merged = s.select(
+        "*",
+        F.count(F.lit(1)).over(wall).alias("_p"),
+        F.sum("n").over(wall).alias("_N"),
+        mu.alias("_MU"),
+    ).agg(
+        F.max("_p").alias("n_parts"),
+        F.max("_N").alias("N"),
+        F.max("_MU").alias("MU"),
+        F.sum(F.col("m2") + F.col("n") * d * d).alias("M2"),
+        F.sum(
+            F.col("m3") + F.lit(3.0) * d * F.col("m2") + F.col("n") * d * d * d
+        ).alias("M3"),
+        F.sum(
+            F.col("m4")
+            + F.lit(4.0) * d * F.col("m3")
+            + F.lit(6.0) * d * d * F.col("m2")
+            + F.col("n") * d * d * d * d
+        ).alias("M4"),
     )
     safe = F.col("M2") > 0
     return merged.select(

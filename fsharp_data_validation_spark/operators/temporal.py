@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, WindowSpec, functions as F
 
 SESSION_GAP_S = 1800  # sessionize's default gap, sessionize_salted's gap
 _ASOF_SUFFIX = "_asof"  # the as-of joins' suffix on the right columns
@@ -33,6 +33,37 @@ def _micros(c: F.Column) -> F.Column:
     the NTZ->TZ cast a pure reinterpretation); matches DuckDB
     ``date_diff('microsecond', ...)`` arithmetic."""
     return F.unix_micros(c.cast("timestamp"))
+
+
+def _asof_union(left, right, by, left_ts, right_ts, right_cols, tie_col):
+    """The as-of joins' shared prelude, ``(right_cols, r, u)``: ``r`` is the
+    right side as (by..., _ts, _side=0, _tie, _pay) and ``u`` the left rows
+    (_side=1, NULL _tie and _pay) unioned with ``r``, whose left-only
+    columns are NULL (right rows only carry the payload; the side filter
+    drops them after the window)."""
+    right_cols = list(right_cols) if right_cols is not None else [
+        c for c in right.columns if c not in set(by) and c != right_ts
+    ]
+    tie_col = tie_col or right_cols[0]
+    payload = F.struct(*[F.col(c) for c in right_cols]).alias("_pay")
+    r = right.select(
+        *by,
+        F.col(right_ts).alias("_ts"),
+        F.lit(0).alias("_side"),
+        F.col(tie_col).alias("_tie"),
+        payload,
+    )
+    l = left.select(  # noqa: E741
+        "*",
+        F.col(left_ts).alias("_ts"),
+        F.lit(1).alias("_side"),
+        F.lit(None).cast(r.schema["_tie"].dataType).alias("_tie"),
+        F.lit(None).cast(r.schema["_pay"].dataType).alias("_pay"),
+    )
+    r_full = r.select(
+        *[c if c in r.columns else F.lit(None).cast(t).alias(c) for c, t in l.dtypes]
+    )
+    return right_cols, r, l.unionByName(r_full)
 
 
 def asof_join(
@@ -57,34 +88,10 @@ def asof_join(
     Returns the left rows plus ``<right_col>_asof`` columns (NULL when
     no right row precedes).
     """
-    right_cols = list(right_cols) if right_cols is not None else [
-        c for c in right.columns if c not in set(by) and c != right_ts
-    ]
-    tie_col = tie_col or right_cols[0]
     by = list(by)
-    payload = F.struct(*[F.col(c) for c in right_cols]).alias("_pay")
-    r = right.select(
-        *by,
-        F.col(right_ts).alias("_ts"),
-        F.lit(0).alias("_side"),
-        F.col(tie_col).alias("_tie"),
-        payload,
+    right_cols, _, u = _asof_union(
+        left, right, by, left_ts, right_ts, right_cols, tie_col
     )
-    l = left.select(  # noqa: E741
-        "*",
-        F.col(left_ts).alias("_ts"),
-        F.lit(1).alias("_side"),
-        F.lit(None).cast(r.schema["_tie"].dataType).alias("_tie"),
-        F.lit(None).cast(r.schema["_pay"].dataType).alias("_pay"),
-    )
-    # union with left columns missing from the right side filled as NULL
-    # (right-origin rows exist only to carry the payload; they are dropped
-    # by the side filter after the window)
-    r_full = r
-    for c in left.columns:
-        if c not in r.columns:
-            r_full = r_full.withColumn(c, F.lit(None).cast(dict(left.dtypes)[c]))
-    u = l.unionByName(r_full.select(*l.columns))
     w = (
         Window.partitionBy(*by)
         .orderBy(F.col("_ts"), F.col("_side"), F.col("_tie"))
@@ -175,6 +182,28 @@ def time_rollup(
     )
 
 
+def _session_no(w: WindowSpec, ts_col: str, gap_seconds: int) -> F.Column:
+    """Running session number over ``w`` (one key's events ordered by
+    (ts, id)): a session starts at the first event and wherever the gap to
+    the previous event exceeds ``gap_seconds``."""
+    gap_us = _micros(F.col(ts_col)) - _micros(F.lag(ts_col).over(w))
+    is_new = F.when(
+        gap_us.isNull() | (gap_us > gap_seconds * 1_000_000), F.lit(1)
+    ).otherwise(F.lit(0))
+    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return F.sum(is_new).over(run).cast("bigint")
+
+
+def _per_session(events: DataFrame, key_col: str, ts_col: str) -> DataFrame:
+    """One row per (key, session_no) of numbered ``events``."""
+    return events.groupBy(key_col, "session_no").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.min(ts_col).alias("session_start"),
+        F.max(ts_col).alias("session_end"),
+        (_micros(F.max(ts_col)) - _micros(F.min(ts_col))).alias("duration_us"),
+    )
+
+
 def sessionize(
     df: DataFrame,
     key_col: str = "user_id",
@@ -189,24 +218,12 @@ def sessionize(
     with ``session_no`` numbered 1.. per key in time order.
     """
     w = Window.partitionBy(key_col).orderBy(F.col(ts_col), F.col(id_col))
-    gap_us = _micros(F.col(ts_col)) - _micros(F.lag(ts_col).over(w))
-    is_new = F.when(
-        gap_us.isNull() | (gap_us > gap_seconds * 1_000_000), F.lit(1)
-    ).otherwise(F.lit(0))
-    run = Window.partitionBy(key_col).orderBy(F.col(ts_col), F.col(id_col)).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
     sessions = df.select(
         F.col(key_col),
         F.col(ts_col),
-        F.sum(is_new).over(run).cast("bigint").alias("session_no"),
+        _session_no(w, ts_col, gap_seconds).alias("session_no"),
     )
-    return sessions.groupBy(key_col, "session_no").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.min(ts_col).alias("session_start"),
-        F.max(ts_col).alias("session_end"),
-        (_micros(F.max(ts_col)) - _micros(F.min(ts_col))).alias("duration_us"),
-    )
+    return _per_session(sessions, key_col, ts_col)
 
 
 def sessionize_salted(
@@ -249,16 +266,8 @@ def sessionize_salted(
         F.col(key_col), F.col(ts_col), F.col(id_col), bucket.alias("_bk")
     )
     wb = Window.partitionBy(key_col, "_bk").orderBy(F.col(ts_col), F.col(id_col))
-    gap_us = _micros(F.col(ts_col)) - _micros(F.lag(ts_col).over(wb))
-    is_new = F.when(
-        gap_us.isNull() | (gap_us > SESSION_GAP_S * 1_000_000), F.lit(1)
-    ).otherwise(F.lit(0))
-    runb = wb.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     local = ev.select(
-        key_col,
-        ts_col,
-        "_bk",
-        F.sum(is_new).over(runb).cast("bigint").alias("_lno"),
+        key_col, ts_col, "_bk", _session_no(wb, ts_col, SESSION_GAP_S).alias("_lno")
     )
 
     # per-(key, bucket) summary: tiny regardless of key heat
@@ -297,12 +306,7 @@ def sessionize_salted(
         .cast("bigint")
         .alias("session_no"),
     )
-    return glob.groupBy(key_col, "session_no").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.min(ts_col).alias("session_start"),
-        F.max(ts_col).alias("session_end"),
-        (_micros(F.max(ts_col)) - _micros(F.min(ts_col))).alias("duration_us"),
-    )
+    return _per_session(glob, key_col, ts_col)
 
 
 def asof_join_salted(
@@ -344,34 +348,14 @@ def asof_join_salted(
     stragglers); past that this form is the only executable plan — a
     10^12-row key cannot single-task sort at any core count.
     """
-    right_cols = list(right_cols) if right_cols is not None else [
-        c for c in right.columns if c not in set(by) and c != right_ts
-    ]
-    tie_col = tie_col or right_cols[0]
     by = list(by)
-    payload = F.struct(*[F.col(c) for c in right_cols]).alias("_pay")
+    right_cols, r, u = _asof_union(
+        left, right, by, left_ts, right_ts, right_cols, tie_col
+    )
     bucket = lambda c: F.floor(  # noqa: E731
         _micros(c) / (bucket_seconds * 1_000_000)
     ).cast("bigint")
-    r = right.select(
-        *by,
-        F.col(right_ts).alias("_ts"),
-        F.lit(0).alias("_side"),
-        F.col(tie_col).alias("_tie"),
-        payload,
-    )
-    l = left.select(  # noqa: E741
-        "*",
-        F.col(left_ts).alias("_ts"),
-        F.lit(1).alias("_side"),
-        F.lit(None).cast(r.schema["_tie"].dataType).alias("_tie"),
-        F.lit(None).cast(r.schema["_pay"].dataType).alias("_pay"),
-    )
-    r_full = r
-    for c in left.columns:
-        if c not in r.columns:
-            r_full = r_full.withColumn(c, F.lit(None).cast(dict(left.dtypes)[c]))
-    u = l.unionByName(r_full.select(*l.columns)).withColumn("_bk", bucket(F.col("_ts")))
+    u = u.withColumn("_bk", bucket(F.col("_ts")))
 
     wb = (
         Window.partitionBy(*by, "_bk")

@@ -967,16 +967,14 @@ def vocab_growth(
     (a zero new-token rate is itself the signal).
 
     Scale shape: one explode feeding one (day, token) hash aggregate
-    (map-side combinable — the only corpus-scale shuffle); daily totals
-    and first-appearance counts both derive from that aggregate, which is
-    persisted (tracked) so the two branches don't re-plan the scan; the
-    join + running-sum window run on the |days|-row relation.
+    (map-side combinable — the only corpus-scale shuffle); each token's
+    first day is a window partitioned by token over that aggregate, so
+    daily totals and first-appearance counts are ONE aggregate by day; the
+    running-sum window runs on the |days|-row relation.
     Returns (day, tokens, new_tokens, vocab_size) ordered by day."""
     from pyspark.sql import Window
 
-    from ..cache import persist_tracked
-
-    day_tok = persist_tracked(
+    day_tok = (
         df.filter(F.col(text_col).isNotNull())
         .select(
             F.to_date(F.col(ts_col)).alias("day"),
@@ -985,23 +983,17 @@ def vocab_growth(
         .groupBy("day", "token")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    daily = day_tok.groupBy("day").agg(F.sum("n").alias("tokens"))
-    new = (
-        day_tok.groupBy("token")
-        .agg(F.min("day").alias("day"))
-        .groupBy("day")
-        .agg(F.count(F.lit(1)).alias("new_tokens"))
+    first = F.col("day") == F.min("day").over(Window.partitionBy("token"))
+    daily = day_tok.select("day", "n", first.alias("_first")).groupBy("day").agg(
+        F.sum("n").alias("tokens"),
+        F.count(F.when(F.col("_first"), F.lit(1))).alias("new_tokens"),
     )
     w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    return (
-        daily.join(new, "day", "left")
-        .withColumn("new_tokens", F.coalesce("new_tokens", F.lit(0)))
-        .select(
-            "day",
-            F.col("tokens").cast("bigint").alias("tokens"),
-            F.col("new_tokens").cast("bigint").alias("new_tokens"),
-            F.sum("new_tokens").over(w).cast("bigint").alias("vocab_size"),
-        )
+    return daily.select(
+        "day",
+        F.col("tokens").cast("bigint").alias("tokens"),
+        F.col("new_tokens").cast("bigint").alias("new_tokens"),
+        F.sum("new_tokens").over(w).cast("bigint").alias("vocab_size"),
     )
 
 

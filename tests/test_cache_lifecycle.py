@@ -66,10 +66,51 @@ def test_drift_and_sampling_grids_release(spark):
         F.col("id").alias("doc_id"),
     )
     psi_by_group(df, "grp", "x", 10.0, 10).collect()
+    n = tracked_count()
+    assert n >= 1  # the drift grid
     temperature_sample(df, "grp", "doc_id").collect()
-    assert tracked_count() >= 2
+    assert tracked_count() == n  # window totals, nothing persisted
     release_caches(spark, sweep_rdds=True)
     assert _storage_entries(spark) == 0
+
+
+def test_window_total_operators_persist_nothing(spark):
+    """Operators that read the totals of a small aggregate from a window
+    over it, or whose branches exchange reuse reads once, leave no tracked
+    cache behind."""
+    from fsharp_data_validation_spark.operators.dedup import simhash_banded_pairs
+    from fsharp_data_validation_spark.operators.drift import chi2_drift
+    from fsharp_data_validation_spark.operators.sampling import (
+        dsir_weights,
+        temperature_sample,
+    )
+    from fsharp_data_validation_spark.operators.stats import (
+        mad_outliers_by_group,
+        mg_partition_sketches,
+        moments_partition_sketches,
+        moments_rollup,
+    )
+    from fsharp_data_validation_spark.operators.text import vocab_growth
+
+    release_caches(spark, sweep_rdds=True)
+    docs = _docs(spark).select(
+        "*",
+        (F.col("doc_id") % 3).cast("string").alias("grp"),
+        (F.col("doc_id") % 7).cast("double").alias("x"),
+        F.timestamp_seconds(F.col("doc_id") * 3600).alias("ts"),
+    )
+    for out in (
+        temperature_sample(docs, "grp", "doc_id"),
+        dsir_weights(docs, "doc_id", "text", F.col("doc_id") % 2 == 0),
+        moments_rollup(moments_partition_sketches(docs, "grp", "x")),
+        mg_partition_sketches(docs, "grp", "text", k=2),
+        mad_outliers_by_group(docs, "grp", "x"),
+        chi2_drift(docs, "grp", "ts"),
+        vocab_growth(docs, "ts", "text"),
+        simhash_banded_pairs(docs, "doc_id", "text"),
+    ):
+        assert out.collect()
+    assert tracked_count() == 0
 
 
 def test_release_is_safe_before_consumption(spark):

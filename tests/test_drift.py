@@ -6,6 +6,13 @@ function per statistic serves every form."""
 from pyspark.sql import functions as F
 
 
+def w1(hist_a, hist_b, n_buckets, bucket_width=1.0, round_to=4):
+    """Wasserstein-1 distance between two separate histograms."""
+    from fsharp_data_validation_spark.operators.drift import _joined_hist, w1_joined
+
+    return w1_joined(_joined_hist(hist_a, hist_b), n_buckets, bucket_width, round_to)
+
+
 def test_chi2_known_contingency(spark):
     """2x2 table with closed-form chi2: cells a=30,b=10 / c=10,d=30 ->
     chi2 = n(ad-bc)^2 / ((a+b)(c+d)(a+c)(b+d)) = 80*(900-100)^2/40^4 = 20."""
@@ -88,8 +95,6 @@ def test_w1_counts_gap_buckets(spark):
     adjacent buckets give exactly width."""
     from pyspark.sql import Row
 
-    from fsharp_data_validation_spark.operators.drift import w1
-
     def hist(d):
         return spark.createDataFrame([Row(bucket=b, n=n) for b, n in d.items()])
 
@@ -141,7 +146,7 @@ def test_by_group_equals_joined_per_group(spark):
             "psi": D.psi(hg, whole),
             "ks": D.ks_joined(D._joined_hist(hg, whole)),
             "js": D.js_joined(D._joined_hist(hg, whole)),
-            "w1": D.w1(hg, whole, n, width),
+            "w1": w1(hg, whole, n, width),
         }
         for name, out in joined.items():
             assert by[name][g] == out.collect()[0][name], (name, g)

@@ -104,27 +104,76 @@ def _defs():
     ]
 
 
-def _refs(node, aliases):
-    """Every name ``node`` uses: ``ast.Name`` ids and ``ast.Attribute``
-    attrs, where a use of an ``import … as`` name in ``aliases`` also counts
-    for the imported name. An import on its own uses nothing."""
+def _module(path):
+    """The dotted module name of a repo file."""
+    parts = path.relative_to(ROOT).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _imports(tree, path):
+    """``{bound name: target}`` for each import in ``tree`` (the file at
+    ``path``): a module's dotted name where the binding is a module, else
+    ``(module, name)`` for a name imported from a module."""
+    pkg = list(path.relative_to(ROOT).parts[:-1])
+    modules = {_module(p) for p in CONSUMERS}
+    out = {}
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Import):
+            for a in n.names:  # ``import a.b`` binds ``a``
+                bound = a.name if a.asname else a.name.split(".")[0]
+                out[a.asname or bound] = bound
+        elif isinstance(n, ast.ImportFrom):
+            base = n.module
+            if n.level:  # relative: level 1 is this file's package
+                up = pkg[: len(pkg) - n.level + 1]
+                base = ".".join(up + [n.module] if n.module else up)
+            for a in n.names:
+                full = f"{base}.{a.name}"
+                out[a.asname or a.name] = full if full in modules else (base, a.name)
+    return out
+
+
+def _refs(node, module, imports):
+    """The ``(module, name)`` definitions ``node`` (in ``module``) uses: a
+    bare name resolves to the import that binds it (``imports``, see
+    ``_imports``), or else to ``module`` itself; ``<module alias>.name``
+    resolves to that module. An attribute of anything else, and an import
+    on its own, use nothing."""
+
+    def module_of(e):
+        if isinstance(e, ast.Name):
+            t = imports.get(e.id)
+            return t if isinstance(t, str) else None
+        if isinstance(e, ast.Attribute):
+            base = module_of(e.value)
+            return base and f"{base}.{e.attr}"
+        return None
+
     out = set()
     for n in ast.walk(node):
         if isinstance(n, ast.Name):
-            out |= {n.id, aliases.get(n.id, n.id)}
-        elif isinstance(n, ast.Attribute):
-            out.add(n.attr)
+            t = imports.get(n.id, (module, n.id))
+            if isinstance(t, tuple):
+                out.add(t)
+        elif isinstance(n, ast.Attribute) and module_of(n.value):
+            out.add((module_of(n.value), n.attr))
     return out
 
 
 def test_refs_count_uses_not_imports():
     """An imported name counts once something uses it, under its own name
-    or its alias; an import that nothing uses counts for nothing."""
-    tree = ast.parse("from m import a as b, c\ndef f():\n    return b()\n")
-    imports, f = tree.body
-    aliases = _aliases(tree)
-    assert _refs(imports, aliases) == set()
-    assert "a" in _refs(f, aliases) and "c" not in _refs(f, aliases)
+    or its alias, for the module it comes from; an import that nothing uses
+    counts for nothing. A bare name nothing imports counts for the using
+    module, and an attribute only for the module its base names, so a local
+    variable or an attribute that shares a function's name is no use of it."""
+    tree = ast.parse(
+        "from m import a as b, c\nimport p.q as Q\n"
+        "def f(x):\n    w1 = x.g\n    return b(), Q.h, w1\n"
+    )
+    imports, _, f = tree.body
+    binds = _imports(tree, ROOT / "k.py")
+    assert _refs(imports, "k", binds) == set()
+    assert _refs(f, "k", binds) == {("m", "a"), ("p.q", "h"), ("k", "w1"), ("k", "x")}
 
 
 def _constants():
@@ -142,21 +191,22 @@ def _constants():
 
 
 def _dead(defs):
-    """The keys of ``defs`` ({(path, lineno): name}) that no top-level node
-    of CONSUMERS references outside its own definition, where a reference
-    from a dead definition does not count either."""
+    """The keys of ``defs`` ({(path, lineno): (module, name)}) that no
+    top-level node of CONSUMERS references (see ``_refs``) outside its own
+    definition, where a reference from a dead definition does not count
+    either."""
     refs = {
-        (p, n.lineno): _refs(n, aliases)
+        (p, n.lineno): _refs(n, _module(p), imports)
         for p, t in _trees(CONSUMERS).items()
-        for aliases in [_aliases(t)]
+        for imports in [_imports(t, p)]
         for n in t.body
     }
     dead = set()
     while True:
         now = {
             k
-            for k, name in defs.items()
-            if not any(name in r for n, r in refs.items() if n != k and n not in dead)
+            for k, d in defs.items()
+            if not any(d in r for n, r in refs.items() if n != k and n not in dead)
         }
         if now == dead:
             return dead
@@ -170,8 +220,17 @@ def test_every_public_function_has_a_consumer():
     tests/. A reference from a function that is itself dead does not count
     either, so a test-only function takes its private helpers with it. ast,
     not text search, so a docstring mention is not a use."""
-    defs = {(p, f.lineno): f.name for p, f in _defs() if f.name not in REFERENCE_ONLY}
-    assert sorted(defs[k] for k in _dead(defs) if not defs[k].startswith("_")) == []
+    defs = {
+        (p, f.lineno): (_module(p), f.name)
+        for p, f in _defs()
+        if f.name not in REFERENCE_ONLY
+    }
+    dead = _dead(defs)
+    assert sorted(
+        f"{k[0].relative_to(PKG)}:{name}"
+        for k, (_, name) in defs.items()
+        if k in dead and not name.startswith("_")
+    ) == []
 
 
 def test_every_public_constant_has_a_consumer():
@@ -179,12 +238,16 @@ def test_every_public_constant_has_a_consumer():
     by the package, the entry, bench.py, jobs/, perfbench/ or tools/ outside
     its own assignment, and a test fixture such as a schema only tests build
     lives in tests/."""
-    consts = {(p, a.lineno): name for p, a, name in _constants()}
-    defs = {(p, f.lineno): f.name for p, f in _defs() if f.name not in REFERENCE_ONLY}
+    consts = {(p, a.lineno): (_module(p), name) for p, a, name in _constants()}
+    defs = {
+        (p, f.lineno): (_module(p), f.name)
+        for p, f in _defs()
+        if f.name not in REFERENCE_ONLY
+    }
     dead = _dead({**defs, **consts})
     assert sorted(
         f"{k[0].relative_to(PKG)}:{name}"
-        for k, name in consts.items()
+        for k, (_, name) in consts.items()
         if k in dead and not name.startswith("_")
     ) == []
 

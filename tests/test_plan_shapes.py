@@ -13,6 +13,13 @@ def _plan(df) -> str:
     )
 
 
+def _final_scans(df) -> int:
+    """Parquet scan nodes in the final adaptive plan of a collected ``df``
+    (the plan text before ``== Initial Plan ==``)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0].count("FileScan parquet")
+
+
 @pytest.fixture(scope="module")
 def sf(spark):
     return "/root/testdata/sf0.01"
@@ -316,20 +323,22 @@ def test_report_path_evaluates_only_on_failing_slice(spark, sf):
 
 
 def test_round3_stat_tables_cached_and_tfidf_single_agg(spark, sf):
-    """Round-3 shapes: (a) mad_outliers / chi2_drift persist their KB-scale
-    stat tables, so consuming branches are InMemoryTableScans, not re-runs
-    of the data aggregate; (b) tfidf_top_terms computes document frequency
-    as a window over the SAME (doc, term) aggregate — exactly one explode,
-    one hash aggregate, no tf-vs-df self-join."""
+    """Round-3 shapes: (a) mad_outliers / chi2_drift persist nothing and
+    scan the data no more than their passes need — mad's three (group
+    medians, deviation medians, flag pass), chi2's two (the scalar midpoint
+    and the split counts, whose margins are a window over the count table);
+    (b) tfidf_top_terms computes document frequency as a window over the
+    SAME (doc, term) aggregate — exactly one explode, one hash aggregate,
+    no tf-vs-df self-join."""
     import __spark_entry__ as e
-    from fsharp_data_validation_spark.cache import release_caches
+    from fsharp_data_validation_spark.cache import release_caches, tracked_count
 
-    for q in (e.q_mad_outliers, e.q_chi2_drift):
+    for q, scans in ((e.q_mad_outliers, 3), (e.q_chi2_drift, 2)):
+        release_caches(spark, sweep_rdds=True)
         df = q(spark, sf)
         df.collect()
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "InMemoryTableScan" in plan, q.__name__
-        release_caches(spark, sweep_rdds=True)
+        assert tracked_count() == 0, q.__name__
+        assert _final_scans(df) == scans, q.__name__
 
     import re
 
@@ -342,22 +351,21 @@ def test_round3_stat_tables_cached_and_tfidf_single_agg(spark, sf):
 
 
 def test_moments_rollup_scans_once(spark, sf):
-    """The moments rollup's sketch table feeds two aggregates (grand mean,
-    delta-corrected merge); the persist makes both branches InMemory scans
-    over the O(partitions)-row cache so the data parquet is scanned once
-    (2 physical scans before the fix — same re-plan class as the drift
-    grids above)."""
+    """The moments rollup reads its grand totals from a window over the
+    O(partitions)-row sketch table, so the sketch table has one consumer:
+    the data parquet is scanned once and nothing is persisted."""
     import re
 
     import __spark_entry__ as e
+    from fsharp_data_validation_spark.cache import release_caches, tracked_count
 
+    release_caches(spark, sweep_rdds=True)
     df = e.q_moments(spark, sf)
     df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in plan
+    assert tracked_count() == 0
+    assert _final_scans(df) == 1
     optimized = df._jdf.queryExecution().optimizedPlan().toString()
     assert len(re.findall(r"Relation.*parquet", optimized)) <= 1
-    spark.catalog.clearCache()
 
 
 def test_gopher_local_kernels_no_exchange(spark, sf):
@@ -382,20 +390,22 @@ def test_gopher_local_kernels_no_exchange(spark, sf):
 
 
 def test_vocab_growth_scans_once(spark, sf):
-    """vocab_growth's (day, token) aggregate feeds two branches (daily
-    volume, first-appearance counts); the persist makes both InMemory
-    scans so the events parquet is read once."""
+    """vocab_growth's (day, token) aggregate has one consumer: each token's
+    first day is a window partitioned by token over it, so daily volume and
+    first-appearance counts are one aggregate by day, the events parquet is
+    read once and nothing is persisted."""
     import re
 
     import __spark_entry__ as e
+    from fsharp_data_validation_spark.cache import release_caches, tracked_count
 
+    release_caches(spark, sweep_rdds=True)
     df = e.q_vocab_growth(spark, sf)
     df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in plan
+    assert tracked_count() == 0
+    assert _final_scans(df) == 1
     optimized = df._jdf.queryExecution().optimizedPlan().toString()
     assert len(re.findall(r"Relation.*parquet", optimized)) <= 1
-    spark.catalog.clearCache()
 
 
 def test_token_count_bpe_single_regex_no_exchange(spark, sf):

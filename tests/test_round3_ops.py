@@ -1,7 +1,8 @@
 """Round-3 operators: conversation-flow validation, TF-IDF top terms
 (the drift members are pinned in test_drift.py, the similarity members in
 test_similarity.py, the Gopher/Zipf/PMI/vocab-growth members in
-test_text.py, the stats members in test_stats.py). Semantics pinned on
+test_text.py, the stats members in test_stats.py, weighted sampling in
+test_sampling.py). Semantics pinned on
 hand-built fixtures; the sf0.01 DuckDB oracles cover the derived-table
 scale."""
 
@@ -222,28 +223,6 @@ def test_benford_digits_and_chi2(spark):
         chi2 += (obs - exp) ** 2 / exp
     assert abs(got[1]["chi2"] - chi2) < 1e-4
     assert abs(got[1]["obs_p"] - 4 / 9) < 1e-5
-
-
-def test_weighted_sample_determinism_and_bias(spark):
-    """A-ES: deterministic across runs, excludes non-positive weights, and
-    heavily-weighted rows are sampled (far) more often — checked by giving
-    one row overwhelming weight across many salts."""
-    from fsharp_data_validation_spark.operators.sampling import weighted_sample
-
-    rows = [(i, 1.0 if i else 10000.0) for i in range(50)] + [(99, 0.0), (98, -1.0)]
-    df = spark.createDataFrame(rows, "doc_id long, w double")
-    a = [tuple(r) for r in weighted_sample(df, "doc_id", "w", 10).collect()]
-    b = [tuple(r) for r in weighted_sample(df, "doc_id", "w", 10).collect()]
-    assert a == b and len(a) == 10  # deterministic
-    assert all(r[0] not in (98, 99) for r in a)  # non-positive excluded
-    assert [r[2] for r in a] == list(range(1, 11))  # rnk 1..k
-    # doc 0 has 10000x the weight: it must appear, and essentially always
-    # near the front, for any salt
-    hits = 0
-    for s in ("s1", "s2", "s3", "s4", "s5"):
-        got = weighted_sample(df, "doc_id", "w", 10, salt=s).collect()
-        hits += any(r["id"] == 0 for r in got)
-    assert hits == 5
 
 
 def test_violation_examples_null_key_hashing(spark):

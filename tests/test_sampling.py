@@ -1,5 +1,5 @@
 """The sampling family (``operators/sampling.py``): DSIR importance
-weights pinned on a hand-built fixture."""
+weights and A-ES weighted sampling pinned on hand-built fixtures."""
 
 
 def test_dsir_weights_direction_and_counts(spark):
@@ -45,3 +45,25 @@ def test_dsir_weights_direction_and_counts(spark):
     # identical texts with identical label context score identically
     assert out[1]["logratio"] == out[2]["logratio"]
     assert out[3]["logratio"] == out[4]["logratio"]
+
+
+def test_weighted_sample_determinism_and_bias(spark):
+    """A-ES: deterministic across runs, excludes non-positive weights, and
+    heavily-weighted rows are sampled (far) more often — checked by giving
+    one row overwhelming weight across many salts."""
+    from fsharp_data_validation_spark.operators.sampling import weighted_sample
+
+    rows = [(i, 1.0 if i else 10000.0) for i in range(50)] + [(99, 0.0), (98, -1.0)]
+    df = spark.createDataFrame(rows, "doc_id long, w double")
+    a = [tuple(r) for r in weighted_sample(df, "doc_id", "w", 10).collect()]
+    b = [tuple(r) for r in weighted_sample(df, "doc_id", "w", 10).collect()]
+    assert a == b and len(a) == 10  # deterministic
+    assert all(r[0] not in (98, 99) for r in a)  # non-positive excluded
+    assert [r[2] for r in a] == list(range(1, 11))  # rnk 1..k
+    # doc 0 has 10000x the weight: it must appear, and essentially always
+    # near the front, for any salt
+    hits = 0
+    for s in ("s1", "s2", "s3", "s4", "s5"):
+        got = weighted_sample(df, "doc_id", "w", 10, salt=s).collect()
+        hits += any(r["id"] == 0 for r in got)
+    assert hits == 5

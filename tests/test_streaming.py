@@ -30,6 +30,13 @@ from fsharp_data_validation_spark.streaming.validate_stream import (
 )
 
 
+def w1(hist_a, hist_b, n_buckets, bucket_width=1.0, round_to=4):
+    """Wasserstein-1 distance between two separate histograms."""
+    from fsharp_data_validation_spark.operators.drift import _joined_hist, w1_joined
+
+    return w1_joined(_joined_hist(hist_a, hist_b), n_buckets, bucket_width, round_to)
+
+
 def test_run_available_now_cleans_up(spark, tmp_path, monkeypatch):
     """The harness owns its temp dir: a finished run returns every row and
     leaves nothing behind; a run that outlives the timeout is stopped,
@@ -184,7 +191,7 @@ def test_windowed_w1_stream_matches_batch(spark):
     """Streaming W1 per event-time window equals the batch w1() closed form
     over the same slice; a baseline-like window scores ~0, a shifted window
     pays the moved-mass distance."""
-    from fsharp_data_validation_spark.operators.drift import histogram, w1
+    from fsharp_data_validation_spark.operators.drift import histogram
     from fsharp_data_validation_spark.streaming.validate_stream import (
         windowed_w1_stream,
     )

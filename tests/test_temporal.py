@@ -2,7 +2,8 @@
 (operators/temporal.py). Oracle-grade pinning happens via the driver
 contract (`asof_join` / `sessionize` queries vs DuckDB); these tests pin
 the edge semantics: inclusive ts equality, deterministic tie-break, rows
-with no predecessor, gap boundary inclusivity, and session numbering."""
+with no predecessor, gap boundary inclusivity, and session numbering, and
+the hot-key salted twins' output parity with the plain forms."""
 
 from datetime import datetime, timedelta
 
@@ -112,3 +113,87 @@ def test_interval_join_bounds_buckets_and_keys(spark):
     )
     got = sorted((r["pid"], r["iid"]) for r in out.collect())
     assert got == [(1, 100), (2, 100), (5, 100), (5, 101)]
+
+
+def test_sessionize_salted_equals_sessionize(spark):
+    """Output parity of the hot-key-safe time-bucket split + boundary merge
+    against the plain per-key window, on a corpus engineered to stress the
+    merge: sessions spanning many buckets, boundary events exactly at the
+    gap threshold, empty buckets inside a session gap, and a hot key."""
+    import random
+    from datetime import datetime, timedelta
+
+    from fsharp_data_validation_spark.operators.temporal import (
+        sessionize,
+        sessionize_salted,
+    )
+
+    rng = random.Random(42)
+    base = datetime(2024, 1, 1)
+    rows = []
+    eid = 0
+    for key, n in (("hot", 400), ("warm", 60), ("single", 1)):
+        t = 0
+        for _ in range(n):
+            # mix of tiny gaps (same session), exactly-threshold gaps (same
+            # session: rule is gap > threshold), and session breaks that
+            # often skip several whole buckets
+            t += rng.choice([1, 5, 1800, 1801, 4000, 90000, 200000])
+            rows.append((key, base + timedelta(seconds=t), eid))
+            eid += 1
+    df = spark.createDataFrame(rows, "user_id string, ts timestamp, event_id long")
+
+    want = sorted(
+        tuple(r)
+        for r in sessionize(df, "user_id", "ts", "event_id", gap_seconds=1800).collect()
+    )
+    for bucket_seconds in (86400, 3600, 600):  # incl. bucket < gap
+        got = sorted(
+            tuple(r)
+            for r in sessionize_salted(
+                df, "user_id", "ts", "event_id", bucket_seconds=bucket_seconds
+            ).collect()
+        )
+        assert got == want, f"bucket_seconds={bucket_seconds}"
+
+
+def test_asof_join_salted_equals_asof_join(spark):
+    """Output parity of the hot-key-safe as-of (time-bucket split + carried
+    per-bucket last payload) against the plain union-and-scan window:
+    boundary timestamps, buckets with only-left or only-right rows, equal-ts
+    ties on both sides, keys missing from one side."""
+    import random
+    from datetime import datetime, timedelta
+
+    from fsharp_data_validation_spark.operators.temporal import (
+        asof_join,
+        asof_join_salted,
+    )
+
+    rng = random.Random(7)
+    base = datetime(2024, 1, 1)
+    lrows, rrows = [], []
+    for key, nl, nr in (("hot", 250, 120), ("warm", 40, 3), ("leftonly", 10, 0), ("rightonly", 0, 5)):
+        for i in range(nl):
+            # cluster around bucket boundaries (bucket_seconds=600 below)
+            t = rng.choice([rng.randrange(0, 40000), 600 * rng.randrange(0, 60)])
+            lrows.append((key, base + timedelta(seconds=t), i))
+        for i in range(nr):
+            t = rng.choice([rng.randrange(0, 40000), 600 * rng.randrange(0, 60)])
+            rrows.append((key, base + timedelta(seconds=t), 100 + i, f"p{key}{i}"))
+    # equal-ts tie: two right rows at the same instant (max tie wins)
+    rrows.append(("hot", base + timedelta(seconds=1200), 900, "tie_lo"))
+    rrows.append(("hot", base + timedelta(seconds=1200), 901, "tie_hi"))
+    left = spark.createDataFrame(lrows, "k string, ts timestamp, lid int")
+    right = spark.createDataFrame(rrows, "k string, ts timestamp, rid int, val string")
+
+    kw = dict(by=["k"], right_cols=["rid", "val"], tie_col="rid")
+    want = sorted(tuple(r) for r in asof_join(left, right, **kw).collect())
+    for bucket_seconds in (86400, 600, 37):
+        got = sorted(
+            tuple(r)
+            for r in asof_join_salted(
+                left, right, bucket_seconds=bucket_seconds, **kw
+            ).collect()
+        )
+        assert got == want, f"bucket_seconds={bucket_seconds}"

@@ -7,8 +7,8 @@ consumed by k branches re-plans its whole subtree — including the data scan
 Interpretation notes:
 - the `docs` view is a 3-branch UNION ALL over one parquet file, so each
   LOGICAL read of docs contributes 3 scan nodes; `transcripts` contributes 1;
-- operators that persist intermediates (simhash, contamination, jaccard,
-  drift grids) still PRINT the full subtree per branch in the static plan —
+- operators that persist intermediates (contamination, jaccard, drift
+  grids) still PRINT the full subtree per branch in the static plan —
   the cache manager substitutes InMemoryRelation at planning time, so high
   static counts there are rendering, not extra I/O;
 - dual-input algorithms (stratified/global_shuffle: count pass + data pass)
