@@ -3292,7 +3292,7 @@ def q_sessionize_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 # independent spec of the as-of semantics (correlated subquery — the
 # obviously-correct form, deliberately NOT the union/window shape the
 # Spark operator uses, so a shared bug can't hide); asof_salted is
-# output-identical to asof_join (parity-fuzzed in tests/test_round4_ops.py),
+# output-identical to asof_join (parity-fuzzed in tests/test_temporal.py),
 # so both share it
 _ASOF_ORACLE = (
     "SELECT l.event_id, "

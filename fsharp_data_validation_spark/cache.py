@@ -7,9 +7,11 @@ a corpus-scale self-join; an aggregate whose branches each re-plan a scan);
 totals over a small aggregate come from a whole-relation window over it.
 The persisting operators: ``ValidationRun.run``, the shingle-set and bucket
 tables of ``ngram_jaccard_pairs``, ``minhash_lsh_pairs``,
-``containment_dedup_pairs`` and ``cross_contamination_pairs``,
-``semdedup``, the drift ``_grid``, ``skew_report``, ``pmi_bigrams`` and
-``ngram_perplexity``.  ``DataFrame.persist`` has no scope: the storage
+``containment_dedup_pairs`` and ``cross_contamination_pairs``, the drift
+``_grid``, ``skew_report``, ``pmi_bigrams`` and ``ngram_perplexity``.  A
+per-row operator whose grouped kernel holds every row of its group
+(``semdedup``) returns those rows and persists nothing.
+``DataFrame.persist`` has no scope: the storage
 lives until someone unpersists it, so a long session running many
 operators (the 71-query bench; any real multi-stage curation pipeline)
 accumulates executor storage monotonically — at 10^12-row scale that is an

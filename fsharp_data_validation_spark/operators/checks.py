@@ -369,17 +369,17 @@ def benford_check(
     from pyspark.sql import Window
 
     v = F.col(value_col).cast("bigint")
-    digit = F.substring(v.cast("string"), 1, 1).cast("int")
+    digit = F.substring(v.cast("string"), 1, 1).cast("bigint")
     agg = (
         df.filter(v > 0)
         .groupBy(digit.alias("digit"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    spine = df.sparkSession.range(1, 10).select(F.col("id").cast("int").alias("digit"))
+    spine = df.sparkSession.range(1, 10).withColumnRenamed("id", "digit")
     full = spine.join(agg, "digit", "left").withColumn(
         "n", F.coalesce("n", F.lit(0))
     )
-    exp_p = F.element_at(F.lit(_BENFORD), F.col("digit") + 1)
+    exp_p = F.element_at(F.lit(_BENFORD), (F.col("digit") + 1).cast("int"))
     w = Window.partitionBy()
     tot = F.sum("n").over(w)
     expected = tot * exp_p

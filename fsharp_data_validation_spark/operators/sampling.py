@@ -280,12 +280,15 @@ def dsir_weights(
        buckets with the portable md5 bucket hash (``md5_int % B`` — the
        same gram may collide, which IS the method: hashing is the
        dimensionality bound that lets the model stay KB-scale at any
-       corpus size). Explode -> one hash aggregation keyed on bucket with
-       conditional target/raw counts (map-side combined; output <= B rows).
+       corpus size). ``explode_outer`` -> one hash aggregation keyed on
+       bucket with conditional target/raw counts (map-side combined;
+       output <= B rows). A doc with no grams keeps one row, whose bucket
+       is NULL and which the model skips.
     2. Laplace-smoothed per-bucket log-ratios joined back to the gram
-       stream as a BROADCAST (B rows), then one hash aggregation per doc
-       sums them. Totals come from a whole-relation window over the
-       bucket aggregate.
+       stream as a BROADCAST (B rows), then one hash aggregation per
+       (doc, is_target) sums them and counts the non-NULL buckets, so the
+       answer needs no join back to a second read of the input. Totals
+       come from a whole-relation window over the bucket aggregate.
 
     Float note: the per-doc score is an unordered double sum; published at
     4 decimals the summation-order difference (~1e-13 at
@@ -295,25 +298,23 @@ def dsir_weights(
     lam = 1.0
     b = int(n_buckets)
     words = F.split(F.col(text_col), " ")
-    grams = F.when(
-        F.col(text_col).isNotNull(), F.concat(words, word_ngrams(words, 2))
-    ).otherwise(F.array().cast("array<string>"))
-
-    base = df.select(
+    # NULL text has NULL grams: its one explode_outer row has a NULL bucket
+    occ = df.select(
         F.col(id_col).alias("_id"),
         target_col.cast("boolean").alias("is_target"),
-        grams.alias("_grams"),
-    )
-    occ = base.select(
-        "_id", "is_target", F.explode("_grams").alias("_g")
+        F.explode_outer(F.concat(words, word_ngrams(words, 2))).alias("_g"),
     ).select(
         "_id",
         "is_target",
         F.pmod(md5_int(F.col("_g")), F.lit(b)).alias("_b"),
     )
-    bc = occ.groupBy("_b").agg(
-        F.sum(F.col("is_target").cast("long")).alias("_ct"),
-        F.sum((~F.col("is_target")).cast("long")).alias("_cr"),
+    bc = (
+        occ.filter(F.col("_b").isNotNull())
+        .groupBy("_b")
+        .agg(
+            F.sum(F.col("is_target").cast("long")).alias("_ct"),
+            F.sum((~F.col("is_target")).cast("long")).alias("_cr"),
+        )
     )
     wall = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     tt = F.sum("_ct").over(wall).cast("double")
@@ -325,21 +326,12 @@ def dsir_weights(
             - F.log((F.col("_cr") + lam) / (tr + lam * b))
         ).alias("_lw"),
     )
-    per = (
-        occ.join(F.broadcast(lw), "_b")
-        .groupBy("_id")
+    return (
+        occ.join(F.broadcast(lw), "_b", "left")
+        .groupBy("_id", "is_target")
         .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_grams"),
+            F.count("_b").alias("n_grams"),
             F.round(F.sum("_lw"), 4).alias("logratio"),
         )
-    )
-    return (
-        base.select("_id", "is_target")
-        .join(per, "_id", "left")
-        .select(
-            F.col("_id").alias(id_col),
-            "is_target",
-            F.coalesce(F.col("n_grams"), F.lit(0)).alias("n_grams"),
-            "logratio",
-        )
+        .withColumnRenamed("_id", id_col)
     )

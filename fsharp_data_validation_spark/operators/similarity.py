@@ -23,6 +23,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import (
     ArrayType,
+    BooleanType,
     DoubleType,
     IntegerType,
     LongType,
@@ -30,7 +31,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..cache import persist_tracked
 from ..rounding import half_up
 from .dedup import _bucket_pairs
 
@@ -372,13 +372,14 @@ def semdedup(
 
     Spark shape: cell assignment is one argmin pass over the vectors (the
     chunked-GEMM kernel shared with ``ivf_topk``; ties -> lowest cell
-    index, matching the oracle's ORDER BY distance, cell), persisted so
-    the pair stage and the final report read the assignment once. The
-    within-cell pairing is ONE ``applyInArrow`` group per cell scoring the
-    cell against itself with ``_cosine_hits`` (float64 GEMM) and reducing
-    the hits to per-vector earlier-neighbor counts IN the kernel — each
-    vector moves through the shuffle once (O(n) bytes), not once per pair
-    as in a cell-keyed self-join (~100x the bytes at ~100 vectors/cell).
+    index, matching the oracle's ORDER BY distance, cell). The within-cell
+    pairing is ONE ``applyInArrow`` group per cell scoring the cell against
+    itself with ``_cosine_hits`` (float64 GEMM) and reducing the hits to
+    per-vector earlier-neighbor counts IN the kernel, which returns every
+    row of its cell: the grouped pass's output is the answer, and nothing
+    is persisted. Each vector moves
+    through the shuffle once (O(n) bytes), not once per pair as in a
+    cell-keyed self-join (~100x the bytes at ~100 vectors/cell).
     Kernel memory is bounded by ``_TILE`` (plus the hits), so a hot cell
     costs a slow task, not an out-of-memory one; only work is quadratic in
     the LARGEST cell, never in n (at 10^9 vectors, 10^4-10^5 cells from a
@@ -393,38 +394,35 @@ def semdedup(
     if centroids is None:
         centroids = sampled_centroids(vectors, id_col, vec_col)
     centers = np.asarray(centroids, dtype="float64")
-    assigned = persist_tracked(
-        _as_double(vectors, vec_col).select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).alias("_v"),
-            _nearest_cell(centers)(F.col(vec_col)).alias("cell"),
-        )
+    assigned = _as_double(vectors, vec_col).select(
+        F.col(id_col), F.col(vec_col), _nearest_cell(centers)(F.col(vec_col)).alias("cell")
     )
-    dup_schema = StructType(
-        [StructField("_idb", LongType()), StructField("n_dup_earlier", LongType())]
+    id_field = vectors.schema[id_col]
+    out_schema = StructType(
+        [
+            StructField(id_col, id_field.dataType, id_field.nullable),
+            StructField("cell", IntegerType()),
+            StructField("n_dup_earlier", LongType(), False),
+            StructField("keep", BooleanType(), False),
+        ]
     )
 
     def cell_kernel(table: pa.Table) -> pa.Table:
-        ids = table["_id"].to_numpy()
-        m = _matrix(table["_v"])
+        ids = table[id_col].to_numpy()
+        m = _matrix(table[vec_col])
         i, j, _ = _cosine_hits(m, m, threshold, 6)
         # per-vector earlier-neighbor counts: hits (i, j) with ids[i] < ids[j]
         counts = np.bincount(j[ids[i] < ids[j]], minlength=len(ids))
-        keep = counts > 0
         return pa.table(
-            {"_idb": ids[keep].astype("int64"), "n_dup_earlier": counts[keep]}
+            {
+                id_col: table[id_col],
+                "cell": table["cell"],
+                "n_dup_earlier": counts,
+                "keep": counts == 0,
+            }
         )
 
-    dupc = assigned.groupBy("cell").applyInArrow(cell_kernel, dup_schema)
-    return (
-        assigned.join(dupc, assigned["_id"] == dupc["_idb"], "left")
-        .select(
-            F.col("_id").alias(id_col),
-            "cell",
-            F.coalesce(F.col("n_dup_earlier"), F.lit(0)).alias("n_dup_earlier"),
-            (F.coalesce(F.col("n_dup_earlier"), F.lit(0)) == 0).alias("keep"),
-        )
-    )
+    return assigned.groupBy("cell").applyInArrow(cell_kernel, out_schema)
 
 
 def lsh_planes(n_planes: int, n_tables: int, dim: int) -> np.ndarray:

@@ -601,7 +601,10 @@ def dedup_lines(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     array with no aggregation — the row-local form is the right shape
     (zero shuffle, embarrassingly parallel)."""
     lines = F.split(F.col(text_col), "\n")
-    kept = F.filter(lines, lambda x, i: F.array_position(lines, x) == i + 1)
+    # the lambda reads the lines bound once, never re-splitting per line
+    kept = _bound(
+        lines, lambda ls: F.filter(ls, lambda x, i: F.array_position(ls, x) == i + 1)
+    )
     return df.select(
         F.col(id_col),
         F.array_join(kept, "\n").alias("clean_text"),
@@ -1021,8 +1024,12 @@ def ngram_perplexity(df: DataFrame, id_col: str, text_col: str, ref_col) -> Data
     derives from the persisted bigram table, not a rescan); V enters as a
     broadcast 1-row crossJoin. Scoring is one keyed join of the corpus
     bigram stream against the model (vocab-scale build side — Spark
-    picks broadcast vs shuffle by stats) plus one per-doc aggregation.
-    Nothing is driver-side; nothing is quadratic.
+    picks broadcast vs shuffle by stats) plus one aggregation per
+    (doc, is_ref). The stream is an ``explode_outer``, so a doc with no
+    bigrams keeps one row with a NULL log-probability, which
+    ``n_bigrams`` does not count: the answer needs no join back to a
+    second read of the input. The model and the scoring share that one
+    stream. Nothing is driver-side; nothing is quadratic.
 
     Float note: the per-doc mean of log2 terms is an unordered double sum,
     published at 4 decimals — same tolerance class as the drift
@@ -1052,15 +1059,16 @@ def ngram_perplexity(df: DataFrame, id_col: str, text_col: str, ref_col) -> Data
         words.alias("_w"),
     )
 
-    def bigram_rows(rows: DataFrame, *keep: str) -> DataFrame:
-        # not explode: Catalyst infers `size(_bg) > 0` from it, a filter that
-        # evaluates the interpreted bigram lambda again
-        g = rows.select(*keep, F.explode_outer("_bg").alias("g"))
-        return g.filter(F.col("g").isNotNull()).select(*keep, "g.w1", "g.w2")
-
-    ref_occ = bigram_rows(base.filter("is_ref"))
+    # not explode: Catalyst infers `size(_bg) > 0` from it, a filter that
+    # evaluates the interpreted bigram lambda again. A doc with no bigrams
+    # keeps one row, whose w1 is NULL (split words never are)
+    occ = base.select("_id", "is_ref", F.explode_outer("_bg").alias("g")).select(
+        "_id", "is_ref", "g.w1", "g.w2"
+    )
     bg = persist_tracked(
-        ref_occ.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("_c12"))
+        occ.filter(F.col("is_ref") & F.col("w1").isNotNull())
+        .groupBy("w1", "w2")
+        .agg(F.count(F.lit(1)).alias("_c12"))
     )
     ctx = bg.groupBy("w1").agg(F.sum("_c12").alias("_c1"))
     vocab = (
@@ -1069,35 +1077,22 @@ def ngram_perplexity(df: DataFrame, id_col: str, text_col: str, ref_col) -> Data
         .agg(F.countDistinct("w").cast("double").alias("_v"))
     )
 
-    occ = bigram_rows(base, "_id")
-    scored = (
+    lp = F.log2(
+        (F.coalesce(F.col("_c12"), F.lit(0)) + F.lit(_ADD_K))
+        / (
+            F.coalesce(F.col("_c1"), F.lit(0))
+            + F.lit(_ADD_K) * (F.col("_v") + F.lit(1.0))
+        )
+    )
+    return (
         occ.join(bg, ["w1", "w2"], "left")
         .join(ctx, ["w1"], "left")
         .crossJoin(F.broadcast(vocab))
-        .select(
-            "_id",
-            (
-                F.log2(
-                    (F.coalesce(F.col("_c12"), F.lit(0)) + F.lit(_ADD_K))
-                    / (
-                        F.coalesce(F.col("_c1"), F.lit(0))
-                        + F.lit(_ADD_K) * (F.col("_v") + F.lit(1.0))
-                    )
-                )
-            ).alias("_lp"),
+        .select("_id", "is_ref", F.when(F.col("w1").isNotNull(), lp).alias("_lp"))
+        .groupBy("_id", "is_ref")
+        .agg(
+            F.count("_lp").alias("n_bigrams"),
+            F.round(F.pow(F.lit(2.0), -F.avg("_lp")), 4).alias("ppl"),
         )
-    )
-    per = scored.groupBy("_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_bigrams"),
-        F.round(F.pow(F.lit(2.0), -F.avg("_lp")), 4).alias("ppl"),
-    )
-    return (
-        base.select("_id", "is_ref")
-        .join(per, "_id", "left")
-        .select(
-            F.col("_id").alias(id_col),
-            "is_ref",
-            F.coalesce(F.col("n_bigrams"), F.lit(0)).alias("n_bigrams"),
-            "ppl",
-        )
+        .withColumnRenamed("_id", id_col)
     )

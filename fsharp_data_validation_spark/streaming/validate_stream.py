@@ -11,8 +11,9 @@ Additions here:
   the stateful control-chart rate anomaly;
 - ``foreachBatch`` writer so violations/valid rows can go to any batch sink
   (parquet/Iceberg). ``foreachBatch`` is at-least-once: a micro-batch
-  replayed after a failure is written again, and ``run_stream_to_parquet``
-  appends, so a replay duplicates its rows.
+  replayed after a failure is written again, so ``run_stream_to_parquet``
+  overwrites each micro-batch's own ``batch_id=<id>`` directory and a
+  replay replaces its rows instead of duplicating them.
 
 ``run_available_now`` drives every "stream equals batch" pin to its batch
 answer: each monitor has a driver query sharing its batch twin's oracle
@@ -77,13 +78,15 @@ def run_stream_to_parquet(
     checkpoint_dir: str,
 ):
     """Drive the stream with foreachBatch writing violations to parquet;
-    processes the backlog (``availableNow``) and stops. Each micro-batch
-    APPENDS to ``out_dir`` and ``foreachBatch`` is at-least-once, so a
-    micro-batch replayed after a failure duplicates its violation rows."""
+    processes the backlog (``availableNow``) and stops. Micro-batch ``id``
+    overwrites ``out_dir/batch_id=<id>``: ``foreachBatch`` is
+    at-least-once, and a micro-batch replayed after a failure (its offsets
+    logged, its commit not) rewrites the same rows in place. Read
+    ``out_dir`` as one table; ``batch_id`` is its partition column."""
     _, violations = validate_stream(stream_df, suite, key_cols)
 
     def write_batch(batch_df: DataFrame, batch_id: int):
-        batch_df.write.mode("append").parquet(out_dir)
+        batch_df.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
 
     return (
         violations.writeStream.foreachBatch(write_batch)

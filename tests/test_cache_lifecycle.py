@@ -76,8 +76,8 @@ def test_drift_and_sampling_grids_release(spark):
 
 def test_window_total_operators_persist_nothing(spark):
     """Operators that read the totals of a small aggregate from a window
-    over it, or whose branches exchange reuse reads once, leave no tracked
-    cache behind."""
+    over it, whose branches exchange reuse reads once, or whose kernel
+    returns every row of its group, leave no tracked cache behind."""
     from fsharp_data_validation_spark.operators.dedup import simhash_banded_pairs
     from fsharp_data_validation_spark.operators.drift import chi2_drift
     from fsharp_data_validation_spark.operators.sampling import (
@@ -90,9 +90,13 @@ def test_window_total_operators_persist_nothing(spark):
         moments_partition_sketches,
         moments_rollup,
     )
+    from fsharp_data_validation_spark.operators.similarity import semdedup
     from fsharp_data_validation_spark.operators.text import vocab_growth
 
     release_caches(spark, sweep_rdds=True)
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 5), 1.0]) for i in range(40)], "vec_id long, embedding array<float>"
+    )
     docs = _docs(spark).select(
         "*",
         (F.col("doc_id") % 3).cast("string").alias("grp"),
@@ -108,6 +112,7 @@ def test_window_total_operators_persist_nothing(spark):
         chi2_drift(docs, "grp", "ts"),
         vocab_growth(docs, "ts", "text"),
         simhash_banded_pairs(docs, "doc_id", "text"),
+        semdedup(vecs),
     ):
         assert out.collect()
     assert tracked_count() == 0

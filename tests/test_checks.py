@@ -1,7 +1,9 @@
 """The dataset-level checks (``operators/checks.py``): profile-driven
-constraint suggestion and the control-chart rate anomaly, pinned on
-hand-built fixtures; the sf0.01 DuckDB oracles cover the derived-table
-scale."""
+constraint suggestion, the control-chart rate anomaly and check-name
+validation, pinned on hand-built fixtures; the sf0.01 DuckDB oracles cover
+the derived-table scale."""
+
+import pytest
 
 
 def test_suggest_constraints_kinds_and_guards(spark):
@@ -121,3 +123,14 @@ def test_rate_anomaly_control_chart(spark):
     after = out[10]
     assert after["sd_rate"] > 0 and after["z"] is not None
     assert abs(after["z"]) < 3.0 and after["anomaly"] is False
+
+
+def test_check_name_charset_validated():
+    from pyspark.sql import functions as F
+
+    from fsharp_data_validation_spark.operators.checks import Check, completeness
+
+    Check("ok_name-1.x", completeness("text"), ">=", 0.9)  # fine
+    for bad in ("bad'name", "", "semi;colon", 'dq"uote', "new\nline"):
+        with pytest.raises(ValueError):
+            Check(bad, F.count(F.lit(1)), ">=", 0.0)

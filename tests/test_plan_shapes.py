@@ -408,6 +408,26 @@ def test_vocab_growth_scans_once(spark, sf):
     assert len(re.findall(r"Relation.*parquet", optimized)) <= 1
 
 
+def test_per_row_operators_answer_from_their_aggregate(spark, sf):
+    """dsir_weights, ngram_perplexity and semdedup build each row's answer
+    in the pass that reads their input, with no join back to a second read
+    of it for the id column or the rows that have no grams. The docs
+    source is a 3-branch union: dsir's bucket model and its score read it
+    once each. Perplexity's text ends at its persisted model's nested plan,
+    so the 6 are the scoring stream and the model (its vocabulary read
+    comes after). semdedup's one grouped pass reads the 2-branch vectors
+    source once."""
+    import __spark_entry__ as e
+    from fsharp_data_validation_spark.cache import release_caches
+
+    for q, scans in ((e.q_dsir_weights, 6), (e.q_ngram_perplexity, 6), (e.q_semdedup, 2)):
+        release_caches(spark, sweep_rdds=True)
+        df = q(spark, sf)
+        df.collect()
+        assert _final_scans(df) == scans, q.__name__
+    release_caches(spark, sweep_rdds=True)
+
+
 def test_token_count_bpe_single_regex_no_exchange(spark, sf):
     """token_count_bpe must evaluate the (expensive) alternation regex ONCE
     per row and stay row-local: exactly one regexp_extract_all in the

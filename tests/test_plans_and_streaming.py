@@ -1,7 +1,8 @@
-"""Tests for checkpoint-resume (plans.manifest), the spark-submit job
-surface, the foreachBatch parquet writer of the streaming surface (it shares
-this file's manifest fixtures ``_df``/``SCHEMA``), and multimodal plumbing.
-The "stream equals batch" pins live in test_streaming.py."""
+"""Tests for checkpoint-resume (plans.manifest, legacy-pin grace
+included), the spark-submit job surface, the foreachBatch parquet writer of
+the streaming surface (it shares this file's manifest fixtures
+``_df``/``SCHEMA``), and multimodal plumbing. The "stream equals batch"
+pins live in test_streaming.py."""
 
 import json
 import os
@@ -244,6 +245,44 @@ def test_streaming_validation(spark, tmp_path):
     }
     assert ("c1", "role", "role_enum") in got
     assert ("c2", "text", "text_required") in got
+
+
+def test_streaming_sink_replay_adds_no_rows(spark, tmp_path):
+    """A micro-batch replayed after a restart (its offsets logged, its
+    commit file gone) rewrites its own ``batch_id=`` directory: the sink
+    holds the same rows as before the restart, none twice."""
+    from fsharp_data_validation_spark.streaming.validate_stream import (
+        run_stream_to_parquet,
+    )
+
+    src, viol, ckpt = (str(tmp_path / d) for d in ("src", "viol", "ckpt"))
+    for part in "ab":  # one file each
+        one = _df(spark).filter(F.col("part") == part).drop("part").coalesce(1)
+        one.write.mode("append").parquet(src)
+    no_part = StructType([f for f in SCHEMA.fields if f.name != "part"])
+
+    def run():
+        stream = (
+            spark.readStream.schema(no_part)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        q = run_stream_to_parquet(
+            stream, transcript_row_suite(), ["conv_id", "turn_idx"], viol, ckpt
+        )
+        q.awaitTermination(120)
+        rows = spark.read.parquet(viol).select("conv_id", "turn_idx", "path", "code")
+        return sorted(tuple(r) for r in rows.collect())
+
+    first = run()
+    assert len(first) == 2
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    assert last == 1  # two micro-batches: the replay redoes the second only
+    for f in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, f)):
+            os.remove(os.path.join(commits, f))
+    assert run() == first
 
 
 def _fake_image_payload(width: int, height: int, channels: int, seed: int) -> bytes:
@@ -1005,3 +1044,75 @@ def test_diff_runs_statuses(spark, tmp_path):
     assert got[("role", "enum")] == (3, 7, 4, "increased")
     assert got[("ts", "gap")] == (2, 0, -2, "resolved")
     assert got[("tool", "ref")] == (0, 4, 4, "new")
+
+
+def test_manifest_legacy_global_pin_not_drifted(spark, tmp_path):
+    """A manifest written before per-partition pins existed recorded the
+    table-global pin on every entry. Resuming over an UNCHANGED
+    hive-partitioned input must not flag those entries as drifted
+    (ADVICE r3: plans/manifest.py drifted_partitions)."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from fsharp_data_validation_spark.operators.transcript_suite import (
+        transcript_row_suite,
+    )
+    from fsharp_data_validation_spark.plans.manifest import (
+        ValidationRun,
+        parquet_snapshot,
+    )
+    from fsharp_data_validation_spark.sources.synth import synth_transcripts
+
+    src = str(tmp_path / "legacy_src")
+    out = str(tmp_path / "legacy_out")
+    df = synth_transcripts(spark, 200, parallelism=2).withColumn(
+        "part", (F.crc32(F.col("conv_id")) % 3).cast("string")
+    )
+    df.write.mode("overwrite").partitionBy("part").parquet(src)
+
+    def mk(**kw):
+        return ValidationRun(
+            transcript_row_suite(),
+            out,
+            ["conv_id", "turn_idx"],
+            "part",
+            input_path=src,
+            **kw,
+        )
+
+    run = mk()
+    assert run.partition_snapshots  # hive layout detected -> per-partition pins
+    run.run(spark.read.parquet(src))
+    assert mk().drifted_partitions() == []
+
+    # simulate a LEGACY manifest: rewrite every entry's pin to the global pin
+    global_pin = parquet_snapshot(src)
+    for name in os.listdir(run.manifest_dir):
+        p = os.path.join(run.manifest_dir, name)
+        with open(p) as f:
+            doc = json.load(f)
+        doc["input_snapshot"] = global_pin
+        with open(p, "w") as f:
+            json.dump(doc, f)
+
+    # unchanged input: grace applies, clean no-op resume (no SnapshotDriftError)
+    resumed = mk()  # default on_drift='error'
+    assert resumed.drifted_partitions() == []
+    assert resumed.run(spark.read.parquet(src)) == []
+
+    # a genuine change still drifts legacy entries — ALL of them, since a
+    # table-global pin cannot localize the change (conservative fallback)
+    one_part = os.path.join(src, "part=0")
+    data_files = [
+        n for n in os.listdir(one_part) if not n.startswith((".", "_"))
+    ]
+    os.utime(os.path.join(one_part, data_files[0]))  # mtime bump -> new pin
+    assert mk().drifted_partitions() == ["0", "1", "2"]
+
+    # re-pin with per-partition pins (revalidate), then change ONE partition:
+    # drift is now exact — only the rewritten partition is flagged
+    mk(on_drift="revalidate").run(spark.read.parquet(src))
+    assert mk().drifted_partitions() == []
+    os.utime(os.path.join(one_part, data_files[0]))
+    assert mk().drifted_partitions() == ["0"]

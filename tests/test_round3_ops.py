@@ -209,7 +209,9 @@ def test_benford_digits_and_chi2(spark):
 
     vals = [1, 10, 100, 1000, 2, 25, 300, 9, 95, -5, 0]  # <=0 dropped
     df = spark.createDataFrame([(v,) for v in vals], "v long")
-    got = {r["digit"]: r for r in benford_check(df, "v", round_to=6).collect()}
+    out = benford_check(df, "v", round_to=6)
+    assert dict(out.dtypes)["digit"] == "bigint"  # the oracle's BIGINT
+    got = {r["digit"]: r for r in out.collect()}
     assert set(got) == set(range(1, 10))  # full spine, zeros included
     assert got[1]["n"] == 4  # 1, 10, 100, 1000 all digit 1
     assert got[3]["n"] == 1 and got[9]["n"] == 2

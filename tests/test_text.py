@@ -47,6 +47,21 @@ def test_ngram_perplexity_splits_text_once(spark):
     assert bg.count("split(") == 1, bg
 
 
+def test_dedup_lines_splits_text_once(spark):
+    """``dedup_lines``' filter lambda reads the lines bound outside it, so
+    the text is not split again for every line it keeps or drops."""
+    import re
+
+    from fsharp_data_validation_spark.operators.text import dedup_lines
+
+    df = spark.createDataFrame([(1, "a\nb\na")], "doc_id int, text string")
+    out = dedup_lines(df, "doc_id", "text")
+    plan = out._jdf.queryExecution().analyzed().toString()
+    filters = re.findall(r"filter\((.*?) AS ", plan, re.S)
+    assert filters and not [f for f in filters if "split(" in f], filters
+    assert [tuple(r) for r in out.collect()] == [(1, "a\nb", 3, 1)]
+
+
 def test_ngram_perplexity_builds_bigrams_once_per_branch(spark):
     """In the optimized plan the interpreted bigram ``transform`` sits in
     one Project per branch: no Filter holds it (Catalyst infers
@@ -389,3 +404,163 @@ def test_ngram_perplexity_reference_model(spark):
 
     # analytic check for the OOV level: -mean log2(1/(V+1)) = log2(3)
     assert abs(math.log2(3.0) - math.log2(out[4]["ppl"])) < 1e-9
+
+
+def test_bpe_token_count_matches_python_spec(spark):
+    """The JVM regex alternation must implement greedy longest-match
+    exactly: pin against a direct python re.findall of the same pattern
+    (leftmost-first semantics are shared by java.util.regex, RE2 and
+    python re for an identical pattern string), plus hand-computed cases."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from fsharp_data_validation_spark.operators.text import (
+        bpe_pattern,
+        bpe_token_count_col,
+    )
+
+    pat = re.compile(bpe_pattern())
+    texts = [
+        "the table scan window value query",
+        "a b  c",
+        "",
+        None,
+        "THE TABLE",  # lowercased before matching
+        "tablescan queueing",
+        "x" * 40,
+        "unicode éè 中文 \U0001f600 ok",
+        "punct,uation! and-dashes_under",
+    ]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, t string")
+    got = {
+        r["i"]: r["n"]
+        for r in df.select("i", bpe_token_count_col("t").alias("n")).collect()
+    }
+    for i, t in enumerate(texts):
+        want = 0 if t is None else len(pat.findall(t.lower()))
+        assert got[i] == want, (t, got[i], want)
+    assert got[6] == 40  # no piece matches 'xxxx' -> one token per char
+
+
+def test_bpe_vocab_rejects_unsafe_pieces():
+    import pytest as _pytest
+
+    from fsharp_data_validation_spark.operators.text import bpe_pattern
+
+    with _pytest.raises(ValueError):
+        bpe_pattern(["ok", "bad|piece"])
+    with _pytest.raises(ValueError):
+        bpe_pattern(["Upper"])
+
+
+def test_pack_windows_bpe_parity(spark):
+    """pack_context_windows(tokenizer='bpe') must run the identical greedy
+    recurrence over subword counts: replay the packing in python from the
+    BPE counts and compare chunk assignments exactly."""
+    from pyspark.sql import functions as F
+
+    from fsharp_data_validation_spark.operators.text import (
+        bpe_token_count_col,
+        pack_context_windows,
+    )
+
+    rows = []
+    texts = [
+        "the table scan window",
+        "value query batch",
+        "a",
+        "tablescan queueing overflow beyond the budget for sure honestly",
+        "sort merge join",
+        "x y z",
+    ]
+    for c in ("c1", "c2"):
+        for i, t in enumerate(texts):
+            rows.append((c, i, t))
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
+
+    budget = 12
+    got = {
+        (r["conv_id"], r["turn_idx"]): (r["n_tokens"], r["chunk_id"])
+        for r in pack_context_windows(df, budget=budget, tokenizer="bpe").collect()
+    }
+    counts = {
+        r["turn_idx"]: r["n"]
+        for r in df.filter(F.col("conv_id") == "c1")
+        .select("turn_idx", bpe_token_count_col("text").alias("n"))
+        .collect()
+    }
+    # python replay of the greedy recurrence
+    for c in ("c1", "c2"):
+        chunk, acc = 1, 0
+        for i in range(len(texts)):
+            n = counts[i]
+            if acc > 0 and acc + n > budget:
+                chunk, acc = chunk + 1, 0
+            acc += n
+            assert got[(c, i)] == (n, chunk), (c, i, got[(c, i)], (n, chunk))
+
+
+def test_context_budget_bpe(spark):
+    from datetime import datetime
+
+    from fsharp_data_validation_spark.operators.crossrow import (
+        context_budget_violations,
+    )
+    from fsharp_data_validation_spark.operators.text import bpe_token_count_col
+
+    ts = datetime(2024, 1, 1)
+    rows = [
+        ("c1", 0, "user", "the table scan", None, ts),
+        ("c1", 1, "assistant", "tablescan queueing overflow", None, ts),
+        ("c1", 2, "user", "x", None, ts),
+    ]
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+    )
+    ns = [
+        r["n"]
+        for r in df.orderBy("turn_idx")
+        .select(bpe_token_count_col("text").alias("n"))
+        .collect()
+    ]
+    budget = ns[0] + ns[1]  # third turn crosses the line
+    out = context_budget_violations(df, budget=budget, tokenizer="bpe").collect()
+    assert [(r["turn_idx"], r["cum_tokens"]) for r in out] == [
+        (2, ns[0] + ns[1] + ns[2])
+    ]
+
+
+def test_bpe_token_count_unicode_fuzz(spark):
+    """Seeded random-string fuzz (ASCII + latin-1 + CJK + astral + spaces +
+    regex metacharacters in the TEXT) against the python re spec of the
+    same pattern — one Spark job for all examples."""
+    import random
+    import re
+
+    from fsharp_data_validation_spark.operators.text import (
+        bpe_pattern,
+        bpe_token_count_col,
+    )
+
+    rng = random.Random(99)
+    alphabet = (
+        [chr(c) for c in range(32, 127)]
+        + list("éèñüßÆŒ中文日本語한국어")
+        + ["\U0001f600", "\U0001f4a9", " ", "\t"]
+    )
+    texts = [
+        "".join(rng.choice(alphabet) for _ in range(rng.randrange(0, 120)))
+        for _ in range(300)
+    ]
+    pat = re.compile(bpe_pattern())
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "i int, t string"
+    )
+    got = {
+        r["i"]: r["n"]
+        for r in df.select("i", bpe_token_count_col("t").alias("n")).collect()
+    }
+    for i, t in enumerate(texts):
+        want = len(pat.findall(t.lower()))
+        assert got[i] == want, (repr(t), got[i], want)

@@ -274,7 +274,7 @@ MODES = {
         "`tools/bench_scaling.py gen_vecs`)",
         "vectors/sec",
         lambda spark, vecs, eval_side: [
-            # blocks bound applyInPandas task parallelism: 8 blocks capped
+            # blocks bound applyInArrow task parallelism: 8 blocks capped
             # the first run of this bench at 8 concurrent tiles and scored
             # 0.36 N->4N (postmortem in BENCH.md). Size blocks >= 4x the
             # largest parallelism level measured, as a cluster would.
@@ -330,10 +330,11 @@ MODES = {
     "dsir": Mode(
         DOCS,
         "scored docs/sec, DSIR hashed-n-gram importance weighting (10k buckets)",
-        "DSIR importance weighting (row-local unigram+bigram projection -> explode -> "
-        "map-side-combined conditional bucket counts (<=10k rows shuffled) -> "
-        "persisted KB bucket model broadcast back into a second gram explode -> "
-        "per-doc log-ratio hash aggregation) on the same synthetic corpus ({n:,} docs, "
+        "DSIR importance weighting (row-local unigram+bigram projection -> explode_outer "
+        "-> map-side-combined conditional bucket counts (<=10k rows shuffled) -> "
+        "window-totalled KB bucket model broadcast back into a second read of the gram "
+        "stream -> per-(doc, is_target) log-ratio hash aggregation, no join back to the "
+        "input) on the same synthetic corpus ({n:,} docs, "
         "~20% pseudo-target split, `tools/bench_scaling.py gen_docs`)",
         "docs/sec",
         # the pseudo-target label only gates the conditional counts, so any
@@ -345,10 +346,11 @@ MODES = {
         VECS,
         "semantically-deduped vectors/sec, SemDeDup (5,120 cells, GEMM kernels)",
         "SemDeDup semantic dedup (chunked-GEMM argmin assignment of every vector to "
-        "5,120 sampled-centroid cells via an Arrow pandas UDF -> one applyInPandas "
-        "GEMM per cell reducing the cosine matrix to earlier-neighbor counts in-kernel "
-        "(quadratic work in the largest cell only, ~100 vectors/cell; O(n) shuffle "
-        "bytes) -> keep-earliest flag per vector) on {n:,} x 64-dim synthetic vectors "
+        "5,120 sampled-centroid cells via an Arrow UDF -> one applyInArrow GEMM per "
+        "cell reducing the cosine matrix to earlier-neighbor counts in-kernel and "
+        "returning every vector of its cell with its keep-earliest flag (quadratic "
+        "work in the largest cell only, ~100 vectors/cell; O(n) shuffle bytes; "
+        "nothing persisted, no join back) on {n:,} x 64-dim synthetic vectors "
         "with planted near-dups (`tools/bench_scaling.py gen_vecs`)",
         "vectors/sec",
         lambda spark, vecs, centroids: [("semdedup", similarity.semdedup(
