@@ -1214,7 +1214,7 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE transitive closure)."""
     from fsharp_data_validation_spark.operators.dedup import near_dup_components
 
-    return near_dup_components(load_docs(spark, sf_dir), "doc_id", "text", 0.8)
+    return near_dup_components(load_docs(spark, sf_dir), "doc_id", "text")
 
 
 # independent spec of RAWV frame sampling: each sampled frame is
@@ -1257,7 +1257,7 @@ def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.encode(body, "UTF-8"),
     )
     media = d.select(F.col("doc_id").alias("media_id"), payload.alias("payload"))
-    frames = frame_sample(media, every_n=2)
+    frames = frame_sample(media)
     return frames.select(
         "media_id",
         "frame_idx",
@@ -1509,7 +1509,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     order is engine-portable."""
     from fsharp_data_validation_spark.operators.text import tfidf_top_terms
 
-    return tfidf_top_terms(load_docs(spark, sf_dir), "doc_id", "text", 3)
+    return tfidf_top_terms(load_docs(spark, sf_dir), "doc_id", "text")
 
 
 @query(with_vecs(
@@ -1813,7 +1813,7 @@ def q_cvm_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     max misses. Same one-scan conditional split as psi/ks/js/w1."""
     from fsharp_data_validation_spark.operators.drift import cvm_joined
 
-    return cvm_joined(_len_halves(spark, sf_dir), round_to=6)
+    return cvm_joined(_len_halves(spark, sf_dir))
 
 
 @query(with_transcripts(
@@ -1835,7 +1835,7 @@ def q_freq_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     companion to the HLL distinct-count rollup. k=1024 exceeds this corpus's
     vocabulary, so the summary is exact here (err_bound = 0) and the DuckDB
     oracle pins the rollup against exact counts; the n/(k+1) undercount
-    bound for k < vocab is pinned by tests/test_round3_ops.py."""
+    bound for k < vocab is pinned by tests/test_stats.py."""
     from fsharp_data_validation_spark.operators.stats import (
         mg_partition_sketches,
         mg_rollup,
@@ -1849,7 +1849,7 @@ def q_freq_items(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(F.split(F.col("text"), " ")).alias("token"),
         )
     )
-    return mg_rollup(mg_partition_sketches(t, "day", "token", k=1024), top=10)
+    return mg_rollup(mg_partition_sketches(t, "day", "token"), top=10)
 
 
 # moments: recompute Σ(x-μ)^k DIRECTLY on the raw rows — the
@@ -2036,7 +2036,7 @@ def q_top_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     lexicographically on both engines."""
     from fsharp_data_validation_spark.operators.text import top_ngram_fraction
 
-    return top_ngram_fraction(load_docs(spark, sf_dir), "doc_id", "text", n=2)
+    return top_ngram_fraction(load_docs(spark, sf_dir), "doc_id", "text")
 
 
 #: shared by chi2_by_day (batch) and stream_chi2 (streaming)
@@ -2149,7 +2149,7 @@ def q_dup_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     the top-1-n-gram rule misses."""
     from fsharp_data_validation_spark.operators.text import dup_ngram_fraction
 
-    return dup_ngram_fraction(load_docs(spark, sf_dir), "doc_id", "text", n=3)
+    return dup_ngram_fraction(load_docs(spark, sf_dir), "doc_id", "text")
 
 
 @query(with_docs(
@@ -2402,7 +2402,7 @@ def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     are the classic accidental hot spot)."""
     from fsharp_data_validation_spark.operators.stats import skew_report
 
-    return skew_report(_transcripts(spark, sf_dir), ["conv_id", "role"], top=5)
+    return skew_report(_transcripts(spark, sf_dir), ["conv_id", "role"])
 
 
 # closed form of the per-doc WAV parameters q_audio_meta built the
@@ -2492,7 +2492,7 @@ def q_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         near_dup_components,
     )
 
-    comp = near_dup_components(load_docs(spark, sf_dir), "doc_id", "text", 0.8)
+    comp = near_dup_components(load_docs(spark, sf_dir), "doc_id", "text")
     return cluster_size_histogram(comp, "component")
 
 
@@ -2576,7 +2576,7 @@ def q_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     a single-task global sort (operators/sampling.py:global_shuffle)."""
     from fsharp_data_validation_spark.operators.sampling import global_shuffle
 
-    return global_shuffle(load_docs(spark, sf_dir), "doc_id", 64).select(
+    return global_shuffle(load_docs(spark, sf_dir), "doc_id").select(
         "doc_id", "rank"
     )
 
@@ -2684,9 +2684,9 @@ def q_temp_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash filter (operators/sampling.py:temperature_sample)."""
     from fsharp_data_validation_spark.operators.sampling import temperature_sample
 
-    return temperature_sample(
-        load_docs(spark, sf_dir), "lang", "doc_id", 0.7, 0.8
-    ).select("doc_id", "lang", "keep_rate")
+    return temperature_sample(load_docs(spark, sf_dir), "lang", "doc_id").select(
+        "doc_id", "lang", "keep_rate"
+    )
 
 
 @query(with_docs(
@@ -2748,7 +2748,7 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the exact-pairs oracle (high-recall banding)."""
     from fsharp_data_validation_spark.operators.dedup import minhash_lsh_pairs
 
-    return minhash_lsh_pairs(load_docs(spark, sf_dir), "doc_id", "text", 0.8)
+    return minhash_lsh_pairs(load_docs(spark, sf_dir), "doc_id", "text")
 
 
 _SIMHASH_BITS_SQL = ", ".join(
@@ -2784,7 +2784,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """60-bit SimHash near-dup pairs (hamming <= 3)."""
     from fsharp_data_validation_spark.operators.dedup import simhash_banded_pairs
 
-    return simhash_banded_pairs(load_docs(spark, sf_dir), "doc_id", "text", 3).select(
+    return simhash_banded_pairs(load_docs(spark, sf_dir), "doc_id", "text").select(
         "id_a", "id_b", F.col("hamming").cast("int").alias("hamming")
     )
 
@@ -3307,23 +3307,20 @@ _ASOF_ORACLE = (
 )
 
 
-def _error_prev_click(
-    spark: SparkSession, sf_dir: str, join: Callable[..., DataFrame], **kw
-) -> DataFrame:
-    """Each 'error' event with the latest 'click' by the same user at or
-    before it, found by the as-of operator ``join`` (``kw`` are its own
-    options), as (event_id, prev_click_id, gap_us)."""
+def _errors_and_clicks(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
+    """The as-of twins' two sides: the 'error' and the 'click' events, each
+    as (event_id, user_id, ts)."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    errors = ev.filter(F.col("event_type") == "error").select(
-        "event_id", "user_id", "ts"
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts"
-    )
-    joined = join(
-        errors, clicks, by=["user_id"], right_cols=["event_id", "ts"],
-        tie_col="event_id", **kw,
-    )
+    return [
+        ev.filter(F.col("event_type") == t).select("event_id", "user_id", "ts")
+        for t in ("error", "click")
+    ]
+
+
+def _prev_click(joined: DataFrame) -> DataFrame:
+    """An as-of join of the errors to the latest click by the same user at
+    or before each (``right_cols=["event_id", "ts"]``), as (event_id,
+    prev_click_id, gap_us)."""
     return joined.select(
         "event_id",
         F.col("event_id_asof").alias("prev_click_id"),
@@ -3341,7 +3338,10 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     window — one shuffle, no range-join row amplification)."""
     from fsharp_data_validation_spark.operators.temporal import asof_join
 
-    return _error_prev_click(spark, sf_dir, asof_join)
+    errors, clicks = _errors_and_clicks(spark, sf_dir)
+    return _prev_click(asof_join(
+        errors, clicks, by=["user_id"], right_cols=["event_id", "ts"], tie_col="event_id"
+    ))
 
 
 # independent spec: a plain correlated BETWEEN join — the obviously-
@@ -3613,7 +3613,11 @@ def q_asof_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     the real event timeline rather than degenerating to one bucket."""
     from fsharp_data_validation_spark.operators.temporal import asof_join_salted
 
-    return _error_prev_click(spark, sf_dir, asof_join_salted, bucket_seconds=3600)
+    errors, clicks = _errors_and_clicks(spark, sf_dir)
+    return _prev_click(asof_join_salted(
+        errors, clicks, by=["user_id"], right_cols=["event_id", "ts"], tie_col="event_id",
+        bucket_seconds=3600,
+    ))
 
 
 # independent spec of sliding-window chunking: DuckDB 1-based
@@ -3668,7 +3672,7 @@ def q_chunk_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/text.py:chunk_text)."""
     from fsharp_data_validation_spark.operators.text import chunk_text
 
-    return chunk_text(load_docs(spark, sf_dir), "doc_id", "text", 16, 8)
+    return chunk_text(load_docs(spark, sf_dir), "doc_id", "text")
 
 
 @query(with_docs(
@@ -3753,7 +3757,7 @@ def q_stream_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     windowed_drift_stream) over daily event-time windows against the
     whole-table text-length baseline: the stream form of psi_by_day."""
     return _len_stream_days(spark, sf_dir, lambda s, base: windowed_drift_stream(
-        s, base, "text_len", _LEN_WIDTH, _LEN_BUCKETS, "ts", "1 day", "1 hour"
+        s, base, "text_len", _LEN_WIDTH, _LEN_BUCKETS, "ts"
     ))
 
 
@@ -3762,7 +3766,7 @@ def q_stream_w1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Wasserstein-1 drift (streaming/validate_stream.py:
     windowed_w1_stream), the stream form of w1_by_day."""
     return _len_stream_days(spark, sf_dir, lambda s, base: windowed_w1_stream(
-        s, base, "text_len", _LEN_WIDTH, _LEN_BUCKETS, "ts", "1 day", "1 hour"
+        s, base, "text_len", _LEN_WIDTH, _LEN_BUCKETS, "ts"
     ))
 
 
@@ -3774,7 +3778,7 @@ def q_stream_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _transcripts(spark, sf_dir)
     base = t.groupBy(F.col("role").alias("cat")).agg(F.count(F.lit(1)).alias("n"))
     return _stream_days(
-        t, "day", lambda s: windowed_chi2_stream(s, base, "role", "ts", "1 day", "1 hour")
+        t, "day", lambda s: windowed_chi2_stream(s, base, "role", "ts")
     )
 
 
@@ -3793,7 +3797,7 @@ def q_stream_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     window start), the stream_suite evidence design applied to the
     stateful surface."""
     t = _transcripts(spark, sf_dir).withColumn("ts", F.col("ts").cast("timestamp"))
-    daily = windowed_rates_to_sink(t, transcript_row_suite(), "ts", "1 day").orderBy(
+    daily = windowed_rates_to_sink(t, transcript_row_suite(), "ts").orderBy(
         "win_start"
     )
     # two parts (first half of the series, then the second): two genuine
@@ -3805,9 +3809,7 @@ def q_stream_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = daily.collect()
     half = max(1, len(rows) // 2)
     parts = [spark.createDataFrame(p, daily.schema) for p in (rows[:half], rows[half:])]
-    out = run_available_now(
-        parts, lambda s: windowed_rate_anomaly_stream(s, z_threshold=2.0)
-    )
+    out = run_available_now(parts, windowed_rate_anomaly_stream)
     return out.select(
         F.col("win_start").cast("date").alias("day"),
         "n_rows",

@@ -7,7 +7,7 @@ field_failure_map)`` loses the value.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any, Callable, List, Optional, Tuple
 
 from .failures import FailureMap, merge_failures

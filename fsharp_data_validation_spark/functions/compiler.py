@@ -35,14 +35,14 @@ parallel at any scale.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field as dc_field, replace as dc_replace
+from dataclasses import dataclass, replace as dc_replace
 from functools import reduce
 from operator import add, and_, or_
 from typing import Callable, List, Optional, Sequence, Tuple, Union
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..core.names import render_path, to_camel_case
+from ..core.names import to_camel_case
 from ..core.serialize import escape_json
 
 ColumnLike = Union[Column, str]
@@ -616,10 +616,6 @@ class Suite:
             )
         )
         return self
-
-    @property
-    def constraints(self) -> List[Constraint]:
-        return list(self._constraints)
 
     @property
     def codes(self) -> List[str]:

@@ -132,15 +132,12 @@ def schema_report(spark: SparkSession, df: DataFrame) -> DataFrame:
     return spark.createDataFrame(rows, REPORT_SCHEMA)
 
 
-def conform_schema(
-    df: DataFrame,
-    expected: StructType = TRANSCRIPT_CONTRACT,
-    on_extra: str = "drop",
-) -> DataFrame:
+def conform_schema(df: DataFrame, expected: StructType = TRANSCRIPT_CONTRACT) -> DataFrame:
     """Project ``df`` onto the contract: contract column order, safe
-    widening casts applied, extras dropped (or ``on_extra='error'``).
-    Raises ``ValueError`` on missing columns or non-widening type changes —
-    schema drift must fail loudly BEFORE the constraint suite runs."""
+    widening casts applied, extras dropped (``schema_violations`` reports
+    them, and the job's ``--schema enforce`` rejects them there). Raises
+    ``ValueError`` on missing columns or non-widening type changes — schema
+    drift must fail loudly BEFORE the constraint suite runs."""
     from pyspark.sql import functions as F
 
     actual = {f.name: f for f in df.schema.fields}
@@ -162,9 +159,6 @@ def conform_schema(
                 f"column {f.name}: cannot conform "
                 f"{a.dataType.simpleString()} -> {f.dataType.simpleString()}"
             )
-    extras = [n for n in actual if n not in {f.name for f in expected.fields}]
-    if extras and on_extra == "error":
-        problems.append(f"extra columns {sorted(extras)}")
     if problems:
         raise ValueError("schema contract violations: " + "; ".join(problems))
     return df.select(*cols)

@@ -345,9 +345,7 @@ def rate_anomaly(
 _BENFORD = [0.0] + [math.log10(1.0 + 1.0 / d) for d in range(1, 10)]
 
 
-def benford_check(
-    df: DataFrame, value_col: str, round_to: int = 4
-) -> DataFrame:
+def benford_check(df: DataFrame, value_col: str) -> DataFrame:
     """First-significant-digit distribution of a positive integer column vs
     Benford's law, with the chi-square distance attached.
 
@@ -363,9 +361,9 @@ def benford_check(
     then a window over those 9 rows for the total and the shared chi².
     O(1) output at any scale.
 
-    Returns (digit, n, obs_p, exp_p, chi2) — 9 rows always; ``chi2`` =
-    Σ(n_d − N·p_d)²/(N·p_d) over ALL digits, constant across rows (0 on
-    empty input)."""
+    Returns (digit, n, obs_p, exp_p, chi2) — 9 rows always, rounded to 4
+    decimals; ``chi2`` = Σ(n_d − N·p_d)²/(N·p_d) over ALL digits, constant
+    across rows (0 on empty input)."""
     from pyspark.sql import Window
 
     v = F.col(value_col).cast("bigint")
@@ -402,8 +400,8 @@ def benford_check(
         .select(
             "digit",
             F.col("n").cast("bigint").alias("n"),
-            F.round("_obs", round_to).alias("obs_p"),
-            F.round("_exp", round_to).alias("exp_p"),
-            F.round("_chi2", round_to).alias("chi2"),
+            F.round("_obs", 4).alias("obs_p"),
+            F.round("_exp", 4).alias("exp_p"),
+            F.round("_chi2", 4).alias("chi2"),
         )
     )

@@ -120,9 +120,7 @@ def conversation_flow_violations(df: DataFrame) -> DataFrame:
     )
 
 
-def context_budget_violations(
-    df: DataFrame, budget: int, tokenizer: str = "whitespace"
-) -> DataFrame:
+def context_budget_violations(df: DataFrame, budget: int) -> DataFrame:
     """Context-window budget validation: the running whitespace-token total
     of a conversation (ordered by turn) must stay within ``budget`` — the
     cross-row form of the reference's ``maxLength`` bound (Library.fs:80):
@@ -137,14 +135,12 @@ def context_budget_violations(
     (turn_idx, ts, role, text, tool) so tie handling is engine-portable:
     fully-identical rows are the only possible ties, and their cum values
     form the same multiset under any tiebreak. Tokens are counted by
-    ``operators/text.py:token_count_col`` (single-space split; NULL -> 0);
-    ``tokenizer="bpe"`` budgets in greedy-subword tokens instead (still a
-    column expr)."""
+    ``operators/text.py:token_count_col`` (single-space split; NULL -> 0)."""
     t = F.coalesce(F.col("text"), F.lit(""))
     o = F.coalesce(F.col("tool"), F.lit(""))
     from .text import token_count_col
 
-    n_tokens = token_count_col("text", tokenizer)
+    n_tokens = token_count_col("text", "whitespace")
     w = (
         Window.partitionBy("conv_id")
         .orderBy("turn_idx", "ts", "role", t, o)

@@ -26,8 +26,9 @@ Scale design (the reason these shapes were chosen):
 Every bucket join — the Jaccard prefix index, the MinHash bands, the
 SimHash signatures and chunks, and ``similarity.lsh_near_dup_pairs`` — is
 one ``_bucket_pairs`` self-join, and every shingle-set pair is verified by
-one ``_verify_sets``. The shingle size, the MinHash shape and the
-containment threshold are module constants: each has one value.
+one ``_verify_sets``. The shingle size, the MinHash shape, the near-dup
+Jaccard and containment thresholds, the SimHash hamming budget and the
+component rounds are module constants: each has one value.
 """
 
 from __future__ import annotations
@@ -45,7 +46,10 @@ from pyspark.sql import DataFrame, Window, functions as F
 SIMHASH_BITS = 60  # keep signatures positive in a signed 64-bit integer
 _SHINGLE_N = 3  # word 3-gram shingles, as the oracles' ``_SHINGLES_SQL``
 _NUM_HASHES, _BANDS = 32, 16  # MinHash: 16 bands x 2 rows
+_JACCARD_THRESHOLD = 0.8  # minhash_lsh_pairs and near_dup_components
 _CONTAINMENT_THRESHOLD = 0.8
+_MAX_HAMMING = 3  # simhash_banded_pairs: 4 chunks of 15 bits
+_CC_MAX_ITER = 20  # connected_components_star: star rounds at most
 _BUCKET_CAP = 100_000  # SimHash: distinct signatures per (band, key) bucket
 
 
@@ -220,12 +224,10 @@ def minhash_signatures(sets_df: DataFrame) -> DataFrame:
     return ex.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_lsh_pairs(
-    df: DataFrame, id_col: str, text_col: str, threshold: float = 0.8
-) -> DataFrame:
-    """MinHash + banded LSH candidate generation, exact-Jaccard verify.
-    Returns the same schema as ngram_jaccard_pairs — at high recall the two
-    agree, which is exactly what the oracle checks."""
+def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """MinHash + banded LSH candidate generation, exact-Jaccard verify at
+    ``_JACCARD_THRESHOLD``. Returns the same schema as ngram_jaccard_pairs —
+    at high recall the two agree, which is exactly what the oracle checks."""
     rows = _NUM_HASHES // _BANDS
     # reused by the signature build and both verify sides -> persist.
     # 32-bit shingle hashes: the LSH path's accuracy class already admits
@@ -258,7 +260,7 @@ def minhash_lsh_pairs(
         )
     )
     cand = _bucket_pairs(buckets, "doc_id", ["band", "bkey"]).distinct()
-    return _verify_sets(cand, sets_df, _jaccard, "sim", threshold)
+    return _verify_sets(cand, sets_df, _jaccard, "sim", _JACCARD_THRESHOLD)
 
 
 def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -312,11 +314,9 @@ def simhash_pairs(
     )
 
 
-def simhash_banded_pairs(
-    df: DataFrame, id_col: str, text_col: str, max_hamming: int = 3
-) -> DataFrame:
+def simhash_banded_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """EXACT SimHash near-dup pairs, sub-quadratic: the 60-bit signature is
-    split into ``max_hamming + 1`` chunks; by pigeonhole, any pair within
+    split into ``_MAX_HAMMING + 1`` chunks; by pigeonhole, any pair within
     the hamming budget agrees on at least one whole chunk, so candidates
     come from an equi-join on (chunk index, chunk value) instead of the
     all-pairs cross join. Candidates are then verified with the true
@@ -345,8 +345,8 @@ def simhash_banded_pairs(
     2. **Sub-band fallback**: a distinct-signature bucket measured above
        ``_BUCKET_CAP`` joins on (band, key, sub, subkey) instead — those
        signatures agree on chunk ``band``, so any pair within the budget
-       has all <= max_hamming differing bits in the 60 - chunk_bits
-       complement; splitting the complement into max_hamming + 1
+       has all <= _MAX_HAMMING differing bits in the 60 - chunk_bits
+       complement; splitting the complement into _MAX_HAMMING + 1
        sub-chunks pigeonholes again (one must be clean). Recall stays 1.0
        by construction.
 
@@ -356,7 +356,7 @@ def simhash_banded_pairs(
     with sub-banding as the residual guard for many-distinct-but-close
     signature distributions.
     """
-    bands = max_hamming + 1
+    bands = _MAX_HAMMING + 1
     chunk_bits = (SIMHASH_BITS + bands - 1) // bands
     mask = (1 << chunk_bits) - 1
     sig = simhash_signatures(df, id_col, text_col)
@@ -424,7 +424,7 @@ def simhash_banded_pairs(
     # verify is join-free: both signatures sit in the candidate row
     verified = cand.select(
         "ha", "hb", F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))).alias("hamming")
-    ).filter(F.col("hamming") <= max_hamming)
+    ).filter(F.col("hamming") <= _MAX_HAMMING)
     # expand verified signature pairs to member doc pairs (output-
     # proportional: one row per true near-dup pair)
     ma = sig.select(F.col("simhash").alias("ha"), F.col("doc_id").alias("_ida"))
@@ -454,12 +454,11 @@ def dedup_keep_first(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def near_dup_components(
-    df: DataFrame, id_col: str, text_col: str, threshold: float = 0.8
-) -> DataFrame:
+def near_dup_components(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Connected components of the near-dup pair graph — the clustering
     step of corpus dedup (pick one representative per near-dup cluster).
-    Pairs come from the exact prefix-filtered Jaccard join; components come
+    Pairs come from the exact prefix-filtered Jaccard join at
+    ``_JACCARD_THRESHOLD``; components come
     from alternating large-star/small-star contraction
     (``connected_components_star`` — O(log^2 n) rounds on ANY graph shape).
     Returns (id_col, component) for every doc; singletons label themselves:
@@ -468,12 +467,11 @@ def near_dup_components(
     at the end with label = self. Star contraction beat O(diameter)-round
     min-label propagation 5.0-5.6 s vs 12.6-25.6 s on the sf0.1 corpus
     (BENCH.md "connected-components algorithm choice")."""
-    pairs = ngram_jaccard_pairs(df, id_col, text_col, threshold).select(
+    pairs = ngram_jaccard_pairs(df, id_col, text_col, _JACCARD_THRESHOLD).select(
         "id_a", "id_b"
     )
     comp = connected_components_star(
-        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")),
-        max_iter=20,
+        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
     ).withColumnRenamed("node", "_n")
     return (
         df.select(F.col(id_col).alias("_n").cast("long"))
@@ -531,7 +529,7 @@ def _dedup_edges(e: DataFrame) -> DataFrame:
     return e.filter(F.col("u") != F.col("v")).distinct()
 
 
-def connected_components_star(edges: DataFrame, max_iter: int = 50) -> DataFrame:
+def connected_components_star(edges: DataFrame) -> DataFrame:
     """Connected components via alternating large-star / small-star rounds
     (Kiveris et al., "Connected Components in MapReduce and Beyond") — the
     adversarial-graph alternative to plain min-label propagation: converges
@@ -546,7 +544,7 @@ def connected_components_star(edges: DataFrame, max_iter: int = 50) -> DataFrame
     e = _dedup_edges(edges.select(F.col("u").cast("long"), F.col("v").cast("long")))
     e = e.localCheckpoint()
     prev_sig = None
-    for _ in range(max_iter):
+    for _ in range(_CC_MAX_ITER):
         # large-star: connect every strictly-larger neighbor of u to
         # m = min(N(u) ∪ {u})
         sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))

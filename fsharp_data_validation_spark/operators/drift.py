@@ -293,9 +293,7 @@ def js_by_group(
     )
 
 
-def w1_joined(
-    j: DataFrame, n_buckets: int, bucket_width: float = 1.0, round_to: int = 4
-) -> DataFrame:
+def w1_joined(j: DataFrame, n_buckets: int, bucket_width: float) -> DataFrame:
     """Wasserstein-1 (earth-mover) distance over a joined histogram
     (bucket, na, nb): for 1-D distributions W1 = integral |CDF_a - CDF_b|,
     which on fixed-width buckets is ``bucket_width * sum over ALL buckets
@@ -310,7 +308,7 @@ def w1_joined(
     )
     dj = full.join(j, "bucket", "left").fillna(0, ["na", "nb"])
     return dj.select(cdf_gap(*_joined_cols(cumulative=True)).alias("d")).agg(
-        F.round(F.sum("d") * F.lit(float(bucket_width)), round_to).alias("w1")
+        F.round(F.sum("d") * F.lit(float(bucket_width)), 4).alias("w1")
     )
 
 
@@ -357,7 +355,7 @@ def chi2_drift(df: DataFrame, cat_col: str, ts_col: str) -> DataFrame:
     return chi2_joined(split_category_counts(df, cat_col, ts_col))
 
 
-def chi2_joined(counts: DataFrame, round_to: int = 4) -> DataFrame:
+def chi2_joined(counts: DataFrame) -> DataFrame:
     """Pearson chi-square statistic for a (category, na, nb) contingency
     table — the categorical drift test PSI/KS can't express (they need an
     ordered or binned domain): the sum of ``chi2_cell``;
@@ -365,12 +363,12 @@ def chi2_joined(counts: DataFrame, round_to: int = 4) -> DataFrame:
     |categories|-row aggregate (window totals, no second data scan).
     Returns one row (chi2, dof)."""
     return counts.select(chi2_cell(*_joined_cols()).alias("term")).agg(
-        F.round(F.sum("term"), round_to).alias("chi2"),
+        F.round(F.sum("term"), 4).alias("chi2"),
         (F.count(F.lit(1)) - 1).cast("bigint").alias("dof"),
     )
 
 
-def cvm_joined(j: DataFrame, round_to: int = 4) -> DataFrame:
+def cvm_joined(j: DataFrame) -> DataFrame:
     """Two-sample Cramér-von Mises criterion over a joined histogram
     (bucket, na, nb): omega^2 = sum_b w_b * (F_a(b) - F_b(b))^2 with
     w_b = (na_b + nb_b) / (N_a + N_b) — the squared ECDF difference
@@ -381,11 +379,12 @@ def cvm_joined(j: DataFrame, round_to: int = 4) -> DataFrame:
     the drift family was missing.
 
     Shape: identical to ``ks_joined`` — windows over the <= n_buckets-row
-    joined histogram, one tiny final reduce. Returns a single row (cvm)."""
+    joined histogram, one tiny final reduce. Returns a single row (cvm),
+    rounded to 6 decimals."""
     ca, cb, ta, tb = _joined_cols(cumulative=True)
     w = (F.col("na") + F.col("nb")) / (ta + tb)
     return j.select((w * F.pow(cdf_gap(ca, cb, ta, tb), F.lit(2))).alias("term")).agg(
-        F.round(F.sum("term"), round_to).alias("cvm")
+        F.round(F.sum("term"), 6).alias("cvm")
     )
 
 

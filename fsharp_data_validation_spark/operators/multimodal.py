@@ -122,13 +122,13 @@ VIDEO_FRAME_SCHEMA = StructType(
 )
 
 
-def frame_sample(df: DataFrame, every_n: int = 30) -> DataFrame:
+def frame_sample(df: DataFrame) -> DataFrame:
     """Video frame sampling — REAL extraction for the RAWV raw-frame
-    container (uncompressed, frame-addressable by offset): every
-    ``every_n``-th frame (always including frame 0) is sliced out of the
-    payload bytes with numpy inside Arrow batches, one output row per
-    sampled frame. mapInPandas, partition-preserving, no shuffle; output
-    multiplicity = ceil(n_frames/every_n) per video.
+    container (uncompressed, frame-addressable by offset): every second
+    frame (always including frame 0) is sliced out of the payload bytes
+    with numpy inside Arrow batches, one output row per sampled frame.
+    mapInPandas, partition-preserving, no shuffle; output multiplicity =
+    ceil(n_frames/2) per video.
 
     Compressed codecs (H.264 etc.) remain NotImplementedError — no video
     library ships in this environment; a real decoder slots in behind this
@@ -154,7 +154,7 @@ def frame_sample(df: DataFrame, every_n: int = 30) -> DataFrame:
                 h = int.from_bytes(b[6:8], "big")
                 body = b[8:]
                 fs = w * h
-                for i in range(0, n, every_n):
+                for i in range(0, n, 2):
                     ids.append(mid)
                     idxs.append(i)
                     ws.append(w)

@@ -15,15 +15,14 @@ from .text import word_ngrams
 
 #: md5_int(hex_chars=15) is uniform on [0, 16**15).
 _MD5_15_MAX = 16 ** 15
+_SHUFFLE_BUCKETS = 64  # global_shuffle's hash buckets
 
 
-def hash_split(
-    df: DataFrame, id_col: str, train_pct: int = 80, salt: str = "split"
-) -> DataFrame:
+def hash_split(df: DataFrame, id_col: str, train_pct: int = 80) -> DataFrame:
     """df + ``split`` column ('train'/'test'): bucket = salted md5 of the
     id mod 100; bucket < train_pct => train. Salting decorrelates the split
     from any other hash use of the id."""
-    bucket = md5_int(F.col(id_col).cast("string"), salt=salt) % 100
+    bucket = md5_int(F.col(id_col).cast("string"), salt="split") % 100
     return df.withColumn(
         "split",
         F.when(bucket < train_pct, F.lit("train")).otherwise(F.lit("test")),
@@ -90,17 +89,11 @@ def quota_sample(df: DataFrame, group_col: str, id_col: str, rates: dict) -> Dat
     return df.filter(h < thresh)
 
 
-def temperature_sample(
-    df: DataFrame,
-    group_col: str,
-    id_col: str,
-    tau: float = 0.7,
-    target_frac: float = 1.0,
-) -> DataFrame:
+def temperature_sample(df: DataFrame, group_col: str, id_col: str) -> DataFrame:
     """Temperature-flattened group rebalancing — the multilingual-corpus
     resampling rule (sample group g proportionally to n_g^tau, tau<1
-    up-weights tail groups): with w_g = n_g^tau / sum_h n_h^tau and
-    target = target_frac * N,
+    up-weights tail groups): with tau = 0.7, w_g = n_g^tau / sum_h n_h^tau
+    and target = 0.8 * N,
 
         rate_g = min(1, target * w_g / n_g)
 
@@ -114,13 +107,13 @@ def temperature_sample(
     filter — the data itself is never shuffled. Output adds ``keep_rate``."""
     counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("_n_g"))
     wall = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    w_g = F.pow(F.col("_n_g").cast("double"), F.lit(tau))
+    w_g = F.pow(F.col("_n_g").cast("double"), F.lit(0.7))
     rates = counts.select(
         group_col,
         F.round(
             F.least(
                 F.lit(1.0),
-                F.lit(float(target_frac))
+                F.lit(0.8)
                 * F.sum("_n_g").over(wall)
                 * w_g
                 / F.sum(w_g).over(wall)
@@ -134,7 +127,7 @@ def temperature_sample(
     return df.join(F.broadcast(rates), group_col).filter(h < thresh)
 
 
-def global_shuffle(df: DataFrame, id_col: str, n_buckets: int = 1024) -> DataFrame:
+def global_shuffle(df: DataFrame, id_col: str) -> DataFrame:
     """Deterministic global training-order shuffle: assign every row a
     contiguous 1-based ``rank`` in salted-md5-hash order (a reproducible
     pseudorandom permutation, identical across runs and cluster sizes).
@@ -154,7 +147,7 @@ def global_shuffle(df: DataFrame, id_col: str, n_buckets: int = 1024) -> DataFra
     df + (rank). Equals the naive form exactly (pinned by the oracle
     query)."""
     h = md5_int(F.col(id_col).cast("string"), salt="shuffle")
-    width = _MD5_15_MAX // n_buckets + 1
+    width = _MD5_15_MAX // _SHUFFLE_BUCKETS + 1
     bucketed = df.withColumn("_h", h).withColumn(
         "_bkt", (F.col("_h") / F.lit(width)).cast("int")
     )
@@ -221,7 +214,6 @@ def weighted_sample(
     id_col: str,
     weight_col: str,
     k: int,
-    salt: str = "ws",
 ) -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement — the
     Efraimidis–Spirakis A-ES scheme (public, IPL 2006): each row gets
@@ -242,7 +234,7 @@ def weighted_sample(
     from pyspark.sql import Window
 
     w = F.col(weight_col).cast("double")
-    u = (md5_int(F.col(id_col).cast("string"), salt=salt) + F.lit(1)) / F.lit(
+    u = (md5_int(F.col(id_col).cast("string"), salt="ws") + F.lit(1)) / F.lit(
         float(16**15 + 1)
     )
     key = F.pow(u, F.lit(1.0) / w)

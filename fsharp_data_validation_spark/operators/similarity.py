@@ -68,6 +68,7 @@ def _list_array(m: np.ndarray) -> pa.Array:
 # rows per side of one GEMM block: a kernel holds a few _TILE x _TILE
 # float64 blocks (128 MB each) whatever the size of its group
 _TILE = 4096
+_PAIR_BLOCKS = 8  # near_dup_pairs_blocked: hash blocks of the vectors
 
 
 def _cosine_hits(
@@ -163,11 +164,9 @@ def near_dup_pairs(vectors: DataFrame, threshold: float = 0.8) -> DataFrame:
     )
 
 
-def near_dup_pairs_blocked(
-    vectors: DataFrame, threshold: float = 0.8, blocks: int = 8
-) -> DataFrame:
+def near_dup_pairs_blocked(vectors: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Exact all-pairs cosine via **block-matrix GEMM**: vectors are hashed
-    into ``blocks`` blocks; every block pair (bi <= bj) becomes one group;
+    into ``_PAIR_BLOCKS`` blocks; every block pair (bi <= bj) becomes one group;
     ``applyInArrow`` scores the block pair with ``_cosine_hits`` (float64
     GEMM) and emits only pairs above threshold. Kernel memory is bounded by
     ``_TILE``, not by the block; only work is quadratic in the block.
@@ -180,9 +179,12 @@ def near_dup_pairs_blocked(
     v = _as_double(vectors, "embedding").select(
         F.col("vec_id").alias("vid"),
         F.col("embedding").alias("v"),
-        F.pmod(F.xxhash64(F.col("vec_id")), F.lit(blocks)).cast("int").alias("blk"),
+        F.pmod(F.xxhash64(F.col("vec_id")), F.lit(_PAIR_BLOCKS))
+        .cast("int")
+        .alias("blk"),
     )
-    ids = [(bi, bj) for bi in range(blocks) for bj in range(blocks) if bi <= bj]
+    blocks = range(_PAIR_BLOCKS)
+    ids = [(bi, bj) for bi in blocks for bj in blocks if bi <= bj]
     pair_ids = v.sparkSession.createDataFrame(ids, "bi int, bj int")
     # a vector joins every tile that references its block; side(s) tell the
     # kernel which operand(s) of the GEMM it belongs to
@@ -561,12 +563,7 @@ def cross_corpus_cosine_pairs(
     return t.unionByName(e).groupBy("blk").applyInArrow(tile_kernel, out_schema)
 
 
-def embedding_health(
-    df: DataFrame,
-    vec_col: str,
-    dim: int,
-    round_to: int = 4,
-) -> DataFrame:
+def embedding_health(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
     """Embedding-table hygiene report — the vector-quality gate a training
     pipeline runs before any similarity/dedup stage: NULL vectors, wrong
     dimensionality, NaN components, all-zero vectors (cosine-undefined),
@@ -576,7 +573,8 @@ def embedding_health(
     the rounded cross-row means).
 
     Returns one row: (n_vecs, n_null, n_wrong_dim, n_nan, n_null_comp,
-    n_zero, mean_norm, min_norm, max_norm)."""
+    n_zero, mean_norm, min_norm, max_norm), the norms rounded to 4
+    decimals."""
     v = F.col(vec_col)
     sq = F.aggregate(
         v, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
@@ -604,9 +602,9 @@ def embedding_health(
         F.sum("_nan").cast("bigint").alias("n_nan"),
         F.sum("_nc").cast("bigint").alias("n_null_comp"),
         F.sum("_zero").cast("bigint").alias("n_zero"),
-        F.round(F.avg("_norm"), round_to).alias("mean_norm"),
-        F.round(F.min("_norm"), round_to).alias("min_norm"),
-        F.round(F.max("_norm"), round_to).alias("max_norm"),
+        F.round(F.avg("_norm"), 4).alias("mean_norm"),
+        F.round(F.min("_norm"), 4).alias("min_norm"),
+        F.round(F.max("_norm"), 4).alias("max_norm"),
     )
 
 

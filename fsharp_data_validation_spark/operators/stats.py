@@ -121,12 +121,12 @@ def hll_partition_sketches(df: DataFrame, part_col: str, value_col: str) -> Data
     )
 
 
-def hll_rollup(sketches: DataFrame, parts: Sequence[str] | None = None) -> DataFrame:
-    """Distinct-count for an arbitrary partition subset from the sketch
-    table alone (no data rescan): union the per-partition sketches and
-    estimate. One row: (n_parts, distinct_estimate)."""
-    s = sketches if parts is None else sketches.filter(F.col("part").isin(list(parts)))
-    return s.agg(
+def hll_rollup(sketches: DataFrame) -> DataFrame:
+    """Distinct-count from the sketch table alone (no data rescan): union
+    the per-partition sketches and estimate. A partition subset is a filter
+    the caller applies to the sketch table first. One row: (n_parts,
+    distinct_estimate)."""
+    return sketches.agg(
         F.count(F.lit(1)).alias("n_parts"),
         F.hll_sketch_estimate(F.hll_union_agg(F.col("sketch"))).alias(
             "distinct_estimate"
@@ -191,15 +191,11 @@ def mad_outliers_by_group(df: DataFrame, group_col: str, value_col: str) -> Data
 # whose per-item estimate undercounts the true frequency by at most d, the
 # count subtracted at truncation (d <= n/(k+1)); summaries merge by item-wise
 # addition with error bounds adding.
+_MG_K = 1024  # summary size: items kept per partition
 
 
-def mg_partition_sketches(
-    df: DataFrame,
-    part_col: str,
-    value_col: str,
-    k: int = 1024,
-) -> DataFrame:
-    """Materialize a size-<=k Misra-Gries frequent-items summary of
+def mg_partition_sketches(df: DataFrame, part_col: str, value_col: str) -> DataFrame:
+    """Materialize a size-<=``_MG_K`` Misra-Gries frequent-items summary of
     ``value_col`` PER PARTITION: (part, item, est, err) where ``est``
     undercounts the partition-true count by at most ``err`` (constant per
     part) and never overcounts.
@@ -227,63 +223,37 @@ def mg_partition_sketches(
     w = Window.partitionBy("part").orderBy(F.desc("n"), F.asc("item"))
     ranked = counts.select("part", "item", "n", F.row_number().over(w).alias("rnk"))
     # per-part truncation threshold d = count of the (k+1)-th item (0 if none)
-    d = F.max(F.when(F.col("rnk") == k + 1, F.col("n"))).over(Window.partitionBy("part"))
+    d = F.max(F.when(F.col("rnk") == _MG_K + 1, F.col("n"))).over(
+        Window.partitionBy("part")
+    )
     return (
         ranked.select("*", F.coalesce(d, F.lit(0)).alias("err"))
-        .filter(F.col("rnk") <= k)
+        .filter(F.col("rnk") <= _MG_K)
         .select("part", "item", (F.col("n") - F.col("err")).alias("est"), "err")
         .filter(F.col("est") > 0)
     )
 
 
-def mg_rollup(
-    sketches: DataFrame,
-    parts: Sequence[str] | None = None,
-    k: int | None = None,
-    top: int | None = None,
-) -> DataFrame:
-    """Heavy hitters for an arbitrary partition subset from the sketch table
-    alone (no data rescan): item-wise sum of estimates, error bounds adding
-    across merged sketches (Agarwal et al. merge rule). Optional ``k``
-    re-truncates the merged summary to size k (the subtracted count joins
-    the error bound); ``top`` keeps the top-``top`` rows by (est desc, item
-    asc). Returns (item, est_count, err_bound): for every true count c,
-    est_count <= c <= est_count + err_bound. All KB-scale arithmetic —
-    the sketch table is k rows per partition regardless of data size."""
+def mg_rollup(sketches: DataFrame, top: int) -> DataFrame:
+    """Heavy hitters from the sketch table alone (no data rescan): item-wise
+    sum of estimates, error bounds adding across merged sketches (Agarwal et
+    al. merge rule), the top-``top`` rows by (est desc, item asc). A
+    partition subset is a filter the caller applies to the sketch table
+    first. Returns (item, est_count, err_bound): for every true count c,
+    est_count <= c <= est_count + err_bound. All KB-scale arithmetic — the
+    sketch table is k rows per partition regardless of data size."""
     from pyspark.sql import Window
 
-    s = sketches if parts is None else sketches.filter(F.col("part").isin(list(parts)))
-    err_total = s.groupBy("part").agg(F.first("err").alias("e")).agg(
+    err_total = sketches.groupBy("part").agg(F.first("err").alias("e")).agg(
         F.coalesce(F.sum("e"), F.lit(0)).alias("err_bound")
     )
-    merged = s.groupBy("item").agg(F.sum("est").alias("est_count"))
+    merged = sketches.groupBy("item").agg(F.sum("est").alias("est_count"))
     w = Window.orderBy(F.desc("est_count"), F.asc("item"))
     ranked = merged.select(
         "item", "est_count", F.row_number().over(w).alias("_rnk")
-    )
-    if k is not None:
-        d_row = ranked.filter(F.col("_rnk") == k + 1).select(
-            F.col("est_count").alias("_d")
-        )
-        ranked = (
-            ranked.filter(F.col("_rnk") <= k)
-            .crossJoin(F.broadcast(d_row.agg(F.coalesce(F.max("_d"), F.lit(0)).alias("_d"))))
-            .select(
-                "item",
-                (F.col("est_count") - F.col("_d")).alias("est_count"),
-                "_rnk",
-                F.col("_d").alias("_extra_err"),
-            )
-            .filter(F.col("est_count") > 0)
-        )
-    else:
-        ranked = ranked.withColumn("_extra_err", F.lit(0))
-    if top is not None:
-        ranked = ranked.filter(F.col("_rnk") <= top)
+    ).filter(F.col("_rnk") <= top)
     return ranked.crossJoin(F.broadcast(err_total)).select(
-        "item",
-        "est_count",
-        (F.col("err_bound") + F.col("_extra_err")).cast("bigint").alias("err_bound"),
+        "item", "est_count", F.col("err_bound").cast("bigint").alias("err_bound")
     )
 
 
@@ -323,12 +293,11 @@ def moments_partition_sketches(
     )
 
 
-def moments_rollup(
-    sketches: DataFrame, parts: Sequence[str] | None = None, round_to: int = 4
-) -> DataFrame:
-    """Exact mean/var/skew/kurtosis for an arbitrary partition subset from
-    the sketch table alone (no data rescan): Chan/Terriberry parallel-merge
-    of central sums around the grand mean —
+def moments_rollup(sketches: DataFrame) -> DataFrame:
+    """Exact mean/var/skew/kurtosis from the sketch table alone (no data
+    rescan; a partition subset is a filter the caller applies to the sketch
+    table first): Chan/Terriberry parallel-merge of central sums around the
+    grand mean —
 
         M2 = Σ M2_i + Σ n_i·d_i²
         M3 = Σ M3_i + 3·Σ d_i·M2_i + Σ n_i·d_i³
@@ -338,15 +307,14 @@ def moments_rollup(
     whole-relation window over the KB-scale sketch table, then one
     aggregate takes the delta-corrected sums. Returns one row:
     (n_parts, n_values, mean, var_pop, skew, kurt) — population formulas,
-    rounded so the DuckDB oracle (which recomputes Σ(x-μ)^k directly on the
-    raw data) hash-matches."""
+    rounded to 4 decimals so the DuckDB oracle (which recomputes Σ(x-μ)^k
+    directly on the raw data) hash-matches."""
     from pyspark.sql import Window
 
-    s = sketches if parts is None else sketches.filter(F.col("part").isin(list(parts)))
     wall = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     mu = F.sum(F.col("mean") * F.col("n")).over(wall) / F.sum("n").over(wall)
     d = F.col("mean") - F.col("_MU")
-    merged = s.select(
+    merged = sketches.select(
         "*",
         F.count(F.lit(1)).over(wall).alias("_p"),
         F.sum("n").over(wall).alias("_N"),
@@ -370,29 +338,29 @@ def moments_rollup(
     return merged.select(
         F.col("n_parts").cast("bigint").alias("n_parts"),
         F.col("N").cast("bigint").alias("n_values"),
-        F.round("MU", round_to).alias("mean"),
-        F.round(F.col("M2") / F.col("N"), round_to).alias("var_pop"),
+        F.round("MU", 4).alias("mean"),
+        F.round(F.col("M2") / F.col("N"), 4).alias("var_pop"),
         F.round(
             F.when(
                 safe,
                 F.sqrt(F.col("N")) * F.col("M3") / F.pow(F.col("M2"), F.lit(1.5)),
             ).otherwise(F.lit(0.0)),
-            round_to,
+            4,
         ).alias("skew"),
         F.round(
             F.when(
                 safe,
                 F.col("N") * F.col("M4") / (F.col("M2") * F.col("M2")) - F.lit(3.0),
             ).otherwise(F.lit(0.0)),
-            round_to,
+            4,
         ).alias("kurt"),
     )
 
 
-def skew_report(df: DataFrame, key_cols: Sequence[str], top: int = 5) -> DataFrame:
+def skew_report(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
     """Join/aggregation-key skew diagnostic — the pre-flight check before
     any key-partitioned operation at scale: for each candidate key column,
-    the top-``top`` heaviest values with their share of all rows, plus the
+    the top-5 heaviest values with their share of all rows, plus the
     key's distinct count. A share over ~1/shuffle-partitions means one
     task owns that value's entire partition — the signal to salt, use AQE
     skew-join, or broadcast the other side.
@@ -415,7 +383,7 @@ def skew_report(df: DataFrame, key_cols: Sequence[str], top: int = 5) -> DataFra
         nd = counts.agg(F.count(F.lit(1)).alias("_nd"))
         topk = (
             counts.orderBy(F.desc("n"), F.asc("value"))
-            .limit(top)
+            .limit(5)
             .crossJoin(F.broadcast(nd))
         )
         from pyspark.sql import Window

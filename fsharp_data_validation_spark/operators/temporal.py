@@ -19,11 +19,12 @@ Scale design:
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame, Window, WindowSpec, functions as F
 
-SESSION_GAP_S = 1800  # sessionize's default gap, sessionize_salted's gap
+SESSION_GAP_S = 1800  # the gap of sessionize and sessionize_salted
+_ASOF_TS = "ts"  # the as-of joins' event-time column, on both sides
 _ASOF_SUFFIX = "_asof"  # the as-of joins' suffix on the right columns
 _INTERVAL_BUCKET_S = 3600  # interval_join's time bucket
 
@@ -35,27 +36,23 @@ def _micros(c: F.Column) -> F.Column:
     return F.unix_micros(c.cast("timestamp"))
 
 
-def _asof_union(left, right, by, left_ts, right_ts, right_cols, tie_col):
-    """The as-of joins' shared prelude, ``(right_cols, r, u)``: ``r`` is the
-    right side as (by..., _ts, _side=0, _tie, _pay) and ``u`` the left rows
-    (_side=1, NULL _tie and _pay) unioned with ``r``, whose left-only
-    columns are NULL (right rows only carry the payload; the side filter
-    drops them after the window)."""
-    right_cols = list(right_cols) if right_cols is not None else [
-        c for c in right.columns if c not in set(by) and c != right_ts
-    ]
-    tie_col = tie_col or right_cols[0]
+def _asof_union(left, right, by, right_cols, tie_col):
+    """The as-of joins' shared prelude, ``(r, u)``: ``r`` is the right side
+    as (by..., _ts, _side=0, _tie, _pay) and ``u`` the left rows (_side=1,
+    NULL _tie and _pay) unioned with ``r``, whose left-only columns are NULL
+    (right rows only carry the payload; the side filter drops them after
+    the window)."""
     payload = F.struct(*[F.col(c) for c in right_cols]).alias("_pay")
     r = right.select(
         *by,
-        F.col(right_ts).alias("_ts"),
+        F.col(_ASOF_TS).alias("_ts"),
         F.lit(0).alias("_side"),
         F.col(tie_col).alias("_tie"),
         payload,
     )
     l = left.select(  # noqa: E741
         "*",
-        F.col(left_ts).alias("_ts"),
+        F.col(_ASOF_TS).alias("_ts"),
         F.lit(1).alias("_side"),
         F.lit(None).cast(r.schema["_tie"].dataType).alias("_tie"),
         F.lit(None).cast(r.schema["_pay"].dataType).alias("_pay"),
@@ -63,23 +60,21 @@ def _asof_union(left, right, by, left_ts, right_ts, right_cols, tie_col):
     r_full = r.select(
         *[c if c in r.columns else F.lit(None).cast(t).alias(c) for c, t in l.dtypes]
     )
-    return right_cols, r, l.unionByName(r_full)
+    return r, l.unionByName(r_full)
 
 
 def asof_join(
     left: DataFrame,
     right: DataFrame,
     by: Sequence[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    right_cols: Optional[Sequence[str]] = None,
-    tie_col: Optional[str] = None,
+    right_cols: Sequence[str],
+    tie_col: str,
 ) -> DataFrame:
-    """For every left row, attach the LATEST right row of the same ``by``
-    key with ``right.ts <= left.ts`` (inclusive). Deterministic tie-break:
-    among right rows sharing the maximal timestamp, the one with the
-    greatest ``tie_col`` wins (required for a portable oracle; defaults to
-    the first of ``right_cols``).
+    """For every left row, attach the ``right_cols`` of the LATEST right row
+    of the same ``by`` key with ``right.ts <= left.ts`` (inclusive; both
+    sides' event time is ``ts``). Deterministic tie-break: among right rows
+    sharing the maximal timestamp, the one with the greatest ``tie_col``
+    wins (required for a portable oracle).
 
     Implementation: union both sides with a side tag, then one running
     ``last(payload, ignorenulls=True)`` window ordered by
@@ -89,9 +84,7 @@ def asof_join(
     no right row precedes).
     """
     by = list(by)
-    right_cols, _, u = _asof_union(
-        left, right, by, left_ts, right_ts, right_cols, tie_col
-    )
+    _, u = _asof_union(left, right, by, right_cols, tie_col)
     w = (
         Window.partitionBy(*by)
         .orderBy(F.col("_ts"), F.col("_side"), F.col("_tie"))
@@ -182,13 +175,13 @@ def time_rollup(
     )
 
 
-def _session_no(w: WindowSpec, ts_col: str, gap_seconds: int) -> F.Column:
+def _session_no(w: WindowSpec, ts_col: str) -> F.Column:
     """Running session number over ``w`` (one key's events ordered by
     (ts, id)): a session starts at the first event and wherever the gap to
-    the previous event exceeds ``gap_seconds``."""
+    the previous event exceeds ``SESSION_GAP_S``."""
     gap_us = _micros(F.col(ts_col)) - _micros(F.lag(ts_col).over(w))
     is_new = F.when(
-        gap_us.isNull() | (gap_us > gap_seconds * 1_000_000), F.lit(1)
+        gap_us.isNull() | (gap_us > SESSION_GAP_S * 1_000_000), F.lit(1)
     ).otherwise(F.lit(0))
     run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return F.sum(is_new).over(run).cast("bigint")
@@ -209,10 +202,9 @@ def sessionize(
     key_col: str = "user_id",
     ts_col: str = "ts",
     id_col: str = "event_id",
-    gap_seconds: int = SESSION_GAP_S,
 ) -> DataFrame:
     """Gap-based sessions: within a key, ordered by (ts, id), a new session
-    starts when the gap to the previous event exceeds ``gap_seconds``.
+    starts when the gap to the previous event exceeds ``SESSION_GAP_S``.
     Returns one row per session:
     (key, session_no, n_events, session_start, session_end, duration_us)
     with ``session_no`` numbered 1.. per key in time order.
@@ -221,7 +213,7 @@ def sessionize(
     sessions = df.select(
         F.col(key_col),
         F.col(ts_col),
-        _session_no(w, ts_col, gap_seconds).alias("session_no"),
+        _session_no(w, ts_col).alias("session_no"),
     )
     return _per_session(sessions, key_col, ts_col)
 
@@ -234,7 +226,7 @@ def sessionize_salted(
     *,
     bucket_seconds: int,
 ) -> DataFrame:
-    """``sessionize`` at its default gap, for Zipf-hot keys: output-identical,
+    """``sessionize`` for Zipf-hot keys: output-identical,
     but the event window runs over (key, time_bucket) instead of (key), so
     no single task ever sorts a whole hot key's timeline.
 
@@ -267,7 +259,7 @@ def sessionize_salted(
     )
     wb = Window.partitionBy(key_col, "_bk").orderBy(F.col(ts_col), F.col(id_col))
     local = ev.select(
-        key_col, ts_col, "_bk", _session_no(wb, ts_col, SESSION_GAP_S).alias("_lno")
+        key_col, ts_col, "_bk", _session_no(wb, ts_col).alias("_lno")
     )
 
     # per-(key, bucket) summary: tiny regardless of key heat
@@ -313,10 +305,8 @@ def asof_join_salted(
     left: DataFrame,
     right: DataFrame,
     by: Sequence[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    right_cols: Optional[Sequence[str]] = None,
-    tie_col: Optional[str] = None,
+    right_cols: Sequence[str],
+    tie_col: str,
     *,
     bucket_seconds: int,
 ) -> DataFrame:
@@ -349,9 +339,7 @@ def asof_join_salted(
     10^12-row key cannot single-task sort at any core count.
     """
     by = list(by)
-    right_cols, r, u = _asof_union(
-        left, right, by, left_ts, right_ts, right_cols, tie_col
-    )
+    r, u = _asof_union(left, right, by, right_cols, tie_col)
     bucket = lambda c: F.floor(  # noqa: E731
         _micros(c) / (bucket_seconds * 1_000_000)
     ).cast("bigint")

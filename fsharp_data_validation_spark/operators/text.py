@@ -73,13 +73,13 @@ BPE_VOCAB = sorted(
 )
 
 
-def bpe_pattern(vocab=None) -> str:
-    """The greedy longest-match alternation for ``vocab`` (default
-    ``BPE_VOCAB``): pieces sorted by (length DESC, piece ASC) — identical
-    order on both engines — with a single-codepoint non-space fallback."""
+def bpe_pattern() -> str:
+    """The greedy longest-match alternation for ``BPE_VOCAB``: pieces sorted
+    by (length DESC, piece ASC) — identical order on both engines — with a
+    single-codepoint non-space fallback."""
     import re as _re
 
-    pieces = sorted(set(vocab or BPE_VOCAB), key=lambda p: (-len(p), p))
+    pieces = sorted(BPE_VOCAB, key=lambda p: (-len(p), p))
     for p in pieces:
         if not _re.fullmatch(r"[a-z0-9]+", p):
             raise ValueError(
@@ -514,16 +514,10 @@ def pack_context_windows(
     return proj.mapInPandas(pack_iter, out_schema)
 
 
-def chunk_text(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    width: int = 64,
-    stride: int = 32,
-) -> DataFrame:
+def chunk_text(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Sliding-window document chunking — split each document's whitespace
-    tokens into overlapping windows of ``width`` tokens advancing by
-    ``stride`` (the standard context-window chunking step of a training
+    tokens into overlapping windows of ``width`` = 16 tokens advancing by
+    ``stride`` = 8 (the standard context-window chunking step of a training
     pipeline). Returns (id, chunk_idx, start_tok, n_chunk_tokens,
     chunk_text); a doc with <= ``width`` tokens yields exactly one chunk,
     NULL text yields none, and the last window is the (possibly short)
@@ -535,8 +529,7 @@ def chunk_text(
     ``slice``/``array_join`` materialize each window. Output multiplicity
     is ~n_tokens/stride per doc — bounded, no skew beyond doc length.
     """
-    if not (0 < stride <= width):
-        raise ValueError("require 0 < stride <= width")
+    width, stride = 16, 8
     toks = F.split(F.col(text_col), " ")
     n = F.size(toks)
     n_chunks = (
@@ -638,10 +631,8 @@ def mixture_report(df: DataFrame, group_cols) -> DataFrame:
     )
 
 
-def tfidf_top_terms(
-    df: DataFrame, id_col: str, text_col: str, top_k: int = 3
-) -> DataFrame:
-    """Per-document top-k TF-IDF terms (whitespace tokens, raw tf,
+def tfidf_top_terms(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Per-document top-3 TF-IDF terms (whitespace tokens, raw tf,
     idf = ln(N / df)) — the keyword-extraction profile of a curation
     pipeline. Returns (id, term, tf, score, rnk) with deterministic
     ranking: (rounded score DESC, term ASC) — ranking on the ROUNDED score
@@ -674,7 +665,7 @@ def tfidf_top_terms(
         tf.crossJoin(F.broadcast(n_docs))
         .select("doc", "term", "tf", score.alias("score"))
         .withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= top_k)
+        .filter(F.col("rnk") <= 3)
         .select(F.col("doc").alias(id_col), "term", "tf", "score", "rnk")
     )
 
@@ -698,13 +689,11 @@ def _gopher_grams(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFram
     )
 
 
-def top_ngram_fraction(
-    df: DataFrame, id_col: str, text_col: str, n: int = 2
-) -> DataFrame:
-    """Per-document top word-n-gram character fraction — the Gopher
+def top_ngram_fraction(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Per-document top word-bigram character fraction — the Gopher
     repetition-quality rule (Rae et al. 2021, public): the share of a
     document's characters covered by occurrences of its single most
-    frequent word n-gram. Template/boilerplate-heavy documents score high.
+    frequent word bigram. Template/boilerplate-heavy documents score high.
 
     The per-doc mode needs NO cross-row aggregation, so it is computed
     row-locally — ``array_sort`` the n-gram array, then one fold
@@ -722,7 +711,7 @@ def top_ngram_fraction(
     char_frac = occurrences · length(ngram) / length(text), LEAST-capped at
     1 (overlapping occurrences are counted per occurrence, the standard
     approximation — same convention as ``dup_ngram_fraction``); documents
-    with fewer than ``n`` words emit no row (no n-gram exists).
+    with fewer than 2 words emit no row (no bigram exists).
 
     Returns (id, top_ngram, n_occurrences, char_frac)."""
     best = F.aggregate(
@@ -751,7 +740,7 @@ def top_ngram_fraction(
             ).alias("best_run"),
         ),
     )
-    return _gopher_grams(df, id_col, text_col, n).select(
+    return _gopher_grams(df, id_col, text_col, 2).select(
         "id", "_chars", best.alias("_b")
     ).select(
         "id",
@@ -767,12 +756,10 @@ def top_ngram_fraction(
     )
 
 
-def dup_ngram_fraction(
-    df: DataFrame, id_col: str, text_col: str, n: int = 5
-) -> DataFrame:
-    """Per-document DUPLICATED word-n-gram character fraction — the second
+def dup_ngram_fraction(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Per-document DUPLICATED word-3-gram character fraction — the second
     Gopher repetition rule (Rae et al. 2021): the share of a document's
-    characters covered by n-grams that occur 2+ times within it (the top-1
+    characters covered by 3-grams that occur 2+ times within it (the top-1
     rule above catches one dominant template; this catches diffuse
     repetition). Overlapping occurrences are counted per occurrence (the
     standard approximation), so the ratio is LEAST-capped at 1. Only
@@ -828,7 +815,7 @@ def dup_ngram_fraction(
         finish,
     )
     return (
-        _gopher_grams(df, id_col, text_col, n)
+        _gopher_grams(df, id_col, text_col, 3)
         .select("id", "_chars", folded.alias("_f"))
         .filter(F.col("_f.dup_n") > 0)
         .select(

@@ -29,11 +29,9 @@ HOT_CONVS = 4
 BASE_EPOCH = 1_700_000_000  # 2023-11-14T22:13:20Z — fixed, documented
 
 
-def synth_transcripts(
-    spark: SparkSession, n_turns: int, parallelism: int | None = None
-) -> DataFrame:
-    """A deterministic n_turns-row transcripts DataFrame (see module doc)."""
-    parallelism = parallelism or spark.sparkContext.defaultParallelism
+def synth_transcripts(spark: SparkSession, n_turns: int, parallelism: int) -> DataFrame:
+    """A deterministic n_turns-row transcripts DataFrame over ``parallelism``
+    partitions (see module doc)."""
     df = spark.range(0, n_turns, 1, parallelism)
     h = F.abs(F.xxhash64("id"))
 

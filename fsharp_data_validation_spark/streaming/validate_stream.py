@@ -40,6 +40,12 @@ from ..functions.compiler import Suite
 from ..operators.checks import RATE_WINDOW
 from ..rounding import half_up, seq_mean_std
 
+# every windowed monitor: daily event-time windows, closed once the
+# watermark passes an hour beyond them
+_WINDOW = "1 day"
+_WATERMARK = "1 hour"
+_Z_THRESHOLD = 2.0  # the streaming control chart's anomaly |z|
+
 
 def validate_stream(
     stream_df: DataFrame, suite: Suite, key_cols: Sequence[str]
@@ -54,14 +60,14 @@ def validate_stream(
 
 
 def windowed_violation_rate(
-    stream_df: DataFrame, suite: Suite, ts_col: str = "ts", window: str = "1 minute"
+    stream_df: DataFrame, suite: Suite, ts_col: str = "ts"
 ) -> DataFrame:
     """Event-time windowed violation metrics with late-data watermarking:
     (window, rows, rows_with_violations, violations), counted from the
     suite's allocation-free flag and count columns (no failure arrays)."""
     return (
-        stream_df.withWatermark(ts_col, "2 minutes")
-        .groupBy(F.window(ts_col, window).alias("win"))
+        stream_df.withWatermark(ts_col, _WATERMARK)
+        .groupBy(F.window(ts_col, _WINDOW).alias("win"))
         .agg(
             F.count(F.lit(1)).alias("rows"),
             F.sum(suite.any_failure_column().cast("long")).alias("rows_with_violations"),
@@ -156,12 +162,7 @@ def run_available_now(
 
 
 def _window_counts(
-    stream_df: DataFrame,
-    value: Column,
-    cells: Sequence[Column],
-    ts_col: str,
-    window: str,
-    watermark: str,
+    stream_df: DataFrame, value: Column, cells: Sequence[Column], ts_col: str
 ) -> DataFrame:
     """Shared input of the windowed drift monitors: ONE watermarked window
     aggregation (win, rows, _c0.._c{k-1}) over the non-NULL ``value`` rows,
@@ -171,8 +172,8 @@ def _window_counts(
     evicted by the watermark)."""
     return (
         stream_df.filter(value.isNotNull())
-        .withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("win"))
+        .withWatermark(ts_col, _WATERMARK)
+        .groupBy(F.window(ts_col, _WINDOW).alias("win"))
         .agg(
             F.count(F.lit(1)).alias("rows"),
             *(F.sum(c.cast("long")).alias(f"_c{i}") for i, c in enumerate(cells)),
@@ -182,7 +183,7 @@ def _window_counts(
 
 def _binned_window_counts(
     stream_df: DataFrame, baseline_hist: DataFrame, value_col: str, bucket_width: float,
-    n_buckets: int, ts_col: str, window: str, watermark: str,
+    n_buckets: int, ts_col: str,
 ):
     """Shared input of the binned numeric monitors (PSI, W1): the window
     counts of ``value_col``'s ``n_buckets`` buckets, plus the baseline
@@ -192,7 +193,7 @@ def _binned_window_counts(
 
     v = F.col(value_col)
     cells = [_bucket(v, bucket_width, n_buckets) == i for i in range(n_buckets)]
-    agg = _window_counts(stream_df, v, cells, ts_col, window, watermark)
+    agg = _window_counts(stream_df, v, cells, ts_col)
     base = {r["bucket"]: r["n"] for r in baseline_hist.collect()}
     base_n = [base.get(i, 0) for i in range(n_buckets)]
     return agg, base_n, float(sum(base.values())) or 1.0
@@ -205,8 +206,6 @@ def windowed_drift_stream(
     bucket_width: float,
     n_buckets: int,
     ts_col: str = "ts",
-    window: str = "1 minute",
-    watermark: str = "2 minutes",
 ) -> DataFrame:
     """Streaming PSI drift monitor against a static baseline: per
     event-time window, emit (win, rows, psi) where ``psi`` compares the
@@ -219,7 +218,7 @@ def windowed_drift_stream(
     from ..operators.drift import psi_term
 
     agg, base_n, tot = _binned_window_counts(
-        stream_df, baseline_hist, value_col, bucket_width, n_buckets, ts_col, window, watermark
+        stream_df, baseline_hist, value_col, bucket_width, n_buckets, ts_col
     )
     terms = [
         psi_term(F.col(f"_c{i}"), F.lit(base_n[i]), F.col("rows"), F.lit(tot))
@@ -233,9 +232,6 @@ def windowed_chi2_stream(
     baseline_counts: DataFrame,
     cat_col: str,
     ts_col: str = "ts",
-    window: str = "1 minute",
-    watermark: str = "2 minutes",
-    round_to: int = 4,
 ) -> DataFrame:
     """Streaming CATEGORICAL drift monitor against a static baseline: per
     event-time window, emit (win, rows, chi2, dof) where chi2 is the
@@ -266,7 +262,7 @@ def windowed_chi2_stream(
     c = F.col(cat_col)
     # one cell per baseline category, then the OTHER cell: _c{len(cats)}
     in_cat = [c == F.lit(cat) for cat in cats] + [~c.isin(cats)]
-    agg = _window_counts(stream_df, c, in_cat, ts_col, window, watermark)
+    agg = _window_counts(stream_df, c, in_cat, ts_col)
     tg = F.col("rows").cast("double")
     t = F.lit(float(sum(base.values())))
     cells = [(F.col(f"_c{i}"), F.lit(base[cat])) for i, cat in enumerate(cats)]
@@ -276,7 +272,7 @@ def windowed_chi2_stream(
     return agg.select(
         "win",
         "rows",
-        F.round(chi2, round_to).alias("chi2"),
+        F.round(chi2, 4).alias("chi2"),
         (dof_cells - 1).cast("bigint").alias("dof"),
     )
 
@@ -288,9 +284,6 @@ def windowed_w1_stream(
     bucket_width: float,
     n_buckets: int,
     ts_col: str = "ts",
-    window: str = "1 minute",
-    watermark: str = "2 minutes",
-    round_to: int = 4,
 ) -> DataFrame:
     """Streaming Wasserstein-1 drift monitor against a static baseline —
     the spread-sensitive numeric member of the windowed family (PSI reacts
@@ -306,7 +299,7 @@ def windowed_w1_stream(
     from ..operators.drift import cdf_gap
 
     agg, base_n, tot = _binned_window_counts(
-        stream_df, baseline_hist, value_col, bucket_width, n_buckets, ts_col, window, watermark
+        stream_df, baseline_hist, value_col, bucket_width, n_buckets, ts_col
     )
     cum_win = list(accumulate(F.col(f"_c{i}") for i in range(n_buckets)))
     cum_base = list(accumulate(base_n))
@@ -318,12 +311,12 @@ def windowed_w1_stream(
     return agg.select(
         "win",
         "rows",
-        F.round(reduce(add, terms) * F.lit(float(bucket_width)), round_to).alias("w1"),
+        F.round(reduce(add, terms) * F.lit(float(bucket_width)), 4).alias("w1"),
     )
 
 
 def windowed_rates_to_sink(
-    stream_df: DataFrame, suite: Suite, ts_col: str = "ts", window: str = "1 minute"
+    stream_df: DataFrame, suite: Suite, ts_col: str = "ts"
 ) -> DataFrame:
     """Stage 1 of the streaming control chart: the watermarked windowed
     violation-rate aggregation flattened to the sink schema
@@ -333,7 +326,7 @@ def windowed_rates_to_sink(
     streaming aggregation in one query, so the monitoring loop is the
     standard two-query topology). On a batch frame the watermark is a
     no-op, so the same call builds the batch rate series."""
-    return windowed_violation_rate(stream_df, suite, ts_col, window).select(
+    return windowed_violation_rate(stream_df, suite, ts_col).select(
         F.col("win.start").alias("win_start"),
         F.col("rows").alias("n_rows"),
         F.col("rows_with_violations").alias("n_viol"),
@@ -341,15 +334,14 @@ def windowed_rates_to_sink(
     )
 
 
-def windowed_rate_anomaly_stream(
-    rates_stream: DataFrame, z_threshold: float = 3.0
-) -> DataFrame:
+def windowed_rate_anomaly_stream(rates_stream: DataFrame) -> DataFrame:
     """STREAMING control-chart anomaly detection — the streaming sibling of
     ``operators/checks.rate_anomaly``, closing the Deequ monitoring loop on
     the live path: each CLOSED event-time window's violation rate is scored
-    against the trailing ``RATE_WINDOW`` closed windows' mean ± z·stddev, the
-    window itself excluded from its own baseline, with the same
-    rounded-before-branching float discipline as the batch form (a raw
+    against the trailing ``RATE_WINDOW`` closed windows' mean ± z·stddev
+    (``|z| > _Z_THRESHOLD``), the window itself excluded from its own
+    baseline, with the same rounded-before-branching float discipline as
+    the batch form (a raw
     stddev of ~1e-17 noise over identical rates must not divide a z).
 
     Input is the CLOSED-WINDOW rates stream — the sink written by
@@ -415,7 +407,7 @@ def windowed_rate_anomaly_stream(
                     m, sd = (half_up(v, 6) for v in seq_mean_std(hist))
                     z = half_up((rate - m) / sd, 4) if sd > 0 else None
                     anom = len(hist) >= 3 and (
-                        abs(z) > z_threshold if sd > 0 else rate != m
+                        abs(z) > _Z_THRESHOLD if sd > 0 else rate != m
                     )
                 else:
                     m = sd = z = None

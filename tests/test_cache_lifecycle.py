@@ -107,7 +107,7 @@ def test_window_total_operators_persist_nothing(spark):
         temperature_sample(docs, "grp", "doc_id"),
         dsir_weights(docs, "doc_id", "text", F.col("doc_id") % 2 == 0),
         moments_rollup(moments_partition_sketches(docs, "grp", "x")),
-        mg_partition_sketches(docs, "grp", "text", k=2),
+        mg_partition_sketches(docs, "grp", "text"),
         mad_outliers_by_group(docs, "grp", "x"),
         chi2_drift(docs, "grp", "ts"),
         vocab_growth(docs, "ts", "text"),

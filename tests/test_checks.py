@@ -1,9 +1,13 @@
 """The dataset-level checks (``operators/checks.py``): profile-driven
 constraint suggestion, the control-chart rate anomaly and check-name
-validation, pinned on hand-built fixtures; the sf0.01 DuckDB oracles cover
-the derived-table scale."""
+validation, the one-pass dataset check suite, the functional-dependency
+profile and the Benford check, pinned on hand-built fixtures; the sf0.01
+DuckDB oracles cover the derived-table scale."""
+
+import math
 
 import pytest
+from pyspark.sql import Row, functions as F
 
 
 def test_suggest_constraints_kinds_and_guards(spark):
@@ -134,3 +138,114 @@ def test_check_name_charset_validated():
     for bad in ("bad'name", "", "semi;colon", 'dq"uote', "new\nline"):
         with pytest.raises(ValueError):
             Check(bad, F.count(F.lit(1)), ">=", 0.0)
+
+
+def test_dataset_checks_one_pass(spark):
+    from fsharp_data_validation_spark.operators.checks import (
+        Check,
+        completeness,
+        compliance,
+        dataset_checks,
+        uniqueness,
+    )
+
+    rows = [
+        Row(conv_id="c1", turn_idx=0, role="user", text="hi"),
+        Row(conv_id="c1", turn_idx=1, role="assistant", text=None),
+        Row(conv_id="c1", turn_idx=1, role="weird", text="dup key"),
+        Row(conv_id="c2", turn_idx=0, role="user", text="yo"),
+    ]
+    df = spark.createDataFrame(rows)
+    out = dataset_checks(
+        df,
+        [
+            Check("text_comp", completeness("text"), ">=", 0.8),
+            Check("role_ok", compliance(F.col("role").isin("user", "assistant")), ">=", 1.0),
+            Check("uniq", uniqueness(["conv_id", "turn_idx"]), ">=", 1.0),
+            Check("rows", F.count(F.lit(1)), "==", 4.0),
+        ],
+    )
+    got = {r["check_name"]: (r["metric_value"], r["status"]) for r in out.collect()}
+    assert got["text_comp"] == (0.75, "fail")
+    assert got["role_ok"] == (0.75, "fail")
+    assert got["uniq"] == (0.75, "fail")  # 3 distinct keys / 4 rows
+    assert got["rows"] == (4.0, "pass")
+    # one aggregation pass: a single final physical aggregate, no join
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan
+
+
+def test_dataset_checks_rejects_bad_specs(spark):
+    import pytest as _pytest
+
+    from fsharp_data_validation_spark.operators.checks import Check, dataset_checks
+
+    with _pytest.raises(ValueError):
+        Check("x", F.count(F.lit(1)), "!=", 1.0)
+    df = spark.range(1)
+    with _pytest.raises(ValueError):
+        dataset_checks(df, [])
+    dup = [
+        Check("same", F.count(F.lit(1)), ">=", 0.0),
+        Check("same", F.count(F.lit(1)), ">=", 0.0),
+    ]
+    with _pytest.raises(ValueError):
+        dataset_checks(df, dup)
+
+
+def test_fd_violations_counts(spark):
+    from fsharp_data_validation_spark.operators.checks import fd_violations
+
+    rows = [
+        # key (1,1) maps to two roles -> violating (3 rows under it)
+        (1, 1, "user", "x"),
+        (1, 1, "user", "x"),
+        (1, 1, "tool", "x"),
+        # key (1,2) is clean
+        (1, 2, "user", "y"),
+        # NULL rhs never counts as a distinct value
+        (2, 1, "user", None),
+        (2, 1, "user", "z"),
+    ]
+    df = spark.createDataFrame(rows, "conv int, turn int, role string, text string")
+    got = {
+        r["fd"]: r
+        for r in fd_violations(
+            df, [(["conv", "turn"], "role"), (["conv", "turn"], "text")]
+        ).collect()
+    }
+    r = got["conv,turn->role"]
+    assert (r["n_keys"], r["violating_keys"], r["violating_rows"]) == (3, 1, 3)
+    assert abs(r["violation_rate"] - 1 / 3) < 1e-3
+    t = got["conv,turn->text"]
+    assert (t["violating_keys"], t["violating_rows"]) == (0, 0)
+
+    import pytest
+
+    with pytest.raises(ValueError):
+        fd_violations(df, [])
+
+
+def test_benford_digits_and_chi2(spark):
+    """String-based first digit classifies exact powers of ten correctly;
+    chi2 matches the hand-computed statistic."""
+    from fsharp_data_validation_spark.operators.checks import benford_check
+
+    vals = [1, 10, 100, 1000, 2, 25, 300, 9, 95, -5, 0]  # <=0 dropped
+    df = spark.createDataFrame([(v,) for v in vals], "v long")
+    out = benford_check(df, "v")
+    assert dict(out.dtypes)["digit"] == "bigint"  # the oracle's BIGINT
+    got = {r["digit"]: r for r in out.collect()}
+    assert set(got) == set(range(1, 10))  # full spine, zeros included
+    assert got[1]["n"] == 4  # 1, 10, 100, 1000 all digit 1
+    assert got[3]["n"] == 1 and got[9]["n"] == 2
+    assert got[4]["n"] == 0 and got[4]["obs_p"] == 0.0
+    n_tot = 9
+    chi2 = 0.0
+    for d in range(1, 10):
+        exp = n_tot * math.log10(1 + 1 / d)
+        obs = {1: 4, 2: 2, 3: 1, 9: 2}.get(d, 0)
+        # unobserved digits still contribute their expected mass
+        chi2 += (obs - exp) ** 2 / exp
+    assert abs(got[1]["chi2"] - chi2) < 1e-4
+    assert abs(got[1]["obs_p"] - 4 / 9) < 1e-4  # rounded to 4 decimals

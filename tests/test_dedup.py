@@ -2,8 +2,9 @@
 (``operators/contamination.py``): exact, prefix-filtered Jaccard, MinHash-LSH
 and SimHash pair finders against each other and their all-pairs forms,
 containment, the star-contraction components and their size histogram,
-conversation digests and span removal. Semantics pinned on hand-built
-fixtures; the sf0.01 DuckDB oracles cover the derived-table scale."""
+conversation digests, span removal and the NULL-safe ``md5_int`` key hash.
+Semantics pinned on hand-built fixtures; the sf0.01 DuckDB oracles cover
+the derived-table scale."""
 
 from pyspark.sql import Row, functions as F
 
@@ -39,8 +40,8 @@ def test_exact_duplicates(spark):
 
 def test_prefix_jaccard_equals_lsh(spark):
     docs = _docs(spark)
-    exact = _pairs(ngram_jaccard_pairs(docs, "doc_id", "text", 0.5))
-    lsh = _pairs(minhash_lsh_pairs(docs, "doc_id", "text", 0.5))
+    exact = _pairs(ngram_jaccard_pairs(docs, "doc_id", "text", 0.8))
+    lsh = _pairs(minhash_lsh_pairs(docs, "doc_id", "text"))
     assert exact, "fixture should contain near-dup pairs"
     assert (1, 2, 1.0) in exact
     assert exact == lsh  # high-recall banding -> identical verified output
@@ -57,7 +58,7 @@ def test_prefix_jaccard_keeps_a_pair_at_the_threshold(spark):
         [Row(doc_id=1, text=" ".join(words)), Row(doc_id=2, text=" ".join(words[:10]))]
     )
     want = [(1, 2, 0.8)]
-    assert _pairs(minhash_lsh_pairs(docs, "doc_id", "text", 0.8)) == want
+    assert _pairs(minhash_lsh_pairs(docs, "doc_id", "text")) == want
     assert _pairs(ngram_jaccard_pairs(docs, "doc_id", "text", 0.8)) == want
 
 
@@ -70,10 +71,8 @@ def test_simhash_banded_equals_allpairs(spark):
     )
 
     docs = _docs(spark)
-    allp = sorted(map(tuple, simhash_pairs(docs, "doc_id", "text", 8).collect()))
-    banded = sorted(
-        map(tuple, simhash_banded_pairs(docs, "doc_id", "text", 8).collect())
-    )
+    allp = sorted(map(tuple, simhash_pairs(docs, "doc_id", "text", 3).collect()))
+    banded = sorted(map(tuple, simhash_banded_pairs(docs, "doc_id", "text").collect()))
     assert allp and allp == banded
 
 
@@ -100,13 +99,9 @@ def test_simhash_skew_guard_output_unchanged(spark, monkeypatch):
     docs = spark.createDataFrame(rows)
     allp = sorted(map(tuple, simhash_pairs(docs, "doc_id", "text", 3).collect()))
     monkeypatch.setattr(dedup, "_BUCKET_CAP", 5)
-    guarded = sorted(
-        map(tuple, simhash_banded_pairs(docs, "doc_id", "text", 3).collect())
-    )
+    guarded = sorted(map(tuple, simhash_banded_pairs(docs, "doc_id", "text").collect()))
     monkeypatch.setattr(dedup, "_BUCKET_CAP", len(rows) + 1)
-    unguarded = sorted(
-        map(tuple, simhash_banded_pairs(docs, "doc_id", "text", 3).collect())
-    )
+    unguarded = sorted(map(tuple, simhash_banded_pairs(docs, "doc_id", "text").collect()))
     assert allp, "fixture should contain near-dup pairs"
     assert guarded == allp == unguarded
 
@@ -153,12 +148,13 @@ def test_near_dup_components_and_keep_first(spark):
     docs = _docs(spark)
     comp = {
         r["doc_id"]: r["component"]
-        for r in near_dup_components(docs, "doc_id", "text", 0.5).collect()
+        for r in near_dup_components(docs, "doc_id", "text").collect()
     }
-    # docs 1,2 are exact dups, 3 a near dup of both, 6 a near dup of 1/2/3
-    # at the 0.5 threshold -> one cluster labeled by the smallest id
+    # docs 1,2 are exact dups, 3 a near dup of both (J = 10/11) at the 0.8
+    # threshold -> one cluster labeled by the smallest id; 6 shares 7 of 13
+    # shingles with them (J = 0.54), so it stays apart
     assert comp[1] == comp[2] == comp[3] == 1
-    assert comp[4] == 4 and comp[5] == 5  # singletons label themselves
+    assert comp[4] == 4 and comp[5] == 5 and comp[6] == 6  # singletons label themselves
     assert len(comp) == docs.count()
 
     kept = sorted(
@@ -214,7 +210,7 @@ def test_star_components_equal_propagation_and_handle_chains(spark):
     edges = spark.createDataFrame(chain + cliques, ["u", "v"])
     got = {
         r["node"]: r["component"]
-        for r in connected_components_star(edges, max_iter=12).collect()
+        for r in connected_components_star(edges).collect()
     }
     assert all(got[i] == 0 for i in range(1001))
     assert got[2000] == got[2001] == got[2002] == 2000
@@ -357,3 +353,41 @@ def test_span_dedup_semantics(spark):
     # NULL text: passed through, zero counts, NULL clean
     assert out[6]["n_tokens"] == 0 and out[6]["n_removed"] == 0
     assert out[6]["text_clean"] is None
+
+
+def test_violation_examples_null_key_hashing(spark):
+    """The exemplar-ranking hash must COALESCE each key component: NULL
+    conv_id rows (the conv_id-required violation class) still get a
+    deterministic, engine-portable order. Pinned against the same formula
+    computed with Python hashlib."""
+    import hashlib
+
+    from pyspark.sql import Window
+
+    from fsharp_data_validation_spark.operators.dedup import md5_int
+
+    rows = [
+        (None, 0, 100),
+        (None, 1, 200),
+        ("c1", None, 300),
+        ("c2", 2, None),
+    ]
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, epoch long")
+    key = F.concat_ws(
+        "|",
+        F.coalesce(F.col("conv_id"), F.lit("")),
+        F.coalesce(F.col("turn_idx").cast("string"), F.lit("")),
+        F.coalesce(F.col("epoch").cast("string"), F.lit("")),
+    )
+    h = md5_int(key, salt="ex")
+    got = [
+        (r["conv_id"], r["turn_idx"], r["epoch"])
+        for r in df.withColumn("_h", h).orderBy("_h").collect()
+    ]
+
+    def py_h(c, t, e):
+        s = "ex|" + "|".join("" if x is None else str(x) for x in (c, t, e))
+        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+    want = sorted(rows, key=lambda r: py_h(*r))
+    assert got == [tuple(r) for r in want]

@@ -6,11 +6,11 @@ function per statistic serves every form."""
 from pyspark.sql import functions as F
 
 
-def w1(hist_a, hist_b, n_buckets, bucket_width=1.0, round_to=4):
+def w1(hist_a, hist_b, n_buckets, bucket_width):
     """Wasserstein-1 distance between two separate histograms."""
     from fsharp_data_validation_spark.operators.drift import _joined_hist, w1_joined
 
-    return w1_joined(_joined_hist(hist_a, hist_b), n_buckets, bucket_width, round_to)
+    return w1_joined(_joined_hist(hist_a, hist_b), n_buckets, bucket_width)
 
 
 def test_chi2_known_contingency(spark):
@@ -100,10 +100,10 @@ def test_w1_counts_gap_buckets(spark):
 
     val = lambda df: df.collect()[0]["w1"]  # noqa: E731
     assert val(w1(hist({0: 100}), hist({9: 100}), 10, 2.0)) == 18.0
-    assert val(w1(hist({0: 50, 9: 50}), hist({0: 50, 9: 50}), 10)) == 0.0
+    assert val(w1(hist({0: 50, 9: 50}), hist({0: 50, 9: 50}), 10, 1.0)) == 0.0
     assert val(w1(hist({3: 10}), hist({4: 10}), 10, 5.0)) == 5.0
     # mixed mass: a=uniform(0,1), b=all at 1 -> |cdf diff| = 0.5 at bucket 0
-    assert val(w1(hist({0: 5, 1: 5}), hist({1: 10}), 10)) == 0.5
+    assert val(w1(hist({0: 5, 1: 5}), hist({1: 10}), 10, 1.0)) == 0.5
 
 
 def test_by_group_equals_joined_per_group(spark):

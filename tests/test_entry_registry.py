@@ -1,9 +1,9 @@
 """The driver-query registry in ``__spark_entry__``: one ``@query``
 declaration per query feeds ``queries()``, ``oracle_sql()`` and the
 quadratic flag, in ``attestation_order``, and no oracle is spelled twice.
-Also the package-surface guards: every public function and constant has a
-non-test consumer and every option a call site that passes it (pure
-``ast``, no JVM)."""
+Also the package-surface guards: every public function, constant and
+method has a non-test consumer, every option two values across the
+non-test calls, and every imported name a use (pure ``ast``, no JVM)."""
 
 import ast
 import fnmatch
@@ -75,6 +75,13 @@ CONSUMERS = [
 # O(n^2) reference implementations that the LSH and banded tests compare the
 # approximate kernels against; both call private package kernels.
 REFERENCE_ONLY = {"near_dup_pairs", "simhash_pairs"}
+# options that only tests vary, besides those of REFERENCE_ONLY: the
+# compiler's reference combinators, each mode pinned against core/
+REFERENCE_OPTIONS = {
+    "functions/compiler.py:nested(mode=)": "applyFailures / refuteWithProof nesting",
+    "functions/compiler.py:nested(guard=)": "the optional-field gate of nested",
+    "functions/compiler.py:each_nested(mode=)": "refuteEachWithProof / validateEach",
+}
 
 
 def _trees(paths):
@@ -252,6 +259,81 @@ def test_every_public_constant_has_a_consumer():
     ) == []
 
 
+# classes whose public methods only tests call: the reference validator
+# surface (VCtx's checks and per-element combinators), pinned against core/
+REFERENCE_CLASSES = {"_Branch", "_ElementBranch"}
+
+
+def test_every_public_method_has_a_consumer():
+    """The same rule for the public methods and properties of the package's
+    top-level classes outside ``core/``: each is read as an attribute of its
+    name (``x.name``; names match as for options, so a collision can only
+    pass one) by the package, the entry, bench.py, jobs/, perfbench/ or
+    tools/, outside its own definition. Tests do not count.
+    REFERENCE_CLASSES is the allowlist."""
+    pkg = (p for p in PKG.rglob("*.py") if "core" not in p.relative_to(PKG).parts)
+    attrs = [
+        (p, n.lineno, n.attr)
+        for p, tree in _trees(CONSUMERS).items()
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Attribute)
+    ]
+    assert sorted(
+        f"{p.relative_to(PKG)}:{c.name}.{m.name}"
+        for p, tree in _trees(pkg).items()
+        for c in tree.body
+        if isinstance(c, ast.ClassDef) and c.name not in REFERENCE_CLASSES
+        for m in c.body
+        if isinstance(m, ast.FunctionDef) and not m.name.startswith("_")
+        if not any(
+            a == m.name and not (q == p and m.lineno <= n <= m.end_lineno)
+            for q, n, a in attrs
+        )
+    ) == []
+
+
+def _unused_imports(src):
+    """``(line, name)`` for each name an import in the module ``src`` binds
+    that no bare name of the module uses (``import a.b`` binds ``a``). An
+    import marked ``# noqa: F401`` (imported for its side effect) is
+    exempt, as is ``__future__``."""
+    tree, lines = ast.parse(src), src.splitlines()
+    used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    return [
+        (a.lineno, bound)
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.Import, ast.ImportFrom))
+        and getattr(n, "module", None) != "__future__"
+        for a in n.names
+        for bound in [a.asname or a.name.split(".")[0]]
+        if bound not in used and "# noqa: F401" not in lines[a.lineno - 1]
+    ]
+
+
+def test_unused_imports_counts_bare_names():
+    src = (
+        "from __future__ import annotations\nimport a.b\nimport c as d\n"
+        "from m import x, y as z\nimport s  # noqa: F401\nprint(a.b.f, z)\n"
+    )
+    assert _unused_imports(src) == [(3, "d"), (4, "x")]
+
+
+def test_every_import_is_used():
+    """Every name that a module of the package, the entry, bench.py, jobs/
+    or tools/ imports is used in that module. A package ``__init__.py``
+    re-exports, so it is exempt."""
+    paths = [
+        p
+        for p in CONSUMERS
+        if p.name != "__init__.py" and p.relative_to(ROOT).parts[0] != "perfbench"
+    ]
+    assert sorted(
+        f"{p.relative_to(ROOT)}:{line}:{name}"
+        for p in paths
+        for line, name in _unused_imports(p.read_text())
+    ) == []
+
+
 def _literal_oracles():
     """Names of the queries whose ``@query`` oracle argument spells SQL
     inline: it holds a string literal rather than only naming a shared
@@ -412,16 +494,20 @@ def test_unvaried_ignores_a_spelled_out_default():
 def test_every_option_is_passed_somewhere():
     """Each option — a defaulted parameter of a public package function, or
     of a public method or ``__init__`` of a package class, outside
-    ``core/`` — takes at least two values across the calls anywhere in the
-    repo, tests included (``blocks=1`` is a reference path only tests take).
+    ``core/`` — takes at least two values across the calls of the package,
+    the entry, bench.py, jobs/, perfbench/ or tools/. Tests do not count, as
+    for the function guard: a value only a test passes is no caller's need.
     An option that every call leaves at its default, or sets to it by
     hand, only ever takes that value, so it is a constant; one that every
     call sets to the same other value is a required parameter. Calls match by
     name, so a method's calls are the calls of any attribute of that name:
-    a collision can only pass an option, never fail one."""
+    a collision can only pass an option, never fail one. The options of
+    REFERENCE_ONLY and REFERENCE_OPTIONS are the allowlist."""
     pkg = (p for p in PKG.rglob("*.py") if "core" not in p.relative_to(PKG).parts)
     calls = {}
-    for tree in _trees([*CONSUMERS, *(ROOT / "tests").glob("*.py")]).values():
+    for tree in _trees(CONSUMERS).values():
         for name, c in _calls(tree):
             calls.setdefault(name, []).append(c)
-    assert _unvaried(_options(_trees(pkg)), calls) == []
+    options = [o for o in _options(_trees(pkg)) if o[1] not in REFERENCE_ONLY]
+    assert sorted(set(_unvaried(options, calls)) - set(REFERENCE_OPTIONS)) == []
+    assert sorted(set(REFERENCE_OPTIONS) - {o[0] for o in options}) == []

@@ -569,7 +569,7 @@ def test_batch_compiles_suite_once(spark, tmp_path, monkeypatch):
     from fsharp_data_validation_spark.functions import compiler
 
     suite = transcript_row_suite()
-    probe = suite.constraints[0].ok
+    probe = suite._constraints[0].ok
     passes = []
     coalesce = compiler.F.coalesce
 
@@ -890,7 +890,7 @@ def test_job_schema_gate(spark, tmp_path):
 
 def test_frame_sample_rawv_extraction(spark):
     """RAWV frame sampling: sampled frames are byte-identical to the source
-    slices, cadence is every_n with frame 0 always included, NULL payloads
+    slices, cadence is every second frame with frame 0 included, NULL payloads
     yield nothing, and compressed/unknown containers raise (stubbed codec)."""
     from pyspark.sql.types import BinaryType, LongType
 
@@ -902,15 +902,16 @@ def test_frame_sample_rawv_extraction(spark):
         [StructField("media_id", LongType()), StructField("payload", BinaryType())]
     )
     df = spark.createDataFrame([(1, p1), (2, p2), (3, None)], schema)
-    out = {(r["media_id"], r["frame_idx"]): r for r in frame_sample(df, 3).collect()}
-    assert sorted(out) == [(1, 0), (1, 3), (1, 6), (2, 0)]
+    out = {(r["media_id"], r["frame_idx"]): r for r in frame_sample(df).collect()}
+    assert sorted(out) == [(1, 0), (1, 2), (1, 4), (1, 6), (2, 0)]
     body = p1[8:]
-    assert bytes(out[(1, 3)]["frame"]) == body[3 * 48 : 4 * 48]
+    assert bytes(out[(1, 2)]["frame"]) == body[2 * 48 : 3 * 48]
+    assert bytes(out[(1, 6)]["frame"]) == body[6 * 48 : 7 * 48]
     assert (out[(1, 0)]["width"], out[(1, 0)]["height"]) == (8, 6)
 
     bad = spark.createDataFrame([(9, b"\x00\x00\x01\xb3fakempeg????")], schema)
     with pytest.raises(Exception, match="NotImplementedError|RAWV"):
-        frame_sample(bad, 3).collect()
+        frame_sample(bad).collect()
 
 
 def test_partition_pinned_drift_revalidates_exactly(spark, tmp_path):

@@ -50,7 +50,10 @@ def test_dsir_weights_direction_and_counts(spark):
 def test_weighted_sample_determinism_and_bias(spark):
     """A-ES: deterministic across runs, excludes non-positive weights, and
     heavily-weighted rows are sampled (far) more often — checked by giving
-    one row overwhelming weight across many salts."""
+    one row overwhelming weight across many id ranges (each an independent
+    hash draw)."""
+    from pyspark.sql import functions as F
+
     from fsharp_data_validation_spark.operators.sampling import weighted_sample
 
     rows = [(i, 1.0 if i else 10000.0) for i in range(50)] + [(99, 0.0), (98, -1.0)]
@@ -60,10 +63,10 @@ def test_weighted_sample_determinism_and_bias(spark):
     assert a == b and len(a) == 10  # deterministic
     assert all(r[0] not in (98, 99) for r in a)  # non-positive excluded
     assert [r[2] for r in a] == list(range(1, 11))  # rnk 1..k
-    # doc 0 has 10000x the weight: it must appear, and essentially always
-    # near the front, for any salt
+    # the first doc has 10000x the weight: it must appear whatever the ids
     hits = 0
-    for s in ("s1", "s2", "s3", "s4", "s5"):
-        got = weighted_sample(df, "doc_id", "w", 10, salt=s).collect()
-        hits += any(r["id"] == 0 for r in got)
+    for s in range(1, 6):
+        shifted = df.withColumn("doc_id", F.col("doc_id") + 1000 * s)
+        got = weighted_sample(shifted, "doc_id", "w", 10).collect()
+        hits += any(r["id"] == 1000 * s for r in got)
     assert hits == 5

@@ -88,7 +88,7 @@ def test_embedding_health_flags(spark):
     ]
     rows.append((7, [None, 1.0]))  # NULL component: its own defect class
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    r = embedding_health(df, "embedding", 2, round_to=6).collect()[0]
+    r = embedding_health(df, "embedding", 2).collect()[0]
     assert (
         r["n_vecs"], r["n_null"], r["n_wrong_dim"], r["n_nan"],
         r["n_null_comp"], r["n_zero"],
@@ -215,13 +215,14 @@ def test_semdedup_keep_earliest_within_cells(spark):
     assert out[1]["n_dup_earlier"] == 0
 
 
-def test_gemm_kernels_split_one_group_into_tiles(spark):
+def test_gemm_kernels_split_one_group_into_tiles(spark, monkeypatch):
     """One group of more than two ``_TILE`` rows: semdedup (one centroid,
     so one cell), near_dup_pairs_blocked (one block) and
     cross_corpus_cosine_pairs (one block, train side > 2 tiles) must find
     exactly the planted duplicates, whose rows sit in different tiles."""
     import numpy as np
 
+    from fsharp_data_validation_spark.operators import similarity
     from fsharp_data_validation_spark.operators.similarity import (
         _TILE,
         cross_corpus_cosine_pairs,
@@ -244,7 +245,8 @@ def test_gemm_kernels_split_one_group_into_tiles(spark):
     assert {i for i, (_, _, keep) in out.items() if not keep} == {b, c}
     assert (out[a][1], out[b][1], out[c][1]) == (0, 1, 2)
 
-    pairs = near_dup_pairs_blocked(vecs, threshold=0.8, blocks=1).collect()
+    monkeypatch.setattr(similarity, "_PAIR_BLOCKS", 1)
+    pairs = near_dup_pairs_blocked(vecs, threshold=0.8).collect()
     assert sorted(tuple(r) for r in pairs) == [(a, b, 1.0), (a, c, 1.0), (b, c, 1.0)]
 
     e = spark.createDataFrame(

@@ -300,7 +300,7 @@ def test_length_checks_match_character_length(spark):
         want += [length >= n, length <= n, length == n]
     branch.not_empty("not_empty").is_empty("is_empty")
     want += [F.length("s") > 0, F.length("s") == 0]
-    got = [c.ok for c in suite.constraints]
+    got = [c.ok for c in suite._constraints]
     assert len(got) == len(want)
 
     rows = df.select(
@@ -312,4 +312,4 @@ def test_length_checks_match_character_length(spark):
     assert any(r["s"] is None for r in rows)
     for r in rows:
         for i in range(len(got)):
-            assert r[f"got{i}"] == r[f"want{i}"], (r["s"], suite.constraints[i].code)
+            assert r[f"got{i}"] == r[f"want{i}"], (r["s"], suite._constraints[i].code)

@@ -26,32 +26,39 @@ def test_mad_outliers_robust_center(spark):
 
 
 def test_misra_gries_sketch_bounds_and_merge(spark):
+    from pyspark.sql import functions as F
+
     from fsharp_data_validation_spark.operators.stats import (
+        _MG_K,
         mg_partition_sketches,
         mg_rollup,
     )
 
-    # two partitions with a known skewed stream; k=2 forces truncation
+    # two partitions with a known skewed stream; k - 1 filler items at the
+    # (k+1)-th count force truncation
+    fill = _MG_K - 1
     data = (
         [("p1", "a")] * 10 + [("p1", "b")] * 6 + [("p1", "c")] * 3
+        + [("p1", f"f{i:04d}") for i in range(fill)] * 3
         + [("p1", "d")] * 1
         + [("p2", "a")] * 4 + [("p2", "c")] * 5 + [("p2", "e")] * 2
+        + [("p2", f"g{i:04d}") for i in range(fill)] * 2
     )
     df = spark.createDataFrame(data, "part string, v string")
-    sk = mg_partition_sketches(df, "part", "v", k=2).collect()
+    sk = mg_partition_sketches(df, "part", "v").collect()
     by_part = {}
     for r in sk:
         by_part.setdefault(r["part"], {})[r["item"]] = (r["est"], r["err"])
-    # p1: counts a=10 b=6 c=3 d=1 -> d(threshold)=c's 3; kept a:7 b:3, err=3
+    # p1: counts a=10 b=6, then c and the fillers at 3 -> d(threshold)=3;
+    # kept a:7 b:3, err=3 (c and the fillers drop at est 0)
     assert by_part["p1"] == {"a": (7, 3), "b": (3, 3)}
-    # p2: counts c=5 a=4 e=2 -> threshold=2; kept c:3 a:2, err=2
+    # p2: counts c=5 a=4, then e and the fillers at 2 -> threshold=2;
+    # kept c:3 a:2, err=2
     assert by_part["p2"] == {"c": (3, 2), "a": (2, 2)}
 
     rolled = {
         r["item"]: (r["est_count"], r["err_bound"])
-        for r in mg_rollup(
-            mg_partition_sketches(df, "part", "v", k=2)
-        ).collect()
+        for r in mg_rollup(mg_partition_sketches(df, "part", "v"), top=10).collect()
     }
     true = {"a": 14, "b": 6, "c": 8, "d": 1, "e": 2}
     # merge rule: est sums, errs add (3 + 2 = 5); est <= true <= est + err
@@ -59,18 +66,12 @@ def test_misra_gries_sketch_bounds_and_merge(spark):
     for item, (est, err) in rolled.items():
         assert est <= true[item] <= est + err
 
-    # re-truncation to k=1 moves the subtracted count into the error bound
-    retrunc = mg_rollup(mg_partition_sketches(df, "part", "v", k=2), k=1).collect()
-    assert len(retrunc) == 1
-    r = retrunc[0]
-    assert r["item"] == "a" and r["est_count"] == 6 and r["err_bound"] == 8
-    assert r["est_count"] <= true["a"] <= r["est_count"] + r["err_bound"]
-
-    # partition-subset rollup never rescans: restrict to p2 only
+    # partition-subset rollup never rescans: restrict the sketch table to p2
     only_p2 = {
         r["item"]: (r["est_count"], r["err_bound"])
         for r in mg_rollup(
-            mg_partition_sketches(df, "part", "v", k=2), parts=["p2"]
+            mg_partition_sketches(df, "part", "v").filter(F.col("part") == "p2"),
+            top=10,
         ).collect()
     }
     assert only_p2 == {"c": (3, 2), "a": (2, 2)}
@@ -86,7 +87,7 @@ def test_misra_gries_exact_when_k_exceeds_vocab(spark):
     df = spark.createDataFrame(data, "part string, v string")
     rolled = {
         r["item"]: (r["est_count"], r["err_bound"])
-        for r in mg_rollup(mg_partition_sketches(df, "part", "v", k=16)).collect()
+        for r in mg_rollup(mg_partition_sketches(df, "part", "v"), top=10).collect()
     }
     assert rolled == {"x": (7, 0), "y": (2, 0)}
 
@@ -110,9 +111,7 @@ def test_moments_rollup_exact_merge(spark):
         moments_rollup,
     )
 
-    got = moments_rollup(
-        moments_partition_sketches(df, "part", "v"), round_to=6
-    ).collect()[0]
+    got = moments_rollup(moments_partition_sketches(df, "part", "v")).collect()[0]
 
     vals = [v for _, v in rows]
     n = len(vals)
@@ -121,19 +120,19 @@ def test_moments_rollup_exact_merge(spark):
     m3 = sum((x - mu) ** 3 for x in vals)
     m4 = sum((x - mu) ** 4 for x in vals)
     assert got["n_parts"] == 4 and got["n_values"] == n
-    assert math.isclose(got["mean"], mu, rel_tol=1e-9, abs_tol=1e-6)
-    assert math.isclose(got["var_pop"], m2 / n, rel_tol=1e-6)
-    assert math.isclose(
-        got["skew"], math.sqrt(n) * m3 / m2**1.5, rel_tol=1e-5, abs_tol=1e-5
-    )
-    assert math.isclose(
-        got["kurt"], n * m4 / (m2 * m2) - 3, rel_tol=1e-5, abs_tol=1e-5
-    )
+    # the rollup rounds to 4 decimals: each value is within half a unit of
+    # the 4th decimal of the direct moments
+    half = 5e-5 + 1e-9
+    assert math.isclose(got["mean"], mu, rel_tol=0, abs_tol=half)
+    assert math.isclose(got["var_pop"], m2 / n, rel_tol=0, abs_tol=half)
+    assert math.isclose(got["skew"], math.sqrt(n) * m3 / m2**1.5, rel_tol=0, abs_tol=half)
+    assert math.isclose(got["kurt"], n * m4 / (m2 * m2) - 3, rel_tol=0, abs_tol=half)
 
 
 def test_moments_rollup_subset_and_degenerate(spark):
-    """Partition-subset rollup answers from the sketch table alone; an
-    all-constant subset exercises the M2=0 guard (skew/kurt -> 0)."""
+    """Partition-subset rollup (a filter on the sketch table) answers from
+    the sketch table alone; an all-constant subset exercises the M2=0 guard
+    (skew/kurt -> 0)."""
     from fsharp_data_validation_spark.operators.stats import (
         moments_partition_sketches,
         moments_rollup,
@@ -143,10 +142,10 @@ def test_moments_rollup_subset_and_degenerate(spark):
     sk = moments_partition_sketches(
         spark.createDataFrame(rows, "part string, v double"), "part", "v"
     )
-    only_a = moments_rollup(sk, parts=["a"], round_to=6).collect()[0]
+    only_a = moments_rollup(sk.filter("part = 'a'")).collect()[0]
     assert only_a["n_values"] == 2 and only_a["mean"] == 2.0
     assert only_a["var_pop"] == 1.0  # population variance of {1,3}
-    only_b = moments_rollup(sk, parts=["b"], round_to=6).collect()[0]
+    only_b = moments_rollup(sk.filter("part = 'b'")).collect()[0]
     assert only_b["var_pop"] == 0.0 and only_b["skew"] == 0.0
     assert only_b["kurt"] == 0.0  # guard, not NaN
 
@@ -158,10 +157,11 @@ def test_skew_report_null_and_shares(spark):
     df = spark.createDataFrame(rows, "k string, other string")
     got = {
         (r["key"], r["rnk"]): (r["value"], r["n"], r["share"], r["n_distinct"])
-        for r in skew_report(df, ["k"], top=2).collect()
+        for r in skew_report(df, ["k"]).collect()
     }
     assert got[("k", 1)] == ("hot", 6, 0.6, 3)
     assert got[("k", 2)] == ("<NULL>", 3, 0.3, 3)  # NULL keys count
+    assert got[("k", 3)] == ("a", 1, 0.1, 3)
 
 
 def test_hll_sketch_rollup_merge_property(spark):
@@ -189,7 +189,7 @@ def test_hll_sketch_rollup_merge_property(spark):
     assert whole["n_parts"] == 10
     assert abs(whole["distinct_estimate"] - exact_whole) / exact_whole < 0.05
 
-    subset = hll_rollup(sk, ["0", "1", "2"]).collect()[0]
+    subset = hll_rollup(sk.filter("part in ('0', '1', '2')")).collect()[0]
     exact_subset = (
         df.filter("day in ('0','1','2')")
         .selectExpr("count(distinct user) AS d")

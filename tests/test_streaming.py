@@ -30,11 +30,11 @@ from fsharp_data_validation_spark.streaming.validate_stream import (
 )
 
 
-def w1(hist_a, hist_b, n_buckets, bucket_width=1.0, round_to=4):
+def w1(hist_a, hist_b, n_buckets, bucket_width):
     """Wasserstein-1 distance between two separate histograms."""
     from fsharp_data_validation_spark.operators.drift import _joined_hist, w1_joined
 
-    return w1_joined(_joined_hist(hist_a, hist_b), n_buckets, bucket_width, round_to)
+    return w1_joined(_joined_hist(hist_a, hist_b), n_buckets, bucket_width)
 
 
 def test_run_available_now_cleans_up(spark, tmp_path, monkeypatch):
@@ -85,16 +85,16 @@ def test_windowed_violation_rate_plan(spark):
 def _drift_rows():
     """(schema, w1, w2, sentinel) of the numeric drift pins: baseline-like
     values cycle over buckets 0..3 at t0, shifted values over 12..19 at
-    t0+5min; the sentinel far in the future advances the watermark so both
-    real windows FINALIZE in append mode (its own window stays open,
-    unemitted)."""
+    t0 + 1 day, one daily window each; the sentinel far in the future
+    advances the watermark so both real windows FINALIZE in append mode (its
+    own window stays open, unemitted)."""
     schema = StructType(
         [StructField("v", DoubleType()), StructField("ts", TimestampType())]
     )
     t0 = datetime(2026, 1, 1, 12, 0, 0)
     w1 = [(float(i % 4) * 25.0 + 1, t0) for i in range(200)]
-    w2 = [(float(12 + i % 8) * 25.0 + 1, t0 + timedelta(minutes=5)) for i in range(200)]
-    sentinel = [(1.0, t0 + timedelta(minutes=30))]
+    w2 = [(float(12 + i % 8) * 25.0 + 1, t0 + timedelta(days=1)) for i in range(200)]
+    sentinel = [(1.0, t0 + timedelta(days=30))]
     return schema, w1, w2, sentinel
 
 
@@ -115,9 +115,7 @@ def test_windowed_drift_stream_matches_batch_psi(spark):
 
     drift = run_available_now(
         [spark.createDataFrame(p, schema) for p in (w1, w2, sentinel)],
-        lambda s: windowed_drift_stream(
-            s, baseline, "v", 25.0, 20, "ts", "1 minute", "2 minutes"
-        ),
+        lambda s: windowed_drift_stream(s, baseline, "v", 25.0, 20),
     )
     out = sorted(drift.collect(), key=lambda r: r["win"]["start"])
     assert [r["rows"] for r in out] == [200, 200]
@@ -148,10 +146,10 @@ def test_windowed_chi2_stream_matches_batch(spark):
     t0 = datetime(2026, 1, 1, 12, 0, 0)
     mix = ["user"] * 3 + ["assistant"] * 2 + ["tool"]
     w1 = [(mix[i % 6], t0) for i in range(120)]  # baseline-like
-    w2 = [("assistant", t0 + timedelta(minutes=5)) for _ in range(100)] + [
-        ("robot", t0 + timedelta(minutes=5)) for _ in range(20)  # unseen cat
+    w2 = [("assistant", t0 + timedelta(days=1)) for _ in range(100)] + [
+        ("robot", t0 + timedelta(days=1)) for _ in range(20)  # unseen cat
     ]
-    sentinel = [("user", t0 + timedelta(minutes=30))]
+    sentinel = [("user", t0 + timedelta(days=30))]
 
     baseline = (
         spark.createDataFrame(w1, schema)
@@ -160,13 +158,11 @@ def test_windowed_chi2_stream_matches_batch(spark):
     )
     out_stream = run_available_now(
         [spark.createDataFrame(p, schema) for p in (w1, w2, sentinel)],
-        lambda s: windowed_chi2_stream(
-            s, baseline, "role", "ts", "1 minute", "2 minutes", round_to=6
-        ),
+        lambda s: windowed_chi2_stream(s, baseline, "role"),
     )
     out = sorted(out_stream.collect(), key=lambda r: r["win"]["start"])
     assert [r["rows"] for r in out] == [120, 120]
-    assert out[0]["chi2"] < 1e-6 and out[0]["dof"] == 2  # identical mix
+    assert out[0]["chi2"] == 0.0 and out[0]["dof"] == 2  # identical mix
     assert out[1]["chi2"] > 50 and out[1]["dof"] == 3  # skew + unseen cat
 
     # cross-check each window against the batch closed form over the same
@@ -182,7 +178,7 @@ def test_windowed_chi2_stream_matches_batch(spark):
             for c in sorted(set(base_n) | set(win_n))
         ]
         counts = spark.createDataFrame(cells, "cat string, na long, nb long")
-        want = chi2_joined(counts, round_to=6).collect()[0]
+        want = chi2_joined(counts).collect()[0]
         assert abs(got["chi2"] - want["chi2"]) <= 1e-3, (got["chi2"], want["chi2"])
         assert got["dof"] == want["dof"]
 
@@ -200,13 +196,11 @@ def test_windowed_w1_stream_matches_batch(spark):
     baseline = histogram(spark.createDataFrame(w1rows, schema), "v", 25.0, 20)
     out_stream = run_available_now(
         [spark.createDataFrame(p, schema) for p in (w1rows, w2rows, sentinel)],
-        lambda s: windowed_w1_stream(
-            s, baseline, "v", 25.0, 20, "ts", "1 minute", "2 minutes", round_to=6
-        ),
+        lambda s: windowed_w1_stream(s, baseline, "v", 25.0, 20),
     )
     out = sorted(out_stream.collect(), key=lambda r: r["win"]["start"])
     assert [r["rows"] for r in out] == [200, 200]
-    assert out[0]["w1"] < 1e-6  # same distribution as baseline
+    assert out[0]["w1"] == 0.0  # same distribution as baseline
     assert out[1]["w1"] > 100  # mass moved ~12 buckets x 25 width
 
     for rows, got in ((w1rows, out[0]["w1"]), (w2rows, out[1]["w1"])):
@@ -215,7 +209,6 @@ def test_windowed_w1_stream_matches_batch(spark):
             baseline,
             n_buckets=20,
             bucket_width=25.0,
-            round_to=6,
         ).collect()[0]["w1"]
         assert abs(got - want) <= 1e-3, (got, want)
 
@@ -256,7 +249,7 @@ def _rate_anomaly_stream_matches_batch(spark, max_records):
     )
     t0 = datetime(2026, 1, 1, 12, 0, 0)
     rows = []
-    for w in range(10):
+    for w in range(10):  # one daily window each
         k = 8 if w == 8 else 2  # constant 0.2 rate, spike at window 8
         for i in range(10):
             rows.append(
@@ -266,10 +259,10 @@ def _rate_anomaly_stream_matches_batch(spark, max_records):
                     "robot" if i < k else "user",
                     "hello",
                     None,
-                    t0 + timedelta(minutes=w, seconds=3 * i),
+                    t0 + timedelta(days=w, seconds=3 * i),
                 )
             )
-    sentinel = [("c1", 999, "user", "hello", None, t0 + timedelta(minutes=60))]
+    sentinel = [("c1", 999, "user", "hello", None, t0 + timedelta(days=60))]
 
     # stage 1 smoke: turns stream -> closed-window rates
     rates = sorted(
@@ -305,23 +298,21 @@ def _rate_anomaly_stream_matches_batch(spark, max_records):
     try:
         if max_records is not None:
             spark.conf.set(conf, str(max_records))
-        ra = run_available_now(
-            parts,
-            lambda s: windowed_rate_anomaly_stream(s, z_threshold=3.0),
-        )
+        ra = run_available_now(parts, windowed_rate_anomaly_stream)
     finally:
         spark.conf.set(conf, old)
     got = {r["win_start"]: r for r in ra.collect()}
     assert len(got) == 10
 
-    # batch closed form over the same windows (date_trunc minute == the
-    # 1-minute event-time windows; sentinel excluded — its window never closed)
+    # batch closed form over the same windows (date_trunc day == the daily
+    # event-time windows in the UTC session; sentinel excluded — its window
+    # never closed), at the streaming monitor's threshold
     batch_df = spark.createDataFrame(rows, schema)
     anyf = transcript_row_suite().any_failure_column()
     want = {
         r["day"]: r
         for r in rate_anomaly(
-            batch_df, F.date_trunc("minute", F.col("ts")), anyf
+            batch_df, F.date_trunc("day", F.col("ts")), anyf, vs._Z_THRESHOLD
         ).collect()
     }
     assert set(got) == set(want)
@@ -332,7 +323,7 @@ def _rate_anomaly_stream_matches_batch(spark, max_records):
 
     # the spike is flagged exactly as in the batch pin: constant baseline,
     # sd 0, z NULL
-    spike = got[t0 + timedelta(minutes=8)]
+    spike = got[sorted(got)[8]]
     assert spike["anomaly"] is True and spike["z"] is None
 
 

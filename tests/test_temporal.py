@@ -60,12 +60,12 @@ def test_asof_join_semantics(spark, events):
 
 def test_sessionize_boundaries(spark):
     rows = [
-        # user 7: events at 0s, 100s (same session @gap 120), 221s (new:
-        # gap 121 > 120), 341s (same: gap exactly 120 is NOT a new session)
+        # user 7: events at 0s, 1500s (same session @gap 1800), 3301s (new:
+        # gap 1801 > 1800), 5101s (same: gap exactly 1800 is NOT a new session)
         Row(event_id=1, user_id=7, ts=ts(0)),
-        Row(event_id=2, user_id=7, ts=ts(100)),
-        Row(event_id=3, user_id=7, ts=ts(221)),
-        Row(event_id=4, user_id=7, ts=ts(341)),
+        Row(event_id=2, user_id=7, ts=ts(1500)),
+        Row(event_id=3, user_id=7, ts=ts(3301)),
+        Row(event_id=4, user_id=7, ts=ts(5101)),
         # user 8: single event -> single session of one
         Row(event_id=5, user_id=8, ts=ts(50)),
     ]
@@ -77,10 +77,10 @@ def test_sessionize_boundaries(spark):
             r["session_end"],
             r["duration_us"],
         )
-        for r in sessionize(df, "user_id", "ts", "event_id", gap_seconds=120).collect()
+        for r in sessionize(df, "user_id", "ts", "event_id").collect()
     }
-    assert out[(7, 1)] == (2, ts(0), ts(100), 100_000_000)
-    assert out[(7, 2)] == (2, ts(221), ts(341), 120_000_000)
+    assert out[(7, 1)] == (2, ts(0), ts(1500), 1_500_000_000)
+    assert out[(7, 2)] == (2, ts(3301), ts(5101), 1_800_000_000)
     assert out[(8, 1)] == (1, ts(50), ts(50), 0)
     assert len(out) == 3
 
@@ -145,7 +145,7 @@ def test_sessionize_salted_equals_sessionize(spark):
 
     want = sorted(
         tuple(r)
-        for r in sessionize(df, "user_id", "ts", "event_id", gap_seconds=1800).collect()
+        for r in sessionize(df, "user_id", "ts", "event_id").collect()
     )
     for bucket_seconds in (86400, 3600, 600):  # incl. bucket < gap
         got = sorted(

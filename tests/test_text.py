@@ -1,7 +1,8 @@
 """The text family (``operators/text.py``): the word-n-gram builder
 against a pure-Python spec, the Gopher repetition rules against their
 explode + hash-aggregate specs, Zipf, PMI, vocabulary growth, the
-curate-dedup-pack pipeline, BPE token counts and bigram perplexity.
+curate-dedup-pack pipeline, BPE token counts, bigram perplexity and TF-IDF
+top terms.
 Semantics pinned on hand-built fixtures; the sf0.01 DuckDB oracles cover
 the derived-table scale."""
 
@@ -88,7 +89,7 @@ def test_top_ngram_fraction_tiebreak_and_short_docs(spark):
         (5, None),
     ]
     df = spark.createDataFrame(docs, "doc_id int, text string")
-    got = {r["id"]: r for r in top_ngram_fraction(df, "doc_id", "text", 2).collect()}
+    got = {r["id"]: r for r in top_ngram_fraction(df, "doc_id", "text").collect()}
     assert set(got) == {1, 2, 4}
     assert got[1]["top_ngram"] == "a b" and got[1]["n_occurrences"] == 3
     # 3 occurrences x 3 chars / 11 chars
@@ -119,7 +120,7 @@ def test_dup_ngram_fraction_counts_and_cap(spark):
         (3, None),
     ]
     df = spark.createDataFrame(docs, "doc_id int, text string")
-    got = {r["id"]: r for r in dup_ngram_fraction(df, "doc_id", "text", 3).collect()}
+    got = {r["id"]: r for r in dup_ngram_fraction(df, "doc_id", "text").collect()}
     assert set(got) == {1}
     assert got[1]["n_dup_ngrams"] == 3
     assert got[1]["dup_char_frac"] == 1.0  # 35 covered chars / 17 -> capped
@@ -267,13 +268,13 @@ def test_gopher_kernels_equivalent(spark):
         for i in range(50)
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    for n in (1, 2, 3):
-        a = sorted(map(tuple, top_ngram_fraction(df, "doc_id", "text", n).collect()))
-        b = sorted(map(tuple, _top_ngram_explode(df, n).collect()))
-        assert a == b, f"top_ngram kernels diverge at n={n}"
-        c = sorted(map(tuple, dup_ngram_fraction(df, "doc_id", "text", n).collect()))
-        d = sorted(map(tuple, _dup_ngram_explode(df, n).collect()))
-        assert c == d, f"dup_ngram kernels diverge at n={n}"
+    # the top rule folds word bigrams, the dup rule word 3-grams
+    a = sorted(map(tuple, top_ngram_fraction(df, "doc_id", "text").collect()))
+    b = sorted(map(tuple, _top_ngram_explode(df, 2).collect()))
+    assert a == b, "top_ngram kernels diverge"
+    c = sorted(map(tuple, dup_ngram_fraction(df, "doc_id", "text").collect()))
+    d = sorted(map(tuple, _dup_ngram_explode(df, 3).collect()))
+    assert c == d, "dup_ngram kernels diverge"
 
 
 def test_curate_dedup_pack_keep_earliest_chain(spark):
@@ -443,15 +444,15 @@ def test_bpe_token_count_matches_python_spec(spark):
     assert got[6] == 40  # no piece matches 'xxxx' -> one token per char
 
 
-def test_bpe_vocab_rejects_unsafe_pieces():
+def test_bpe_vocab_rejects_unsafe_pieces(monkeypatch):
     import pytest as _pytest
 
-    from fsharp_data_validation_spark.operators.text import bpe_pattern
+    from fsharp_data_validation_spark.operators import text
 
-    with _pytest.raises(ValueError):
-        bpe_pattern(["ok", "bad|piece"])
-    with _pytest.raises(ValueError):
-        bpe_pattern(["Upper"])
+    for vocab in (["ok", "bad|piece"], ["Upper"]):
+        monkeypatch.setattr(text, "BPE_VOCAB", frozenset(vocab))
+        with _pytest.raises(ValueError):
+            text.bpe_pattern()
 
 
 def test_pack_windows_bpe_parity(spark):
@@ -501,36 +502,6 @@ def test_pack_windows_bpe_parity(spark):
             assert got[(c, i)] == (n, chunk), (c, i, got[(c, i)], (n, chunk))
 
 
-def test_context_budget_bpe(spark):
-    from datetime import datetime
-
-    from fsharp_data_validation_spark.operators.crossrow import (
-        context_budget_violations,
-    )
-    from fsharp_data_validation_spark.operators.text import bpe_token_count_col
-
-    ts = datetime(2024, 1, 1)
-    rows = [
-        ("c1", 0, "user", "the table scan", None, ts),
-        ("c1", 1, "assistant", "tablescan queueing overflow", None, ts),
-        ("c1", 2, "user", "x", None, ts),
-    ]
-    df = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-    )
-    ns = [
-        r["n"]
-        for r in df.orderBy("turn_idx")
-        .select(bpe_token_count_col("text").alias("n"))
-        .collect()
-    ]
-    budget = ns[0] + ns[1]  # third turn crosses the line
-    out = context_budget_violations(df, budget=budget, tokenizer="bpe").collect()
-    assert [(r["turn_idx"], r["cum_tokens"]) for r in out] == [
-        (2, ns[0] + ns[1] + ns[2])
-    ]
-
-
 def test_bpe_token_count_unicode_fuzz(spark):
     """Seeded random-string fuzz (ASCII + latin-1 + CJK + astral + spaces +
     regex metacharacters in the TEXT) against the python re spec of the
@@ -564,3 +535,28 @@ def test_bpe_token_count_unicode_fuzz(spark):
     for i, t in enumerate(texts):
         want = len(pat.findall(t.lower()))
         assert got[i] == want, (repr(t), got[i], want)
+
+
+def test_tfidf_top_terms_scores_and_ties(spark):
+    from fsharp_data_validation_spark.operators.text import tfidf_top_terms
+
+    docs = spark.createDataFrame(
+        [
+            (1, "apple apple banana shared"),
+            (2, "banana cherry shared"),
+            (3, "cherry cherry cherry shared"),
+        ],
+        "doc_id long, text string",
+    )
+    out = {
+        (r["doc_id"], r["rnk"]): (r["term"], r["tf"], r["score"])
+        for r in tfidf_top_terms(docs, "doc_id", "text").collect()
+    }
+    # doc 1: apple tf=2 df=1 -> 2*ln(3); banana tf=1 df=2 -> ln(1.5)
+    assert out[(1, 1)] == ("apple", 2, round(2 * math.log(3), 4))
+    assert out[(1, 2)] == ("banana", 1, round(math.log(1.5), 4))
+    # doc 2: banana and cherry tie (tf=1, df=2) -> lexicographic order
+    assert out[(2, 1)][0] == "banana" and out[(2, 2)][0] == "cherry"
+    # 'shared' in every doc -> idf ln(1)=0, never ranks above positives
+    assert all(term != "shared" or rnk > 1 for (_, rnk), (term, _, _) in out.items())
+    assert out[(1, 3)] == ("shared", 1, 0.0)  # the top 3 reach the zero score

@@ -100,16 +100,19 @@ def _planted(spark):
     return spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
 
 
-def test_grouped_kernels_decode_multi_chunk_groups_whole(spark):
+def test_grouped_kernels_decode_multi_chunk_groups_whole(spark, monkeypatch):
     """semdedup's cell kernel and near_dup_pairs_blocked's tile kernel get a
     ``pa.Table`` of several record batches per group when Arrow batches are
     capped at 7 rows; the output must equal the default (one-batch) run."""
+    from fsharp_data_validation_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "_PAIR_BLOCKS", 2)
     df = _planted(spark)
     cents = np.stack([np.ones(8), -np.ones(8)])
 
     def run():
         dd = sorted(semdedup(df, threshold=0.99, centroids=cents).collect())
-        pairs = sorted(near_dup_pairs_blocked(df, threshold=0.99, blocks=2).collect())
+        pairs = sorted(near_dup_pairs_blocked(df, threshold=0.99).collect())
         return dd, pairs
 
     default = run()

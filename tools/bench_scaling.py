@@ -218,8 +218,9 @@ MODES = {
         "synthetic corpus ({n:,} docs with planted near-dups, `tools/bench_scaling.py "
         "gen_docs`)",
         "docs/sec",
-        lambda spark, docs: [("minhash_lsh_pairs", dedup.minhash_lsh_pairs(
-            docs, "doc_id", "text", 0.8))],
+        lambda spark, docs: [
+            ("minhash_lsh_pairs", dedup.minhash_lsh_pairs(docs, "doc_id", "text"))
+        ],
     ),
     "curate": Mode(
         DOCS,
@@ -257,7 +258,7 @@ MODES = {
         "docs, `tools/bench_scaling.py gen_docs`)",
         "docs/sec",
         lambda spark, docs: [
-            ("top_ngram_fraction", text.top_ngram_fraction(docs, "doc_id", "text", 2)),
+            ("top_ngram_fraction", text.top_ngram_fraction(docs, "doc_id", "text")),
             ("zipf_fit", text.zipf_fit(docs, "text", top_k=1000)),
             ("pmi_bigrams", text.pmi_bigrams(docs, "text", min_count=25, top_k=50)),
         ],
