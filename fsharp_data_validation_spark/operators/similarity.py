@@ -6,12 +6,12 @@
   (numpy matmul per batch — the 100 TB scale path; no per-row Python).
 
 Every Python kernel here is an ``arrow_udf`` (``pa.Array`` in and out) or a
-``groupBy().applyInArrow`` (``pa.Table`` in and out), and vector columns
-cross the boundary only through ``_matrix``.
-
-Cosine math is done after casting to array<double> so Spark's
-element-by-element accumulation matches the DuckDB oracle bit-for-bit
-(float32 multiply-then-sum would diverge).
+``groupBy().applyInArrow`` (``pa.Table`` in and out). Vector columns cross
+the boundary and the shuffle at their stored width (no JVM-side cast) and
+only through ``_matrix``, the one place that widens them to float64 for the
+math. The widening is exact, so ``array<float>`` input gives the rows of its
+``array<double>`` cast (float32 multiply-then-sum would diverge from the
+DuckDB oracles).
 """
 
 from __future__ import annotations
@@ -35,15 +35,12 @@ from ..rounding import half_up
 from .dedup import _bucket_pairs
 
 
-def _as_double(df: DataFrame, vec_col: str) -> DataFrame:
-    return df.withColumn(vec_col, F.col(vec_col).cast("array<double>"))
-
-
 def _matrix(arr: pa.Array | pa.ChunkedArray) -> np.ndarray:
-    """``(n, dim)`` float64 matrix of a ``list<double>`` Arrow array or
-    ChunkedArray, read from its offsets and values buffer — no per-row
-    objects. NULL or ragged rows raise ``ValueError``; checking the offsets
-    is what catches ragged rows, which a bare reshape would misread."""
+    """``(n, dim)`` float64 matrix of a ``list<float>`` or ``list<double>``
+    Arrow array or ChunkedArray, read from its offsets and values buffer —
+    no per-row objects; float32 values widen exactly. NULL or ragged rows
+    raise ``ValueError``; checking the offsets is what catches ragged rows,
+    which a bare reshape would misread."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     n = len(arr)
@@ -71,6 +68,16 @@ _TILE = 4096
 _PAIR_BLOCKS = 8  # near_dup_pairs_blocked: hash blocks of the vectors
 
 
+def _nonzero_rows(m: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Offsets, rows and L2 norms of ``m``'s nonzero-norm rows (``m``
+    itself when no row is zero)."""
+    norms = np.sqrt(np.einsum("ij,ij->i", m, m))
+    rows = np.flatnonzero(norms > 0.0)
+    if len(rows) == len(m):
+        return rows, m, norms
+    return rows, m[rows], norms[rows]
+
+
 def _cosine_hits(
     a: np.ndarray, b: np.ndarray, threshold: float, round_to: int
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -80,11 +87,14 @@ def _cosine_hits(
     ``_TILE x _TILE`` blocks, so memory is bounded by the tile plus the
     hits. Zero-norm rows (cosine undefined) never hit. Only entries within
     ``10**-round_to`` of the threshold are rounded: rounding adds at most
-    ``0.5 * 10**-round_to``, so an entry below that margin cannot hit."""
-    na = np.sqrt(np.einsum("ij,ij->i", a, a))
-    nb = np.sqrt(np.einsum("ij,ij->i", b, b))
-    ra, rb = np.flatnonzero(na > 0.0), np.flatnonzero(nb > 0.0)
-    a, na, b, nb = a[ra], na[ra], b[rb], nb[rb]
+    ``0.5 * 10**-round_to``, so an entry below that margin cannot hit.
+    With ``b is a`` (self-pairs) the norms and the zero-norm filter are
+    computed once; ``b`` still gets its own copy of the rows, because
+    numpy routes ``x @ x.T`` over one buffer to syrk, whose last bits can
+    differ from the GEMM's."""
+    self_pairs = b is a
+    ra, a, na = _nonzero_rows(a)
+    rb, b, nb = (ra, a.copy(), na) if self_pairs else _nonzero_rows(b)
     floor = threshold - 10.0**-round_to
     parts = [(np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0))]
     for lo in range(0, len(a), _TILE):
@@ -119,12 +129,8 @@ def brute_force_topk(vectors: DataFrame, queries: DataFrame, k: int = 3) -> Data
     """Exact cosine top-k per query: broadcast the (small) query set against
     the vector table — one scan of the vectors, no shuffle of the big side;
     rank per query. Returns (query_id, neighbor_id, rnk, sim)."""
-    v = _as_double(vectors, "embedding").select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("v")
-    )
-    q = _as_double(queries, "embedding").select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q")
-    )
+    v = vectors.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("v"))
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q"))
     scored = (
         v.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
         .select(
@@ -147,12 +153,8 @@ def near_dup_pairs(vectors: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Embedding-cosine near-dup pairs (id_a < id_b, sim >= threshold).
     Exact O(n^2) form — the oracle path; use lsh_buckets to prefilter at
     scale (candidates only within matching sign-sketch buckets)."""
-    a = _as_double(vectors, "embedding").select(
-        F.col("vec_id").alias("id_a"), F.col("embedding").alias("va")
-    )
-    b = _as_double(vectors, "embedding").select(
-        F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb")
-    )
+    a = vectors.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
+    b = vectors.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
         .select(
@@ -176,7 +178,7 @@ def near_dup_pairs_blocked(vectors: DataFrame, threshold: float = 0.8) -> DataFr
     output as ``near_dup_pairs`` (values rounded identically) — it is
     oracle-checked against the same exact-cosine SQL.
     """
-    v = _as_double(vectors, "embedding").select(
+    v = vectors.select(
         F.col("vec_id").alias("vid"),
         F.col("embedding").alias("v"),
         F.pmod(F.xxhash64(F.col("vec_id")), F.lit(_PAIR_BLOCKS))
@@ -207,7 +209,8 @@ def near_dup_pairs_blocked(vectors: DataFrame, threshold: float = 0.8) -> DataFr
         m = _matrix(table["v"])
         vids = table["vid"].to_numpy().astype(np.int64)
         ia, ib = np.flatnonzero(blk == bi), np.flatnonzero(blk == bj)
-        i, j, sim = _cosine_hits(m[ia], m[ib], threshold, 6)
+        a = m[ia]  # a diagonal tile is a self-pair call: b is a
+        i, j, sim = _cosine_hits(a, a if bi == bj else m[ib], threshold, 6)
         a_ids, b_ids = vids[ia][i], vids[ib][j]
         # a diagonal tile sees every unordered pair twice: keep one; an
         # off-diagonal tile sees it once, in either order
@@ -219,33 +222,45 @@ def near_dup_pairs_blocked(vectors: DataFrame, threshold: float = 0.8) -> DataFr
     return tiles.groupBy("bi", "bj").applyInArrow(tile_kernel, out_schema)
 
 
-def _sq_dists(m: np.ndarray, centers: np.ndarray) -> np.ndarray:
-    """Squared euclidean distances (rows x centers) via the GEMM identity
-    ||a-c||^2 = ||a||^2 + ||c||^2 - 2 a.c — O(rows x cells) memory in
-    ``_TILE``-row tiles, vs the 3-D broadcast (rows x cells x dim) the
-    naive form materializes. At the 10^4-10^5 cells a web-scale quantizer
-    uses, the broadcast is a >10 GB allocation per Arrow batch and the
-    GEMM is a BLAS call; at the 8-16 cells of the oracle configs both are
-    exact float64 and agree with DuckDB's list_distance ordering (verified
-    by the semdedup/ann_recall oracle sweeps). Clamped at 0 so float
-    cancellation can't produce tiny negatives."""
+def _sq_dists(m: np.ndarray, centers: np.ndarray):
+    """Squared euclidean distances of ``m``'s rows to ``centers``, one
+    ``_TILE``-row tile at a time: yields ``(lo, d)`` for rows ``lo:lo +
+    len(d)``, and the next tile overwrites ``d``, so a consumer reduces
+    each tile first and no rows x cells matrix exists. A tile is one GEMM
+    against the pre-scaled centroids, ``||t-c||^2 = (||t||^2 + ||c||^2) -
+    t.(2c)``, built in place and clamped at 0 (float cancellation); scaling
+    by 2 commutes with rounding, so it is bitwise the unfused
+    ``... - 2 * (t @ c.T)``. The naive 3-D broadcast (rows x cells x dim)
+    would be a >10 GB allocation per Arrow batch at a web-scale quantizer's
+    10^4-10^5 cells; at the oracle configs' 8-16 cells both are exact
+    float64 and order like DuckDB's list_distance (semdedup/ann_recall
+    oracle sweeps)."""
     c2 = (centers * centers).sum(axis=1)[None, :]
-    out = np.empty((m.shape[0], centers.shape[0]), dtype="float64")
-    for lo in range(0, m.shape[0], _TILE):
+    c2x = (2.0 * centers).T
+    g = np.empty((min(len(m), _TILE), len(centers)))
+    s = np.empty_like(g)
+    for lo in range(0, len(m), _TILE):
         t = m[lo:lo + _TILE]
-        d = (t * t).sum(axis=1)[:, None] + c2 - 2.0 * (t @ centers.T)
-        np.maximum(d, 0.0, out=out[lo:lo + _TILE])
-    return out
+        d, n2 = g[:len(t)], s[:len(t)]
+        np.matmul(t, c2x, out=d)
+        np.add((t * t).sum(axis=1)[:, None], c2, out=n2)
+        np.subtract(n2, d, out=d)
+        np.maximum(d, 0.0, out=d)
+        yield lo, d
 
 
 def _nearest_cell(centers: np.ndarray):
-    """Arrow UDF: each vector's nearest centroid index. argmin ties ->
-    lowest cell index (matches the oracles' ORDER BY distance, cell)."""
+    """Arrow UDF: each vector's nearest centroid index, the argmin of each
+    ``_sq_dists`` tile. argmin ties -> lowest cell index (matches the
+    oracles' ORDER BY distance, cell)."""
 
     @F.arrow_udf(IntegerType())
     def assign_cell(batch: pa.Array) -> pa.Array:
-        d2 = _sq_dists(_matrix(batch), centers)
-        return pa.array(np.argmin(d2, axis=1).astype("int32"))
+        m = _matrix(batch)
+        cell = np.empty(len(m), dtype="int32")
+        for lo, d in _sq_dists(m, centers):
+            cell[lo:lo + len(d)] = d.argmin(axis=1)
+        return pa.array(cell)
 
     return assign_cell
 
@@ -266,8 +281,7 @@ def sampled_centroids(
     compiles to TakeOrdered; the collect is O(n_cells) rows (control-plane
     scalar, same class as the dedup convergence witnesses)."""
     rows = (
-        _as_double(vectors, vec_col)
-        .select(F.col(id_col).alias("i"), F.col(vec_col).alias("v"))
+        vectors.select(F.col(id_col).alias("i"), F.col(vec_col).alias("v"))
         .orderBy(F.md5(F.col("i").cast("string")), F.col("i"))
         .limit(n_cells)
         .collect()
@@ -302,9 +316,7 @@ def ivf_topk(
     ``brute_force_topk`` (ties broken identically); smaller ``n_probe`` is
     the 100 TB path, attested by ``recall_report`` (query ``ann_recall``).
     """
-    v = _as_double(vectors, "embedding").select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("v")
-    )
+    v = vectors.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("v"))
     if centroids is not None:
         centers = np.asarray(centroids, dtype="float64")
         n_cells = len(centers)
@@ -330,14 +342,14 @@ def ivf_topk(
 
     @F.arrow_udf(ArrayType(IntegerType()))
     def probe_cells(qs: pa.Array) -> pa.Array:
-        d2 = _sq_dists(_matrix(qs), centers)  # (q, cells)
-        # stable sort: equidistant cells probe in index order (oracle parity)
-        order = np.argsort(d2, axis=1, kind="stable")[:, :n_probe].astype("int32")
+        m = _matrix(qs)
+        order = np.empty((len(m), min(n_probe, len(centers))), dtype="int32")
+        for lo, d in _sq_dists(m, centers):
+            # stable sort: equidistant cells probe in index order (oracle parity)
+            order[lo:lo + len(d)] = np.argsort(d, axis=1, kind="stable")[:, :n_probe]
         return _list_array(order)
 
-    q = _as_double(queries, "embedding").select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q")
-    )
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q"))
     q_cells = q.select(
         "query_id", "q", F.explode(probe_cells(F.col("q"))).alias("cell")
     )
@@ -372,9 +384,12 @@ def semdedup(
     with sim >= ``threshold`` — keep-earliest exemplar per semantic
     near-dup set, the embedding-space sibling of the text dedup family.
 
-    Spark shape: cell assignment is one argmin pass over the vectors (the
-    chunked-GEMM kernel shared with ``ivf_topk``; ties -> lowest cell
-    index, matching the oracle's ORDER BY distance, cell). The within-cell
+    Spark shape: cell assignment is one argmin pass over the vectors at
+    their stored width: per ``_TILE`` rows, one fused GEMM tile of squared
+    distances (``_sq_dists``, the builder ``ivf_topk``'s probe shares)
+    reduced to its argmin before the next tile, so no rows x cells matrix
+    exists (ties -> lowest cell index, matching the oracle's ORDER BY
+    distance, cell). The within-cell
     pairing is ONE ``applyInArrow`` group per cell scoring the cell against
     itself with ``_cosine_hits`` (float64 GEMM) and reducing the hits to
     per-vector earlier-neighbor counts IN the kernel, which returns every
@@ -396,7 +411,7 @@ def semdedup(
     if centroids is None:
         centroids = sampled_centroids(vectors, id_col, vec_col)
     centers = np.asarray(centroids, dtype="float64")
-    assigned = _as_double(vectors, vec_col).select(
+    assigned = vectors.select(
         F.col(id_col), F.col(vec_col), _nearest_cell(centers)(F.col(vec_col)).alias("cell")
     )
     id_field = vectors.schema[id_col]
@@ -457,9 +472,7 @@ def lsh_buckets(vectors: DataFrame, n_planes: int, n_tables: int) -> DataFrame:
         buckets = signs.astype(np.int64) @ weights  # (rows, n_tables)
         return _list_array(buckets)
 
-    sk = vectors.select(
-        F.col("vec_id"), sketch(F.col("embedding").cast("array<double>")).alias("bks")
-    )
+    sk = vectors.select(F.col("vec_id"), sketch(F.col("embedding")).alias("bks"))
     return sk.select(F.col("vec_id"), F.posexplode("bks").alias("table", "bucket"))
 
 
@@ -476,12 +489,8 @@ def lsh_near_dup_pairs(
     coarser, fuller buckets)."""
     b = lsh_buckets(vectors, n_planes, n_tables)
     cand = _bucket_pairs(b, "vec_id", ["table", "bucket"]).distinct()
-    va = _as_double(vectors, "embedding").select(
-        F.col("vec_id").alias("id_a"), F.col("embedding").alias("va")
-    )
-    vb = _as_double(vectors, "embedding").select(
-        F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb")
-    )
+    va = vectors.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
+    vb = vectors.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
     return (
         cand.join(va, "id_a")
         .join(vb, "id_b")
@@ -526,13 +535,13 @@ def cross_corpus_cosine_pairs(
             f"eval={eval_df.schema['vec_id'].dataType.simpleString()}"
         )
 
-    t = _as_double(train, "embedding").select(
+    t = train.select(
         F.col("vec_id").alias("vid"),
         F.col("embedding").alias("v"),
         F.pmod(F.xxhash64(F.col("vec_id")), F.lit(blocks)).cast("int").alias("blk"),
         F.lit(0).alias("side"),
     )
-    e = _as_double(eval_df, "embedding").select(
+    e = eval_df.select(
         F.col("vec_id").alias("vid"),
         F.col("embedding").alias("v"),
         F.explode(F.sequence(F.lit(0), F.lit(blocks - 1))).alias("blk"),

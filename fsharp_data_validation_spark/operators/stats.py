@@ -367,12 +367,12 @@ def skew_report(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
 
     One hash aggregate per key column (map-side combined, its own shuffle
     keyed on that column — independent, like ``fd_violations``), then
-    top-k via distributed TakeOrdered and the per-column totals joined
-    back from the same aggregate. NULL keys count as a value (they skew
+    top-k via distributed TakeOrdered and the per-column totals (distinct
+    count and row total, ``sum(n)``) joined back from the same aggregate:
+    building the report runs no job. NULL keys count as a value (they skew
     joins too — NULL-heavy keys are the classic accidental hot spot).
 
     Returns (key, value, rnk, n, share, n_distinct) — top rows per key."""
-    total = df.count()
     outs = []
     for kc in key_cols:
         counts = persist_tracked(
@@ -380,7 +380,9 @@ def skew_report(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
                 F.coalesce(F.col(kc).cast("string"), F.lit("<NULL>")).alias("value")
             ).agg(F.count(F.lit(1)).alias("n"))
         )
-        nd = counts.agg(F.count(F.lit(1)).alias("_nd"))
+        nd = counts.agg(
+            F.count(F.lit(1)).alias("_nd"), F.sum("n").cast("double").alias("_total")
+        )
         topk = (
             counts.orderBy(F.desc("n"), F.asc("value"))
             .limit(5)
@@ -395,7 +397,7 @@ def skew_report(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
                 "value",
                 rnk.cast("int").alias("rnk"),
                 F.col("n").cast("bigint").alias("n"),
-                F.round(F.col("n") / F.lit(float(total)), 4).alias("share"),
+                F.round(F.col("n") / F.col("_total"), 4).alias("share"),
                 F.col("_nd").cast("bigint").alias("n_distinct"),
             )
         )

@@ -511,3 +511,35 @@ def test_every_option_is_passed_somewhere():
     options = [o for o in _options(_trees(pkg)) if o[1] not in REFERENCE_ONLY]
     assert sorted(set(_unvaried(options, calls)) - set(REFERENCE_OPTIONS)) == []
     assert sorted(set(REFERENCE_OPTIONS) - {o[0] for o in options}) == []
+
+
+def _docstrings(tree):
+    return {
+        id(n.body[0].value)
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
+        and n.body
+        and isinstance(n.body[0], ast.Expr)
+        and isinstance(n.body[0].value, ast.Constant)
+    }
+
+
+def test_similarity_casts_no_vector_to_double():
+    """Vector columns cross the Arrow boundary and the shuffle at their
+    stored width, and ``_matrix`` alone widens them to float64: no code in
+    ``operators/similarity.py`` spells ``array<double>`` (a ``cast``
+    string or SQL text) or casts to ``ArrayType(DoubleType())``."""
+    path = PKG / "operators" / "similarity.py"
+    tree = ast.parse(path.read_text())
+    docs = _docstrings(tree)
+    bad = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Constant) and isinstance(node.value, str) and id(node) not in docs:
+            if "array<double>" in node.value.replace(" ", "").lower():
+                bad.append(f"similarity.py:{node.lineno}")
+        elif isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            if node.func.attr in ("cast", "astype") and any(
+                "ArrayType(DoubleType" in ast.unparse(a).replace(" ", "") for a in node.args
+            ):
+                bad.append(f"similarity.py:{node.lineno}")
+    assert not bad, bad

@@ -472,3 +472,19 @@ def test_token_count_bpe_single_regex_no_exchange(spark, sf):
     for line in plan.splitlines():
         if "chars_per_token" in line:
             assert "regexp_extract_all" not in line
+
+
+def test_semdedup_carries_float_vectors_uncast(spark):
+    """semdedup over ``array<float>`` vectors moves them through the Arrow
+    boundary and the shuffle at their stored width: its executed plan casts
+    nothing to ``array<double>`` (``_matrix`` widens them in numpy)."""
+    import numpy as np
+
+    from fsharp_data_validation_spark.operators.similarity import semdedup
+
+    rows = [(i, [float(i % 7), 1.0, float(i % 3)]) for i in range(64)]
+    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    df = semdedup(vecs, threshold=0.99, centroids=np.eye(3))
+    assert len(df.collect()) == 64
+    plan = _plan(df)
+    assert "ArrowEvalPython" in plan and "array<double>" not in plan

@@ -256,3 +256,95 @@ def test_gemm_kernels_split_one_group_into_tiles(spark, monkeypatch):
     assert sorted(tuple(r) for r in cross) == [
         (a, 10 * n, 1.0), (b, 10 * n, 1.0), (c, 10 * n, 1.0), (n - 1, 10 * n + 1, 1.0)
     ]
+
+
+def test_float_input_gives_the_rows_of_its_double_cast(spark):
+    """Vector columns reach the kernels at their stored width and ``_matrix``
+    widens them exactly, so every kernel's rows over an ``array<float>``
+    input equal its rows over the same input cast to ``array<double>``."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from fsharp_data_validation_spark.operators.similarity import (
+        cross_corpus_cosine_pairs,
+        ivf_topk,
+        lsh_buckets,
+        near_dup_pairs_blocked,
+        semdedup,
+    )
+
+    rng = np.random.default_rng(23)
+    m = rng.standard_normal((300, 16)).astype(np.float32)
+    m[1::10] = m[0::10] + np.float32(0.05) * m[1::10]  # near-dups (i, i + 1)
+    m[7] = 0.0  # zero norm: no cosine, still assigned a cell
+    f = spark.createDataFrame(
+        [(i, m[i].tolist()) for i in range(len(m))], "vec_id long, embedding array<float>"
+    )
+    d = f.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
+    cents = m[:8].astype(np.float64)
+
+    def rows(build):
+        got, want = (sorted(tuple(r) for r in build(v).collect()) for v in (f, d))
+        assert got and got == want
+        return got
+
+    dropped = rows(lambda v: semdedup(v, threshold=0.9, centroids=cents))
+    assert any(not keep for *_, keep in dropped)
+    rows(lambda v: ivf_topk(v, v.filter("vec_id % 10 = 0"), k=3, n_probe=2, centroids=cents))
+    rows(lambda v: near_dup_pairs_blocked(v, threshold=0.8))
+    rows(lambda v: cross_corpus_cosine_pairs(
+        v.filter("vec_id % 2 = 0"), v.filter("vec_id % 2 = 1"), threshold=0.8, blocks=2
+    ))
+    rows(lambda v: lsh_buckets(v, 6, 4))
+
+
+def _unfused_cells(m, centers):
+    """Each row's nearest centroid by the assignment before it was fused:
+    per ``_TILE`` rows, ``||t||^2 + ||c||^2 - 2 t.c`` in four temporaries,
+    clamped at 0, argmin over the whole rows x cells matrix."""
+    import numpy as np
+
+    from fsharp_data_validation_spark.operators.similarity import _TILE
+
+    c2 = (centers * centers).sum(axis=1)[None, :]
+    out = np.empty((m.shape[0], centers.shape[0]))
+    for lo in range(0, m.shape[0], _TILE):
+        t = m[lo:lo + _TILE]
+        d = (t * t).sum(axis=1)[:, None] + c2 - 2.0 * (t @ centers.T)
+        np.maximum(d, 0.0, out=out[lo:lo + _TILE])
+    return np.argmin(out, axis=1)
+
+
+@pytest.mark.parametrize("case", ["ties", "zero_vectors", "ragged_tile"])
+def test_fused_cell_assignment_matches_unfused(case):
+    """The fused ``_nearest_cell`` kernel (one GEMM tile at a time, argmin
+    per tile) assigns every row the cell the unfused formula does: on
+    duplicate centroids (ties go to the lowest index), on zero vectors
+    (nearest = the smallest-norm centroid) and on a batch that is not a
+    multiple of ``_TILE`` rows."""
+    import numpy as np
+
+    from fsharp_data_validation_spark.operators.similarity import (
+        _TILE,
+        _list_array,
+        _nearest_cell,
+    )
+
+    rng = np.random.default_rng(31)
+    centers = rng.standard_normal((6, 8))
+    m = rng.standard_normal((50, 8)).astype(np.float32).astype(np.float64)
+    if case == "ties":
+        centers = np.vstack([centers, centers[::-1]])  # each cell twice
+        m[:6] = centers[:6]  # exact hits on a duplicated centroid
+    elif case == "zero_vectors":
+        m[::3] = 0.0
+        centers[4] *= 0.1  # the unique smallest norm
+    else:
+        m = rng.standard_normal((_TILE + 37, 8))
+    got = _nearest_cell(centers).func(_list_array(m)).to_numpy()
+    want = _unfused_cells(m, centers)
+    assert np.array_equal(got, want)
+    if case == "ties":
+        assert (got < 6).all() and (got[:6] == np.arange(6)).all()
+    elif case == "zero_vectors":
+        assert (got[::3] == 4).all()

@@ -164,6 +164,31 @@ def test_skew_report_null_and_shares(spark):
     assert got[("k", 3)] == ("a", 1, 0.1, 3)
 
 
+def test_skew_report_builds_without_a_job(spark):
+    """Building skew_report over the sf0.01 transcripts starts no Spark job
+    (the row total is ``sum(n)`` of the per-key aggregate, read in the
+    one-row frame the top rows already join), and every share is still
+    ``round(n / count(*), 4)``."""
+    from pyspark.sql import functions as F
+
+    import __spark_entry__ as e
+    from fsharp_data_validation_spark.operators.stats import skew_report
+
+    turns = e._transcripts(spark, "/root/testdata/sf0.01")
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "skew_report_build")
+    try:
+        rep = skew_report(turns, ["conv_id", "role"])
+        jobs = list(sc.statusTracker().getJobIdsForGroup("skew_report_build"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+    total = float(turns.count())
+    count_share = F.round(F.col("n") / F.lit(total), 4)
+    assert rep.count() == 10
+    assert rep.filter(F.col("share") != count_share).count() == 0
+
+
 def test_hll_sketch_rollup_merge_property(spark):
     """Per-partition HLL sketches answer subset distinct counts by UNION
     without rescanning: the union estimate over all partitions equals the

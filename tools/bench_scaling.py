@@ -98,7 +98,8 @@ def gen_vecs(spark: SparkSession, n_vecs: int) -> DataFrame:
     xxhash64(id, j) mapped to [-1, 1]; every id%100==1 vector is a planted
     near-duplicate of id-1 (same base coordinates, +0.02 on coordinate 0 —
     cosine ~0.999). Pure column expressions over spark.range, float32 on
-    disk (the operators cast to double)."""
+    disk; the operators carry it at that width and widen it to float64
+    (exactly) in numpy."""
     df = spark.range(0, n_vecs, 1, 128)
     base = F.when(F.col("id") % 100 == 1, F.col("id") - 1).otherwise(F.col("id"))
 
