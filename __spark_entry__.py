@@ -65,7 +65,6 @@ from fsharp_data_validation_spark.sources.transcripts import (
 )
 from fsharp_data_validation_spark.streaming.validate_stream import (
     run_available_now,
-    validate_stream,
     windowed_chi2_stream,
     windowed_drift_stream,
     windowed_rate_anomaly_stream,
@@ -183,10 +182,7 @@ _ROW_SUITE_ORACLE = with_transcripts(
 def q_row_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vectorized refute/dispute suite -> violation rows (SURVEY.md §2.3-2.5)."""
     t = _transcripts(spark, sf_dir)
-    res = transcript_row_suite().run(t, KEY)
-    return res.violations.select(
-        "conv_id", "turn_idx", "ts", F.col("path_str").alias("path"), "code"
-    )
+    return transcript_row_suite().run(t, KEY).violations
 
 
 @query(with_transcripts(
@@ -205,11 +201,7 @@ def q_violation_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _transcripts(spark, sf_dir)
     res = transcript_row_suite().run(t, KEY)
     return (
-        res.violations.groupBy(
-            F.to_date("ts").alias("day"),
-            F.col("path_str").alias("path"),
-            "code",
-        )
+        res.violations.groupBy(F.to_date("ts").alias("day"), "path", "code")
         .agg(F.count(F.lit(1)).alias("n"))
     )
 
@@ -730,10 +722,7 @@ def q_element_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .each_check("word_too_long", lambda x: F.length(x) <= 6)
         .done()
     )
-    res = suite.run(t, KEY)
-    return res.violations.select(
-        "conv_id", "turn_idx", "ts", F.col("path_str").alias("path"), "code"
-    )
+    return suite.run(t, KEY).violations
 
 
 @query(with_transcripts(
@@ -799,10 +788,7 @@ def q_nested_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         "toolOnToolRole",
         ~((F.col("meta.role") == "tool") & F.col("meta.tool").isNull()),
     )
-    res = suite.run(t, KEY)
-    return res.violations.select(
-        "conv_id", "turn_idx", "ts", F.col("path_str").alias("path"), "code"
-    )
+    return suite.run(t, KEY).violations
 
 
 @query(with_transcripts(
@@ -857,8 +843,7 @@ def q_each_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
         .done()
     )
     suite = Suite().field("turns").each_nested(child).done()
-    res = suite.run(conv, ["conv_id"])
-    return res.violations.select("conv_id", F.col("path_str").alias("path"), "code")
+    return suite.run(conv, ["conv_id"]).violations
 
 
 @query(with_transcripts(
@@ -906,8 +891,7 @@ def q_each_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .done()
     )
     suite = Suite().field("turns").each_nested(child).done()
-    res = suite.run(conv, ["conv_id"])
-    return res.violations.select("conv_id", F.col("path_str").alias("path"), "code")
+    return suite.run(conv, ["conv_id"]).violations
 
 
 # --- training-data pipeline: dedup / text / similarity ----------------------
@@ -2347,12 +2331,12 @@ def q_violation_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     h = md5_int(key, salt="ex")
-    w = Window.partitionBy("path_str", "code").orderBy(h.asc())
+    w = Window.partitionBy("path", "code").orderBy(h.asc())
     return (
         res.violations.withColumn("_rnk", F.row_number().over(w))
         .filter(F.col("_rnk") <= 3)
         .select(
-            F.col("path_str").alias("path"),
+            "path",
             "code",
             F.col("_rnk").cast("int").alias("rnk"),
             "conv_id",
@@ -3715,8 +3699,7 @@ def q_stream_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _transcripts(spark, sf_dir)
     parts = [t.filter(F.pmod(F.hash("conv_id"), F.lit(4)) == i) for i in range(4)]
     suite = transcript_row_suite()
-    out = run_available_now(parts, lambda s: validate_stream(s, suite, KEY)[1])
-    return out.select("conv_id", "turn_idx", "ts", "path", "code")
+    return run_available_now(parts, lambda s: suite.run(s, KEY).violations)
 
 
 def _stream_days(t: DataFrame, day: str, monitor) -> DataFrame:

@@ -23,8 +23,10 @@ kernel in ``core``):
   zero per-row Python;
 - ``MergeSources`` collapse: a row with ANY failure emits no valid-output
   row — ``run`` splits into (valid_df, violations_df);
-- failure paths are name chains rendered camelCase-dotted exactly like the
-  reference serializer (Proof.fs:13-25).
+- each failure carries its path as one string, rendered at compile time by
+  the kernel's ``render_path`` (camelCase-dotted, Proof.fs:13-25): a
+  literal for a static path, ``pre || i || post`` around an element's
+  ``[i]``; ``""`` is the global (type-level) scope.
 
 Scale notes: the whole suite compiles to ONE ``select`` (no chained
 withColumn), so Catalyst fuses every predicate into a single whole-stage
@@ -42,7 +44,7 @@ from typing import Callable, List, Optional, Sequence, Tuple, Union
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..core.names import to_camel_case
+from ..core.names import mk_name, render_path
 from ..core.serialize import escape_json
 
 ColumnLike = Union[Column, str]
@@ -56,6 +58,15 @@ PROOF_GATE = "proof_gate"  # refuteWithProof: child failure refutes parent
 
 def _col(c: ColumnLike) -> Column:
     return F.col(c) if isinstance(c, str) else c
+
+
+def _name(name: str) -> str:
+    """``name`` if the reference can hold it (``mkName``, Types.fs:6-13):
+    an empty, blank or padded name would render a path the reference never
+    produces, and ``""`` would read as the global scope."""
+    if mk_name(name) != name:
+        raise ValueError(f"field name must be non-blank and unpadded, got {name!r}")
+    return name
 
 
 def _length_within(c: Column, lo: Optional[int], hi: Optional[int]) -> Column:
@@ -122,7 +133,7 @@ class ElementSuite:
         self._specs: List[Tuple[Tuple[str, ...], str, str, Callable]] = []
 
     def field(self, name: str) -> "_ElementBranch":
-        return _ElementBranch(self, (name,), lambda x, n=name: x[n])
+        return _ElementBranch(self, (_name(name),), lambda x, n=name: x[n])
 
     def global_(self) -> "_ElementBranch":
         return _ElementBranch(self, (), lambda x: x)
@@ -517,7 +528,7 @@ class _Branch:
         return self.suite
 
 
-FAILURE_STRUCT = "struct<path:array<string>,code:string,ord:int>"
+FAILURE_STRUCT = "struct<path:string,code:string>"
 
 
 class Suite:
@@ -536,7 +547,7 @@ class Suite:
 
     # -- builders -----------------------------------------------------------
     def field(self, name: str, column: Optional[ColumnLike] = None) -> _Branch:
-        return _Branch(self, name, column if column is not None else name)
+        return _Branch(self, _name(name), column if column is not None else name)
 
     def global_(self) -> _Branch:
         return _Branch(self, None, None)
@@ -576,6 +587,7 @@ class Suite:
         compile-time mask — one projection, no extra pass, no UDFs."""
         if mode not in ("apply", "proof"):
             raise ValueError(f"nested mode must be 'apply' or 'proof', got {mode!r}")
+        _name(name)
         child_keys: List[str] = []
         for c in child._constraints:
             nb = f"{name}${c.branch}"
@@ -640,9 +652,9 @@ class Suite:
         return self._memoized("compiled", self._compile)
 
     def _compile(self) -> tuple:
-        """Shared compile pass: ``(ord, constraint, fail, n_failures,
-        prev_refuted)`` for every non-gate constraint, applying the full
-        mask algebra exactly once for all consumers:
+        """Shared compile pass: ``(constraint, fail, n_failures,
+        prev_refuted)`` for every non-gate constraint, in evaluation order,
+        applying the full mask algebra exactly once for all consumers:
 
         - cumulative per-branch refute masks (bind short-circuit,
           VCtx.fs:15-18);
@@ -660,7 +672,7 @@ class Suite:
         refuted: dict[str, Column] = {}
         br_any: dict[str, Column] = {}
         br_refute: dict[str, Column] = {}
-        for ord_, c in enumerate(self._constraints):
+        for c in self._constraints:
             if c.branch not in refuted and c.parent_branch is not None:
                 refuted[c.branch] = refuted.get(c.parent_branch, F.lit(False))
             prev_refuted = refuted.get(c.branch, F.lit(False))
@@ -700,89 +712,71 @@ class Suite:
             if c.kind in (REFUTE, EACH_REFUTE):
                 refuted[c.branch] = prev_refuted | fail
                 br_refute[c.branch] = br_refute.get(c.branch, F.lit(False)) | fail
-            out.append((ord_, c, fail, n, prev_refuted))
+            out.append((c, fail, n, prev_refuted))
         return tuple(out)
 
     def any_failure_column(self) -> Column:
         """Boolean 'row emits at least one failure' — used as the split
         predicate in ``run`` so the failure-array construction cost is paid
         only for rows that already failed (typically a few percent)."""
-        flags = [fail for _, _, fail, _, _ in self._compiled()]
+        flags = [fail for _, fail, _, _ in self._compiled()]
         return self._memoized("any", lambda: reduce(or_, flags) if flags else F.lit(False))
 
     def failure_count_column(self) -> Column:
         """Total failures emitted for the row (== size of the failures
         array) without building the array — for verdict aggregation."""
-        counts = [n for _, _, _, n, _ in self._compiled()]
+        counts = [n for _, _, n, _ in self._compiled()]
         return self._memoized("count", lambda: reduce(add, counts) if counts else F.lit(0))
 
     def failures_column(self, for_report: bool = False) -> Column:
-        """Compile the whole suite into ONE array<struct> expression
-        (built once per ``for_report``, see ``_memoized``).
+        """Compile the whole suite into ONE array<struct<path,code>>
+        expression, in evaluation order (built once per ``for_report``, see
+        ``_memoized``).
 
-        With ``for_report`` the compile-time literals are pre-rendered for
-        the JSON wire format: static path segments camelCased
-        (``to_camel_case``, ≅ Proof.fs:21-25) then escaped with the kernel's
-        System.Text.Json-compatible encoder (``escape_json``), and codes
-        escaped likewise — so ``report_json_column`` can splice them into
-        JSON verbatim. Dynamic ``"[i]"`` segments are digits/brackets,
-        inherently camelCase-stable and JSON-safe. Default (data-facing)
-        output keeps raw segments/codes."""
+        With ``for_report`` the compile-time literals (rendered paths and
+        codes) are escaped with the kernel's System.Text.Json-compatible
+        encoder (``escape_json``), so ``report_json_column`` can splice them
+        into JSON verbatim. Escaping is per character and leaves ``.``,
+        ``[``, ``]`` and digits alone, so an element path's dynamic index
+        needs none. Default (data-facing) output keeps raw paths/codes."""
         return self._memoized(("failures", for_report), lambda: self._failures(for_report))
 
     def _failures(self, for_report: bool) -> Column:
-        if for_report:
-            seg = lambda p: escape_json(to_camel_case(p))  # noqa: E731
-            code_lit = escape_json
-        else:
-            seg = code_lit = lambda s: s  # noqa: E731
+        lit = (lambda s: F.lit(escape_json(s))) if for_report else F.lit
         contributions: List[Column] = []
-        for ord_, c, fail, _n, prev_refuted in self._compiled():
+        for c, fail, _n, prev_refuted in self._compiled():
+            code = lit(c.code).alias("code")
             if c.kind in (REFUTE, DISPUTE):
-                entry = F.when(
-                    fail,
-                    F.struct(
-                        F.array(*[F.lit(seg(p)) for p in c.path]).alias("path"),
-                        F.lit(code_lit(c.code)).alias("code"),
-                        F.lit(ord_).alias("ord"),
+                entry = F.struct(lit(render_path(c.path)).alias("path"), code)
+                contributions.append(F.array(F.when(fail, entry)))
+                continue
+            # element constraints: the chain path + "[i]" + elem_subpath,
+            # rendered with the "[" and "]" of the index as its own segments
+            pre = lit(render_path(c.path + ("[",)))
+            post = lit(render_path(("]",) + c.elem_subpath))
+
+            def mk_entries(arr: Column, c=c, code=code, pre=pre, post=post) -> Column:
+                return F.transform(
+                    arr,
+                    lambda x, i: F.when(
+                        ~F.coalesce(c.elem_ok(x, i), F.lit(True)),
+                        F.struct(F.concat(pre, i.cast("string"), post).alias("path"), code),
                     ),
                 )
-                contributions.append(F.array(entry))
-            else:  # element constraints
-                base = c.path
 
-                def mk_entries(
-                    arr: Column, ord_=ord_, base=base, c=c, seg=seg, code_lit=code_lit
-                ) -> Column:
-                    return F.transform(
-                        arr,
-                        lambda x, i: F.when(
-                            ~F.coalesce(c.elem_ok(x, i), F.lit(True)),
-                            F.struct(
-                                F.array(
-                                    *[F.lit(seg(p)) for p in base],
-                                    F.concat(F.lit("["), i.cast("string"), F.lit("]")),
-                                    *[F.lit(seg(p)) for p in c.elem_subpath],
-                                ).alias("path"),
-                                F.lit(code_lit(c.code)).alias("code"),
-                                F.lit(ord_).alias("ord"),
-                            ),
-                        ),
-                    )
-
-                arr_guard = c.array_col.isNotNull()
-                if c.guard is not None:
-                    arr_guard = arr_guard & c.guard
-                entries = F.when(
-                    arr_guard & ~prev_refuted, mk_entries(c.array_col)
-                ).otherwise(F.array().cast(f"array<{FAILURE_STRUCT}>"))
-                contributions.append(entries)
+            arr_guard = c.array_col.isNotNull()
+            if c.guard is not None:
+                arr_guard = arr_guard & c.guard
+            entries = F.when(
+                arr_guard & ~prev_refuted, mk_entries(c.array_col)
+            ).otherwise(F.array().cast(f"array<{FAILURE_STRUCT}>"))
+            contributions.append(entries)
         if not contributions:
             return F.array().cast(f"array<{FAILURE_STRUCT}>")
         return F.array_compact(F.concat(*contributions)).alias("failures")
 
     def with_failures(self, df: DataFrame) -> DataFrame:
-        """df + ``failures`` column (array<struct<path,code,ord>>), one pass."""
+        """df + ``failures`` column (array<struct<path,code>>), one pass."""
         return df.select("*", self.failures_column().alias("failures"))
 
     def report_json_column(self) -> Column:
@@ -796,8 +790,8 @@ class Suite:
         Built entirely from the compiled failures array with higher-order
         functions — interpreted expressions, but only ever evaluated on the
         failing slice (report emission), so the hot path stays codegen'd.
-        Escaping: codes and static path segments are compile-time literals,
-        pre-rendered (camelCase + kernel ``escape_json``) by
+        Escaping: codes and rendered paths are compile-time literals,
+        escaped (kernel ``escape_json``) by
         ``failures_column(for_report=True)`` — a quote/backslash/HTML-
         sensitive/non-ASCII char in a code or field name serializes exactly
         like the byte-pinned kernel serializer. Segment-sort note: keys sort
@@ -816,22 +810,13 @@ class Suite:
         first and passes a column reference, so each failing row builds the
         array once (Spark keeps the two projections apart)."""
 
-        def path_str(p: Column) -> Column:
-            # segments arrive pre-camelCased + escaped (for_report)
-            return F.array_join(p, ".")
-
-        gcodes = F.transform(
-            F.filter(f, lambda x: F.size(x["path"]) == 0), lambda x: x["code"]
-        )
+        gcodes = F.transform(F.filter(f, lambda x: x["path"] == ""), lambda x: x["code"])
         globals_json = F.concat_ws(
             ",", F.transform(gcodes, lambda c: F.concat(F.lit('"'), c, F.lit('"')))
         )
         fpaths = F.array_sort(
             F.array_distinct(
-                F.transform(
-                    F.filter(f, lambda x: F.size(x["path"]) > 0),
-                    lambda x: path_str(x["path"]),
-                )
+                F.transform(F.filter(f, lambda x: x["path"] != ""), lambda x: x["path"])
             )
         )
         field_entries = F.transform(
@@ -843,7 +828,7 @@ class Suite:
                 F.concat_ws(
                     ",",
                     F.transform(
-                        F.filter(f, lambda x: path_str(x["path"]) == p),
+                        F.filter(f, lambda x: x["path"] == p),
                         lambda x: F.concat(F.lit('"'), x["code"], F.lit('"')),
                     ),
                 ),
@@ -907,29 +892,9 @@ class SuiteResult:
 
     @property
     def violations(self) -> DataFrame:
-        """(key..., path, path_str, code, ord), one row per failure."""
-        keys = self.key_cols
-        return (
-            self.failing.select(*keys, F.explode("failures").alias("f"))
-            .select(
-                *keys,
-                F.col("f.path").alias("path"),
-                # camelCase-dotted rendering ≅ reference serializer
-                # (Proof.fs:13-25): first char lowered per segment
-                F.array_join(
-                    F.transform(
-                        "f.path",
-                        lambda s: F.concat(
-                            F.lower(F.substring(s, 1, 1)),
-                            F.substring(s, 2, 2_000_000),
-                        ),
-                    ),
-                    ".",
-                ).alias("path_str"),
-                F.col("f.code").alias("code"),
-                F.col("f.ord").alias("ord"),
-            )
-        )
+        """(key..., path, code), one row per failure; ``path`` is the
+        camelCase-dotted rendering, ``""`` for a global failure."""
+        return self.failing.select(*self.key_cols, F.inline("failures"))
 
     @property
     def reports(self) -> DataFrame:

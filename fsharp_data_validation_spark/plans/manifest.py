@@ -355,11 +355,7 @@ class ValidationRun:
                 counts = Observation()
                 observed = failing.observe(counts, *res.failing_counts("part", batch))
                 _clear_parts(df.sparkSession, out_dirs, batch)
-                _write_parts(
-                    replace(res, failing=observed)
-                    .violations.select(*keys, F.col("path_str").alias("path"), "code"),
-                    self.violations_dir,
-                )
+                _write_parts(replace(res, failing=observed).violations, self.violations_dir)
                 if self.emit_valid:
                     # the pipeline-gate output (Giraffe-shape): only fully clean
                     # rows flow onward, partitioned like the input

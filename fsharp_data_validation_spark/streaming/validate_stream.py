@@ -3,8 +3,9 @@ stream — readStream -> ``Suite.run`` -> sinks, with event-time
 watermarking for the windowed violation-rate aggregation.
 
 The suite compiles to stateless column expressions, so it attaches to a
-streaming DataFrame unchanged (no state store needed for the row checks).
-Additions here:
+streaming DataFrame unchanged (no state store needed for the row checks):
+``Suite.run(stream_df, keys).violations`` is the stream's
+``(keys..., path, code)`` rows, as in batch. Additions here:
 - watermarked per-window violation counts (late data handled by the
   watermark, not dropped silently);
 - windowed PSI / W1 / chi2 drift monitors against a static baseline, and
@@ -47,18 +48,6 @@ _WATERMARK = "1 hour"
 _Z_THRESHOLD = 2.0  # the streaming control chart's anomaly |z|
 
 
-def validate_stream(
-    stream_df: DataFrame, suite: Suite, key_cols: Sequence[str]
-):
-    """Attach the suite to a streaming DataFrame; returns (valid, violations)
-    streaming frames — ``Suite.run`` with violations projected to
-    (keys..., path, code), ``path`` the camelCase-dotted rendering."""
-    res = suite.run(stream_df, key_cols)
-    return res.valid, res.violations.select(
-        *key_cols, F.col("path_str").alias("path"), "code"
-    )
-
-
 def windowed_violation_rate(
     stream_df: DataFrame, suite: Suite, ts_col: str = "ts"
 ) -> DataFrame:
@@ -89,13 +78,13 @@ def run_stream_to_parquet(
     at-least-once, and a micro-batch replayed after a failure (its offsets
     logged, its commit not) rewrites the same rows in place. Read
     ``out_dir`` as one table; ``batch_id`` is its partition column."""
-    _, violations = validate_stream(stream_df, suite, key_cols)
 
     def write_batch(batch_df: DataFrame, batch_id: int):
         batch_df.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
 
     return (
-        violations.writeStream.foreachBatch(write_batch)
+        suite.run(stream_df, key_cols)
+        .violations.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
         .trigger(availableNow=True)

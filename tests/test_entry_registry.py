@@ -543,3 +543,28 @@ def test_similarity_casts_no_vector_to_double():
             ):
                 bad.append(f"similarity.py:{node.lineno}")
     assert not bad, bad
+
+
+def test_compiler_renders_no_path_itself():
+    """A failure's path is rendered once, at compile time, by the kernel's
+    ``core/names.py:render_path``: ``functions/compiler.py`` builds no
+    camelCase with Spark's string functions and no rendering of its own."""
+    path = PKG / "functions" / "compiler.py"
+    tree = ast.parse(path.read_text())
+    bad = [
+        f"compiler.py:{node.lineno}:F.{node.func.attr}"
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and isinstance(node.func.value, ast.Name)
+        and node.func.value.id == "F"
+        and node.func.attr in ("lower", "lcase", "substring", "substr", "initcap")
+    ]
+    bad += [
+        f"compiler.py:{node.lineno}:{a.name}"
+        for node in ast.walk(tree)
+        if isinstance(node, ast.ImportFrom)
+        for a in node.names
+        if a.name == "to_camel_case"
+    ]
+    assert not bad, bad

@@ -12,10 +12,12 @@ kernel's two reference composition shapes:
 
 import re
 
+import pytest
 from pyspark.sql import Row, functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from fsharp_data_validation_spark.core import Validation, library as L
+from fsharp_data_validation_spark.core.names import render_path
 from fsharp_data_validation_spark.core.vctx import merge_all
 from fsharp_data_validation_spark.functions.compiler import Suite
 
@@ -48,7 +50,7 @@ def _rows_df(spark, rows):
 def _collect_failures(res):
     got = {}
     for r in res.violations.collect():
-        got.setdefault(r["rid"], set()).add((r["path_str"], r["code"]))
+        got.setdefault(r["rid"], set()).add((r["path"], r["code"]))
     return got
 
 
@@ -755,6 +757,101 @@ def test_report_json_escapes_hostile_codes_and_names(spark):
     assert parsed["failures"] == [hostile_global]
     camel = hostile_field[0].lower() + hostile_field[1:]
     assert parsed["fields"] == {camel: [hostile_code]}
+
+
+@pytest.mark.parametrize("name", ["", " ", "\t", " role", "role "])
+@pytest.mark.parametrize("build", ["field", "nested", "element_field"])
+def test_names_the_reference_cannot_hold_are_rejected(build, name):
+    """A name ``mk_name`` (reference ``mkName``, Types.fs:6-13) would trim
+    or reject never reaches a path: ``""`` would render like the global
+    scope, and the report would file its failures as globals."""
+    make = {
+        "field": lambda: Suite().field(name, F.col("s")),
+        "nested": lambda: Suite().nested(name, Suite()),
+        "element_field": lambda: ElementSuite().field(name),
+    }[build]
+    with pytest.raises(ValueError, match="field name"):
+        make()
+
+
+HOSTILE = 'Ä"q\\<b>é'  # quote, backslash, <>, non-ASCII, upper-case first
+
+
+def _hostile_case(spark):
+    schema = StructType([StructField("rid", IntegerType()), StructField("s", StringType())])
+    suite = Suite().field(HOSTILE, F.col("s")).check("hostileCheck", F.lit(False)).done()
+    suite.global_().check("glo<bal>", F.lit(False))
+    df = spark.createDataFrame([Row(rid=1, s="x")], schema=schema)
+    return suite, df, {(1, (HOSTILE,), "hostileCheck"), (1, (), "glo<bal>")}
+
+
+def _nested_case(mode):
+    def case(spark):
+        schema = StructType([StructField("rid", IntegerType()), StructField("Meta", META)])
+        child = (
+            Suite()
+            .field("Role", F.col("Meta.role")).isin("roleEnum", ROLES3)
+            .global_().check("childGlobal", F.col("Meta.tool").isNotNull())
+            .done()
+        )
+        suite = Suite().nested("Meta", child, guard=F.col("Meta").isNotNull(), mode=mode)
+        df = spark.createDataFrame([Row(rid=1, Meta=Row(role="robot", tool=None))], schema)
+        role = ("Meta", "Role") if mode == "apply" else ("Role",)
+        return suite, df, {(1, role, "roleEnum"), (1, ("Meta",), "childGlobal")}
+
+    return case
+
+
+def _each_nested_case(spark):
+    turn = StructType([StructField("Role", StringType())])
+    schema = StructType([StructField("rid", IntegerType()), StructField("Turns", T.ArrayType(turn))])
+    child = ElementSuite().field("Role").isin("roleEnum", ROLES3).done()
+    suite = Suite().field("Turns").each_nested(child).done()
+    df = spark.createDataFrame([Row(rid=1, Turns=[Row(Role="user"), Row(Role="robot")])], schema)
+    return suite, df, {(1, ("Turns", "[1]", "Role"), "roleEnum")}
+
+
+def _each_indexed_case(spark):
+    schema = StructType(
+        [StructField("rid", IntegerType()), StructField("Xs", T.ArrayType(IntegerType()))]
+    )
+    suite = (
+        Suite()
+        .field("Xs")
+        .each_check_indexed("atPosition", lambda x, i: x == i)
+        .each_all_check("allNegative", lambda x: x >= 0)
+        .done()
+    )
+    df = spark.createDataFrame([Row(rid=1, Xs=[0, -5, -2]), Row(rid=2, Xs=[-1, -2])], schema)
+    return suite, df, {
+        (1, ("Xs", "[1]"), "atPosition"),
+        (1, ("Xs", "[2]"), "atPosition"),
+        (2, ("Xs", "[0]"), "atPosition"),
+        (2, ("Xs", "[1]"), "atPosition"),
+        (2, (), "allNegative"),
+    }
+
+
+@pytest.mark.parametrize(
+    "case",
+    [_hostile_case, _nested_case("apply"), _nested_case("proof"), _each_nested_case,
+     _each_indexed_case],
+    ids=["hostile_name", "nested_apply", "nested_proof", "each_nested", "each_indexed"],
+)
+def test_violation_paths_are_the_kernel_rendering(spark, case):
+    """Each ``violations.path`` is ``render_path`` of the kernel's name
+    chain, and in the row's report it is a ``fields`` key holding the code,
+    or ``""`` for a code in ``failures``: one rendering serves both."""
+    import json
+
+    suite, df, expected = case(spark)
+    res = suite.run(df, ["rid"])
+    got = {(r["rid"], r["path"], r["code"]) for r in res.violations.collect()}
+    assert got == {(rid, render_path(p), code) for rid, p, code in expected}
+    reports = {r["rid"]: json.loads(r["report"]) for r in res.reports.collect()}
+    for rid, path, code in got:
+        report = reports[rid]
+        assert code in (report["failures"] if path == "" else report["fields"][path])
 
 
 def test_library_helper_sugar(spark):

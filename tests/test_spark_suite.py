@@ -29,7 +29,7 @@ import re
 
 def kernel_failures(row: dict) -> set:
     """The same suite expressed in the pure kernel (per-branch CE chains +
-    applicative merge), returning {(path_str, code)}."""
+    applicative merge), returning {(path, code)}."""
     conv = (
         Validation.field("conv_id", row["conv_id"])
         .refute_with(L.is_required("conv_id_required"))
@@ -123,7 +123,7 @@ def test_suite_matches_kernel(spark):
     res = transcript_row_suite().run(df, ["rid"])
     got = {}
     for r in res.violations.collect():
-        got.setdefault(r["rid"], set()).add((r["path_str"], r["code"]))
+        got.setdefault(r["rid"], set()).add((r["path"], r["code"]))
     valid_ids = {r["rid"] for r in res.valid.select("rid").collect()}
     for row in rows:
         expected = kernel_failures(row)
@@ -172,7 +172,7 @@ def test_element_constraints(spark):
         .done()
     )
     res = suite.run(df, ["rid"])
-    v = [(r["rid"], r["path_str"], r["code"]) for r in res.violations.collect()]
+    v = [(r["rid"], r["path"], r["code"]) for r in res.violations.collect()]
     assert v == [(1, "vec.[1]", "vec_negative")]
     assert sorted(r["rid"] for r in res.valid.collect()) == [2, 3]
 
@@ -195,7 +195,7 @@ def test_each_refute_gates_branch(spark):
         .done()
     )
     res = suite.run(df, ["rid"])
-    rows = [(r["rid"], r["path_str"], r["code"]) for r in res.violations.collect()]
+    rows = [(r["rid"], r["path"], r["code"]) for r in res.violations.collect()]
     # rid=1: element refute fires, sum_small skipped; rid=2 clean
     assert rows == [(1, "vec.[0]", "neg")]
 

@@ -242,7 +242,7 @@ def test_random_suite_shapes_match_kernel(spark):
         res = suite.run(df, ["rid"])
         got, n_rows = {}, {}
         for r in res.violations.collect():
-            got.setdefault(r["rid"], set()).add((r["path_str"], r["code"]))
+            got.setdefault(r["rid"], set()).add((r["path"], r["code"]))
             n_rows[r["rid"]] = n_rows.get(r["rid"], 0) + 1
         # the allocation-free columns the verdict and the streaming
         # aggregates count with agree with the violation rows and with the
@@ -316,7 +316,7 @@ def test_random_apply_mode_shapes_match_kernel_optional(spark):
         res = suite.run(df, ["rid"])
         got = {}
         for r in res.violations.collect():
-            got.setdefault(r["rid"], set()).add((r["path_str"], r["code"]))
+            got.setdefault(r["rid"], set()).add((r["path"], r["code"]))
 
         for row in rows:
             pv = Validation.field("s", row["s"])
